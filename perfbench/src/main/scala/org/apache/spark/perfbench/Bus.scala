@@ -1,0 +1,9 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Drains the listener bus so every event posted so far has been
+  * delivered. The bus is `private[spark]`, hence this package. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
