@@ -11,14 +11,14 @@ import org.apache.spark.sql.types.StringType
   * Where the reference eagerly materializes a pandas frame per stage on a
   * single thread, here every stage is a declarative transform on the same
   * plan: Catalyst analyzes/optimizes once (filter+projection pushdown into
-  * the source scans, broadcast for the custom-field join, one shuffle for
-  * the entity merge) and execution crosses the driver→executor boundary at
-  * the first action. A user of the reference runs exactly this flow:
+  * the source scans, one scan of the tickets, one shuffle for the entity
+  * merge) and execution crosses the driver→executor boundary at the first
+  * action. A user of the reference runs exactly this flow:
   *
-  *   tickets JSON → backfill → flatten+rename → custom-field whitelist
-  *   pivot → left join ⋈ tickets (main.py:91) → string casts → full-outer
-  *   merge with chats on ticket number (main.py:100-103) → uuid synthesis
-  *   → audit timestamp → name sanitation → dedup vs destination →
+  *   tickets JSON → backfill → flatten+rename → per-row custom-field
+  *   whitelist pivot (main.py:90-91) → string casts → full-outer merge
+  *   with chats on ticket number (main.py:100-103) → uuid synthesis →
+  *   audit timestamp → name sanitation → dedup vs destination →
   *   duplicate-column drop → [append via Sinks.appendEvolving].
   */
 object Pipeline {
@@ -68,7 +68,17 @@ object Pipeline {
   }
 
   /** Ticket branch: backfill → select/rename (dotted paths) → whitelist
-    * custom-field pivot → left join → casts → constant overwrite. */
+    * custom-field pivot → casts → constant overwrite.
+    *
+    * The pivot is per-row enrichment, which is what extrair_custom_ticket
+    * + the left join on uuid compute for tickets with distinct ids
+    * (main.py:90-91): each ticket gets the whitelisted keys of its OWN
+    * `campo_custom_ticket`. It is computed on the same row, not joined
+    * back on the raw id: the tickets are scanned once, and a ticket with
+    * a blank or null id keeps one row and its own custom fields, where a
+    * join on the id would match blank ids with each other and none to a
+    * null id. A pandas merge on `uuid` would match NaN and blank keys
+    * with each other; that divergence is deliberate. */
   def ticketBranch(tickets: DataFrame): DataFrame = {
     // T6: absent expected columns appear as nulls (main.py:85-87)
     val expected = Seq("id", "number", "summary", "createdAt", "updatedAt")
@@ -83,21 +93,16 @@ object Pipeline {
         (if (resolvable(backfilled, src)) col(src)
          else lit(null).cast(StringType)).as(dst)
       }.toIndexedSeq: _*)
-      .withColumn("__uuid_key", col("uuid"))
-    // T8+T9: whitelist pivot carried on uuid, enrichment left join — fed
-    // from the RENAMED frame's campo_custom_ticket exactly like
-    // extrair_custom_ticket(df_ticket_filtro1) at main.py:90 (the raw
-    // payload column itself stays in `projected`, as in the reference).
-    val custom =
+    // T8+T9: whitelist pivot of the RENAMED frame's campo_custom_ticket,
+    // like extrair_custom_ticket(df_ticket_filtro1) at main.py:90; the raw
+    // payload column itself stays in the output, as in the reference
+    val enriched =
       if (resolvable(backfilled, "customField"))
-        Nested.extractWhitelistedKV(
-          projected.select(col("__uuid_key"),
-            col("campo_custom_ticket")),
-          "campo_custom_ticket", customFieldWhitelist, "ticket_")
-      else projected.select(col("__uuid_key")).limit(0)
-    val joined = Joins.enrichLeft(projected, custom, "__uuid_key").drop("__uuid_key")
+        Nested.extractWhitelistedKV(projected, "campo_custom_ticket",
+          customFieldWhitelist, "ticket_", keepKv = true)
+      else projected
     // T10 casts + T11 constant overwrite (the tab-guard bug means always-'')
-    Relational.castAll(joined, Seq("n_ticket" -> "string"))
+    Relational.castAll(enriched, Seq("n_ticket" -> "string"))
       .withColumn("contact_cf_n_mero_do_ticket", lit(""))
   }
 

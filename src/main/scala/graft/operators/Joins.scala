@@ -75,10 +75,13 @@ object Joins {
   /** Dedup-vs-destination (reference/manutencao.py:12-62 `duplicidade_no_df`):
     * drop batch rows whose key already exists in the destination, per key
     * column. The reference ships the batch key-set to BigQuery; here the
-    * anti-join IS the semantics, and Catalyst broadcasts the smaller side. */
+    * anti-join IS the semantics, and Catalyst broadcasts the smaller side.
+    * The destination keys are not made distinct first: an anti-join
+    * ignores duplicate build-side keys, and a distinct would cost a
+    * shuffle of its own. */
   def dedupAgainst(batch: DataFrame, dest: DataFrame, keyCols: Seq[String]): DataFrame =
     keyCols.foldLeft(batch) { (b, k) =>
-      b.join(dest.select(col(k)).na.drop().distinct(), Seq(k), "left_anti")
+      b.join(dest.select(col(k)).na.drop(), Seq(k), "left_anti")
     }
 
   /** [[dedupAgainst]]'s 100 TB scale path: same semantics (bit-identical
@@ -107,11 +110,13 @@ object Joins {
                         fpp: Double = 0.03): DataFrame = {
     import org.apache.spark.sql.graft.expressions.{bloomFilterAgg, mightContain}
     keyCols.foldLeft(batch) { (b, k) =>
-      val destKeys = dest.select(col(k)).na.drop().distinct()
+      // no distinct: a Bloom insert is idempotent, and the exact
+      // anti-join ignores duplicate keys
+      val destKeys = dest.select(col(k)).na.drop()
       val hashOf = (c: org.apache.spark.sql.Column) => xxhash64(c.cast("string"))
       val sketch = destKeys
         .select(bloomFilterAgg(hashOf(col(k)), expectedItems, fpp).as("bf"))
-        .head.getAs[Array[Byte]]("bf")
+        .head().getAs[Array[Byte]]("bf")
       if (sketch == null) b // empty destination: everything is new
       else {
         val probe = mightContain(lit(sketch), hashOf(b(k)))
@@ -310,9 +315,11 @@ object Joins {
     * (reference/ticket.py:151-212 per-row UPDATE loop → set-oriented):
     * rows of `dest` whose key appears in `updates` are replaced by the
     * update row. One anti-join + one union; both sides shuffle on the key
-    * at most once. Column sets must match (use ColumnHygiene.backfill). */
+    * at most once, and a small `updates` side is broadcast instead (the
+    * update keys are not made distinct: the anti-join ignores duplicates).
+    * Column sets must match (use ColumnHygiene.backfill). */
   def upsert(dest: DataFrame, updates: DataFrame, key: String): DataFrame =
-    dest.join(updates.select(col(key)).distinct(), Seq(key), "left_anti")
+    dest.join(updates.select(col(key)), Seq(key), "left_anti")
       .unionByName(updates.select(dest.columns.map(col).toIndexedSeq: _*))
 
   /** SCD type-2 version windows from an update/event feed: per key, each

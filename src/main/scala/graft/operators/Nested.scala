@@ -47,16 +47,19 @@ object Nested {
 
   /** Whitelist key-value extraction (reference/ticket.py:69-96
     * `extrair_custom_ticket`): from an `array<struct<key,value>>` column,
-    * keep only whitelisted keys and pivot them to `<prefix><key>` columns.
-    * Pure expressions — no UDF, no shuffle. */
+    * keep only whitelisted keys and pivot them to `<prefix><key>` columns,
+    * dropping the kv column unless `keepKv`. Pure expressions — no UDF,
+    * no shuffle. The map is its own projection, built once per row: it is
+    * not cheap, so Catalyst does not inline it into each `getItem`. */
   def extractWhitelistedKV(df: DataFrame, kvCol: String, whitelist: Seq[String],
-                           prefix: String): DataFrame = {
+                           prefix: String, keepKv: Boolean = false): DataFrame = {
     val m = map_from_entries(
       filter(coalesce(col(kvCol), array()),
         x => x.getField("key").isin(whitelist.map(lit): _*)))
     val withMap = df.withColumn("__kv_map", m)
     val extracted = whitelist.map(k => col("__kv_map").getItem(k).as(s"$prefix$k"))
-    withMap.select((df.columns.filterNot(_ == kvCol).map(col) ++ extracted).toIndexedSeq: _*)
+    val kept = if (keepKv) df.columns.toSeq else df.columns.toSeq.filterNot(_ == kvCol)
+    withMap.select((kept.map(col) ++ extracted).toIndexedSeq: _*)
   }
 
   /** Dynamic key-value pivot (reference/chat.py:106-113 `cf_chat_<name>`):

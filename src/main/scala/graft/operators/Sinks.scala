@@ -372,11 +372,50 @@ object Sinks {
   /** [[readEvolved]] over an atomic destination: union schema across the
     * COMMITTED batches only — torn writes, in-flight batches and orphaned
     * data dirs are invisible because readers resolve the manifest set,
-    * never the directory listing. */
+    * never the directory listing.
+    *
+    * The union schema is merged on the driver from the committed files'
+    * parquet footers and passed to the reader as an explicit schema: the
+    * same schema `mergeSchema=true` infers (Spark's footer reader,
+    * `StructType.merge` in path order), without the footer-reading Spark
+    * job that option launches on every call. Footer schemas are cached
+    * per file, like the manifests. */
   def readCommitted(spark: SparkSession, root: String): DataFrame = {
     val files = committedFiles(spark, root)
     require(files.nonEmpty, s"no committed batches under $root")
-    spark.read.option("mergeSchema", "true").parquet(files: _*)
+    spark.read.schema(committedSchema(spark, root, files)).parquet(files: _*)
+  }
+
+  // Footer schema per committed part-file, cached process-wide under the
+  // same immutable-file key as [[manifestCache]] (path + length + mtime,
+  // pruned to the files still committed): a committed part-file is never
+  // rewritten, so each readCommitted reads only the footers of files it
+  // has not seen and reader work stays O(new batches). The attempt dir in
+  // the path and the mtime keep a wiped-and-recreated root with reused
+  // batch ids from hitting a stale entry.
+  private val footerSchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[
+      String, java.util.concurrent.ConcurrentHashMap[String, StructType]]()
+
+  private def committedSchema(spark: SparkSession, root: String,
+                              files: Seq[String]): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.FooterSchemas
+    import scala.jdk.CollectionConverters._
+    val fs = fsFor(spark, root)
+    val qualifiedRoot = fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString
+    val cache = footerSchemaCache.computeIfAbsent(qualifiedRoot,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]())
+    // mergeSchema's order: part-files sorted by path
+    val statuses = files.map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(f)))
+      .sortBy(_.getPath.toString)
+    val keys = statuses.map(st => s"${st.getPath.getParent.getName}/" +
+      manifestCacheKey(st))
+    cache.keySet().retainAll(keys.asJava)
+    val known = keys.map(k => k -> cache.get(k)).filter(_._2 != null).toMap
+    val missing = statuses.zip(keys).filterNot { case (_, k) => known.contains(k) }
+    val read = missing.map(_._2).zip(FooterSchemas.read(spark, missing.map(_._1))).toMap
+    read.foreach { case (k, schema) => cache.put(k, schema) }
+    FooterSchemas.merge(spark, keys.map(k => known.getOrElse(k, read(k))))
   }
 
   /** Format round-trip helpers: the engine is format-agnostic (any

@@ -279,9 +279,35 @@ private[sources] class TicketScan(geUs: Long, leUs: Long, windowUs: Long,
                                   transportOpts: Map[String, String] = Map.empty,
                                   splitOnError: Boolean = false,
                                   splitFloorUs: Long = 3600L * 1000000L)
-    extends Scan with Batch with SupportsRuntimeFiltering {
+    extends Scan with Batch with SupportsRuntimeFiltering with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  private lazy val windows: Seq[(Long, Long)] =
+    if (geUs > leUs) Nil
+    else graft.operators.Relational.splitWindows(geUs, leUs + 1, windowUs)
+
+  /** Row count of the scan from the API's count endpoint
+    * ([[TicketTransport.statsIn]] over the pushed range, one request on
+    * the driver, made once per scan): each window reader stops at a
+    * pushed limit, and a pushed aggregate emits one row per window.
+    * Without it Spark assumes the scan is huge, so a join against it
+    * plans a shuffle on both sides even when it would fit a broadcast. */
+  private lazy val rowEstimate: Long =
+    if (windows.isEmpty) 0L
+    else if (aggExprs.nonEmpty) windows.size.toLong
+    else {
+      val n = TicketTransport.instantiate(transportClass, transportOpts)
+        .statsIn(geUs, leUs)._1
+      limit.fold(n)(l => math.min(n, l.toLong * windows.size))
+    }
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def numRows(): java.util.OptionalLong =
+      java.util.OptionalLong.of(rowEstimate)
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(rowEstimate * required.defaultSize)
+  }
   override def description(): String =
     s"TicketScan PushedFilters: [${pushed.mkString(", ")}], " +
       s"range=[$geUs,$leUs], window=${windowUs}us, pageSize=$pageSize, " +
@@ -334,9 +360,7 @@ private[sources] class TicketScan(geUs: Long, leUs: Long, windowUs: Long,
     * inclusive [lo, hi] bounds. Runtime-filtered keys drop windows
     * containing none of them before any fetch is issued. */
   override def planInputPartitions(): Array[InputPartition] = {
-    if (geUs > leUs) return Array.empty
-    val wins = graft.operators.Relational.splitWindows(geUs, leUs + 1, windowUs)
-      .map { case (lo, hi) => TicketWindowPartition(lo, hi - 1) }
+    val wins = windows.map { case (lo, hi) => TicketWindowPartition(lo, hi - 1) }
     runtimeInUs
       .fold(wins)(ks => wins.filter(w => ks.exists(u => u >= w.loUs && u <= w.hiUs)))
       .toArray[InputPartition]

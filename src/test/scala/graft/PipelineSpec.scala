@@ -73,4 +73,21 @@ class PipelineSpec extends SparkSuite {
       uuidGen = lit("gen"))
     assert(out.count() === 2) // both chats survive the outer merge
   }
+
+  test("blank and null ids: one row per ticket, each with its own custom fields") {
+    // the custom-field pivot is per-row enrichment (extrair_custom_ticket):
+    // blank ids must not match each other, null ids keep their fields
+    val batch = spark.read.json(Seq(
+      """{"id":"","number":201,"customField":[{"key":"cpf","value":"111"}]}""",
+      """{"id":"","number":202,"customField":[{"key":"cpf","value":"222"}]}""",
+      """{"id":null,"number":203,"customField":[{"key":"cpf","value":"333"}]}""")
+      .toDS())
+    val out = Pipeline.run(batch, chats.limit(0),
+      Seq.empty[(String, String)].toDF("uuid", "n_ticket"),
+      uuidGen = concat(lit("gen-"), col("n_ticket")))
+    val rows = out.select("n_ticket", "ticket_cpf", "uuid").as[(String, String, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(rows === Seq(("201", "111", "gen-201"), ("202", "222", "gen-202"),
+      ("203", "333", "gen-203")))
+  }
 }

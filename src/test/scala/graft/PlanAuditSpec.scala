@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions.col
 
 /** Automated plan audit over the ENTIRE query registry — the judge's
   * manual `.explain` sweep as a regression gate. For every query in
@@ -340,5 +341,73 @@ class PlanAuditSpec extends SparkSuite {
       !audits.get(q).exists(a => a.unpartitionedWindow && a.uncollapsedWindow))
     assert(stale.isEmpty,
       s"allowlist entries now covered by the structural proof (remove): ${stale.toSeq.sorted}")
+  }
+
+  // ---- plan shapes of the daily ETL batch ------------------------------
+  // Each redundant job removed from the batch (a second tickets scan, a
+  // distinct before an anti-join, a shuffle join against an API scan of
+  // unknown size) is pinned here so it cannot creep back.
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("Pipeline.run scans the tickets JSON once and joins nothing on the raw id") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = tempDir("plan-etl-")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/tickets.json"),
+      ("""{"id":"t1","number":1,"customField":[{"key":"cpf","value":"1"}]}""" + "\n" +
+        """{"id":"","number":2,"customField":[{"key":"cpf","value":"2"}]}""")
+        .getBytes("UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/chats.json"),
+      """{"chat_id":"c1","evt_ticket_ticketNumber":"1"}""".getBytes("UTF-8"))
+    val tickets = spark.read.json(s"$dir/tickets.json")
+    val dest = spark.range(0).selectExpr("cast(id as string) as n_ticket")
+    val out = Pipeline.run(tickets, spark.read.json(s"$dir/chats.json"), dest)
+    val ticketScans = out.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec if s.relation.fileFormat.toString == "JSON" &&
+        s.relation.location.rootPaths.exists(_.toString.endsWith("tickets.json")) => s
+    }
+    assert(ticketScans.size === 1, out.queryExecution.sparkPlan.treeString)
+    val idJoins = out.queryExecution.optimizedPlan.collect {
+      case j: Join if j.condition.exists(_.references.exists(a =>
+        a.name == "uuid" || a.name == "__uuid_key")) => j
+    }
+    assert(idJoins.isEmpty, idJoins.mkString("\n"))
+  }
+
+  test("dedupAgainst and upsert aggregate nothing on the key side") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val orders = Tables.orders(spark, sf)
+    val dest = orders.filter(col("o_orderstatus") === "F")
+    val plans = Seq(
+      "dedupAgainst" -> graft.operators.Joins.dedupAgainst(orders, dest, Seq("o_orderkey")),
+      "upsert" -> graft.operators.Joins.upsert(
+        orders.select("o_orderkey", "o_orderstatus"),
+        dest.select("o_orderkey", "o_orderstatus"), "o_orderkey"))
+    plans.foreach { case (name, df) =>
+      val aggs = df.queryExecution.sparkPlan.collect { case a: BaseAggregateExec => a }
+      assert(aggs.isEmpty, s"$name plans an aggregate:\n${df.queryExecution.sparkPlan}")
+    }
+  }
+
+  test("upsert against a checkpointed ticket scan broadcasts it, no shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val priorPath = tempDir("plan-prior-") + "/status"
+    spark.range(0, 2000).selectExpr("id as number", "'open' as status")
+      .write.parquet(priorPath)
+    val scanned = spark.read.format("graft.sources.TicketDataSource")
+      .option("start", "2024-01-01T00:00:00Z").option("end", "2024-01-07T00:00:00Z")
+      .option("windowDays", "2").load()
+      .select(col("number"), col("status"))
+      .localCheckpoint()
+    val out = graft.operators.Joins.upsert(spark.read.parquet(priorPath), scanned, "number")
+    // six days of tickets cover every prior number, so all are replaced
+    assert(out.collect().length.toLong === scanned.count())
+    val plan = out.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty, plan.treeString)
+    assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
   }
 }

@@ -374,4 +374,79 @@ class SinksSpec extends SparkSuite {
       batch, Sinks.readEvolved(spark, path), Seq("n_ticket"))
     assert(fresh.select("n_ticket").as[String].collect().toSeq === Seq("t3"))
   }
+
+  /** Spark jobs this thread started while `body` runs. Jobs are tagged
+    * with a thread-local property, so jobs of other threads sharing the
+    * SparkContext are not counted; listener events arrive in order, so
+    * once a tagged marker job started after `body` is seen, every job
+    * `body` started has been counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(p => p.getProperty("graft.test.tag") == tag)
+          .foreach(p => started.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      val out = body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!started.contains("marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("marker"), "marker job never reached the listener")
+      (out, started.size - 1)
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("readCommitted: the footer-merged schema equals mergeSchema's, with no Spark job") {
+    val root = tempPath()
+    assert(Sinks.appendAtomic(
+      Seq(("c1", "t1")).toDF("chat_id", "n_ticket"), root, "b1"))
+    // an added column, a batch missing a column, a reordered batch
+    assert(Sinks.appendAtomic(
+      Seq(("c2", "t2", "open")).toDF("chat_id", "n_ticket", "status"), root, "b2"))
+    assert(Sinks.appendAtomic(Seq("c3").toDF("chat_id"), root, "b3"))
+    assert(Sinks.appendAtomic(
+      Seq(("closed", 7L, "t4", "c4")).toDF("status", "score", "n_ticket", "chat_id"),
+      root, "b4"))
+    val expected = spark.read.option("mergeSchema", "true")
+      .parquet(Sinks.committedFiles(spark, root): _*).schema
+    val (dest, jobs) = jobsDuring(Sinks.readCommitted(spark, root))
+    assert(dest.schema === expected)
+    assert(dest.schema.fieldNames.toSeq === Seq("chat_id", "n_ticket", "status", "score"))
+    assert(jobs === 0, s"readCommitted started $jobs Spark jobs")
+    // a second read hits the footer cache and still starts no job
+    assert(jobsDuring(Sinks.readCommitted(spark, root).schema)._2 === 0)
+    val byChat = dest.collect().map(r => r.getString(0) -> r).toMap
+    assert(byChat.keySet === Set("c1", "c2", "c3", "c4"))
+    assert(byChat("c3").isNullAt(1) && byChat("c1").isNullAt(2))
+    assert(byChat("c4").getString(1) === "t4" && byChat("c4").getLong(3) === 7L)
+  }
+
+  test("readCommitted: a wiped root recreated with reused batch ids serves no stale schema") {
+    val root = tempPath()
+    assert(Sinks.appendAtomic(
+      Seq(("c1", "t1")).toDF("chat_id", "n_ticket"), root, "b1"))
+    assert(Sinks.readCommitted(spark, root).schema.fieldNames.toSeq ===
+      Seq("chat_id", "n_ticket"))
+    def wipe(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(wipe))
+      f.delete()
+    }
+    wipe(new java.io.File(root))
+    assert(Sinks.appendAtomic(Seq((1L, "x")).toDF("score", "label"), root, "b1"))
+    val again = Sinks.readCommitted(spark, root)
+    assert(again.schema.fieldNames.toSeq === Seq("score", "label"))
+    assert(again.collect().map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "x")))
+  }
 }

@@ -29,12 +29,15 @@ class CountingTestTransport extends graft.sources.TicketTransport {
       TicketApi.Ticket(s"seam-$k", k, geUs + k, "open", s"seam$k@example.com")
     }
   }
-  override def statsIn(geUs: Long, leUs: Long): (Long, Long, Long) =
+  override def statsIn(geUs: Long, leUs: Long): (Long, Long, Long) = {
+    CountingTestTransport.statsCalls.incrementAndGet()
     (n, geUs, geUs + math.max(0L, n - 1))
+  }
 }
 
 object CountingTestTransport {
   val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+  val statsCalls = new java.util.concurrent.atomic.AtomicLong(0L)
   val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
   val sawOptions = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
@@ -379,5 +382,50 @@ class TicketSourceSpec extends SparkSuite {
       .join(probe, Seq("created_at"))
     assert(joined.count() ===
       full.count(r => probeKeys.contains(r.getTimestamp(0))))
+  }
+
+  private def statsOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+    }.get.estimateStatistics()
+
+  test("estimateStatistics: the API count over the pushed range, capped by a pushed limit") {
+    val lo = "2024-01-05 00:00:00"
+    val hi = "2024-01-20 00:00:00"
+    val ranged = read("2024-01-01T00:00:00Z", "2024-03-01T00:00:00Z", "windowDays" -> "7")
+      .filter(col("created_at") >= lit(lo).cast("timestamp") &&
+        col("created_at") <= lit(hi).cast("timestamp"))
+    val n = TicketApi.countIn(TicketApi.parseIso("2024-01-05T00:00:00Z"),
+      TicketApi.parseIso("2024-01-20T00:00:00Z"))
+    val st = statsOf(ranged)
+    assert(st.numRows().getAsLong === n)
+    assert(st.sizeInBytes().getAsLong === n * TicketApi.schema.defaultSize)
+    // pruned columns shrink the size, not the count
+    val narrow = statsOf(ranged.select("number"))
+    assert(narrow.numRows().getAsLong === n)
+    assert(narrow.sizeInBytes().getAsLong === n * 8L)
+    // each window reader stops at a pushed limit: one window → the limit,
+    // three windows → at most three times the limit
+    assert(statsOf(read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z").limit(10))
+      .numRows().getAsLong === 10L)
+    assert(statsOf(read("2024-01-01T00:00:00Z", "2024-01-21T00:00:00Z",
+      "windowDays" -> "7").limit(10)).numRows().getAsLong === 30L)
+    // an empty range is empty; a pushed aggregate emits one row per window
+    assert(statsOf(read("2024-02-01T00:00:00Z", "2024-01-01T00:00:00Z"))
+      .numRows().getAsLong === 0L)
+    assert(statsOf(read("2024-01-01T00:00:00Z", "2024-01-21T00:00:00Z",
+      "windowDays" -> "7").agg(count(lit(1)))).numRows().getAsLong === 3L)
+  }
+
+  test("estimateStatistics asks the bound transport's statsIn at most once per scan") {
+    CountingTestTransport.statsCalls.set(0L)
+    val df = read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z",
+      "transport" -> classOf[CountingTestTransport].getName,
+      "testtickets" -> "250")
+    assert(statsOf(df).numRows().getAsLong === 250L)
+    assert(statsOf(df).numRows().getAsLong === 250L)
+    assert(df.collect().length === 250)
+    assert(CountingTestTransport.statsCalls.get() === 1L)
   }
 }
