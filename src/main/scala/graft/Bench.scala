@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * scale-factor dir in SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -22,16 +20,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same extension set as Verify, so bench plans == verified plans.
-    GraftExtensions.install(spark)
+    val spark = Sessions.local(Sessions.cpus)
 
     // Dev-only subset filter (driver sets no SPARK_GRAFT_ONLY → full suite).
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 1000×-class graph soak (r13 verdict task #5): measure the three
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * while per-round work scales with |E| — any super-linear wall-clock
   * cliff is a shuffle/memory artifact to diagnose, not algorithmic.
   *
-  * Not part of the driver contract (like ScaleUp/KCoreScale).
+  * Not part of the benchmark (like ScaleUp).
   * Usage: runMain graft.GraphScale <baseDir> <factor> <workDir> [family]
   *   family ∈ all|labelprop|kcore|ktruss (default all); timing is
   *   single-shot per family (an sf100 label_prop run is ~10 min — a
@@ -31,20 +31,11 @@ object GraphScale {
     val factor = args(1).toInt
     val workDir = args(2)
     val family = if (args.length > 3) args(3) else "all"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // partition sizing is the 100-TB knob under test: at sf100 the
-    // per-round |E| exchange is ~19 GB — 32 partitions put ~37M rows in
-    // each sort/hash and spill-thrash; scale partitions with the data so
-    // each stays executor-memory-sized (the BASELINE.md cliff diagnosis)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    println(s"GRAPHSCALE shuffle.partitions=$shuffleParts")
-    spark.sparkContext.setLogLevel("WARN")
+    // the per-round |E| exchanges size their own width from leaf bytes
+    // (Graph.edgeWidth), so the session keeps the default partitions
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
+    println(s"GRAPHSCALE cpus=$cpus")
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val li = Tables.lineitem(spark, baseDir)

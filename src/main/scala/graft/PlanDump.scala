@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (not driver contract): write `.explain("formatted")` output
   * for named queries to <outDir>/<query>_<suffix>.txt — the plan
   * evidence files under plans/rNN/.
@@ -13,15 +11,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
+    val spark = Sessions.local(Sessions.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Synthetic scale-up of the harness testdata (dev-loop tool, like
-  * [[Scratch]] not part of the library contract): writes an
+/** Synthetic scale-up of the harness testdata (dev-loop tool, not part
+  * of the library contract): writes an
   * sfN-equivalent directory by unioning `copies` key-offset replicas of
   * every scaling table. Dimensions (region, nation) stay fixed — TPC-H
   * semantics — and every foreign key is offset by the SAME per-entity
@@ -40,14 +40,7 @@ object ScaleUp {
     val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
     require(copies >= 1, s"copies must be >= 1: $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
 
     def maxKey(table: String, key: String): Long =
       Tables.load(spark, src, table).agg(max(col(key))).collect()(0).getLong(0)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,17 @@ object Verify {
     // always runs the full map)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // The session carries the full extension set (functions, GroupTopK
+    // strategy, row_number→heap rewrite) for EVERY query: the oracle gate
+    // doubles as the standing equivalence proof for the optimizer rule.
+    val spark = Sessions.local(Sessions.cpus)
     // AQE (+ skew-join handling + partition coalescing) is ON by default
     // in Spark 4 — the suite's standard profile IS adaptive. This knob
     // runs the inverse profile: results must be plan-invariant, so a
     // sweep with AQE off proves no query leans on a runtime re-plan
     // (BASELINE.md records both profiles hash-green).
-    val aqeOff = sys.env.get("SPARK_GRAFT_AQE_OFF").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", (!aqeOff).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Full extension set (functions, GroupTopK strategy, row_number→heap
-    // rewrite) active for EVERY query: the oracle gate doubles as the
-    // standing equivalence proof for the optimizer rule.
-    GraftExtensions.install(spark)
+    if (sys.env.get("SPARK_GRAFT_AQE_OFF").contains("1"))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -25,10 +25,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the extra exchange is bounded by one scan split per core (bytes ≤
   * width · maxPartitionBytes). At warehouse scale either condition
   * fails — inputs split wide on their own — and this is an exact
-  * no-op, leaving plans byte-identical. Saturated size estimates
-  * (stat-less leaves such as localCheckpoints report 2⁶³-ish sentinel
-  * sizes) are treated as unknown → no-op, same discipline as
-  * [[Graph.edgeWidth]].
+  * no-op, leaving plans byte-identical. An unknown input size
+  * ([[Sizing.leafBytes]] is `None`) is a no-op too.
   */
 object FanOut {
 
@@ -40,16 +38,14 @@ object FanOut {
   def widen(df: DataFrame, keys: Column*): DataFrame = {
     val conf = df.sparkSession.sessionState.conf
     val width = conf.numShufflePartitions
-    val bytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (bytes >= (BigInt(1) << 47)) return df // unknown-size sentinel
-    val b = bytes.toLong
-    val maxSplit = math.min(conf.filesMaxPartitionBytes,
-      math.max(conf.filesOpenCostInBytes, b / math.max(1, width)))
-    val scanWidth = (b + maxSplit - 1) / math.max(1L, maxSplit)
-    if (scanWidth < width && b <= width.toLong * conf.filesMaxPartitionBytes) {
-      if (keys.nonEmpty) df.repartition(width, keys: _*)
-      else df.repartition(width)
-    } else df
+    val narrow = Sizing.leafBytes(df).exists { b =>
+      val maxSplit = math.min(conf.filesMaxPartitionBytes,
+        math.max(conf.filesOpenCostInBytes, b / math.max(1, width)))
+      val scanWidth = (b + maxSplit - 1) / math.max(1L, maxSplit)
+      scanWidth < width && b <= width.toLong * conf.filesMaxPartitionBytes
+    }
+    if (!narrow) df
+    else if (keys.nonEmpty) df.repartition(width, keys: _*)
+    else df.repartition(width)
   }
 }

@@ -29,15 +29,12 @@ object Graph {
     * blow-up — degrading to the session default, i.e. exactly the r14
     * shape. Floors at the session default (bench-scale plans stay
     * byte-identical: callers keep the ADAPTIVE no-width repartition
-    * there), caps at 2048, and treats a saturated sum (≥ 2⁴⁷ bytes —
-    * the default-size sentinel of stat-less leaves like checkpoints)
-    * as unknown → session default. */
+    * there), caps at 2048, and treats an unknown size
+    * ([[Sizing.leafBytes]] is `None`) as the session default. */
   private[graft] def edgeWidth(edges: DataFrame): Int = {
     val base = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val bytes = edges.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (bytes >= (BigInt(1) << 47)) base
-    else math.max(base, math.min(2048L, (bytes / (32L << 20)).toLong + 1L).toInt)
+    Sizing.leafBytes(edges).fold(base)(bytes =>
+      math.max(base, math.min(2048L, bytes / (32L << 20) + 1L).toInt))
   }
 
   /** `repartition` that stays ADAPTIVE (no pinned width, AQE-coalescible

@@ -34,15 +34,13 @@ import org.apache.spark.sql.types.NumericType
   * the always-on form: q_chatterjee 1.72×, q_conformal 1.50×,
   * q_spearman/q_jonckheere 1.19×). So, exactly like [[FanOut.widen]] and
   * `Graph.edgeWidth`, the form is chosen from the INPUT SIZE: callers
-  * pass `wide = Prefix.isWide(input)` — leaf bytes above
-  * `spark.graft.prefix.wideBytes` (default one scan split,
-  * `spark.sql.files.maxPartitionBytes`) switch to the bucketed form; at
+  * pass `wide = Prefix.isWide(input)` — leaf bytes above one scan split
+  * (`spark.sql.files.maxPartitionBytes`) switch to the bucketed form; at
   * or below it the plan keeps the plain single-window shape byte-for-byte
   * (bench SF unchanged; a grid that fits one scan split sorts in one
   * task faster than the parallel machinery schedules). At warehouse
   * scale the threshold always trips and every grid window is
-  * partitioned. `$SPARK_GRAFT_PREFIX_WIDE_BYTES` overrides for scale
-  * soaks / plan evidence.
+  * partitioned.
   *
   * Intended for LOW-CARDINALITY groups (the pathology being fixed); a
   * high-cardinality partition key is already parallel — keep the plain
@@ -50,25 +48,12 @@ import org.apache.spark.sql.types.NumericType
   */
 object Prefix {
 
-  private val SentinelBytes = BigInt(1) << 47
-
-  /** True when `df`'s known leaf input bytes exceed the wide threshold —
-    * evaluate on the RAW input (pre-collapse, pre-checkpoint: stat-less
-    * leaves report a 2⁴⁷-ish sentinel, treated as unknown → plain form,
-    * the [[FanOut.widen]] discipline). */
-  def isWide(df: DataFrame): Boolean = {
-    val bytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (bytes >= SentinelBytes) false
-    else {
-      val spark = df.sparkSession
-      val thr = sys.env.get("SPARK_GRAFT_PREFIX_WIDE_BYTES")
-        .orElse(spark.conf.getOption("spark.graft.prefix.wideBytes"))
-        .map(_.toLong)
-        .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
-      bytes.toLong > thr
-    }
-  }
+  /** True when `df`'s known leaf input bytes exceed one scan split —
+    * evaluate on the RAW input, before any collapse. An unknown size
+    * ([[Sizing.leafBytes]] is `None`) keeps the plain form. */
+  def isWide(df: DataFrame): Boolean =
+    Sizing.leafBytes(df)
+      .exists(_ > df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
 
   /** Adds, for every weight column `w` in `weightCols`:
     *
@@ -134,11 +119,10 @@ object Prefix {
           if (withTotals) Seq(col(s"__pfx_p_$w"), col(s"__tot_$w"))
           else Seq(col(s"__pfx_p_$w"))): _*)
       val joined = withIn.join(broadcast(prefix), grps :+ "__pfx_bkt")
-      val out = weightCols.foldLeft(joined) { (d, w) =>
-        d.withColumn(s"__cb_$w", col(s"__pfx_p_$w") + col(s"__pfx_in_$w"))
-          .drop(s"__pfx_p_$w", s"__pfx_in_$w")
-      }.drop("__pfx_bkt")
-      if (grpCols.nonEmpty) out else out.drop("__pfx_grp")
+      joined.select(grid.columns.map(col) ++ weightCols.flatMap { w =>
+        (col(s"__pfx_p_$w") + col(s"__pfx_in_$w")).as(s"__cb_$w") +:
+          (if (withTotals) Seq(col(s"__tot_$w")) else Nil)
+      }: _*)
     }
   }
 
@@ -146,9 +130,10 @@ object Prefix {
     * ordCol asc) order — or the NEXT row's when `desc` (i.e. `lead` by
     * value) — null at each group's boundary row. The parallel form takes
     * each bucket's boundary value from the adjacent NON-EMPTY bucket
-    * (per-bucket argmax-by-ord, then a ≤(groups×B)-row lag over the
-    * bucket rows). `valCol` must be non-null (a null value would be
-    * indistinguishable from a bucket boundary). Same grid contract and
+    * (each bucket's last value in the window's own order, then a
+    * ≤(groups×B)-row lag over the bucket rows). `valCol` must be
+    * non-null (a null value would be indistinguishable from a bucket
+    * boundary). Same grid contract and
     * `wide` semantics as [[cumBefore]]. */
   def lagAcross(grid: DataFrame, grpCols: Seq[String], ordCol: String,
                 valCol: String, desc: Boolean = false,
@@ -159,40 +144,31 @@ object Prefix {
       grid.withColumn(s"__lag_$valCol", lag(col(valCol), 1).over(w))
     } else {
       val (bucketed, grps) = bucketize(grid, grpCols, ordCol, desc)
-      val gc = grps.map(col)
-      val ordX = if (desc) col(ordCol).desc else col(ordCol).asc
-      val wIn = Window.partitionBy((grps :+ "__pfx_bkt").map(col): _*)
-        .orderBy(ordX)
+      val bk = (grps :+ "__pfx_bkt").map(col)
+      val wIn = Window.partitionBy(bk: _*)
+        .orderBy(if (desc) col(ordCol).desc else col(ordCol).asc)
+      // the bucket's last value comes from the same window, so it follows
+      // the window's own null/NaN order
       val withIn = bucketed
         .withColumn("__pfx_lin", lag(col(valCol), 1).over(wIn))
-      // bucket-boundary value = argmax by the SIGNED order axis (flip
-      // for desc), shares the (group, bucket) exchange with the window
-      val ordSigned =
-        if (desc) lit(0.0) - col(ordCol).cast("double")
-        else col(ordCol).cast("double")
-      val lasts = bucketed
-        .groupBy((grps :+ "__pfx_bkt").map(col): _*)
-        .agg(max(struct(ordSigned.as("o"), col(valCol).as("v")))
-          .as("__pfx_last"))
-      val wB = Window.partitionBy(gc: _*).orderBy(col("__pfx_bkt").asc)
-      val prevLast = lasts
-        .withColumn("__pfx_pl",
-          lag(col("__pfx_last").getField("v"), 1).over(wB))
-        .select((grps :+ "__pfx_bkt").map(col) :+ col("__pfx_pl"): _*)
-      val out = withIn.join(broadcast(prevLast), grps :+ "__pfx_bkt")
-        .withColumn(s"__lag_$valCol",
-          coalesce(col("__pfx_lin"), col("__pfx_pl")))
-        .drop("__pfx_lin", "__pfx_pl", "__pfx_bkt")
-      if (grpCols.nonEmpty) out else out.drop("__pfx_grp")
+        .withColumn("__pfx_last", last(col(valCol)).over(wIn.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)))
+      val wB = Window.partitionBy(grps.map(col): _*).orderBy(col("__pfx_bkt").asc)
+      val prevLast = withIn.groupBy(bk: _*)
+        .agg(max(col("__pfx_last")).as("__pfx_last"))
+        .select(bk :+ lag(col("__pfx_last"), 1).over(wB).as("__pfx_pl"): _*)
+      withIn.join(broadcast(prevLast), grps :+ "__pfx_bkt")
+        .select(grid.columns.map(col) :+
+          coalesce(col("__pfx_lin"), col("__pfx_pl")).as(s"__lag_$valCol"): _*)
     }
   }
 
   /** Adds `__lead_<valCol>`: the NEXT row's `valCol` in (group, ordCol
     * asc) order, null at each group's last row — the parallel form of
     * `lead(val, 1)`. Wide form: within-bucket lead + each bucket's last
-    * row takes the next NON-EMPTY bucket's first value (argmin-by-ord,
-    * then a ≤(groups×B)-row lead over the bucket rows). Same non-null
-    * `valCol` contract as [[lagAcross]]. */
+    * row takes the next NON-EMPTY bucket's first value (in the window's
+    * own order, then a ≤(groups×B)-row lead over the bucket rows). Same
+    * non-null `valCol` contract as [[lagAcross]]. */
   def leadAcross(grid: DataFrame, grpCols: Seq[String], ordCol: String,
                  valCol: String, wide: Boolean = false): DataFrame = {
     if (!wide) {
@@ -201,25 +177,19 @@ object Prefix {
       grid.withColumn(s"__lead_$valCol", lead(col(valCol), 1).over(w))
     } else {
       val (bucketed, grps) = bucketize(grid, grpCols, ordCol, desc = false)
-      val gc = grps.map(col)
-      val wIn = Window.partitionBy((grps :+ "__pfx_bkt").map(col): _*)
-        .orderBy(col(ordCol).asc)
+      val bk = (grps :+ "__pfx_bkt").map(col)
+      val wIn = Window.partitionBy(bk: _*).orderBy(col(ordCol).asc)
       val withIn = bucketed
         .withColumn("__pfx_lin", lead(col(valCol), 1).over(wIn))
-      val firsts = bucketed
-        .groupBy((grps :+ "__pfx_bkt").map(col): _*)
-        .agg(min(struct(col(ordCol).cast("double").as("o"),
-          col(valCol).as("v"))).as("__pfx_first"))
-      val wB = Window.partitionBy(gc: _*).orderBy(col("__pfx_bkt").asc)
-      val nextFirst = firsts
-        .withColumn("__pfx_nf",
-          lead(col("__pfx_first").getField("v"), 1).over(wB))
-        .select((grps :+ "__pfx_bkt").map(col) :+ col("__pfx_nf"): _*)
-      val out = withIn.join(broadcast(nextFirst), grps :+ "__pfx_bkt")
-        .withColumn(s"__lead_$valCol",
-          coalesce(col("__pfx_lin"), col("__pfx_nf")))
-        .drop("__pfx_lin", "__pfx_nf", "__pfx_bkt")
-      if (grpCols.nonEmpty) out else out.drop("__pfx_grp")
+        .withColumn("__pfx_first", first(col(valCol)).over(wIn.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)))
+      val wB = Window.partitionBy(grps.map(col): _*).orderBy(col("__pfx_bkt").asc)
+      val nextFirst = withIn.groupBy(bk: _*)
+        .agg(max(col("__pfx_first")).as("__pfx_first"))
+        .select(bk :+ lead(col("__pfx_first"), 1).over(wB).as("__pfx_nf"): _*)
+      withIn.join(broadcast(nextFirst), grps :+ "__pfx_bkt")
+        .select(grid.columns.map(col) :+
+          coalesce(col("__pfx_lin"), col("__pfx_nf")).as(s"__lead_$valCol"): _*)
     }
   }
 
@@ -245,20 +215,26 @@ object Prefix {
     val gc = grps.map(col)
     val ordAsc = col(ordCol).cast("double")
     // bucket axis follows the window order: negate for desc so the bucket
-    // id stays monotone in the ORDER the cumsum runs in
+    // id stays monotone in the ORDER the cumsum runs in. Negation does not
+    // move NaN (the greatest double to Spark), so NaN rows are placed by
+    // hand and kept out of the min/max
     val ordv = if (desc) lit(0.0) - ordAsc else ordAsc
+    val notNaN = when(!isnan(ordAsc), ordv)
     val mm = g0.groupBy(gc: _*)
-      .agg(min(ordv).as("__pfx_mn"), max(ordv).as("__pfx_mx"))
+      .agg(min(notNaN).as("__pfx_mn"), max(notNaN).as("__pfx_mx"))
     val span = col("__pfx_mx") - col("__pfx_mn")
     // monotone in ordv by construction (IEEE ·/÷ are monotone on
-    // non-negative operands); every irregular case degrades to a single
-    // bucket or the edge bucket, never to a non-monotone assignment:
-    //   null ord    → the end the sort puts nulls at (first asc/last desc)
-    //   span ≤ 0    → one distinct value: everything in bucket b-1
-    //   NaN/inf ord → !(ordv < mx) → bucket b-1 (NaN sorts greatest)
-    //   inf span    → (v-mn)·b/inf = 0 → bucket 0 for all finite v
-    val nullBkt = 0 // nulls sort first asc / last desc; ordv flips for desc
+    // non-negative operands); every irregular case goes to an edge bucket
+    // or degrades to a single bucket, never to a non-monotone assignment:
+    //   null ord → the end the sort puts nulls at (first asc/last desc)
+    //   NaN ord  → the end the sort puts NaN at (last asc/first desc)
+    //   span ≤ 0 → one distinct value: everything in bucket b-1
+    //   ordv = mx (also +inf) → bucket b-1
+    //   inf span → (v-mn)·b/inf is 0 (finite mn) or NaN (mn = -inf): one
+    //              bucket for every row below mx
+    val (nullBkt, nanBkt) = if (desc) (b - 1, 0) else (0, b - 1)
     val bkt = when(col(ordCol).isNull, lit(nullBkt))
+      .when(isnan(ordAsc), lit(nanBkt))
       .when(!(span > 0) || !(ordv < col("__pfx_mx")), lit(b - 1))
       .otherwise(least(
         floor((ordv - col("__pfx_mn")) * lit(b.toDouble) / span),

@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one local SparkSession per suite (lazy, UTC, small
-  * shuffle partition count for test speed). */
+/** Shared session: the mains' session (UTC, extensions installed) on a
+  * fixed 4 cores, so a suite's plans do not depend on the test box or on
+  * which suite ran first in the forked JVM. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -25,11 +25,12 @@ for i in $(seq 1 "$ROUNDS"); do
     name=$(basename "$tree")
     echo "== round $i tree $name =="
     (cd "$tree" && \
-      SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=32 \
+      SPARK_GRAFT_SF_DIR="$SF_DIR" \
       SPARK_GRAFT_ONLY=$QS SPARK_GRAFT_BENCH_OUT=/tmp/ab_${name}_round${i}.json \
       sbt -batch "runMain graft.Bench" > /tmp/ab_${name}_round${i}.log 2>&1)
   done
 done
+echo "nproc=$(nproc)"
 python3 - "$NAME_A" "$NAME_B" "$ROUNDS" <<'PYEOF'
 import json, sys, statistics
 a, b, rounds = sys.argv[1], sys.argv[2], int(sys.argv[3])

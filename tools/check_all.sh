@@ -19,6 +19,6 @@ echo "$oracle_out" | tail -2
 echo "$oracle_out" | tail -1 | grep -q "^0 failures" \
   || { echo "ORACLE FAILURES"; exit 1; }
 
-echo "== bench =="
-SPARK_GRAFT_SF_DIR=$BSF SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Bench" 2>/dev/null \
+echo "== bench (nproc=$(nproc)) =="
+SPARK_GRAFT_SF_DIR=$BSF sbt -batch "runMain graft.Bench" 2>/dev/null \
   | grep '"metric"'

@@ -45,11 +45,12 @@ for pass in 1 2; do
 done
 
 if [ "${1:-}" = "--bench" ]; then
-  echo "== growth bench (23-query head, median-of-3) =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  echo "== growth bench (23-query head, median-of-3, nproc=$(nproc)) =="
+  # unset: Bench falls back to its default data dir, sf0.1
+  env -u SPARK_GRAFT_SF_DIR \
     SPARK_GRAFT_ONLY=$GROWTH SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf01.json \
     sbt -batch "runMain graft.Bench" > /dev/null 2>&1
-  SPARK_GRAFT_SF_DIR=$SF1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=$SF1 \
     SPARK_GRAFT_ONLY=$GROWTH SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf1.json \
     sbt -batch "runMain graft.Bench" > /dev/null 2>&1
   python3 - <<'EOF'

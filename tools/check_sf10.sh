@@ -51,11 +51,11 @@ for pass in 1 2; do
 done
 
 if [ "${1:-}" = "--bench" ]; then
-  echo "== heavy-family growth bench (warm median-of-3, sf1 vs sf10) =="
-  SPARK_GRAFT_SF_DIR=/root/repo/data_sf1 SPARK_GRAFT_CPUS=32 \
+  echo "== heavy-family growth bench (warm median-of-3, sf1 vs sf10, nproc=$(nproc)) =="
+  SPARK_GRAFT_SF_DIR="$PWD/data_sf1" \
     SPARK_GRAFT_ONLY=$HEAVY SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf1h.json \
     sbt -batch "runMain graft.Bench" > /dev/null 2>&1
-  SPARK_GRAFT_SF_DIR=$SF10 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=$SF10 \
     SPARK_GRAFT_ONLY=$HEAVY SPARK_GRAFT_BENCH_OUT=/tmp/bench_sf10h.json \
     sbt -batch "runMain graft.Bench" > /dev/null 2>&1
   python3 - <<'PYEOF'
