@@ -21,13 +21,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
+    // Dev-only subset (driver sets no SPARK_GRAFT_ONLY → full suite); an
+    // unknown name fails here, before any session starts.
+    val names = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(only => SparkEntry.named(only.split(",").toSeq))
+      .getOrElse(SparkEntry.registry).map(_.name).sorted
     val spark = Sessions.local(Sessions.cpus)
-
-    // Dev-only subset filter (driver sets no SPARK_GRAFT_ONLY → full suite).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

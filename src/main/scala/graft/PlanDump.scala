@@ -10,11 +10,12 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
+    val qs = SparkEntry.named(args(3).split(",").toSeq)
     val spark = Sessions.local(Sessions.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    qs.foreach { q =>
+      val name = q.name
+      val df = q.build(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(

@@ -25,7 +25,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Profile <sfDir> <q1,q2,...>")
     val sfDir = args(0)
-    val names = args.drop(1).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val qs = SparkEntry.named(args.toSeq.drop(1).flatMap(_.split(",")))
     val spark = Sessions.local(Sessions.cpus)
 
     val jobs = mutable.ArrayBuffer.empty[JobRec]
@@ -57,8 +57,8 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    qs.foreach { q =>
+      val (name, fn) = (q.name, q.build)
       // warmup (codegen/JIT), untimed and unrecorded
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       jobs.clear(); stageRecs.clear(); jobStart.clear()

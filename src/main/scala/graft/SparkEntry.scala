@@ -1,15053 +1,53 @@
 package graft
 
-import graft.operators._
-import graft.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ §2b extensions), with DuckDB-runnable oracle SQL.
+/** Driver contract: the query registry, one [[Q]] per implemented operator
+  * from SURVEY.md §2 (+ §2b extensions), each with its DuckDB oracle SQL.
   *
-  * Implementation lives in graft.operators / graft.functions; this object
-  * only binds operators to the harness test tables. Constants chosen so
-  * every query is deterministic (ties broken by keys, doubles rounded after
-  * deterministic arithmetic) and scale-invariant (absolute bounds on the
-  * intentionally-quadratic pair oracles).
+  * Implementation lives in graft.operators / graft.functions; the family
+  * objects in graft.queries only bind operators to the harness test tables.
+  * Constants are chosen so every query is deterministic (ties broken by
+  * keys, doubles rounded after deterministic arithmetic) and
+  * scale-invariant (absolute bounds on the intentionally-quadratic pair
+  * oracles).
   */
 object SparkEntry {
-
-  private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
 
   /** Flagship query on sf=0.001 (reference/main.py:146-150 transplanted):
     * distinct open tickets. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    q_open_tickets(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------- spine
-
-  /** T18/S10: SELECT DISTINCT open keys (reference/main.py:146-150). */
-  private def q_open_tickets(s: SparkSession, d: String): DataFrame =
-    Relational.distinctOpenKeys(Tables.orders(s, d), "o_orderkey", "o_orderstatus", "F")
-      .select(col("o_orderkey").cast(StringType).as("n_ticket"))
-
-  /** T1/T7/T10: pushed time-range filter + project/rename + cast. */
-  private def q_filter_project(s: SparkSession, d: String): DataFrame = {
-    val filtered = Relational.timeRange(Tables.lineitem(s, d), "l_shipdate",
-      "1998-01-01 00:00:00", "1998-12-31 23:59:59")
-    val renamed = Relational.projectRename(filtered, Seq(
-      "l_orderkey" -> "order_id", "l_linenumber" -> "line_no",
-      "l_quantity" -> "qty", "l_returnflag" -> "flag"))
-    Relational.castAll(renamed, Seq("order_id" -> "string"))
-  }
-
-  /** T2/T3: orderBy + limit (deterministic tiebreak). */
-  private def q_sort_limit(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      .limit(10)
-      .select(col("o_orderkey"), col("o_totalprice"))
-
-  /** T6/T11: backfill absent columns as nulls + constant overwrite. */
-  private def q_backfill(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.backfill(
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("backfilled_col" -> StringType))
-      .withColumn("contact_cf_n_mero_do_ticket", lit(""))
-
-  /** T9: left enrichment join against a broadcast dimension. */
-  private def q_left_join(s: SparkSession, d: String): DataFrame = {
-    val dim = Tables.customer(s, d).select(
-      col("c_custkey").as("o_custkey"), col("c_name"), col("c_mktsegment"))
-    Joins.enrichLeft(
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-      dim, "o_custkey")
-  }
-
-  /** T12: full-outer entity merge with collision suffixing. */
-  private def q_full_outer_merge(s: SparkSession, d: String): DataFrame = {
-    val left = Tables.orders(s, d)
-      .select(col("o_custkey").as("cust"), col("o_orderstatus").as("status"))
-    val right = Tables.customer(s, d)
-      .select(col("c_custkey").as("cust2"), col("c_mktsegment").as("status"))
-    Joins.fullOuterMerge(left, right, "cust", "cust2")
-  }
-
-  /** S11: membership probe as left-semi join. */
-  private def q_semi_join(s: SparkSession, d: String): DataFrame =
-    Joins.semiJoin(
-      Tables.customer(s, d),
-      Tables.orders(s, d).filter(col("o_orderstatus") =!= "F")
-        .select(col("o_custkey").as("c_custkey")),
-      "c_custkey")
-
-  /** §2b right outer join (customers without orders survive). */
-  private def q_right_join(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .join(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"), "right")
-      .select(col("c_custkey"), col("c_mktsegment"), col("o_orderkey"),
-        col("o_totalprice"))
-
-  /** T16: dedup-vs-destination anti-join. */
-  private def q_anti_dedup(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val dest = orders.filter(col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-    Joins.dedupAgainst(orders, dest, Seq("o_orderkey"))
-  }
-
-  /** T16 at scale: Bloom-prefiltered dedup-vs-destination. Semantics are
-    * identical to [[q_anti_dedup]]'s plain anti-join (the oracle is the
-    * same NOT EXISTS shape), but only sketch false-positives and true
-    * duplicates reach the exact join — the 100 TB ingest path.
-    * `expectedItems` is deliberately sized BELOW the destination's
-    * cardinality to exercise the saturated-sketch regime (higher fpp,
-    * still exact). */
-  private def q_anti_dedup_bloom(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val dest = orders.filter(col("o_orderstatus") === "F")
-    Joins.dedupAgainstBloom(orders, dest, Seq("o_orderkey"),
-      expectedItems = 2000L, fpp = 0.03)
-  }
-
-  /** T19/S3: union of (column-drifting) scan slices. */
-  private def q_union_slices(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val s1 = Relational.timeRange(orders, "o_orderdate",
-      "1997-01-01 00:00:00", "1997-12-31 23:59:59")
-      .select(col("o_orderkey"), col("o_totalprice"))
-    val s2 = Relational.timeRange(orders, "o_orderdate",
-      "1998-01-01 00:00:00", "1998-12-31 23:59:59")
-      .select(col("o_orderkey"), col("o_orderpriority"))
-    Joins.unionSlices(Seq(s1, s2))
-  }
-
-  /** T4: fixed-width (7-day) time bucketing. */
-  private def q_window_bucket(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(Relational.timeBucket(col("o_orderdate"), 7L * 86400).as("bucket_start"))
-      .groupBy(col("bucket_start"))
-      .agg(count(lit(1)).as("n_orders"))
-
-  /** T5: ISO-8601 formatting with numeric offset. */
-  private def q_iso_format(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).select(col("o_orderkey"),
-      Relational.isoFormat(col("o_orderdate")).as("created_iso"))
-
-  /** T14: audit timestamp with a pinned clock (VERDICT r10 task 7) — the
-    * oracle-checkable variant of the reference's constant-per-run upload
-    * stamp (reference/main.py:110-112); production default (fixedClock =
-    * None → current_timestamp) is unchanged and spec-covered. */
-  private def q_audit_timestamp(s: SparkSession, d: String): DataFrame =
-    Relational.auditTimestamp(
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-      "upload", Some("2024-01-15 12:00:00"))
-
-  /** T13: null-or-blank key synthesis (deterministic generator for oracle). */
-  private def q_key_synthesis(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.orders(s, d).select(col("o_orderkey"),
-      when(col("o_orderstatus") === "F", lit(""))
-        .otherwise(col("o_orderkey").cast(StringType)).as("uuid"))
-    Relational.synthesizeKey(base, "uuid",
-      concat(lit("gen-"), col("o_orderkey").cast(StringType)))
-  }
-
-  /** T15/T17: column-name sanitize + duplicate-column drop keep-first. */
-  private def q_sanitize_names(s: SparkSession, d: String): DataFrame = {
-    val weird = Tables.lineitem(s, d).select(
-      col("l_orderkey").as("99 número-do pedido"),
-      col("l_linenumber").as("line#no"),
-      col("l_quantity"),
-      col("l_quantity"))
-    ColumnHygiene.dropDuplicateColumns(ColumnHygiene.sanitizeColumns(weird))
-  }
-
-  /** K3: keyed upsert (MERGE emulation: anti-join + union). */
-  private def q_upsert(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val dest = orders.filter(col("o_orderdate") < lit("2000-01-01").cast("timestamp"))
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    val updates = orders.filter(col("o_orderstatus") === "P")
-      .select(col("o_orderkey"), lit("Resolvido").as("o_orderstatus"), col("o_totalprice"))
-    Joins.upsert(dest, updates, "o_orderkey")
-  }
-
-  /** S5 shape: event pivot to evt_<type> presence columns. */
-  private def q_events_pivot(s: SparkSession, d: String): DataFrame =
-    Nested.pivotEventPresence(Tables.events(s, d), "user_id", "event_type", eventTypes)
-
-  /** S4 shape: schema-full JSON parsing (from_json → typed struct →
-    * field access), the typed counterpart of q_json_extract's path API. */
-  private def q_from_json(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .withColumn("parsed",
-        from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType)))))
-      .select(col("event_id"), col("parsed.k").as("k"),
-        col("parsed").isNull.as("parse_failed"))
-
-  /** S4/T21 shape: JSON attribute extraction + aggregate. */
-  private def q_json_extract(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(col("event_type"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .groupBy(col("event_type"))
-      .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-
-  /** T8: whitelist custom-field extraction — kv array built from order
-    * attributes, whitelisted keys pivoted to ticket_* columns (the
-    * reference's extrair_custom_ticket over array<struct<key,value>>). */
-  private def q_custom_fields(s: SparkSession, d: String): DataFrame = {
-    val withKv = Tables.orders(s, d).select(col("o_orderkey"),
-      array(
-        struct(lit("status").as("key"), col("o_orderstatus").as("value")),
-        struct(lit("priority").as("key"),
-          when(col("o_orderstatus") === "O", col("o_orderpriority")).as("value")),
-        struct(lit("junk").as("key"), col("o_totalprice").cast(StringType).as("value"))
-      ).as("custom_fields"))
-    Nested.extractWhitelistedKV(withKv, "custom_fields",
-      Seq("status", "priority"), "ticket_")
-  }
-
-  /** S4/T7 shape: recursive struct flattening (json_normalize equivalent)
-    * with dotted/special-char field names, then name sanitization. */
-  private def q_flatten(s: SparkSession, d: String): DataFrame = {
-    val nested = Tables.customer(s, d).select(col("c_custkey"),
-      struct(
-        col("c_name").as("name"),
-        struct(col("c_mktsegment").as("segment"),
-          col("c_nationkey").as("nation.key")).as("contact info")
-      ).as("profile"))
-    ColumnHygiene.sanitizeColumns(Nested.flattenStructs(nested))
-  }
-
-  /** §2b as-of join: each click event enriched with the user's most recent
-    * purchase at-or-before it — union + one window pass, not a range join. */
-  private def q_asof_join(s: SparkSession, d: String): DataFrame = {
-    val events = Tables.events(s, d)
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("value"))
-    Joins.asOfJoin(clicks, purchases, "user_id", "ts", "ts",
-      Seq("ts", "value"), "last_purchase_")
-      .withColumn("last_purchase_value", round(col("last_purchase_value"), 2))
-  }
-
-  // ------------------------------------------------- aggregation / window
-
-  /** §2b hash aggregate: TPC-H Q1 pricing summary. */
-  private def q1_pricing_summary(s: SparkSession, d: String): DataFrame = {
-    // EXACT DECIMAL sums: the money/quantity columns are 2-dec fixed
-    // point by semantics, and raw double sums stop surviving the 2dp
-    // round once group mass passes ~1e11 (measured: the sf10 soak's
-    // 60M-row groups flap engine-vs-oracle by ~0.3 — √n·ε·Σ|x| beats
-    // the round step). Decimal aggregation is order-independent at ANY
-    // scale; outputs cast back to double (correctly-rounded, identical
-    // in both engines) to keep the column contract.
-    val qty = col("l_quantity").cast("decimal(20,2)")
-    val price = col("l_extendedprice").cast("decimal(20,2)")
-    val disc = col("l_discount").cast("decimal(4,2)")
-    // NOT widened (r15): the FanOut.widen fan-out was tried before the
-    // decimal partial aggregate and interleaved-A/B'd at 1.15× (1.33 →
-    // 1.54 s) — shuffling 600k raw rows costs more than the wide
-    // partial aggregate saves; map-side combine before the tiny 6-group
-    // exchange is already the right shape (guide §2.3).
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") <= lit("1999-12-01").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(qty).cast("double").as("sum_qty"),
-        sum(price).cast("double").as("sum_base_price"),
-        (sum(price * (lit(1).cast("decimal(3,2)") - disc))).cast("double")
-          .as("sum_disc_price"),
-        round(sum(qty).cast("double") / count(lit(1)).cast("double"), 4)
-          .as("avg_qty"),
-        count(lit(1)).as("count_order"))
-  }
-
-  /** §2b per-group top-k via row_number window. */
-  private def q_topk_per_group(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    Tables.orders(s, d)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-  }
-
-  /** §2b per-group top-k via the CUSTOM physical operator (GroupTopKNode →
-    * partial/final heap GroupTopKExec — no full-group sort, ≤k rows per
-    * (group, partition) cross the shuffle): same rows as the window
-    * formulation of q_topk_per_group, checked against the same kind of
-    * ROW_NUMBER oracle. */
-  private def q_group_topk_native(s: SparkSession, d: String): DataFrame = {
-    GraftExtensions.install(s)
-    org.apache.spark.sql.graft.GroupTopK.topKPerGroup(
-      Tables.orders(s, d)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice")),
-      Seq("o_custkey"),
-      Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3)
-  }
-
-  /** §2b custom UDAF: grouped top-k via a typed Aggregator — O(k) state
-    * with map-side partial merge (only k values per group cross the
-    * shuffle, vs a window sorting every row). */
-  private def q_topk_udaf(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new TopKAggregator(3))
-    Tables.orders(s, d)
-      .groupBy(col("o_custkey"))
-      .agg(topk(col("o_totalprice")).as("top_prices"))
-      .select(col("o_custkey"),
-        round(try_element_at(col("top_prices"), lit(1)), 2).as("p1"),
-        round(coalesce(try_element_at(col("top_prices"), lit(2)), lit(-1.0)), 2).as("p2"),
-        round(coalesce(try_element_at(col("top_prices"), lit(3)), lit(-1.0)), 2).as("p3"))
-  }
-
-  /** §2b rollup. */
-  private def q_rollup(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      // exact DECIMAL sum: the grand-total row's mass crosses the
-      // float-sum rounding cliff at scale (the q1 sf10 lesson)
-      .agg(sum(col("l_quantity").cast("decimal(20,2)")).cast("double")
-        .as("sum_qty"), count(lit(1)).as("n"))
-
-  /** §2b cube. */
-  private def q_cube(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      // exact DECIMAL sum (grand-total mass; the q1 sf10 lesson)
-      .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast("decimal(20,2)")).cast("double")
-          .as("revenue"))
-
-  /** §2b grouping sets (SQL surface). */
-  private def q_grouping_sets(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_gs")
-    s.sql("""SELECT l_returnflag, l_linestatus, count(*) AS n
-             FROM lineitem_gs
-             GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""")
-  }
-
-  /** §2b window functions: rank + lag + running sum per customer. */
-  private def q_window_rank(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-    Tables.orders(s, d).select(
-      col("o_custkey"), col("o_orderkey"),
-      rank().over(w).cast("long").as("rnk"),
-      lag(col("o_totalprice"), 1).over(w).as("prev_price"),
-      round(sum(col("o_totalprice"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2)
-        .as("running_spend"))
-  }
-
-  /** §2b window functions, part 2: RANGE frame (30-day trailing spend),
-    * ntile, first_value and lead — the value-based frame that rowsBetween
-    * can't express. */
-  private def q_window_range(s: SparkSession, d: String): DataFrame = {
-    val days = datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date"))
-    val byDay = Window.partitionBy(col("o_custkey")).orderBy(days)
-    val ordered = Window.partitionBy(col("o_custkey"))
-      .orderBy(days.asc, col("o_orderkey").asc)
-    Tables.orders(s, d).select(
-      col("o_custkey"), col("o_orderkey"),
-      round(sum(col("o_totalprice")).over(byDay.rangeBetween(-30, 0)), 2)
-        .as("trailing_30d_spend"),
-      ntile(4).over(ordered).cast("long").as("quartile"),
-      first_value(col("o_orderkey")).over(ordered).as("first_order"),
-      lead(col("o_orderkey"), 1).over(ordered).as("next_order"))
-  }
-
-  /** §2b ranking distribution functions: percent_rank / cume_dist /
-    * dense_rank (unique full ordering → tie-free, engine-portable). */
-  private def q_window_dist(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-    Tables.orders(s, d).select(
-      col("o_orderkey"), col("o_orderpriority"),
-      round(percent_rank().over(w), 6).as("pct_rank"),
-      round(cume_dist().over(w), 6).as("cum_dist"),
-      dense_rank().over(w).cast("long").as("drank"))
-  }
-
-  /** §2b generator with ordinal: posexplode (token position matters for
-    * n-gram/window features downstream). */
-  private def q_posexplode(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).filter(col("doc_id") < 30)
-      .select(col("doc_id"),
-        posexplode(TextFunctions.tokens(col("text"))).as(Seq("pos", "token")))
-      .withColumn("pos", col("pos").cast("long"))
-
-  /** §2b set ops: INTERSECT. */
-  private def q_intersect(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    def custs(y: String) = Relational.timeRange(orders, "o_orderdate",
-      s"$y-01-01 00:00:00", s"$y-12-31 23:59:59").select(col("o_custkey"))
-    custs("1997").intersect(custs("1998"))
-  }
-
-  /** §2b set ops: EXCEPT. */
-  private def q_except(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    def custs(y: String) = Relational.timeRange(orders, "o_orderdate",
-      s"$y-01-01 00:00:00", s"$y-12-31 23:59:59").select(col("o_custkey"))
-    custs("1997").except(custs("1998"))
-  }
-
-  /** §2b skew-mitigating salted join: events (5 hot event_type keys — the
-    * pathological skew shape) joined to a type dimension on (key, salt) so
-    * each hot key spreads over 8 shuffle partitions. Result ≡ plain join. */
-  private def q_salted_join(s: SparkSession, d: String): DataFrame = {
-    val events = Tables.events(s, d).select(col("event_id"), col("event_type"))
-    val dim = events.select(col("event_type")).distinct()
-      .withColumn("type_label", upper(col("event_type")))
-    Joins.saltedJoin(events, dim, "event_type", buckets = 8)
-      .select(col("event_id"), col("type_label"))
-  }
-
-  /** §2b set ops, bag semantics: EXCEPT ALL (keeps duplicate multiplicity). */
-  private def q_except_all(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    li.select(col("l_orderkey"))
-      .exceptAll(li.filter(col("l_linenumber") === 1).select(col("l_orderkey")))
-  }
-
-  /** §2b set ops, bag semantics: INTERSECT ALL. */
-  private def q_intersect_all(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    li.filter(col("l_quantity") >= 25).select(col("l_suppkey"))
-      .intersectAll(li.filter(col("l_returnflag") === "R").select(col("l_suppkey")))
-  }
-
-  /** §2b array/map scalar battery: higher-order and collection functions
-    * over arrays built from row data (each must match DuckDB's list/map
-    * semantics exactly). */
-  private def q_array_funcs(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).select(
-      col("o_orderkey"),
-      concat_ws(",", sort_array(array(col("o_orderkey") % 7, col("o_orderkey") % 13,
-        col("o_orderkey") % 3))).as("mods_sorted"),
-      size(array_distinct(array(col("o_orderkey") % 2, col("o_orderkey") % 4)))
-        .cast("long").as("n_distinct_mods"),
-      aggregate(sequence(lit(1), lit(5)), lit(0L), (acc, x) => acc + x * x)
-        .as("sum_squares"),
-      array_contains(split(col("o_orderpriority"), "-"), "URGENT").as("is_urgent"),
-      element_at(map_from_arrays(
-        array(lit("status"), lit("priority")),
-        array(col("o_orderstatus"), col("o_orderpriority"))), "status").as("m_status"),
-      concat_ws(",", slice(sequence(col("o_orderkey") % 5, col("o_orderkey") % 5 + 4), 2, 2))
-        .as("mid_range"),
-      array_max(array(col("o_orderkey") % 11, col("o_orderkey") % 17))
-        .as("max_mod"),
-      concat_ws(",", flatten(array(array(col("o_orderstatus")),
-        array(col("o_orderpriority"))))).as("flat_pair"))
-
-  /** §2b multiway join + aggregate with broadcast dimensions (Q5 shape). */
-  private def q_join_agg_region(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"))
-      // exact DECIMAL sum: 5-region groups carry ~n/5 of the corpus
-      // each - float-sum noise beats the 2dp round at scale
-      .agg(sum(col("o_totalprice").cast("decimal(20,2)")).cast("double")
-        .as("revenue"),
-        countDistinct(col("o_custkey")).as("n_custs"))
-
-  /** §2b statistical aggregates: sample stddev/variance, correlation and
-    * covariance per group (identical definitions in DuckDB). */
-  private def q_stats_agg(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(stddev_samp(col("l_quantity")), 6).as("qty_stddev"),
-        round(var_samp(col("l_extendedprice")), 2).as("price_var"),
-        round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("qty_price_corr"),
-        round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("qty_disc_covar"))
-
-  /** §2b exact interpolated percentiles per group (linear interpolation —
-    * the same definition as DuckDB's quantile_cont). */
-  private def q_percentiles(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(expr("percentile(l_quantity, 0.5)"), 6).as("qty_p50"),
-        // both extendedprice percentiles from ONE aggregate: the exact
-        // percentile buffers the group's values in its state, so the
-        // array form halves the buffered data vs two separate aggs
-        expr("percentile(l_extendedprice, array(0.25D, 0.95D))").as("__pp"))
-      .select(col("l_returnflag"), col("qty_p50"),
-        round(col("__pp").getItem(0), 4).as("price_p25"),
-        round(col("__pp").getItem(1), 4).as("price_p95"))
-
-  /** §2b exact percentiles via value binning (the scale path of
-    * q_percentiles: shuffle ∝ distinct values, no per-group value
-    * buffering) — must equal the buffering `percentile` bit-for-bit at
-    * 6dp. */
-  private def q_percentile_binned(s: SparkSession, d: String): DataFrame =
-    Corpus.percentilesBinned(Tables.lineitem(s, d), "l_returnflag",
-        "l_quantity", Seq(0.5, 0.95))
-      .withColumn("p50", round(col("p50"), 6))
-      .withColumn("p95", round(col("p95"), 6))
-
-  /** §2b scalar-function battery: portable date/string/math built-ins in
-    * one projection (each must match DuckDB bit-for-bit or to 6dp). */
-  private def q_scalar_funcs(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).select(
-      col("o_orderkey"),
-      date_trunc("month", col("o_orderdate")).as("month_start"),
-      year(col("o_orderdate")).cast("long").as("yr"),
-      dayofmonth(col("o_orderdate")).cast("long").as("dom"),
-      datediff(lit("1999-01-01").cast("date"), col("o_orderdate").cast("date"))
-        .cast("long").as("days_to_99"),
-      upper(col("o_orderpriority")).as("prio_upper"),
-      lpad(col("o_orderkey").cast(StringType), 12, "0").as("key_padded"),
-      regexp_extract(col("o_orderpriority"), "^(\\d+)", 1).as("prio_num"),
-      concat_ws("|", col("o_orderstatus"), col("o_orderpriority")).as("status_prio"),
-      round(sqrt(col("o_totalprice")), 6).as("price_sqrt"),
-      round(log(col("o_totalprice") + 1), 6).as("price_ln"),
-      pmod(col("o_orderkey"), lit(7)).cast("long").as("key_mod7"),
-      abs(col("o_totalprice") - 1000).cast("double").as("price_abs_dev"))
-
-  /** §2b approximate distinct (HLL++), hash-checkable: the estimate
-    * itself is not SQL-reproducible (estimator differs by design), so
-    * the output carries the EXACT side (oracle-computable) plus a
-    * deterministic acceptance verdict — |est − exact|/exact ≤ 3·rsd
-    * with rsd = 0.05, approx_count_distinct's default — which the
-    * oracle pins to TRUE per group. The estimate is a deterministic
-    * function of the data, so a broken sketch flips the boolean and
-    * fails the driver's hash compare instead of hiding in a rows-only
-    * row. */
-  private def q_approx_distinct(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(approx_count_distinct(col("l_partkey")).as("__approx"),
-        countDistinct(col("l_partkey")).as("exact_parts"))
-      .select(col("l_returnflag"), col("exact_parts"),
-        (abs(col("__approx") - col("exact_parts")).cast("double")
-          / col("exact_parts") <= 0.15).as("within_bound"))
-
-  // ------------------------------------------------------ text / LLM prep
-
-  /** §2b exact dedup by canonical-text fingerprint. */
-  private def q_dedup_exact(s: SparkSession, d: String): DataFrame =
-    Dedup.exactByFingerprint(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b text statistics: token/stopword/char counts. */
-  private def q_token_stats(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(
-      col("doc_id"),
-      TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-      TextFunctions.stopwordCount(col("text")).cast("long").as("n_stopwords"),
-      length(col("text")).cast("long").as("n_chars_actual"))
-
-  /** §2b quality scoring (deterministic blend, rounded). */
-  private def q_text_quality(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      round(TextFunctions.qualityScore(col("text")), 6).as("quality"))
-
-  /** §2b language-ID heuristic vs declared lang. */
-  private def q_lang_id(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), col("lang").as("declared_lang"),
-      TextFunctions.langIdHeuristic(col("text")).as("lang_guess"))
-
-  /** §2b n-gram language ID: per-profile trigram hit ratios + argmax guess
-    * (the production-shaped variant of the stopword heuristic q_lang_id). */
-  private def q_lang_ngram(s: SparkSession, d: String): DataFrame = {
-    // Staged: normalize → trigrams → raw ratios are each materialized as a
-    // column so nothing non-cheap is re-evaluated inside a lambda or the
-    // argmax when-chain (inlined, the regexp re-runs per trigram: 50×+).
-    val profiles = TextFunctions.trigramProfiles
-    // pure map-side regexp + profile scoring — widen the unsplittable
-    // scan so it runs at session width (r15, guide §2.5)
-    val staged = graft.operators.FanOut
-      .widen(Tables.documents(s, d), col("doc_id"))
-      .select(col("doc_id"), col("lang").as("declared_lang"),
-        TextFunctions.letterNormalize(col("text")).as("__norm"))
-      .withColumn("__tri", TextFunctions.charTrigramsOf(col("__norm")))
-    val scored = profiles.foldLeft(staged) { case (df, (lang, prof)) =>
-      df.withColumn(s"__${lang}_raw",
-        TextFunctions.trigramProfileRatio(col("__tri"), prof))
-    }
-    scored.select(
-      Seq(col("doc_id"), col("declared_lang")) ++
-        profiles.map { case (lang, _) =>
-          round(col(s"__${lang}_raw"), 6).as(s"${lang}_score") } :+
-        TextFunctions.langGuessFromScores(
-          profiles.map { case (lang, _) => lang -> col(s"__${lang}_raw") })
-          .as("lang_guess"): _*)
-  }
-
-  /** §2b LM-based quality proxy: mean unigram log-likelihood under the
-    * corpus's own add-one-smoothed unigram model. */
-  private def q_unigram_loglik(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.unigramLogLik(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b bigram-conditional LM quality proxy (word-order sensitivity on
-    * top of q_unigram_loglik's word-choice score). */
-  private def q_bigram_loglik(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.bigramLogLik(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b Kneser–Ney smoothed bigram LM quality proxy
-    * ([[TextAnalytics.kneserNeyLogLik]]) — the production-grade smoothing
-    * (absolute discount + continuation-count backoff, the KenLM default)
-    * on top of the add-one (q_bigram_loglik) and Jelinek–Mercer
-    * (q_interp_loglik) baselines; all three rank the same docs, so the
-    * trio measures how much the smoothing choice moves a quality gate. */
-  private def q_kneser_ney(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.kneserNeyLogLik(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b CCNet-style perplexity bucketing (Wenzek et al. LREC'20;
-    * [[Corpus.perplexityBuckets]]): per language, rank docs by the
-    * corpus-unigram LM proxy (6dp-rounded BEFORE ranking, doc_id
-    * tiebreak — the engine-portable ordering contract) and ntile into
-    * head/middle/tail thirds — the equal-population quality split CCNet
-    * uses in place of per-language thresholds. One window per language,
-    * no join beyond the score computation. */
-  private def q_ccnet_buckets(s: SparkSession, d: String): DataFrame = {
-    val scored = TextAnalytics
-      .unigramLogLik(Tables.documents(s, d), "doc_id", "text")
-      .join(Tables.documents(s, d).select(col("doc_id"), col("lang")),
-        Seq("doc_id"))
-      // CCNet orders by perplexity ASC (best first); the loglik proxy is
-      // its negation, already rounded at 6dp by unigramLogLik
-      .withColumn("ppl_proxy", -col("mean_loglik"))
-    Corpus.perplexityBuckets(scored, "lang", "doc_id", "ppl_proxy", n = 3)
-      .select(col("doc_id"), col("lang"), col("ppl_proxy"),
-        col("bucket").cast("long").as("bucket"))
-  }
-
-  /** §2b PMI collocation mining: top-100 bigrams by pointwise mutual
-    * information with support >= 5. */
-  private def q_ngram_pmi(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.pmiCollocations(Tables.documents(s, d), "text", 5L, 100)
-
-  /** §2b distinct-token cardinality per document. */
-  private def q_unique_tokens(s: SparkSession, d: String): DataFrame =
-    Dedup.tokenSets(Tables.documents(s, d), "doc_id", "text")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_unique_tokens"))
-
-  /** §2b n-gram Jaccard near-dup pairs via inverted-index join (bounded id
-    * range keeps the oracle cheap; the operator itself is linear-ish). */
-  private def q_jaccard_pairs(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardPairs(Tables.documents(s, d).filter(col("doc_id") < 60),
-      "doc_id", "text", 0.3)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-
-  /** §2b prefix-filtered Jaccard pairs (PPJoin-style): identical contract
-    * and results as q_jaccard_pairs — the oracle SQL is shared — but the
-    * candidate set comes from each set's rarest-token prefix rather than
-    * the full inverted index (the 100 TB token-set path). */
-  private def q_jaccard_prefix(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardPairsPrefix(
-      Dedup.tokenSets(Tables.documents(s, d).filter(col("doc_id") < 60),
-        "doc_id", "text"),
-      "doc_id", 0.3)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-
-  /** §2b character-level near-dup pairs: length-blocked levenshtein
-    * (maxDist=50 over a bounded doc slice — the O(len²) metric only ever
-    * runs on same-length-class candidates). */
-  private def q_edit_distance(s: SparkSession, d: String): DataFrame =
-    Dedup.editDistancePairs(
-      Tables.documents(s, d).filter(col("doc_id") < 80), "doc_id", "text", 50)
-
-  /** §2b Jaro-Winkler fuzzy matching: within-nation customer-name pairs
-    * scoring ≥ 0.95 under the native codegen comparator — the blocked
-    * fuzzy-name step of a record-linkage pipeline. */
-  private def q_jaro_winkler(s: SparkSession, d: String): DataFrame =
-    Dedup.jaroWinklerPairs(Tables.customer(s, d),
-      "c_custkey", "c_name", "c_nationkey", 0.95)
-
-  /** End-to-end exercise of the [[graft.operators.Dedup.jaroWinklerPairs]]
-    * pair-budget guard (r12 verdict task): a deliberately tiny budget
-    * must FAIL FAST with the exact-diagnostic exception before any pair
-    * materializes, and the guard's preflight aggregate
-    * ([[graft.operators.Dedup.pairBlockMass]]) is emitted AS DATA —
-    * total Σ_block C(n,2) candidate mass, hottest block, its mass, and
-    * whether the guard tripped. The oracle recomputes all three from
-    * the same grouping. */
-  private def q_jw_guard(s: SparkSession, d: String): DataFrame = {
-    val customers = Tables.customer(s, d)
-    val tripped =
-      try {
-        // preflight runs eagerly at plan-construction time: the throw
-        // happens here, before a single candidate pair exists
-        Dedup.jaroWinklerPairs(customers, "c_custkey", "c_name",
-          "c_nationkey", 0.95, maxPairs = 10L)
-        false
-      } catch {
-        case e: IllegalStateException if e.getMessage.contains("budget") =>
-          true
-      }
-    Dedup.pairBlockMass(customers, "c_nationkey")
-      .withColumn("guard_tripped", lit(tripped))
-  }
-
-  /** §2b word-shingle (3-gram) Jaccard near-dup pairs — the n-gram variant:
-    * shingles are near-unique so the inverted index barely fans out. */
-  private def q_shingle_pairs(s: SparkSession, d: String): DataFrame =
-    // doc_id < 300 @ 0.02 yields ~116 qualifying pairs at sf0.01 — a
-    // non-vacuous oracle comparison (the earlier 120/0.05 cut matched on
-    // 0 = 0 rows, which a broken implementation would also "pass").
-    Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(Tables.documents(s, d).filter(col("doc_id") < 300),
-        "doc_id", "text"),
-      "doc_id", 0.02)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-
-  /** §2b wide→long reshape (UNPIVOT/melt): the four lineitem money/qty
-    * measures into (metric, value) rows via Dataset.unpivot — the
-    * metric-store normalization every profiling/drift stage consumes
-    * (one 4× map-side row expansion, no shuffle, no UDF; oracle is the
-    * portable 4-way UNION ALL). */
-  private def q_unpivot(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .unpivot(
-        Array(col("l_orderkey"), col("l_linenumber")),
-        Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_tax")),
-        "metric", "value")
-
-  /** §2b degree assortativity of the near-dup graph
-    * ([[Graph.assortativity]]): Pearson r of endpoint degrees over the
-    * q_shingle_pairs pair graph — the structural readout that separates
-    * hub-to-hub near-dup mats (template families chaining) from
-    * hub-to-leaf stars (one canonical doc with many variants). One row:
-    * edge count + 6dp r via the engines' shared corr aggregate. */
-  private def q_assortativity(s: SparkSession, d: String): DataFrame = {
-    // cached: assortativity's canon feeds deg, both symmetric halves and
-    // the stats join — uncached, the shingle equi-join reruns per
-    // consumer (measured 5.9 s → 1.9 s at sf0.1; same rationale as
-    // q_modularity's cache)
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(Tables.documents(s, d).filter(col("doc_id") < 300),
-        "doc_id", "text"),
-      "doc_id", 0.02).cache()
-    Graph.assortativity(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-  }
-
-  /** §2b duplicate-cluster resolution: near-dup pairs → connected
-    * components (iterative min-label) → canonical survivor marker. The
-    * transitive closure matters: A~B, B~C land in ONE cluster even when
-    * (A,C) was never a pair. Oracle re-derives the closure with a DuckDB
-    * recursive CTE. */
-  private def q_dup_clusters(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
-    Dedup.duplicateClusters(docs.select(col("doc_id")), pairs, "doc_id")
-      .withColumn("is_canonical", col("doc_id") === col("cluster"))
-  }
-
-  /** §2b count-preserving dedup: ONE canonical row per duplicate cluster
-    * (lowest id), carrying the cluster size as a repetition weight — the
-    * soft-dedup idiom that keeps downstream token/quality statistics
-    * unbiased after removal (weight 1 = unique doc). Clusters come from
-    * 3-gram shingle Jaccard (near-unique shingles ⇒ only genuine
-    * near-dups pair), so the fixture yields a MIX of multi-member
-    * clusters and weight-1 singletons at every SF (~14 multi + ~89
-    * singletons at sf0.01) — both the survivor-weight and the unique-doc
-    * paths are exercised and the oracle comparison is discriminating
-    * (the earlier word-token/0.3 cut chained all 60 docs into one
-    * cluster, a single-row result almost any aggregate would match). */
-  private def q_dedup_weights(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02)
-    Dedup.duplicateClusters(docs.select(col("doc_id")), pairs, "doc_id")
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("weight"))
-      .select(col("cluster").as("doc_id"), col("weight"))
-  }
-
-  /** §2b modularity audit of the near-dup clustering: Newman Q per
-    * cluster ([[Graph.modularity]]) over the SAME shingle-Jaccard pair
-    * graph and CC partition as q_dedup_weights — the acceptance readout
-    * that the dedup "clusters" are genuine communities, not random
-    * wiring (for a CC partition every edge is intra, so Q_c reduces to
-    * m_c/m − (d_c/2m)², still discriminating: big dense clusters earn
-    * less than their edge share suggests). Multi-member clusters AND
-    * zero-contribution singletons both appear at every SF. */
-  private def q_modularity(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    // cached: the pair relation feeds the CC labels AND modularity's
-    // canon/intra/degree consumers — uncached, the token equi-join reruns
-    // per consumer
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
-    val labels = Dedup.duplicateClusters(docs.select(col("doc_id")), pairs,
-      "doc_id")
-    Graph.modularity(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-      labels, "doc_id", "cluster")
-  }
-
-  /** §2b Adamic–Adar link prediction ([[Graph.adamicAdar]]) over the
-    * SAME shingle-Jaccard near-dup graph as q_modularity: the top-20
-    * non-adjacent pairs sharing rare neighbors — the "duplicates the
-    * threshold probably missed" review queue (a thresholded LSH pass
-    * loses transitive pairs; AA surfaces exactly those). Wedge join on
-    * the common-neighbor center, hub-capped, TakeOrdered. */
-  private def q_adamic_adar(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    // cached: adamicAdar's canon feeds deg, both adjacency halves, the
-    // wedge join's two sides and the anti-join — five consumers of the
-    // shingle equi-join (q_modularity's cache rationale)
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
-    Graph.adamicAdar(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-      topN = 20)
-  }
-
-  /** §2b local clustering coefficient ([[Graph.clusteringCoefficient]],
-    * Watts–Strogatz) on the SAME cached shingle-Jaccard graph: per doc,
-    * the fraction of its near-dup neighbors that are near-dups of each
-    * other — clique-like template families score 1, hub-and-spoke
-    * boilerplate stars score 0; the per-node readout of what
-    * q_triangles measures in aggregate. */
-  private def q_clustering_coef(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
-    Graph.clusteringCoefficient(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-  }
-
-  /** §2b TextRank keyword extraction (Mihalcea & Tarau EMNLP'04) as a
-    * pure COMPOSITION: the word co-occurrence graph (adjacent-token
-    * pairs with support ≥ 5, undirected) fed to the SAME fixed-iteration
-    * [[Graph.pageRank]] the link queries use — graph centrality as a
-    * keyword scorer, no new operator code. Top 30 by 9dp-rounded rank. */
-  private def q_textrank(s: SparkSession, d: String): DataFrame = {
-    // widen before the tokenize+shingle explode (r15, guide §2.5)
-    val occ = graft.operators.FanOut.widen(Tables.documents(s, d))
-      .select(explode(TextFunctions.shinglesOf(
-        TextFunctions.tokens(col("text")), 2)).as("bigram"))
-      .groupBy(col("bigram")).agg(count(lit(1)).as("c_ab"))
-      .filter(col("c_ab") >= 5)
-      .select(element_at(split(col("bigram"), " "), 1).as("w1"),
-        element_at(split(col("bigram"), " "), 2).as("w2"))
-      .filter(col("w1") =!= col("w2"))
-    val und = occ.select(least(col("w1"), col("w2")).as("src"),
-      greatest(col("w1"), col("w2")).as("dst")).distinct()
-    val edges = und.unionByName(
-      und.select(col("dst").as("src"), col("src").as("dst")))
-    Graph.pageRank(edges, 3)
-      .select(col("id").as("keyword"), round(col("rank"), 9).as("rank"))
-      .orderBy(col("rank").desc, col("keyword").asc)
-      .limit(30)
-  }
-
-  /** §2b simplified silhouette ([[Similarity.silhouetteSimplified]],
-    * Rousseeuw '87 centroid variant) over the q_semantic_dedup cells:
-    * per-cell mean (b − a)/max(a, b) in cosine distance — the
-    * k-selection readout beside q_davies_bouldin, map-side at O(n·k). */
-  private def q_silhouette(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    Similarity.silhouetteSimplified(emb, "vec_id", "embedding", cents)
-  }
-
-  /** §2b LSH S-curve calibration: per exact-Jaccard decile, the observed
-    * MinHash band-collision rate vs the analytic 1−(1−j⁴)⁴ expectation
-    * for the (bands=4, rows=4) index — run this BEFORE trusting an LSH
-    * dedup config on a new corpus. The S-curve uses exact squaring
-    * chains (j², j⁴, (1−j⁴)², (1−j⁴)⁴) — no pow, bit-identical
-    * cross-engine. */
-  private def q_lsh_calibration(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
-    val truth = Dedup.jaccardPairs(docs, "doc_id", "text", 0.05)
-    val cands = Dedup.minHashLshCandidates(
-        Dedup.minHashSignatures(docs, "doc_id", "text", 16),
-        "doc_id", bands = 4, rowsPerBand = 4)
-      .withColumn("__hit", lit(1L))
-    val j = col("jaccard")
-    val j4 = (j * j) * (j * j)
-    val y = lit(1.0) - j4
-    val y2 = y * y
-    truth.join(cands, Seq("id_a", "id_b"), "left")
-      .select(
-        least(floor(j * 10).cast("long"), lit(9L)).as("jaccard_decile"),
-        (lit(1.0) - y2 * y2).as("__exp"),
-        coalesce(col("__hit"), lit(0L)).as("__obs"))
-      .groupBy(col("jaccard_decile"))
-      .agg(count(lit(1)).as("n_pairs"),
-        round(avg(col("__exp")), 6).as("expected_rate"),
-        round(sum(col("__obs")).cast("double") / count(lit(1)), 6)
-          .as("observed_rate"))
-  }
-
-  /** §2b golden-record survivorship: field-level merge over the same
-    * Jaccard dup clusters as q_dup_clusters — longest text + modal lang
-    * per cluster, lowest id as the canonical key (the MDM merge step). */
-  private def q_golden_record(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
-    val clusters = Dedup.duplicateClusters(
-      docs.select(col("doc_id")), pairs, "doc_id")
-    Dedup.goldenRecord(docs, "doc_id", clusters, "text", "lang")
-  }
-
-  /** §2b train/test leakage report: near-dup pairs (token Jaccard ≥ 0.3)
-    * that STRADDLE the deterministic 90/10 hash split — the eval-
-    * integrity audit a split must pass before its test scores mean
-    * anything (same-split near-dups are waste; cross-split ones are
-    * leakage). Pure composition: jaccardPairs × hashSplit. */
-  private def q_split_leakage(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-    val split = Corpus.hashSplit(docs.select(col("doc_id")), "doc_id",
-      Seq("train" -> 90, "test" -> 100)).select(col("doc_id"), col("split"))
-    pairs
-      .join(split.select(col("doc_id").as("id_a"),
-        col("split").as("split_a")), Seq("id_a"))
-      .join(split.select(col("doc_id").as("id_b"),
-        col("split").as("split_b")), Seq("id_b"))
-      .filter(col("split_a") =!= col("split_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"),
-        col("split_a"), col("split_b"))
-  }
-
-  /** §2b leakage-SAFE split — the repair for what q_split_leakage
-    * measures: [[Corpus.leakageSafeSplit]] hashes the near-dup CLUSTER id
-    * (same shingle clusters as q_dedup_weights), so members inherit one
-    * assignment and no cluster can straddle train/test by construction.
-    * Multi-member clusters and singletons both present at every SF. */
-  private def q_leakage_safe_split(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02)
-    val labels = Dedup.duplicateClusters(docs.select(col("doc_id")), pairs,
-      "doc_id")
-    Corpus.leakageSafeSplit(labels, "doc_id", "cluster",
-      Seq("train" -> 90, "test" -> 100))
-  }
-
-  /** §2b MinHash signatures (portable md5-derived hashes, bounded ids). */
-  private def q_minhash_signatures(s: SparkSession, d: String): DataFrame =
-    Dedup.minHashSignatures(Tables.documents(s, d).filter(col("doc_id") < 40),
-      "doc_id", "text", 16)
-      .withColumn("seed", col("seed").cast("long"))
-
-  /** §2b sketch-only MinHash similarity estimation: pairs scored by
-    * signature agreement alone (no exact re-verification) — the path used
-    * when re-joining raw token sets is too expensive. */
-  private def q_minhash_est(s: SparkSession, d: String): DataFrame =
-    Dedup.minHashEstimate(
-      Dedup.minHashSignatures(
-        Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id", "text", 16),
-      "doc_id", 16, 0.25)
-      .withColumn("est_jaccard", round(col("est_jaccard"), 6))
-
-  /** §2b SimHash 60-bit signatures. Rows-only check (bit-packing SQL oracle
-    * is impractical); unit-tested against hand-computed values instead. */
-  private def q_simhash(s: SparkSession, d: String): DataFrame =
-    Dedup.simHash(Tables.documents(s, d).filter(col("doc_id") < 40), "doc_id", "text")
-
-  /** §2b SimHash near-dup pairs with pigeonhole band blocking (exact
-    * recall for hamming ≤ 8 with 10 bands of 6 bits). */
-  private def q_simhash_neardup(s: SparkSession, d: String): DataFrame =
-    Dedup.simHashNearDups(Tables.documents(s, d).filter(col("doc_id") < 200),
-      "doc_id", "text")
-
-  /** §2b rolling-hash document fingerprint (native codegen expression;
-    * engine-portable recurrence, oracle uses DuckDB list_reduce). */
-  private def q_rolling_hash(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      TextFunctions.rollingHash(col("text")).as("rhash"))
-
-  /** §2b BPE-ish subword counting (RE2-compatible run-splitting). */
-  private def q_subword_count(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      TextFunctions.subwordCount(col("text")).cast("long").as("n_subwords"))
-
-  /** §2b MinHash-LSH banding: candidate pairs sharing any band hash
-    * (16 hashes, 4 bands × 4 rows — tuned for ~0.5 similarity). */
-  private def q_lsh_candidates(s: SparkSession, d: String): DataFrame =
-    Dedup.minHashLshCandidates(
-      Dedup.minHashSignatures(Tables.documents(s, d).filter(col("doc_id") < 40),
-        "doc_id", "text", 16),
-      "doc_id", bands = 4, rowsPerBand = 4)
-
-  /** §2b batch twin of the streaming near-dup ingest
-    * ([[streaming.EventStreams.nearDupIngest]]): the documents table
-    * replayed as two micro-batches (doc_id < 60, then 60–119) through
-    * the SAME incremental admission — MinHash-LSH candidates + exact
-    * Jaccard ≥ 0.3 re-rank, keep-first within batch, accepted-only
-    * blocking across batches. The oracle replays band hashing, the
-    * re-rank and the admission logic in SQL; StreamingSpec pins the
-    * foreachBatch sink's surviving set equal to this twin's. */
-  private def q_neardup_admit(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val b1 = docs.filter(col("doc_id") < 60)
-    val b2 = docs.filter(col("doc_id") >= 60 && col("doc_id") < 120)
-    // a1 feeds THREE consumers (a2's band join, a2's token join, the
-    // final union) and is batch-bounded — localCheckpoint materializes
-    // the accepted set once, exactly as the streaming twin reads its
-    // accepted state from the committed sink rather than re-deriving
-    // batch 1's admission pipeline per consumer (within-job sharing →
-    // localCheckpoint, not cache; see PLANS.md multi-consumer rule)
-    val a1 = Dedup.admitNearDups(b1, b1.filter(lit(false)),
-      "doc_id", "text", 16, 4, 0.3).localCheckpoint()
-    val a2 = Dedup.admitNearDups(b2, a1, "doc_id", "text", 16, 4, 0.3)
-    a1.select(col("doc_id"), lit(1L).as("batch"))
-      .unionByName(a2.select(col("doc_id"), lit(2L).as("batch")))
-  }
-
-  /** §2b frame sampling over a character-addressed payload (multimodal
-    * frame-extraction plumbing; every 4th 32-char frame, md5 fingerprint). */
-  private def q_frame_sample(s: SparkSession, d: String): DataFrame =
-    Multimodal.frameSample(Tables.documents(s, d), "doc_id", "text", 32, 4)
-
-  // ------------------------------------------------------- similarity
-
-  /** §2b brute-force cosine top-k against the vec_id=0 query vector
-    * (set-oriented: 1-row broadcast, no driver collect). */
-  private def q_cosine_topk(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    emb.crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSimilarity(col("embedding"), col("qv")), 6)
-          .as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id").asc)
-      .limit(10)
-  }
-
-  /** §2b exact near-dup pairs over a bounded id range (oracle for LSH). */
-  private def q_embedding_pairs(s: SparkSession, d: String): DataFrame =
-    Similarity.exactPairs(Tables.embeddings(s, d).filter(col("vec_id") < 150),
-      "vec_id", "embedding", 0.3)
-      .withColumn("cosine_sim", round(col("cosine_sim"), 6))
-
-  /** §2b LSH-bucketed ANN near-dup pairs — the 100 TB scale path. Rows-only
-    * here; recall vs exact is asserted in SimilaritySpec. */
-  private def q_lsh_neardup(s: SparkSession, d: String): DataFrame =
-    Similarity.nearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding",
-      Similarity.hyperplanes(6, 64), 0.3)
-      .withColumn("cosine_sim", round(col("cosine_sim"), 6))
-
-  /** §2b IVF ANN top-k: coarse-quantize to 8 centroid cells (vec_id < 8 as
-    * the deterministic centroid set), probe the 2 cells nearest the query,
-    * exact re-rank inside them — the scan-fraction dial of a 100 TB ANN. */
-  private def q_ivf_topk(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    Similarity.ivfTopK(assigned, "vec_id", "embedding", cents,
-      q, "qv", k = 10, nprobe = 2)
-  }
-
-  /** §2b IVF ANN at a PRODUCTION codebook size — 256 cells × 64 dims =
-    * 16k terms, 8× past [[Similarity.LiteralTermLimit]] — so
-    * [[Similarity.ivfAssignAuto]] dispatches to the broadcast-codebook
-    * path: the centroid table rides a broadcast crossJoin as one
-    * array-of-structs row and the argmax reads it from a COLUMN, keeping
-    * generated code size constant in k (literal inlining at this k is
-    * the measured JIT-variance / 64 KB-method-limit regime). nprobe=8
-    * keeps the 1/32 scan fraction of the literal twin; assignment is
-    * bit-identical to literal [[Similarity.ivfAssign]] (SimilaritySpec). */
-  private def q_ivf_topk_bcast(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 256), "vec_id", "embedding")
-    val assigned = Similarity.ivfAssignAuto(emb, "vec_id", "embedding", cents)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    Similarity.ivfTopK(assigned, "vec_id", "embedding", cents,
-      q, "qv", k = 10, nprobe = 8)
-  }
-
-  /** §2b k-means codebook training, one Lloyd iteration made auditable:
-    * assign to the 8 seed centroids (vec_id < 8), per-(cell, dim) means in
-    * long form. The full train loop just re-feeds these means as the next
-    * centroid literals ([[Similarity.kmeansTrain]]). */
-  private def q_kmeans_step(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    Similarity.kmeansStep(emb, "vec_id", "embedding", cents)
-      .select(col("cell"), col("pos").cast("long").as("pos"),
-        round(col("c_val"), 6).as("c_val"), col("n"))
-  }
-
-  /** §2b IVF ANN with a TRAINED codebook: one Lloyd iteration refines the
-    * 8 seed centroids, then the standard assign → probe-3-cells → exact
-    * re-rank. The oracle unrolls the identical training step in SQL. */
-  private def q_ivf_trained(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.kmeansTrain(emb, "vec_id", "embedding", k = 8, iters = 1)
-    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    Similarity.ivfTopK(assigned, "vec_id", "embedding", cents,
-      q, "qv", k = 10, nprobe = 3)
-  }
-
-  /** §2b SemDeDup semantic dedup: IVF cells (vec_id < 8 centroids) →
-    * within-cell cosine pairs ≥ 0.38 → connected components → canonical
-    * survivors. (0.38 because the synthetic embeddings are spread — max
-    * pairwise cosine ≈ 0.51; a real corpus runs this at ~0.95+.) */
-  private def q_semantic_dedup(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    Similarity.semanticDedup(emb, "vec_id", "embedding", cents, 0.38)
-  }
-
-  /** §2b DBSCAN-style density clustering ([[Similarity.densityClusters]])
-    * on the SAME IVF cells and 0.38 cosine radius as q_semantic_dedup,
-    * minPts = 3: cores/borders/noise with deterministic lowest-core
-    * border attachment — the blob-vs-bridge refinement of single-linkage
-    * semantic dedup (the bridge point becomes noise, the chain breaks). */
-  private def q_density_clusters(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    Similarity.densityClusters(emb, "vec_id", "embedding", cents, 0.38,
-      minPts = 3)
-  }
-
-  /** §2b green-list watermark detection ([[TextAnalytics.watermarkScore]],
-    * Kirchenbauer ICML'23): per-doc z-test of md5-parity "green" bigram
-    * excess at γ = ½ — the model-generated-text intake screen; natural
-    * text hugs |z| ≤ 2, the paper's z ≥ 4 flag would fire on watermarked
-    * output. Exact integer G/T; one wordcount-shaped aggregate. */
-  private def q_watermark_detect(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.watermarkScore(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b per-label embedding centroid drift
-    * ([[Similarity.centroidDrift]]): cosine between even-id and odd-id
-    * slice centroids per label — the embedding-space drift monitor
-    * (model-version skew shows here before any consumer metric moves).
-    * Sum-represented centroids, labels×dim shuffle. */
-  private def q_centroid_drift(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-      .withColumn("half", (col("vec_id") % 2).cast("int"))
-    Similarity.centroidDrift(emb, "vec_id", "embedding", "label", "half")
-  }
-
-  /** §2b two-sample embedding MMD ([[Similarity.mmdTest]], Gretton
-    * JMLR'12): linear + quadratic-kernel discrepancy between the
-    * even/odd id slices via moment identities — covariance-rotation
-    * drift that leaves means untouched shows in the quadratic term;
-    * the n² pair sum never materializes. */
-  private def q_mmd(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-      .withColumn("half", (col("vec_id") % 2).cast("int"))
-    Similarity.mmdTest(emb, "vec_id", "embedding", "half")
-  }
-
-  /** §2b ANN quality evaluation: recall@10 of IVF (nprobe=2 of 8 cells)
-    * against exact brute force, for query vectors vec_id < 5. */
-  private def q_ann_recall(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopKMulti(
-      emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
-      cents, queries, "query_id", "qv", 10, 2)
-    Similarity.recallAtK(exact, approx, "query_id", "vec_id")
-  }
-
-  /** §2b IVF recall-vs-nprobe sweep — the IVF sibling of
-    * q_lsh_calibration: recall@10 at nprobe ∈ {1,2,4,8} of 8 cells
-    * against the SAME brute-force truth, per query. The curve this emits
-    * (rising to recall 1.0 at nprobe = k, since probing every cell IS
-    * brute force) is the pre-flight readout that picks the
-    * recall/latency point BEFORE trusting an IVF config on a corpus.
-    * Truth and assignment are cached once and shared by the four probe
-    * branches (at corpus scale: persist, or the sweep re-scans 4×). */
-  private def q_ivf_nprobe_sweep(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopKMulti(
-      emb, "vec_id", "embedding", queries, "query_id", "qv", 10).cache()
-    val assigned =
-      Similarity.ivfAssign(emb, "vec_id", "embedding", cents).cache()
-    Seq(1, 2, 4, 8).map { np =>
-      Similarity.recallAtK(exact,
-        Similarity.ivfTopKMulti(assigned, "vec_id", "embedding", cents,
-          queries, "query_id", "qv", 10, np),
-        "query_id", "vec_id")
-        .withColumn("nprobe", lit(np))
-    }.reduce(_ unionByName _)
-  }
-
-  /** §2b mutual-nearest-neighbor pairs: exact top-1 within vec_id<100,
-    * kept only when the match is reciprocal — the high-precision
-    * alignment/dedup primitive (hubs fail mutuality). */
-  private def q_mutual_nn(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d).filter(col("vec_id") < 100)
-    val queries = emb.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"))
-    val top1 = Similarity.bruteForceTopKMulti(
-      emb, "vec_id", "embedding", queries, "query_id", "qv", 1)
-    Similarity.mutualNearestNeighbors(top1, "query_id", "vec_id",
-      "cosine_sim")
-  }
-
-  /** §2b dominant principal direction + explained-variance share of the
-    * embedding covariance — 8 unrolled power-iteration rounds entirely
-    * in-plan ([[Similarity.powerIterationPCA]]), the whitening /
-    * drop-dominant-direction pre-step. */
-  private def q_power_iteration(s: SparkSession, d: String): DataFrame =
-    Similarity.powerIterationPCA(Tables.embeddings(s, d), "vec_id",
-      "embedding", 8)
-
-  /** §2b hard-negative mining (DPR recipe): per vec_id<10 anchor, the 5
-    * most-similar vectors with a DIFFERENT label — the contrastive-
-    * training batch builder ([[Similarity.hardNegatives]]). */
-  private def q_hard_negatives(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val anchors = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("label").as("qlabel"))
-    Similarity.hardNegatives(emb, "vec_id", "embedding", "label",
-      anchors, "query_id", "qv", "qlabel", 5)
-  }
-
-  /** §2b NDCG@10 + MRR ranking eval: same exact-vs-IVF setup as
-    * q_ann_recall, but graded — rel = 11 − exact_rank, gain 2^rel−1,
-    * dyadic-snapped discounts — so it reports WHERE the true neighbors
-    * landed in the ANN list, not just how many survived. */
-  private def q_ndcg(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopKMulti(
-      emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
-      cents, queries, "query_id", "qv", 10, 2)
-    Similarity.ndcgAtK(exact, approx, "query_id", "vec_id", "rnk", 10)
-  }
-
-  /** §2b Davies-Bouldin cluster quality: scatter / separation / worst-pair
-    * DB ratio per populated cell of the vec_id<8 seed clustering — the
-    * choose-k readout before an IVF or semantic-dedup build. */
-  private def q_davies_bouldin(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    Similarity.daviesBouldin(emb, "vec_id", "embedding", cents)
-  }
-
-  /** §2b RBO ranking-stability eval: top-weighted overlap of the IVF list
-    * against the exact list with NO relevance judgments (p=0.9, k=10) —
-    * the between-index-builds "how much did the ranking move" monitor. */
-  private def q_rbo(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopKMulti(
-      emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-    val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
-      cents, queries, "query_id", "qv", 10, 2)
-    Similarity.rboAtK(exact, approx, "query_id", "vec_id", "rnk", 10, 0.9)
-  }
-
-  /** §2b Matryoshka truncation eval: recall@10 of the 16-dim embedding
-    * prefix against the full 64-dim exact ranking — how much retrieval
-    * quality survives 4× dimensionality compression (MRL-style serving). */
-  private def q_matryoshka(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopKMulti(
-      emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-    val emb16 = emb.select(col("vec_id"),
-      slice(col("embedding"), 1, 16).as("embedding"))
-    val q16 = queries.select(col("query_id"),
-      slice(col("qv"), 1, 16).as("qv"))
-    val approx = Similarity.bruteForceTopKMulti(
-      emb16, "vec_id", "embedding", q16, "query_id", "qv", 10)
-    Similarity.recallAtK(exact, approx, "query_id", "vec_id")
-  }
-
-  /** §2b lexical-diversity signals: unigram entropy + type-token ratio. */
-  private def q_token_entropy(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.tokenEntropy(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b robust outlier fences: per-language Tukey IQR over doc length. */
-  private def q_iqr_outliers(s: SparkSession, d: String): DataFrame =
-    Corpus.iqrOutliers(Tables.documents(s, d), "lang", "n_chars")
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        round(col("lo_fence"), 6).as("lo_fence"),
-        round(col("hi_fence"), 6).as("hi_fence"),
-        col("is_outlier"))
-
-  /** §2b exact-dup survivorship by quality: keep the longest copy of each
-    * fingerprint (tie → lowest doc_id), not just the lowest id. */
-  private def q_keep_best(s: SparkSession, d: String): DataFrame =
-    Dedup.keepBestCopy(Tables.documents(s, d), "doc_id", "text", "n_chars")
-
-  /** §2b end-to-end near-dup survivorship: Jaccard pairs → connected
-    * components → one surviving doc per cluster with its member count. */
-  private def q_neardup_survivors(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
-    Dedup.nearDupSurvivors(docs.select(col("doc_id")), pairs, "doc_id")
-  }
-
-  /** §2b winsorization: clamp doc length into its language's [p5, p95]. */
-  private def q_winsorize(s: SparkSession, d: String): DataFrame =
-    Corpus.winsorize(Tables.documents(s, d), "lang", "n_chars", "n_chars_w")
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        round(col("n_chars_w"), 6).as("n_chars_w"))
-
-  /** §2b asymmetric containment pairs — subset-duplication detection. */
-  private def q_containment(s: SparkSession, d: String): DataFrame =
-    Dedup.containmentPairs(
-      Dedup.tokenSets(Tables.documents(s, d).filter(col("doc_id") < 60),
-        "doc_id", "text"), "doc_id", 0.5)
-      .withColumn("containment_a", round(col("containment_a"), 6))
-      .withColumn("containment_b", round(col("containment_b"), 6))
-
-  /** §2b deterministic epoch shuffle: first 20 docs in epoch-1 order. */
-  private def q_corpus_shuffle(s: SparkSession, d: String): DataFrame =
-    Corpus.shuffleKey(Tables.documents(s, d), "doc_id", "epoch1")
-      .orderBy(col("shuffle_key").asc, col("doc_id").asc)
-      .limit(20)
-      .select(col("doc_id"), col("shuffle_key"))
-
-  /** §2b vocabulary coverage curve: top-100 tokens with cumulative share. */
-  private def q_vocab_coverage(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.vocabCoverage(Tables.documents(s, d), "text", 100)
-
-  /** §2b custom-state sessionization (flatMapGroupsWithState), batch twin:
-    * bounded input ⇒ end-of-data closes every session (emitOpen=true). */
-  private def q_stateful_sessions(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStreams
-      .statefulSessions(Tables.events(s, d), 30, emitOpen = true)
-      .toDF()
-      .withColumn("session_value", round(col("session_value"), 2))
-
-  // ----------------------------------------------------- events / streams
-
-  /** §2b tumbling-window aggregate (batch twin of the streaming query). */
-  private def q_event_hourly(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .select(col("window.start").as("hour_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-  /** §2b sessionization: gap>30min splits, via lag + running sum. */
-  private def q_sessionize(s: SparkSession, d: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val gapUs = lit(30L * 60 * 1000000)
-    val withFlag = Tables.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          (unix_micros(col("ts")) - col("prev_us")) > gapUs, 1L).otherwise(0L))
-    withFlag
-      .withColumn("session_id",
-        sum(col("new_sess")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("session_value"))
-  }
-
-  /** §2b time-series regularization: irregular events → dense per-user
-    * hourly grid with forward-filled activity value (the sequence-model
-    * prep step — one row per (entity, hour), gaps carried forward). */
-  private def q_resample_fill(s: SparkSession, d: String): DataFrame =
-    TimeSeries.resampleHourlyFill(Tables.events(s, d), "user_id", "ts", "value")
-      .withColumn("v_filled", round(col("v_filled"), 2))
-
-  /** §2b per-event rolling features: lag-1, trailing-5 mean/sd (frame ends
-    * BEFORE the current row — no label leakage), rolling z-score. */
-  private def q_rolling_stats(s: SparkSession, d: String): DataFrame =
-    TimeSeries.rollingStats(
-      Tables.events(s, d).select(col("user_id"), col("ts"), col("event_id"), col("value")),
-      "user_id", "ts", "event_id", "value", 5)
-      .withColumn("trail_mean", round(col("trail_mean"), 6))
-      .withColumn("trail_sd", round(col("trail_sd"), 6))
-      .withColumn("rolling_z", round(col("rolling_z"), 6))
-
-  /** §2b SCD2 version windows: each user's events become versions valid
-    * until the next event (null = current) — point-in-time history from
-    * an append log. */
-  private def q_scd2(s: SparkSession, d: String): DataFrame =
-    Joins.scd2Versions(
-      Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
-      "user_id", "ts", "event_id")
-
-  /** §2b Markov transition counts over each user's ordered event stream. */
-  private def q_transitions(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.transitionCounts(Tables.events(s, d),
-      "user_id", "ts", "event_id", "event_type")
-
-  /** §2b ordered funnel view → click → purchase: users per depth reached
-    * (each step strictly after the previous step's earliest time). */
-  private def q_funnel(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.funnelSteps(Tables.events(s, d),
-      "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-
-  /** §2b market-basket association rules: support/confidence/lift over
-    * per-user distinct event-type baskets — the "users who X also Y"
-    * segmentation readout. */
-  private def q_assoc_rules(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.associationRules(Tables.events(s, d),
-      "user_id", "event_type")
-
-  /** §2b Kaplan-Meier survival: product-limit curve over per-user
-    * first→last event-day lifetimes, a lifetime counting as an event when
-    * the user's final action is a purchase (else right-censored). */
-  private def q_survival(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.kaplanMeier(Tables.events(s, d),
-      "user_id", "ts", "event_id", "event_type", "purchase")
-
-  /** §2b time-decayed popularity: top-20 parts by 6-month-half-life
-    * decayed order volume — the freshness-weighted leaderboard, with
-    * integer×dyadic exact contributions. */
-  private def q_decayed_topk(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"),
-      col("l_partkey").as("part_id"))
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate"))
-    TimeSeries.decayedTopK(
-      li.join(o, col("l_orderkey") === col("o_orderkey")),
-      "part_id", "o_orderdate")
-  }
-
-  /** §2b burstiness audit: per-event-type variance-to-mean ratio of the
-    * daily count series — Poisson-stable feeds sit at VMR ≈ 1; bursts and
-    * replays push it far above. */
-  private def q_burstiness(s: SparkSession, d: String): DataFrame =
-    Stats.burstiness(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b Theil–Sen robust slope + Mann–Kendall monotone-trend test over
-    * per-type daily event counts ([[Stats.theilSenDaily]]) — the robust
-    * companion to q_cusum (which localizes shifts; this tests drift). */
-  private def q_theil_sen(s: SparkSession, d: String): DataFrame =
-    Stats.theilSenDaily(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b CUSUM change-point alarm: one-sided Page statistic over the
-    * daily event-count series (slack 0.5σ, threshold 4σ) — the pipeline
-    * throughput drift detector, windows only over the day grid. */
-  private def q_cusum(s: SparkSession, d: String): DataFrame =
-    TimeSeries.cusumDaily(Tables.events(s, d), "ts")
-
-  /** §2b hour-of-day seasonal index per event type
-    * ([[TimeSeries.seasonalIndex]]): the full 24-slot multiplicative
-    * diurnal profile (silent hours emitted as index 0) — the
-    * ingestion-gap / bot-traffic / timezone-drift sanity readout over
-    * the events stream. Two hash aggregates + a 24-slot grid join. */
-  private def q_seasonality(s: SparkSession, d: String): DataFrame =
-    TimeSeries.seasonalIndex(Tables.events(s, d), "ts", "event_type")
-      .withColumn("hour_of_day", col("hour_of_day").cast("long"))
-
-  /** §2b daily-count autocorrelation ([[TimeSeries.autocorrelation]]):
-    * ACF at lags 1..7 — the Box–Jenkins persistence/weekly-cycle readout
-    * before any forecast or anomaly model; day-grid work only. */
-  private def q_autocorr(s: SparkSession, d: String): DataFrame =
-    TimeSeries.autocorrelation(Tables.events(s, d), "ts", maxLag = 7)
-
-  /** §2b Benford first-digit audit over order totals: observed vs
-    * log10(1+1/d) shares + χ² contributions — the fabricated-data screen. */
-  private def q_benford(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.benford(Tables.orders(s, d), "o_totalprice")
-
-  /** §2b numeric-drift PSI: doc-length distribution of the rest of the
-    * corpus vs source src0, binned by src0's OWN decile edges (strict->
-    * bin assignment) — the numeric companion to q_psi's categorical form,
-    * reusing Stats.psi for the smoothed contribution arithmetic. */
-  private def q_psi_numeric(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val ref = docs.filter(col("source") === "src0")
-    val cur = docs.filter(col("source") =!= "src0")
-    val qs = (1 to 9).map(_ / 10.0)
-    // deliberately UNcached: caching this 1-row aggregate would erase its
-    // maxRows=1 proof (InMemoryRelation reports none), demoting the two
-    // broadcast crossJoins below to unproven nested loops in the plan
-    // audit — the duplicate percentile pass (one per side) is the
-    // cheaper cost
-    val edges = ref.agg(
-      expr(s"percentile(n_chars, array(${qs.mkString(",")}))").as("__q"))
-    def binned(df: DataFrame): DataFrame = df.crossJoin(broadcast(edges))
-      .select((1 to 9).foldLeft(lit(1)) { (acc, i) =>
-        acc + when(col("n_chars") > element_at(col("__q"), i), 1).otherwise(0)
-      }.as("decile"))
-    Stats.psi(binned(ref), binned(cur), "decile")
-  }
-
-  /** §2b contribution-bounded DP histogram (user-level DP shape): cap
-    * each SOURCE's contribution at C=16 docs (md5-ranked, deterministic),
-    * then Laplace(C/ε)-noise the per-lang counts (ε=1) — bounding the
-    * unit-of-privacy's influence FIRST is what makes the noise scale
-    * meaningful, the step record-level DP releases skip. ε passed as the
-    * dyadic 1/16 so the noise scale is exactly −16.0 in both engines. */
-  private def q_dp_contrib_hist(s: SparkSession, d: String): DataFrame = {
-    val capped = Corpus.capPerGroup(
-      Tables.documents(s, d), "source", "doc_id", 16)
-    ColumnHygiene.noisyCounts(capped.drop("sample_rank"), "lang", 0.0625, "dpc")
-  }
-
-  /** §2b cohort retention matrix: first-event-day cohorts × active-day
-    * offset → distinct active users. */
-  private def q_cohort_retention(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.cohortRetention(Tables.events(s, d), "user_id", "ts")
-
-  /** §2b sliding-window aggregate (batch twin of EventStreams.slidingCounts:
-    * 1-hour windows sliding every 15 min — each event lands in 4 windows). */
-  private def q_event_sliding(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStreams.slidingCounts(Tables.events(s, d))
-
-  /** S4/chat.py:106-113 shape: dynamic KV pivot (explode + pivot over a
-    * bounded key domain) — the two-phase variant of q_custom_fields. */
-  private def q_pivot_kv(s: SparkSession, d: String): DataFrame = {
-    val withKv = Tables.orders(s, d).select(col("o_orderkey"),
-      array(
-        struct(lit("status").as("key"), col("o_orderstatus").as("value")),
-        struct(lit("priority").as("key"), col("o_orderpriority").as("value"))
-      ).as("kv"))
-    Nested.pivotKV(withKv, Seq("o_orderkey"), "kv",
-      Seq("status", "priority"), "cf_")
-  }
-
-  /** §2b session windows via Spark's native session_window (batch twin of
-    * the streaming query; stream/batch parity in StreamingSpec). */
-  private def q_session_window(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStreams.sessionSpans(Tables.events(s, d))
-
-  /** §2b TF-IDF: top-5 terms per document (topTerms ranks on the rounded
-    * score so cross-engine double ulps cannot flip ties). */
-  private def q_tfidf(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.topTerms(
-      Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id", "text", 5)
-
-  /** §2b multimodal plumbing: opaque binary payload + typed metadata.
-    * (Text bytes stand in for image bytes; decode itself is stubbed in
-    * graft.operators.Multimodal — the Spark-side schema/batching is real.) */
-  private def q_multimodal_meta(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .withColumn("payload", col("text").cast("binary"))
-      .select(col("doc_id"),
-        length(col("payload")).cast("long").as("n_bytes"),
-        substring(col("text"), 1, 4).as("magic"))
-
-  /** §2b REAL image decode via `javax.imageio` (closes the r12 stub
-    * gap): per document, a deterministic closed-form PNG fixture is
-    * synthesized ([[graft.operators.Multimodal.synthImages]]), pushed
-    * through the JDK's real PNG writer, then DECODED back with the
-    * registered ImageIO reader — format, intrinsic dimensions and exact
-    * per-channel sRGB means. PNG is lossless, so the decoded means must
-    * reproduce the closed form bit-for-bit; the oracle computes them in
-    * SQL with no codec at all (generate_series pixel grid). Scale
-    * shape: two chained map-side partition batches, zero shuffles. */
-  private def q_image_decode(s: SparkSession, d: String): DataFrame =
-    Multimodal.decodeImage(
-      Multimodal.synthImages(Tables.documents(s, d), "doc_id", "png"))
-      .select(col("asset_id"), col("format"), col("width"), col("height"),
-        col("mean_r"), col("mean_g"), col("mean_b"))
-
-  /** §2b JPEG decode through the same real ImageIO boundary: lossy
-    * codec, so the oracle pins the exact invariants (format name and
-    * intrinsic dimensions survive any conformant JPEG roundtrip) while
-    * channel-mean fidelity is spec-checked with a tolerance
-    * (MultimodalSpec). */
-  private def q_image_decode_jpeg(s: SparkSession, d: String): DataFrame =
-    Multimodal.decodeImage(
-      Multimodal.synthImages(Tables.documents(s, d), "doc_id", "jpg"))
-      .select(col("asset_id"), col("format"), col("width"), col("height"))
-
-  /** §2b image near-duplicate detection over the REAL codec path — the
-    * multimodal leg of the dedup stack, end-to-end: each document yields
-    * an original PNG and a re-exposed copy (+4 clamped brightness,
-    * [[graft.operators.Multimodal.synthImages]]'s closed-form knob), both
-    * decoded with real ImageIO, aHashed, and compared with the codegen'd
-    * bit_count(xor) Hamming distance — near-dup iff ≤ 8 of 64 bits
-    * differ. The oracle recomputes BOTH hashes from the closed form (the
-    * brightened twin via LEAST(255, ·+4)) with no codec. Map-side
-    * everywhere; the pair join is per-document (id = id), never a
-    * blocking fan-out. */
-  private def q_image_neardup(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val orig = Multimodal.aHashImage(
-      Multimodal.synthImages(docs, "doc_id", "png"))
-      .select(col("asset_id").as("doc_id"), col("ahash").as("__ha"))
-    val bright = Multimodal.aHashImage(
-      Multimodal.synthImages(docs, "doc_id", "png", brighten = 4))
-      .select(col("asset_id").as("doc_id"), col("ahash").as("__hb"))
-    orig.join(bright, Seq("doc_id"))
-      .select(col("doc_id"),
-        bit_count(col("__ha").bitwiseXOR(col("__hb"))).cast("long")
-          .as("hamming"))
-      .withColumn("is_near_dup", col("hamming") <= 8)
-  }
-
-  /** §2b perceptual average-hash over the REAL PNG decode
-    * ([[graft.operators.Multimodal.aHashImage]]), emitted as unsigned
-    * 32-bit halves so both engines carry exact BIGINTs (no signed-bit-63
-    * convention to disagree on). Map-side only. */
-  private def q_image_ahash(s: SparkSession, d: String): DataFrame =
-    Multimodal.aHashImage(
-      Multimodal.synthImages(Tables.documents(s, d), "doc_id", "png"))
-      .select(col("asset_id"),
-        expr("shiftrightunsigned(ahash, 32)").as("ahash_hi"),
-        col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"))
-
-  // ------------------------------------------------- corpus curation ops
-
-  /** §2b deterministic train/val/test split: md5-derived percentage bucket,
-    * pure map-side (same assignment on any cluster size / rerun). */
-  private def q_hash_split(s: SparkSession, d: String): DataFrame =
-    Corpus.hashSplit(Tables.documents(s, d), "doc_id",
-      Seq("train" -> 80, "val" -> 90, "test" -> 100))
-      .select(col("doc_id"), col("split_pct"), col("split"))
-
-  /** §2b token-budget epoch schedule ([[Corpus.epochSchedule]]): τ=2
-    * temperature-flattened target mix over sources at a 1×-corpus budget
-    * — small sources get upweighted past one epoch (over_epoch=true),
-    * large ones run partial epochs, so the flag splits the sources at
-    * every SF and the oracle checks shares, targets, epochs AND both
-    * verdict branches. n_chars stands in for token mass (any additive
-    * size column works). */
-  private def q_epoch_schedule(s: SparkSession, d: String): DataFrame =
-    Corpus.epochSchedule(Tables.documents(s, d), "source", "n_chars",
-      budgetFactor = 1.0, temperature = 2.0)
-
-  /** §2b per-group cap (deterministic md5-ordered sample): ≤50 docs kept
-    * per language. */
-  private def q_group_cap(s: SparkSession, d: String): DataFrame =
-    Corpus.capPerGroup(Tables.documents(s, d), "lang", "doc_id", 50)
-      .select(col("doc_id"), col("lang"), col("sample_rank").cast("long").as("sample_rank"))
-
-  /** §2b per-group z-score normalization from plain window sums (exact for
-    * the integer-valued quantity column → bit-stable across engines). */
-  private def q_zscore(s: SparkSession, d: String): DataFrame =
-    Corpus.zscore(Tables.lineitem(s, d), "l_returnflag", "l_quantity", "qty_z")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-        round(col("qty_z"), 6).as("qty_z"))
-
-  /** §2b quantile-threshold quality filter: drop the bottom quartile of
-    * quality score within each language (rank-based — no interpolation). */
-  private def q_quality_filter(s: SparkSession, d: String): DataFrame = {
-    // Rank on the 6dp-ROUNDED score (with the doc_id tiebreak inside
-    // quantileFilter): ranking on raw doubles would let a cross-engine ulp
-    // flip the order of two near-equal scores and shift every downstream
-    // percent_rank in the group.
-    val staged = Tables.documents(s, d).select(col("doc_id"), col("lang"),
-      round(TextFunctions.qualityScore(col("text")), 6).as("__quality"))
-    Corpus.quantileFilter(staged, "lang", "__quality", "doc_id", 0.25)
-      .select(col("doc_id"), col("lang"),
-        col("__quality").as("quality"),
-        round(col("val_pct_rank"), 6).as("q_rank"))
-  }
-
-  /** §2b fixed-size token chunking (LLM sequence prep): 32-token chunks,
-    * stride 32, map-side explode only. */
-  private def q_token_chunks(s: SparkSession, d: String): DataFrame =
-    Corpus.tokenChunks(Tables.documents(s, d), "doc_id", "text", 32, 32)
-
-  /** §2b offset-based sequence packing into 512-token bins per language
-    * shard (exact integer arithmetic → reproducible layout). */
-  private def q_pack_bins(s: SparkSession, d: String): DataFrame =
-    Corpus.packBins(Tables.documents(s, d), "lang", "doc_id", "text", 512)
-
-  /** §2b LSH ANN top-k: probe only the query's hyperplane bucket, exact
-    * re-rank inside it (single-probe; the collected 1-row query vector is
-    * the legitimate tiny-collect, like the centroid table). */
-  private def q_lsh_topk(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .limit(1).collect().headOption
-      .getOrElse(sys.error(
-        s"q_lsh_topk: embeddings at $d must contain query vector vec_id=0"))
-      .getSeq[Float](0).map(_.toDouble).toSeq
-    Similarity.lshTopK(emb, "vec_id", "embedding", qv, 10,
-      Similarity.hyperplanes(6, 64))
-  }
-
-  /** §2b multi-probe LSH ANN top-k: the query's bucket plus the 3 buckets
-    * across its lowest-margin hyperplanes (Similarity.lshProbeBuckets) —
-    * recovers neighbors a near-zero-margin plane split away at ~4/2^6 of
-    * the corpus scanned. Same tiny-collect for the query vector. */
-  private def q_lsh_topk_mp(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .limit(1).collect().headOption
-      .getOrElse(sys.error(
-        s"q_lsh_topk_mp: embeddings at $d must contain query vector vec_id=0"))
-      .getSeq[Float](0).map(_.toDouble).toSeq
-    Similarity.lshTopK(emb, "vec_id", "embedding", qv, 10,
-      Similarity.hyperplanes(6, 64), probes = 4)
-  }
-
-  /** §3.3 per-row error capture (reference chat.py:229-236, 289-291): the
-    * reference keeps a row whose chat lookup fails and stamps
-    * `error = 'chat not found'`. Fixture: customers with c_custkey % 3 == 0
-    * are removed from the dimension, so ~1/3 of orders miss and carry the
-    * error marker while matched rows enrich normally. */
-  private def q_enrich_errors(s: SparkSession, d: String): DataFrame =
-    Joins.enrichLeftWithError(
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-      Tables.customer(s, d).filter(col("c_custkey") % 3 =!= 0)
-        .select(col("c_custkey").as("o_custkey"), col("c_name")),
-      "o_custkey")
-
-  /** §2b stratified deterministic sampling: per-language keep fractions,
-    * md5-salted so the decision is independent of the split assignment.
-    * Pure map-side (hashUnit is exact in doubles — no ulp drift vs the
-    * oracle). */
-  private def q_stratified_sample(s: SparkSession, d: String): DataFrame =
-    Corpus.stratifiedSample(Tables.documents(s, d), "lang", "doc_id",
-      Seq("en" -> 0.25, "zh" -> 0.5, "es" -> 0.75))
-      .select(col("doc_id"), col("lang"), col("sample_frac"), col("sample_u"))
-
-  /** §2b deterministic weighted sampling (Efraimidis–Spirakis): 20 docs
-    * per language, inclusion probability ∝ n_chars. */
-  private def q_weighted_sample(s: SparkSession, d: String): DataFrame =
-    Corpus.weightedSample(Tables.documents(s, d), "lang", "doc_id",
-      "n_chars", 20)
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("es_key"),
-        col("rnk"))
-
-  /** §2b incremental aggregate-state merge: state built on pre-1998
-    * orders merged with the 1998+ delta must equal the from-scratch
-    * aggregate — which is exactly what the oracle computes. */
-  private def q_agg_state_merge(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val pre = orders.filter(col("o_orderdate") < lit("1998-01-01"))
-    val post = orders.filter(col("o_orderdate") >= lit("1998-01-01"))
-    Corpus.mergeAggState(
-      Corpus.aggState(pre, "o_orderstatus", "o_totalprice"),
-      Corpus.aggState(post, "o_orderstatus", "o_totalprice"),
-      "o_orderstatus")
-      .select(col("o_orderstatus"), col("state_cnt"),
-        round(col("state_sum"), 2).as("state_sum"),
-        col("state_min"), col("state_max"))
-  }
-
-  /** §2b data-quality expectations: a 5-check suite evaluated in ONE scan
-    * (conditional sums) — includes a deliberately-failing non-critical
-    * check (price ceiling) so the report shape is exercised, not just the
-    * all-green path. */
-  private def q_expectations(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.checkExpectations(Tables.orders(s, d), Seq(
-      ColumnHygiene.Expectation("orderkey_not_null",
-        col("o_orderkey").isNotNull, critical = true),
-      ColumnHygiene.Expectation("custkey_not_null",
-        col("o_custkey").isNotNull, critical = true),
-      ColumnHygiene.Expectation("status_in_domain",
-        col("o_orderstatus").isin("F", "O", "P")),
-      ColumnHygiene.Expectation("price_positive", col("o_totalprice") > 0),
-      ColumnHygiene.Expectation("price_under_100k",
-        col("o_totalprice") < 100000.0)))
-
-  /** §2b sorted-neighborhood blocking: per-language candidate pairs at
-    * rank distance <= 3 under the (length, id) sort. */
-  private def q_sorted_neighborhood(s: SparkSession, d: String): DataFrame =
-    Dedup.sortedNeighborhoodPairs(
-      Tables.documents(s, d).filter(col("doc_id") < 120),
-      "doc_id", "text", "lang", 3)
-
-  /** §2b mergeable distinct-count state (HLL sketches), hash-checkable:
-    * the sketch estimate is not SQL-reproducible, so the output carries
-    * the exact side plus TWO deterministic acceptance verdicts the
-    * oracle pins to TRUE — `merge_close_to_scratch` (state merged across
-    * the 1998 cutoff estimates within 2% of a from-scratch sketch: union
-    * is lossless in sparse mode and drifts well under the rsd after HLL
-    * promotion — measured ≤1% at 14k keys) and `within_bound`
-    * (|est − exact|/exact ≤ 0.05 ≈ 3·rsd at the default lgConfigK=12).
-    * CorpusSpec pins exact merge==scratch equality in sparse mode on a
-    * constructed fixture. */
-  private def q_hll_state_merge(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val pre = orders.filter(col("o_orderdate") < lit("1998-01-01"))
-    val post = orders.filter(col("o_orderdate") >= lit("1998-01-01"))
-    val merged = Corpus.mergeDistinctState(
-      Corpus.distinctState(pre, "o_orderstatus", "o_custkey"),
-      Corpus.distinctState(post, "o_orderstatus", "o_custkey"),
-      "o_orderstatus")
-      .select(col("o_orderstatus"), col("n_distinct_est").as("__merged"))
-    val scratch = Corpus.distinctState(orders, "o_orderstatus", "o_custkey")
-      .select(col("o_orderstatus"),
-        hll_sketch_estimate(col("distinct_sketch")).as("__scratch"))
-    val exact = orders.groupBy(col("o_orderstatus"))
-      .agg(countDistinct(col("o_custkey")).as("n_exact"))
-    exact.join(merged, Seq("o_orderstatus"))
-      .join(scratch, Seq("o_orderstatus"))
-      .select(col("o_orderstatus"), col("n_exact"),
-        (abs(col("__merged") - col("__scratch")).cast("double")
-          / col("n_exact") <= 0.02).as("merge_close_to_scratch"),
-        (abs(col("__merged") - col("n_exact")).cast("double")
-          / col("n_exact") <= 0.05).as("within_bound"))
-  }
-
-  /** §2b verbatim duplicated spans (the substring-dedup primitive,
-    * Lee et al. ACL'22): 8-token windows appearing in ≥2 distinct
-    * documents — the license-header / boilerplate duplication that
-    * document-level exact and Jaccard dedup both miss. Map-side window
-    * expansion + ONE hash aggregate on the portable fingerprint. */
-  private def q_dup_spans(s: SparkSession, d: String): DataFrame =
-    Dedup.duplicatedSpans(Tables.documents(s, d), "doc_id", "text", 8)
-
-  /** §2b k-anonymity privacy audit: quasi-identifier combinations
-    * (mktsegment, nation, account-balance band) held by fewer than k=3
-    * customers — the re-identification gate a dataset passes before
-    * release. One count aggregate on the quasi tuple. */
-  private def q_kanonymity(s: SparkSession, d: String): DataFrame = {
-    val staged = Tables.customer(s, d).select(col("c_mktsegment"),
-      col("c_nationkey"),
-      floor(col("c_acctbal") / 1000).cast("long").as("acctbal_band"))
-    ColumnHygiene.kAnonymity(staged,
-      Seq("c_mktsegment", "c_nationkey", "acctbal_band"), 3)
-  }
-
-  /** §2b distinct l-diversity audit: same quasi-identifiers as
-    * q_kanonymity, acctbal band as the sensitive attribute — every
-    * (segment, nation) group with its distinct-band count and the l=4
-    * diversity flag (homogeneity-attack risk readout). */
-  private def q_ldiversity(s: SparkSession, d: String): DataFrame = {
-    val staged = Tables.customer(s, d).select(col("c_mktsegment"),
-      col("c_nationkey"),
-      floor(col("c_acctbal") / 1000).cast("long").as("acctbal_band"))
-    ColumnHygiene.lDiversity(staged,
-      Seq("c_mktsegment", "c_nationkey"), "acctbal_band", 4)
-  }
-
-  /** §2b t-closeness audit ([[ColumnHygiene.tCloseness]]), completing the
-    * k-anonymity → l-diversity → t-closeness release ladder on the SAME
-    * quasi/sensitive fixture: per quasi-group, the total-variation
-    * distance between its acctbal-band distribution and the table's
-    * (the categorical EMD of Li et al. ICDE'07), gated at t = 0.2. No
-    * group×value grid — absent values fold in arithmetically. */
-  private def q_tcloseness(s: SparkSession, d: String): DataFrame = {
-    val staged = Tables.customer(s, d).select(col("c_mktsegment"),
-      col("c_nationkey"),
-      floor(col("c_acctbal") / 1000).cast("long").as("acctbal_band"))
-    ColumnHygiene.tCloseness(staged,
-      Seq("c_mktsegment", "c_nationkey"), "acctbal_band", 0.2)
-  }
-
-  /** §2b per-group Spearman rank correlation ([[Stats.spearman]]):
-    * tie-aware monotone association of quantity vs price per return
-    * flag — the outlier/transform-robust sibling of the Pearson drift
-    * checks; heavy integer ties in l_quantity exercise the mid-rank
-    * path at every SF. */
-  private def q_spearman(s: SparkSession, d: String): DataFrame =
-    Stats.spearman(Tables.lineitem(s, d), "l_returnflag",
-      "l_quantity", "l_extendedprice")
-
-  /** §2b split-conformal prediction radius ([[Stats.conformalRadius]]):
-    * per event type, the ⌈(n+1)(1−α)⌉-th smallest |residual| of value
-    * around the (6dp-rounded) group mean at the dyadic α = 0.125 — the
-    * distribution-free interval radius a shipped predictor needs. The
-    * predictor is rounded BEFORE residuals so the order statistic ranks
-    * engine-identical doubles. */
-  private def q_conformal(s: SparkSession, d: String): DataFrame = {
-    // r16: group mean via aggregate + broadcast join instead of an
-    // unordered window partitioned by the ≤k-type key (whole-group rows
-    // through ≤k tasks at any scale — the r15-verdict serial cliff);
-    // identical expression, map-side combined
-    val ev = Tables.events(s, d).filter(col("value").isNotNull)
-    val means = ev.groupBy(col("event_type"))
-      .agg(round(avg(col("value")), 6).as("__mu"))
-    val withResid = ev.join(broadcast(means), Seq("event_type"))
-      .withColumn("__resid", col("value") - col("__mu"))
-    Stats.conformalRadius(withResid, "event_type", "__resid")
-  }
-
-  /** §2b boilerplate-prefix audit ([[TextAnalytics.boilerplatePrefixes]]):
-    * per source, the top-3 leading-3-token prefixes and their doc share —
-    * the template-header screen (RefinedWeb/C4 curation) whose per-group
-    * top-N window is the GroupTopK-rewrite shape. */
-  private def q_boilerplate(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.boilerplatePrefixes(Tables.documents(s, d), "source",
-      "text", k = 3, topN = 3)
-
-  /** §2b Horvitz–Thompson estimation ([[Corpus.htEstimate]]) over the
-    * deterministic stratified sample: per source, the sample-only
-    * unbiased reconstruction of the full corpus row count and n_chars
-    * total (± Poisson variance), emitted NEXT TO the true totals so the
-    * ratio column is the standing calibration check. Dyadic fractions
-    * make every summand exact — order-independent at any parallelism. */
-  private def q_horvitz_thompson(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val kept = Corpus.stratifiedSample(docs, "source", "doc_id",
-      Seq("src0" -> 0.5, "src1" -> 0.25), defaultFraction = 0.125)
-    val est = Corpus.htEstimate(kept, "source", "n_chars", "sample_frac")
-    val truth = docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_true"), sum(col("n_chars")).as("true_total"))
-    truth.join(est, Seq("source"))
-      .withColumn("ratio", round(col("ht_total") / col("true_total"), 6))
-  }
-
-  /** §2b Z-order layout key: Morton interleave of (l_partkey, l_suppkey),
-    * the two-dimensional data-skipping sort key behind Sinks.writeZOrdered
-    * — per-row bit arithmetic, zero shuffle. */
-  private def q_zorder_key(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-      col("l_partkey"), col("l_suppkey"),
-      Sinks.mortonKey(col("l_partkey"), col("l_suppkey")).as("zkey"))
-
-  /** Deterministic dyadic-rational classifier parameters (multiples of
-    * 1/1024, exactly representable in binary → per-doc logits are EXACT
-    * sums, hash-comparable cross-engine with no rounding): a stand-in for
-    * weights learned offline, shipped to the score query as literals. */
-  private[graft] val classifierWeights: Seq[Double] =
-    (0 until 64).map(i => (((i * 37 + 11) % 97) - 48) / 1024.0)
-  private[graft] val classifierBias: Double = 3.0 / 1024.0
-
-  /** §2b hashed-feature linear classifier (fastText-style scoring): the
-    * learned quality-filter path — 64 hashed buckets, weights as a literal
-    * array, pure map-side fold over the token array. */
-  private def q_quality_classifier(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.hashedLinearScore(Tables.documents(s, d), "doc_id", "text",
-      classifierWeights, classifierBias)
-
-  /** §2b PageRank (3 fixed iterations) over the undirected part↔supplier
-    * graph from lineitem — importance scoring, the other iterative-join
-    * workhorse next to connected components. Prefixed string node ids
-    * keep the two key spaces disjoint; both edge directions satisfy
-    * Graph.pageRank's every-node-is-a-src contract. */
-  /** DIRECTED part→supplier purchase edges with prefixed string ids —
-    * shared input of the graph-family queries. The distinct runs on the
-    * LONG key pair BEFORE the string ids are built (r13: the 100×-soak
-    * profile put ~2/3 of q_pagerank's sf10 wall clock in this edge
-    * build — the |lineitem|-row exchange was hashing/comparing built
-    * strings; long→string prefixing is injective, so distinct-then-
-    * concat is the same edge set with a far cheaper exchange). */
-  private def partSupplierEdges(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .select(col("l_partkey").as("__pk"), col("l_suppkey").as("__sk"))
-      .distinct()
-      .select(concat(lit("p"), col("__pk").cast("string")).as("src"),
-        concat(lit("s"), col("__sk").cast("string")).as("dst"))
-
-  /** Both directions of [[partSupplierEdges]] (the undirected contract
-    * of pageRank/labelPropagation: every node appears as src). */
-  private def partSupplierUndirected(s: SparkSession, d: String): DataFrame = {
-    val ps = partSupplierEdges(s, d)
-    ps.unionByName(ps.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** LONG-id encoding of the same graph for the float-rank families
-    * (r13 sf10 probe: every pageRank/HITS round was shuffling BUILT
-    * STRINGS): parts ↦ 2·pk, suppliers ↦ 2·sk+1 — injective into
-    * disjoint even/odd spaces, so the iteration loop joins and
-    * aggregates 8-byte longs and the ids decode to the pinned
-    * "p…"/"s…" strings only at the |V|-row output
-    * ([[decodeGraphId]]). q_label_prop additionally needs the min-label
-    * tie-break over the STRING id ordering, which this even/odd long
-    * encoding does NOT preserve — it layers the order-isomorphic
-    * digit-string embedding on top (see q_label_prop). */
-  private def partSupplierPairsLong(s: SparkSession, d: String): DataFrame =
-    // widen on the distinct key BEFORE the distinct (r15, guide §2.5 +
-    // §2.4): the repartition's exchange is hash-compatible with the
-    // aggregate, so the distinct runs wide with NO extra shuffle — the
-    // single-row-group scan otherwise runs the partial agg in one task
-    graft.operators.FanOut.widen(
-        Tables.lineitem(s, d)
-          .select(col("l_partkey").as("__pk"), col("l_suppkey").as("__sk")),
-        col("__pk"), col("__sk"))
-      .distinct()
-      .select((col("__pk") * 2).as("src"), (col("__sk") * 2 + 1).as("dst"))
-
-  private def decodeGraphId(c: Column): Column =
-    when(c % 2 === 0,
-      concat(lit("p"), shiftright(c, 1).cast("string")))
-      .otherwise(concat(lit("s"), shiftright(c, 1).cast("string")))
-
-  private def q_pagerank(s: SparkSession, d: String): DataFrame = {
-    val ps = partSupplierPairsLong(s, d)
-    val edges = ps.unionByName(
-      ps.select(col("dst").as("src"), col("src").as("dst")))
-    Graph.pageRank(edges, 3)
-      .select(decodeGraphId(col("id")).as("id"),
-        round(col("rank"), 9).as("rank"))
-  }
-
-  /** §2b HITS hubs & authorities: 3 unrolled rounds over the DIRECTED
-    * part→supplier purchase graph — parts score as hubs, suppliers as
-    * authorities; integer-exact sums, max-normalized once at the end. */
-  private def q_hits(s: SparkSession, d: String): DataFrame =
-    // long-id iteration (see partSupplierPairsLong); pre-distinct on the
-    // long keys makes hits' internal distinct a no-op at 100×
-    Graph.hits(partSupplierPairsLong(s, d), 3)
-      .select(decodeGraphId(col("id")).as("id"),
-        col("authority"), col("hub"))
-
-  /** §2b hot-key skew report: top-10 suppliers by lineitem row count with
-    * share and skew factor — the pre-flight check before keying a shuffle
-    * on l_suppkey. */
-  private def q_skew_report(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.skewReport(Tables.lineitem(s, d), "l_suppkey", 10)
-
-  /** §2b winnowing fingerprints (MOSS): k=5 shingles, w=4 windows — the
-    * sampled substring-dedup index. */
-  private def q_winnowing(s: SparkSession, d: String): DataFrame =
-    Dedup.winnowingFingerprints(Tables.documents(s, d), "doc_id", "text",
-      k = 5, w = 4)
-
-  /** §2b per-group closed-form OLS: quantity→price trend per returnflag —
-    * one hash aggregate, slope/intercept/r² composed post-aggregate from
-    * the cross-engine-stable covariance/variance/corr battery. */
-  private def q_group_ols(s: SparkSession, d: String): DataFrame =
-    Stats.groupOls(Tables.lineitem(s, d), "l_returnflag",
-      "l_quantity", "l_extendedprice")
-
-  /** §2b stream-static enrichment (batch twin): events left-joined to the
-    * broadcast customer dimension — the no-state streaming join shape;
-    * stream/batch parity is pinned in StreamingSpec. */
-  private def q_stream_enrich(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStreams.enrichedStream(
-        Tables.events(s, d), Tables.customer(s, d), "user_id", "c_custkey")
-      .select(col("event_id"), col("user_id"), col("c_name"),
-        col("c_mktsegment"), col("value"))
-
-  /** §2b referential-integrity audit: orders whose customer is missing
-    * from a fixture-thinned dimension (c_custkey % 3 == 0 removed, same
-    * fixture as q_enrich_errors) — distinct dangling keys with counts. */
-  private def q_ri_orphans(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.riOrphans(Tables.orders(s, d),
-      Tables.customer(s, d).filter(col("c_custkey") % 3 =!= 0),
-      "o_custkey", "c_custkey")
-
-  /** §2b per-document sentence statistics: count and mean/max sentence
-    * length in tokens — map-side array math, no explode. */
-  private def q_sentence_stats(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.sentenceStats(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b temperature rebalancing (alpha=0.5): en is ~3.4× fr in the
-    * documents table; after resampling, effective sizes follow n^0.5 —
-    * the multilingual-LLM mixing rule. */
-  private def q_temperature_mix(s: SparkSession, d: String): DataFrame =
-    Corpus.temperatureResample(Tables.documents(s, d), "lang", "doc_id", 0.5)
-      .select(col("doc_id"), col("lang"), col("n_group"), col("keep_frac"),
-        col("mix_u"))
-
-  /** §2b PII masking: documents text augmented with a synthetic email /
-    * phone / URL built from doc_id (both engines construct the identical
-    * input), then the url→email→phone regexp_replace chain. */
-  private def q_pii_mask(s: SparkSession, d: String): DataFrame = {
-    val synth = concat(col("text"),
-      lit(" Contact user"), col("doc_id").cast("string"),
-      lit("@example.com or +1 (555) 010-"),
-      lpad(col("doc_id").cast("string"), 4, "0"),
-      lit(" via https://ex.example/d/"), col("doc_id").cast("string"))
-    Tables.documents(s, d)
-      .select(col("doc_id"), TextFunctions.maskPii(synth).as("masked"))
-  }
-
-  /** §2b markup stripping: documents text wrapped in synthetic tags and
-    * entities (including the `&amp;lt;` double-escape trap), then
-    * stripMarkup. */
-  private def q_strip_markup(s: SparkSession, d: String): DataFrame = {
-    val wrapped = concat(lit("<div class=\"hero\"><h1>"), col("text"),
-      lit("</h1><p>&amp;lt; kept, &lt;raw&gt; &amp; &quot;quoted&quot; &#39;s</p><br/>"))
-    Tables.documents(s, d)
-      .select(col("doc_id"), TextFunctions.stripMarkup(wrapped).as("clean"))
-  }
-
-  /** §2b interval join (batch twin of EventStreams.attributedPurchases):
-    * purchases attributed to same-user clicks within the prior 30 minutes —
-    * equi-join on user_id with the time range as a post-filter, never a
-    * nested loop. */
-  private def q_interval_join(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStreams.attributedPurchases(Tables.events(s, d))
-
-  /** §2b keyless containment join via bucketing: lineitems shipped inside
-    * each sampled order's 90-day window — no equi-key, but the bucketed
-    * rewrite joins on a 7-day bucket id instead of a nested loop. */
-  private def q_range_join_bucketed(s: SparkSession, d: String): DataFrame = {
-    val points = Tables.lineitem(s, d).select(
-      datediff(col("l_shipdate"), lit("1970-01-01")).cast("long").as("ship_day"))
-    val intervals = Tables.orders(s, d)
-      .filter(col("o_orderkey") % 937 === 0)
-      .select(col("o_orderkey"),
-        datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("lo_day"))
-      .withColumn("hi_day", col("lo_day") + 90)
-    // Partial aggregate PUSHED BELOW the range join: the consumer is a
-    // per-interval count/min/max over a contiguous day range, so points
-    // collapse to the bounded per-DAY grid first and the range join
-    // carries day weights — work ∝ intervals × days-in-range instead of
-    // intervals × points (the raw form's intermediate grew
-    // points × intervals = 100× at the sf10 tree: 77.7 s → this).
-    // The raw row-level range join stays exercised by q_interval_join.
-    val dayCounts = points.groupBy(col("ship_day"))
-      .agg(count(lit(1)).as("__n_pts"))
-    Joins.rangeJoinBucketed(dayCounts, "ship_day", intervals,
-        "lo_day", "hi_day", 7L)
-      .groupBy(col("o_orderkey"))
-      .agg(sum(col("__n_pts")).as("n_shipped"),
-        min(col("ship_day")).as("first_day"),
-        max(col("ship_day")).as("last_day"))
-  }
-
-  /** §2b approximate quantile filter (the scale path of q_quality_filter),
-    * hash-checkable: the GK sketch's boundary pick is not reproducible in
-    * a SQL oracle, so the output is the per-language acceptance readout
-    * the oracle CAN pin to TRUE — `kept_consistent` (the operator's
-    * survivor count equals n − |quality < threshold|, i.e. the broadcast
-    * join + filter kept exactly the suffix at its own threshold) and
-    * `rank_ok` (the threshold's rank window [|< t|+1, |≤ t|] overlaps the
-    * target rank 0.25·n within the GK guarantee ε·n = n/accuracy, +1 for
-    * rank-convention slack — tie-robust where a plain kept-count bound is
-    * not). The doc-level filtering semantics stay oracle-checked via the
-    * exact twin q_quality_filter; CorpusSpec pins approx-vs-exact
-    * survivor sets. */
-  private def q_quality_filter_approx(s: SparkSession, d: String): DataFrame = {
-    val accuracy = 10000
-    val staged = Tables.documents(s, d).select(col("doc_id"), col("lang"),
-      round(TextFunctions.qualityScore(col("text")), 6).as("quality"))
-    val kept = Corpus.quantileFilterApprox(staged, "lang", "quality",
-      0.25, accuracy)
-    // one evaluation of the sketch: the threshold is read back from the
-    // operator's own output (constant per lang), never recomputed
-    val keptAgg = kept.groupBy(col("lang"))
-      .agg(count(lit(1)).as("__n_kept"), min(col("q_threshold")).as("__t"))
-    val target = col("n_docs").cast("double") * 0.25
-    val slack = col("n_docs").cast("double") / accuracy + 1.0
-    staged.join(broadcast(keptAgg), Seq("lang"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("quality") < col("__t"), 1L).otherwise(0L)).as("__lt"),
-        sum(when(col("quality") <= col("__t"), 1L).otherwise(0L)).as("__le"),
-        min(col("__n_kept")).as("__kept"))
-      .select(col("lang"), col("n_docs"),
-        (col("__kept") === col("n_docs") - col("__lt")).as("kept_consistent"),
-        ((col("__lt").cast("double") + 1.0 - slack <= target) &&
-          (col("__le").cast("double") + slack >= target)).as("rank_ok"))
-  }
-
-  /** §2b benchmark decontamination: docs with doc_id < 50 stand in for the
-    * eval set; corpus documents sharing any word 3-gram with it are
-    * flagged with their distinct overlapping shingle count. (3-grams, not
-    * the conventional 13, because the synthetic docs are ~50 tokens.) */
-  private def q_contamination(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    TextAnalytics.contamination(
-      docs.filter(col("doc_id") >= 50), "doc_id", "text",
-      docs.filter(col("doc_id") < 50), "text", n = 3)
-  }
-
-  /** §2b repetition quality signals (Gopher-rule family): repeated-token
-    * fraction + top-bigram share per document. */
-  private def q_repetition(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.repetitionSignals(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b Gopher composite rule gate ([[TextAnalytics.gopherRules]]):
-    * thresholds tuned so EVERY rule binds on this corpus — word count ≥
-    * 50 (canonical), mean-word-length lower bound raised 3.0 → 4.4 (the
-    * corpus spans 3.7–5.3, so the canonical 3.0 would be vacuous),
-    * repetition ≤ 0.6, top-bigram ≤ 0.06 (canonical 0.2 sits above the
-    * corpus max 0.17), ≥ 2 stopwords. Keeps ≈⅓ of docs with each rule
-    * rejecting someone, so all five verdict columns are checked
-    * non-vacuously. */
-  private def q_gopher_rules(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.gopherRules(Tables.documents(s, d), "doc_id", "text",
-      minMeanWordLen = 4.4, maxTopBigramFrac = 0.06)
-
-  /** §2b Fellegi–Sunter probabilistic linkage over nation-blocked
-    * customers: m-probabilities configured, u-probabilities estimated as
-    * field collision probabilities from the data; fields = market
-    * segment, acctbal kilo-bucket, 2-char name tail
-    * ([[Dedup.fellegiSunter]]). The harness emits the TOP-50 pairs by
-    * score (full (score, id_a, id_b) tiebreak → TakeOrdered) rather than
-    * a fixed threshold — at sf0.001 the block-pair volume is too small
-    * for any chance all-field agreement, so a threshold cut would go
-    * empty; a clerical-review queue is the other standard FS readout. */
-  private def q_fellegi_sunter(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d).select(
-      col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
-      floor(col("c_acctbal") / 1000).cast("long").as("acct_kilo"),
-      expr("substring(c_name, length(c_name) - 1, 2)").as("name_tail"))
-    // top-k form: the per-score prefix-sum cutoff expands only the group
-    // pairs that can reach the 50-row review queue — at 10× duplicated
-    // data the full-expansion form measured 12.8× slower (BASELINE.md
-    // round-11 soak), this one stays flat; output (and oracle) unchanged
-    Dedup.fellegiSunterTopK(c, "c_custkey", "c_nationkey",
-      Seq(("c_mktsegment", 0.9), ("acct_kilo", 0.8), ("name_tail", 0.85)),
-      threshold = -100.0, k = 50)
-  }
-
-  /** §2b incremental CC: fold a deterministic batch of new pairs into a
-    * pre-existing min-rooted cluster assignment via star contraction
-    * ([[Dedup.incrementalClusters]]) — the daily-ingest dedup path whose
-    * iterative work is ∝ the batch, not the corpus. Fixture: prior
-    * clusters = runs of 4 consecutive doc_ids under 400; the batch links
-    * every 20th id to id+4 (merging adjacent clusters into chains and
-    * pulling in ≥400 ids the prior never saw). */
-  private def q_incremental_cc(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val prior = docs.filter(col("doc_id") < 400)
-      .select(col("doc_id").as("id"),
-        (col("doc_id") - col("doc_id") % 4).as("cluster"))
-    val newPairs = docs
-      .filter(col("doc_id") % 20 === 0 && col("doc_id") + 4 < 500)
-      .select(col("doc_id").as("id_a"), (col("doc_id") + 4).as("id_b"))
-    Dedup.incrementalClusters(prior, "id", "cluster", newPairs)
-      .select(col("id").as("doc_id"), col("cluster"))
-  }
-
-  /** §2b per-source one-vs-rest KS drift of the doc-length distribution
-    * ([[Stats.groupKsDrift]]) — which source's shape diverges from the
-    * corpus, the KS small-multiples companion to q_psi/q_jsd_drift. */
-  private def q_ks_per_source(s: SparkSession, d: String): DataFrame =
-    Stats.groupKsDrift(Tables.documents(s, d), "source", "n_chars")
-
-  /** §2b BH-FDR-corrected drift battery: the per-source KS small
-    * multiples promoted to decision grade — a DETERMINISTIC +150-char
-    * location shift is injected into src0–src4 (known-drift validation:
-    * the synthetic corpus is drift-free, so without injection every
-    * verdict is vacuously non-significant), each source's two-sample KS
-    * becomes an asymptotic p = min(1, 2·exp(−2·D²·n_e)) with
-    * n_e = n₁n₂/(n₁+n₂), and [[Stats.bhAdjust]] turns the m=20 raw
-    * p-values into rank / adjusted-p / reject-at-α=0.05 verdicts.
-    * Shifted and unshifted sources land on BOTH sides of the verdict at
-    * every SF (3-4 rejections at sf0.001/0.01), so the oracle comparison
-    * exercises rank ordering, the suffix-min monotonization AND both
-    * verdict branches. p is 6dp-rounded before ranking (exp ulp cannot
-    * reorder) and ties break on source. */
-  private def q_fdr_bh(s: SparkSession, d: String): DataFrame = {
-    val shifted = Tables.documents(s, d).withColumn("__v",
-      col("n_chars") + when(
-        col("source").isin("src0", "src1", "src2", "src3", "src4"),
-        lit(150L)).otherwise(lit(0L)))
-    val ks = Stats.groupKsDrift(shifted, "source", "__v")
-    val ne = col("n_group").cast("double") * col("n_rest").cast("double") /
-      (col("n_group") + col("n_rest")).cast("double")
-    val p = least(lit(1.0),
-      round(lit(2.0) * exp(lit(-2.0) * col("ks") * col("ks") * ne), 6))
-    Stats.bhAdjust(ks.withColumn("p_value", p), "p_value", Seq("source"),
-      alpha = 0.05)
-  }
-
-  /** §2b length-distribution flattening: deterministic rejection sampling
-    * of docs to a uniform target over 200-char length bins — the
-    * length-bias correction pass ([[Corpus.matchDistribution]]; keep
-    * probability per bin is the exact rational n_min/n_bin). */
-  private def q_dist_match(s: SparkSession, d: String): DataFrame =
-    Corpus.matchDistribution(Tables.documents(s, d), "doc_id", "n_chars",
-      200L, "flat")
-
-  /** §2b leave-one-out source ablation of doc length — which source's
-    * removal moves the corpus mean most ([[Corpus.sourceAblation]]; the
-    * pre-Shapley curation readout). */
-  private def q_source_ablation(s: SparkSession, d: String): DataFrame =
-    Corpus.sourceAblation(Tables.documents(s, d), "source", "n_chars")
-
-  /** §2b per-source quantile-rank normalization of doc length with a
-    * uniform 20%-tail gate ([[Corpus.quantileRank]]) — the calibrated
-    * quality filter: the threshold drops the same fraction per source. */
-  private def q_quantile_norm(s: SparkSession, d: String): DataFrame =
-    Corpus.quantileRank(
-        Tables.documents(s, d).select(col("doc_id"), col("source"),
-          col("n_chars")),
-        "source", "n_chars")
-      .withColumn("keep_doc", col("pct_rank") >= 0.2)
-
-  /** §2b corpus-level distinct-1/2/3 diversity per source — the
-    * synthetic-data acceptance gate ([[TextAnalytics.distinctNgramRatio]];
-    * low distinct-n marks template/self-repetitive slices). */
-  private def q_distinct_ngrams(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.distinctNgramRatio(Tables.documents(s, d), "source",
-      "text", Seq(1, 2, 3))
-
-  /** §2b word2vec-style negative-sampling table: unigram^0.75 shares +
-    * cumulative rank-order mass over the top-100 tokens
-    * ([[TextAnalytics.negativeSamplingTable]]). */
-  private def q_negative_sampling(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.negativeSamplingTable(Tables.documents(s, d), "text", 100)
-
-  /** §2b length-grouped batching audit: per (source, 16-doc batch) dense-
-    * rectangle padding waste under length-sorted batching
-    * ([[Corpus.lengthGroupedBatches]]). */
-  private def q_padding_waste(s: SparkSession, d: String): DataFrame =
-    Corpus.lengthGroupedBatches(Tables.documents(s, d), "source", "doc_id",
-      "text", 16)
-
-  /** §2b snapshot diff (T16/K3 generalized to a change feed): old = orders
-    * minus keys %7==0; new = orders minus keys %11==0 with totalprice
-    * bumped on %5==0 — yielding all four change types deterministically. */
-  private def q_snapshot_diff(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val oldSnap = orders.filter(col("o_orderkey") % 7 =!= 0)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val newSnap = orders.filter(col("o_orderkey") % 11 =!= 0)
-      .select(col("o_orderkey"),
-        when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 10)
-          .otherwise(col("o_totalprice")).as("o_totalprice"),
-        col("o_orderstatus"))
-    Joins.diffSnapshots(oldSnap, newSnap, "o_orderkey",
-      Seq("o_totalprice", "o_orderstatus"))
-  }
-
-  /** §2b data-quality column profile: per-column null/distinct/min/max
-    * audit over orders (string/long columns only — a double min/max cast
-    * to string would be float-format-sensitive across engines). */
-  private def q_column_profile(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.columnProfile(Tables.orders(s, d),
-      Seq("o_orderstatus", "o_custkey", "o_orderpriority"))
-      .withColumnRenamed("column", "col_name")
-
-  /** §2b CDC apply: reconstruct the new snapshot from old + change feed —
-    * the oracle IS the new-snapshot definition, so the check closes the
-    * diff/apply roundtrip exactly. */
-  private def q_apply_diff(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d)
-    val oldSnap = orders.filter(col("o_orderkey") % 7 =!= 0)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    Joins.applyDiff(oldSnap, q_snapshot_diff(s, d), "o_orderkey",
-      Seq("o_totalprice", "o_orderstatus"))
-  }
-
-  /** §2b BM25 ranked retrieval: top-20 documents for a literal query-term
-    * set — early term filter, broadcast stats, TakeOrdered top-k. */
-  private def q_bm25(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.bm25(Tables.documents(s, d), "doc_id", "text",
-      Seq("data", "spark", "merge"), 20)
-
-  /** §2b Dirichlet query-likelihood retrieval
-    * ([[TextAnalytics.queryLikelihood]], Zhai & Lafferty SIGIR'01) on
-    * the SAME 3-term query as q_bm25 — the LM scoring member of the
-    * TF-IDF/BM25/QL trio; absent terms contribute smoothed mass, so the
-    * ranking differs from BM25 exactly where smoothing matters. */
-  private def q_query_likelihood(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.queryLikelihood(Tables.documents(s, d), "doc_id", "text",
-      Seq("data", "spark", "merge"), 20)
-
-  /** §2b Yule's K lexical richness ([[TextAnalytics.yuleK]]) per source:
-    * the closed-form frequency-spectrum constant — template/repetitive
-    * slices score high; exact integers until the final division. */
-  private def q_yule_k(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.yuleK(Tables.documents(s, d), "source", "text")
-
-  /** §2b n-gram novelty curve ([[TextAnalytics.noveltyCurve]]): per
-    * doc_id-ordered ingestion batch (2000 docs), the share of distinct
-    * 3-grams first seen in that batch — the crawl-freshness decay
-    * readout; min-batch attribution needs no ordering pass. */
-  private def q_novelty_curve(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.noveltyCurve(
-      Tables.documents(s, d)
-        .withColumn("batch", floor(col("doc_id") / 2000).cast("long")),
-      "batch", "text", n = 3)
-
-  /** §2b difference-in-differences ([[Stats.diffInDiff]]): hash-assigned
-    * arms (the q_cuped assignment), post = the 2024-01-15 cutoff, over
-    * event values — the trend-netting 2×2 completing the experimentation
-    * battery (Welch: no time; CUPED: variance reduction; DiD: secular
-    * trend). One 4-cell aggregate + a pivot row. */
-  private def q_diff_in_diff(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .withColumn("arm",
-        when(Corpus.hashPct(col("user_id")) < 50, "a").otherwise("b"))
-      .withColumn("post", col("ts") >= lit("2024-01-15").cast("timestamp"))
-    Stats.diffInDiff(ev, "arm", treatArm = "a", controlArm = "b",
-      "post", "value")
-  }
-
-  /** §2b shipping-priority multi-join (the TPC-H Q3 shape): segment-
-    * filtered customers broadcast into orders, the date-filtered
-    * lineitems join on the order key, revenue aggregates per order and
-    * TakeOrdered keeps the top 10 — the classic selective-dimension →
-    * fact → fact join exhibit. */
-  private def q_shipping_priority(s: SparkSession, d: String): DataFrame = {
-    val cut = lit("1996-06-30").cast("timestamp")
-    val cust = Tables.customer(s, d)
-      .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    val ord = Tables.orders(s, d).filter(col("o_orderdate") < cut)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-        col("o_orderpriority"))
-    val li = Tables.lineitem(s, d).filter(col("l_shipdate") > cut)
-      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-    ord.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .join(li, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-        2).as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey").asc)
-      .limit(10)
-  }
-
-  /** §2b PRF query expansion: BM25 top-3 feedback docs for the same
-    * query, top-10 expansion terms by feedback-tf × corpus IDF — the
-    * second-pass retrieval vocabulary. */
-  private def q_prf_expansion(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.prfExpansion(Tables.documents(s, d), "doc_id", "text",
-      Seq("data", "spark", "merge"), fbDocs = 3, nTerms = 10)
-
-  /** §2b triangle counting over the part co-occurrence graph (parts
-    * appearing in the same order, one-in-three order slice): per-node
-    * triangle participation — ordered wedge join + closing-edge semi-join,
-    * no cross product. */
-  private def q_triangles(s: SparkSession, d: String): DataFrame = {
-    // widen on the join key before distinct + self-join (r15, §2.5 +
-    // §2.4): hash(ok) satisfies the distinct's (ok, pk) clustering AND
-    // co-partitions both self-join sides — one exchange, all wide
-    val li = graft.operators.FanOut.widen(
-        Tables.lineitem(s, d).filter(col("l_orderkey") % 3 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
-        col("ok"))
-      .distinct()
-    val edges = li.as("l").join(li.as("r"),
-        col("l.ok") === col("r.ok") && col("l.pk") < col("r.pk"))
-      .select(col("l.pk").as("src"), col("r.pk").as("dst"))
-    Graph.triangleCount(edges)
-  }
-
-  /** §2b TF-IDF-weighted cosine pairs (the weighted Jaccard upgrade):
-    * inverted-index equi-join over the doc_id < 300 slice, rounded-cosine
-    * ≥ 0.8 keeps the filter ulp-stable cross-engine. */
-  private def q_cosine_pairs(s: SparkSession, d: String): DataFrame =
-    Dedup.tfidfCosinePairs(
-      Tables.documents(s, d).filter(col("doc_id") < 300),
-      "doc_id", "text", 0.8)
-
-  /** §2b linear interpolation over the hourly grid (the continuous-value
-    * sibling of q_resample_fill's carry-forward): gap hours get the
-    * time-weighted blend of the bracketing observed hourly sums. */
-  private def q_interp(s: SparkSession, d: String): DataFrame = {
-    // bit-exact pipeline: hourly sums snapped to integer CENTS (value is
-    // cent-quantized, so round-to-integer is never near its boundary),
-    // then the blend runs UNROUNDED over exact operands — identical IEEE
-    // expression in both engines → bit-identical doubles, no dependence
-    // on either engine's decimal-rounding implementation (hour fractions
-    // are dyadic, so rounded output would sit ON boundaries structurally)
-    val hours = Tables.events(s, d)
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
-      .agg(round(sum(col("value")) * 100, 0).cast("long").as("c"))
-    val grid = hours.groupBy(col("user_id"))
-      .agg(min(col("hour")).as("__lo"), max(col("hour")).as("__hi"))
-      .select(col("user_id"),
-        explode(sequence(col("__lo"), col("__hi"), expr("INTERVAL 1 HOUR")))
-          .as("hour"))
-    val sparse = grid.join(hours, Seq("user_id", "hour"), "left")
-      .select(col("user_id"), col("hour"), col("c").cast("double").as("v"))
-    TimeSeries.interpolateLinear(sparse, "user_id", "hour", "v",
-        roundScale = -1)
-      .select(col("user_id"), col("hour"),
-        (col("v_interp") / 100.0).as("v_interp"))
-  }
-
-  /** §2b gaps-and-islands: consecutive-active-day streaks per user — one
-    * window pass + one aggregate, no self-join. */
-  private def q_islands(s: SparkSession, d: String): DataFrame =
-    TimeSeries.islands(Tables.events(s, d), "user_id", "ts")
-      // DATE → TIMESTAMP for the dump: parquet DATE round-trips as a
-      // python date object while DuckDB's comes back datetime64 — same
-      // day, different canon string in the comparator
-      .select(col("user_id"),
-        col("start_day").cast("timestamp").as("start_day"),
-        col("end_day").cast("timestamp").as("end_day"),
-        col("n_days"))
-
-  /** §2b exact heavy hitters (sketch → recount): document tokens with
-    * frequency > n/41, found by a Misra–Gries pass whose shuffle is O(k)
-    * per partition, then recounted exactly over the ≤ k candidates —
-    * never a full distinct-token aggregation. k=40 on the ~31-word
-    * synthetic vocabulary keeps the check non-vacuous: the rare 'dup'
-    * token falls below the threshold while the rest clear it. */
-  private def q_heavy_hitters(s: SparkSession, d: String): DataFrame = {
-    val toks = Tables.documents(s, d)
-      .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-    Corpus.heavyHitters(toks, "token", k = 40)
-  }
-
-  /** §2b robust outliers: events whose value sits more than 3 robust
-    * z-scores (MAD-based) from its event type's median — the
-    * outlier-immune counterpart of q_zscore. */
-  private def q_mad_outliers(s: SparkSession, d: String): DataFrame =
-    Stats.madOutliers(Tables.events(s, d), "event_type", "value", z = 3.0)
-      .select(col("event_id"), col("event_type"), col("value"),
-        col("med"), col("mad"), col("robust_z"))
-
-  /** §2b label propagation (3 fixed synchronous rounds) over the same
-    * undirected part↔supplier graph as q_pagerank — community detection
-    * as joins + argmax aggregates, deterministic via the (count desc,
-    * label asc) tie-break. */
-  private def q_label_prop(s: SparkSession, d: String): DataFrame = {
-    // long-id edges AND long labels (r14): the min-label tie-break is
-    // defined over the "p…"/"s…" STRING ordering, but that order embeds
-    // order-isomorphically into a long for this digit-string domain —
-    // bit 62 = isSupplier ("p" < "s"), below it the digits left-aligned
-    // to width 15 (lexicographic digit compare = left-aligned numeric
-    // compare), low 4 bits = digit count (the shorter-prefix tie, "p1" <
-    // "p10"). Every round then shuffles and min_by-compares (long, long)
-    // rows instead of built strings — same winners, bit-identical output
-    // after the final decode — which cut the sf10 round cost ~2×.
-    val ps = partSupplierPairsLong(s, d)
-    val edges = ps.unionByName(
-      ps.select(col("dst").as("src"), col("src").as("dst")))
-    val encodeLabel = (c: Column) => {
-      val v = shiftright(c, 1) // the raw part/supplier key (digits, no sign)
-      val dd = length(v.cast("string")).cast("long")
-      // v * 10^(15-d) < 10^15 < 2^53: exact in double, exact after cast
-      val leftAligned = (v.cast("double")
-        * pow(lit(10.0), lit(15L) - dd)).cast("long")
-      (c % 2) * lit(1L << 62) + leftAligned * 16L + dd
-    }
-    val decodeLabel = (c: Column) => {
-      val sBit = shiftright(c, 62)
-      val rest = c.bitwiseAND(lit((1L << 62) - 1))
-      val dd = rest % 16
-      val v = (shiftright(rest, 4).cast("double")
-        / pow(lit(10.0), lit(15L) - dd)).cast("long")
-      concat(when(sBit === 1, lit("s")).otherwise(lit("p")),
-        v.cast("string"))
-    }
-    Graph.labelPropagation(edges, 3, encodeLabel)
-      .select(decodeGraphId(col("id")).as("id"),
-        decodeLabel(col("label")).as("label"))
-  }
-
-  /** §2b Zipf-law fit: per-language ln(freq) ~ ln(rank) OLS over the
-    * token frequency table — the corpus health check (the synthetic
-    * near-uniform vocabulary fits a shallow slope with low r²; real text
-    * sits near −1 with high r² — exactly the drift this flags). */
-  private def q_zipf_slope(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.zipfFit(Tables.documents(s, d), "lang", "text")
-
-  /** §2b product-quantization ANN: 64 dims → 4 subspaces × 8 codes
-    * (codebooks sliced from the same vec_id<8 seeds the IVF family uses,
-    * so the oracle rebuilds them in SQL), then ADC top-10 against the
-    * vec_id=0 query — per-row scoring is 4 lookups + 3 adds regardless of
-    * dimension. Codes are in the output, so the oracle checks the encode
-    * step per subspace, not just the ranking. */
-  private def q_pq_topk(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val seeds = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-    val codebooks = Similarity.sliceCodebooks(seeds, nSub = 4)
-    val assigned = Similarity.pqAssign(emb, "vec_id", "embedding", codebooks)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    Similarity.pqTopK(assigned, "vec_id", codebooks, q, "qv", k = 10)
-  }
-
-  /** §2b product quantization at a PRODUCTION codebook size — 4 subspaces
-    * × 256 codes × 16 dims = 16k terms — through the broadcast-codebook
-    * encode ([[Similarity.pqAssignBroadcast]]) and the table-built ADC
-    * LUT ([[Similarity.pqTopKBroadcast]]): the query×codebook distances
-    * are nSub×ksub tiny rows, so nothing JIT-compiles per codebook entry
-    * (the literal twin's measured 2.7→9.3 s variance regime). Bit-
-    * identical to the literal path at equal codebooks (SimilaritySpec). */
-  private def q_pq_topk_bcast(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val seeds = Similarity.collectCentroids(
-      emb.filter(col("vec_id") < 256), "vec_id", "embedding")
-    val codebooks = Similarity.sliceCodebooks(seeds, nSub = 4)
-    val cbT = Similarity.codebooksAsTable(s, codebooks)
-    val assigned = Similarity.pqAssignBroadcast(emb, "vec_id", "embedding",
-      cbT, nSub = 4, subDim = 16)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    Similarity.pqTopKBroadcast(assigned, "vec_id", cbT, q, "qv",
-      k = 10, subDim = 16)
-  }
-
-  /** §2b naive Bayes classifier audit: train multinomial NB on the
-    * documents table's own language labels and self-classify — documents
-    * whose label loses its own model's argmax are the mislabel/drift
-    * candidates. All wordcount aggregates + a #classes fan-out. */
-  private def q_naive_bayes(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.naiveBayesClassify(Tables.documents(s, d),
-      "doc_id", "text", "lang")
-
-  /** §2b BPE merge-step statistic: top-50 adjacent character pairs
-    * within words — map-side pair windows, one hash agg, TakeOrdered. */
-  private def q_char_pairs(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.charPairCounts(Tables.documents(s, d), "text", topN = 50)
-
-  /** §2b BPE merge-rule training: the first 8 learned merges (rank, pair,
-    * corpus count, merged symbol) over the whitespace-token vocabulary —
-    * actual tokenizer training, not just the pair statistic. Oracle =
-    * the same unrolled rounds as MATERIALIZED CTEs. */
-  private def q_bpe_merges(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.bpeTrain(Tables.documents(s, d), "text", rounds = 8)
-
-  /** §2b BPE encoding: apply the 8 merges learned at this SF to every
-    * document — per-doc subword counts under the LEARNED tokenizer (the
-    * number that prices a training run), pure map-side after training. */
-  private def q_bpe_encode(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val rules = TextAnalytics.bpeTrainRules(docs, "text", rounds = 8)
-    TextAnalytics.bpeEncode(docs, "doc_id", "text", rules)
-  }
-
-  /** §2b χ² independence audit: lang × source contingency — which cells
-    * drive the language-mix dependence across sources. */
-  private def q_chisq_indep(s: SparkSession, d: String): DataFrame =
-    Stats.chiSquareIndependence(Tables.documents(s, d), "lang", "source")
-
-  /** §2b Simpson's-paradox guard: src0-vs-src1 long-doc rate (n_chars >
-    * 300) pooled vs lang-stratified — the confounded-readout gate every
-    * segmented comparison needs before shipping. */
-  private def q_simpsons(s: SparkSession, d: String): DataFrame =
-    Stats.simpsonsCheck(
-      Tables.documents(s, d).withColumn("is_long", col("n_chars") > 300),
-      "source", "lang", "is_long", "src0", "src1")
-
-  /** §2b Heaps'-law vocabulary growth: cumulative (tokens, vocab) over 10
-    * hash-nested corpus prefixes + the log-log OLS exponent — the vocab
-    * budget planner. */
-  private def q_heaps_law(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.heapsLaw(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b Flesch reading-ease readability: word/sentence/syllable counts
-    * and the classic score per document — map-side syntactic-density
-    * quality signal. */
-  private def q_readability(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.readabilitySignals(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b PSI drift readout: language-distribution stability of source
-    * src0 (reference) vs the rest of the corpus (current), Laplace-
-    * smoothed so one-sided bins stay finite. */
-  private def q_psi(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    Stats.psi(docs.filter(col("source") === "src0"),
-      docs.filter(col("source") =!= "src0"), "lang")
-  }
-
-  /** §2b windowed drift monitor (batch twin of the streaming
-    * composition): per 1-day tumbling window, JSD of the event-type mix
-    * vs the corpus-wide reference distribution
-    * ([[streaming.EventStreams.windowDrift]] over
-    * [[streaming.EventStreams.tumblingCounts]]-shaped counts). */
-  private def q_drift_monitor(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val counts = ev
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"))
-    val tot = ev.agg(count(lit(1)).as("__t"))
-    val ref = ev.groupBy(col("event_type")).agg(count(lit(1)).as("__c"))
-      .crossJoin(broadcast(tot))
-      .select(col("event_type"),
-        (col("__c").cast("double") / col("__t")).as("p_ref"))
-    streaming.EventStreams.windowDrift(counts, ref)
-  }
-
-  /** §2b Jensen–Shannon drift readout over the same src0-vs-rest split as
-    * q_psi — bounded in [0, ln 2], so the alarm threshold transfers
-    * across corpora (PSI's doesn't). */
-  private def q_jsd_drift(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    Stats.jsDivergence(docs.filter(col("source") === "src0"),
-      docs.filter(col("source") =!= "src0"), "lang")
-  }
-
-  /** §2b χ² feature selection: the 5 most language-discriminative tokens
-    * per lang by document-level presence — the vocabulary a language-ID
-    * profile actually wants (raw frequency ranks filler words first). */
-  private def q_chi2_tokens(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.chiSquaredTokens(Tables.documents(s, d),
-      "doc_id", "text", "lang", topK = 5)
-
-  /** §2b per-label embedding moments: mean/variance per dimension — the
-    * class-centroid + dead-dimension monitor over the embeddings table. */
-  private def q_vector_moments(s: SparkSession, d: String): DataFrame =
-    Stats.vectorMoments(Tables.embeddings(s, d), "label", "embedding")
-
-  /** §2b DP-style released aggregate: per-source document counts with
-    * deterministic inverse-CDF Laplace noise (sensitivity-1 count, ε=1) —
-    * one hash agg, noise as a post-aggregate map-side expression. */
-  private def q_dp_counts(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.noisyCounts(Tables.documents(s, d), "source",
-      epsilon = 1.0, salt = "dp")
-
-  /** §2b profile drift: the pre-1998 orders snapshot vs the full table —
-    * null-rate delta, distinct-count ratio, min/max movement per column;
-    * two single-pass 1-row aggregates + a #columns join. */
-  private def q_profile_drift(s: SparkSession, d: String): DataFrame = {
-    val all = Tables.orders(s, d)
-    val old = all.filter(col("o_orderdate") < lit("1998-01-01 00:00:00"))
-    ColumnHygiene.profileDrift(old, all,
-        Seq("o_orderstatus", "o_custkey", "o_totalprice"))
-      .withColumnRenamed("column", "col_name")
-  }
-
-  /** FLAGSHIP §2b composition — the end-to-end corpus-curation pipeline
-    * as ONE dataflow: quality gate (hashed linear classifier) → exact-dup
-    * survivorship (longest copy wins) → deterministic train/val split →
-    * fixed-size token chunking. Every stage is an already-oracle-checked
-    * operator; this query pins that they COMPOSE (filters stay pushed
-    * through the semi-joins, the split assignment is stable under the
-    * upstream dedup, chunk ids survive the final join). The lazy plan
-    * fuses the whole chain: the documents scan happens once per aggregate
-    * consumer, nothing materializes between stages. */
-  private def q_curation_pipeline(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val kept = docs.join(
-      TextAnalytics.hashedLinearScore(docs, "doc_id", "text",
-          classifierWeights, classifierBias)
-        .filter(col("keep")).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val survivors = Dedup.keepBestCopy(kept, "doc_id", "text", "n_chars")
-      .select(col("keep_id").as("doc_id"))
-    val deduped = kept.join(survivors, Seq("doc_id"), "left_semi")
-    val split = Corpus.hashSplit(deduped, "doc_id",
-      Seq("train" -> 90, "val" -> 100))
-    Corpus.tokenChunks(split, "doc_id", "text", chunkSize = 32, stride = 32)
-      .join(split.select(col("doc_id"), col("split")), Seq("doc_id"))
-      .select(col("doc_id"), col("split"), col("chunk_id"),
-        col("n_chunk_tokens"), col("chunk_text"))
-  }
-
-  /** §2b time-decay multi-touch attribution: each purchase's credit split
-    * over the user's click/view touches in a 4-hour lookback, halving per
-    * elapsed hour (stepped dyadic decay → exact credits); equi-join on
-    * user + range post-filter + one per-conversion window sum. */
-  private def q_attribution(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.timeDecayAttribution(Tables.events(s, d),
-      "user_id", "ts", "event_type", convType = "purchase",
-      touchTypes = Seq("click", "view"),
-      lookbackMinutes = 240, halfLifeMinutes = 60)
-
-  /** FLAGSHIP §2b composition — the per-source corpus report card: doc
-    * and token volume, language breadth, exact-dup rate (via the dedup
-    * fingerprint) and mean classifier quality, in ONE aggregate over the
-    * corpus plus one over the scored frame. The dataset-card /
-    * ingest-dashboard query a curation team watches per source; dyadic
-    * classifier logits keep mean quality exact cross-engine. */
-  private def q_corpus_report(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val base = docs.groupBy(col("source")).agg(
-      count(lit(1)).as("n_docs"),
-      sum(TextFunctions.tokenCount(col("text")).cast("long")).as("n_tokens"),
-      countDistinct(TextFunctions.fingerprint(col("text"))).as("__uniq"),
-      countDistinct(col("lang")).as("n_langs"))
-    val quality = TextAnalytics.hashedLinearScore(docs, "doc_id", "text",
-        classifierWeights, classifierBias)
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .groupBy(col("source"))
-      .agg(round(avg(col("logit")), 6).as("mean_quality"))
-    base.join(quality, Seq("source"))
-      .select(col("source"), col("n_docs"), col("n_tokens"), col("n_langs"),
-        round((col("n_docs") - col("__uniq")) / col("n_docs"), 6)
-          .as("dup_rate"),
-        col("mean_quality"))
-  }
-
-  /** §2b interpolated (Jelinek–Mercer) bigram LM: λ=0.75 mix of the
-    * conditional bigram MLE and the unigram distribution — the smoothing
-    * step above q_bigram_loglik's add-one on the LM-quality ladder. */
-  private def q_interp_loglik(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.interpolatedLogLik(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b PII density metrics: per-doc URL/email/phone counts + per-kchar
-    * rate over a varied synthetic injection (email every 3rd doc, phone
-    * every 5th, URL every 7th — counts actually vary) — the
-    * which-sources-need-scrubbing readout next to q_pii_mask's scrub. */
-  private def q_pii_density(s: SparkSession, d: String): DataFrame = {
-    val synth = concat(col("text"),
-      when(col("doc_id") % 3 === 0, concat(lit(" user"),
-        col("doc_id").cast("string"), lit("@example.com"))).otherwise(lit("")),
-      when(col("doc_id") % 5 === 0, lit(" call +1 (555) 010-0000"))
-        .otherwise(lit("")),
-      when(col("doc_id") % 7 === 0, concat(lit(" https://ex.example/d/"),
-        col("doc_id").cast("string"))).otherwise(lit("")))
-    val counts = TextFunctions.piiCounts(synth)
-    val total = counts.map(_._2).reduceLeft(_ + _)
-    Tables.documents(s, d).select(
-      col("doc_id") +: counts.map { case (n, c) => c.as(n) } :+
-        round(when(length(synth) > 0, total * 1000.0 / length(synth))
-          .otherwise(0.0), 6).as("pii_per_kchar"): _*)
-  }
-
-  /** §2b mutual-information feature selection: the information-theoretic
-    * sibling of q_chi2_tokens over the same presence contingency — the 5
-    * highest-MI tokens per language. */
-  private def q_mi_tokens(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.mutualInfoTokens(Tables.documents(s, d),
-      "doc_id", "text", "lang", topK = 5)
-
-  /** §2b behavior motifs: top-20 length-3 event-type sequences — the
-    * n=3 generalization of q_transitions; one lag-chain window + one
-    * hash aggregate over the bounded type³ space. */
-  private def q_event_seqs(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.eventSequences(Tables.events(s, d),
-      "user_id", "ts", "event_id", "event_type", n = 3, topK = 20)
-
-  /** §2b sample-ratio-mismatch guardrail: χ² goodness of fit of the
-    * click/view traffic split vs 50/50 — run before q_welch_ttest's
-    * readout, not after. */
-  private def q_srm_check(s: SparkSession, d: String): DataFrame =
-    Stats.sampleRatioCheck(Tables.events(s, d), "event_type",
-      armA = "click", armB = "view")
-
-  /** §2b permutation-invariant fingerprint: md5 of each document's
-    * sorted token bag — the second exact-dedup key, catching reordered
-    * duplicates the character-normalized fingerprint misses. Value-
-    * checked per doc (the synthetic docs contain no true permutation
-    * pairs, so the md5 values themselves are the check). */
-  private def q_bag_fingerprint(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      TextFunctions.bagFingerprint(col("text")).as("bag_fp"))
-
-  /** §2b source-level similarity matrix: distinct BIGRAM vocabularies
-    * per source, pairwise Jaccard via the same inverted-index join the
-    * document dedup uses — which sources draw from the same well. */
-  private def q_source_similarity(s: SparkSession, d: String): DataFrame = {
-    val sets = Tables.documents(s, d)
-      .select(col("source"),
-        explode(TextFunctions.shinglesOf(
-          TextFunctions.tokens(col("text")), 2)).as("token"))
-      .distinct()
-    Dedup.jaccardPairsFrom(sets, "source", threshold = 0.5)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-  }
-
-  /** §2b functional-dependency audit: does l_partkey determine
-    * l_suppkey? Every violation row is a part supplied by several
-    * suppliers — the key-trust check before a "by part" dedup/lookup. */
-  private def q_fd_violations(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.fdViolations(Tables.lineitem(s, d),
-      Seq("l_partkey"), "l_suppkey")
-
-  /** §2b debounce: collapse consecutive same-type events per user — one
-    * lag window keyed on user, (ts, event_id)-ordered. */
-  private def q_debounce(s: SparkSession, d: String): DataFrame =
-    Relational.debounce(Tables.events(s, d), "user_id", "ts", "event_id",
-        "event_type")
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-
-  /** §2b personalized PageRank (3 rounds): teleport mass pinned to the
-    * five s0–s4 supplier seeds — proximity-to-seeds ordering over the
-    * same part↔supplier graph as q_pagerank. */
-  private def q_ppr(s: SparkSession, d: String): DataFrame = {
-    val ps = partSupplierPairsLong(s, d)
-    val edges = ps.unionByName(
-      ps.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = Tables.lineitem(s, d).filter(col("l_suppkey") < 5)
-      .select(col("l_suppkey")).distinct()
-      .select((col("l_suppkey") * 2 + 1).as("id"))
-    Graph.personalizedPageRank(edges, seeds, 3)
-      .select(decodeGraphId(col("id")).as("id"),
-        round(col("rank"), 9).as("rank"))
-  }
-
-  /** §2b Kolmogorov–Smirnov distribution shift: click vs purchase event
-    * values — max ECDF gap from one hash aggregate + a distinct-value-
-    * sized cumulative window. */
-  private def q_ks_statistic(s: SparkSession, d: String): DataFrame =
-    Stats.ksStatistic(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b language-ID confusion matrix: declared label vs the n-gram
-    * profile guess — the eval readout over q_lang_ngram's classifier;
-    * one extra hash aggregate. */
-  private def q_langid_confusion(s: SparkSession, d: String): DataFrame =
-    q_lang_ngram(s, d).groupBy(col("declared_lang"), col("lang_guess"))
-      .agg(count(lit(1)).as("n"))
-
-  /** §2b dedup-blocking quality eval: MinHash-LSH candidates (16 hashes,
-    * 4×4 bands) scored against exact Jaccard≥0.7 ground truth on the
-    * same docs — precision/recall in one row; both are strictly inside
-    * (0,1) on this fixture, so the check is non-vacuous. */
-  private def q_lsh_dedup_eval(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
-    // multi-consumer rule: each frame feeds its own count AND the hits
-    // semi-join — cache or the signature/shingle pipelines (and their
-    // codegen) run twice apiece; both frames are ≤ |pairs(40 docs)| rows
-    val cands = Dedup.minHashLshCandidates(
-      Dedup.minHashSignatures(docs, "doc_id", "text", 16),
-      "doc_id", bands = 4, rowsPerBand = 4).cache()
-    val truth = Dedup.jaccardPairs(docs, "doc_id", "text", 0.7)
-      .select(col("id_a"), col("id_b")).cache()
-    val hits = cands.join(truth, Seq("id_a", "id_b"), "left_semi")
-    cands.agg(count(lit(1)).as("n_candidates"))
-      .crossJoin(truth.agg(count(lit(1)).as("n_true_pairs")))
-      .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-      .select(col("n_candidates"), col("n_true_pairs"), col("n_hits"),
-        round(when(col("n_candidates") > 0,
-          col("n_hits") / col("n_candidates")), 6).as("precision"),
-        round(when(col("n_true_pairs") > 0,
-          col("n_hits") / col("n_true_pairs")), 6).as("recall"))
-  }
-
-  /** §2b pairs-free class cohesion: mean intra-label pairwise cosine via
-    * the ‖Σu‖²−n identity — two aggregates, the pair count never appears
-    * in the plan; the embedding-collapse monitor. */
-  private def q_class_cohesion(s: SparkSession, d: String): DataFrame =
-    Similarity.intraClassCohesion(Tables.embeddings(s, d),
-      "label", "embedding")
-
-  /** §2b Welch two-sample t-test: click vs view event values per market
-    * segment — the A/B readout as one (group, arm) hash aggregate + a
-    * two-arm self-join; no equal-variance assumption. */
-  private def q_welch_ttest(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d).join(Tables.customer(s, d),
-      col("user_id") === col("c_custkey"))
-    Stats.welchTTest(e, "c_mktsegment", "event_type", "value",
-      armA = "click", armB = "view")
-  }
-
-  /** §2b record-linkage scoring: the q_sorted_neighborhood blocker's
-    * candidates scored as 0.5·token-jaccard(text) + 0.3·lev-sim(text) +
-    * 0.2·exact(source) — blocker proposes, comparator disposes; cost ∝
-    * candidate pairs, never n². */
-  private def q_er_score(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    val cands = Dedup.sortedNeighborhoodPairs(docs, "doc_id", "text", "lang", 3)
-    Dedup.matchScore(cands, docs, "doc_id",
-      Seq(("text", "jaccard", 0.5), ("text", "lev", 0.3),
-        ("source", "exact", 0.2)),
-      threshold = 0.45)
-  }
-
-  /** Shared scored frame for the two threshold-metric evals (q_auc,
-    * q_pr_auc): the stopword-ratio "englishness" score vs the declared
-    * lang='en' label — ONE definition so the two metrics can never drift
-    * onto different scores. */
-  private def enScored(s: SparkSession, d: String): DataFrame = {
-    val n = size(TextFunctions.tokens(col("text"))).cast("double")
-    Tables.documents(s, d).select(
-      when(n > 0, TextFunctions.stopwordCount(col("text")).cast("double") / n)
-        .otherwise(0.0).as("en_score"),
-      (col("lang") === "en").as("is_en"))
-  }
-
-  /** §2b ROC-AUC eval: the stopword-ratio "englishness" score ranked
-    * against the declared lang='en' label — Mann–Whitney midrank AUC as
-    * per-distinct-score aggregates + one bounded cumulative window; the
-    * threshold-free quality-filter readout. */
-  private def q_auc(s: SparkSession, d: String): DataFrame =
-    Stats.rocAuc(enScored(s, d), "en_score", "is_en")
-
-  /** §2b calibration eval: reliability bins of the quality-score blend
-    * against lang='en' — does a score of 0.8 actually mean 80%? One hash
-    * aggregate on the bin id, the readout any downstream threshold
-    * consumes. */
-  private def q_calibration(s: SparkSession, d: String): DataFrame =
-    Stats.calibrationBins(
-      Tables.documents(s, d).select(
-        round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
-        (col("lang") === "en").as("is_en")),
-      "quality", "is_en", bins = 10)
-
-  /** §2b Cohen's kappa: chance-corrected agreement between the stopword
-    * lang-ID guess and the declared label — the one-number upgrade over
-    * raw accuracy when classes are imbalanced (guessing the majority
-    * class scores high p_o but κ≈0). */
-  private def q_kappa(s: SparkSession, d: String): DataFrame =
-    Stats.cohenKappa(q_lang_id(s, d), "declared_lang", "lang_guess")
-
-  /** §2b join cardinality pre-flight: System-R independence estimate vs
-    * the exact histogram count for lineitem⋈orders — computed from
-    * per-key counts (one row per distinct key), never by running the
-    * join. */
-  private def q_join_card(s: SparkSession, d: String): DataFrame =
-    Joins.joinCardEstimate(Tables.lineitem(s, d), "l_orderkey",
-      Tables.orders(s, d), "o_orderkey")
-
-  /** §2b Poisson-bootstrap uncertainty: 32 deterministic resamples of
-    * per-doc n_chars — the spread of boot_mean across replicates IS the
-    * sampling distribution of the corpus mean (quantile it for a CI);
-    * map-side fan-out into one aggregate, no RNG, no second pass. */
-  private def q_bootstrap(s: SparkSession, d: String): DataFrame =
-    Corpus.bootstrapMeans(Tables.documents(s, d), "doc_id", "n_chars")
-
-  /** §2b EWMA smoothing: α=1/2 with a 16-row memory over each user's
-    * event values — dyadic weights keep every term exact; one bounded
-    * window pass per entity. */
-  private def q_ewma(s: SparkSession, d: String): DataFrame =
-    TimeSeries.ewmaHalving(Tables.events(s, d), "user_id", "ts",
-        "event_id", "value")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"),
-        col("ewma"))
-
-  /** §2b incremental aggregate maintenance (IVM): per-status order
-    * count/cents state folded forward from a CDC delta (the %7 slice
-    * arrives as inserts, the %11 slice of the base retires as deletes) —
-    * must equal the full recompute the oracle runs, at work ∝ |delta|.
-    * Cents (exact longs) rather than float dollars so the incremental
-    * and recomputed sums agree bit-for-bit. */
-  private def q_delta_agg(s: SparkSession, d: String): DataFrame = {
-    val orders = Tables.orders(s, d).select(col("o_orderkey"),
-      col("o_orderstatus"),
-      round(col("o_totalprice") * 100).cast("long").as("__cents"))
-    val base = orders.filter(col("o_orderkey") % 7 =!= 0)
-    val baseAgg = base.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("cnt"), sum(col("__cents")).as("sum_val"))
-    val inserts = orders.filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderstatus"), lit("I").as("op"), col("__cents"))
-    val deletes = base.filter(col("o_orderkey") % 11 === 0)
-      .select(col("o_orderstatus"), lit("D").as("op"), col("__cents"))
-    Joins.maintainAgg(baseAgg, inserts.unionByName(deletes),
-        "o_orderstatus", "__cents")
-      .select(col("o_orderstatus"), col("cnt"),
-        col("sum_val").as("sum_cents"))
-  }
-
-  /** §2b Gini vocabulary concentration per lang — the bounded diversity
-    * dial next to Zipf slope and token entropy; rank window over the
-    * vocabulary only, integer arithmetic to the final division. */
-  private def q_gini(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.giniConcentration(Tables.documents(s, d), "lang", "text")
-
-  /** §2b CUPED variance reduction: per-user pre/post value sums split at
-    * 2024-01-15, deterministic md5 arm assignment, pooled θ — the A/B
-    * readout that shrinks the CI for free; aggregates only. */
-  private def q_cuped(s: SparkSession, d: String): DataFrame = {
-    val split = lit("2024-01-15").cast("timestamp")
-    val units = Tables.events(s, d).groupBy(col("user_id"))
-      .agg(
-        coalesce(sum(when(col("ts") < split, col("value"))), lit(0.0))
-          .as("x_pre"),
-        coalesce(sum(when(col("ts") >= split, col("value"))), lit(0.0))
-          .as("y"))
-      .withColumn("arm",
-        when(Corpus.hashPct(col("user_id")) < 50, "a").otherwise("b"))
-    Stats.cupedAdjusted(units, "arm", "x_pre", "y")
-  }
-
-  /** §2b PR-AUC (average precision): the rare-positive companion to
-    * q_auc over the SAME [[enScored]] frame — per-distinct-score
-    * collapse, one descending cumulative window, one reduce. */
-  private def q_pr_auc(s: SparkSession, d: String): DataFrame =
-    Stats.averagePrecision(enScored(s, d), "en_score", "is_en")
-
-  /** §2b k-core backbone: the 4-core of the hash-thinned (7%) part
-    * co-purchase graph. Thinning mirrors production sparsification of a
-    * dense co-occurrence graph — and gives the fixture REAL peel depth
-    * (2-4 data-dependent rounds at every SF, simulated up front), so the
-    * fixpoint loop is exercised, not vacuous. The oracle unrolls 8 peel
-    * rounds: sound for any true depth ≤ 8 because peeling is idempotent
-    * at the fixpoint. */
-  private def q_kcore(s: SparkSession, d: String): DataFrame = {
-    // fan the unsplittable scan out on the join key BEFORE the pair
-    // build: the self-join's wedge expansion + distinct partial is the
-    // query's CPU (a 3.6 s single-threaded stage at sf0.1, r15 probe),
-    // and one co-partitioned exchange serves BOTH join sides
-    val li = graft.operators.FanOut.widen(
-      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
-      col("l_orderkey"))
-    val pp = li.as("a")
-      .join(li.as("b"), col("a.l_orderkey") === col("b.l_orderkey")
-        && col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("x"), col("b.l_partkey").as("y"))
-      .distinct()
-      .filter(Corpus.hashUnit(concat(col("x").cast("string"), lit(":"),
-        col("y").cast("string")), "kcore") < 0.07)
-    val edges = pp.select(col("x").as("src"), col("y").as("dst"))
-      .unionByName(pp.select(col("y").as("src"), col("x").as("dst")))
-    Graph.kCore(edges, 4)
-  }
-
-  /** Shared DuckDB CTE for the int8 quantizer (codes from the UNROUNDED
-    * scale, rounded scale in the output) — ONE definition feeding both
-    * int8 oracles so the quantizer contract cannot drift between them
-    * (the Spark side is likewise shared via Similarity.quantizeInt8). */
-  private val int8QuantCteSql: String =
-    """v AS MATERIALIZED (
-                 SELECT vec_id, round(scale, 6) AS scale,
-                        CASE WHEN scale > 0
-                          THEN list_transform(e,
-                            x -> CAST(round(x / scale) AS INTEGER))
-                          ELSE list_transform(e, x -> 0) END AS codes
-                 FROM (SELECT vec_id, e,
-                         list_max(list_transform(e, x -> abs(x))) / 127.0
-                           AS scale
-                       FROM (SELECT vec_id,
-                               list_transform(embedding,
-                                 x -> CAST(x AS DOUBLE)) AS e
-                             FROM embeddings)))"""
-
-  /** DuckDB oracle for [[q_kcore]]: `rounds` unrolled peel rounds over
-    * the same thinned edge set — each round is one degree aggregate +
-    * an induced-subgraph join, and rounds past the fixpoint are no-ops.
-    * Every CTE is MATERIALIZED: each e/n level is referenced twice, and
-    * DuckDB's default inlining would otherwise expand the chain to 2^R
-    * copies of the base join (measured: minutes instead of
-    * milliseconds). */
-  private def kCoreOracleSql(k: Int, rounds: Int): String = {
-    val base =
-      s"""pp AS MATERIALIZED (
-                 SELECT DISTINCT a.l_partkey AS x, b.l_partkey AS y
-                 FROM lineitem a JOIN lineitem b
-                   ON a.l_orderkey = b.l_orderkey
-                  AND a.l_partkey < b.l_partkey),
-          th AS MATERIALIZED (
-                 SELECT x, y FROM pp
-                 WHERE CAST(('0x' || substring(md5('kcore:'
-                     || CAST(x AS VARCHAR) || ':' || CAST(y AS VARCHAR)),
-                     1, 8)) AS BIGINT) / 4294967296.0 < 0.07),
-          e0 AS MATERIALIZED (
-                 SELECT x AS src, y AS dst FROM th
-                 UNION SELECT y, x FROM th)"""
-    val peel = (1 to rounds).map { i =>
-      s"""n$i AS MATERIALIZED (
-                  SELECT src AS id, count(*) AS degree FROM e${i - 1}
-                  GROUP BY src HAVING count(*) >= $k),
-          e$i AS MATERIALIZED (
-                  SELECT e.src, e.dst FROM e${i - 1} e
-                  JOIN n$i a ON e.src = a.id
-                  JOIN n$i b ON e.dst = b.id)"""
-    }.mkString(",\n          ")
-    // self-checking: if the unroll did NOT reach the fixpoint (a deeper-
-    // peeling fixture or a changed thinning constant), emit a poison row
-    // no Spark run can produce — the compare then fails attributably to
-    // unroll depth, not to some phantom portability bug
-    s"WITH $base,\n          $peel\n" +
-      s"   SELECT id, CAST(degree AS BIGINT) AS degree FROM n$rounds\n" +
-      s"   UNION ALL\n" +
-      s"   SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)\n" +
-      s"   WHERE (SELECT count(*) FROM n$rounds)\n" +
-      s"      <> (SELECT count(*) FROM n${rounds - 1})"
-  }
-
-  /** §2b int8 embedding quantization: absmax scalar quantization of the
-    * embeddings table — pure map-side array projection (runs at read
-    * bandwidth at any scale); error columns are the acceptance readout.
-    * The raw array<int> `codes` column is projected to an md5 digest +
-    * length for the harness (the driver's pandas canonicalizer cannot
-    * sort raw arrays — round-6 red); the digest still pins every code
-    * byte-for-byte, and q_int8_topk / q_int8_recall exercise the raw
-    * codes end-to-end. */
-  private def q_quantize_int8(s: SparkSession, d: String): DataFrame =
-    Similarity.quantizeInt8(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("scale"),
-        md5(concat_ws(",", transform(col("codes"), c => c.cast("string"))))
-          .as("codes_md5"),
-        size(col("codes")).cast("long").as("dim"),
-        col("max_abs_err"), col("mse"))
-
-  /** §2b int8 MIPS top-k: inner-product search ON the quantized codes
-    * (integer MACs + one float multiply per row) against the vec_id=0
-    * query — the search path that justifies storing int8; map-side
-    * scoring + TakeOrdered, zero shuffle. */
-  private def q_int8_topk(s: SparkSession, d: String): DataFrame =
-    Similarity.int8TopK(Tables.embeddings(s, d), "vec_id", "embedding",
-      queryId = 0L, k = 10)
-
-  /** §2b 1-bit embedding quantization ([[Similarity.binarize]]): sign
-    * bits packed into two exact 32-bit words per 64-dim vector (32×
-    * smaller than float32 — the first-pass scan format), plus the set-bit
-    * density whose corpus mean ≈ dim/2 is the centered-embedding sanity
-    * readout. Pure map-side integer arithmetic — zero shuffle. */
-  private def q_binary_quantize(s: SparkSession, d: String): DataFrame =
-    Similarity.binarize(Tables.embeddings(s, d), "vec_id", "embedding", 64)
-      .select(col("vec_id"),
-        element_at(col("bits"), 1).as("w0"),
-        element_at(col("bits"), 2).as("w1"),
-        (bit_count(element_at(col("bits"), 1)) +
-          bit_count(element_at(col("bits"), 2))).cast("long").as("n_set"))
-
-  /** §2b binary-quantization retrieval ([[Similarity.hammingTopK]]):
-    * XOR+popcount Hamming scan over the packed bits (integer-exact,
-    * memory-bandwidth bound) keeps a 50-candidate pool, exact float dot
-    * rerank returns the top 10 — the two-stage loop that makes 1-bit
-    * storage competitive in recall. Map-side + TakeOrdered twice. */
-  private def q_hamming_topk(s: SparkSession, d: String): DataFrame =
-    Similarity.hammingTopK(Tables.embeddings(s, d), "vec_id", "embedding",
-      dim = 64, queryId = 0L, k = 10, rerankPool = 50)
-
-  /** §2b count-min sketch eval: 4×256 md5-bucketed sketch of the token
-    * stream, point estimates vs exact counts for the top-20 tokens —
-    * one-sided est ≥ truth guarantee, vocab-sized fan-out only. */
-  private def q_countmin(s: SparkSession, d: String): DataFrame =
-    Corpus.countMinEstimates(
-      Tables.documents(s, d)
-        .select(explode(TextFunctions.tokens(col("text"))).as("token")),
-      "token")
-
-  /** §2b hybrid-retrieval fusion: RRF merge of the BM25 lexical top-50
-    * and the embedding cosine top-50 over the shared id space — rank-only
-    * fusion over two bounded candidate lists. */
-  private def q_rrf(s: SparkSession, d: String): DataFrame = {
-    val bm = TextAnalytics.bm25(Tables.documents(s, d), "doc_id", "text",
-        Seq("data", "spark", "merge"), 50)
-      .select(col("doc_id"), row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id").asc))
-        .cast("long").as("rank"))
-    val emb = Tables.embeddings(s, d)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val cos = emb.crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSimilarity(col("embedding"), col("qv")),
-          6).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id").asc)
-      .limit(50)
-      .select(col("vec_id").as("doc_id"), row_number().over(
-        Window.orderBy(col("cosine_sim").desc, col("vec_id").asc))
-        .cast("long").as("rank"))
-    Similarity.rrfFuse(bm, cos, "doc_id")
-  }
-
-  /** §2b quantization-loss eval: recall@10 of the int8 MIPS ranking
-    * against the exact float inner-product ranking for the same query —
-    * the acceptance readout that decides whether 4× compression costs
-    * any retrieval quality on this corpus. */
-  private def q_int8_recall(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val exact = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(VectorFunctions.dotProduct(col("embedding"), col("qv")), 6)
-          .as("dot"))
-      .orderBy(col("dot").desc, col("vec_id").asc).limit(10)
-      .select(lit(0L).as("query_id"), col("vec_id"))
-    val approx = Similarity
-      .int8TopK(emb, "vec_id", "embedding", queryId = 0L, k = 10)
-      .select(lit(0L).as("query_id"), col("vec_id"))
-    Similarity.recallAtK(exact, approx, "query_id", "vec_id")
-  }
-
-  /** Shared JL plane matrix (16×64, deterministic xorshift seed 7) for
-    * [[q_jl_distortion]] — generated once so the Spark projection and
-    * the oracle's literal matrix are the same doubles. */
-  private val jlPlanes: Seq[Seq[Double]] = Similarity.hyperplanes(16, 64, 7L)
-  private val jlScale: Double = math.sqrt(3.0 / jlPlanes.length)
-
-  /** §2b Johnson–Lindenstrauss distortion audit: project 64→16 dims and
-    * report per-pair distance ratios over a bounded id range — the
-    * (1±ε) readout that licenses indexing the projected vectors instead
-    * of the wide ones. Projection is map-side with the plane matrix as
-    * literals; the pair join is the documented bounded-input oracle
-    * primitive. */
-  private def q_jl_distortion(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d).filter(col("vec_id") < 40)
-    val proj = Similarity.randomProject(emb, "vec_id", "embedding", jlPlanes)
-    val joined = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .join(proj, "vec_id")
-    val a = joined.select(col("vec_id").as("id_a"), col("v").as("va"),
-      col("proj").as("pa"))
-    val b = joined.select(col("vec_id").as("id_b"), col("v").as("vb"),
-      col("proj").as("pb"))
-    def dist(x: Column, y: Column) = sqrt(aggregate(
-      zip_with(x, y, (u, w) => (u - w) * (u - w)), lit(0.0),
-      (acc, t) => acc + t))
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(dist(col("va"), col("vb")), 6).as("dist_orig"),
-        round(dist(col("pa"), col("pb")), 6).as("dist_proj"),
-        round(when(dist(col("va"), col("vb")) > 0,
-          dist(col("pa"), col("pb")) / dist(col("va"), col("vb"))), 6)
-          .as("ratio"))
-  }
-
-  /** §2b DP noised mean: per-source mean n_chars clipped to [0, 2000]
-    * (clipping actually binds on this fixture — the release is
-    * non-vacuous), Laplace((hi−lo)/(n·ε)) noise, ε=1 — the numeric
-    * sibling of q_dp_counts. */
-  private def q_dp_mean(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.noisyMeans(Tables.documents(s, d), "source", "n_chars",
-      lo = 0.0, hi = 2000.0, epsilon = 1.0, salt = "dpm")
-
-  /** §2b exact-total proportional sample: a 100-doc slice apportioned
-    * across sources by largest remainder — Σ quota == budget exactly,
-    * same md5 survivor order as group_cap; the "build an exactly-N-doc
-    * eval set" op. */
-  private def q_quota_sample(s: SparkSession, d: String): DataFrame =
-    Corpus.quotaSample(Tables.documents(s, d), "source", "doc_id", 100L)
-      .select(col("doc_id"), col("source"))
-
-  /** §2b MMR diversified re-rank: top-20 cosine pool for query vec_id=0,
-    * greedily ordered by λ·relevance − (1−λ)·max-sim-to-selected (λ=0.7,
-    * k=10) — the redundancy-aware retrieval step. Oracle = unrolled
-    * MATERIALIZED greedy rounds over the same pool. */
-  private def q_mmr_rerank(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      .limit(1).collect().headOption
-      .getOrElse(sys.error(
-        s"q_mmr_rerank: embeddings at $d must contain query vector vec_id=0"))
-      .getSeq[Float](0).map(_.toDouble).toSeq
-    Similarity.mmrRerank(emb, "vec_id", "embedding", qv,
-      poolSize = 20, k = 10, lambda = 0.7)
-  }
-
-  /** §2b DSIR targeted selection: resample 50 docs whose hashed-token
-    * distribution is closest to the src0 domain (64 hashed buckets,
-    * Laplace-smoothed log-ratio scoring, deterministic Gumbel-top-k). */
-  private def q_dsir_select(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    TextAnalytics.dsirSelect(docs, docs.filter(col("source") === "src0"),
-      "doc_id", "text", buckets = 64, nSelect = 50)
-  }
-
-  /** §2b diversity coreset: greedy k-center (farthest-point) selection of 8
-    * maximally-spread exemplars from the embedding table; radius column =
-    * covering-distance bound at each pick. Oracle = 7 unrolled MATERIALIZED
-    * selection rounds. */
-  private def q_kcenter(s: SparkSession, d: String): DataFrame =
-    Similarity.kCenterSelect(Tables.embeddings(s, d), "vec_id", "embedding", 8)
-
-  /** §2b cross-corpus fuzzy decontamination: corpus docs near-duplicating a
-    * benchmark set. The benchmark is synthesized deterministically — every
-    * 50th doc with each 7th token dropped (a paraphrase-ish edit that
-    * defeats exact n-gram contamination) and ids offset by 1e6 — so true
-    * near-dup pairs exist by construction at every SF. MinHash(16)-LSH(4×4)
-    * candidates, exact-Jaccard re-rank ≥ 0.5. */
-  private def q_fuzzy_contamination(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val kept = filter(TextFunctions.tokens(col("text")),
-      (t: Column, i: Column) => (i + 1) % 7 =!= 0)
-    val bench = docs.filter(col("doc_id") % 50 === 3)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat_ws(" ", kept).as("text"))
-    Dedup.crossLshContamination(docs, bench, "doc_id", "text",
-      numHashes = 16, rowsPerBand = 4, threshold = 0.5)
-  }
-
-  /** §2b Unicode canonicalization (native codegen expressions): the corpus
-    * is ASCII, so decomposed accents are synthesized deterministically
-    * (e→e+U+0301, o→o+U+0308) on BOTH engines, then NFC-composed and
-    * accent-folded. n_raw > n_nfc for any doc containing e/o proves the
-    * normalization actually fired (non-vacuous); folded text must round-trip
-    * back to the original ASCII. */
-  private def q_unicode_norm(s: SparkSession, d: String): DataFrame = {
-    val dec = regexp_replace(regexp_replace(col("text"),
-      lit("e"), lit("e\u0301")), lit("o"), lit("o\u0308"))
-    Tables.documents(s, d).select(
-      col("doc_id"),
-      length(dec).as("n_raw"),
-      length(TextFunctions.normalizeUnicode(dec)).as("n_nfc"),
-      md5(TextFunctions.normalizeUnicode(dec)).as("nfc_md5"),
-      md5(TextFunctions.foldAccents(dec)).as("folded_md5"))
-  }
-
-  /** FLAGSHIP §3 composition — the reference's ENTIRE main.py dataflow as
-    * ONE oracle-checked query at sf scale, through the SAME [[Pipeline.run]]
-    * a reference user calls: nested-ticket scan → backfill (T6, `summary`
-    * is deliberately absent so the typed-null path fires; so is
-    * `requester.customField`, firing the unresolvable-dotted-path null of
-    * main.py:85-87) → dotted-path flatten/rename (T7, the reference's
-    * rename_map VERBATIM: tags_ticket, createdAt/updatedAt kept,
-    * autor_ticket/email_ticket, status_ticket2, campo_custom_ticket/2) →
-    * whitelist custom-field pivot off campo_custom_ticket + enrichment
-    * join (T8/T9, one non-whitelisted key proves the filter) → casts +
-    * constant overwrite (T10/T11) → full-outer chat merge with collision
-    * suffixing (T12 — `autor_ticket` exists on both sides) → key synthesis
-    * for chat-only rows (T13, deterministic generator) → audit stamp (T14,
-    * overwritten with a pinned timestamp so the oracle can match) → name
-    * sanitize + dup-column drop (T15/T17) → dedup-vs-destination (T16).
-    * Tickets are orders rows re-shaped into the reference's nested JSON
-    * layout; chats derive from customer with a ticketNumber that hits ~a
-    * quarter of tickets (both merge sides exercise their outer branch).
-    * The raw campo_custom_ticket payload column survives to the output as
-    * in df_ticket_filtro1; it is JSON-stringified at the end ONLY because
-    * the driver's canonicalizer cannot sort raw array cells. */
-  private def q_octadesk_e2e(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    val tickets = o.select(
-      concat(lit("T"), col("o_orderkey").cast("string")).as("id"),
-      col("o_orderkey").as("number"),
-      Relational.isoFormat(col("o_orderdate")).as("createdAt"),
-      Relational.isoFormat(col("o_orderdate")).as("updatedAt"),
-      concat(col("o_orderstatus"), lit(","), col("o_orderpriority")).as("tags"),
-      struct(col("o_orderstatus").as("name")).as("status"),
-      struct(col("o_orderpriority").as("name")).as("channel"),
-      struct(concat(lit("Clerk#"), (col("o_custkey") % 1000).cast("string")).as("name"),
-        concat(lit("clerk"), (col("o_custkey") % 1000).cast("string"),
-          lit("@example.com")).as("email")).as("requester"),
-      struct((col("o_custkey") % 10).as("id")).as("group"),
-      struct(struct(col("o_orderstatus").as("status")).as("propertiesChanges"))
-        .as("lastHumanInteraction"),
-      array(
-        struct(lit("n_do_pedido").as("key"),
-          col("o_orderkey").cast("string").as("value")),
-        struct(lit("produto").as("key"), col("o_orderpriority").as("value")),
-        struct(lit("nao_listado").as("key"), lit("drop me").as("value"))
-      ).as("customField"))
-    val chats = Tables.customer(s, d).select(
-      concat(lit("C"), col("c_custkey").cast("string")).as("chat_id"),
-      (col("c_custkey") * 4).cast("string").as("evt_ticket_ticketNumber"),
-      col("c_mktsegment").as("segmento"),
-      col("c_name").as("autor_ticket"))
-    val dest = o.filter(col("o_orderdate") < lit("1995-01-01").cast("timestamp"))
-      .select(col("o_orderkey").cast("string").as("n_ticket"))
-    Pipeline.run(tickets, chats, dest,
-        uuidGen = concat(lit("gen-"), col("n_ticket")))
-      .withColumn("campo_custom_ticket", to_json(col("campo_custom_ticket")))
-      .withColumn("upload", lit("2026-08-13 00:00:00").cast("timestamp"))
-  }
-
-  /** FLAGSHIP drift variant — the SAME [[Pipeline.run]] under schema
-    * evolution, the condition main.py actually runs in (live Octadesk
-    * payloads grow/lose fields between dailies): `updatedAt` is absent
-    * from the payload (T6 backfill fires ON A RENAME-MAP KEY, not just
-    * `summary`), the chat side carries an UNSEEN dynamic cf_* column with
-    * a name needing sanitation (`cf_segmento?novo` → cf_segmento_novo,
-    * T15 on never-seen-before input), and TWO chat columns that collide
-    * post-sanitize (`cf_n?mero_do_cliente` / `cf_n-mero_do_cliente` both
-    * → cf_n_mero_do_cliente) so T17's keep-first drop fires on a
-    * collision CREATED BY sanitation rather than present in the input —
-    * the exact failure mode of reference chat.py:21-31's regex rename.
-    * Oracle keeps the first (c_name) copy and the evolved null columns. */
-  private def q_octadesk_e2e_drift(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    val tickets = o.select(
-      concat(lit("T"), col("o_orderkey").cast("string")).as("id"),
-      col("o_orderkey").as("number"),
-      Relational.isoFormat(col("o_orderdate")).as("createdAt"),
-      concat(col("o_orderstatus"), lit(","), col("o_orderpriority")).as("tags"),
-      struct(col("o_orderstatus").as("name")).as("status"),
-      struct(col("o_orderpriority").as("name")).as("channel"),
-      struct(concat(lit("Clerk#"), (col("o_custkey") % 1000).cast("string")).as("name"),
-        concat(lit("clerk"), (col("o_custkey") % 1000).cast("string"),
-          lit("@example.com")).as("email")).as("requester"),
-      struct((col("o_custkey") % 10).as("id")).as("group"),
-      struct(struct(col("o_orderstatus").as("status")).as("propertiesChanges"))
-        .as("lastHumanInteraction"),
-      array(
-        struct(lit("n_do_pedido").as("key"),
-          col("o_orderkey").cast("string").as("value")),
-        struct(lit("produto").as("key"), col("o_orderpriority").as("value")),
-        struct(lit("nao_listado").as("key"), lit("drop me").as("value"))
-      ).as("customField"))
-    val chats = Tables.customer(s, d).select(
-      concat(lit("C"), col("c_custkey").cast("string")).as("chat_id"),
-      (col("c_custkey") * 4).cast("string").as("evt_ticket_ticketNumber"),
-      col("c_mktsegment").as("cf_segmento?novo"),
-      col("c_name").as("cf_n?mero_do_cliente"),
-      col("c_nationkey").cast("string").as("cf_n-mero_do_cliente"))
-    val dest = o.filter(col("o_orderdate") < lit("1995-01-01").cast("timestamp"))
-      .select(col("o_orderkey").cast("string").as("n_ticket"))
-    Pipeline.run(tickets, chats, dest,
-        uuidGen = concat(lit("gen-"), col("n_ticket")))
-      .withColumn("campo_custom_ticket", to_json(col("campo_custom_ticket")))
-      .withColumn("upload", lit("2026-08-13 00:00:00").cast("timestamp"))
-  }
-
-  /** §2b one-way ANOVA F: does mean event value differ across the five
-    * event types? k-arm generalization of the Welch pair test, with η²
-    * effect size — one class aggregate + a k-row reduce. */
-  private def q_anova(s: SparkSession, d: String): DataFrame =
-    Stats.anovaF(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Kruskal–Wallis H: the rank-based one-way ANOVA over the same
-    * five event-type populations — outlier/monotone-transform robust,
-    * ranks assigned per DISTINCT rounded value (never per row). */
-  private def q_kruskal_wallis(s: SparkSession, d: String): DataFrame =
-    Stats.kruskalWallis(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Mantel–Haenszel pooled odds ratio: click-vs-view conversion
-    * (value > 50) stratified by market segment — the report-instead
-    * estimate when q_simpsons flags stratum confounding; crude OR
-    * emitted beside OR_MH so the confounding gap is the readout. */
-  private def q_mantel_haenszel(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("click", "view"))
-      .join(Tables.customer(s, d), col("user_id") === col("c_custkey"))
-      .withColumn("converted", col("value") > lit(50.0))
-    Stats.mantelHaenszel(e, "c_mktsegment", "event_type", "click",
-      "converted")
-  }
-
-  /** §2b RFM segmentation: recency/frequency/monetary per user, scored
-    * 1..5 against broadcast population quantile cuts — map-side scoring,
-    * no global sort; the campaign-tooling cell code included. */
-  private def q_rfm(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.rfm(Tables.events(s, d), "user_id", "ts", "value")
-
-  /** §2b inter-arrival cadence fingerprint: per-user count/mean/median/
-    * max of consecutive-event second-gaps — the organic-vs-scripted
-    * traffic screen beside q_burstiness's daily dispersion. */
-  private def q_inter_arrival(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.interArrivalStats(Tables.events(s, d), "user_id",
-      "ts", "event_id")
-
-  /** §2b Markov stationary distribution (4 unrolled power-iteration
-    * rounds): where the event mix settles under today's transition
-    * dynamics, beside each type's raw empirical share — the
-    * accumulating-vs-draining readout per type. */
-  private def q_stationary_dist(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.stationaryDistribution(Tables.events(s, d), "user_id",
-      "ts", "event_id", "event_type", iters = 4)
-
-  /** §2b k-truss edge backbone: hash-thinned co-purchase graph peeled
-    * until every surviving edge closes ≥ 2 triangles within the
-    * survivor set (k = 4) — the edge-level community core one rung
-    * above q_kcore, with each edge's final within-truss support. */
-  private def q_ktruss(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-    val pp = li.as("a")
-      .join(li.as("b"), col("a.l_orderkey") === col("b.l_orderkey")
-        && col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("x"), col("b.l_partkey").as("y"))
-      .distinct()
-      .filter(Corpus.hashUnit(concat(col("x").cast("string"), lit(":"),
-        col("y").cast("string")), "ktruss") < 0.12)
-    Graph.kTruss(pp.select(col("x").as("src"), col("y").as("dst")), k = 4)
-  }
-
-  /** §2b Jaccard link prediction: size-normalized common-neighbor score
-    * for non-adjacent pairs of the near-dup shingle graph — the
-    * adamicAdar sibling where sharing MOST of a small neighborhood
-    * outranks sharing a sliver of two hubs. */
-  private def q_jaccard_link(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
-    Graph.jaccardLinkPrediction(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-      topN = 20)
-  }
-
-  /** §2b cross-correlation lead/lag scan: click vs purchase daily
-    * counts at every lead/lag in [−7, +7] — does click activity LEAD
-    * purchases, and by how many days (argmax lag)? */
-  private def q_ccf(s: SparkSession, d: String): DataFrame =
-    TimeSeries.crossCorrelation(Tables.events(s, d), "ts", "event_type",
-      typeA = "click", typeB = "purchase", maxLag = 7)
-
-  /** §2b seasonal-naive forecast baseline: MAE of yesterday-predicts-
-    * today vs last-week-predicts-today over the zero-filled daily
-    * series + their MASE-style ratio — the is-there-weekly-structure
-    * readout every forecast must beat. */
-  private def q_seasonal_naive(s: SparkSession, d: String): DataFrame =
-    TimeSeries.seasonalNaiveEval(Tables.events(s, d), "ts", period = 7)
-
-  /** §2b candidate-key discovery: exact uniqueness/null audit of four
-    * proposed key combos on orders in ONE aggregate pass — o_orderkey
-    * verifies as a real key, the others rank below it. */
-  private def q_key_candidates(s: SparkSession, d: String): DataFrame =
-    ColumnHygiene.keyCandidates(Tables.orders(s, d), Seq(
-      Seq("o_orderkey"), Seq("o_custkey"),
-      Seq("o_orderstatus", "o_orderpriority"),
-      Seq("o_custkey", "o_orderdate")))
-
-  /** §2b sketch-only audience overlap: distinct clickers ∩ viewers per
-    * market segment via HLL inclusion–exclusion, pinned against the
-    * exact counts with union-scaled acceptance booleans (the sketch
-    * stays sparse-exact at harness cardinalities; the bound is the
-    * production contract). */
-  private def q_distinct_intersection(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .join(Tables.customer(s, d), col("user_id") === col("c_custkey"))
-    val clicks = e.filter(col("event_type") === "click")
-    val views = e.filter(col("event_type") === "view")
-    val est = Corpus.distinctIntersection(clicks, views,
-      "c_mktsegment", "user_id")
-    val exactU = e.filter(col("event_type").isin("click", "view"))
-      .groupBy(col("c_mktsegment"))
-      .agg(countDistinct(col("user_id")).as("n_exact_union"))
-    val exactA = clicks.groupBy(col("c_mktsegment"))
-      .agg(countDistinct(col("user_id")).as("n_exact_click"))
-    val exactB = views.groupBy(col("c_mktsegment"))
-      .agg(countDistinct(col("user_id")).as("n_exact_view"))
-    val exactI = clicks.select(col("c_mktsegment"), col("user_id")).distinct()
-      .join(views.select(col("c_mktsegment"), col("user_id")).distinct(),
-        Seq("c_mktsegment", "user_id"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_exact_intersection"))
-    exactU
-      .join(exactA, Seq("c_mktsegment"), "left")
-      .join(exactB, Seq("c_mktsegment"), "left")
-      .join(exactI, Seq("c_mktsegment"), "left")
-      .join(est, Seq("c_mktsegment"))
-      .select(col("c_mktsegment"),
-        coalesce(col("n_exact_click"), lit(0L)).as("n_exact_click"),
-        coalesce(col("n_exact_view"), lit(0L)).as("n_exact_view"),
-        col("n_exact_union"),
-        coalesce(col("n_exact_intersection"), lit(0L))
-          .as("n_exact_intersection"),
-        (abs(col("est_union") - col("n_exact_union")).cast("double")
-          <= lit(0.02) * col("n_exact_union").cast("double") + lit(1.0))
-          .as("union_within_bound"),
-        (abs(col("est_intersection")
-            - coalesce(col("n_exact_intersection"), lit(0L))).cast("double")
-          <= lit(0.05) * col("n_exact_union").cast("double") + lit(1.0))
-          .as("intersection_within_bound"))
-  }
-
-  /** §2b tokenizer fertility per language: subwords-per-word and
-    * chars-per-subword under the LEARNED 8-round BPE tokenizer — which
-    * languages pay more tokens for the same text (the context-window /
-    * training-budget equity readout). */
-  private def q_tokenizer_fertility(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val rules = TextAnalytics.bpeTrainRules(docs, "text", rounds = 8)
-    val enc = TextAnalytics.bpeEncode(docs, "doc_id", "text", rules)
-    TextAnalytics.tokenizerFertility(
-      enc.join(docs.select(col("doc_id"), col("lang"), col("n_chars")),
-        Seq("doc_id")),
-      "lang")
-  }
-
-  /** §2b word-frequency spectrum per source: V_m types occurring
-    * exactly m ≤ 8 times + the hapax share — WHERE the vocabulary mass
-    * sits, the table Yule's K collapses to one number. */
-  private def q_freq_spectrum(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.frequencySpectrum(Tables.documents(s, d), "source",
-      "text", maxM = 8)
-
-  /** §2b Good–Turing re-estimation per source: discounted counts r*,
-    * the low-frequency discount ratio and the unseen-mass p₀ — how much
-    * of each source's vocabulary the crawl hasn't seen yet. */
-  private def q_good_turing(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.goodTuring(Tables.documents(s, d), "source", "text",
-      maxR = 5)
-
-  /** §2b Mann–Whitney U: significance + rank-biserial effect size for
-    * the stopword-score separation of English vs non-English docs — the
-    * z-test companion to q_auc on the same collapse. */
-  private def q_mann_whitney(s: SparkSession, d: String): DataFrame =
-    Stats.mannWhitney(enScored(s, d), "en_score", "is_en")
-
-  /** §2b Brown–Forsythe spread-equality test: ANOVA on absolute
-    * deviations from each event type's median value — the
-    * variance-equality gate before pooled tests, and the volatility
-    * monitor the mean contrast can't see. */
-  private def q_brown_forsythe(s: SparkSession, d: String): DataFrame =
-    Stats.brownForsythe(Tables.events(s, d), "event_type", "value")
-
-  /** §2b quantile treatment effects: click-vs-view per-segment value
-    * quantiles at p25/p50/p75/p90 and their differences — WHERE the
-    * distributions differ, not just whether (q_mann_whitney) or by how
-    * much on average (q_welch_ttest). */
-  private def q_qte(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .join(Tables.customer(s, d), col("user_id") === col("c_custkey"))
-    Stats.quantileTreatmentEffect(e, "c_mktsegment", "event_type",
-      "value", armA = "click", armB = "view")
-  }
-
-  /** §2b cumulative gains / lift curve: deciles of the stopword
-    * en-score vs share of English docs captured — "review the top k%,
-    * catch what fraction" — the operating-point companion to q_auc on
-    * the same collapse. */
-  private def q_gain_curve(s: SparkSession, d: String): DataFrame =
-    Stats.gainCurve(enScored(s, d), "en_score", "is_en")
-
-  /** §2b Cramér's V: the [0,1] effect size of the lang × source
-    * association — the magnitude readout beside q_chisq_indep's
-    * per-cell significance decomposition. */
-  private def q_cramers_v(s: SparkSession, d: String): DataFrame =
-    Stats.cramersV(Tables.documents(s, d), "lang", "source")
-
-  /** §2b conversion latency: per segment, view→purchase conversion
-    * rate plus p50/p90/mean first-touch→first-conversion seconds — the
-    * lag distribution funnel depth counts can't show. */
-  private def q_conversion_latency(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .join(Tables.customer(s, d), col("user_id") === col("c_custkey"))
-    EventAnalytics.conversionLatency(e, "c_mktsegment", "user_id", "ts",
-      fromType = "view", toType = "purchase")
-  }
-
-  /** §2b effective sample size: per nation, how many equally-weighted
-    * suppliers its lineitem volume is actually worth — Kish ESS over
-    * per-supplier item counts, the supplier-concentration readout. */
-  private def q_ess(s: SparkSession, d: String): DataFrame = {
-    val perSupp = Tables.lineitem(s, d)
-      .groupBy(col("l_suppkey")).agg(count(lit(1)).as("w"))
-      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
-    Corpus.effectiveSampleSize(perSupp, "s_nationkey", "w")
-  }
-
-  /** §2b pairwise source-distribution JSD matrix: which sources draw
-    * from the same language mix — jsDivergence lifted to all unordered
-    * source pairs, one-sided bins contributing their finite ½p·ln 2. */
-  private def q_jsd_matrix(s: SparkSession, d: String): DataFrame =
-    Stats.jsdMatrix(Tables.documents(s, d), "source", "lang")
-
-  /** §2b user-activity Gini: per segment, inequality of per-user event
-    * counts — whale/bot traffic concentration, the generic-weights
-    * sibling of q_gini's vocabulary readout (pairs with q_ess: Gini
-    * says how unequal, ESS says how many units effectively remain). */
-  private def q_user_gini(s: SparkSession, d: String): DataFrame = {
-    val perUser = Tables.events(s, d)
-      .join(Tables.customer(s, d), col("user_id") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-    Stats.giniIndex(perUser, "c_mktsegment", "user_id", "n_events")
-  }
-
-  /** §2b Wasserstein-1 drift magnitude between click and purchase value
-    * distributions — the mass×distance companion to q_ks_statistic over
-    * the SAME per-distinct-value histogram (KS flags the worst gap, W1
-    * ranks how much moved how far). */
-  private def q_wasserstein(s: SparkSession, d: String): DataFrame =
-    Stats.wasserstein1(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b Cliff's delta ordinal effect size for the same two-sample
-    * comparison — dominance probability on [−1,1], reported UNROUNDED
-    * (one exact-integer division; the rational-halves rule). */
-  private def q_cliffs_delta(s: SparkSession, d: String): DataFrame =
-    Stats.cliffsDelta(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b Chao1 unseen-vocabulary estimator per source over token
-    * TRIGRAMS (the unigram space saturates at sf0.1 — f1=f2=0 — which
-    * Chao1 truthfully reports as "fully crawled" but makes a vacuous
-    * fixture; the trigram space keeps live singleton/doubleton mass at
-    * every SF). Pairs with q_good_turing: GT = unseen MASS, Chao1 =
-    * unseen TYPES. */
-  private def q_chao1(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.chao1Richness(Tables.documents(s, d), "source", "text",
-      n = 3)
-
-  /** §2b RAKE keyword extraction: stopword-delimited phrase runs,
-    * degree/frequency word scores, top-20 phrases corpus-wide. The
-    * synthetic corpus's function words ('a', 'the') are the delimiter
-    * set. */
-  private def q_rake(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.rakeKeywords(Tables.documents(s, d), "doc_id", "text",
-      stopwords = Seq("a", "the"), k = 20)
-
-  /** §2b isotonic (PAV) calibration map over the q_calibration bins —
-    * the deployable monotone fit beside the raw reliability readout;
-    * minimax form, every value an exact-integer ratio, UNROUNDED. */
-  private def q_isotonic(s: SparkSession, d: String): DataFrame =
-    Stats.isotonicCalibration(
-      Tables.documents(s, d).select(
-        round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
-        (col("lang") === "en").as("is_en")),
-      "quality", "is_en", bins = 10)
-
-  /** §2b Cramér–von Mises L2 distribution shift for the same two-sample
-    * comparison — completes the shift trio (KS sup / W1 mass×distance /
-    * CvM pooled L2) over one shared histogram shape. */
-  private def q_cvm(s: SparkSession, d: String): DataFrame =
-    Stats.cramerVonMises(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b McNemar paired-rates test: declared 'en' vs the stopword
-    * lang-ID's 'en' verdict on the same docs — do the two labelers call
-    * 'en' at the same MARGINAL rate (only discordant docs carry
-    * evidence; the paired companion to q_kappa's agreement readout). */
-  private def q_mcnemar(s: SparkSession, d: String): DataFrame = {
-    val li = q_lang_id(s, d).filter(col("declared_lang").isNotNull)
-    Stats.mcnemar(
-      li.select((col("declared_lang") === "en").as("a_en"),
-        (col("lang_guess") === "en").as("b_en")),
-      "a_en", "b_en")
-  }
-
-  /** §2b Kendall τ-b concordance between bucketed document length in
-    * chars and in tokens — the tie-heavy rank-correlation companion to
-    * q_spearman, computed over the distinct-cell histogram (never an
-    * n² pair join). */
-  private def q_kendall_tau(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(
-      floor(col("n_chars") / 100).cast("long").as("len_bucket"),
-      floor(size(TextFunctions.tokens(col("text"))) / 10).cast("long")
-        .as("tok_bucket"))
-    Stats.kendallTauB(docs, "len_bucket", "tok_bucket")
-  }
-
-  /** §2b Pettitt rank change-point over the daily event counts — the
-    * distribution-free "where did the level shift" locator beside
-    * q_cusum's σ-tuned alarm. */
-  private def q_pettitt(s: SparkSession, d: String): DataFrame =
-    TimeSeries.pettittDaily(Tables.events(s, d), "ts")
-
-  /** §2b forecast-quality decomposition over the calibration fixture:
-    * row-exact Brier + Murphy reliability/resolution/uncertainty + ECE
-    * in one row — "how good is the quality score as an is-en
-    * probability, and why". */
-  private def q_ece(s: SparkSession, d: String): DataFrame =
-    Stats.forecastDecomposition(
-      Tables.documents(s, d).select(
-        round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
-        (col("lang") === "en").as("is_en")),
-      "quality", "is_en", bins = 10)
-
-  /** §2b Hurst exponent of the daily event-count series by R/S analysis
-    * (block sizes 5/10/15 over the 30-day grid) — long-memory /
-    * self-similarity beside q_autocorr's fixed lags and q_burstiness. */
-  private def q_hurst(s: SparkSession, d: String): DataFrame =
-    TimeSeries.hurstDaily(Tables.events(s, d), "ts",
-      blockSizes = Seq(5, 10, 15))
-
-  /** §2b Burrows' Delta stylometric source-pair matrix over the top-30
-    * corpus words — variance-normalized function-word style distance
-    * beside q_jsd_matrix's distributional overlap. */
-  private def q_burrows_delta(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.burrowsDelta(Tables.documents(s, d), "source", "text",
-      topM = 30)
-
-  /** §2b Yuen trimmed-mean test (20% trim) on the click-vs-purchase
-    * values — the heavy-tail-robust rung of the experimentation ladder
-    * beside Welch (mean), Mann–Whitney (rank) and QTE (quantile). */
-  private def q_yuen(s: SparkSession, d: String): DataFrame =
-    Stats.yuenTrimmedTest(Tables.events(s, d), "event_type", "value",
-      armA = "click", armB = "purchase", trimFrac = 0.2)
-
-  /** §2b DoReMi-style domain reweighting step over the sources: unigram
-    * cross-entropy excess → multiplicative weight update — the
-    * principled mixture move beside q_temperature_mix's hand exponent. */
-  private def q_doremi(s: SparkSession, d: String): DataFrame =
-    Corpus.domainReweight(Tables.documents(s, d), "source", "text",
-      eta = 1.0)
-
-  /** §2b TwoNN intrinsic-dimension estimate of the embedding column over
-    * the same bounded brute-force id range as q_embedding_pairs — the
-    * "how many dims does this space actually use" readout that prices
-    * the matryoshka/quantization trade. */
-  private def q_twonn(s: SparkSession, d: String): DataFrame =
-    Similarity.twoNN(Tables.embeddings(s, d).filter(col("vec_id") < 150),
-      "vec_id", "embedding")
-
-  /** §2b Schuster periodogram of the daily counts at candidate periods
-    * 7/10/15 over the 30-day grid — ranks candidate seasonalities by
-    * variance share beside q_autocorr's per-lag memory. */
-  private def q_periodogram(s: SparkSession, d: String): DataFrame =
-    TimeSeries.periodogramDaily(Tables.events(s, d), "ts",
-      periods = Seq(7, 10, 15))
-
-  /** §2b Ljung–Box portmanteau over daily counts at lags 1..7 — the
-    * joint "white noise at all?" gate (cumulative Q(h) ~ χ²_h) that
-    * calibrates how far the i.i.d.-assuming daily monitors can be
-    * trusted; biased global-mean ACF per the canonical form. */
-  private def q_ljung_box(s: SparkSession, d: String): DataFrame =
-    TimeSeries.ljungBoxDaily(Tables.events(s, d), "ts", maxLag = 7)
-
-  /** §2b two-sample energy distance between click and purchase value
-    * distributions — the squared-L2 (2∫(F−G)²dx) rung completing the
-    * p = ∞/1/2 drift profile beside q_ks_statistic and q_wasserstein,
-    * on the SAME per-distinct-value histogram shape. */
-  private def q_energy_dist(s: SparkSession, d: String): DataFrame =
-    Stats.energyDistance(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b Theil T inequality of document length across sources with the
-    * exact between/within decomposition — "few sources dominate" vs
-    * "each source lopsided", the rebalance-vs-dedup decider Gini can't
-    * give. */
-  private def q_theil(s: SparkSession, d: String): DataFrame =
-    Stats.theilDecomposition(Tables.documents(s, d), "source", "n_chars")
-
-  /** §2b Hill-number diversity profile (q=0,1,2 effective vocabulary +
-    * Pielou evenness) per source — the three-point diversity readout
-    * beside q_token_entropy's per-doc signal and q_zipf's slope. */
-  private def q_hill_diversity(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.hillDiversity(Tables.documents(s, d), "source", "text")
-
-  /** §2b Markov-chain entropy: per-state conditional next-type entropy,
-    * the chain entropy rate, zeroth-order marginal, and the
-    * predictability gain H₀−H — how much knowing the current event type
-    * tells you about the next (≈0 ⇒ memoryless, sequence features
-    * worthless). */
-  private def q_markov_entropy(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.markovEntropy(Tables.events(s, d),
-      "user_id", "ts", "event_id", "event_type")
-
-  /** §2b Wald SPRT daily trajectory testing H₀: purchase share = 0.18
-    * vs H₁: 0.22 at α=.05, β=.2 — the anytime-valid early-stopping
-    * monitor whose error rates hold at every boundary crossing (unlike
-    * daily peeks at a fixed-horizon z-test). */
-  private def q_sprt(s: SparkSession, d: String): DataFrame =
-    Stats.sprtDaily(Tables.events(s, d), "ts", "event_type",
-      successType = "purchase", p0 = 0.18, p1 = 0.22)
-
-  /** §2b empirical-Bayes beta–binomial shrinkage of per-user purchase
-    * rates — MoM Beta prior over unit rates, posterior-mean rates that
-    * stop 2-for-2 users outranking 950-for-1000 ones. */
-  private def q_eb_shrinkage(s: SparkSession, d: String): DataFrame =
-    Stats.ebBetaBinomial(Tables.events(s, d), "user_id",
-      col("event_type") === "purchase")
-
-  /** §2b Chapman capture–recapture estimate of the total user
-    * population from the two half-month observation windows — the
-    * coverage audit turning two distinct-counts + overlap into a "how
-    * many users exist that we never saw" estimate. */
-  private def q_capture_recapture(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.captureRecapture(Tables.events(s, d), "user_id", "ts",
-      splitTs = "2024-01-16 00:00:00")
-
-  /** §2b ARI + NMI between the lang and source partitions of the
-    * document corpus — permutation-invariant partition agreement (the
-    * measure for comparing cluster assignments that share no label
-    * names, e.g. LSH buckets vs exact dup clusters). */
-  private def q_cluster_agreement(s: SparkSession, d: String): DataFrame =
-    Stats.clusterAgreement(Tables.documents(s, d), "lang", "source")
-
-  /** §2b Anderson–Darling two-sample statistic for the same
-    * click-vs-purchase comparison — the tail-sensitive rung of the
-    * drift ladder (1/(Ĥ(1−Ĥ)) weighting diverges at both CDF ends),
-    * completing KS/W1/energy on the shared histogram shape. */
-  private def q_anderson_darling(s: SparkSession, d: String): DataFrame =
-    Stats.andersonDarling(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b Cochran–Armitage trend z for purchase share across the
-    * ordered hour-of-day scores — monotone-rate-drift power a plain
-    * independence χ² can't concentrate. */
-  private def q_cochran_armitage(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    Stats.cochranArmitage(ev.withColumn("hr", hour(col("ts"))), "hr",
-      col("event_type") === "purchase")
-  }
-
-  /** §2b Durbin–Watson lag-1 serial-correlation screen over the daily
-    * counts (≈2 independent, →0 persistent, →4 alternating) — the
-    * one-number companion to q_ljung_box's joint profile. */
-  private def q_durbin_watson(s: SparkSession, d: String): DataFrame =
-    TimeSeries.durbinWatsonDaily(Tables.events(s, d), "ts")
-
-  /** §2b GPD peaks-over-threshold tail fit of event values above 150 —
-    * MoM ξ/β + the extrapolated p99.9 return level; ξ > 0 flags a
-    * heavy tail that "mean + kσ" fences cannot bound. */
-  private def q_gpd_tail(s: SparkSession, d: String): DataFrame =
-    Stats.gpdTailFit(Tables.events(s, d), "value", threshold = 150.0,
-      p = 0.999)
-
-  /** §2b Wilson score intervals for the per-source share of English
-    * documents — the edge-honest binomial CI (a 2-for-2 source prints
-    * [0.34, 1.0], not "100%"), the column every rate table should
-    * carry. */
-  private def q_wilson(s: SparkSession, d: String): DataFrame =
-    Stats.wilsonInterval(Tables.documents(s, d), "source",
-      col("lang") === "en")
-
-  /** §2b conditional-binomial Poisson rate test between the two
-    * half-month windows (15-day exposures) — "did the event rate
-    * change", base rate conditioned away. */
-  private def q_poisson_rate(s: SparkSession, d: String): DataFrame =
-    Stats.poissonRateTest(Tables.events(s, d), "ts",
-      splitTs = "2024-01-16 00:00:00", t1 = 15.0, t2 = 15.0)
-
-  /** §2b Jarque–Bera normality screen of event values per type — the
-    * skew/kurtosis gate that routes each metric to the parametric or
-    * robust rung of the experimentation ladder. */
-  private def q_jarque_bera(s: SparkSession, d: String): DataFrame =
-    Stats.jarqueBera(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Jonckheere–Terpstra ordered-alternative test: does the event
-    * value distribution shift monotonically across the six 5-day
-    * buckets of the month — dose-response power Kruskal–Wallis
-    * diffuses; midrank ties + the Hollander–Wolfe tie-corrected
-    * variance. */
-  private def q_jonckheere(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .withColumn("bucket", floor((dayofmonth(col("ts")) - 1) / 5))
-    Stats.jonckheereTerpstra(ev, "bucket", "value")
-  }
-
-  /** §2b mixture-SPRT always-valid p for the purchase share vs p₀=0.2
-    * (τ=0.05 mixing) — the peeking-safe daily monitor: report p every
-    * day, stop at any crossing, validity holds by the running-min
-    * construction. */
-  private def q_msprt(s: SparkSession, d: String): DataFrame =
-    Stats.msprtDaily(Tables.events(s, d), "ts", "event_type",
-      successType = "purchase", p0 = 0.2, tau = 0.05)
-
-  /** §2b Wald–Wolfowitz runs test on the above/below-mean sign pattern
-    * of daily counts — the outlier-immune randomness screen (too few
-    * runs = regime persistence, too many = oscillation). */
-  private def q_runs_test(s: SparkSession, d: String): DataFrame =
-    TimeSeries.runsTestDaily(Tables.events(s, d), "ts")
-
-  /** §2b Friedman test (Conover tie-robust form) of event-type value
-    * levels BLOCKED by day — day-level shifts cancel inside each
-    * block, isolating the treatment contrast KW would drown. */
-  private def q_friedman(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.events(s, d)
-      .filter(col("value").isNotNull)
-      .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-      .agg(avg(col("value")).as("mean_value"))
-    Stats.friedmanTest(cells, "day", "event_type", "mean_value")
-  }
-
-  /** §2b Cohen's d + Hedges' g for click vs purchase values — the
-    * parametric magnitude column beside q_cliffs_delta's ordinal one;
-    * report an effect size with every p-value. */
-  private def q_effect_size(s: SparkSession, d: String): DataFrame =
-    Stats.effectSize(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b Page's L: does mean event value TREND upward across the four
-    * six-hour buckets, blocked by day — the ordered/blocked cell of the
-    * KW/JT/Friedman/Page 2×2. */
-  private def q_page_trend(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.events(s, d)
-      .filter(col("value").isNotNull)
-      .groupBy(date_trunc("day", col("ts")).as("day"),
-        floor(hour(col("ts")) / 6).as("slot"))
-      .agg(avg(col("value")).as("mean_value"))
-    Stats.pageTrendTest(cells, "day", "slot", "mean_value")
-  }
-
-  /** §2b Western Electric zone rules over the daily-count control
-    * chart — the pattern alarms (2-of-3 beyond 2σ, 4-of-5 beyond 1σ,
-    * 8 one side) that catch drifts a lone 3σ rule misses. */
-  private def q_control_rules(s: SparkSession, d: String): DataFrame =
-    TimeSeries.controlRulesDaily(Tables.events(s, d), "ts")
-
-  /** §2b Brunner–Munzel test for click vs purchase values — the
-    * heteroscedasticity-robust Mann–Whitney replacement (each sample's
-    * own placement variance + Welch–Satterthwaite df), folded from the
-    * same distinct-value histogram. */
-  private def q_brunner_munzel(s: SparkSession, d: String): DataFrame =
-    Stats.brunnerMunzel(Tables.events(s, d), "event_type", "value",
-      sideA = "click", sideB = "purchase")
-
-  /** §2b water-filling allocation of a 50% token budget across
-    * sources — max-min-fair hard-budget capping (every source below
-    * the level keeps all; giants cut to a common level), the budgeted
-    * companion to q_temperature_mix. */
-  private def q_water_fill(s: SparkSession, d: String): DataFrame =
-    Corpus.waterFill(Tables.documents(s, d), "source", col("n_chars"),
-      budgetFrac = 0.5)
-
-  /** §2b Dunn's post-hoc pairwise z after the KW omnibus, BH-adjusted
-    * over the event-type pair battery — WHICH groups differ, not just
-    * "some do"; A&S normal tails mirrored in the oracle. */
-  private def q_dunn(s: SparkSession, d: String): DataFrame =
-    Stats.dunnPostHoc(Tables.events(s, d), "event_type", "value")
-
-  /** §2b seasonal Mann–Kendall per event type: monotone drift with the
-    * weekly cycle stratified OUT (same-weekday pairs only) — plain MK
-    * floods on the Mon<Fri pulse; this only sees cross-week trend. */
-  private def q_seasonal_mk(s: SparkSession, d: String): DataFrame =
-    Stats.seasonalMannKendall(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b log-rank test: do signup-first users convert (terminal
-    * purchase) on a different survival curve than the rest — the
-    * KM companion that says whether the curve gap is real, risk-set
-    * weighted per event time. */
-  private def q_log_rank(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val perUser = ev.groupBy(col("user_id")).agg(
-      datediff(date_trunc("day", max(col("ts"))),
-        date_trunc("day", min(col("ts")))).cast("long").as("dur"),
-      (max(struct(col("ts"), col("event_id"), col("event_type")))
-        .getField("event_type") === "purchase").as("ev"),
-      when(min(struct(col("ts"), col("event_id"), col("event_type")))
-        .getField("event_type") === "signup", "signup_first")
-        .otherwise("other").as("grp"))
-    EventAnalytics.logRank(perUser, "grp", "dur", col("ev"),
-      sideA = "signup_first", sideB = "other")
-  }
-
-  /** §2b Wilcoxon signed-rank: per-user mean value, first half-month vs
-    * second — the paired pre/post rung (pairing nets out between-user
-    * variance that unpaired MW/Welch drown in). */
-  private def q_wilcoxon(s: SparkSession, d: String): DataFrame = {
-    val perUser = Tables.events(s, d).filter(col("value").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(avg(when(col("ts") < lit("2024-01-16 00:00:00")
-        .cast("timestamp"), col("value"))).as("x"),
-        avg(when(col("ts") >= lit("2024-01-16 00:00:00")
-          .cast("timestamp"), col("value"))).as("y"))
-    Stats.wilcoxonSignedRank(perUser, "x", "y")
-  }
-
-  /** §2b Cochran's Q over the users × event-type touch matrix — do the
-    * k types' reach rates differ once per-user propensity is blocked
-    * out; sparse fold, no dense grid. */
-  private def q_cochran_q(s: SparkSession, d: String): DataFrame =
-    Stats.cochranQ(Tables.events(s, d), "user_id", "event_type")
-
-  /** §2b Mood's median test of event values across types — the
-    * maximally-robust location screen (above/below the pooled median
-    * only), the blunt-but-outlier-proof rung beside KW. */
-  private def q_mood_median(s: SparkSession, d: String): DataFrame =
-    Stats.moodMedianTest(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Fleiss' kappa — each user's first 5 events read as 5 "ratings"
-    * of the user by event-type "category"; chance-corrected multi-rater
-    * agreement, the labeling-QA gate. Exact integer ratio, unrounded. */
-  /** Each user's first 5 events as 5 "ratings" of the user by the
-    * event-type "category" — the balanced-design frame the m-rater
-    * agreement statistics share. */
-  private def ratingsFirst5(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d)
-      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 5)
-  }
-
-  private def q_fleiss_kappa(s: SparkSession, d: String): DataFrame =
-    Agreement.fleissKappa(ratingsFirst5(s, d), "user_id", "event_type",
-      raters = 5)
-
-  /** §2b Gwet's AC1 on the same frame as q_fleiss_kappa — the
-    * prevalence-robust agreement twin (kappa-paradox guard); exact
-    * integer ratio, unrounded. */
-  private def q_gwet_ac1(s: SparkSession, d: String): DataFrame =
-    Agreement.gwetsAC1(ratingsFirst5(s, d), "user_id", "event_type",
-      raters = 5)
-
-  /** §2b ICC(1) of event values clustered by user — what share of value
-    * variance is between-user (the continuous-measurement reliability
-    * companion to the categorical agreement family). */
-  private def q_icc(s: SparkSession, d: String): DataFrame =
-    Stats.icc1(Tables.events(s, d), "user_id", "value")
-
-  /** §2b Bartlett's likelihood-ratio variance-homogeneity test across
-    * event types — the normal-theory rung beside q_levene's robust W. */
-  private def q_bartlett(s: SparkSession, d: String): DataFrame =
-    Stats.bartlettTest(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Dawid–Skene hard-EM (2 iterations) over the first-5 frame with
-    * pseudo-raters event_id mod 3 — confusion-weighted label aggregation
-    * that can override majority vote once a rater's reliability is
-    * learned; exact integer scoring end-to-end, so the argmax is
-    * bit-deterministic across engines and partition orders. */
-  private def q_dawid_skene(s: SparkSession, d: String): DataFrame = {
-    val rated = ratingsFirst5(s, d)
-      .select(col("user_id"), (col("event_id") % 3L).as("rater"),
-        col("event_type"), col("__rn"))
-    Agreement.dawidSkene(rated, "user_id", "rater", "event_type", "__rn",
-      iters = 2, maxRatings = 5)
-  }
-
-  /** §2b Krippendorff's nominal alpha over the full (user, event_type)
-    * rating table — the variable-raters-per-item agreement coefficient
-    * (users contribute however many events they have; <2 dropped). */
-  private def q_krippendorff(s: SparkSession, d: String): DataFrame =
-    Agreement.krippendorffAlpha(Tables.events(s, d), "user_id",
-      "event_type")
-
-  /** §2b Cronbach's alpha over the first-5 frame — each user's 5 rating
-    * slots read as a 5-item scale of the value measurement; the
-    * continuous internal-consistency rung beside q_icc (variance
-    * decomposition) and q_fleiss_kappa (categorical agreement). */
-  private def q_cronbach_alpha(s: SparkSession, d: String): DataFrame =
-    Agreement.cronbachAlpha(ratingsFirst5(s, d), "user_id", "__rn",
-      "value", items = 5)
-
-  /** §2b weighted Cohen's kappa — each user's even- vs odd-indexed
-    * event volumes capped to an ordinal 0..4 scale, read as two "raters"
-    * scoring the same subject: do the two halves agree beyond chance,
-    * with near-misses partially credited (quadratic κ_w ≈ ICC). Counts
-    * are integer-exact; both weight families emitted. */
-  private def q_weighted_kappa(s: SparkSession, d: String): DataFrame = {
-    val per = Tables.events(s, d).filter(col("user_id").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(least(sum(when(col("event_id") % 2 === 0, 1L).otherwise(0L)),
-        lit(4L)).as("even_vol"),
-        least(sum(when(col("event_id") % 2 === 1, 1L).otherwise(0L)),
-          lit(4L)).as("odd_vol"))
-    Stats.weightedKappa(per, "even_vol", "odd_vol")
-  }
-
-  /** §2b Pearson χ² independence test — event type × day-of-week index
-    * (calendar-anchored `datediff % 7`, engine-neutral): is the event
-    * mix independent of weekday. 5×7 grid ⇒ df = 24 (even), so the
-    * closed-form Poisson-sum p-value applies, unrolled identically in
-    * both engines. */
-  private def q_chi_square(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).filter(col("event_type").isNotNull)
-      .select(col("event_type"),
-        (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-          .cast("string").as("dow"))
-    Stats.chiSquareTest(ev, "event_type", "dow")
-  }
-
-  /** §2b G-test (likelihood-ratio χ²) on the SAME event-type × weekday
-    * grid as q_chi_square — the additive independence statistic
-    * (sub-tables sum to the total), sharing the even-df closed-form p. */
-  private def q_g_test(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).filter(col("event_type").isNotNull)
-      .select(col("event_type"),
-        (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-          .cast("string").as("dow"))
-    Stats.gTest(ev, "event_type", "dow")
-  }
-
-  /** §2b Benjamini–Yekutieli FDR over the SAME per-source KS battery as
-    * q_fdr_bh — the dependence-robust adjustment (these drift tests
-    * share the pooled rest-side, exactly the correlation BY tolerates
-    * and BH's PRDS assumption does not). */
-  private def q_fdr_by(s: SparkSession, d: String): DataFrame = {
-    val shifted = Tables.documents(s, d).withColumn("__v",
-      col("n_chars") + when(
-        col("source").isin("src0", "src1", "src2", "src3", "src4"),
-        lit(150L)).otherwise(lit(0L)))
-    val ks = Stats.groupKsDrift(shifted, "source", "__v")
-    val ne = col("n_group").cast("double") * col("n_rest").cast("double") /
-      (col("n_group") + col("n_rest")).cast("double")
-    val p = least(lit(1.0),
-      round(lit(2.0) * exp(lit(-2.0) * col("ks") * col("ks") * ne), 6))
-    Stats.byAdjust(ks.withColumn("p_value", p), "p_value", Seq("source"),
-      alpha = 0.05)
-  }
-
-  /** §2b Cochran–Mantel–Haenszel test — exposure = even event id,
-    * outcome = above-typical value, stratified by weekday: is the
-    * association significant AFTER the per-stratum adjustment (the
-    * significance rung beside q_mantel_haenszel's pooled OR and
-    * q_simpsons). */
-  private def q_cmh(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .filter(col("event_type").isNotNull && col("value").isNotNull)
-      .select(
-        (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-          .cast("string").as("dow"),
-        when(col("event_id") % 2 === 0, 1).otherwise(0).as("exposed"),
-        when(col("value") > 50.0, 1).otherwise(0).as("outcome"))
-    Stats.cmhTest(ev, "dow", "exposed", "outcome")
-  }
-
-  /** §2b Kendall's W — do the k event types "rank" the days of the
-    * window concordantly by daily volume; raters = types, items = days,
-    * value = the day's event count (integer, so ranks are cross-engine
-    * exact). */
-  private def q_kendall_w(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.events(s, d)
-      .filter(col("event_type").isNotNull && col("ts").isNotNull)
-      .groupBy(col("event_type").as("rater"),
-        to_date(col("ts")).as("item"))
-      .agg(count(lit(1)).cast("double").as("cnt"))
-    Agreement.kendallW(cells, "rater", "item", "cnt")
-  }
-
-  /** §2b Majority-vote label aggregation — collapse each user's events
-    * to the modal event type with support fraction; deterministic
-    * lexicographic tiebreak (the reproducible-corpus contract). */
-  private def q_majority_label(s: SparkSession, d: String): DataFrame =
-    Agreement.majorityLabel(Tables.events(s, d), "user_id", "event_type")
-
-  /** §2b Levene's test (mean-centered) of spread homogeneity across
-    * event types — the dispersion-drift alarm beside the ANOVA mean
-    * contrast. */
-  private def q_levene(s: SparkSession, d: String): DataFrame =
-    Stats.leveneTest(Tables.events(s, d), "event_type", "value")
-
-  /** §2b ordinal association: Goodman–Kruskal γ and Somers' D between
-    * weekday index and spend bucket — does later-in-week skew to
-    * bigger carts, with D_y|x charging y-ties against the weekday
-    * predictor. Exact pair masses from the bounded cell grid
-    * ([[Stats.gammaSomers]]); the calendar-anchored `datediff % 7`
-    * weekday is the engine-neutral ordinal (the q_chi_square anchor). */
-  private def q_gk_gamma(s: SparkSession, d: String): DataFrame =
-    Stats.gammaSomers(
-      Tables.events(s, d).select(
-        (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-          .cast("long").as("dow_ix"),
-        floor(col("value") / 50.0).cast("long").as("spend_bucket")),
-      "dow_ix", "spend_bucket")
-
-  /** §2b Ansari–Bradley rank scale test: are click values dispersed
-    * like non-click values around a common center — the rank-robust
-    * companion to q_levene/q_brown_forsythe ([[Stats.ansariBradley]];
-    * exact integer score masses, midrank ties). */
-  private def q_ansari(s: SparkSession, d: String): DataFrame =
-    Stats.ansariBradley(
-      Tables.events(s, d)
-        .withColumn("is_click", col("event_type") === lit("click")),
-      "value", "is_click")
-
-  /** §2b weighted median: the quantity-weighted center of line-item
-    * price — "the median sold UNIT sits at this price", not the median
-    * line item ([[Stats.weightedMedian]]; exact integer cumulative
-    * weights, both half-mass conventions emitted). */
-  private def q_weighted_median(s: SparkSession, d: String): DataFrame =
-    Stats.weightedMedian(Tables.lineitem(s, d), "l_extendedprice",
-      "l_quantity")
-
-  /** §2b partial correlation: quantity–price association controlling
-    * for discount ([[Stats.partialCorr]]) — the continuous confounder
-    * screen beside q_simpsons' categorical flag. */
-  private def q_partial_corr(s: SparkSession, d: String): DataFrame =
-    Stats.partialCorr(Tables.lineitem(s, d), "l_quantity",
-      "l_extendedprice", "l_discount")
-
-  /** §2b Holm step-down FWER adjustment over the SAME per-source KS
-    * drift battery as q_fdr_bh — the zero-false-positive release gate
-    * beside BH/BY's discovery-rate budgets ([[Stats.holmAdjust]]). */
-  private def q_holm(s: SparkSession, d: String): DataFrame = {
-    val shifted = Tables.documents(s, d).withColumn("__v",
-      col("n_chars") + when(
-        col("source").isin("src0", "src1", "src2", "src3", "src4"),
-        lit(150L)).otherwise(lit(0L)))
-    val ks = Stats.groupKsDrift(shifted, "source", "__v")
-    val ne = col("n_group").cast("double") * col("n_rest").cast("double") /
-      (col("n_group") + col("n_rest")).cast("double")
-    val p = least(lit(1.0),
-      round(lit(2.0) * exp(lit(-2.0) * col("ks") * col("ks") * ne), 6))
-    Stats.holmAdjust(ks.withColumn("p_value", p), "p_value", Seq("source"),
-      alpha = 0.05)
-  }
-
-  /** §2b Dickey–Fuller unit-root screen per event type over the daily
-    * count series ([[Stats.adfDaily]]) — the stationarity gate in front
-    * of the CUSUM/EWMA drift monitors; exact integer OLS moments over
-    * the calendar-bounded grid. */
-  private def q_adf(s: SparkSession, d: String): DataFrame =
-    Stats.adfDaily(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b Grubbs max-outlier screen per event type over daily counts:
-    * exact-integer arg-max deviation + moments
-    * ([[Stats.grubbsDaily]]). */
-  private def q_grubbs(s: SparkSession, d: String): DataFrame =
-    Stats.grubbsDaily(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b paired sign test: per-user first-half vs second-half activity
-    * ([[Stats.signTestHalves]]) — all-integer inputs to z. */
-  private def q_sign_test(s: SparkSession, d: String): DataFrame =
-    Stats.signTestHalves(Tables.events(s, d), "user_id", "ts")
-
-  /** §2b Mood's median test across event types on value
-    * ([[Stats.moodsMedianTest]]): global-median 2×k contingency. */
-  private def q_moods_median(s: SparkSession, d: String): DataFrame =
-    Stats.moodsMedianTest(Tables.events(s, d), "event_type", "value")
-
-  /** §2b order-3 permutation entropy of the daily series per event type
-    * ([[TimeSeries.permutationEntropyDaily]]): ordinal-pattern
-    * complexity — exact integer patterns, bounded entropy fold. */
-  private def q_perm_entropy(s: SparkSession, d: String): DataFrame =
-    TimeSeries.permutationEntropyDaily(Tables.events(s, d),
-      "event_type", "ts")
-
-  /** §2b ROUGE-1 between consecutive documents
-    * ([[TextAnalytics.rouge1Pairs]]): clipped unigram overlap P/R/F1 —
-    * the summarization metric as a sequential-redundancy screen. */
-  private def q_rouge_pair(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.rouge1Pairs(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b degree-resolved assortativity curve k_nn(k) over the
-    * part↔supplier graph ([[Graph.avgNeighborDegree]]) — exact-integer
-    * class sums, long-id edges (ids never reach the output). */
-  private def q_knn_degree(s: SparkSession, d: String): DataFrame = {
-    val ps = partSupplierPairsLong(s, d)
-    Graph.avgNeighborDegree(ps.unionByName(
-      ps.select(col("dst").as("src"), col("src").as("dst"))))
-  }
-
-  /** §2b reciprocity of the SIGNIFICANT event-type transition graph:
-    * per-user consecutive transitions, edges kept when their count
-    * exceeds the mean pair count (exact integer c·k > Σc comparison —
-    * no float threshold), then [[Graph.reciprocity]]'s L↔/L ratio —
-    * "is the journey graph conversational or one-way". */
-  private def q_reciprocity(s: SparkSession, d: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val trans = Tables.events(s, d)
-      .withColumn("__next", lead(col("event_type"), 1).over(w))
-      .filter(col("__next").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type").as("src"), col("__next").as("dst"))
-    // bounded (type x type) grid, consumed by the threshold total AND
-    // the significant-edge filter AND reciprocity's self-semi-join —
-    // localCheckpoint or each consumer re-scans events (plan audit)
-    val counts = trans.groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
-    val tot = counts.agg(sum(col("__c")).as("__t"),
-      count(lit(1)).as("__k"))
-    val sig = counts.crossJoin(broadcast(tot))
-      .filter(col("__c") * col("__k") > col("__t"))
-      .select(col("src"), col("dst"))
-    Graph.reciprocity(sig)
-  }
-
-  /** §2b Matthews correlation of the stopword lang-ID guess vs the
-    * declared label ([[Stats.matthewsCorr]]) — the balanced one-number
-    * verdict beside q_kappa's chance correction: exact-integer
-    * confusion counts, four-√-factor denominator. */
-  private def q_mcc(s: SparkSession, d: String): DataFrame =
-    Stats.matthewsCorr(q_lang_id(s, d), "declared_lang", "lang_guess",
-      positive = "en")
-
-  /** §2b Hodges–Lehmann shift of quantity, returned vs accepted lines
-    * ([[Stats.hodgesLehmannShift]]) — "how BIG is the shift q_mann_whitney
-    * tests for", as the median of all n_a·n_b pairwise differences
-    * generated on the V_a×V_b distinct-value grid (never row²). */
-  private def q_hodges_lehmann(s: SparkSession, d: String): DataFrame =
-    Stats.hodgesLehmannShift(Tables.lineitem(s, d), "l_returnflag",
-      "l_quantity", classA = "R", classB = "A")
-
-  /** §2b Chatterjee's ξ of extendedprice against quantity per return
-    * flag ([[Stats.chatterjeeXi]]) — detects ANY functional dependence,
-    * not just the monotone kind q_spearman sees; the y-run telescoping
-    * form over the distinct-(x,y) cell grid (no per-row rank sort). */
-  private def q_chatterjee(s: SparkSession, d: String): DataFrame =
-    Stats.chatterjeeXi(Tables.lineitem(s, d), "l_returnflag",
-      "l_quantity", "l_extendedprice")
-
-  /** §2b Quade test across event types on daily mean values
-    * ([[Stats.quadeTest]]) — friedman's blocked comparison with blocks
-    * weighted by their range rank; same complete-block day×type cells
-    * as q_friedman. */
-  private def q_quade(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.events(s, d)
-      .filter(col("value").isNotNull)
-      .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-      .agg(avg(col("value")).as("mean_value"))
-    Stats.quadeTest(cells, "day", "event_type", "mean_value")
-  }
-
-  /** §2b Nelson–Aalen cumulative hazard of user lifetimes ending in
-    * purchase ([[EventAnalytics.nelsonAalen]]) — the hazard-side view of
-    * q_survival's Kaplan–Meier curve, identical lifetime/censoring
-    * semantics. */
-  private def q_nelson_aalen(s: SparkSession, d: String): DataFrame =
-    EventAnalytics.nelsonAalen(Tables.events(s, d),
-      "user_id", "ts", "event_id", "event_type", "purchase")
-
-  /** §2b skip-gram training pairs at offsets 1–2 with the word2vec
-    * vocabulary floor ([[TextAnalytics.skipgramPairs]]) — the embedding
-    * training-data generator; one window pass, one count aggregate. */
-  private def q_skipgrams(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.skipgramPairs(Tables.documents(s, d), "doc_id", "text",
-      maxOffset = 2, minCount = 3L)
-
-  /** §2b BLEU-2 between consecutive documents
-    * ([[TextAnalytics.bleuPairs]]) — the precision-side rephrase screen
-    * beside q_rouge_pair's recall; clipped n-gram overlaps + brevity
-    * penalty. */
-  private def q_bleu_pair(s: SparkSession, d: String): DataFrame =
-    TextAnalytics.bleuPairs(Tables.documents(s, d), "doc_id", "text")
-
-  /** §2b CART decision stump: best n_chars threshold separating lang=en
-    * by Gini gain ([[Stats.decisionStump]]) — the quality-filter
-    * cutoff chooser with its induced confusion. */
-  private def q_decision_stump(s: SparkSession, d: String): DataFrame =
-    Stats.decisionStump(
-      Tables.documents(s, d).select(col("n_chars"),
-        (col("lang") === "en").as("is_en")),
-      "n_chars", "is_en")
-
-  /** §2b Page–Hinkley drift detector per event type over daily counts
-    * ([[TimeSeries.pageHinkleyDaily]]) — the running-mean excursion
-    * statistic beside q_cusum/q_pettitt, with the alarm day. */
-  private def q_page_hinkley(s: SparkSession, d: String): DataFrame =
-    TimeSeries.pageHinkleyDaily(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b Cochran's C variance-outlier screen across event types on
-    * value ([[Stats.cochranC]]) — "is one group's spread dominating",
-    * the pre-flight for q_tukey_hsd's pooled MSE. */
-  private def q_cochran_c(s: SparkSession, d: String): DataFrame =
-    Stats.cochranC(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Tukey–Kramer HSD pairwise contrasts across event types on
-    * value ([[Stats.tukeyHsd]]) — the parametric post-hoc beside
-    * q_dunn's rank-based one. */
-  private def q_tukey_hsd(s: SparkSession, d: String): DataFrame =
-    Stats.tukeyHsd(Tables.events(s, d), "event_type", "value")
-
-  /** User-level frame for the causal diagnostics: treated =
-    * purchase-HEAVY user (purchase share above the 20% corpus base
-    * rate, as the exact integer 5·purchases > events — nearly every
-    * user has ≥1 purchase, so mere presence would leave no control
-    * arm); exact cent-quantized activity covariates. Shared
-    * construction for q_smd_balance / q_strat_ate (each query runs it
-    * independently — one aggregate over events). */
-  private def userUnits(s: SparkSession, d: String): DataFrame = {
-    val cents = (col("value").cast("decimal(20,2)") * 100)
-      .cast("decimal(38,0)")
-    Tables.events(s, d)
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .groupBy(col("user_id"))
-      .agg((sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        * 5 > count(lit(1))).as("treated"),
-        count(lit(1)).as("n_events"),
-        (sum(cents).cast("double") / 100.0).as("total_value"),
-        datediff(date_trunc("day", max(col("ts"))),
-          date_trunc("day", min(col("ts")))).cast("long").as("span_days"),
-        (coalesce(sum(when(col("event_type") === "view", cents)),
-          lit(0).cast("decimal(38,0)")).cast("double") / 100.0)
-          .as("view_value"))
-  }
-
-  /** §2b covariate-balance SMD table: purchase-users vs the rest on
-    * activity covariates ([[Stats.smdBalance]]) — the |SMD| < 0.1
-    * pre-flight in front of q_strat_ate. */
-  private def q_smd_balance(s: SparkSession, d: String): DataFrame =
-    Stats.smdBalance(userUnits(s, d), "treated",
-      Seq("n_events", "total_value", "span_days"))
-
-  /** §2b stratified ATE of purchasing on view-spend, sub-classified by
-    * activity quartile ([[Stats.stratifiedAte]]): strata assigned from
-    * the distinct-count grid (integer cum·4/N arithmetic — no
-    * unit-frame sort), overall effect = stratum-weighted mean over
-    * two-arm strata. */
-  private def q_strat_ate(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val units = userUnits(s, d)
-    val grid = units.groupBy(col("n_events").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val wCum = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val strata = grid
-      .withColumn("__prev", coalesce(sum(col("__c")).over(wCum), lit(0L)))
-      .withColumn("__n", sum(col("__c")).over(wAll))
-      .select(col("__v"),
-        least(lit(4L), floor((col("__prev") * 4).cast("double")
-          / col("__n").cast("double")).cast("long") + 1).as("stratum"))
-    Stats.stratifiedAte(
-      units.join(strata.hint("broadcast"),
-        units("n_events") === strata("__v")),
-      "treated", "view_value", "stratum")
-  }
-
-  /** §2b Welch's heteroscedastic one-way ANOVA across event types on
-    * value ([[Stats.welchAnova]]) — the unequal-variance F beside
-    * q_anova, with Welch–Satterthwaite df. */
-  private def q_welch_anova(s: SparkSession, d: String): DataFrame =
-    Stats.welchAnova(Tables.events(s, d), "event_type", "value")
-
-  /** §2b Fisher's exact 2×2 test: lang=en × source=src0 independence
-    * ([[Stats.fisherExact]]) — hypergeometric-exact p via the
-    * anchored ratio recurrence (no factorials, no lgamma). */
-  private def q_fisher_exact(s: SparkSession, d: String): DataFrame =
-    Stats.fisherExact(
-      Tables.documents(s, d).select((col("lang") === "en").as("is_en"),
-        (col("source") === "src0").as("is_src0")),
-      "is_en", "is_src0")
-
-  /** §2b Cohen's h: arcsine effect size of the en-share gap, src0 vs
-    * the rest ([[Stats.cohensH]]) — the power-analysis currency for
-    * "is this rate shift big". */
-  private def q_cohens_h(s: SparkSession, d: String): DataFrame =
-    Stats.cohensH(
-      Tables.documents(s, d).select((col("source") === "src0").as("in_src0"),
-        (col("lang") === "en").as("is_en")),
-      "in_src0", "is_en")
-
-  /** §2b Holt linear smoothing of daily counts per event type
-    * ([[TimeSeries.holtLinear]]) — the sequential recurrence as an
-    * in-codegen array fold; forecast + in-sample RMSE. */
-  private def q_holt_linear(s: SparkSession, d: String): DataFrame =
-    TimeSeries.holtLinear(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b pinball-loss eval of the week-over-week seasonal-naive
-    * forecast at τ ∈ {0.1, 0.5, 0.9}
-    * ([[TimeSeries.pinballEval]]) — exact tenth-scaled integer
-    * losses. */
-  private def q_pinball(s: SparkSession, d: String): DataFrame =
-    TimeSeries.pinballEval(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b TOST equivalence bounds: click vs view value within ±2.0
-    * ([[Stats.tostEquivalence]]) — "are the arms the same", which a
-    * failed difference test cannot conclude. */
-  private def q_tost(s: SparkSession, d: String): DataFrame =
-    Stats.tostEquivalence(Tables.events(s, d), "event_type", "value",
-      armA = "click", armB = "view", delta = 2.0)
-
-  /** §2b Bland–Altman agreement: per-user first-half vs second-half
-    * activity counts ([[Agreement.blandAltman]]) — bias ± 1.96σ limits
-    * with the share outside; the method-comparison readout beside
-    * q_sign_test's direction-only verdict (same midpoint split). */
-  private def q_bland_altman(s: SparkSession, d: String): DataFrame = {
-    val us = unix_micros(col("ts"))
-    val ev = Tables.events(s, d).filter(col("ts").isNotNull)
-    val spans = ev.groupBy(col("user_id"))
-      .agg(min(us).as("__lo"), max(us).as("__hi"))
-    val units = ev.select(col("user_id"), us.as("__us"))
-      .join(spans.hint("shuffle_hash"), Seq("user_id"))
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("__us") * 2 <= col("__lo") + col("__hi"), 1L)
-        .otherwise(0L)).as("m1"),
-        sum(when(col("__us") * 2 > col("__lo") + col("__hi"), 1L)
-          .otherwise(0L)).as("m2"))
-    Agreement.blandAltman(units, "m1", "m2")
-  }
-
-  /** §2b Borda rank aggregation: each language "votes" a ranking of the
-    * sources by doc count ([[Agreement.bordaCount]]) — the consensus
-    * order beside q_kendall_w's agreement coefficient. */
-  private def q_borda(s: SparkSession, d: String): DataFrame =
-    Agreement.bordaCount(
-      Tables.documents(s, d)
-        .filter(col("lang").isNotNull && col("source").isNotNull)
-        .groupBy(col("lang").as("voter"), col("source"))
-        .agg(count(lit(1)).as("score")),
-      "voter", "source", "score")
-
-  /** §2b Hampel robust outlier filter over daily counts per event type
-    * ([[TimeSeries.hampelFilter]]) — rolling median/MAD flags with
-    * dyadic-exact medians; every interior day emitted with its flag. */
-  private def q_hampel(s: SparkSession, d: String): DataFrame =
-    TimeSeries.hampelFilter(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b Gumbel block-maxima fit of weekly daily-count peaks per event
-    * type ([[TimeSeries.gumbelBlockMax]]) — EVT capacity planning with
-    * the 1-in-100-week return level; maxima-side beside q_gpd_tail. */
-  private def q_gumbel_fit(s: SparkSession, d: String): DataFrame =
-    TimeSeries.gumbelBlockMax(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b weekly seasonal strength per event type
-    * ([[TimeSeries.seasonalStrength]]) — how much daily-count variance
-    * the weekday cycle explains; the one-number screen before
-    * q_seasonality's table. */
-  private def q_seasonal_strength(s: SparkSession, d: String): DataFrame =
-    TimeSeries.seasonalStrength(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b circular time-of-day statistics per event type
-    * ([[TimeSeries.circularHours]]) — resultant concentration + mean
-    * hour, correct across the midnight wrap; snapped-dyadic hour
-    * angles keep the sums exact in any order. */
-  private def q_circular_hours(s: SparkSession, d: String): DataFrame =
-    TimeSeries.circularHours(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b leave-one-fold-out CV of the lang=en n_chars stump
-    * ([[Stats.stumpCv]]) — per-fold learned threshold + held-out
-    * accuracy; training grids by global-minus-fold subtraction. */
-  private def q_stump_cv(s: SparkSession, d: String): DataFrame =
-    Stats.stumpCv(
-      Tables.documents(s, d).select(col("n_chars"),
-        (col("lang") === "en").as("is_en"),
-        (col("doc_id") % 4).as("fold")),
-      "n_chars", "is_en", "fold")
-
-  /** §2b B-cubed clustering precision/recall: sources as predicted
-    * clusters vs lang gold ([[Stats.bcubed]]) — the item-weighted
-    * entity-resolution eval beside q_cluster_agreement's pair-counting
-    * ARI on the same pairing. */
-  private def q_bcubed(s: SparkSession, d: String): DataFrame =
-    Stats.bcubed(Tables.documents(s, d), "lang", "source")
-
-  /** §2b V-measure: homogeneity/completeness of the same pairing
-    * ([[Stats.vMeasure]]) — the interpretable axis-pair NMI blends
-    * away. */
-  private def q_v_measure(s: SparkSession, d: String): DataFrame =
-    Stats.vMeasure(Tables.documents(s, d), "lang", "source")
-
-  /** §2b Theil's U₂ of the week-over-week seasonal naive vs the
-    * last-value naive per event type ([[TimeSeries.theilsU2]]) — "is
-    * there exploitable weekly structure" as one ratio. */
-  private def q_theils_u2(s: SparkSession, d: String): DataFrame =
-    TimeSeries.theilsU2(Tables.events(s, d), "event_type", "ts")
-
-  /** §2b landmark BFS over the part↔supplier graph
-    * ([[Graph.landmarkDistances]]): exact distances from the 4 smallest
-    * node ids, depth ≤ 4 — reach, eccentricity-within-horizon and
-    * harmonic centrality per landmark; the distance family the
-    * iterative-join suite (pagerank/kcore/CC) did not yet cover. */
-  private def q_landmark_bfs(s: SparkSession, d: String): DataFrame = {
-    val ps = partSupplierPairsLong(s, d)
-    Graph.landmarkDistances(ps.unionByName(
-      ps.select(col("dst").as("src"), col("src").as("dst"))),
-      numLandmarks = 4, maxDepth = 4)
-  }
-
-  /** §2b sharp regression-discontinuity jump at quantity 25.5 (±20):
-    * local linear price fits each side of the cutoff
-    * ([[Stats.regressionDiscontinuity]]) — the threshold-causal readout;
-    * exact cent-unit moments. */
-  private def q_rdd(s: SparkSession, d: String): DataFrame =
-    Stats.regressionDiscontinuity(Tables.lineitem(s, d), "l_quantity",
-      "l_extendedprice", cutoff = 25.5, bandwidth = 20.0)
-
-  /** §2b Hellinger drift distance: src0's language mix vs the rest of
-    * the corpus ([[Stats.hellinger]]) — the bounded [0,1] metric beside
-    * q_psi's unbounded log form; no zero-bin smoothing needed. */
-  private def q_hellinger(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    Stats.hellinger(docs.filter(col("source") === "src0"),
-      docs.filter(col("source") =!= "src0"), "lang")
-  }
-
-  /** §2b rich-club coefficient over the doc-similarity graph
-    * ([[Graph.richClub]]): do the highly-duplicated documents
-    * near-duplicate EACH OTHER (template cliques) or bridge disjoint
-    * regions — φ(k) at k ∈ {1, 2, 4} beside q_assortativity's single
-    * correlation. Same cached pair graph as q_assortativity. */
-  private def q_rich_club(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.jaccardPairsFrom(
-      Dedup.shingleSets(Tables.documents(s, d).filter(col("doc_id") < 300),
-        "doc_id", "text"),
-      "doc_id", 0.02).cache()
-    Graph.richClub(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-      Seq(1, 2, 4))
-  }
-
-  /** §2b Kuiper cyclic drift: per event type, V = D⁺ + D⁻ of its
-    * weekday-index mix vs the rest ([[Stats.groupKuiperDrift]]) — the
-    * rotation-sensitive drift screen KS under-weights on cyclic
-    * supports (a shifted weekly peak cancels at any single point). */
-  private def q_kuiper(s: SparkSession, d: String): DataFrame =
-    Stats.groupKuiperDrift(
-      Tables.events(s, d).select(col("event_type"),
-        (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-          .cast("long").as("dow_ix")),
-      "event_type", "dow_ix")
-
-  /** §2b Cucconi joint location-scale test on click vs non-click values
-    * ([[Stats.cucconiTest]]) — one rank statistic for "did the
-    * distribution move OR change spread", where Mann–Whitney + Ansari
-    * separately would need a multiplicity correction. */
-  private def q_cucconi(s: SparkSession, d: String): DataFrame =
-    Stats.cucconiTest(
-      Tables.events(s, d)
-        .withColumn("is_click", col("event_type") === lit("click")),
-      "value", "is_click")
-
-  /** §2b Lin's concordance (CCC): do the token-count and chars/5 length
-    * scorers AGREE (not merely correlate) on documents — the
-    * continuous-agreement face of the κ family ([[Agreement.linCcc]];
-    * C_b isolates systematic location/scale shift from correlation
-    * loss). */
-  private def q_lin_ccc(s: SparkSession, d: String): DataFrame =
-    Agreement.linCcc(
-      Tables.documents(s, d).select(
-        size(graft.functions.TextFunctions.tokens(col("text")))
-          .cast("double").as("len_score"),
-        (col("n_chars").cast("double") / 5.0).as("char_score")),
-      "len_score", "char_score")
-
-
-  // --------------------------------------------------------------- wiring
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_open_tickets" -> (q_open_tickets _),
-    "q_filter_project" -> (q_filter_project _),
-    "q_sort_limit" -> (q_sort_limit _),
-    "q_backfill" -> (q_backfill _),
-    "q_left_join" -> (q_left_join _),
-    "q_right_join" -> (q_right_join _),
-    "q_full_outer_merge" -> (q_full_outer_merge _),
-    "q_semi_join" -> (q_semi_join _),
-    "q_anti_dedup" -> (q_anti_dedup _),
-    "q_anti_dedup_bloom" -> (q_anti_dedup_bloom _),
-    "q_union_slices" -> (q_union_slices _),
-    "q_window_bucket" -> (q_window_bucket _),
-    "q_iso_format" -> (q_iso_format _),
-    "q_audit_timestamp" -> (q_audit_timestamp _),
-    "q_key_synthesis" -> (q_key_synthesis _),
-    "q_sanitize_names" -> (q_sanitize_names _),
-    "q_upsert" -> (q_upsert _),
-    "q_octadesk_e2e" -> (q_octadesk_e2e _),
-    "q_octadesk_e2e_drift" -> (q_octadesk_e2e_drift _),
-    "q_events_pivot" -> (q_events_pivot _),
-    "q_json_extract" -> (q_json_extract _),
-    "q_from_json" -> (q_from_json _),
-    "q_custom_fields" -> (q_custom_fields _),
-    "q_flatten" -> (q_flatten _),
-    "q_asof_join" -> (q_asof_join _),
-    "q_session_window" -> (q_session_window _),
-    "q_event_sliding" -> (q_event_sliding _),
-    "q_pivot_kv" -> (q_pivot_kv _),
-    "q_tfidf" -> (q_tfidf _),
-    "q1_pricing_summary" -> (q1_pricing_summary _),
-    "q_topk_per_group" -> (q_topk_per_group _),
-    "q_group_topk_native" -> (q_group_topk_native _),
-    "q_topk_udaf" -> (q_topk_udaf _),
-    "q_rollup" -> (q_rollup _),
-    "q_cube" -> (q_cube _),
-    "q_grouping_sets" -> (q_grouping_sets _),
-    "q_window_rank" -> (q_window_rank _),
-    "q_window_range" -> (q_window_range _),
-    "q_window_dist" -> (q_window_dist _),
-    "q_posexplode" -> (q_posexplode _),
-    "q_intersect" -> (q_intersect _),
-    "q_except" -> (q_except _),
-    "q_except_all" -> (q_except_all _),
-    "q_intersect_all" -> (q_intersect_all _),
-    "q_array_funcs" -> (q_array_funcs _),
-    "q_join_agg_region" -> (q_join_agg_region _),
-    "q_salted_join" -> (q_salted_join _),
-    "q_approx_distinct" -> (q_approx_distinct _),
-    "q_percentiles" -> (q_percentiles _),
-    "q_percentile_binned" -> (q_percentile_binned _),
-    "q_stats_agg" -> (q_stats_agg _),
-    "q_scalar_funcs" -> (q_scalar_funcs _),
-    "q_dedup_exact" -> (q_dedup_exact _),
-    "q_token_stats" -> (q_token_stats _),
-    "q_text_quality" -> (q_text_quality _),
-    "q_lang_id" -> (q_lang_id _),
-    "q_lang_ngram" -> (q_lang_ngram _),
-    "q_unique_tokens" -> (q_unique_tokens _),
-    "q_unigram_loglik" -> (q_unigram_loglik _),
-    "q_bigram_loglik" -> (q_bigram_loglik _),
-    "q_kneser_ney" -> (q_kneser_ney _),
-    "q_ccnet_buckets" -> (q_ccnet_buckets _),
-    "q_ngram_pmi" -> (q_ngram_pmi _),
-    "q_jaccard_pairs" -> (q_jaccard_pairs _),
-    "q_jaccard_prefix" -> (q_jaccard_prefix _),
-    "q_edit_distance" -> (q_edit_distance _),
-    "q_shingle_pairs" -> (q_shingle_pairs _),
-    "q_dup_clusters" -> (q_dup_clusters _),
-    "q_golden_record" -> (q_golden_record _),
-    "q_split_leakage" -> (q_split_leakage _),
-    "q_leakage_safe_split" -> (q_leakage_safe_split _),
-    "q_minhash_signatures" -> (q_minhash_signatures _),
-    "q_minhash_est" -> (q_minhash_est _),
-    "q_simhash" -> (q_simhash _),
-    "q_simhash_neardup" -> (q_simhash_neardup _),
-    "q_cosine_topk" -> (q_cosine_topk _),
-    "q_embedding_pairs" -> (q_embedding_pairs _),
-    "q_lsh_neardup" -> (q_lsh_neardup _),
-    "q_rolling_hash" -> (q_rolling_hash _),
-    "q_subword_count" -> (q_subword_count _),
-    "q_lsh_candidates" -> (q_lsh_candidates _),
-    "q_neardup_admit" -> (q_neardup_admit _),
-    "q_frame_sample" -> (q_frame_sample _),
-    "q_ivf_topk" -> (q_ivf_topk _),
-    "q_ivf_topk_bcast" -> (q_ivf_topk_bcast _),
-    "q_kmeans_step" -> (q_kmeans_step _),
-    "q_ivf_trained" -> (q_ivf_trained _),
-    "q_semantic_dedup" -> (q_semantic_dedup _),
-    "q_density_clusters" -> (q_density_clusters _),
-    "q_watermark_detect" -> (q_watermark_detect _),
-    "q_centroid_drift" -> (q_centroid_drift _),
-    "q_mmd" -> (q_mmd _),
-    "q_ann_recall" -> (q_ann_recall _),
-    "q_ivf_nprobe_sweep" -> (q_ivf_nprobe_sweep _),
-    "q_ndcg" -> (q_ndcg _),
-    "q_mutual_nn" -> (q_mutual_nn _),
-    "q_hard_negatives" -> (q_hard_negatives _),
-    "q_power_iteration" -> (q_power_iteration _),
-    "q_rbo" -> (q_rbo _),
-    "q_matryoshka" -> (q_matryoshka _),
-    "q_davies_bouldin" -> (q_davies_bouldin _),
-    "q_token_entropy" -> (q_token_entropy _),
-    "q_iqr_outliers" -> (q_iqr_outliers _),
-    "q_keep_best" -> (q_keep_best _),
-    "q_neardup_survivors" -> (q_neardup_survivors _),
-    "q_stateful_sessions" -> (q_stateful_sessions _),
-    "q_winsorize" -> (q_winsorize _),
-    "q_containment" -> (q_containment _),
-    "q_corpus_shuffle" -> (q_corpus_shuffle _),
-    "q_vocab_coverage" -> (q_vocab_coverage _),
-    "q_event_hourly" -> (q_event_hourly _),
-    "q_scd2" -> (q_scd2 _),
-    "q_transitions" -> (q_transitions _),
-    "q_assoc_rules" -> (q_assoc_rules _),
-    "q_survival" -> (q_survival _),
-    "q_cusum" -> (q_cusum _),
-    "q_seasonality" -> (q_seasonality _),
-    "q_autocorr" -> (q_autocorr _),
-    "q_burstiness" -> (q_burstiness _),
-    "q_theil_sen" -> (q_theil_sen _),
-    "q_benford" -> (q_benford _),
-    "q_jaro_winkler" -> (q_jaro_winkler _),
-    "q_jw_guard" -> (q_jw_guard _),
-    "q_psi_numeric" -> (q_psi_numeric _),
-    "q_dp_contrib_hist" -> (q_dp_contrib_hist _),
-    "q_decayed_topk" -> (q_decayed_topk _),
-    "q_funnel" -> (q_funnel _),
-    "q_cohort_retention" -> (q_cohort_retention _),
-    "q_resample_fill" -> (q_resample_fill _),
-    "q_rolling_stats" -> (q_rolling_stats _),
-    "q_sessionize" -> (q_sessionize _),
-    "q_multimodal_meta" -> (q_multimodal_meta _),
-    "q_image_decode" -> (q_image_decode _),
-    "q_image_decode_jpeg" -> (q_image_decode_jpeg _),
-    "q_image_ahash" -> (q_image_ahash _),
-    "q_image_neardup" -> (q_image_neardup _),
-    "q_hash_split" -> (q_hash_split _),
-    "q_epoch_schedule" -> (q_epoch_schedule _),
-    "q_group_cap" -> (q_group_cap _),
-    "q_zscore" -> (q_zscore _),
-    "q_quality_filter" -> (q_quality_filter _),
-    "q_token_chunks" -> (q_token_chunks _),
-    "q_pack_bins" -> (q_pack_bins _),
-    "q_lsh_topk" -> (q_lsh_topk _),
-    "q_lsh_topk_mp" -> (q_lsh_topk_mp _),
-    "q_enrich_errors" -> (q_enrich_errors _),
-    "q_stratified_sample" -> (q_stratified_sample _),
-    "q_weighted_sample" -> (q_weighted_sample _),
-    "q_agg_state_merge" -> (q_agg_state_merge _),
-    "q_hll_state_merge" -> (q_hll_state_merge _),
-    "q_expectations" -> (q_expectations _),
-    "q_sorted_neighborhood" -> (q_sorted_neighborhood _),
-    "q_temperature_mix" -> (q_temperature_mix _),
-    "q_pii_mask" -> (q_pii_mask _),
-    "q_strip_markup" -> (q_strip_markup _),
-    "q_interval_join" -> (q_interval_join _),
-    "q_range_join_bucketed" -> (q_range_join_bucketed _),
-    "q_quality_filter_approx" -> (q_quality_filter_approx _),
-    "q_contamination" -> (q_contamination _),
-    "q_repetition" -> (q_repetition _),
-    "q_gopher_rules" -> (q_gopher_rules _),
-    "q_distinct_ngrams" -> (q_distinct_ngrams _),
-    "q_negative_sampling" -> (q_negative_sampling _),
-    "q_padding_waste" -> (q_padding_waste _),
-    "q_incremental_cc" -> (q_incremental_cc _),
-    "q_quantile_norm" -> (q_quantile_norm _),
-    "q_source_ablation" -> (q_source_ablation _),
-    "q_ks_per_source" -> (q_ks_per_source _),
-    "q_fdr_bh" -> (q_fdr_bh _),
-    "q_dist_match" -> (q_dist_match _),
-    "q_fellegi_sunter" -> (q_fellegi_sunter _),
-    "q_dedup_weights" -> (q_dedup_weights _),
-    "q_modularity" -> (q_modularity _),
-    "q_adamic_adar" -> (q_adamic_adar _),
-    "q_clustering_coef" -> (q_clustering_coef _),
-    "q_textrank" -> (q_textrank _),
-    "q_silhouette" -> (q_silhouette _),
-    "q_assortativity" -> (q_assortativity _),
-    "q_unpivot" -> (q_unpivot _),
-    "q_lsh_calibration" -> (q_lsh_calibration _),
-    "q_snapshot_diff" -> (q_snapshot_diff _),
-    "q_column_profile" -> (q_column_profile _),
-    "q_apply_diff" -> (q_apply_diff _),
-    "q_bm25" -> (q_bm25 _),
-    "q_query_likelihood" -> (q_query_likelihood _),
-    "q_yule_k" -> (q_yule_k _),
-    "q_novelty_curve" -> (q_novelty_curve _),
-    "q_diff_in_diff" -> (q_diff_in_diff _),
-    "q_shipping_priority" -> (q_shipping_priority _),
-    "q_prf_expansion" -> (q_prf_expansion _),
-    "q_dup_spans" -> (q_dup_spans _),
-    "q_kanonymity" -> (q_kanonymity _),
-    "q_ldiversity" -> (q_ldiversity _),
-    "q_tcloseness" -> (q_tcloseness _),
-    "q_spearman" -> (q_spearman _),
-    "q_conformal" -> (q_conformal _),
-    "q_boilerplate" -> (q_boilerplate _),
-    "q_horvitz_thompson" -> (q_horvitz_thompson _),
-    "q_zorder_key" -> (q_zorder_key _),
-    "q_quality_classifier" -> (q_quality_classifier _),
-    "q_pagerank" -> (q_pagerank _),
-    "q_hits" -> (q_hits _),
-    "q_skew_report" -> (q_skew_report _),
-    "q_winnowing" -> (q_winnowing _),
-    "q_group_ols" -> (q_group_ols _),
-    "q_stream_enrich" -> (q_stream_enrich _),
-    "q_ri_orphans" -> (q_ri_orphans _),
-    "q_sentence_stats" -> (q_sentence_stats _),
-    "q_heavy_hitters" -> (q_heavy_hitters _),
-    "q_mad_outliers" -> (q_mad_outliers _),
-    "q_label_prop" -> (q_label_prop _),
-    "q_zipf_slope" -> (q_zipf_slope _),
-    "q_pq_topk" -> (q_pq_topk _),
-    "q_pq_topk_bcast" -> (q_pq_topk_bcast _),
-    "q_naive_bayes" -> (q_naive_bayes _),
-    "q_char_pairs" -> (q_char_pairs _),
-    "q_bpe_merges" -> (q_bpe_merges _),
-    "q_bpe_encode" -> (q_bpe_encode _),
-    "q_readability" -> (q_readability _),
-    "q_heaps_law" -> (q_heaps_law _),
-    "q_simpsons" -> (q_simpsons _),
-    "q_chisq_indep" -> (q_chisq_indep _),
-    "q_psi" -> (q_psi _),
-    "q_jsd_drift" -> (q_jsd_drift _),
-    "q_drift_monitor" -> (q_drift_monitor _),
-    "q_chi2_tokens" -> (q_chi2_tokens _),
-    "q_vector_moments" -> (q_vector_moments _),
-    "q_er_score" -> (q_er_score _),
-    "q_dp_counts" -> (q_dp_counts _),
-    "q_profile_drift" -> (q_profile_drift _),
-    "q_welch_ttest" -> (q_welch_ttest _),
-    "q_curation_pipeline" -> (q_curation_pipeline _),
-    "q_class_cohesion" -> (q_class_cohesion _),
-    "q_attribution" -> (q_attribution _),
-    "q_ks_statistic" -> (q_ks_statistic _),
-    "q_pii_density" -> (q_pii_density _),
-    "q_corpus_report" -> (q_corpus_report _),
-    "q_interp_loglik" -> (q_interp_loglik _),
-    "q_fd_violations" -> (q_fd_violations _),
-    "q_debounce" -> (q_debounce _),
-    "q_ppr" -> (q_ppr _),
-    "q_bag_fingerprint" -> (q_bag_fingerprint _),
-    "q_source_similarity" -> (q_source_similarity _),
-    "q_event_seqs" -> (q_event_seqs _),
-    "q_srm_check" -> (q_srm_check _),
-    "q_mi_tokens" -> (q_mi_tokens _),
-    "q_langid_confusion" -> (q_langid_confusion _),
-    "q_lsh_dedup_eval" -> (q_lsh_dedup_eval _),
-    "q_triangles" -> (q_triangles _),
-    "q_cosine_pairs" -> (q_cosine_pairs _),
-    "q_interp" -> (q_interp _),
-    "q_islands" -> (q_islands _),
-    "q_auc" -> (q_auc _),
-    "q_calibration" -> (q_calibration _),
-    "q_kappa" -> (q_kappa _),
-    "q_join_card" -> (q_join_card _),
-    "q_bootstrap" -> (q_bootstrap _),
-    "q_ewma" -> (q_ewma _),
-    "q_delta_agg" -> (q_delta_agg _),
-    "q_gini" -> (q_gini _),
-    "q_cuped" -> (q_cuped _),
-    "q_pr_auc" -> (q_pr_auc _),
-    "q_kcore" -> (q_kcore _),
-    "q_quantize_int8" -> (q_quantize_int8 _),
-    "q_int8_topk" -> (q_int8_topk _),
-    "q_binary_quantize" -> (q_binary_quantize _),
-    "q_hamming_topk" -> (q_hamming_topk _),
-    "q_countmin" -> (q_countmin _),
-    "q_rrf" -> (q_rrf _),
-    "q_int8_recall" -> (q_int8_recall _),
-    "q_jl_distortion" -> (q_jl_distortion _),
-    "q_dp_mean" -> (q_dp_mean _),
-    "q_quota_sample" -> (q_quota_sample _),
-    "q_unicode_norm" -> (q_unicode_norm _),
-    "q_fuzzy_contamination" -> (q_fuzzy_contamination _),
-    "q_kcenter" -> (q_kcenter _),
-    "q_dsir_select" -> (q_dsir_select _),
-    "q_mmr_rerank" -> (q_mmr_rerank _),
-    "q_anova" -> (q_anova _),
-    "q_kruskal_wallis" -> (q_kruskal_wallis _),
-    "q_mantel_haenszel" -> (q_mantel_haenszel _),
-    "q_rfm" -> (q_rfm _),
-    "q_inter_arrival" -> (q_inter_arrival _),
-    "q_stationary_dist" -> (q_stationary_dist _),
-    "q_ktruss" -> (q_ktruss _),
-    "q_jaccard_link" -> (q_jaccard_link _),
-    "q_ccf" -> (q_ccf _),
-    "q_seasonal_naive" -> (q_seasonal_naive _),
-    "q_key_candidates" -> (q_key_candidates _),
-    "q_distinct_intersection" -> (q_distinct_intersection _),
-    "q_tokenizer_fertility" -> (q_tokenizer_fertility _),
-    "q_freq_spectrum" -> (q_freq_spectrum _),
-    "q_good_turing" -> (q_good_turing _),
-    "q_mann_whitney" -> (q_mann_whitney _),
-    "q_brown_forsythe" -> (q_brown_forsythe _),
-    "q_qte" -> (q_qte _),
-    "q_gain_curve" -> (q_gain_curve _),
-    "q_cramers_v" -> (q_cramers_v _),
-    "q_conversion_latency" -> (q_conversion_latency _),
-    "q_ess" -> (q_ess _),
-    "q_jsd_matrix" -> (q_jsd_matrix _),
-    "q_user_gini" -> (q_user_gini _),
-    "q_wasserstein" -> (q_wasserstein _),
-    "q_cliffs_delta" -> (q_cliffs_delta _),
-    "q_chao1" -> (q_chao1 _),
-    "q_rake" -> (q_rake _),
-    "q_isotonic" -> (q_isotonic _),
-    "q_cvm" -> (q_cvm _),
-    "q_mcnemar" -> (q_mcnemar _),
-    "q_kendall_tau" -> (q_kendall_tau _),
-    "q_pettitt" -> (q_pettitt _),
-    "q_hurst" -> (q_hurst _),
-    "q_burrows_delta" -> (q_burrows_delta _),
-    "q_yuen" -> (q_yuen _),
-    "q_doremi" -> (q_doremi _),
-    "q_twonn" -> (q_twonn _),
-    "q_periodogram" -> (q_periodogram _),
-    "q_ljung_box" -> (q_ljung_box _),
-    "q_energy_dist" -> (q_energy_dist _),
-    "q_theil" -> (q_theil _),
-    "q_hill_diversity" -> (q_hill_diversity _),
-    "q_markov_entropy" -> (q_markov_entropy _),
-    "q_sprt" -> (q_sprt _),
-    "q_eb_shrinkage" -> (q_eb_shrinkage _),
-    "q_capture_recapture" -> (q_capture_recapture _),
-    "q_cluster_agreement" -> (q_cluster_agreement _),
-    "q_anderson_darling" -> (q_anderson_darling _),
-    "q_cochran_armitage" -> (q_cochran_armitage _),
-    "q_durbin_watson" -> (q_durbin_watson _),
-    "q_gpd_tail" -> (q_gpd_tail _),
-    "q_wilson" -> (q_wilson _),
-    "q_poisson_rate" -> (q_poisson_rate _),
-    "q_jarque_bera" -> (q_jarque_bera _),
-    "q_jonckheere" -> (q_jonckheere _),
-    "q_msprt" -> (q_msprt _),
-    "q_runs_test" -> (q_runs_test _),
-    "q_friedman" -> (q_friedman _),
-    "q_effect_size" -> (q_effect_size _),
-    "q_page_trend" -> (q_page_trend _),
-    "q_control_rules" -> (q_control_rules _),
-    "q_brunner_munzel" -> (q_brunner_munzel _),
-    "q_water_fill" -> (q_water_fill _),
-    "q_dunn" -> (q_dunn _),
-    "q_seasonal_mk" -> (q_seasonal_mk _),
-    "q_log_rank" -> (q_log_rank _),
-    "q_wilcoxon" -> (q_wilcoxon _),
-    "q_cochran_q" -> (q_cochran_q _),
-    "q_mood_median" -> (q_mood_median _),
-    "q_fleiss_kappa" -> (q_fleiss_kappa _),
-    "q_gwet_ac1" -> (q_gwet_ac1 _),
-    "q_dawid_skene" -> (q_dawid_skene _),
-    "q_cronbach_alpha" -> (q_cronbach_alpha _),
-    "q_weighted_kappa" -> (q_weighted_kappa _),
-    "q_chi_square" -> (q_chi_square _),
-    "q_cmh" -> (q_cmh _),
-    "q_g_test" -> (q_g_test _),
-    "q_fdr_by" -> (q_fdr_by _),
-    "q_icc" -> (q_icc _),
-    "q_bartlett" -> (q_bartlett _),
-    "q_krippendorff" -> (q_krippendorff _),
-    "q_kendall_w" -> (q_kendall_w _),
-    "q_majority_label" -> (q_majority_label _),
-    "q_levene" -> (q_levene _),
-    "q_ece" -> (q_ece _),
-    "q_gk_gamma" -> (q_gk_gamma _),
-    "q_ansari" -> (q_ansari _),
-    "q_weighted_median" -> (q_weighted_median _),
-    "q_partial_corr" -> (q_partial_corr _),
-    "q_lin_ccc" -> (q_lin_ccc _),
-    "q_holm" -> (q_holm _),
-    "q_adf" -> (q_adf _),
-    "q_grubbs" -> (q_grubbs _),
-    "q_sign_test" -> (q_sign_test _),
-    "q_moods_median" -> (q_moods_median _),
-    "q_knn_degree" -> (q_knn_degree _),
-    "q_reciprocity" -> (q_reciprocity _),
-    "q_mcc" -> (q_mcc _),
-    "q_hodges_lehmann" -> (q_hodges_lehmann _),
-    "q_chatterjee" -> (q_chatterjee _),
-    "q_quade" -> (q_quade _),
-    "q_nelson_aalen" -> (q_nelson_aalen _),
-    "q_skipgrams" -> (q_skipgrams _),
-    "q_landmark_bfs" -> (q_landmark_bfs _),
-    "q_bleu_pair" -> (q_bleu_pair _),
-    "q_decision_stump" -> (q_decision_stump _),
-    "q_page_hinkley" -> (q_page_hinkley _),
-    "q_cochran_c" -> (q_cochran_c _),
-    "q_tukey_hsd" -> (q_tukey_hsd _),
-    "q_smd_balance" -> (q_smd_balance _),
-    "q_strat_ate" -> (q_strat_ate _),
-    "q_welch_anova" -> (q_welch_anova _),
-    "q_fisher_exact" -> (q_fisher_exact _),
-    "q_cohens_h" -> (q_cohens_h _),
-    "q_tost" -> (q_tost _),
-    "q_bland_altman" -> (q_bland_altman _),
-    "q_borda" -> (q_borda _),
-    "q_hampel" -> (q_hampel _),
-    "q_gumbel_fit" -> (q_gumbel_fit _),
-    "q_seasonal_strength" -> (q_seasonal_strength _),
-    "q_circular_hours" -> (q_circular_hours _),
-    "q_stump_cv" -> (q_stump_cv _),
-    "q_bcubed" -> (q_bcubed _),
-    "q_v_measure" -> (q_v_measure _),
-    "q_theils_u2" -> (q_theils_u2 _),
-    "q_holt_linear" -> (q_holt_linear _),
-    "q_pinball" -> (q_pinball _),
-    "q_perm_entropy" -> (q_perm_entropy _),
-    "q_rouge_pair" -> (q_rouge_pair _),
-    "q_rdd" -> (q_rdd _),
-    "q_hellinger" -> (q_hellinger _),
-    "q_kuiper" -> (q_kuiper _),
-    "q_cucconi" -> (q_cucconi _),
-    "q_rich_club" -> (q_rich_club _),
-  )
-
-  /** Guarded DuckDB tokenizer matching TextFunctions.tokens (empty/blank
-    * text → empty list, not ['']) over an arbitrary column/expression.
-    * Oracle strings must build every tokenizer use from this (or the
-    * `duckTokens` instance over `text`); EntrySpec pins all inline copies
-    * byte-identical so tokenizer-semantics changes cannot drift. */
-  private[graft] def duckTokensOf(c: String): String =
-    s"CASE WHEN trim($c) = '' THEN CAST([] AS VARCHAR[]) " +
-      s"ELSE string_split_regex(trim($c), '\\s+') END"
-
-  private[graft] val duckTokens: String = duckTokensOf("text")
-
-  /** Guarded DuckDB sentence splitter matching TextFunctions.sentences
-    * (same RE2 pattern, empty segments dropped) — pinned by EntrySpec like
-    * the tokenizer. */
-  private[graft] val duckSentences: String =
-    "list_filter(string_split_regex(trim(text), '[.!?]+\\s+|[.!?]+$'), " +
-      "s -> len(s) > 0)"
-
-  /** DuckDB expression for the Morton key of two BIGINT columns — the
-    * same static bit-interleave fold the engine codegens
-    * (Sinks.mortonKey), unrolled to SQL. */
-  private def mortonSql(x: String, y: String, bits: Int = 21): String =
-    (0 until bits).flatMap(b => Seq(
-      s"((($x >> $b) & 1) << ${2 * b})",
-      s"((($y >> $b) & 1) << ${2 * b + 1})")).mkString(" | ")
-
-  /** DuckDB DOUBLE[] literal of the classifier weights. The weights are
-    * dyadic rationals (multiples of 1/1024), so the 10-decimal forms below
-    * are EXACT — both engines parse back the identical double. */
-  private def classifierWeightsSql: String =
-    "[" + classifierWeights.map(w => f"$w%.10f").mkString(", ") + "]"
-
-  private def classifierBiasSql: String = f"$classifierBias%.10f"
-
-  /** Generated oracle for q_pagerank: the engine's 3 fixed iterations
-    * unrolled as CTEs. The teleport term is spelled as the SAME
-    * subtraction the engine computes ((1 - 0.85) is not the double 0.15),
-    * and every division is forced to DOUBLE so DuckDB's decimal literals
-    * can't change the arithmetic. */
-  private def pageRankOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (SELECT e.dst AS id, SUM($prev.rank / od.outdeg) AS c
-                  FROM e JOIN $prev ON e.src = $prev.id
-                         JOIN od ON e.src = od.src
-                  GROUP BY e.dst),
-          r$i AS (SELECT nodes.id,
-                         (CAST(1 AS DOUBLE) - 0.85) / (SELECT n FROM nn)
-                           + 0.85 * COALESCE(c$i.c, CAST(0 AS DOUBLE)) AS rank
-                  FROM nodes LEFT JOIN c$i USING (id))"""
-    }.mkString(",\n")
-    s"""WITH ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-                    FROM lineitem),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
-            nodes AS (SELECT DISTINCT src AS id FROM e),
-            nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-            od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-                   FROM e GROUP BY src),
-            r0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS rank
-                   FROM nodes),
-            $iters
-        SELECT id, round(rank, 9) AS rank FROM r3"""
-  }
-
-  /** Generated oracle for q_textrank: the SAME unrolled 3-iteration
-    * PageRank recurrence as [[pageRankOracleSql]], over the word
-    * co-occurrence graph (adjacent-token pairs with support >= 5,
-    * undirected, both directions). */
-  private def textRankOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (SELECT e.dst AS id, SUM($prev.rank / od.outdeg) AS c
-                  FROM e JOIN $prev ON e.src = $prev.id
-                         JOIN od ON e.src = od.src
-                  GROUP BY e.dst),
-          r$i AS (SELECT nodes.id,
-                         (CAST(1 AS DOUBLE) - 0.85) / (SELECT n FROM nn)
-                           + 0.85 * COALESCE(c$i.c, CAST(0 AS DOUBLE)) AS rank
-                  FROM nodes LEFT JOIN c$i USING (id))"""
-    }.mkString(",\n")
-    s"""WITH tok AS (SELECT $duckTokens AS t
-                     FROM documents),
-            bc AS (SELECT t[i] AS w1, t[i+1] AS w2, count(*) AS c
-                   FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
-                   GROUP BY 1, 2),
-            ep AS (SELECT DISTINCT least(w1, w2) AS src,
-                          greatest(w1, w2) AS dst
-                   FROM bc WHERE c >= 5 AND w1 <> w2),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
-            nodes AS (SELECT DISTINCT src AS id FROM e),
-            nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-            od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-                   FROM e GROUP BY src),
-            r0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS rank
-                   FROM nodes),
-            $iters
-        SELECT id AS keyword, round(rank, 9) AS rank FROM r3
-        ORDER BY rank DESC, keyword ASC LIMIT 30"""
-  }
-
-  /** Generated oracle for q_ppr: personalized PageRank's 3 iterations
-    * unrolled; the teleport column is built with the same left join +
-    * coalesce/|S| division the engine computes, and (1 − 0.85) is spelled
-    * as the same subtraction. */
-  private def pprOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (SELECT e.dst AS id, SUM($prev.rank / od.outdeg) AS c
-                  FROM e JOIN $prev ON e.src = $prev.id
-                         JOIN od ON e.src = od.src
-                  GROUP BY e.dst),
-          r$i AS (SELECT tele.id,
-                         (CAST(1 AS DOUBLE) - 0.85) * tele.t
-                           + 0.85 * COALESCE(c$i.c, CAST(0 AS DOUBLE)) AS rank
-                  FROM tele LEFT JOIN c$i USING (id))"""
-    }.mkString(",\n")
-    s"""WITH ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-                    FROM lineitem),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
-            nodes AS (SELECT DISTINCT src AS id FROM e),
-            seeds AS (SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS id
-                      FROM lineitem WHERE l_suppkey < 5),
-            ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM seeds),
-            tele AS (SELECT nodes.id,
-                            COALESCE(s.one, 0.0) / (SELECT n FROM ns) AS t
-                     FROM nodes LEFT JOIN
-                       (SELECT id, 1.0 AS one FROM seeds) s USING (id)),
-            od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-                   FROM e GROUP BY src),
-            r0 AS (SELECT id, t AS rank FROM tele),
-            $iters
-        SELECT id, round(rank, 9) AS rank FROM r3"""
-  }
-
-  /** Generated oracle for q_label_prop: 3 synchronous label-propagation
-    * rounds unrolled as CTEs; the argmax-with-min-label-tiebreak is the
-    * same (count desc, label asc) ordering the engine's min_by struct
-    * encodes. */
-  private def labelPropOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      s"""c$i AS (SELECT e.dst AS id, l${i - 1}.label, COUNT(*) AS c
-                  FROM e JOIN l${i - 1} ON e.src = l${i - 1}.id
-                  GROUP BY 1, 2),
-          l$i AS (SELECT id, label FROM c$i
-                  QUALIFY row_number() OVER (PARTITION BY id
-                    ORDER BY c DESC, label ASC) = 1)"""
-    }.mkString(",\n")
-    s"""WITH ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-                    FROM lineitem),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
-            l0 AS (SELECT DISTINCT src AS id, src AS label FROM e),
-            $iters
-        SELECT id, label FROM l3"""
-  }
-
-  /** Squared-L2 distance between 1-based slices of two DuckDB list
-    * columns as the SAME left-associative addition chain the engine's
-    * Similarity.subDist folds — bit-identical doubles. */
-  private def pqDistSql(aVec: String, bVec: String,
-                        off: Int, subDim: Int): String =
-    (1 to subDim).map { i =>
-      val x = s"(CAST($aVec[${off + i}] AS DOUBLE) - CAST($bVec[${off + i}] AS DOUBLE))"
-      s"($x * $x)"
-    }.reduceLeft((a, b) => s"($a + $b)")
-
-  /** Generated oracle for q_pq_topk (and its broadcast-codebook twin at
-    * nCodes=256): per-subspace argmin encode (QUALIFY row_number over
-    * (dist, code) — the engine's array_min struct ordering) + ADC
-    * re-derived by joining each row's code back to the codebook.
-    * Codebooks are the vec_id<nCodes seed slices, rebuilt in SQL. */
-  private def pqTopkOracleSql(nCodes: Int = 8): String = {
-    val subDim = 16
-    val assigns = (0 until 4).map { m =>
-      s"""a$m AS (SELECT vec_id, code FROM (
-                    SELECT e.vec_id, cb.code,
-                           ${pqDistSql("e.embedding", "cb.embedding", m * subDim, subDim)} AS d
-                    FROM embeddings e CROSS JOIN cb) t
-                  QUALIFY row_number() OVER (PARTITION BY vec_id
-                    ORDER BY d ASC, code ASC) = 1)"""
-    }.mkString(",\n")
-    val adc = (0 until 4)
-      .map(m => pqDistSql("q.qv", s"c$m.embedding", m * subDim, subDim))
-      .reduceLeft((a, b) => s"($a + $b)")
-    s"""WITH cb AS (SELECT vec_id AS code, embedding FROM embeddings
-                    WHERE vec_id < $nCodes),
-            q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-            $assigns
-        SELECT e.vec_id,
-               a0.code AS code_0, a1.code AS code_1,
-               a2.code AS code_2, a3.code AS code_3,
-               round($adc, 6) AS adc_dist
-        FROM embeddings e
-        JOIN a0 ON a0.vec_id = e.vec_id
-        JOIN a1 ON a1.vec_id = e.vec_id
-        JOIN a2 ON a2.vec_id = e.vec_id
-        JOIN a3 ON a3.vec_id = e.vec_id
-        JOIN cb c0 ON c0.code = a0.code
-        JOIN cb c1 ON c1.code = a1.code
-        JOIN cb c2 ON c2.code = a2.code
-        JOIN cb c3 ON c3.code = a3.code
-        CROSS JOIN q
-        ORDER BY adc_dist ASC, e.vec_id ASC LIMIT 10"""
-  }
-
-  /** Generated oracle for q_ivf_topk_bcast: the q_ivf_topk oracle shape
-    * with the 256-cell codebook and nprobe=8 (same 1/32 scan fraction). */
-  private def ivfTopkBcastOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 256),
-            qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-            asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-               SELECT e.vec_id, e.v, c.cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-               FROM e, c) WHERE rn = 1),
-            probe AS (SELECT cent_id AS cell FROM (
-               SELECT c.cent_id,
-                      ROW_NUMBER() OVER (ORDER BY round(${duckCos("c.cv", "qv.q")}, 6) DESC,
-                                         c.cent_id) AS rn
-               FROM c, qv) WHERE rn <= 8)
-       SELECT vec_id, cell, round(${duckCos("asg.v", "qv.q")}, 6) AS cosine_sim
-       FROM asg JOIN probe USING (cell), qv
-       ORDER BY round(${duckCos("asg.v", "qv.q")}, 6) DESC, vec_id LIMIT 10"""
-
-  /** Generated nprobe-sweep oracle: the q_ann_recall CTEs with the probe
-    * width parameterized — shared truth (ex) and assignment (asg), one
-    * probe/candidate/recall branch per nprobe, unioned with the nprobe
-    * literal. */
-  private def ivfNprobeSweepOracleSql(probes: Seq[Int]): String = {
-    val branches = probes.map { np =>
-      s"""p$np AS (SELECT query_id, cell FROM (
-               SELECT q.query_id, c.cent_id AS cell,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
-               FROM q, c) WHERE rn <= $np),
-           ap$np AS (SELECT query_id, vec_id FROM (
-               SELECT p.query_id, a.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY p.query_id
-                        ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
-               FROM p$np p JOIN asg a ON a.cell = p.cell
-                           JOIN q ON q.query_id = p.query_id
-               WHERE a.vec_id <> p.query_id) WHERE rn <= 10),
-           r$np AS (SELECT n.query_id, n.n_exact,
-                           COALESCE(h.n_hits, 0) AS n_hits,
-                           round(COALESCE(h.n_hits, 0) / n.n_exact, 6) AS recall,
-                           $np AS nprobe
-                    FROM n LEFT JOIN (SELECT x.query_id, count(*) AS n_hits
-                                      FROM ex x JOIN ap$np a
-                                        ON x.query_id = a.query_id
-                                       AND x.vec_id = a.vec_id
-                                      GROUP BY 1) h USING (query_id))"""
-    }
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-            ex AS (SELECT query_id, vec_id FROM (
-               SELECT q.query_id, e.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-               FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-            asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-               SELECT e.vec_id, e.v, c.cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-               FROM e, c) WHERE rn = 1),
-            n AS (SELECT query_id, count(*) AS n_exact FROM ex GROUP BY 1),
-            ${branches.mkString(",\n")}
-       ${probes.map(np => s"SELECT * FROM r$np").mkString("\n UNION ALL ")}"""
-  }
-
-  /** Generated k-center oracle: the greedy selection unrolled into k-1
-    * MATERIALIZED 1-row rounds (round r cross-joins all previously selected
-    * 1-row CTEs and takes the max of the 6dp-rounded min cosine distance,
-    * id tiebreak — exactly the engine's per-round argmax). MATERIALIZED is
-    * load-bearing: each round references every earlier round, so the
-    * non-materialized form inlines exponentially. */
-  private def kcenterOracleSql(k: Int): String = {
-    val rounds = (2 to k).map { r =>
-      val prev = "c1" +: (2 until r).map(i => s"s$i")
-      val dists = prev.map(p => s"1.0 - ${duckCos("e.v", s"$p.v")}")
-      val body =
-        if (dists.size == 1) dists.head else s"least(${dists.mkString(", ")})"
-      s"""s$r AS MATERIALIZED (
-            SELECT e.vec_id, e.v, round($body, 6) AS d
-            FROM e, ${prev.mkString(", ")}
-            ORDER BY d DESC, e.vec_id ASC LIMIT 1)"""
-    }
-    val selects =
-      s"SELECT CAST(1 AS BIGINT) AS sel_rank, vec_id, CAST(NULL AS DOUBLE) AS radius FROM c1" +:
-        (2 to k).map(r => s"SELECT CAST($r AS BIGINT), vec_id, d FROM s$r")
-    s"""WITH e AS MATERIALIZED (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        c1 AS MATERIALIZED (SELECT vec_id, v FROM e ORDER BY vec_id ASC LIMIT 1),
-        ${rounds.mkString(",\n        ")}
-        ${selects.mkString("\n        UNION ALL ")}"""
-  }
-
-  /** Generated MMR oracle: pool = top-`pool` by 6dp relevance, then k-1
-    * unrolled MATERIALIZED greedy rounds. `(1 − λ)` is computed ONCE on
-    * the driver and shipped as the same double literal the engine uses —
-    * DuckDB would evaluate in-SQL `1.0 - 0.7` in exact DECIMAL (0.3),
-    * which is NOT the double Scala computes (0.30000000000000004). */
-  private def mmrOracleSql(pool: Int, k: Int, lambda: Double): String = {
-    val omLambda =
-      s"CAST(${new java.math.BigDecimal(1.0 - lambda).toPlainString} AS DOUBLE)"
-    val rounds = (2 to k).map { r =>
-      val prev = (1 until r).map(i => s"m$i")
-      val sims = prev.map(p => s"round(${duckCos("p.v", s"$p.v")}, 6)")
-      val ms = if (sims.size == 1) sims.head
-               else s"greatest(${sims.mkString(", ")})"
-      val excl = prev.map(p => s"p.vec_id <> $p.vec_id").mkString(" AND ")
-      s"""m$r AS MATERIALIZED (
-            SELECT p.vec_id, p.v, p.rel,
-                   round($lambda * p.rel - $omLambda * $ms, 6) AS sc
-            FROM pool p, ${prev.mkString(", ")}
-            WHERE $excl
-            ORDER BY sc DESC, p.vec_id ASC LIMIT 1)"""
-    }
-    val selects =
-      s"SELECT CAST(1 AS BIGINT) AS mmr_rank, vec_id, rel AS relevance, CAST(NULL AS DOUBLE) AS mmr_score FROM m1" +:
-        (2 to k).map(r => s"SELECT CAST($r AS BIGINT), vec_id, rel, sc FROM m$r")
-    s"""WITH e AS MATERIALIZED (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        qv AS MATERIALIZED (SELECT v AS q FROM e WHERE vec_id = 0),
-        pool AS MATERIALIZED (
-          SELECT e.vec_id, e.v, round(${duckCos("e.v", "qv.q")}, 6) AS rel
-          FROM e, qv ORDER BY rel DESC, e.vec_id ASC LIMIT $pool),
-        m1 AS MATERIALIZED (
-          SELECT vec_id, v, rel FROM pool
-          ORDER BY rel DESC, vec_id ASC LIMIT 1),
-        ${rounds.mkString(",\n        ")}
-        ${selects.mkString("\n        UNION ALL ")}"""
-  }
-
-  /** Generated NDCG oracle: the q_ann_recall exact/IVF CTEs with ranks
-    * kept, then gain/discount CASE chains built from the SAME dyadic
-    * constants as [[Similarity.ndcgDiscounts]] — every contribution is
-    * an exact multiple of 2⁻²⁰, so the per-query sums match Spark's
-    * bit-for-bit regardless of aggregation order. */
-  /** Shared oracle CTE chain for the exact-vs-IVF rank-list evals
-    * (q_ndcg, q_rbo): `ex` / `ap` are the two top-k lists with ranks. */
-  private def annListCtes(k: Int): String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-            ex AS (SELECT query_id, vec_id, rn FROM (
-               SELECT q.query_id, e.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-               FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= $k),
-            asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-               SELECT e.vec_id, e.v, c.cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-               FROM e, c) WHERE rn = 1),
-            probe AS (SELECT query_id, cell FROM (
-               SELECT q.query_id, c.cent_id AS cell,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
-               FROM q, c) WHERE rn <= 2),
-            ap AS (SELECT query_id, vec_id, rn FROM (
-               SELECT p.query_id, a.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY p.query_id
-                        ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
-               FROM probe p JOIN asg a ON a.cell = p.cell
-                            JOIN q ON q.query_id = p.query_id
-               WHERE a.vec_id <> p.query_id) WHERE rn <= $k)"""
-
-  private def ndcgOracleSql(k: Int): String = {
-    val discs = operators.Similarity.ndcgDiscounts(k)
-    def discCase(pos: String): String =
-      s"CASE $pos " + (1 to k).map(i =>
-        s"WHEN $i THEN CAST(${new java.math.BigDecimal(discs(i - 1)).toPlainString} AS DOUBLE)")
-        .mkString(" ") + " END"
-    def gainCase(rn: String): String =
-      s"COALESCE(CASE $rn " + (1 to k).map(i =>
-        s"WHEN $i THEN ${(1L << (k + 1 - i)) - 1}").mkString(" ") +
-        " END, 0)"
-    s"""WITH ${annListCtes(k)},
-            g AS (SELECT a.query_id, a.rn AS pos,
-                         ${gainCase("x.rn")} AS gain
-                  FROM ap a LEFT JOIN ex x
-                    ON a.query_id = x.query_id AND a.vec_id = x.vec_id),
-            dc AS (SELECT query_id,
-                          sum(gain * ${discCase("pos")}) AS dcg,
-                          min(CASE WHEN gain > 0 THEN pos END) AS first_hit
-                   FROM g GROUP BY 1),
-            ic AS (SELECT query_id,
-                          sum(${gainCase("rn")} * ${discCase("rn")}) AS idcg
-                   FROM ex GROUP BY 1)
-       SELECT d.query_id, round(d.dcg, 6) AS dcg, round(i.idcg, 6) AS idcg,
-              round(d.dcg / i.idcg, 6) AS ndcg,
-              CAST(d.first_hit AS BIGINT) AS first_hit,
-              round(1.0 / d.first_hit, 6) AS rr
-       FROM dc d JOIN ic i USING (query_id)"""
-  }
-
-  /** Generated RBO oracle: matched items contribute the literal suffix
-    * sum S(max(ra, rb)) — the same dyadic constants as
-    * [[operators.Similarity.rboSuffixSums]] — and (1−p) arrives as the
-    * driver-computed double literal (DuckDB's in-SQL `1.0 - 0.9` is exact
-    * DECIMAL, not Spark's double). */
-  private def rboOracleSql(k: Int, p: Double): String = {
-    val sums = operators.Similarity.rboSuffixSums(k, p)
-    val sCase = (1 to k).map(m =>
-      s"WHEN $m THEN CAST(${new java.math.BigDecimal(sums(m - 1)).toPlainString} AS DOUBLE)")
-      .mkString(" ")
-    val omp = new java.math.BigDecimal(1.0 - p).toPlainString
-    s"""WITH ${annListCtes(k)},
-            m AS (SELECT a.query_id, greatest(x.rn, a.rn) AS m
-                  FROM ap a JOIN ex x
-                    ON a.query_id = x.query_id AND a.vec_id = x.vec_id)
-       SELECT query_id, CAST(count(*) AS BIGINT) AS n_overlap,
-              round(CAST($omp AS DOUBLE) * sum(CASE m $sCase END), 6) AS rbo
-       FROM m GROUP BY query_id"""
-  }
-
-  /** Generated BPE-training oracle: the same unrolled merge rounds as
-    * [[operators.TextAnalytics.bpeTrain]] over the U+001F-wrapped vocab.
-    * Every w_r is referenced by both the next round's pair count and the
-    * next merge, so each level is MATERIALIZED (non-materialized CTEs
-    * inline per reference → 2^rounds copies of the base plan). `replace`
-    * scans left-to-right non-overlapping in both engines — BPE's merge
-    * order — and the winning pair flows through CTE columns, never
-    * through string literals. */
-  private def bpeCtes(rounds: Int): String = {
-    val S = "chr(31)"
-    val roundCtes = (1 to rounds).map { r =>
-      s"""p$r AS (SELECT s[i] AS a, s[i + 1] AS b, c FROM (
-              SELECT string_split(trim(w, $S), $S || $S) AS s, c
-              FROM w${r - 1}) t,
-              UNNEST(generate_series(1, len(s) - 1)) AS u(i)
-            WHERE len(s) >= 2),
-          b$r AS MATERIALIZED (
-            SELECT a, b, CAST(sum(c) AS BIGINT) AS cnt FROM p$r
-            GROUP BY 1, 2 ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-          w$r AS MATERIALIZED (
-            SELECT replace(p.w, $S || b.a || $S || $S || b.b || $S,
-                           $S || b.a || b.b || $S) AS w, p.c
-            FROM w${r - 1} p, b$r b)"""
-    }
-    s"""w0 AS MATERIALIZED (
-          SELECT regexp_replace(word, '(.)', $S || '\\1' || $S, 'g') AS w,
-                 CAST(count(*) AS BIGINT) AS c
-          FROM (SELECT u.word AS word FROM documents,
-                  UNNEST($duckTokens) AS u(word)
-                WHERE length(u.word) > 0 AND NOT contains(u.word, $S)) t
-          GROUP BY word),
-        ${roundCtes.mkString(",\n        ")}"""
-  }
-
-  private def bpeOracleSql(rounds: Int): String = {
-    val selects = (1 to rounds).map(r =>
-      s"SELECT CAST($r AS BIGINT) AS merge_rank, a AS sym_a, b AS sym_b, " +
-        s"cnt AS pair_count, a || b AS merged FROM b$r")
-    s"""WITH ${bpeCtes(rounds)}
-        ${selects.mkString("\n        UNION ALL ")}"""
-  }
-
-  /** Generated BPE-encode oracle: the training CTE chain, then every
-    * document wrapped and pushed through the same rank-ordered replace
-    * chain (the b_r winners are 1-row CTEs cross-joined in). */
-  private def bpeEncodeOracleSql(rounds: Int): String = {
-    val S = "chr(31)"
-    val enc = (1 to rounds).foldLeft("wd.wd")((acc, r) =>
-      s"replace($acc, $S || b$r.a || $S || $S || b$r.b || $S, " +
-        s"$S || b$r.a || b$r.b || $S)")
-    val froms = (1 to rounds).map(r => s"b$r").mkString(", ")
-    s"""WITH ${bpeCtes(rounds)},
-        wd AS (SELECT doc_id, CAST(len($duckTokens) AS BIGINT) AS n_words,
-                      array_to_string(list_transform($duckTokens,
-                        w -> regexp_replace(w, '(.)', $S || '\\1' || $S, 'g')),
-                        ' ') AS wd
-               FROM documents),
-        e AS (SELECT wd.doc_id, wd.n_words,
-                     (length($enc) - length(replace($enc, $S, ''))) // 2
-                       AS n_subwords
-              FROM wd, $froms)
-   SELECT doc_id, n_words, CAST(n_subwords AS BIGINT) AS n_subwords,
-          round(CASE WHEN n_words > 0
-            THEN CAST(n_subwords AS DOUBLE) / n_words END, 6)
-            AS subwords_per_word
-   FROM e"""
-  }
-
-  /** Generated Benford oracle: the same 2⁻²⁰-snapped expected-share
-    * literals as [[operators.ColumnHygiene.benfordShares]], leading digit
-    * via the identical `%.10e` formatting (see benford scaladoc: 10
-    * fractional digits is the cross-engine parity sweet spot — the JVM
-    * formats from the padded shortest rep, C from the exact expansion,
-    * and they only agree while decimal granularity dwarfs one ulp). */
-  private def benfordOracleSql: String = {
-    val eCase = "CASE digit " + (1 to 9).map(d =>
-      s"WHEN $d THEN CAST(${new java.math.BigDecimal(
-        operators.ColumnHygiene.benfordShares(d - 1)).toPlainString} AS DOUBLE)")
-      .mkString(" ") + " END"
-    s"""WITH c AS (SELECT CAST(substring(printf('%.10e', abs(o_totalprice)),
-                               1, 1) AS INTEGER) AS digit,
-                          CAST(count(*) AS BIGINT) AS n
-                   FROM orders
-                   WHERE o_totalprice IS NOT NULL AND abs(o_totalprice) > 0
-                   GROUP BY 1),
-             t AS (SELECT CAST(sum(n) AS DOUBLE) AS tt FROM c)
-        SELECT digit, n,
-               round(CAST(n AS DOUBLE) / tt, 6) AS share,
-               round($eCase, 6) AS expected_share,
-               round((CAST(n AS DOUBLE) - tt * ($eCase))
-                     * (CAST(n AS DOUBLE) - tt * ($eCase))
-                     / (tt * ($eCase)), 6) AS chi2_contrib
-        FROM c, t"""
-  }
-
-  /** Generated power-iteration oracle: the same centered covariance and
-    * unrolled v ← C·v rounds. cov/cen/comp are MATERIALIZED — cov is
-    * referenced by every round and DuckDB would otherwise inline (and
-    * recompute) the n·d² aggregate once per reference (the q_kcore
-    * exponential-CTE lesson); the round chain itself is linear. */
-  private def powerIterOracleSql(rounds: Int): String = {
-    val vrounds = (1 to rounds).map { r =>
-      s"""v$r AS MATERIALIZED (
-            SELECT c.i, sum(c.c * v.v) AS v
-            FROM cov c JOIN v${r - 1} v ON v.i = c.j GROUP BY 1)"""
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                                FROM embeddings),
-         comp AS MATERIALIZED (
-           SELECT vec_id, u.i AS i, v[u.i] AS x
-           FROM e, UNNEST(generate_series(1, len(v))) AS u(i)),
-         n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM e),
-         mu AS MATERIALIZED (SELECT i, avg(x) AS m FROM comp GROUP BY 1),
-         cen AS MATERIALIZED (SELECT c.vec_id, c.i, c.x - m.m AS xc
-                              FROM comp c JOIN mu m ON m.i = c.i),
-         cov0 AS (SELECT l.i AS i, r.i AS j, sum(l.xc * r.xc) AS s
-                  FROM cen l JOIN cen r ON l.vec_id = r.vec_id
-                  GROUP BY 1, 2),
-         cov AS MATERIALIZED (SELECT i, j, s / nn AS c FROM cov0, n),
-         v0 AS (SELECT i, 1.0 AS v FROM mu),
-         $vrounds,
-         cv AS (SELECT c.i, sum(c.c * v.v) AS w
-                FROM cov c JOIN v$rounds v ON v.i = c.j GROUP BY 1),
-         ray AS (SELECT sum(a.v * b.w) AS vw, sum(a.v * a.v) AS vv
-                 FROM v$rounds a JOIN cv b ON a.i = b.i),
-         nrm AS (SELECT sqrt(sum(v * v)) AS nn2 FROM v$rounds),
-         tr AS (SELECT sum(c) AS t FROM cov WHERE i = j),
-         sgn AS (SELECT CASE WHEN v < 0 THEN -1.0 ELSE 1.0 END AS sg
-                 FROM v$rounds ORDER BY abs(v) DESC, i ASC LIMIT 1)
-       SELECT a.i AS dim, round(sg * a.v / nn2, 6) AS loading,
-              round(vw / vv / t, 6) AS explained_var
-       FROM v$rounds a, nrm, sgn, ray, tr"""
-  }
-
-  /** Generated HITS oracle: the same unrolled a/h rounds, MATERIALIZED
-    * (each level is referenced twice). All sums stay integer-valued
-    * doubles, so the only real arithmetic is the final max division. */
-  private def hitsOracleSql(iters: Int): String = {
-    val rounds = (1 to iters).map { r =>
-      val hp = s"h${r - 1}"
-      s"""a$r AS MATERIALIZED (
-            SELECT e.dst AS id, sum($hp.val) AS val
-            FROM e JOIN $hp ON e.src = $hp.id GROUP BY 1),
-          h$r AS MATERIALIZED (
-            SELECT e.src AS id, sum(a$r.val) AS val
-            FROM e JOIN a$r ON e.dst = a$r.id GROUP BY 1)"""
-    }
-    s"""WITH e AS MATERIALIZED (
-          SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                 's' || CAST(l_suppkey AS VARCHAR) AS dst
-          FROM lineitem),
-        n AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-        h0 AS (SELECT id, CAST(1 AS DOUBLE) AS val FROM n),
-        ${rounds.mkString(",\n        ")},
-        m AS (SELECT (SELECT max(val) FROM a$iters) AS ma,
-                     (SELECT max(val) FROM h$iters) AS mh)
-     SELECT n.id, round(COALESCE(a$iters.val, 0) / ma, 6) AS authority,
-            round(COALESCE(h$iters.val, 0) / mh, 6) AS hub
-     FROM n LEFT JOIN a$iters USING (id) LEFT JOIN h$iters USING (id), m"""
-  }
-
-  /** Generated decayed-popularity oracle: the same 2⁻²⁰-snapped decay
-    * weight literals as [[operators.TimeSeries.decayWeights]] as a
-    * DOUBLE[] literal indexed by the month bucket. */
-  /** Generated q_tokenizer_fertility oracle: the q_bpe_encode CTE chain
-    * (same trained merges, same wrapped-word replace encoding) joined to
-    * each doc's language + char count and aggregated per language. */
-  private def fertilityOracleSql(rounds: Int): String = {
-    val S = "chr(31)"
-    val enc = (1 to rounds).foldLeft("wd.wd")((acc, r) =>
-      s"replace($acc, $S || b$r.a || $S || $S || b$r.b || $S, " +
-        s"$S || b$r.a || b$r.b || $S)")
-    val froms = (1 to rounds).map(r => s"b$r").mkString(", ")
-    s"""WITH ${bpeCtes(rounds)},
-        wd AS (SELECT doc_id, CAST(len($duckTokens) AS BIGINT) AS n_words,
-                      array_to_string(list_transform($duckTokens,
-                        w -> regexp_replace(w, '(.)', $S || '\\1' || $S, 'g')),
-                        ' ') AS wd
-               FROM documents),
-        e AS (SELECT wd.doc_id, wd.n_words,
-                     (length($enc) - length(replace($enc, $S, ''))) // 2
-                       AS n_subwords
-              FROM wd, $froms),
-        j AS (SELECT d.lang, e.n_words,
-                     CAST(e.n_subwords AS BIGINT) AS n_subwords, d.n_chars
-              FROM e JOIN documents d ON e.doc_id = d.doc_id)
-   SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(n_words) AS BIGINT) AS n_words,
-          CAST(SUM(n_subwords) AS BIGINT) AS n_subwords,
-          CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-          round(CASE WHEN SUM(n_words) > 0
-            THEN CAST(SUM(n_subwords) AS DOUBLE)
-               / CAST(SUM(n_words) AS DOUBLE) END, 6) AS subwords_per_word,
-          round(CASE WHEN SUM(n_subwords) > 0
-            THEN CAST(SUM(n_chars) AS DOUBLE)
-               / CAST(SUM(n_subwords) AS DOUBLE) END, 6) AS chars_per_subword
-   FROM j GROUP BY 1"""
-  }
-
-  /** Generated q_ktruss oracle: `rounds` UNROLLED idempotent peel
-    * rounds over the hash-thinned co-purchase graph (convergence
-    * measured at ≤ 4 rounds on every SF; extra rounds are no-ops, the
-    * q_kcore idempotence pattern). Each round = the 3-way triangle
-    * self-join + per-edge support aggregate + the ≥ k−2 filter,
-    * MATERIALIZED so DuckDB doesn't re-derive shared CTEs. */
-  private def ktrussOracleSql(rounds: Int, k: Int, thin: Double): String = {
-    val head =
-      s"""WITH pp AS MATERIALIZED (
-                 SELECT DISTINCT a.l_partkey AS x, b.l_partkey AS y
-                 FROM lineitem a JOIN lineitem b
-                   ON a.l_orderkey = b.l_orderkey
-                  AND a.l_partkey < b.l_partkey),
-              e0 AS MATERIALIZED (
-                 SELECT x AS a, y AS b FROM pp
-                 WHERE CAST(('0x' || substring(md5('ktruss:'
-                     || CAST(x AS VARCHAR) || ':' || CAST(y AS VARCHAR)),
-                     1, 8)) AS BIGINT) / 4294967296.0 < $thin)"""
-    val body = (1 to rounds).map { i =>
-      val p = i - 1
-      s""",
-              t$i AS MATERIALIZED (
-                 SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                 FROM e$p e1 JOIN e$p e2 ON e1.a = e2.a AND e1.b < e2.b
-                 JOIN e$p e3 ON e3.a = e1.b AND e3.b = e2.b),
-              s$i AS MATERIALIZED (
-                 SELECT a, b, COUNT(*) AS support FROM (
-                   SELECT x AS a, y AS b FROM t$i
-                   UNION ALL SELECT x AS a, z AS b FROM t$i
-                   UNION ALL SELECT y AS a, z AS b FROM t$i)
-                 GROUP BY 1, 2),
-              e$i AS MATERIALIZED (
-                 SELECT s.a, s.b FROM s$i s WHERE s.support >= ${k - 2})"""
-    }.mkString
-    head + body +
-      s"""
-         SELECT s.a AS src, s.b AS dst, s.support
-         FROM s$rounds s WHERE s.support >= ${k - 2}"""
-  }
-
-  private def decayedTopkOracleSql(halfLife: Double, k: Int,
-                                   maxBuckets: Int): String = {
-    val ws = operators.TimeSeries.decayWeights(maxBuckets, halfLife)
-      .map(w => s"CAST(${new java.math.BigDecimal(w).toPlainString} AS DOUBLE)")
-      .mkString(", ")
-    s"""WITH mx AS (SELECT max(o_orderdate) AS md FROM orders),
-            ag AS (SELECT l.l_partkey AS part_id,
-                          least(CAST(date_diff('day', o.o_orderdate, mx.md)
-                                     // 30 AS INT), ${maxBuckets - 1}) AS b,
-                          CAST(count(*) AS BIGINT) AS c
-                   FROM lineitem l
-                   JOIN orders o ON l.l_orderkey = o.o_orderkey, mx
-                   GROUP BY 1, 2)
-       SELECT part_id, round(sum(c * ([$ws])[b + 1]), 6) AS decayed_score
-       FROM ag GROUP BY part_id
-       ORDER BY decayed_score DESC, part_id ASC LIMIT $k"""
-  }
-
-  /** DuckDB cosine between two DOUBLE[] expressions (same formula as the
-    * engine's single-pass native expression). */
-  private def duckCos(a: String, b: String): String =
-    s"(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))))"
-
-  /** Shared generated CTE chain computing per-doc 60-bit simhash in DuckDB
-    * (the 60 per-bit ±1 sums and the bit packing are mechanical, so the
-    * SQL is built programmatically — same portable md5-derived token hash
-    * as the engine). Ends with relation `sh(doc_id, simhash)`. */
-  private def simhashCte(docFilter: String): String = {
-    val sums = (0 until 60)
-      .map(b => s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS b$b")
-      .mkString(", ")
-    val pack = (0 until 60)
-      .map(b => s"(CASE WHEN b$b > 0 THEN CAST(1 AS BIGINT) << $b ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
-    s"""WITH tok AS (SELECT DISTINCT doc_id, UNNEST($duckTokens) AS token
-                     FROM documents WHERE $docFilter),
-             h AS (SELECT doc_id,
-                     CAST(('0x' || substring(md5('7:' || token), 1, 15)) AS BIGINT) AS h
-                   FROM tok),
-             sums AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
-             sh AS (SELECT doc_id, $pack AS simhash FROM sums)"""
-  }
-
-  private def simhashOracleSql: String =
-    s"""${simhashCte("doc_id < 40")}
-        SELECT doc_id, simhash FROM sh"""
-
-  /** Generated oracle for q_simhash_neardup: same pigeonhole banding as
-    * the engine (10 bands × 6 bits, hamming via xor popcount). */
-  private def simhashNearDupOracleSql: String =
-    s"""${simhashCte("doc_id < 200")},
-             banded AS (SELECT doc_id, simhash, b AS band,
-                          (simhash >> (b * 6)) & 63 AS band_val
-                        FROM sh, (SELECT UNNEST(generate_series(0, 9)) AS b))
-        SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-               bit_count(xor(a.simhash, c.simhash)) AS hamming
-        FROM banded a JOIN banded c USING (band, band_val)
-        WHERE a.doc_id < c.doc_id
-          AND bit_count(xor(a.simhash, c.simhash)) <= 8"""
-
-  /** Generated oracle for q_lsh_neardup: the engine's deterministic
-    * hyperplanes are inlined as DOUBLE[] literals so DuckDB reproduces the
-    * exact bucketing + re-rank. */
-  /** DuckDB expression computing the engine's hyperplane LSH bucket id of
-    * a DOUBLE[] column `v` (plane literals from the same deterministic
-    * generator the engine uses). */
-  private def lshBucketSql(v: String): String = {
-    val planes = Similarity.hyperplanes(6, 64)
-    planes.zipWithIndex.map { case (p, i) =>
-      val lit = "[" + p.map(_.toString).mkString(", ") + "]"
-      s"(CASE WHEN list_dot_product($v, $lit) >= 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
+    RelationalQueries.openTickets.build(spark, "/root/testdata/sf0.001")
+
+  /** `qs`, after checking that no name is declared twice. */
+  private[graft] def unique(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** Every query, family by family. */
+  val registry: Seq[Q] = unique(Seq(
+    RelationalQueries.all, TimeSeriesQueries.all, EventQueries.all,
+    TextQueries.all, DedupQueries.all, CorpusQueries.all,
+    SimilarityQueries.all, GraphQueries.all, StatsQueries.all,
+    HypothesisTestQueries.all, AgreementQueries.all).flatten)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
+
+  /** The registry entries for `names` (trimmed, blanks dropped), in order.
+    * Throws, listing every unknown name, rather than running a subset. */
+  def named(names: Seq[String]): Seq[Q] = {
+    val byName = registry.map(q => q.name -> q).toMap
+    val wanted = names.map(_.trim).filter(_.nonEmpty)
+    val unknown = wanted.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    wanted.map(byName)
   }
-
-  private def lshNeardupOracleSql: String = {
-    val bucket = lshBucketSql("v")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             b AS (SELECT vec_id, v, $bucket AS bucket FROM e)
-        SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-               round(${duckCos("a.v", "c.v")}, 6) AS cosine_sim
-        FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-        WHERE ${duckCos("a.v", "c.v")} >= 0.3"""
-  }
-
-  /** Generated oracle for q_lsh_topk: same plane literals; the query's
-    * bucket is computed in SQL, candidates are its bucket-mates, re-ranked
-    * by the 6dp-rounded cosine with id tiebreak. */
-  private def lshTopkOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             qb AS (SELECT ${lshBucketSql("qv")} AS bucket FROM q),
-             b AS (SELECT vec_id, v, ${lshBucketSql("v")} AS bucket FROM e)
-        SELECT vec_id, round(${duckCos("b.v", "q.qv")}, 6) AS cosine_sim
-        FROM b JOIN qb USING (bucket), q
-        ORDER BY cosine_sim DESC, vec_id LIMIT 10"""
-
-  /** Generated oracle for q_lsh_topk_mp: DuckDB independently re-derives
-    * the multi-probe bucket set — base bucket from the plane-literal signs,
-    * plus one-bit flips of the `probes-1` lowest-|dot| planes (the same
-    * perturbation rule as Similarity.lshProbeBuckets) — then re-ranks the
-    * union of those buckets. */
-  private def lshTopkMpOracleSql: String = {
-    val planes = Similarity.hyperplanes(6, 64)
-    val planeValues = planes.zipWithIndex.map { case (p, i) =>
-      s"($i, [${p.map(_.toString).mkString(", ")}])"
-    }.mkString(",\n                 ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             planes(i, p) AS (SELECT * FROM (VALUES
-                 $planeValues) t(i, p)),
-             dots AS (SELECT i, list_dot_product(p, qv) AS d FROM planes, q),
-             base AS (SELECT CAST(SUM(CASE WHEN d >= 0 THEN 1 << i ELSE 0 END)
-                        AS INT) AS b FROM dots),
-             flips AS (SELECT i FROM dots ORDER BY abs(d), i LIMIT 3),
-             buckets AS (SELECT b AS bucket FROM base
-                         UNION ALL
-                         SELECT xor(b, 1 << i) FROM base, flips),
-             vb AS (SELECT vec_id, v, ${lshBucketSql("v")} AS bucket FROM e)
-        SELECT vec_id, round(${duckCos("vb.v", "q.qv")}, 6) AS cosine_sim
-        FROM vb JOIN buckets USING (bucket), q
-        ORDER BY cosine_sim DESC, vec_id LIMIT 10"""
-  }
-
-  /** Generated oracle for q_lang_ngram: profile literals come from the same
-    * TextFunctions.trigramProfiles, so Spark and DuckDB score identical
-    * trigram sets by construction. */
-  private def langNgramOracleSql: String = {
-    val tri = """CASE WHEN length(norm) < 3 THEN CAST([] AS VARCHAR[])
-                 ELSE [substring(norm, CAST(i AS INT), 3)
-                       FOR i IN generate_series(1, length(norm) - 2)] END"""
-    def inList(prof: Seq[String]) = prof.map(p => s"'$p'").mkString(", ")
-    val scoreCols = TextFunctions.trigramProfiles.map { case (lang, prof) =>
-      s"""round(CASE WHEN len(tri) > 0
-             THEN CAST(len(list_filter(tri, t -> t IN (${inList(prof)}))) AS DOUBLE) / len(tri)
-             ELSE 0.0 END, 6) AS ${lang}_score"""
-    }.mkString(", ")
-    val rawScores = TextFunctions.trigramProfiles.map { case (lang, prof) =>
-      s"""CASE WHEN len(tri) > 0
-            THEN CAST(len(list_filter(tri, t -> t IN (${inList(prof)}))) AS DOUBLE) / len(tri)
-            ELSE 0.0 END AS ${lang}_raw"""
-    }.mkString(", ")
-    val best = TextFunctions.trigramProfiles.map(p => s"${p._1}_raw").mkString("greatest(", ", ", ")")
-    val guess = TextFunctions.trigramProfiles.foldRight("'unknown'") { case ((lang, _), acc) =>
-      s"CASE WHEN ${lang}_raw = best AND best >= 0.05 THEN '$lang' ELSE $acc END"
-    }
-    s"""WITH n AS (SELECT doc_id, lang AS declared_lang,
-                     trim(regexp_replace(lower(text), '[^a-z]+', ' ', 'g')) AS norm
-                   FROM documents),
-            t AS (SELECT doc_id, declared_lang, $tri AS tri FROM n),
-            s AS (SELECT doc_id, declared_lang, $scoreCols, $rawScores FROM t),
-            g AS (SELECT *, $best AS best FROM s)
-       SELECT doc_id, declared_lang,
-              ${TextFunctions.trigramProfiles.map(p => s"${p._1}_score").mkString(", ")},
-              $guess AS lang_guess
-       FROM g"""
-  }
-
-  /** Shared oracle for q_jaccard_pairs AND q_jaccard_prefix (the prefix
-    * filter is an exact optimization — both must match this bit-for-bit). */
-  private def jaccardPairsOracleSql: String =
-    """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 60),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-         SELECT i.id_a, i.id_b,
-                round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.doc_id
-         JOIN sizes sb ON i.id_b = sb.doc_id
-         WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3"""
-
-  /** DuckDB oracle SQL per query (same tables, same column names).
-    * The three sketch-boundary queries (q_approx_distinct,
-    * q_hll_state_merge, q_quality_filter_approx) emit exact-side columns
-    * plus deterministic acceptance booleans, so their oracles pin the
-    * verdicts to TRUE — every query in the map is hash-checked. */
-  def oracleSql: Map[String, String] = Map(
-    "q_lsh_topk" -> lshTopkOracleSql,
-    "q_lsh_topk_mp" -> lshTopkMpOracleSql,
-    "q_approx_distinct" ->
-      """SELECT l_returnflag,
-                CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-                TRUE AS within_bound
-         FROM lineitem GROUP BY 1""",
-    "q_hll_state_merge" ->
-      """SELECT o_orderstatus,
-                CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_exact,
-                TRUE AS merge_close_to_scratch, TRUE AS within_bound
-         FROM orders GROUP BY 1""",
-    "q_quality_filter_approx" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-                TRUE AS kept_consistent, TRUE AS rank_ok
-         FROM documents GROUP BY lang""",
-    "q_hash_split" ->
-      """SELECT doc_id, pct AS split_pct,
-                CASE WHEN pct < 80 THEN 'train'
-                     WHEN pct < 90 THEN 'val' ELSE 'test' END AS split
-         FROM (SELECT doc_id,
-                 CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) % 100 AS pct
-               FROM documents)""",
-    "q_epoch_schedule" ->
-      """WITH a AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS avail_tokens
-                    FROM documents GROUP BY 1),
-              w AS (SELECT source, avail_tokens,
-                           sqrt(CAST(avail_tokens AS DOUBLE)) AS wt
-                    FROM a),
-              t AS (SELECT CAST(sum(CAST(wt AS DECIMAL(28,12))) AS DOUBLE) AS ws,
-                           CAST(sum(avail_tokens) AS DOUBLE) AS total FROM w)
-         SELECT source, avail_tokens,
-                round(wt / ws, 6) AS target_share,
-                round(1.0 * total * wt / ws, 6) AS target_tokens,
-                round(1.0 * total * wt / ws
-                      / CAST(avail_tokens AS DOUBLE), 6) AS epochs,
-                round(1.0 * total * wt / ws
-                      / CAST(avail_tokens AS DOUBLE), 6) > 1.0 AS over_epoch
-         FROM w, t""",
-    "q_group_cap" ->
-      """SELECT doc_id, lang, CAST(rn AS BIGINT) AS sample_rank
-         FROM (SELECT doc_id, lang,
-                 ROW_NUMBER() OVER (PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-               FROM documents)
-         WHERE rn <= 50""",
-    "q_zscore" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag,
-                round((v - s / n)
-                  / sqrt(greatest((s2 - (s * s) / n) / (n - 1.0), 0.0)), 6) AS qty_z
-         FROM (SELECT l_orderkey, l_linenumber, l_returnflag,
-                 CAST(l_quantity AS DOUBLE) AS v,
-                 SUM(CAST(l_quantity AS DOUBLE))
-                   OVER (PARTITION BY l_returnflag) AS s,
-                 SUM(CAST(l_quantity AS DOUBLE) * CAST(l_quantity AS DOUBLE))
-                   OVER (PARTITION BY l_returnflag) AS s2,
-                 CAST(COUNT(*) OVER (PARTITION BY l_returnflag) AS DOUBLE) AS n
-               FROM lineitem)""",
-    "q_quality_filter" ->
-      """WITH q AS (SELECT doc_id, round(
-              0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-            + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0, 1.0)
-            + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                       THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END) < 0.2
-                       THEN 1.0 ELSE 0.0 END), 6) AS quality
-            FROM (SELECT doc_id, text,
-                    CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS DOUBLE) AS n,
-                    CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                      t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                      AS BIGINT) AS ns,
-                    length(text) - length(regexp_replace(text,
-                      '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                  FROM documents)),
-           r AS (SELECT d.doc_id, d.lang, q.quality,
-                   percent_rank() OVER (PARTITION BY d.lang
-                     ORDER BY q.quality, d.doc_id) AS pr
-                 FROM documents d JOIN q ON d.doc_id = q.doc_id)
-         SELECT doc_id, lang, quality, round(pr, 6) AS q_rank
-         FROM r WHERE pr >= 0.25""",
-    "q_token_chunks" ->
-      """WITH t AS (SELECT doc_id,
-                      CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS toks
-                    FROM documents),
-              s AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-              x AS (SELECT doc_id, toks,
-                      UNNEST(generate_series(0, n - 1, 32)) AS start FROM s)
-         SELECT doc_id,
-                CAST(start // 32 AS BIGINT) AS chunk_id,
-                CAST(len(toks[start + 1 : start + 32]) AS BIGINT) AS n_chunk_tokens,
-                array_to_string(toks[start + 1 : start + 32], ' ') AS chunk_text
-         FROM x""",
-    "q_pack_bins" ->
-      """WITH t AS (SELECT lang, doc_id,
-                      CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS BIGINT) AS tok
-                    FROM documents),
-              r AS (SELECT lang, doc_id, tok,
-                      CAST(SUM(tok) OVER (PARTITION BY lang ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS BIGINT) - tok AS bef
-                    FROM t)
-         SELECT lang, CAST(floor(bef / 512.0) AS BIGINT) AS bin,
-                CAST(COUNT(*) AS BIGINT) AS n_docs,
-                CAST(SUM(tok) AS BIGINT) AS bin_tokens,
-                MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         FROM r GROUP BY lang, bin""",
-    "q_enrich_errors" ->
-      """SELECT o.o_orderkey, o.o_custkey, c.c_name,
-                CASE WHEN c.c_custkey IS NULL THEN 'chat not found'
-                     ELSE CAST(NULL AS VARCHAR) END AS error
-         FROM orders o
-         LEFT JOIN (SELECT c_custkey, c_name FROM customer
-                    WHERE c_custkey % 3 <> 0) c
-           ON o.o_custkey = c.c_custkey""",
-    "q_stratified_sample" ->
-      """SELECT doc_id, lang, sample_frac, sample_u
-         FROM (SELECT doc_id, lang,
-                 CASE lang WHEN 'en' THEN 0.25 WHEN 'zh' THEN 0.5
-                           WHEN 'es' THEN 0.75 ELSE 1.0 END AS sample_frac,
-                 CAST(('0x' || substring(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) / 4294967296.0 AS sample_u
-               FROM documents)
-         WHERE sample_u < sample_frac""",
-    "q_weighted_sample" ->
-      """SELECT doc_id, lang, n_chars, es_key, rnk
-         FROM (SELECT doc_id, lang, n_chars, es_key,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY lang
-                   ORDER BY es_key ASC, doc_id ASC) AS BIGINT) AS rnk
-               FROM (SELECT doc_id, lang, n_chars,
-                       round(-ln(CAST(('0x' || substring(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                         AS BIGINT) / 4294967296.0) / n_chars, 9) AS es_key
-                     FROM documents WHERE n_chars > 0))
-         WHERE rnk <= 20""",
-    "q_range_join_bucketed" ->
-      """WITH iv AS (SELECT o_orderkey,
-                       date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS lo_day
-                     FROM orders WHERE o_orderkey % 937 = 0),
-              pt AS (SELECT date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS ship_day
-                     FROM lineitem)
-         SELECT o_orderkey, count(*) AS n_shipped,
-                min(ship_day) AS first_day, max(ship_day) AS last_day
-         FROM iv JOIN pt ON pt.ship_day BETWEEN iv.lo_day AND iv.lo_day + 90
-         GROUP BY 1""",
-    "q_agg_state_merge" ->
-      """SELECT o_orderstatus,
-                count(o_totalprice) AS state_cnt,
-                round(sum(o_totalprice), 2) AS state_sum,
-                min(o_totalprice) AS state_min,
-                max(o_totalprice) AS state_max
-         FROM orders GROUP BY 1""",
-    "q_expectations" ->
-      """WITH base AS (SELECT count(*) AS n_rows,
-                CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-                CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-                CAST(sum(CASE WHEN o_orderstatus IN ('F','O','P') THEN 0 ELSE 1 END) AS BIGINT) AS v3,
-                CAST(sum(CASE WHEN o_totalprice > 0 THEN 0 ELSE 1 END) AS BIGINT) AS v4,
-                CAST(sum(CASE WHEN o_totalprice < 100000.0 THEN 0 ELSE 1 END) AS BIGINT) AS v5
-              FROM orders)
-         SELECT "check", n_rows, n_violations,
-                round(CASE WHEN n_rows > 0
-                  THEN CAST(n_violations AS DOUBLE) / n_rows ELSE 0.0 END, 6)
-                  AS violation_rate,
-                critical, n_violations = 0 AS passed
-         FROM (SELECT 'orderkey_not_null' AS "check", n_rows, v1 AS n_violations, true AS critical FROM base
-               UNION ALL SELECT 'custkey_not_null', n_rows, v2, true FROM base
-               UNION ALL SELECT 'status_in_domain', n_rows, v3, false FROM base
-               UNION ALL SELECT 'price_positive', n_rows, v4, false FROM base
-               UNION ALL SELECT 'price_under_100k', n_rows, v5, false FROM base)""",
-    "q_sorted_neighborhood" ->
-      """WITH ranked AS (SELECT lang, doc_id,
-                CAST(ROW_NUMBER() OVER (PARTITION BY lang
-                  ORDER BY length(text), doc_id) AS BIGINT) AS rnk
-              FROM documents WHERE doc_id < 120)
-         SELECT a.lang, a.doc_id AS id_a, b.doc_id AS id_b,
-                b.rnk - a.rnk AS rank_gap
-         FROM ranked a JOIN ranked b
-           ON a.lang = b.lang AND b.rnk > a.rnk AND b.rnk <= a.rnk + 3""",
-    "q_temperature_mix" ->
-      """WITH counts AS (SELECT lang, COUNT(*) AS n_group
-                         FROM documents GROUP BY lang),
-              stats AS (SELECT lang, n_group,
-                          ROUND(POW(CAST(n_group AS DOUBLE)
-                            / (SELECT MIN(n_group) FROM counts), -0.5), 6) AS keep_frac
-                        FROM counts)
-         SELECT doc_id, lang, n_group, keep_frac, mix_u
-         FROM (SELECT d.doc_id, d.lang, s.n_group, s.keep_frac,
-                 CAST(('0x' || substring(md5('temp:' || CAST(d.doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) / 4294967296.0 AS mix_u
-               FROM documents d JOIN stats s ON d.lang = s.lang)
-         WHERE mix_u < keep_frac""",
-    "q_pii_mask" ->
-      """SELECT doc_id,
-                regexp_replace(
-                  regexp_replace(
-                    regexp_replace(
-                      text || ' Contact user' || CAST(doc_id AS VARCHAR)
-                        || '@example.com or +1 (555) 010-'
-                        || lpad(CAST(doc_id AS VARCHAR), 4, '0')
-                        || ' via https://ex.example/d/' || CAST(doc_id AS VARCHAR),
-                      'https?://[^\s]+', '[URL]', 'g'),
-                    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-                  '\+?[0-9][0-9()\s.-]{6,}[0-9]', '[PHONE]', 'g') AS masked
-         FROM documents""",
-    "q_strip_markup" ->
-      """SELECT doc_id,
-                trim(regexp_replace(
-                  replace(replace(replace(replace(replace(
-                    regexp_replace(
-                      '<div class="hero"><h1>' || text
-                        || '</h1><p>&amp;lt; kept, &lt;raw&gt; &amp; &quot;quoted&quot; &#39;s</p><br/>',
-                      '<[^>]*>', ' ', 'g'),
-                    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                    '&#39;', ''''), '&amp;', '&'),
-                  '\s+', ' ', 'g')) AS clean
-         FROM documents""",
-    "q_interval_join" ->
-      """SELECT c.user_id, c.click_id, c.click_ts,
-                p.purchase_id, p.purchase_ts, p.value
-         FROM (SELECT user_id, event_id AS click_id, ts AS click_ts
-               FROM events WHERE event_type = 'click') c
-         JOIN (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts, value
-               FROM events WHERE event_type = 'purchase') p
-           ON c.user_id = p.user_id
-          AND p.purchase_ts >= c.click_ts
-          AND p.purchase_ts <= c.click_ts + INTERVAL 30 MINUTE""",
-    "q_apply_diff" ->
-      """SELECT o_orderkey,
-                CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 10
-                     ELSE o_totalprice END AS o_totalprice,
-                o_orderstatus
-         FROM orders WHERE o_orderkey % 11 <> 0""",
-    "q_bm25" ->
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
-              corpus AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                                avg(dl) AS avgdl FROM lens),
-              tf AS (SELECT doc_id, term, count(*) AS tf
-                     FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
-                     WHERE term IN ('data', 'spark', 'merge')
-                     GROUP BY doc_id, term),
-              dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-         SELECT doc_id, score FROM (
-           SELECT f.doc_id,
-                  round(sum(ln(1.0 + (c.n_docs - d.df + 0.5) / (d.df + 0.5))
-                    * f.tf * 2.2
-                    / (f.tf + 1.2 * (0.25 + 0.75 * l.dl / c.avgdl))), 6) AS score
-           FROM tf f
-           JOIN dfreq d ON f.term = d.term
-           JOIN lens l ON f.doc_id = l.doc_id
-           CROSS JOIN corpus c
-           GROUP BY f.doc_id)
-         ORDER BY score DESC, doc_id ASC
-         LIMIT 20""",
-    "q_prf_expansion" ->
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
-              corpus AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                                avg(dl) AS avgdl FROM lens),
-              tfq AS (SELECT doc_id, term, count(*) AS tf
-                      FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
-                      WHERE term IN ('data', 'spark', 'merge')
-                      GROUP BY doc_id, term),
-              dfq AS (SELECT term, count(*) AS df FROM tfq GROUP BY term),
-              fb AS (SELECT doc_id FROM (
-                 SELECT f.doc_id,
-                        round(sum(ln(1.0 + (c.n_docs - d.df + 0.5) / (d.df + 0.5))
-                          * f.tf * 2.2
-                          / (f.tf + 1.2 * (0.25 + 0.75 * l.dl / c.avgdl))), 6) AS score
-                 FROM tfq f
-                 JOIN dfq d ON f.term = d.term
-                 JOIN lens l ON f.doc_id = l.doc_id
-                 CROSS JOIN corpus c
-                 GROUP BY f.doc_id)
-               ORDER BY score DESC, doc_id ASC LIMIT 3),
-              tfa AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-                      FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
-                      GROUP BY 1, 2),
-              dfa AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-                      FROM tfa GROUP BY 1),
-              fbt AS (SELECT term, CAST(sum(tf) AS BIGINT) AS tf_feedback
-                      FROM tfa JOIN fb USING (doc_id)
-                      WHERE term NOT IN ('data', 'spark', 'merge')
-                      GROUP BY 1)
-         SELECT term, tf_feedback, df,
-                round(CAST(tf_feedback AS DOUBLE) * ln(c.n_docs / df), 6)
-                  AS expansion_weight
-         FROM fbt JOIN dfa USING (term), corpus c
-         ORDER BY expansion_weight DESC, term ASC LIMIT 10""",
-    "q_snapshot_diff" ->
-      """WITH o AS (SELECT o_orderkey, o_totalprice, o_orderstatus
-                    FROM orders WHERE o_orderkey % 7 <> 0),
-              n AS (SELECT o_orderkey,
-                      CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 10
-                           ELSE o_totalprice END AS o_totalprice,
-                      o_orderstatus
-                    FROM orders WHERE o_orderkey % 11 <> 0)
-         SELECT coalesce(n.o_orderkey, o.o_orderkey) AS o_orderkey,
-                CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-                     WHEN n.o_orderkey IS NULL THEN 'delete'
-                     WHEN (n.o_totalprice IS DISTINCT FROM o.o_totalprice)
-                       OR (n.o_orderstatus IS DISTINCT FROM o.o_orderstatus)
-                       THEN 'update'
-                     ELSE 'unchanged' END AS change_type,
-                n.o_totalprice, n.o_orderstatus
-         FROM n FULL JOIN o ON n.o_orderkey = o.o_orderkey""",
-    "q_column_profile" ->
-      """SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-                CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-                count(DISTINCT o_orderstatus) AS n_distinct,
-                CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-                CAST(max(o_orderstatus) AS VARCHAR) AS max_str
-         FROM orders
-         UNION ALL
-         SELECT 'o_custkey', count(*),
-                CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                count(DISTINCT o_custkey),
-                CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderpriority', count(*),
-                CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                count(DISTINCT o_orderpriority),
-                CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR)
-         FROM orders""",
-    "q_contamination" ->
-      s"""WITH ctok AS (SELECT doc_id, $duckTokens AS t
-                        FROM documents WHERE doc_id >= 50),
-              btok AS (SELECT doc_id, $duckTokens AS t
-                       FROM documents WHERE doc_id < 50),
-              csh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-                      FROM ctok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              bsh AS (SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS shingle
-                      FROM btok, UNNEST(generate_series(1, len(t) - 2)) AS u(i))
-         SELECT c.doc_id, count(*) AS n_contaminated_shingles
-         FROM csh c JOIN bsh b ON c.shingle = b.shingle
-         GROUP BY c.doc_id""",
-    "q_repetition" ->
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              base AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-                         CASE WHEN len(t) > 0
-                           THEN round(1.0 - CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 6)
-                           ELSE 0.0 END AS dup_token_frac
-                       FROM tok),
-              bg AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS b
-                     FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              cnt AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
-              agg AS (SELECT doc_id, max(c) AS top_c, sum(c) AS n_bg
-                      FROM cnt GROUP BY 1)
-         SELECT b.doc_id, b.n_tokens, b.dup_token_frac,
-                round(coalesce(CAST(a.top_c AS DOUBLE) / a.n_bg, 0.0), 6) AS top_bigram_frac
-         FROM base b LEFT JOIN agg a ON b.doc_id = a.doc_id""",
-    "q_gopher_rules" ->
-      s"""WITH tok AS (SELECT doc_id, text, $duckTokens AS t FROM documents),
-              base AS (SELECT doc_id,
-                         CAST(len(t) AS BIGINT) AS n_tokens,
-                         CASE WHEN len(t) > 0
-                           THEN round(1.0 - CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 6)
-                           ELSE 0.0 END AS dup_token_frac,
-                         CASE WHEN len(t) > 0
-                           THEN round(CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / len(t), 6)
-                           ELSE 0.0 END AS mean_word_len,
-                         CAST(len(list_filter(t,
-                           x -> x IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS n_stopwords
-                       FROM tok),
-              bg AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS b
-                     FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              cnt AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
-              agg AS (SELECT doc_id, max(c) AS top_c, sum(c) AS n_bg
-                      FROM cnt GROUP BY 1),
-              sig AS (SELECT base.doc_id, base.n_tokens, base.mean_word_len,
-                             base.dup_token_frac,
-                             round(coalesce(CAST(agg.top_c AS DOUBLE) / agg.n_bg, 0.0), 6)
-                               AS top_bigram_frac,
-                             base.n_stopwords
-                      FROM base LEFT JOIN agg ON base.doc_id = agg.doc_id)
-         SELECT *,
-                n_tokens BETWEEN 50 AND 100000 AS r_word_count,
-                mean_word_len BETWEEN 4.4 AND 10.0 AS r_mean_word_len,
-                dup_token_frac <= 0.6 AS r_repetition,
-                top_bigram_frac <= 0.06 AS r_top_bigram,
-                n_stopwords >= 2 AS r_stopwords,
-                (n_tokens BETWEEN 50 AND 100000)
-                  AND (mean_word_len BETWEEN 4.4 AND 10.0)
-                  AND dup_token_frac <= 0.6
-                  AND top_bigram_frac <= 0.06
-                  AND n_stopwords >= 2 AS keep
-         FROM sig""",
-    "q_distinct_ngrams" ->
-      s"""WITH tok AS (SELECT source, $duckTokens AS t FROM documents),
-              b1 AS (SELECT source, 1 AS n, UNNEST(t) AS gram FROM tok),
-              b2 AS (SELECT source, 2 AS n,
-                            array_to_string(t[i:i+1], ' ') AS gram
-                     FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              b3 AS (SELECT source, 3 AS n,
-                            array_to_string(t[i:i+2], ' ') AS gram
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              allg AS (SELECT * FROM b1 UNION ALL
-                       SELECT * FROM b2 UNION ALL
-                       SELECT * FROM b3),
-              cnt AS (SELECT source, n, gram, count(*) AS c
-                      FROM allg GROUP BY 1, 2, 3)
-         SELECT source, n, CAST(count(*) AS BIGINT) AS distinct_ngrams,
-                CAST(sum(c) AS BIGINT) AS total_ngrams,
-                round(CAST(count(*) AS DOUBLE) / sum(c), 6) AS distinct_ratio
-         FROM cnt GROUP BY 1, 2""",
-    "q_negative_sampling" ->
-      s"""WITH tokc AS (SELECT UNNEST(t) AS token
-                        FROM (SELECT $duckTokens AS t FROM documents)),
-              c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt
-                    FROM tokc GROUP BY 1),
-              r AS (SELECT token, cnt,
-                           CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token ASC)
-                             AS BIGINT) AS rank
-                    FROM c),
-              top AS (SELECT * FROM r WHERE rank <= 100),
-              z AS (SELECT sum(pow(CAST(cnt AS DOUBLE), 0.75)) AS zz FROM top)
-         SELECT rank, token, cnt,
-                round(pow(CAST(cnt AS DOUBLE), 0.75) / zz, 6) AS p_neg,
-                round(sum(pow(CAST(cnt AS DOUBLE), 0.75) / zz)
-                        OVER (ORDER BY cnt DESC, token ASC
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW), 6) AS cum_p
-         FROM top, z""",
-    "q_padding_waste" ->
-      s"""WITH tok AS (SELECT source, doc_id, CAST(len(t) AS BIGINT) AS n
-                       FROM (SELECT source, doc_id, $duckTokens AS t
-                             FROM documents)),
-              r AS (SELECT source, n,
-                           ROW_NUMBER() OVER (PARTITION BY source
-                             ORDER BY n DESC, doc_id ASC) AS rn
-                    FROM tok),
-              b AS (SELECT source,
-                           CAST(floor((rn - 1) / 16.0) AS BIGINT) AS batch, n
-                    FROM r)
-         SELECT source, batch, CAST(count(*) AS BIGINT) AS n_docs,
-                max(n) AS max_tokens, CAST(sum(n) AS BIGINT) AS sum_tokens,
-                CAST(count(*) * max(n) - sum(n) AS BIGINT) AS padding_waste,
-                CASE WHEN count(*) * max(n) > 0
-                     THEN round(CAST(count(*) * max(n) - sum(n) AS DOUBLE)
-                                / (count(*) * max(n)), 6) END AS pad_frac
-         FROM b GROUP BY 1, 2""",
-    "q_incremental_cc" ->
-      """WITH RECURSIVE
-           prior AS (SELECT doc_id AS id, doc_id - (doc_id % 4) AS root
-                     FROM documents WHERE doc_id < 400),
-           newp AS (SELECT doc_id AS id_a, doc_id + 4 AS id_b
-                    FROM documents
-                    WHERE doc_id % 20 = 0 AND doc_id + 4 < 500),
-           edges AS (SELECT id AS src, root AS dst FROM prior WHERE id <> root
-                     UNION
-                     SELECT root AS src, id AS dst FROM prior WHERE id <> root
-                     UNION SELECT id_a AS src, id_b AS dst FROM newp
-                     UNION SELECT id_b AS src, id_a AS dst FROM newp),
-           nodes AS (SELECT id FROM prior
-                     UNION SELECT id_a AS id FROM newp
-                     UNION SELECT id_b AS id FROM newp),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
-         SELECT id AS doc_id, cluster FROM cl""",
-    "q_dist_match" ->
-      """WITH b AS (SELECT doc_id AS id,
-                           CAST(floor(n_chars / 200) AS BIGINT) AS bin
-                    FROM documents),
-              c AS (SELECT bin, CAST(count(*) AS BIGINT) AS n_before
-                    FROM b GROUP BY 1),
-              m AS (SELECT CAST(min(n_before) AS BIGINT) AS mn,
-                           CAST(sum(n_before) AS BIGINT) AS tot FROM c),
-              q AS (SELECT bin, n_before, tot,
-                           CAST(mn AS DOUBLE) / n_before AS qk
-                    FROM c, m),
-              k AS (SELECT b.bin, CAST(count(*) AS BIGINT) AS n_kept
-                    FROM b JOIN q USING (bin)
-                    WHERE CAST(('0x' || substring(
-                            md5('flat:' || CAST(id AS VARCHAR)), 1, 8))
-                          AS BIGINT) / 4294967296.0 < qk
-                    GROUP BY 1),
-              tk AS (SELECT CAST(sum(n_kept) AS BIGINT) AS tkn FROM k)
-         SELECT q.bin, q.n_before, COALESCE(k.n_kept, 0) AS n_kept,
-                round(qk, 6) AS q_keep,
-                round(CAST(q.n_before AS DOUBLE) / q.tot, 6) AS share_before,
-                round(CAST(COALESCE(k.n_kept, 0) AS DOUBLE) / tk.tkn, 6)
-                  AS share_after
-         FROM q LEFT JOIN k ON q.bin = k.bin, tk""",
-    "q_ks_per_source" ->
-      """WITH b AS (SELECT source AS g, n_chars AS v FROM documents
-                    WHERE n_chars IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid)
-         SELECT g AS source,
-                CAST(max(ng) AS BIGINT) AS n_group,
-                CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                round(max(CASE WHEN nt > ng THEN
-                  abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                      - CAST(cumt - cumg AS DOUBLE)
-                        / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
-         FROM cum GROUP BY 1""",
-    "q_fdr_bh" ->
-      """WITH b AS (SELECT source AS g,
-                           n_chars + CASE WHEN source IN
-                             ('src0','src1','src2','src3','src4')
-                             THEN 150 ELSE 0 END AS v
-                    FROM documents WHERE n_chars IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid),
-              ks AS (SELECT g AS source,
-                            CAST(max(ng) AS BIGINT) AS n_group,
-                            CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                            round(max(CASE WHEN nt > ng THEN
-                              abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                                  - CAST(cumt - cumg AS DOUBLE)
-                                    / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
-                     FROM cum GROUP BY 1),
-              pv AS (SELECT source, n_group, n_rest, ks,
-                            least(1.0, round(2.0 * exp(-2.0 * ks * ks
-                              * (CAST(n_group AS DOUBLE) * CAST(n_rest AS DOUBLE)
-                                 / CAST(n_group + n_rest AS DOUBLE))), 6))
-                              AS p_value
-                     FROM ks),
-              ranked AS (SELECT *,
-                                CAST(count(*) OVER () AS BIGINT) AS m,
-                                CAST(row_number() OVER
-                                  (ORDER BY p_value, source) AS INTEGER)
-                                  AS bh_rank
-                         FROM pv)
-         SELECT source, n_group, n_rest, ks, p_value, bh_rank,
-                round(least(min(CAST(m AS DOUBLE) * p_value / bh_rank)
-                        OVER (ORDER BY p_value, source
-                              ROWS BETWEEN CURRENT ROW
-                                       AND UNBOUNDED FOLLOWING),
-                      1.0), 6) AS p_adj,
-                round(least(min(CAST(m AS DOUBLE) * p_value / bh_rank)
-                        OVER (ORDER BY p_value, source
-                              ROWS BETWEEN CURRENT ROW
-                                       AND UNBOUNDED FOLLOWING),
-                      1.0), 6) <= 0.05 AS significant
-         FROM ranked""",
-    "q_source_ablation" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-                           CAST(sum(n_chars) AS BIGINT) AS s
-                    FROM documents GROUP BY 1),
-              t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS tn,
-                           CAST(sum(s) AS BIGINT) AS ts FROM g)
-         SELECT source, n_rows,
-                round(CAST(s AS DOUBLE) / n_rows, 6) AS group_mean,
-                CASE WHEN tn > n_rows
-                     THEN round(CAST(ts - s AS DOUBLE) / (tn - n_rows), 6)
-                     END AS loo_mean,
-                CASE WHEN tn > n_rows
-                     THEN round(CAST(ts - s AS DOUBLE) / (tn - n_rows)
-                                - CAST(ts AS DOUBLE) / tn, 6)
-                     END AS ablation_delta
-         FROM g, t""",
-    "q_quantile_norm" ->
-      """SELECT doc_id, source, n_chars,
-                round(percent_rank() OVER (PARTITION BY source
-                                           ORDER BY n_chars ASC), 6)
-                  AS pct_rank,
-                round(percent_rank() OVER (PARTITION BY source
-                                           ORDER BY n_chars ASC), 6) >= 0.2
-                  AS keep_doc
-         FROM documents""",
-    "q_fellegi_sunter" ->
-      """WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM customer),
-           c AS (SELECT c_custkey AS id, c_nationkey AS blk,
-                        c_mktsegment AS f0,
-                        CAST(floor(c_acctbal / 1000) AS BIGINT) AS f1,
-                        substring(c_name, length(c_name) - 1, 2) AS f2
-                 FROM customer),
-           u0 AS (SELECT CAST(sum(cc * cc) AS DOUBLE) / (nn * nn) AS u
-                  FROM (SELECT count(*) AS cc FROM c GROUP BY f0), n
-                  GROUP BY nn),
-           u1 AS (SELECT CAST(sum(cc * cc) AS DOUBLE) / (nn * nn) AS u
-                  FROM (SELECT count(*) AS cc FROM c GROUP BY f1), n
-                  GROUP BY nn),
-           u2 AS (SELECT CAST(sum(cc * cc) AS DOUBLE) / (nn * nn) AS u
-                  FROM (SELECT count(*) AS cc FROM c GROUP BY f2), n
-                  GROUP BY nn),
-           s AS (SELECT a.id AS id_a, b.id AS id_b,
-                        round(
-                          CASE WHEN a.f0 IS NOT DISTINCT FROM b.f0
-                               THEN ln(0.9 / u0.u)
-                               ELSE ln((1 - 0.9) / (1 - u0.u)) END
-                        + CASE WHEN a.f1 IS NOT DISTINCT FROM b.f1
-                               THEN ln(0.8 / u1.u)
-                               ELSE ln((1 - 0.8) / (1 - u1.u)) END
-                        + CASE WHEN a.f2 IS NOT DISTINCT FROM b.f2
-                               THEN ln(0.85 / u2.u)
-                               ELSE ln((1 - 0.85) / (1 - u2.u)) END, 6)
-                          AS fs_score
-                 FROM c a JOIN c b ON a.blk = b.blk AND a.id < b.id,
-                      u0, u1, u2)
-         SELECT id_a, id_b, fs_score FROM s
-         ORDER BY fs_score DESC, id_a ASC, id_b ASC LIMIT 50""",
-    "q_lang_ngram" -> langNgramOracleSql,
-    "q_simhash" -> simhashOracleSql,
-    "q_simhash_neardup" -> simhashNearDupOracleSql,
-    "q_lsh_neardup" -> lshNeardupOracleSql,
-    "q_rolling_hash" ->
-      """SELECT doc_id,
-                list_reduce(
-                  list_prepend(CAST(0 AS BIGINT),
-                    [CAST(unicode(c) AS BIGINT) FOR c IN string_split(text, '')]),
-                  (h, cp) -> (h * 31 + cp) % 1000000007) AS rhash
-         FROM documents""",
-    "q_subword_count" ->
-      """SELECT doc_id,
-                CAST(len(regexp_extract_all(text, '[a-zA-Z]+'))
-                   + len(regexp_extract_all(text, '[0-9]+'))
-                   + len(regexp_extract_all(text, '[^a-zA-Z0-9\s]+')) AS BIGINT)
-                  AS n_subwords
-         FROM documents""",
-    "q_lsh_candidates" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 40),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band)
-         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM banded a JOIN banded b USING (band, band_hash)
-         WHERE a.doc_id < b.doc_id""",
-    "q_neardup_admit" ->
-      s"""WITH tok AS (SELECT DISTINCT doc_id, UNNEST($duckTokens) AS token
-                       FROM documents WHERE doc_id < 120),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b USING (band, band_hash)
-                       WHERE a.doc_id < b.doc_id),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY 1),
-              inter AS (SELECT ta.doc_id AS id_a, tb.doc_id AS id_b,
-                               count(*) AS ni
-                        FROM tok ta JOIN tok tb USING (token)
-                        WHERE ta.doc_id < tb.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT c.id_a, c.id_b
-                        FROM cand c
-                        JOIN sizes sa ON sa.doc_id = c.id_a
-                        JOIN sizes sb ON sb.doc_id = c.id_b
-                        JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-                        WHERE CAST(i.ni AS DOUBLE) / (sa.n + sb.n - i.ni) >= 0.3),
-              a1 AS (SELECT d.doc_id FROM documents d WHERE d.doc_id < 60
-                     AND NOT EXISTS (SELECT 1 FROM pairs p
-                                     WHERE p.id_b = d.doc_id AND p.id_a < 60)),
-              a2 AS (SELECT d.doc_id FROM documents d
-                     WHERE d.doc_id >= 60 AND d.doc_id < 120
-                     AND NOT EXISTS (SELECT 1 FROM pairs p
-                                     JOIN a1 ON p.id_a = a1.doc_id
-                                     WHERE p.id_b = d.doc_id)
-                     AND NOT EXISTS (SELECT 1 FROM pairs p
-                                     WHERE p.id_b = d.doc_id AND p.id_a >= 60))
-         SELECT doc_id, CAST(1 AS BIGINT) AS batch FROM a1
-         UNION ALL
-         SELECT doc_id, CAST(2 AS BIGINT) AS batch FROM a2""",
-    "q_frame_sample" ->
-      """SELECT doc_id,
-                CAST(ceil(length(text) / 32.0) AS BIGINT) AS n_frames,
-                CAST(count(*) AS BIGINT) AS n_sampled,
-                md5(string_agg(substring(text, CAST(i * 32 + 1 AS INT), 32),
-                               '' ORDER BY i)) AS sample_md5
-         FROM documents,
-              UNNEST(generate_series(0, CAST(ceil(length(text) / 32.0) AS BIGINT) - 1))
-                AS t(i)
-         WHERE i % 4 = 0
-         GROUP BY doc_id, text
-         UNION ALL
-         SELECT doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), md5('')
-         FROM documents WHERE length(text) = 0""",
-    "q_ivf_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              probe AS (SELECT cent_id AS cell FROM (
-                 SELECT c.cent_id,
-                        ROW_NUMBER() OVER (ORDER BY round(${duckCos("c.cv", "qv.q")}, 6) DESC,
-                                           c.cent_id) AS rn
-                 FROM c, qv) WHERE rn <= 2)
-         SELECT vec_id, cell, round(${duckCos("asg.v", "qv.q")}, 6) AS cosine_sim
-         FROM asg JOIN probe USING (cell), qv
-         ORDER BY round(${duckCos("asg.v", "qv.q")}, 6) DESC, vec_id LIMIT 10""",
-    "q_kmeans_step" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1)
-         SELECT cell, t.pos, round(avg(v[t.pos + 1]), 6) AS c_val, count(*) AS n
-         FROM asg, range(64) t(pos)
-         GROUP BY cell, t.pos""",
-    "q_ivf_trained" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg0 AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c0.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c0.cv")} DESC, c0.cent_id) AS rn
-                 FROM e, c0) WHERE rn = 1),
-              m1 AS (SELECT cell, t.pos, avg(v[t.pos + 1]) AS cv
-                     FROM asg0, range(64) t(pos) GROUP BY cell, t.pos),
-              c1 AS (SELECT c0.cent_id,
-                            COALESCE(l.cv, c0.cv) AS cv
-                     FROM c0 LEFT JOIN
-                          (SELECT cell, list(cv ORDER BY pos) AS cv
-                           FROM m1 GROUP BY cell) l ON l.cell = c0.cent_id),
-              qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-              asg1 AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c1.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c1.cv")} DESC, c1.cent_id) AS rn
-                 FROM e, c1) WHERE rn = 1),
-              probe AS (SELECT cent_id AS cell FROM (
-                 SELECT c1.cent_id,
-                        ROW_NUMBER() OVER (ORDER BY round(${duckCos("c1.cv", "qv.q")}, 6) DESC,
-                                           c1.cent_id) AS rn
-                 FROM c1, qv) WHERE rn <= 3)
-         SELECT vec_id, cell, round(${duckCos("asg1.v", "qv.q")}, 6) AS cosine_sim
-         FROM asg1 JOIN probe USING (cell), qv
-         ORDER BY round(${duckCos("asg1.v", "qv.q")}, 6) DESC, vec_id LIMIT 10""",
-    "q_semantic_dedup" ->
-      s"""WITH RECURSIVE
-              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                        FROM asg a JOIN asg b
-                          ON a.cell = b.cell AND a.vec_id < b.vec_id
-                        WHERE round(${duckCos("a.v", "b.v")}, 6) >= 0.38),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                        UNION
-                        SELECT id_b AS src, id_a AS dst FROM pairs),
-              walk(id, lbl) AS (
-                SELECT vec_id, vec_id FROM e
-                UNION
-                SELECT g.dst, w.lbl FROM walk w JOIN edges g ON w.id = g.src),
-              cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
-         SELECT id AS vec_id, cluster, (id = cluster) AS is_canonical FROM cl""",
-    "q_silhouette" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              scored AS (SELECT e.vec_id, c.cent_id,
-                           ${duckCos("e.v", "c.cv")} AS cos,
-                           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                             ORDER BY ${duckCos("e.v", "c.cv")} DESC,
-                                      c.cent_id) AS rn
-                         FROM e, c),
-              ab AS (SELECT vec_id,
-                       max(CASE WHEN rn = 1 THEN cent_id END) AS cell,
-                       1.0 - max(CASE WHEN rn = 1 THEN cos END) AS a,
-                       1.0 - max(CASE WHEN rn = 2 THEN cos END) AS b
-                     FROM scored GROUP BY 1),
-              sil AS (SELECT cell,
-                        CASE WHEN greatest(a, b) > 0
-                          THEN (b - a) / greatest(a, b) ELSE 0.0 END AS s
-                      FROM ab)
-         SELECT cell, CAST(count(*) AS BIGINT) AS n,
-                round(avg(s), 6) AS mean_silhouette
-         FROM sil GROUP BY 1""",
-    "q_density_clusters" ->
-      s"""WITH RECURSIVE
-              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                        FROM asg a JOIN asg b
-                          ON a.cell = b.cell AND a.vec_id < b.vec_id
-                        WHERE round(${duckCos("a.v", "b.v")}, 6) >= 0.38),
-              sym AS (SELECT id_a AS id, id_b AS nb FROM pairs
-                      UNION ALL SELECT id_b AS id, id_a AS nb FROM pairs),
-              degs AS (SELECT id, CAST(count(*) AS BIGINT) AS n_neighbors
-                       FROM sym GROUP BY 1),
-              cores AS (SELECT id FROM degs WHERE n_neighbors >= 3),
-              cgraph AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                         WHERE id_a IN (SELECT id FROM cores)
-                           AND id_b IN (SELECT id FROM cores)
-                         UNION
-                         SELECT id_b AS src, id_a AS dst FROM pairs
-                         WHERE id_a IN (SELECT id FROM cores)
-                           AND id_b IN (SELECT id FROM cores)),
-              walk(id, lbl) AS (
-                SELECT id, id FROM cores
-                UNION
-                SELECT g.dst, w.lbl FROM walk w JOIN cgraph g ON w.id = g.src),
-              ccl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id),
-              border AS (SELECT s2.id, min(ccl.cluster) AS cluster
-                         FROM sym s2
-                         JOIN cores co ON s2.nb = co.id
-                         JOIN ccl ON ccl.id = s2.nb
-                         WHERE s2.id NOT IN (SELECT id FROM cores)
-                         GROUP BY 1),
-              lab AS (SELECT id, cluster, 'core' AS role FROM ccl
-                      UNION ALL
-                      SELECT id, cluster, 'border' AS role FROM border)
-         SELECT emb.vec_id,
-                COALESCE(degs.n_neighbors, 0) AS n_neighbors,
-                COALESCE(lab.role, 'noise') AS role, lab.cluster
-         FROM embeddings emb
-         LEFT JOIN degs ON emb.vec_id = degs.id
-         LEFT JOIN lab ON emb.vec_id = lab.id""",
-    "q_watermark_detect" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents),
-              occ AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS bigram
-                      FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              g AS (SELECT doc_id,
-                      CASE WHEN CAST(('0x' || substring(md5(bigram), 1, 1))
-                             AS BIGINT) % 2 = 0 THEN 1 ELSE 0 END AS green
-                    FROM occ),
-              a AS (SELECT doc_id, count(*) AS n_scored,
-                      CAST(sum(green) AS BIGINT) AS n_green
-                    FROM g GROUP BY 1)
-         SELECT doc_id, n_scored, n_green,
-                round(n_green / n_scored, 6) AS green_frac,
-                round((2 * n_green - n_scored) / sqrt(n_scored), 6) AS z,
-                round((2 * n_green - n_scored) / sqrt(n_scored), 6) >= 4.0
-                  AS flagged
-         FROM a""",
-    "q_centroid_drift" ->
-      """WITH ex AS (SELECT label, vec_id % 2 AS s, i AS d,
-                       CAST(embedding[i] AS DOUBLE) AS x
-                     FROM embeddings,
-                       UNNEST(generate_series(1, len(embedding))) AS u(i)),
-              dims AS (SELECT label, d,
-                         sum(CASE WHEN s = 0 THEN x END) AS sa,
-                         sum(CASE WHEN s = 1 THEN x END) AS sb
-                       FROM ex GROUP BY 1, 2),
-              agg AS (SELECT label, sum(sa * sb) AS dot,
-                        sum(sa * sa) AS qa, sum(sb * sb) AS qb
-                      FROM dims GROUP BY 1),
-              cnt AS (SELECT label,
-                        count(CASE WHEN vec_id % 2 = 0 THEN 1 END) AS n_a,
-                        count(CASE WHEN vec_id % 2 = 1 THEN 1 END) AS n_b
-                      FROM embeddings GROUP BY 1)
-         SELECT agg.label, cnt.n_a, cnt.n_b,
-                CASE WHEN qa > 0 AND qb > 0 THEN
-                  round(dot / (sqrt(qa) * sqrt(qb)), 6) END AS centroid_cos
-         FROM agg JOIN cnt ON agg.label = cnt.label""",
-    "q_ann_recall" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-              ex AS (SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, e.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY q.query_id
-                          ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-                 FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              probe AS (SELECT query_id, cell FROM (
-                 SELECT q.query_id, c.cent_id AS cell,
-                        ROW_NUMBER() OVER (PARTITION BY q.query_id
-                          ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
-                 FROM q, c) WHERE rn <= 2),
-              ap AS (SELECT query_id, vec_id FROM (
-                 SELECT p.query_id, a.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY p.query_id
-                          ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
-                 FROM probe p JOIN asg a ON a.cell = p.cell
-                              JOIN q ON q.query_id = p.query_id
-                 WHERE a.vec_id <> p.query_id) WHERE rn <= 10),
-              n AS (SELECT query_id, count(*) AS n_exact FROM ex GROUP BY 1),
-              h AS (SELECT x.query_id, count(*) AS n_hits
-                    FROM ex x JOIN ap a
-                      ON x.query_id = a.query_id AND x.vec_id = a.vec_id
-                    GROUP BY 1)
-         SELECT n.query_id, n.n_exact, COALESCE(h.n_hits, 0) AS n_hits,
-                round(COALESCE(h.n_hits, 0) / n.n_exact, 6) AS recall
-         FROM n LEFT JOIN h USING (query_id)""",
-    "q_ivf_nprobe_sweep" -> ivfNprobeSweepOracleSql(Seq(1, 2, 4, 8)),
-    "q_token_entropy" ->
-      s"""WITH cnt AS (
-            SELECT doc_id, tok, count(*) AS c FROM (
-              SELECT doc_id, UNNEST($duckTokens) AS tok FROM documents)
-            GROUP BY doc_id, tok)
-         SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS n_types,
-                round(ln(sum(c)) - sum(c * ln(c)) / sum(c), 6) AS entropy,
-                round(count(*) / CAST(sum(c) AS DOUBLE), 6) AS type_token_ratio
-         FROM cnt GROUP BY doc_id""",
-    "q_winsorize" ->
-      """WITH stats AS (SELECT lang, quantile_cont(n_chars, 0.05) AS plo,
-                               quantile_cont(n_chars, 0.95) AS phi
-                        FROM documents GROUP BY lang)
-         SELECT doc_id, d.lang, n_chars,
-                round(least(greatest(CAST(n_chars AS DOUBLE), plo), phi), 6)
-                  AS n_chars_w
-         FROM documents d JOIN stats USING (lang)""",
-    "q_containment" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 60),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-         SELECT i.id_a, i.id_b,
-                round(i.n_common / CAST(sa.n AS DOUBLE), 6) AS containment_a,
-                round(i.n_common / CAST(sb.n AS DOUBLE), 6) AS containment_b
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.doc_id
-         JOIN sizes sb ON i.id_b = sb.doc_id
-         WHERE greatest(i.n_common / CAST(sa.n AS DOUBLE),
-                        i.n_common / CAST(sb.n AS DOUBLE)) >= 0.5""",
-    "q_corpus_shuffle" ->
-      """SELECT doc_id, md5('epoch1:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-         FROM documents
-         ORDER BY shuffle_key, doc_id LIMIT 20""",
-    "q_vocab_coverage" ->
-      s"""WITH f AS (SELECT tok AS token, count(*) AS tf FROM (
-                       SELECT UNNEST($duckTokens) AS tok FROM documents)
-                     GROUP BY tok)
-         SELECT CAST(ROW_NUMBER() OVER (ORDER BY tf DESC, token) AS BIGINT) AS rank,
-                token, tf,
-                round(SUM(tf) OVER (ORDER BY tf DESC, token
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      / CAST(SUM(tf) OVER () AS DOUBLE), 6) AS coverage
-         FROM f QUALIFY rank <= 100""",
-    "q_iqr_outliers" ->
-      """WITH stats AS (SELECT lang, quantile_cont(n_chars, 0.25) AS q1,
-                               quantile_cont(n_chars, 0.75) AS q3
-                        FROM documents GROUP BY lang)
-         SELECT doc_id, d.lang, n_chars,
-                round(q1 - 1.5 * (q3 - q1), 6) AS lo_fence,
-                round(q3 + 1.5 * (q3 - q1), 6) AS hi_fence,
-                (n_chars < q1 - 1.5 * (q3 - q1)
-                  OR n_chars > q3 + 1.5 * (q3 - q1)) AS is_outlier
-         FROM documents d JOIN stats USING (lang)""",
-    "q_keep_best" ->
-      """WITH fp AS (SELECT doc_id, n_chars,
-                       md5(regexp_replace(lower(text), '[^0-9a-z]', '', 'g'))
-                         AS fingerprint
-                     FROM documents),
-              r AS (SELECT fingerprint, n_chars, doc_id,
-                      ROW_NUMBER() OVER (PARTITION BY fingerprint
-                        ORDER BY n_chars DESC, doc_id ASC) AS rn,
-                      count(*) OVER (PARTITION BY fingerprint) AS n_dups
-                    FROM fp)
-         SELECT fingerprint, CAST(n_chars AS DOUBLE) AS best_quality,
-                doc_id AS keep_id, n_dups
-         FROM r WHERE rn = 1""",
-    "q_neardup_survivors" ->
-      """WITH RECURSIVE
-           tok AS (SELECT DISTINCT doc_id,
-                     UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                   FROM documents WHERE doc_id < 60),
-           sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM tok a JOIN tok b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
-         SELECT cluster AS doc_id, count(*) AS n_members FROM cl GROUP BY cluster""",
-    "q_stateful_sessions" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, ts, value,
-                  CASE WHEN prev_us IS NULL
-                         OR (epoch_us(ts) - prev_us) > 1800000000
-                       THEN 1 ELSE 0 END AS new_sess
-           FROM (SELECT user_id, event_id, ts, value,
-                        LAG(epoch_us(ts), 1) OVER
-                          (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-                 FROM events)),
-              sess AS (
-           SELECT user_id, epoch_us(ts) AS us, value,
-                  CAST(SUM(new_sess) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND CURRENT ROW) AS BIGINT) AS sid
-           FROM flagged)
-         SELECT user_id, min(us) AS session_start_us, max(us) AS session_end_us,
-                count(*) AS n_events, round(sum(value), 2) AS session_value
-         FROM sess GROUP BY user_id, sid""",
-    "q_open_tickets" ->
-      """SELECT DISTINCT CAST(o_orderkey AS VARCHAR) AS n_ticket FROM orders
-         WHERE o_orderkey IS NOT NULL AND o_orderstatus <> 'F'""",
-    "q_filter_project" ->
-      """SELECT CAST(l_orderkey AS VARCHAR) AS order_id, l_linenumber AS line_no,
-                l_quantity AS qty, l_returnflag AS flag
-         FROM lineitem
-         WHERE l_shipdate BETWEEN TIMESTAMP '1998-01-01 00:00:00'
-                              AND TIMESTAMP '1998-12-31 23:59:59'""",
-    "q_sort_limit" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
-    "q_backfill" ->
-      """SELECT o_orderkey, o_orderstatus, CAST(NULL AS VARCHAR) AS backfilled_col,
-                '' AS contact_cf_n_mero_do_ticket
-         FROM orders""",
-    "q_left_join" ->
-      """SELECT o.o_custkey, o.o_orderkey, o.o_totalprice, c.c_name, c.c_mktsegment
-         FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""",
-    "q_full_outer_merge" ->
-      """SELECT COALESCE(l.cust, r.cust2) AS merge_key,
-                l.status AS status_chat, r.status AS status_ticket
-         FROM (SELECT o_custkey AS cust, o_orderstatus AS status FROM orders) l
-         FULL OUTER JOIN
-              (SELECT c_custkey AS cust2, c_mktsegment AS status FROM customer) r
-         ON l.cust = r.cust2""",
-    "q_right_join" ->
-      """SELECT c.c_custkey, c.c_mktsegment, o.o_orderkey, o.o_totalprice
-         FROM (SELECT o_orderkey, o_custkey, o_totalprice FROM orders) o
-         RIGHT JOIN customer c ON o.o_custkey = c.c_custkey""",
-    "q_semi_join" ->
-      """SELECT * FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o
-                       WHERE o.o_orderstatus <> 'F' AND o.o_custkey = c.c_custkey)""",
-    "q_anti_dedup" ->
-      """SELECT * FROM orders o
-         WHERE NOT EXISTS (SELECT 1 FROM orders d
-                           WHERE d.o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-                             AND d.o_orderkey = o.o_orderkey)""",
-    "q_anti_dedup_bloom" ->
-      """SELECT * FROM orders o
-         WHERE NOT EXISTS (SELECT 1 FROM orders d
-                           WHERE d.o_orderstatus = 'F'
-                             AND d.o_orderkey = o.o_orderkey)""",
-    "q_union_slices" ->
-      """SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS o_orderpriority
-         FROM orders
-         WHERE o_orderdate BETWEEN TIMESTAMP '1997-01-01 00:00:00'
-                               AND TIMESTAMP '1997-12-31 23:59:59'
-         UNION ALL
-         SELECT o_orderkey, CAST(NULL AS DOUBLE), o_orderpriority
-         FROM orders
-         WHERE o_orderdate BETWEEN TIMESTAMP '1998-01-01 00:00:00'
-                               AND TIMESTAMP '1998-12-31 23:59:59'""",
-    "q_window_bucket" ->
-      """SELECT CAST(floor(epoch(o_orderdate) / 604800) AS BIGINT) * 604800 AS bucket_start,
-                count(*) AS n_orders
-         FROM orders GROUP BY 1""",
-    "q_iso_format" ->
-      """SELECT o_orderkey,
-                strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS created_iso
-         FROM orders""",
-    "q_audit_timestamp" ->
-      """SELECT o_orderkey, o_orderstatus,
-                TIMESTAMP '2024-01-15 12:00:00' AS upload
-         FROM orders""",
-    "q_key_synthesis" ->
-      """SELECT o_orderkey,
-                CASE WHEN u IS NULL OR trim(u) = ''
-                     THEN 'gen-' || CAST(o_orderkey AS VARCHAR) ELSE u END AS uuid
-         FROM (SELECT o_orderkey,
-                      CASE WHEN o_orderstatus = 'F' THEN ''
-                           ELSE CAST(o_orderkey AS VARCHAR) END AS u
-               FROM orders)""",
-    "q_sanitize_names" ->
-      """SELECT l_orderkey AS _99_n_mero_do_pedido, l_linenumber AS line_no,
-                l_quantity
-         FROM lineitem""",
-    "q_upsert" ->
-      """WITH dest AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-                       WHERE o_orderdate < TIMESTAMP '2000-01-01 00:00:00'),
-              upd AS (SELECT o_orderkey, 'Resolvido' AS o_orderstatus, o_totalprice
-                      FROM orders WHERE o_orderstatus = 'P')
-         SELECT * FROM dest
-         WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-         UNION ALL SELECT * FROM upd""",
-    "q_octadesk_e2e" ->
-      """WITH tickets AS (
-           SELECT 'T' || CAST(o_orderkey AS VARCHAR) AS uuid,
-                  CAST(o_orderkey AS VARCHAR) AS n_ticket,
-                  CAST(NULL AS VARCHAR) AS titulo,
-                  o_orderstatus || ',' || o_orderpriority AS tags_ticket,
-                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS createdAt,
-                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS updatedAt,
-                  o_orderstatus AS status_ticket,
-                  o_orderpriority AS channel_ticket,
-                  'Clerk#' || CAST(o_custkey % 1000 AS VARCHAR) AS autor_ticket_ticket,
-                  'clerk' || CAST(o_custkey % 1000 AS VARCHAR) || '@example.com' AS email_ticket,
-                  CAST(o_custkey % 10 AS BIGINT) AS grupo_responsavel_ticket,
-                  o_orderstatus AS status_ticket2,
-                  to_json([{'key': 'n_do_pedido', 'value': CAST(o_orderkey AS VARCHAR)},
-                           {'key': 'produto', 'value': o_orderpriority},
-                           {'key': 'nao_listado', 'value': 'drop me'}])
-                    AS campo_custom_ticket,
-                  CAST(NULL AS VARCHAR) AS campo_custom_ticket2,
-                  CAST(NULL AS VARCHAR) AS ticket_codigo_de_rastreio,
-                  CAST(NULL AS VARCHAR) AS ticket_cpf,
-                  CAST(NULL AS VARCHAR) AS ticket_data_de_pagamento,
-                  CAST(NULL AS VARCHAR) AS ticket_email_do_cliente,
-                  CAST(NULL AS VARCHAR) AS ticket_motivo_de_contatos,
-                  CAST(NULL AS VARCHAR) AS ticket_n_da_nota_fiscal,
-                  CAST(o_orderkey AS VARCHAR) AS ticket_n_do_pedido,
-                  CAST(NULL AS VARCHAR) AS ticket_n_do_pedido_bling,
-                  o_orderpriority AS ticket_produto,
-                  CAST(NULL AS VARCHAR) AS ticket_tipo_do_problema,
-                  '' AS contact_cf_n_mero_do_ticket
-           FROM orders),
-         chats AS (
-           SELECT 'C' || CAST(c_custkey AS VARCHAR) AS chat_id,
-                  CAST(c_custkey * 4 AS VARCHAR) AS ck,
-                  c_mktsegment AS segmento,
-                  c_name AS autor_ticket_chat
-           FROM customer),
-         merged AS (
-           SELECT COALESCE(c.ck, t.n_ticket) AS n_ticket,
-                  c.chat_id, c.segmento, c.autor_ticket_chat,
-                  t.uuid, t.titulo, t.tags_ticket, t.createdAt, t.updatedAt,
-                  t.status_ticket, t.channel_ticket,
-                  t.autor_ticket_ticket, t.email_ticket,
-                  t.grupo_responsavel_ticket, t.status_ticket2,
-                  t.campo_custom_ticket, t.campo_custom_ticket2,
-                  t.ticket_codigo_de_rastreio, t.ticket_cpf,
-                  t.ticket_data_de_pagamento, t.ticket_email_do_cliente,
-                  t.ticket_motivo_de_contatos, t.ticket_n_da_nota_fiscal,
-                  t.ticket_n_do_pedido, t.ticket_n_do_pedido_bling,
-                  t.ticket_produto, t.ticket_tipo_do_problema,
-                  t.contact_cf_n_mero_do_ticket
-           FROM chats c FULL OUTER JOIN tickets t ON c.ck = t.n_ticket)
-         SELECT * REPLACE (
-                  CASE WHEN uuid IS NULL OR trim(uuid) = ''
-                       THEN 'gen-' || n_ticket ELSE uuid END AS uuid),
-                TIMESTAMP '2026-08-13 00:00:00' AS upload
-         FROM merged m
-         WHERE NOT EXISTS (SELECT 1 FROM orders dd
-                           WHERE dd.o_orderdate < TIMESTAMP '1995-01-01 00:00:00'
-                             AND CAST(dd.o_orderkey AS VARCHAR) = m.n_ticket)""",
-    "q_octadesk_e2e_drift" ->
-      """WITH tickets AS (
-           SELECT 'T' || CAST(o_orderkey AS VARCHAR) AS uuid,
-                  CAST(o_orderkey AS VARCHAR) AS n_ticket,
-                  CAST(NULL AS VARCHAR) AS titulo,
-                  o_orderstatus || ',' || o_orderpriority AS tags_ticket,
-                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS createdAt,
-                  CAST(NULL AS VARCHAR) AS updatedAt,
-                  o_orderstatus AS status_ticket,
-                  o_orderpriority AS channel_ticket,
-                  'Clerk#' || CAST(o_custkey % 1000 AS VARCHAR) AS autor_ticket,
-                  'clerk' || CAST(o_custkey % 1000 AS VARCHAR) || '@example.com' AS email_ticket,
-                  CAST(o_custkey % 10 AS BIGINT) AS grupo_responsavel_ticket,
-                  o_orderstatus AS status_ticket2,
-                  to_json([{'key': 'n_do_pedido', 'value': CAST(o_orderkey AS VARCHAR)},
-                           {'key': 'produto', 'value': o_orderpriority},
-                           {'key': 'nao_listado', 'value': 'drop me'}])
-                    AS campo_custom_ticket,
-                  CAST(NULL AS VARCHAR) AS campo_custom_ticket2,
-                  CAST(NULL AS VARCHAR) AS ticket_codigo_de_rastreio,
-                  CAST(NULL AS VARCHAR) AS ticket_cpf,
-                  CAST(NULL AS VARCHAR) AS ticket_data_de_pagamento,
-                  CAST(NULL AS VARCHAR) AS ticket_email_do_cliente,
-                  CAST(NULL AS VARCHAR) AS ticket_motivo_de_contatos,
-                  CAST(NULL AS VARCHAR) AS ticket_n_da_nota_fiscal,
-                  CAST(o_orderkey AS VARCHAR) AS ticket_n_do_pedido,
-                  CAST(NULL AS VARCHAR) AS ticket_n_do_pedido_bling,
-                  o_orderpriority AS ticket_produto,
-                  CAST(NULL AS VARCHAR) AS ticket_tipo_do_problema,
-                  '' AS contact_cf_n_mero_do_ticket
-           FROM orders),
-         chats AS (
-           SELECT 'C' || CAST(c_custkey AS VARCHAR) AS chat_id,
-                  CAST(c_custkey * 4 AS VARCHAR) AS ck,
-                  c_mktsegment AS cf_segmento_novo,
-                  c_name AS cf_n_mero_do_cliente
-           FROM customer),
-         merged AS (
-           SELECT COALESCE(c.ck, t.n_ticket) AS n_ticket,
-                  c.chat_id, c.cf_segmento_novo, c.cf_n_mero_do_cliente,
-                  t.uuid, t.titulo, t.tags_ticket, t.createdAt, t.updatedAt,
-                  t.status_ticket, t.channel_ticket,
-                  t.autor_ticket, t.email_ticket,
-                  t.grupo_responsavel_ticket, t.status_ticket2,
-                  t.campo_custom_ticket, t.campo_custom_ticket2,
-                  t.ticket_codigo_de_rastreio, t.ticket_cpf,
-                  t.ticket_data_de_pagamento, t.ticket_email_do_cliente,
-                  t.ticket_motivo_de_contatos, t.ticket_n_da_nota_fiscal,
-                  t.ticket_n_do_pedido, t.ticket_n_do_pedido_bling,
-                  t.ticket_produto, t.ticket_tipo_do_problema,
-                  t.contact_cf_n_mero_do_ticket
-           FROM chats c FULL OUTER JOIN tickets t ON c.ck = t.n_ticket)
-         SELECT * REPLACE (
-                  CASE WHEN uuid IS NULL OR trim(uuid) = ''
-                       THEN 'gen-' || n_ticket ELSE uuid END AS uuid),
-                TIMESTAMP '2026-08-13 00:00:00' AS upload
-         FROM merged m
-         WHERE NOT EXISTS (SELECT 1 FROM orders dd
-                           WHERE dd.o_orderdate < TIMESTAMP '1995-01-01 00:00:00'
-                             AND CAST(dd.o_orderkey AS VARCHAR) = m.n_ticket)""",
-    "q_events_pivot" ->
-      """SELECT user_id,
-                count(*) FILTER (WHERE event_type = 'click') > 0 AS evt_click,
-                count(*) FILTER (WHERE event_type = 'error') > 0 AS evt_error,
-                count(*) FILTER (WHERE event_type = 'purchase') > 0 AS evt_purchase,
-                count(*) FILTER (WHERE event_type = 'signup') > 0 AS evt_signup,
-                count(*) FILTER (WHERE event_type = 'view') > 0 AS evt_view
-         FROM events GROUP BY user_id""",
-    "q_json_extract" ->
-      """SELECT event_type,
-                CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-                count(*) AS n
-         FROM events GROUP BY event_type""",
-    "q_from_json" ->
-      """SELECT event_id,
-                CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-                props IS NULL OR json_valid(props) = false AS parse_failed
-         FROM events""",
-    "q_custom_fields" ->
-      """SELECT o_orderkey, o_orderstatus AS ticket_status,
-                CASE WHEN o_orderstatus = 'O' THEN o_orderpriority END AS ticket_priority
-         FROM orders""",
-    "q_flatten" ->
-      """SELECT c_custkey, c_name AS profile_name,
-                c_mktsegment AS profile_contact_info_segment,
-                c_nationkey AS profile_contact_info_nation_key
-         FROM customer""",
-    "q_asof_join" ->
-      """WITH p AS (SELECT user_id, ts, max(value) AS value
-                    FROM events WHERE event_type = 'purchase'
-                    GROUP BY user_id, ts)
-         SELECT l.event_id, l.user_id, l.ts,
-                p.ts AS last_purchase_ts,
-                round(p.value, 2) AS last_purchase_value
-         FROM (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'click') l
-         ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts""",
-    "q_session_window" ->
-      """WITH flagged AS (
-           SELECT user_id, ts, value,
-                  CASE WHEN prev_us IS NULL
-                         OR (epoch_us(ts) - prev_us) >= 1800000000
-                       THEN 1 ELSE 0 END AS new_sess
-           FROM (SELECT user_id, ts, value,
-                        LAG(epoch_us(ts), 1) OVER
-                          (PARTITION BY user_id ORDER BY ts) AS prev_us
-                 FROM events)),
-              sess AS (
-           SELECT user_id, ts, value,
-                  SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS session_id
-           FROM flagged)
-         SELECT min(ts) AS session_start,
-                max(ts) + INTERVAL 30 MINUTE AS session_end,
-                user_id, count(*) AS n_events,
-                round(sum(value), 2) AS session_value
-         FROM sess GROUP BY user_id, session_id""",
-    "q_event_sliding" ->
-      """SELECT CAST(to_timestamp((epoch_us(ts) // 900000000) * 900 - j * 900)
-                     AS TIMESTAMP) AS window_start,
-                event_type, count(*) AS n
-         FROM events, UNNEST(generate_series(0, 3)) AS t(j)
-         GROUP BY 1, 2""",
-    "q_pivot_kv" ->
-      """SELECT o_orderkey, o_orderstatus AS cf_status,
-                o_orderpriority AS cf_priority
-         FROM orders""",
-    "q_tfidf" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-              tok AS (SELECT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS term
-                      FROM docs),
-              tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-              dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-              n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM docs),
-              scored AS (
-           SELECT doc_id, term, tf, df,
-                  round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tf_idf
-           FROM tf JOIN dfreq USING (term), n)
-         SELECT doc_id, term, tf, df, tf_idf, rnk FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                       ORDER BY tf_idf DESC, term) AS rnk
-           FROM scored) WHERE rnk <= 5""",
-    // Exact DECIMAL sums mirroring the engine (see q1's comment): the
-    // 2-dec fixed-point columns aggregate order-independently at any
-    // scale; double casts of the exact decimals are correctly rounded
-    // in both engines.
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(l_quantity AS DECIMAL(20,2))) AS DOUBLE)
-                  AS sum_qty,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(20,2))) AS DOUBLE)
-                  AS sum_base_price,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(20,2))
-                         * (CAST(1 AS DECIMAL(3,2))
-                            - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE)
-                  AS sum_disc_price,
-                round(CAST(sum(CAST(l_quantity AS DECIMAL(20,2))) AS DOUBLE)
-                      / CAST(count(*) AS DOUBLE), 4) AS avg_qty,
-                count(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '1999-12-01 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q_topk_per_group" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-                  ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders) WHERE rn <= 3""",
-    "q_group_topk_native" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-                  ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders) WHERE rn <= 3""",
-    "q_topk_udaf" ->
-      """SELECT o_custkey,
-                round(t[1], 2) AS p1,
-                round(coalesce(t[2], -1.0), 2) AS p2,
-                round(coalesce(t[3], -1.0), 2) AS p3
-         FROM (SELECT o_custkey,
-                      (array_agg(o_totalprice ORDER BY o_totalprice DESC))[1:3] AS t
-               FROM orders GROUP BY o_custkey)""",
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(l_quantity AS DECIMAL(20,2))) AS DOUBLE)
-                  AS sum_qty,
-                count(*) AS n
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(20,2))) AS DOUBLE)
-                  AS revenue
-         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey,
-                RANK() OVER w AS rnk,
-                LAG(o_totalprice, 1) OVER w AS prev_price,
-                round(SUM(o_totalprice) OVER
-                  (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-                  AS running_spend
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-    "q_window_dist" ->
-      """SELECT o_orderkey, o_orderpriority,
-                round(PERCENT_RANK() OVER w, 6) AS pct_rank,
-                round(CUME_DIST() OVER w, 6) AS cum_dist,
-                CAST(DENSE_RANK() OVER w AS BIGINT) AS drank
-         FROM orders
-         WINDOW w AS (PARTITION BY o_orderpriority
-                      ORDER BY o_totalprice, o_orderkey)""",
-    "q_posexplode" ->
-      """SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, t[i] AS token
-         FROM (SELECT doc_id,
-                 CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-               FROM documents WHERE doc_id < 30),
-              UNNEST(generate_series(1, len(t))) AS u(i)""",
-    "q_window_range" ->
-      """SELECT o_custkey, o_orderkey,
-                round(SUM(o_totalprice) OVER
-                  (PARTITION BY o_custkey ORDER BY d
-                   RANGE BETWEEN 30 PRECEDING AND CURRENT ROW), 2)
-                  AS trailing_30d_spend,
-                CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-                FIRST_VALUE(o_orderkey) OVER w AS first_order,
-                LEAD(o_orderkey, 1) OVER w AS next_order
-         FROM (SELECT *, date_diff('day', DATE '1970-01-01',
-                                   CAST(o_orderdate AS DATE)) AS d
-               FROM orders)
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY d, o_orderkey)""",
-    "q_intersect" ->
-      """SELECT o_custkey FROM orders
-         WHERE o_orderdate BETWEEN TIMESTAMP '1997-01-01 00:00:00'
-                               AND TIMESTAMP '1997-12-31 23:59:59'
-         INTERSECT
-         SELECT o_custkey FROM orders
-         WHERE o_orderdate BETWEEN TIMESTAMP '1998-01-01 00:00:00'
-                               AND TIMESTAMP '1998-12-31 23:59:59'""",
-    "q_except" ->
-      """SELECT o_custkey FROM orders
-         WHERE o_orderdate BETWEEN TIMESTAMP '1997-01-01 00:00:00'
-                               AND TIMESTAMP '1997-12-31 23:59:59'
-         EXCEPT
-         SELECT o_custkey FROM orders
-         WHERE o_orderdate BETWEEN TIMESTAMP '1998-01-01 00:00:00'
-                               AND TIMESTAMP '1998-12-31 23:59:59'""",
-    "q_except_all" ->
-      """SELECT l_orderkey FROM lineitem
-         EXCEPT ALL
-         SELECT l_orderkey FROM lineitem WHERE l_linenumber = 1""",
-    "q_intersect_all" ->
-      """SELECT l_suppkey FROM lineitem WHERE l_quantity >= 25
-         INTERSECT ALL
-         SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'""",
-    "q_array_funcs" ->
-      """SELECT o_orderkey,
-                array_to_string(list_sort([o_orderkey % 7, o_orderkey % 13,
-                  o_orderkey % 3]), ',') AS mods_sorted,
-                CAST(len(list_distinct([o_orderkey % 2, o_orderkey % 4])) AS BIGINT)
-                  AS n_distinct_mods,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  [CAST(x * x AS BIGINT) FOR x IN generate_series(1, 5)]),
-                  (acc, v) -> acc + v) AS sum_squares,
-                list_contains(string_split(o_orderpriority, '-'), 'URGENT')
-                  AS is_urgent,
-                o_orderstatus AS m_status,
-                array_to_string(generate_series(o_orderkey % 5, o_orderkey % 5 + 4)[2:3],
-                  ',') AS mid_range,
-                greatest(o_orderkey % 11, o_orderkey % 17) AS max_mod,
-                array_to_string([o_orderstatus, o_orderpriority], ',') AS flat_pair
-         FROM orders""",
-    "q_join_agg_region" ->
-      """SELECT r_name,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(20,2))) AS DOUBLE)
-                  AS revenue,
-                count(DISTINCT o_custkey) AS n_custs
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name""",
-    "q_salted_join" ->
-      """SELECT event_id, upper(event_type) AS type_label FROM events""",
-    "q_stats_agg" ->
-      """SELECT l_returnflag,
-                round(stddev_samp(l_quantity), 6) AS qty_stddev,
-                round(var_samp(l_extendedprice), 2) AS price_var,
-                round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
-                round(covar_samp(l_quantity, l_discount), 6) AS qty_disc_covar
-         FROM lineitem GROUP BY l_returnflag""",
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-                round(quantile_cont(l_quantity, 0.5), 6) AS qty_p50,
-                round(quantile_cont(l_extendedprice, 0.25), 4) AS price_p25,
-                round(quantile_cont(l_extendedprice, 0.95), 4) AS price_p95
-         FROM lineitem GROUP BY l_returnflag""",
-    "q_percentile_binned" ->
-      """SELECT l_returnflag,
-                round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-                round(quantile_cont(l_quantity, 0.95), 6) AS p95
-         FROM lineitem GROUP BY l_returnflag""",
-    "q_scalar_funcs" ->
-      """SELECT o_orderkey,
-                date_trunc('month', o_orderdate) AS month_start,
-                CAST(year(o_orderdate) AS BIGINT) AS yr,
-                CAST(day(o_orderdate) AS BIGINT) AS dom,
-                CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1999-01-01')
-                     AS BIGINT) AS days_to_99,
-                upper(o_orderpriority) AS prio_upper,
-                lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS key_padded,
-                coalesce(regexp_extract(o_orderpriority, '^(\d+)', 1), '') AS prio_num,
-                concat_ws('|', o_orderstatus, o_orderpriority) AS status_prio,
-                round(sqrt(o_totalprice), 6) AS price_sqrt,
-                round(ln(o_totalprice + 1), 6) AS price_ln,
-                CAST(o_orderkey % 7 AS BIGINT) AS key_mod7,
-                CAST(abs(o_totalprice - 1000) AS DOUBLE) AS price_abs_dev
-         FROM orders""",
-    "q_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(text), '[^0-9a-z]', '', 'g')) AS fingerprint,
-                min(doc_id) AS keep_id, count(*) AS n_dups
-         FROM documents GROUP BY 1""",
-    "q_token_stats" ->
-      """SELECT doc_id,
-                CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS BIGINT) AS n_tokens,
-                CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                  t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                  AS BIGINT) AS n_stopwords,
-                CAST(length(text) AS BIGINT) AS n_chars_actual
-         FROM documents""",
-    "q_text_quality" ->
-      """SELECT doc_id, round(
-           0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-         + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0, 1.0)
-         + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                    THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END) < 0.2
-                    THEN 1.0 ELSE 0.0 END), 6) AS quality
-         FROM (SELECT doc_id, text,
-                 CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS DOUBLE) AS n,
-                 CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                   t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                   AS BIGINT) AS ns,
-                 length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-               FROM documents)""",
-    "q_lang_id" ->
-      """SELECT doc_id, lang AS declared_lang,
-                CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) >= 0.05
-                     THEN 'en' ELSE 'unknown' END AS lang_guess
-         FROM (SELECT doc_id, lang,
-                 CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS DOUBLE) AS n,
-                 CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                   t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                   AS BIGINT) AS ns
-               FROM documents)""",
-    "q_unique_tokens" ->
-      """SELECT doc_id, count(DISTINCT t) AS n_unique_tokens
-         FROM (SELECT doc_id, UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS t
-               FROM documents)
-         GROUP BY doc_id""",
-    "q_unigram_loglik" ->
-      """WITH occ AS (SELECT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents),
-              freqs AS (SELECT token, count(*) AS cnt FROM occ GROUP BY 1),
-              tot AS (SELECT sum(cnt) AS t_occ, count(*) AS v_size FROM freqs)
-         SELECT doc_id, count(*) AS n_tokens,
-                round(avg(ln(CAST(cnt + 1 AS DOUBLE) / (t_occ + v_size))), 6)
-                  AS mean_loglik
-         FROM occ JOIN freqs USING (token), tot
-         GROUP BY doc_id""",
-    "q_bigram_loglik" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents),
-              occ AS (SELECT doc_id, t[i] AS w1,
-                        array_to_string(t[i:i+1], ' ') AS bigram
-                      FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              bc AS (SELECT bigram, count(*) AS c_ab FROM occ GROUP BY 1),
-              uc AS (SELECT w, count(*) AS c_a
-                     FROM (SELECT UNNEST(t) AS w FROM tok) GROUP BY 1),
-              v AS (SELECT count(*) AS v_size FROM uc)
-         SELECT doc_id, count(*) AS n_bigrams,
-                round(avg(ln(CAST(c_ab + 1 AS DOUBLE) / (c_a + v_size))), 6)
-                  AS mean_loglik
-         FROM occ JOIN bc USING (bigram) JOIN uc ON occ.w1 = uc.w, v
-         GROUP BY doc_id""",
-    "q_kneser_ney" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents),
-              occ AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS bigram
-                      FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              bc AS (SELECT bigram, count(*) AS c_ab FROM occ GROUP BY 1),
-              sp AS (SELECT bigram, c_ab,
-                       string_split(bigram, ' ')[1] AS wa,
-                       string_split(bigram, ' ')[2] AS wb FROM bc),
-              la AS (SELECT wa, CAST(sum(c_ab) AS BIGINT) AS c_a,
-                       count(*) AS n1p_a FROM sp GROUP BY 1),
-              rb AS (SELECT wb, count(*) AS n1p_b FROM sp GROUP BY 1),
-              tt AS (SELECT count(*) AS t_types FROM bc)
-         SELECT doc_id, count(*) AS n_bigrams,
-                round(avg(ln(greatest(c_ab - 0.75, 0.0) / c_a
-                  + (0.75 * n1p_a / c_a)
-                    * (CAST(n1p_b AS DOUBLE) / t_types))), 6) AS mean_loglik
-         FROM occ JOIN sp USING (bigram)
-              JOIN la USING (wa)
-              JOIN rb USING (wb), tt
-         GROUP BY doc_id""",
-    "q_ccnet_buckets" ->
-      """WITH occ AS (SELECT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents),
-              freqs AS (SELECT token, count(*) AS cnt FROM occ GROUP BY 1),
-              tot AS (SELECT sum(cnt) AS t_occ, count(*) AS v_size FROM freqs),
-              score AS (SELECT doc_id,
-                          round(avg(ln(CAST(cnt + 1 AS DOUBLE) / (t_occ + v_size))), 6)
-                            AS ml
-                        FROM occ JOIN freqs USING (token), tot
-                        GROUP BY doc_id),
-              scored AS (SELECT s.doc_id, d.lang, -s.ml AS ppl_proxy
-                         FROM score s JOIN documents d USING (doc_id))
-         SELECT doc_id, lang, ppl_proxy,
-                CAST(ntile(3) OVER (PARTITION BY lang
-                  ORDER BY ppl_proxy ASC, doc_id ASC) AS BIGINT) AS bucket
-         FROM scored""",
-    "q_adamic_adar" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 120),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM canon
-                            UNION ALL SELECT b AS id FROM canon)
-                      GROUP BY 1),
-              adj AS (SELECT a AS w, b AS u FROM canon
-                      UNION ALL SELECT b AS w, a AS u FROM canon),
-              cand AS (SELECT n1.u AS u, n2.u AS v, count(*) AS n_common,
-                         sum(1.0 / ln(CAST(d.dg AS DOUBLE))) AS aa
-                       FROM adj n1
-                       JOIN deg d ON n1.w = d.id AND d.dg <= 1000
-                       JOIN adj n2 ON n1.w = n2.w AND n1.u < n2.u
-                       GROUP BY 1, 2)
-         SELECT u AS src, v AS dst, n_common, round(aa, 6) AS aa_score
-         FROM cand
-         WHERE NOT EXISTS (SELECT 1 FROM canon c
-                           WHERE c.a = cand.u AND c.b = cand.v)
-         ORDER BY aa_score DESC, src ASC, dst ASC
-         LIMIT 20""",
-    "q_seasonality" ->
-      """WITH cells AS (SELECT event_type,
-                          CAST(hour(ts) AS BIGINT) AS hour_of_day,
-                          count(*) AS n
-                        FROM events GROUP BY 1, 2),
-              totals AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS tot
-                         FROM cells GROUP BY 1),
-              grid AS (SELECT event_type, tot,
-                         UNNEST(generate_series(0, 23)) AS hour_of_day
-                       FROM totals)
-         SELECT g.event_type, g.hour_of_day,
-                CAST(COALESCE(c.n, 0) AS BIGINT) AS n,
-                round(24.0 * COALESCE(c.n, 0) / g.tot, 6) AS seasonal_index
-         FROM grid g LEFT JOIN cells c
-           ON g.event_type = c.event_type AND g.hour_of_day = c.hour_of_day""",
-    "q_binary_quantize" ->
-      """WITH b AS (SELECT vec_id,
-                      CAST(list_sum(list_transform(generate_series(0, 31), i -> CASE WHEN embedding[i + 1] >= 0 THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS w0,
-                      CAST(list_sum(list_transform(generate_series(0, 31), i -> CASE WHEN embedding[i + 33] >= 0 THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS w1
-                    FROM embeddings)
-         SELECT vec_id, w0, w1,
-                CAST(bit_count(w0) + bit_count(w1) AS BIGINT) AS n_set
-         FROM b""",
-    "q_hamming_topk" ->
-      """WITH b AS (SELECT vec_id, embedding,
-                      CAST(list_sum(list_transform(generate_series(0, 31), i -> CASE WHEN embedding[i + 1] >= 0 THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS w0,
-                      CAST(list_sum(list_transform(generate_series(0, 31), i -> CASE WHEN embedding[i + 33] >= 0 THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS w1
-                    FROM embeddings),
-              q AS (SELECT w0 AS qw0, w1 AS qw1, embedding AS qe
-                    FROM b WHERE vec_id = 0),
-              h AS (SELECT vec_id, embedding,
-                      CAST(bit_count(xor(w0, qw0)) + bit_count(xor(w1, qw1))
-                        AS BIGINT) AS hamming
-                    FROM b, q WHERE vec_id <> 0),
-              cand AS (SELECT vec_id, embedding, hamming FROM h
-                       ORDER BY hamming ASC, vec_id ASC LIMIT 50)
-         SELECT c.vec_id, c.hamming,
-                round(list_sum(list_transform(generate_series(1, 64),
-                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))), 6)
-                  AS exact_dot
-         FROM cand c, q
-         ORDER BY exact_dot DESC, vec_id ASC
-         LIMIT 10""",
-    "q_tcloseness" ->
-      """WITH staged AS (SELECT c_mktsegment, c_nationkey,
-                           CAST(floor(c_acctbal / 1000) AS BIGINT) AS acctbal_band
-                         FROM customer),
-              gl AS (SELECT acctbal_band AS v, count(*) AS nv
-                     FROM staged WHERE acctbal_band IS NOT NULL GROUP BY 1),
-              tot AS (SELECT CAST(sum(nv) AS BIGINT) AS n FROM gl),
-              cells AS (SELECT c_mktsegment, c_nationkey, acctbal_band AS v,
-                          count(*) AS c
-                        FROM staged WHERE acctbal_band IS NOT NULL
-                        GROUP BY 1, 2, 3),
-              wg AS (SELECT *, CAST(sum(c) OVER (PARTITION BY c_mktsegment,
-                       c_nationkey) AS BIGINT) AS g
-                     FROM cells),
-              agg AS (SELECT c_mktsegment, c_nationkey,
-                        min(g) AS group_size, min(n) AS n,
-                        CAST(sum(abs(c * n - nv * g)) AS BIGINT) AS s1n,
-                        CAST(sum(nv) AS BIGINT) AS s2n
-                      FROM wg JOIN gl ON wg.v = gl.v, tot
-                      GROUP BY 1, 2)
-         SELECT c_mktsegment, c_nationkey, group_size,
-                round((s1n / (CAST(group_size AS DOUBLE) * n)
-                  + (1.0 - s2n / n)) / 2, 6) AS tvd,
-                round((s1n / (CAST(group_size AS DOUBLE) * n)
-                  + (1.0 - s2n / n)) / 2, 6) <= 0.2 AS is_close
-         FROM agg""",
-    // Exact-integer mirror of the grid-collapsed spearman: doubled
-    // midranks from cumulative windows over the per-group value grids,
-    // HUGEINT moments, one closing double ratio (the 2x scale cancels).
-    "q_spearman" ->
-      """WITH cells AS (SELECT l_returnflag AS grp, l_quantity AS x,
-                          l_extendedprice AS y,
-                          CAST(count(*) AS BIGINT) AS c
-                        FROM lineitem
-                        WHERE l_quantity IS NOT NULL
-                          AND l_extendedprice IS NOT NULL
-                        GROUP BY 1, 2, 3),
-              gx AS (SELECT grp, x,
-                       CAST(COALESCE(SUM(cv) OVER (PARTITION BY grp
-                         ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND 1 PRECEDING), 0) * 2 + cv + 1 AS BIGINT)
-                         AS rx2
-                     FROM (SELECT grp, x, CAST(SUM(c) AS BIGINT) AS cv
-                           FROM cells GROUP BY 1, 2)),
-              gy AS (SELECT grp, y,
-                       CAST(COALESCE(SUM(cv) OVER (PARTITION BY grp
-                         ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND 1 PRECEDING), 0) * 2 + cv + 1 AS BIGINT)
-                         AS ry2
-                     FROM (SELECT grp, y, CAST(SUM(c) AS BIGINT) AS cv
-                           FROM cells GROUP BY 1, 2)),
-              m AS (SELECT grp, CAST(SUM(c) AS BIGINT) AS n,
-                      SUM(CAST(c AS HUGEINT) * rx2) AS sx,
-                      SUM(CAST(c AS HUGEINT) * ry2) AS sy,
-                      SUM(CAST(c AS HUGEINT) * rx2 * ry2) AS sxy,
-                      SUM(CAST(c AS HUGEINT) * rx2 * rx2) AS sxx,
-                      SUM(CAST(c AS HUGEINT) * ry2 * ry2) AS syy
-                    FROM cells JOIN gx USING (grp, x)
-                      JOIN gy USING (grp, y)
-                    GROUP BY 1)
-         SELECT grp AS l_returnflag, n,
-                CASE WHEN (n * sxx - sx * sx) > 0
-                      AND (n * syy - sy * sy) > 0 THEN
-                  round(CAST(n * sxy - sx * sy AS DOUBLE)
-                    / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                      * CAST(n * syy - sy * sy AS DOUBLE)), 6) END
-                  AS spearman_rho
-         FROM m""",
-    "q_boilerplate" ->
-      """WITH tok AS (SELECT source,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents),
-              pref AS (SELECT source, array_to_string(t[1:3], ' ') AS prefix
-                       FROM tok WHERE len(t) >= 1),
-              counts AS (SELECT source, prefix, count(*) AS n_docs
-                         FROM pref GROUP BY 1, 2),
-              totals AS (SELECT source, count(*) AS tot FROM pref GROUP BY 1),
-              ranked AS (SELECT source, prefix, n_docs,
-                           row_number() OVER (PARTITION BY source
-                             ORDER BY n_docs DESC, prefix ASC) AS rank
-                         FROM counts)
-         SELECT r.source, CAST(r.rank AS BIGINT) AS rank, r.prefix, r.n_docs,
-                round(r.n_docs / t.tot, 6) AS doc_share
-         FROM ranked r JOIN totals t USING (source)
-         WHERE r.rank <= 3""",
-    "q_conformal" ->
-      """WITH p AS (SELECT event_type,
-                      value - round(avg(value) OVER (PARTITION BY event_type),
-                        6) AS resid
-                    FROM events WHERE value IS NOT NULL),
-              r AS (SELECT event_type, abs(resid) AS a,
-                      row_number() OVER (PARTITION BY event_type
-                        ORDER BY abs(resid) ASC) AS rn
-                    FROM p),
-              st AS (SELECT event_type, count(*) AS n_cal,
-                       CAST(ceil((count(*) + 1) * 0.875) AS BIGINT) AS rank_r
-                     FROM r GROUP BY 1)
-         SELECT st.event_type, st.n_cal, st.rank_r,
-                round(r2.a, 6) AS radius
-         FROM st LEFT JOIN r r2
-           ON r2.event_type = st.event_type AND r2.rn = st.rank_r""",
-    "q_textrank" -> textRankOracleSql,
-    "q_clustering_coef" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 120),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS degree
-                      FROM (SELECT a AS id FROM canon
-                            UNION ALL SELECT b AS id FROM canon)
-                      GROUP BY 1),
-              t3 AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                     FROM canon e1 JOIN canon e2 ON e1.b = e2.a
-                     JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-              tri AS (SELECT id, CAST(count(*) AS BIGINT) AS triangles
-                      FROM (SELECT x AS id FROM t3
-                            UNION ALL SELECT y FROM t3
-                            UNION ALL SELECT z FROM t3)
-                      GROUP BY 1)
-         SELECT deg.id, deg.degree,
-                COALESCE(tri.triangles, CAST(0 AS BIGINT)) AS triangles,
-                CASE WHEN deg.degree >= 2 THEN
-                  round(2 * COALESCE(tri.triangles, CAST(0 AS BIGINT))
-                    / (deg.degree * (deg.degree - 1)), 6) END AS lcc
-         FROM deg LEFT JOIN tri ON deg.id = tri.id""",
-    "q_horvitz_thompson" ->
-      """WITH f AS (SELECT source, doc_id, n_chars,
-                      CASE WHEN source = 'src0' THEN 0.5
-                           WHEN source = 'src1' THEN 0.25
-                           ELSE 0.125 END AS p,
-                      CAST(('0x' || substring(md5('strat:' ||
-                        CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                        / 4294967296.0 AS u
-                    FROM documents),
-              kept AS (SELECT * FROM f WHERE u < p),
-              est AS (SELECT source, count(*) AS n_kept,
-                        round(sum(1.0 / p), 6) AS ht_count,
-                        round(sum(CAST(n_chars AS DOUBLE) / p), 6) AS ht_total,
-                        round(sum(CAST(n_chars AS DOUBLE) * n_chars
-                          * (1.0 - p) / (p * p)), 6) AS ht_variance
-                      FROM kept GROUP BY 1),
-              tru AS (SELECT source, count(*) AS n_true,
-                        CAST(sum(n_chars) AS BIGINT) AS true_total
-                      FROM documents GROUP BY 1)
-         SELECT t.source, t.n_true, t.true_total, e.n_kept, e.ht_count,
-                e.ht_total, e.ht_variance,
-                round(e.ht_total / t.true_total, 6) AS ratio
-         FROM tru t JOIN est e USING (source)""",
-    "q_query_likelihood" ->
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
-              occ AS (SELECT doc_id, UNNEST(t) AS term FROM tok),
-              tot AS (SELECT CAST(count(*) AS DOUBLE) AS big_t FROM occ),
-              cf AS (SELECT term, CAST(count(*) AS BIGINT) AS cf FROM occ
-                     WHERE term IN ('data', 'spark', 'merge') GROUP BY 1),
-              tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-                     FROM occ WHERE term IN ('data', 'spark', 'merge')
-                     GROUP BY 1, 2),
-              grid AS (SELECT l.doc_id, l.dl, c.term, c.cf FROM lens l, cf c),
-              sc AS (SELECT g.doc_id,
-                       ln((COALESCE(t.tf, 0) + 2048.0 * (g.cf / big_t))
-                         / (g.dl + 2048.0)) AS lp
-                     FROM grid g
-                     LEFT JOIN tf t
-                       ON g.doc_id = t.doc_id AND g.term = t.term, tot)
-         SELECT doc_id, round(sum(lp), 6) AS score
-         FROM sc GROUP BY 1
-         ORDER BY score DESC, doc_id ASC LIMIT 20""",
-    "q_yule_k" ->
-      s"""WITH occ AS (SELECT source, UNNEST($duckTokens) AS tok
-                       FROM documents),
-              freqs AS (SELECT source, tok, count(*) AS m
-                        FROM occ GROUP BY 1, 2),
-              sp AS (SELECT source, CAST(count(*) AS BIGINT) AS v_types,
-                       CAST(sum(m) AS BIGINT) AS n_tokens,
-                       CAST(sum(m * m) AS BIGINT) AS s2
-                     FROM freqs GROUP BY 1)
-         SELECT source, v_types, n_tokens,
-                round(10000.0 * (s2 - n_tokens)
-                  / (n_tokens * n_tokens), 6) AS yule_k
-         FROM sp""",
-    "q_novelty_curve" ->
-      s"""WITH pairs AS (SELECT DISTINCT
-                           CAST(floor(doc_id / 2000) AS BIGINT) AS batch,
-                           array_to_string(t[i:i+2], ' ') AS g
-                         FROM (SELECT doc_id, $duckTokens AS t
-                               FROM documents),
-                           UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              first AS (SELECT g, min(batch) AS fb FROM pairs GROUP BY 1)
-         SELECT p.batch, CAST(count(*) AS BIGINT) AS n_distinct,
-                CAST(sum(CASE WHEN f.fb = p.batch THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_novel,
-                round(sum(CASE WHEN f.fb = p.batch THEN 1 ELSE 0 END)
-                  / CAST(count(*) AS BIGINT), 6) AS novelty_rate
-         FROM pairs p JOIN first f ON p.g = f.g
-         GROUP BY 1""",
-    "q_diff_in_diff" ->
-      """WITH base AS (SELECT value,
-                        CASE WHEN CAST(('0x' || substring(md5(
-                            CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                            % 100 < 50
-                          THEN 'a' ELSE 'b' END AS arm,
-                        ts >= TIMESTAMP '2024-01-15' AS post
-                      FROM events WHERE value IS NOT NULL),
-              cells AS (SELECT arm, post, count(*) AS n, avg(value) AS m,
-                          var_samp(value) AS s2
-                        FROM base GROUP BY 1, 2),
-              wide AS (SELECT
-                max(CASE WHEN arm = 'a' AND NOT post THEN n END) AS n_t_pre,
-                max(CASE WHEN arm = 'a' AND post THEN n END) AS n_t_post,
-                max(CASE WHEN arm = 'b' AND NOT post THEN n END) AS n_c_pre,
-                max(CASE WHEN arm = 'b' AND post THEN n END) AS n_c_post,
-                max(CASE WHEN arm = 'a' AND NOT post THEN m END) AS m_t_pre,
-                max(CASE WHEN arm = 'a' AND post THEN m END) AS m_t_post,
-                max(CASE WHEN arm = 'b' AND NOT post THEN m END) AS m_c_pre,
-                max(CASE WHEN arm = 'b' AND post THEN m END) AS m_c_post,
-                max(CASE WHEN arm = 'a' AND NOT post THEN s2 END) AS v_t_pre,
-                max(CASE WHEN arm = 'a' AND post THEN s2 END) AS v_t_post,
-                max(CASE WHEN arm = 'b' AND NOT post THEN s2 END) AS v_c_pre,
-                max(CASE WHEN arm = 'b' AND post THEN s2 END) AS v_c_post
-                FROM cells)
-         SELECT CAST(n_t_pre AS BIGINT) AS n_t_pre,
-                CAST(n_t_post AS BIGINT) AS n_t_post,
-                CAST(n_c_pre AS BIGINT) AS n_c_pre,
-                CAST(n_c_post AS BIGINT) AS n_c_post,
-                round(m_t_pre, 6) AS m_t_pre,
-                round(m_t_post, 6) AS m_t_post,
-                round(m_c_pre, 6) AS m_c_pre,
-                round(m_c_post, 6) AS m_c_post,
-                round((m_t_post - m_t_pre) - (m_c_post - m_c_pre), 6) AS did,
-                round(sqrt(v_t_post / n_t_post + v_t_pre / n_t_pre
-                  + v_c_post / n_c_post + v_c_pre / n_c_pre), 6) AS did_se,
-                CASE WHEN round(sqrt(v_t_post / n_t_post + v_t_pre / n_t_pre
-                    + v_c_post / n_c_post + v_c_pre / n_c_pre), 6) > 0 THEN
-                  round(((m_t_post - m_t_pre) - (m_c_post - m_c_pre))
-                    / sqrt(v_t_post / n_t_post + v_t_pre / n_t_pre
-                      + v_c_post / n_c_post + v_c_pre / n_c_pre), 6) END
-                  AS t_stat
-         FROM wide""",
-    "q_shipping_priority" ->
-      """SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-                round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2)
-                  AS revenue
-         FROM orders o
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-         WHERE c.c_mktsegment = 'BUILDING'
-           AND o.o_orderdate < TIMESTAMP '1996-06-30'
-           AND l.l_shipdate > TIMESTAMP '1996-06-30'
-         GROUP BY 1, 2, 3
-         ORDER BY revenue DESC, l.l_orderkey ASC
-         LIMIT 10""",
-    "q_autocorr" ->
-      """WITH days AS (SELECT datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) AS day,
-                         CAST(count(*) AS DOUBLE) AS n
-                       FROM events GROUP BY 1),
-              lagged AS (SELECT day, n, UNNEST(generate_series(1, 7)) AS lag
-                         FROM days),
-              pairs AS (SELECT a.lag, a.n AS x, b.n AS y
-                        FROM lagged a JOIN lagged b
-                          ON a.day = b.day - b.lag AND a.lag = b.lag)
-         SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
-                CASE WHEN var_samp(x) > 0 AND var_samp(y) > 0 THEN
-                  round(covar_samp(x, y)
-                    / sqrt(var_samp(x) * var_samp(y)), 6) END AS acf
-         FROM pairs GROUP BY 1""",
-    "q_mmd" ->
-      """WITH comp AS (SELECT vec_id, CAST(vec_id % 2 AS INTEGER) AS s, i,
-                         CAST(embedding[i] AS DOUBLE) AS x
-                       FROM embeddings,
-                         UNNEST(generate_series(1, len(embedding))) AS u(i)),
-              cnt AS (SELECT
-                        count(CASE WHEN vec_id % 2 = 0 THEN 1 END) AS n_a,
-                        count(CASE WHEN vec_id % 2 = 1 THEN 1 END) AS n_b
-                      FROM embeddings),
-              means AS (SELECT i,
-                          avg(CASE WHEN s = 0 THEN x END) AS ma,
-                          avg(CASE WHEN s = 1 THEN x END) AS mb
-                        FROM comp GROUP BY 1),
-              lin AS (SELECT sum((ma - mb) * (ma - mb)) AS l FROM means),
-              mom AS (SELECT a.i AS i, b.i AS j,
-                        avg(CASE WHEN a.s = 0 THEN a.x * b.x END) AS qa,
-                        avg(CASE WHEN a.s = 1 THEN a.x * b.x END) AS qb
-                      FROM comp a JOIN comp b ON a.vec_id = b.vec_id
-                      GROUP BY 1, 2),
-              quad AS (SELECT sum(qa * qa) AS eaa, sum(qb * qb) AS ebb,
-                         sum(qa * qb) AS eab FROM mom)
-         SELECT n_a, n_b, round(l, 6) AS mmd2_linear,
-                round(eaa + ebb - 2.0 * eab, 6) AS mmd2_quad
-         FROM cnt, lin, quad""",
-    "q_ngram_pmi" ->
-      """WITH tok AS (SELECT CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents),
-              uc AS (SELECT w, count(*) AS c
-                     FROM (SELECT UNNEST(t) AS w FROM tok) GROUP BY 1),
-              ut AS (SELECT sum(c) AS n_uni FROM uc),
-              occ AS (SELECT t[i] AS w1, t[i+1] AS w2,
-                        array_to_string(t[i:i+1], ' ') AS bigram
-                      FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              bc AS (SELECT bigram, any_value(w1) AS w1, any_value(w2) AS w2,
-                        count(*) AS c_ab
-                     FROM occ GROUP BY 1),
-              bt AS (SELECT sum(c_ab) AS n_bi FROM bc)
-         SELECT bigram, c_ab, u1.c AS c1, u2.c AS c2,
-                round(ln((CAST(c_ab AS DOUBLE) / n_bi) /
-                  ((CAST(u1.c AS DOUBLE) / n_uni) * (CAST(u2.c AS DOUBLE) / n_uni))), 6)
-                  AS pmi
-         FROM bc JOIN uc u1 ON bc.w1 = u1.w
-                 JOIN uc u2 ON bc.w2 = u2.w, bt, ut
-         WHERE c_ab >= 5
-         ORDER BY pmi DESC, bigram ASC
-         LIMIT 100""",
-    "q_jaccard_pairs" -> jaccardPairsOracleSql,
-    "q_split_leakage" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 60),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              p AS (SELECT i.id_a, i.id_b,
-                           round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-                    FROM inter i
-                    JOIN sizes sa ON i.id_a = sa.doc_id
-                    JOIN sizes sb ON i.id_b = sb.doc_id
-                    WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-              sp AS (SELECT doc_id,
-                       CASE WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                                 AS BIGINT) % 100 < 90
-                            THEN 'train' ELSE 'test' END AS split
-                     FROM documents WHERE doc_id < 60)
-         SELECT p.id_a, p.id_b, p.jaccard,
-                a.split AS split_a, b.split AS split_b
-         FROM p JOIN sp a ON p.id_a = a.doc_id
-                JOIN sp b ON p.id_b = b.doc_id
-         WHERE a.split <> b.split""",
-    // identical result contract by construction (prefix filtering is an
-    // exact optimization), so the prefix variant shares the oracle
-    "q_jaccard_prefix" -> jaccardPairsOracleSql,
-    "q_edit_distance" ->
-      """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_distance
-         FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-         WHERE a.doc_id < 80 AND b.doc_id < 80
-           AND levenshtein(a.text, b.text) <= 50""",
-    "q_shingle_pairs" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 300),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-         SELECT i.id_a, i.id_b,
-                round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.doc_id
-         JOIN sizes sb ON i.id_b = sb.doc_id
-         WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02""",
-    "q_dup_clusters" ->
-      """WITH RECURSIVE
-           tok AS (SELECT DISTINCT doc_id,
-                     UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                   FROM documents WHERE doc_id < 60),
-           sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM tok a JOIN tok b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
-         SELECT id AS doc_id, cluster, (id = cluster) AS is_canonical FROM cl""",
-    "q_dedup_weights" ->
-      """WITH RECURSIVE
-           tok AS (SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                   FROM documents WHERE doc_id < 120),
-           sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                  FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM sh a JOIN sh b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 120),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
-         SELECT cluster AS doc_id, CAST(count(*) AS BIGINT) AS weight
-         FROM cl GROUP BY 1""",
-    "q_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric,
-                l_quantity AS value FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-         FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-         FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""",
-    "q_assortativity" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 300),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a AS a, i.id_b AS b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM pairs
-                            UNION ALL SELECT b AS id FROM pairs)
-                      GROUP BY 1),
-              bidir AS (SELECT a, b FROM pairs
-                        UNION ALL SELECT b AS a, a AS b FROM pairs)
-         SELECT CAST(count(*) / 2 AS BIGINT) AS n_edges,
-                CASE WHEN var_samp(CAST(da.dg AS DOUBLE)) > 0
-                      AND var_samp(CAST(db.dg AS DOUBLE)) > 0
-                     THEN round(covar_samp(CAST(da.dg AS DOUBLE),
-                                           CAST(db.dg AS DOUBLE))
-                                / sqrt(var_samp(CAST(da.dg AS DOUBLE))
-                                       * var_samp(CAST(db.dg AS DOUBLE))), 6)
-                END AS assortativity
-         FROM bidir
-         JOIN deg da ON bidir.a = da.id
-         JOIN deg db ON bidir.b = db.id""",
-    "q_leakage_safe_split" ->
-      """WITH RECURSIVE
-           tok AS (SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                   FROM documents WHERE doc_id < 120),
-           sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                  FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM sh a JOIN sh b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 120),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
-         SELECT id AS doc_id, cluster, pct AS split_pct,
-                CASE WHEN pct < 90 THEN 'train' ELSE 'test' END AS split
-         FROM (SELECT id, cluster,
-                 CAST(('0x' || substring(md5(CAST(cluster AS VARCHAR)), 1, 8))
-                   AS BIGINT) % 100 AS pct
-               FROM cl)""",
-    "q_modularity" ->
-      """WITH RECURSIVE
-           tok AS (SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                   FROM documents WHERE doc_id < 120),
-           sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                  FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM sh a JOIN sh b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 120),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id),
-           canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
-           mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM canon),
-           intra AS (SELECT ca.cluster AS c, CAST(count(*) AS BIGINT) AS e_c
-                     FROM canon
-                     JOIN cl ca ON canon.a = ca.id
-                     JOIN cl cb ON canon.b = cb.id
-                     WHERE ca.cluster = cb.cluster
-                     GROUP BY 1),
-           deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                   FROM (SELECT a AS id FROM canon
-                         UNION ALL SELECT b AS id FROM canon)
-                   GROUP BY 1),
-           dm AS (SELECT cl.cluster AS c, CAST(count(*) AS BIGINT) AS n_nodes,
-                         CAST(COALESCE(sum(deg.dg), 0) AS BIGINT) AS d_c
-                  FROM cl LEFT JOIN deg ON cl.id = deg.id
-                  GROUP BY 1)
-         SELECT dm.c AS cluster, dm.n_nodes,
-                COALESCE(intra.e_c, 0) AS e_c, dm.d_c,
-                CASE WHEN m.m > 0 THEN
-                  round(CAST(COALESCE(intra.e_c, 0) AS DOUBLE) / m.m
-                        - (CAST(dm.d_c AS DOUBLE) / (2.0 * m.m))
-                          * (CAST(dm.d_c AS DOUBLE) / (2.0 * m.m)), 6)
-                END AS q_contrib
-         FROM dm LEFT JOIN intra ON dm.c = intra.c, mm m""",
-    "q_lsh_calibration" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 40),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              p AS (SELECT i.id_a, i.id_b,
-                           i.n_common / (sa.n + sb.n - i.n_common) AS j
-                    FROM inter i
-                    JOIN sizes sa ON i.id_a = sa.doc_id
-                    JOIN sizes sb ON i.id_b = sb.doc_id
-                    WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.05),
-              e1 AS (SELECT id_a, id_b, j, (j * j) * (j * j) AS j4 FROM p),
-              e2 AS (SELECT id_a, id_b, j, 1.0 - j4 AS y FROM e1),
-              e3 AS (SELECT id_a, id_b, j, y * y AS y2 FROM e2),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b USING (band, band_hash)
-                       WHERE a.doc_id < b.doc_id),
-              scored AS (SELECT LEAST(CAST(floor(e3.j * 10) AS BIGINT), 9)
-                                  AS jaccard_decile,
-                                1.0 - e3.y2 * e3.y2 AS exp_p,
-                                CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END
-                                  AS obs
-                         FROM e3 LEFT JOIN cand c
-                           ON e3.id_a = c.id_a AND e3.id_b = c.id_b)
-         SELECT jaccard_decile, CAST(count(*) AS BIGINT) AS n_pairs,
-                round(avg(exp_p), 6) AS expected_rate,
-                round(CAST(sum(obs) AS DOUBLE) / count(*), 6) AS observed_rate
-         FROM scored GROUP BY 1""",
-    "q_golden_record" ->
-      """WITH RECURSIVE
-           tok AS (SELECT DISTINCT doc_id,
-                     UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                   FROM documents WHERE doc_id < 60),
-           sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM tok a JOIN tok b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id),
-           j AS (SELECT d.doc_id, d.text, d.lang, c.cluster
-                 FROM documents d JOIN cl c ON d.doc_id = c.id
-                 WHERE d.doc_id < 60),
-           base AS (SELECT cluster, CAST(min(doc_id) AS BIGINT) AS canonical_id,
-                           CAST(count(*) AS BIGINT) AS n_members
-                    FROM j GROUP BY 1),
-           pick AS (SELECT cluster, text AS text_golden FROM (
-                      SELECT cluster, text,
-                             ROW_NUMBER() OVER (PARTITION BY cluster
-                               ORDER BY length(text) DESC, doc_id ASC) AS rn
-                      FROM j) WHERE rn = 1),
-           md AS (SELECT cluster, lang AS lang_golden FROM (
-                    SELECT cluster, lang, count(*) AS c,
-                           ROW_NUMBER() OVER (PARTITION BY cluster
-                             ORDER BY count(*) DESC, lang ASC) AS rn
-                    FROM j GROUP BY cluster, lang) WHERE rn = 1)
-         SELECT b.cluster, b.canonical_id, b.n_members,
-                pick.text_golden, md.lang_golden
-         FROM base b JOIN pick USING (cluster) JOIN md USING (cluster)""",
-    "q_minhash_signatures" ->
-      """SELECT doc_id, seed,
-                min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                    AS BIGINT)) AS min_hash
-         FROM (SELECT DISTINCT doc_id,
-                 UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-               FROM documents WHERE doc_id < 40),
-              (SELECT UNNEST(generate_series(0, 15)) AS seed)
-         GROUP BY doc_id, seed""",
-    "q_minhash_est" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 200),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              agree AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_agree
-                        FROM sig a JOIN sig b
-                          ON a.seed = b.seed AND a.min_hash = b.min_hash
-                         AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-         SELECT id_a, id_b, n_agree,
-                round(CAST(n_agree AS DOUBLE) / 16, 6) AS est_jaccard
-         FROM agree WHERE CAST(n_agree AS DOUBLE) / 16 >= 0.25""",
-    "q_cosine_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-                    WHERE vec_id = 0)
-         SELECT vec_id,
-                round(list_dot_product(CAST(embedding AS DOUBLE[]), qv)
-                  / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                           CAST(embedding AS DOUBLE[])))
-                   * sqrt(list_dot_product(qv, qv))), 6) AS cosine_sim
-         FROM embeddings, q
-         ORDER BY cosine_sim DESC, vec_id LIMIT 10""",
-    "q_embedding_pairs" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings WHERE vec_id < 150)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                round(list_dot_product(a.v, b.v)
-                  / (sqrt(list_dot_product(a.v, a.v))
-                   * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine_sim
-         FROM e a, e b
-         WHERE a.vec_id < b.vec_id
-           AND list_dot_product(a.v, b.v)
-                 / (sqrt(list_dot_product(a.v, a.v))
-                  * sqrt(list_dot_product(b.v, b.v))) >= 0.3""",
-    "q_event_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-                count(*) AS n, round(sum(value), 2) AS total_value
-         FROM events GROUP BY 1, 2""",
-    "q_resample_fill" ->
-      """WITH hours AS (SELECT user_id, date_trunc('hour', ts) AS hour,
-                               count(*) AS n, sum(value) AS v
-                        FROM events GROUP BY 1, 2),
-              span AS (SELECT user_id, min(hour) AS lo, max(hour) AS hi
-                       FROM hours GROUP BY 1),
-              grid AS (SELECT user_id,
-                              UNNEST(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
-                       FROM span)
-         SELECT g.user_id, g.hour, coalesce(h.n, 0) AS n,
-                round(last_value(h.v IGNORE NULLS) OVER (
-                        PARTITION BY g.user_id ORDER BY g.hour
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                      2) AS v_filled
-         FROM grid g LEFT JOIN hours h
-           ON g.user_id = h.user_id AND g.hour = h.hour""",
-    "q_rolling_stats" ->
-      """WITH b AS (
-           SELECT user_id, ts, event_id, value,
-                  lag(value) OVER w AS prev_value,
-                  count(value) OVER wt AS n,
-                  avg(value) OVER wt AS m,
-                  sum(value * value) OVER wt AS ssq
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
-                  wt AS (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING))
-         SELECT user_id, ts, event_id, value, prev_value,
-                round(CASE WHEN n >= 1 THEN m END, 6) AS trail_mean,
-                round(CASE WHEN n >= 2
-                      THEN sqrt(greatest((ssq - n * m * m) / (n - 1), 0.0))
-                      END, 6) AS trail_sd,
-                round(CASE WHEN n >= 2
-                        AND sqrt(greatest((ssq - n * m * m) / (n - 1), 0.0)) > 0
-                      THEN (value - m)
-                           / sqrt(greatest((ssq - n * m * m) / (n - 1), 0.0))
-                      END, 6) AS rolling_z
-         FROM b""",
-    "q_scd2" ->
-      """SELECT user_id, ts, event_id, event_type,
-                ts AS valid_from,
-                LEAD(ts, 1) OVER (PARTITION BY user_id
-                  ORDER BY ts, event_id) AS valid_to,
-                LEAD(ts, 1) OVER (PARTITION BY user_id
-                  ORDER BY ts, event_id) IS NULL AS is_current
-         FROM events""",
-    "q_assoc_rules" ->
-      """WITH b AS (SELECT DISTINCT user_id, event_type FROM events),
-              n AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS nu FROM b),
-              it AS (SELECT event_type, CAST(count(*) AS BIGINT) AS cnt
-                     FROM b GROUP BY 1),
-              p AS (SELECT x.event_type AS item_a, y.event_type AS item_b,
-                           CAST(count(*) AS BIGINT) AS n_ab
-                    FROM b x JOIN b y ON x.user_id = y.user_id
-                                     AND x.event_type <> y.event_type
-                    GROUP BY 1, 2)
-         SELECT item_a, item_b, a.cnt AS n_a, c.cnt AS n_b, n_ab,
-                round(CAST(n_ab AS DOUBLE) / nu, 6) AS support,
-                round(CAST(n_ab AS DOUBLE) / a.cnt, 6) AS confidence,
-                round((CAST(n_ab AS DOUBLE) / nu)
-                      / ((CAST(a.cnt AS DOUBLE) / nu)
-                         * (CAST(c.cnt AS DOUBLE) / nu)), 6) AS lift
-         FROM p JOIN it a ON p.item_a = a.event_type
-                JOIN it c ON p.item_b = c.event_type, n""",
-    "q_theil_sen" ->
-      """WITH daily AS (SELECT event_type,
-                               CAST(date_trunc('day', ts) AS DATE) AS day,
-                               CAST(count(*) AS DOUBLE) AS y
-                        FROM events GROUP BY 1, 2),
-              d2 AS (SELECT event_type,
-                            CAST(date_diff('day', DATE '1970-01-01', day)
-                              AS DOUBLE) AS x, y
-                     FROM daily),
-              p AS (SELECT a.event_type,
-                           (b.y - a.y) / (b.x - a.x) AS slope,
-                           CASE WHEN b.y > a.y THEN 1
-                                WHEN b.y < a.y THEN -1 ELSE 0 END AS sgn
-                    FROM d2 a JOIN d2 b
-                      ON a.event_type = b.event_type AND a.x < b.x)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-                CAST(sum(sgn) AS BIGINT) AS mk_s,
-                round(CAST(sum(sgn) AS DOUBLE) / count(*), 6) AS kendall_tau,
-                round(quantile_cont(slope, 0.5), 6) AS sen_slope
-         FROM p GROUP BY 1""",
-    "q_burstiness" ->
-      """WITH daily AS (SELECT event_type, date_trunc('day', ts) AS day,
-                               CAST(count(*) AS BIGINT) AS x
-                        FROM events GROUP BY 1, 2),
-              st AS (SELECT event_type,
-                            CAST(count(*) AS BIGINT) AS n_days,
-                            CAST(sum(x) AS BIGINT) AS s,
-                            CAST(sum(x * x) AS BIGINT) AS ss
-                     FROM daily GROUP BY 1)
-         SELECT event_type, n_days,
-                round(CAST(s AS DOUBLE) / n_days, 6) AS mean_daily,
-                round(CASE WHEN n_days > 1 THEN greatest(
-                  (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE)
-                     * (CAST(s AS DOUBLE) / n_days))
-                  / (CAST(n_days AS DOUBLE) - 1.0), 0.0) END, 6) AS var_daily,
-                round(CASE WHEN n_days > 1 THEN greatest(
-                  (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE)
-                     * (CAST(s AS DOUBLE) / n_days))
-                  / (CAST(n_days AS DOUBLE) - 1.0), 0.0) END
-                  / (CAST(s AS DOUBLE) / n_days), 6) AS vmr
-         FROM st""",
-    "q_cusum" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                           CAST(count(*) AS BIGINT) AS n_events
-                    FROM events GROUP BY 1),
-              st AS (SELECT CAST(sum(n_events) AS DOUBLE) AS s,
-                            CAST(sum(n_events * n_events) AS DOUBLE) AS ss,
-                            CAST(count(*) AS DOUBLE) AS n FROM c),
-              p AS (SELECT day, n_events,
-                           sum(CAST(n_events AS DOUBLE)
-                               - (s / n + 0.5 * sqrt(greatest(ss / n
-                                    - (s / n) * (s / n), 0.0))))
-                             OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                                   PRECEDING AND CURRENT ROW) AS pt,
-                           4.0 * sqrt(greatest(ss / n - (s / n) * (s / n),
-                                      0.0)) AS h
-                    FROM c, st),
-              s2 AS (SELECT day, n_events,
-                            pt - least(0.0, min(pt) OVER (ORDER BY day
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW)) AS s_t,
-                            h
-                     FROM p)
-         SELECT day, n_events, round(s_t, 6) AS cusum,
-                round(h, 6) AS threshold,
-                round(s_t, 6) > round(h, 6) AS alarm
-         FROM s2""",
-    "q_benford" -> benfordOracleSql,
-    "q_jaro_winkler" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                round(jaro_winkler_similarity(a.c_name, b.c_name), 6) AS jw_sim
-         FROM customer a JOIN customer b
-           ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-         WHERE round(jaro_winkler_similarity(a.c_name, b.c_name), 6) >= 0.95""",
-    // The guard's preflight mass recomputed from the same grouping; the
-    // budget of 10 is below any SF's pair mass, so tripped is always true.
-    "q_jw_guard" ->
-      """WITH n AS (SELECT CAST(c_nationkey AS VARCHAR) AS blk,
-                           CAST(count(*) AS BIGINT) AS n
-                    FROM customer WHERE c_nationkey IS NOT NULL
-                    GROUP BY 1),
-              p AS (SELECT blk, (n * (n - 1)) // 2 AS p FROM n),
-              t AS (SELECT CAST(SUM(p) AS BIGINT) AS total_pairs FROM p),
-              h AS (SELECT blk AS hottest_block,
-                           CAST(p AS BIGINT) AS hottest_pairs
-                    FROM p ORDER BY p DESC, blk DESC LIMIT 1)
-         SELECT total_pairs, hottest_block, hottest_pairs,
-                TRUE AS guard_tripped
-         FROM t, h""",
-    "q_survival" ->
-      """WITH lastev AS (SELECT user_id, event_type AS last_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1),
-              u AS (SELECT e.user_id,
-                           CAST(date_diff('day', date_trunc('day', min(e.ts)),
-                                date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
-                           max(l.last_type) = 'purchase' AS ev
-                    FROM events e JOIN lastev l USING (user_id)
-                    GROUP BY e.user_id),
-              g AS (SELECT dur,
-                           CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
-                             AS n_events,
-                           CAST(sum(CASE WHEN ev THEN 0 ELSE 1 END) AS BIGINT)
-                             AS n_censored
-                    FROM u GROUP BY 1),
-              w AS (SELECT dur, n_events, n_censored,
-                           sum(n_events + n_censored) OVER ()
-                             - COALESCE(sum(n_events + n_censored) OVER
-                                 (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING), 0) AS n_risk
-                    FROM g),
-              s AS (SELECT dur, n_events, n_censored, n_risk,
-                           sum(CASE WHEN n_events > 0 AND n_events = n_risk
-                                THEN 1 ELSE 0 END) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS zeros,
-                           sum(CASE WHEN n_events > 0 AND n_events < n_risk
-                                THEN ln(1.0 - CAST(n_events AS DOUBLE) / n_risk)
-                                ELSE 0.0 END) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS lnsum
-                    FROM w)
-         SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
-                n_events, n_censored,
-                round(CASE WHEN zeros > 0 THEN 0.0 ELSE exp(lnsum) END, 6)
-                  AS survival
-         FROM s WHERE n_events > 0""",
-    "q_psi_numeric" ->
-      """WITH e AS (SELECT quantile_cont(n_chars,
-                       [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q
-                    FROM documents WHERE source = 'src0'),
-              rb AS (SELECT 1 + CAST((n_chars > q[1]) AS INT)
-                       + CAST((n_chars > q[2]) AS INT)
-                       + CAST((n_chars > q[3]) AS INT)
-                       + CAST((n_chars > q[4]) AS INT)
-                       + CAST((n_chars > q[5]) AS INT)
-                       + CAST((n_chars > q[6]) AS INT)
-                       + CAST((n_chars > q[7]) AS INT)
-                       + CAST((n_chars > q[8]) AS INT)
-                       + CAST((n_chars > q[9]) AS INT) AS decile
-                     FROM documents, e WHERE source = 'src0'),
-              cb AS (SELECT 1 + CAST((n_chars > q[1]) AS INT)
-                       + CAST((n_chars > q[2]) AS INT)
-                       + CAST((n_chars > q[3]) AS INT)
-                       + CAST((n_chars > q[4]) AS INT)
-                       + CAST((n_chars > q[5]) AS INT)
-                       + CAST((n_chars > q[6]) AS INT)
-                       + CAST((n_chars > q[7]) AS INT)
-                       + CAST((n_chars > q[8]) AS INT)
-                       + CAST((n_chars > q[9]) AS INT) AS decile
-                     FROM documents, e WHERE source <> 'src0'),
-              r AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_ref
-                    FROM rb GROUP BY 1),
-              c AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_cur
-                    FROM cb GROUP BY 1),
-              j AS (SELECT decile, COALESCE(n_ref, 0) AS n_ref,
-                           COALESCE(n_cur, 0) AS n_cur
-                    FROM r FULL OUTER JOIN c USING (decile)),
-              t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-                           CAST(sum(n_cur) AS DOUBLE) AS tc,
-                           CAST(count(*) AS DOUBLE) AS k FROM j)
-         SELECT decile, n_ref, n_cur,
-                round((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k), 6)
-                  AS p_ref,
-                round((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k), 6)
-                  AS p_cur,
-                round(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k)
-                       - (CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))
-                      * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k))
-                           / ((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))),
-                      6) AS psi_contrib
-         FROM j, t""",
-    "q_transitions" ->
-      """SELECT prev_type, event_type, count(*) AS n_transitions
-         FROM (SELECT event_type,
-                 LAG(event_type, 1) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id) AS prev_type
-               FROM events)
-         WHERE prev_type IS NOT NULL
-         GROUP BY 1, 2""",
-    "q_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1
-                     FROM events WHERE event_type = 'view' GROUP BY 1),
-              s2 AS (SELECT s1.user_id, t1,
-                       min(CASE WHEN e.event_type = 'click'
-                                 AND epoch_us(e.ts) > t1
-                                THEN epoch_us(e.ts) END) AS t2
-                     FROM s1 LEFT JOIN events e USING (user_id)
-                     GROUP BY s1.user_id, t1),
-              s3 AS (SELECT s2.user_id, t1, t2,
-                       min(CASE WHEN e.event_type = 'purchase'
-                                 AND epoch_us(e.ts) > t2
-                                THEN epoch_us(e.ts) END) AS t3
-                     FROM s2 LEFT JOIN events e USING (user_id)
-                     GROUP BY s2.user_id, t1, t2)
-         SELECT steps_completed, count(*) AS n_users
-         FROM (SELECT CAST(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END
-                         + CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END
-                         + CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END
-                       AS BIGINT) AS steps_completed
-               FROM s3)
-         GROUP BY 1""",
-    "q_cohort_retention" ->
-      """WITH f AS (SELECT user_id, date_trunc('day', min(ts)) AS cohort_day
-                    FROM events GROUP BY 1)
-         SELECT cohort_day,
-                CAST(date_diff('day', cohort_day,
-                  date_trunc('day', e.ts)) AS BIGINT) AS day_offset,
-                count(DISTINCT e.user_id) AS n_active
-         FROM events e JOIN f USING (user_id)
-         GROUP BY 1, 2""",
-    "q_sessionize" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, ts, value,
-                  CASE WHEN prev_us IS NULL
-                         OR (epoch_us(ts) - prev_us) > 1800000000
-                       THEN 1 ELSE 0 END AS new_sess
-           FROM (SELECT user_id, event_id, ts, value,
-                        LAG(epoch_us(ts), 1) OVER
-                          (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-                 FROM events)),
-              sess AS (
-           SELECT user_id, value,
-                  CAST(SUM(new_sess) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND CURRENT ROW) AS BIGINT)
-                    AS session_id
-           FROM flagged)
-         SELECT user_id, session_id, count(*) AS n_events,
-                round(sum(value), 2) AS session_value
-         FROM sess GROUP BY user_id, session_id""",
-    "q_multimodal_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                substring(text, 1, 4) AS magic
-         FROM documents""",
-    // Closed-form pixel grid: the oracle needs NO codec — PNG is
-    // lossless so the engine's real ImageIO roundtrip must land on the
-    // formula exactly (sums are exact ints; one double division each).
-    "q_image_decode" ->
-      """WITH ids AS (SELECT doc_id AS id, CAST(8 + doc_id % 9 AS INTEGER) AS w,
-                        CAST(8 + doc_id % 7 AS INTEGER) AS h
-                      FROM documents),
-              px AS (SELECT id, w, h, xs.x, ys.y
-                     FROM ids,
-                          UNNEST(generate_series(0, CAST(w - 1 AS BIGINT)))
-                            AS xs(x),
-                          UNNEST(generate_series(0, CAST(h - 1 AS BIGINT)))
-                            AS ys(y))
-         SELECT id AS asset_id, 'png' AS format, w AS width, h AS height,
-                CAST(SUM((7*id + 3*x + 5*y) % 256) AS DOUBLE) / (w*h)
-                  AS mean_r,
-                CAST(SUM((11*id + 2*x + 7*y) % 256) AS DOUBLE) / (w*h)
-                  AS mean_g,
-                CAST(SUM((13*id + 4*x + y) % 256) AS DOUBLE) / (w*h)
-                  AS mean_b
-         FROM px GROUP BY 1, 2, 3, 4""",
-    // JPEG is lossy: the oracle pins what any conformant codec
-    // preserves (format, intrinsic dimensions).
-    "q_image_decode_jpeg" ->
-      """SELECT doc_id AS asset_id, 'jpeg' AS format,
-                CAST(8 + doc_id % 9 AS INTEGER) AS width,
-                CAST(8 + doc_id % 7 AS INTEGER) AS height
-         FROM documents""",
-    // Both aHashes from the closed form (brightened twin via
-    // LEAST(255, .+4)); hamming = bit_count(xor) over the two halves.
-    "q_image_neardup" ->
-      """WITH ids AS (SELECT doc_id AS id, CAST(8 + doc_id % 9 AS INTEGER) AS w,
-                        CAST(8 + doc_id % 7 AS INTEGER) AS h
-                      FROM documents),
-              cells AS (SELECT id, w, h, cxs.cx, cys.cy,
-                          (cx * w) // 8 AS sx, (cy * h) // 8 AS sy
-                        FROM ids,
-                             UNNEST(generate_series(0, 7)) AS cxs(cx),
-                             UNNEST(generate_series(0, 7)) AS cys(cy)),
-              luma AS (SELECT id, cy*8 + cx AS bit,
-                         (299*((7*id + 3*sx + 5*sy) % 256)
-                          + 587*((11*id + 2*sx + 7*sy) % 256)
-                          + 114*((13*id + 4*sx + sy) % 256)) // 1000 AS la,
-                         (299*least(255, (7*id + 3*sx + 5*sy) % 256 + 4)
-                          + 587*least(255, (11*id + 2*sx + 7*sy) % 256 + 4)
-                          + 114*least(255, (13*id + 4*sx + sy) % 256 + 4))
-                           // 1000 AS lb
-                       FROM cells),
-              m AS (SELECT id, CAST(SUM(la) // 64 AS BIGINT) AS ma,
-                           CAST(SUM(lb) // 64 AS BIGINT) AS mb
-                    FROM luma GROUP BY 1),
-              hsh AS (SELECT luma.id,
-                        CAST(SUM(CASE WHEN la > ma AND bit >= 32
-                          THEN CAST(1 AS BIGINT) << CAST(bit - 32 AS INTEGER)
-                          ELSE 0 END) AS BIGINT) AS ha_hi,
-                        CAST(SUM(CASE WHEN la > ma AND bit < 32
-                          THEN CAST(1 AS BIGINT) << CAST(bit AS INTEGER)
-                          ELSE 0 END) AS BIGINT) AS ha_lo,
-                        CAST(SUM(CASE WHEN lb > mb AND bit >= 32
-                          THEN CAST(1 AS BIGINT) << CAST(bit - 32 AS INTEGER)
-                          ELSE 0 END) AS BIGINT) AS hb_hi,
-                        CAST(SUM(CASE WHEN lb > mb AND bit < 32
-                          THEN CAST(1 AS BIGINT) << CAST(bit AS INTEGER)
-                          ELSE 0 END) AS BIGINT) AS hb_lo
-                      FROM luma JOIN m ON m.id = luma.id GROUP BY 1)
-         SELECT id AS doc_id,
-                CAST(bit_count(xor(ha_hi, hb_hi))
-                  + bit_count(xor(ha_lo, hb_lo)) AS BIGINT) AS hamming,
-                (bit_count(xor(ha_hi, hb_hi))
-                  + bit_count(xor(ha_lo, hb_lo))) <= 8 AS is_near_dup
-         FROM hsh""",
-    // aHash from the same closed form: 8x8 nearest-neighbor cells,
-    // integer Rec.601 luma, integer mean, unsigned 32-bit halves.
-    "q_image_ahash" ->
-      """WITH ids AS (SELECT doc_id AS id, CAST(8 + doc_id % 9 AS INTEGER) AS w,
-                        CAST(8 + doc_id % 7 AS INTEGER) AS h
-                      FROM documents),
-              cells AS (SELECT id, w, h, cxs.cx, cys.cy,
-                          (cx * w) // 8 AS sx, (cy * h) // 8 AS sy
-                        FROM ids,
-                             UNNEST(generate_series(0, 7)) AS cxs(cx),
-                             UNNEST(generate_series(0, 7)) AS cys(cy)),
-              luma AS (SELECT id, cy*8 + cx AS bit,
-                         (299*((7*id + 3*sx + 5*sy) % 256)
-                          + 587*((11*id + 2*sx + 7*sy) % 256)
-                          + 114*((13*id + 4*sx + sy) % 256)) // 1000 AS l
-                       FROM cells),
-              m AS (SELECT id, CAST(SUM(l) // 64 AS BIGINT) AS mn
-                    FROM luma GROUP BY 1)
-         SELECT luma.id AS asset_id,
-                CAST(SUM(CASE WHEN l > mn AND bit >= 32
-                  THEN CAST(1 AS BIGINT) << CAST(bit - 32 AS INTEGER)
-                  ELSE 0 END) AS BIGINT) AS ahash_hi,
-                CAST(SUM(CASE WHEN l > mn AND bit < 32
-                  THEN CAST(1 AS BIGINT) << CAST(bit AS INTEGER)
-                  ELSE 0 END) AS BIGINT) AS ahash_lo
-         FROM luma JOIN m ON m.id = luma.id GROUP BY 1""",
-    "q_dup_spans" ->
-      s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents),
-              s AS (SELECT doc_id, toks, len(toks) AS n FROM t
-                    WHERE len(toks) >= 8),
-              x AS (SELECT doc_id, UNNEST(generate_series(0, n - 8)) AS i,
-                           toks
-                    FROM s),
-              sp AS (SELECT doc_id,
-                            array_to_string(toks[i + 1 : i + 8], ' ') AS span
-                     FROM x)
-         SELECT md5(span) AS span_hash, MIN(span) AS span_example,
-                CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-                CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-                MIN(doc_id) AS first_doc
-         FROM sp GROUP BY md5(span)
-         HAVING COUNT(DISTINCT doc_id) >= 2""",
-    "q_kanonymity" ->
-      """SELECT c_mktsegment, c_nationkey,
-                CAST(floor(c_acctbal / 1000) AS BIGINT) AS acctbal_band,
-                CAST(COUNT(*) AS BIGINT) AS group_size
-         FROM customer
-         GROUP BY c_mktsegment, c_nationkey, acctbal_band
-         HAVING COUNT(*) < 3""",
-    "q_ldiversity" ->
-      """SELECT c_mktsegment, c_nationkey,
-                CAST(COUNT(*) AS BIGINT) AS group_size,
-                CAST(COUNT(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT))
-                     AS BIGINT) AS n_sensitive,
-                COUNT(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT)) >= 4
-                  AS is_diverse
-         FROM customer
-         GROUP BY c_mktsegment, c_nationkey""",
-    "q_zorder_key" ->
-      s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-                 CAST(${mortonSql("l_partkey", "l_suppkey")} AS BIGINT) AS zkey
-          FROM lineitem""",
-    "q_pagerank" -> pageRankOracleSql,
-    "q_hits" -> hitsOracleSql(3),
-    "q_group_ols" ->
-      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-                round(CASE WHEN var_samp(l_quantity) > 0
-                  THEN covar_samp(l_quantity, l_extendedprice)
-                         / var_samp(l_quantity) END, 6) AS slope,
-                round(avg(l_extendedprice)
-                  - (CASE WHEN var_samp(l_quantity) > 0
-                       THEN covar_samp(l_quantity, l_extendedprice)
-                              / var_samp(l_quantity) END)
-                    * avg(l_quantity), 6) AS intercept,
-                round((covar_samp(l_quantity, l_extendedprice)
-                         * covar_samp(l_quantity, l_extendedprice))
-                      / (var_samp(l_quantity) * var_samp(l_extendedprice)),
-                  6) AS r2
-         FROM lineitem GROUP BY l_returnflag""",
-    "q_stream_enrich" ->
-      """SELECT e.event_id, e.user_id, c.c_name, c.c_mktsegment, e.value
-         FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey""",
-    "q_ri_orphans" ->
-      """SELECT o.o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orphans
-         FROM orders o
-         WHERE o.o_custkey IS NOT NULL
-           AND NOT EXISTS (SELECT 1 FROM customer c
-                           WHERE c.c_custkey % 3 <> 0
-                             AND c.c_custkey = o.o_custkey)
-         GROUP BY o.o_custkey""",
-    "q_sentence_stats" ->
-      s"""WITH t AS (SELECT doc_id, $duckSentences AS sents FROM documents),
-              c AS (SELECT doc_id, sents,
-                      list_transform(sents,
-                        s -> len(${duckTokensOf("s")})) AS counts
-                    FROM t)
-         SELECT doc_id,
-                CAST(len(sents) AS BIGINT) AS n_sentences,
-                round(CASE WHEN len(sents) > 0
-                  THEN CAST(list_aggregate(counts, 'sum') AS DOUBLE)
-                         / len(sents) END, 6) AS avg_sent_tokens,
-                CAST(list_aggregate(counts, 'max') AS BIGINT)
-                  AS max_sent_tokens
-         FROM c""",
-    "q_heavy_hitters" ->
-      s"""WITH tok AS (SELECT token FROM documents,
-                         UNNEST($duckTokens) AS u(token)),
-              tot AS (SELECT COUNT(*) AS total FROM tok),
-              c AS (SELECT token AS item, CAST(COUNT(*) AS BIGINT) AS cnt
-                    FROM tok GROUP BY 1)
-         SELECT item, cnt FROM c, tot WHERE cnt * 41 > tot.total""",
-    "q_mad_outliers" ->
-      """WITH med AS (SELECT event_type, median(value) AS med
-                      FROM events GROUP BY 1),
-              mad AS (SELECT e.event_type,
-                             median(abs(e.value - med.med)) AS mad
-                      FROM events e JOIN med USING (event_type)
-                      GROUP BY 1)
-         SELECT e.event_id, e.event_type, e.value, med.med, mad.mad,
-                round(abs(e.value - med.med) / (mad.mad * 1.4826), 6)
-                  AS robust_z
-         FROM events e JOIN med USING (event_type)
-                       JOIN mad USING (event_type)
-         WHERE mad.mad > 0
-           AND round(abs(e.value - med.med) / (mad.mad * 1.4826), 6) > 3.0""",
-    "q_label_prop" -> labelPropOracleSql,
-    "q_ppr" -> pprOracleSql,
-    "q_mi_tokens" ->
-      s"""WITH pres AS (SELECT DISTINCT doc_id, lang, token FROM documents,
-                          UNNEST($duckTokens) AS u(token)),
-              pc AS (SELECT lang, token,
-                            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS a
-                     FROM pres GROUP BY 1, 2),
-              cd AS (SELECT lang, COUNT(*) AS n_class
-                     FROM documents GROUP BY 1),
-              td AS (SELECT token, COUNT(DISTINCT doc_id) AS n_token
-                     FROM pres GROUP BY 1),
-              nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-              cells AS (SELECT pc.lang, pc.token, pc.a,
-                               td.n_token, cd.n_class, nd.n_docs,
-                               td.n_token - pc.a AS b,
-                               cd.n_class - pc.a AS c,
-                               nd.n_docs - cd.n_class - (td.n_token - pc.a)
-                                 AS d
-                        FROM pc JOIN cd USING (lang)
-                                JOIN td USING (token)
-                                CROSS JOIN nd),
-              scored AS (SELECT lang, token, a,
-                round(
-                  (CASE WHEN a > 0 THEN CAST(a AS DOUBLE) / CAST(n_docs AS DOUBLE)
-                     * ln(CAST(a AS DOUBLE) * CAST(n_docs AS DOUBLE)
-                          / (CAST(n_token AS DOUBLE) * CAST(n_class AS DOUBLE)))
-                   ELSE 0.0 END)
-                + (CASE WHEN b > 0 THEN CAST(b AS DOUBLE) / CAST(n_docs AS DOUBLE)
-                     * ln(CAST(b AS DOUBLE) * CAST(n_docs AS DOUBLE)
-                          / (CAST(n_token AS DOUBLE)
-                             * CAST(n_docs - n_class AS DOUBLE)))
-                   ELSE 0.0 END)
-                + (CASE WHEN c > 0 THEN CAST(c AS DOUBLE) / CAST(n_docs AS DOUBLE)
-                     * ln(CAST(c AS DOUBLE) * CAST(n_docs AS DOUBLE)
-                          / (CAST(n_docs - n_token AS DOUBLE)
-                             * CAST(n_class AS DOUBLE)))
-                   ELSE 0.0 END)
-                + (CASE WHEN d > 0 THEN CAST(d AS DOUBLE) / CAST(n_docs AS DOUBLE)
-                     * ln(CAST(d AS DOUBLE) * CAST(n_docs AS DOUBLE)
-                          / (CAST(n_docs - n_token AS DOUBLE)
-                             * CAST(n_docs - n_class AS DOUBLE)))
-                   ELSE 0.0 END), 6) AS mi
-                FROM cells)
-         SELECT lang, token, a, mi,
-                CAST(row_number() OVER (PARTITION BY lang
-                  ORDER BY mi DESC, token ASC) AS BIGINT) AS rnk
-         FROM scored
-         QUALIFY rnk <= 5""",
-    "q_event_seqs" ->
-      """WITH s AS (SELECT event_type,
-                           lag(event_type, 1) OVER w AS p1,
-                           lag(event_type, 2) OVER w AS p2
-                    FROM events
-                    WINDOW w AS (PARTITION BY user_id
-                                 ORDER BY ts ASC, event_id ASC))
-         SELECT p2 || '>' || p1 || '>' || event_type AS sequence,
-                CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM s WHERE p2 IS NOT NULL AND p1 IS NOT NULL
-                  AND event_type IS NOT NULL
-         GROUP BY 1
-         ORDER BY cnt DESC, sequence ASC
-         LIMIT 20""",
-    "q_srm_check" ->
-      """WITH c AS (SELECT
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS n_a,
-                      SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                        AS n_b
-                    FROM events
-                    WHERE event_type IN ('click', 'view'))
-         SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-                round(CASE WHEN n_a + n_b > 0 THEN
-                    (n_a - CAST(n_a + n_b AS DOUBLE) * 0.5)
-                      * (n_a - CAST(n_a + n_b AS DOUBLE) * 0.5)
-                      / (CAST(n_a + n_b AS DOUBLE) * 0.5)
-                  + (n_b - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-                      * (n_b - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-                      / (CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5)) END, 6)
-                  AS srm_chi2
-         FROM c""",
-    "q_bag_fingerprint" ->
-      s"""SELECT doc_id,
-                 md5(array_to_string(list_sort($duckTokens), ' ')) AS bag_fp
-          FROM documents""",
-    "q_source_similarity" ->
-      s"""WITH tk AS (SELECT source, $duckTokens AS t FROM documents),
-              tok AS (SELECT DISTINCT source AS id,
-                             array_to_string(t[i : i + 1], ' ') AS token
-                      FROM tk,
-                           UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              sizes AS (SELECT id, count(*) AS n FROM tok GROUP BY id),
-              inter AS (SELECT a.id AS id_a, b.id AS id_b,
-                               count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.id < b.id
-                        GROUP BY 1, 2)
-         SELECT i.id_a, i.id_b,
-                round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.id
-         JOIN sizes sb ON i.id_b = sb.id
-         WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.5""",
-    "q_fd_violations" ->
-      """SELECT l_partkey,
-                (COUNT(DISTINCT l_suppkey)
-                  + MAX(CASE WHEN l_suppkey IS NULL THEN 1 ELSE 0 END))
-                  AS n_rhs_values,
-                CAST(COUNT(*) AS BIGINT) AS n_rows
-         FROM lineitem
-         GROUP BY l_partkey
-         HAVING (COUNT(DISTINCT l_suppkey)
-                  + MAX(CASE WHEN l_suppkey IS NULL THEN 1 ELSE 0 END)) > 1""",
-    "q_debounce" ->
-      """SELECT event_id, user_id, ts, event_type
-         FROM (SELECT event_id, user_id, ts, event_type,
-                      lag(event_type) OVER w AS prev_type,
-                      row_number() OVER w AS rn
-               FROM events
-               WINDOW w AS (PARTITION BY user_id
-                            ORDER BY ts ASC, event_id ASC))
-         WHERE rn = 1
-            OR (event_type IS DISTINCT FROM prev_type)""",
-    "q_pq_topk" -> pqTopkOracleSql(),
-    "q_pq_topk_bcast" -> pqTopkOracleSql(nCodes = 256),
-    "q_ivf_topk_bcast" -> ivfTopkBcastOracleSql,
-    "q_char_pairs" ->
-      s"""WITH w AS (SELECT w FROM documents,
-                       UNNEST($duckTokens) AS u(w)
-                     WHERE length(w) >= 2),
-              p AS (SELECT pair FROM w,
-                      UNNEST(list_transform(generate_series(1, length(w) - 1),
-                        i -> substr(w, i, 2))) AS v(pair))
-         SELECT pair, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM p GROUP BY 1
-         ORDER BY cnt DESC, pair ASC LIMIT 50""",
-    "q_chi2_tokens" ->
-      s"""WITH pres AS (SELECT DISTINCT doc_id, lang, token FROM documents,
-                          UNNEST($duckTokens) AS u(token)),
-              pc AS (SELECT lang, token,
-                            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS a
-                     FROM pres GROUP BY 1, 2),
-              cd AS (SELECT lang, COUNT(*) AS n_class
-                     FROM documents GROUP BY 1),
-              td AS (SELECT token, COUNT(DISTINCT doc_id) AS n_token
-                     FROM pres GROUP BY 1),
-              nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-              cells AS (SELECT pc.lang, pc.token, pc.a,
-                          round(CASE WHEN
-                              CAST(td.n_token AS DOUBLE)
-                                * CAST(nd.n_docs - td.n_token AS DOUBLE)
-                                * CAST(cd.n_class AS DOUBLE)
-                                * CAST(nd.n_docs - cd.n_class AS DOUBLE) > 0
-                            THEN CAST(nd.n_docs AS DOUBLE)
-                              * (CAST(pc.a AS DOUBLE)
-                                  * CAST(nd.n_docs - cd.n_class
-                                      - (td.n_token - pc.a) AS DOUBLE)
-                                - CAST(td.n_token - pc.a AS DOUBLE)
-                                  * CAST(cd.n_class - pc.a AS DOUBLE))
-                              * (CAST(pc.a AS DOUBLE)
-                                  * CAST(nd.n_docs - cd.n_class
-                                      - (td.n_token - pc.a) AS DOUBLE)
-                                - CAST(td.n_token - pc.a AS DOUBLE)
-                                  * CAST(cd.n_class - pc.a AS DOUBLE))
-                              / (CAST(td.n_token AS DOUBLE)
-                                  * CAST(nd.n_docs - td.n_token AS DOUBLE)
-                                  * CAST(cd.n_class AS DOUBLE)
-                                  * CAST(nd.n_docs - cd.n_class AS DOUBLE))
-                            ELSE 0.0 END, 6) AS chi2
-                        FROM pc JOIN cd USING (lang)
-                                JOIN td USING (token)
-                                CROSS JOIN nd)
-         SELECT lang, token, a, chi2,
-                CAST(row_number() OVER (PARTITION BY lang
-                  ORDER BY chi2 DESC, token ASC) AS BIGINT) AS rnk
-         FROM cells
-         QUALIFY rnk <= 5""",
-    "q_vector_moments" ->
-      """WITH x AS (SELECT label, CAST(i - 1 AS BIGINT) AS pos,
-                           CAST(embedding[i] AS DOUBLE) AS v
-                    FROM embeddings,
-                         UNNEST(generate_series(1, len(embedding))) AS t(i))
-         SELECT label, pos, CAST(COUNT(*) AS BIGINT) AS n,
-                round(avg(v), 6) AS mean,
-                CASE WHEN COUNT(*) > 1
-                  THEN round(greatest(var_samp(v), 0.0), 6) END AS variance
-         FROM x GROUP BY 1, 2""",
-    "q_interp_loglik" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents),
-              occ AS (SELECT doc_id, t[i] AS w1, t[i + 1] AS w2,
-                        array_to_string(t[i:i+1], ' ') AS bigram
-                      FROM tok, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
-              bc AS (SELECT bigram, count(*) AS c_ab FROM occ GROUP BY 1),
-              uc AS (SELECT w, count(*) AS c_w
-                     FROM (SELECT UNNEST(t) AS w FROM tok) GROUP BY 1),
-              tt AS (SELECT SUM(c_w) AS t_occ FROM uc)
-         SELECT doc_id, count(*) AS n_bigrams,
-                round(avg(ln(0.75 * (c_ab / ua.c_w)
-                  + 0.25 * (ub.c_w / t_occ))), 6) AS mean_loglik
-         FROM occ JOIN bc USING (bigram)
-                  JOIN uc ua ON occ.w1 = ua.w
-                  JOIN uc ub ON occ.w2 = ub.w, tt
-         GROUP BY doc_id""",
-    "q_corpus_report" ->
-      s"""WITH t AS (SELECT doc_id, source, lang, text,
-                       $duckTokens AS toks FROM documents),
-              base AS (SELECT source,
-                         CAST(COUNT(*) AS BIGINT) AS n_docs,
-                         CAST(SUM(len(toks)) AS BIGINT) AS n_tokens,
-                         COUNT(DISTINCT md5(regexp_replace(lower(text),
-                           '[^0-9a-z]', '', 'g'))) AS uniq,
-                         CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-                       FROM t GROUP BY source),
-              e AS (SELECT doc_id, UNNEST(toks) AS token FROM t),
-              sc AS (SELECT doc_id,
-                       SUM(list_extract($classifierWeightsSql,
-                         CAST(CAST(('0x' || substring(md5('13:' || token), 1, 15))
-                           AS BIGINT) % 64 AS INTEGER) + 1)) AS sw
-                     FROM e GROUP BY doc_id),
-              q AS (SELECT t.source,
-                      round(avg($classifierBiasSql + COALESCE(sc.sw, 0.0)), 6)
-                        AS mean_quality
-                    FROM t LEFT JOIN sc ON sc.doc_id = t.doc_id
-                    GROUP BY t.source)
-         SELECT base.source, base.n_docs, base.n_tokens, base.n_langs,
-                round((base.n_docs - base.uniq) / CAST(base.n_docs AS DOUBLE),
-                  6) AS dup_rate,
-                q.mean_quality
-         FROM base JOIN q USING (source)""",
-    "q_pii_density" ->
-      """WITH s AS (SELECT doc_id,
-                      text
-                        || CASE WHEN doc_id % 3 = 0
-                             THEN ' user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                             ELSE '' END
-                        || CASE WHEN doc_id % 5 = 0
-                             THEN ' call +1 (555) 010-0000' ELSE '' END
-                        || CASE WHEN doc_id % 7 = 0
-                             THEN ' https://ex.example/d/' || CAST(doc_id AS VARCHAR)
-                             ELSE '' END AS synth
-                    FROM documents),
-              m AS (SELECT doc_id, synth,
-                      regexp_replace(synth, 'https?://[^\s]+', '[URL]', 'g')
-                        AS no_url
-                    FROM s),
-              m2 AS (SELECT doc_id, synth, no_url,
-                       regexp_replace(no_url,
-                         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                         '[EMAIL]', 'g') AS no_email
-                     FROM m),
-              c AS (SELECT doc_id, synth,
-                      CAST(len(regexp_extract_all(synth,
-                        'https?://[^\s]+')) AS BIGINT) AS n_urls,
-                      CAST(len(regexp_extract_all(no_url,
-                        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                        AS BIGINT) AS n_emails,
-                      CAST(len(regexp_extract_all(no_email,
-                        '\+?[0-9][0-9()\s.-]{6,}[0-9]')) AS BIGINT) AS n_phones
-                    FROM m2)
-         SELECT doc_id, n_urls, n_emails, n_phones,
-                round(CASE WHEN length(synth) > 0
-                  THEN (n_urls + n_emails + n_phones) * 1000.0 / length(synth)
-                  ELSE 0.0 END, 6) AS pii_per_kchar
-         FROM c""",
-    "q_ks_statistic" ->
-      """WITH x AS (SELECT value AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
-         SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-                round(max(abs(cuma / na - cumb / nb)), 6) AS ks
-         FROM c""",
-    "q_langid_confusion" ->
-      s"""SELECT declared_lang, lang_guess, CAST(COUNT(*) AS BIGINT) AS n
-          FROM ($langNgramOracleSql) GROUP BY 1, 2""",
-    "q_lsh_dedup_eval" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 40),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b USING (band, band_hash)
-                       WHERE a.doc_id < b.doc_id),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              truth AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.7),
-              hits AS (SELECT c.* FROM cand c
-                       JOIN truth t ON c.id_a = t.id_a AND c.id_b = t.id_b)
-         SELECT (SELECT COUNT(*) FROM cand) AS n_candidates,
-                (SELECT COUNT(*) FROM truth) AS n_true_pairs,
-                (SELECT COUNT(*) FROM hits) AS n_hits,
-                round(CASE WHEN (SELECT COUNT(*) FROM cand) > 0
-                  THEN (SELECT COUNT(*) FROM hits)
-                       / CAST((SELECT COUNT(*) FROM cand) AS DOUBLE) END, 6)
-                  AS precision,
-                round(CASE WHEN (SELECT COUNT(*) FROM truth) > 0
-                  THEN (SELECT COUNT(*) FROM hits)
-                       / CAST((SELECT COUNT(*) FROM truth) AS DOUBLE) END, 6)
-                  AS recall""",
-    "q_attribution" ->
-      """WITH conv AS (SELECT DISTINCT user_id, ts AS conv_ts FROM events
-                       WHERE event_type = 'purchase'),
-              touches AS (SELECT DISTINCT user_id, ts AS touch_ts,
-                                 event_type AS touch_type
-                          FROM events
-                          WHERE event_type IN ('click', 'view')),
-              j AS (SELECT c.user_id, c.conv_ts, t.touch_ts, t.touch_type,
-                           1.0 / CAST(1::BIGINT << CAST(least(
-                               floor(CAST(epoch_us(c.conv_ts)
-                                       - epoch_us(t.touch_ts) AS DOUBLE)
-                                     / 3600000000.0), 62) AS INTEGER)
-                             AS DOUBLE) AS w
-                    FROM conv c JOIN touches t USING (user_id)
-                    WHERE t.touch_ts < c.conv_ts
-                      AND t.touch_ts >= c.conv_ts - INTERVAL 240 MINUTES)
-         SELECT user_id, conv_ts, touch_ts, touch_type,
-                round(w / sum(w) OVER (PARTITION BY user_id, conv_ts), 6)
-                  AS credit
-         FROM j""",
-    "q_class_cohesion" ->
-      """WITH nrm AS (SELECT label, vec_id, embedding,
-                             sqrt(list_dot_product(embedding, embedding)) AS nn
-                      FROM embeddings
-                      WHERE sqrt(list_dot_product(embedding, embedding)) > 0),
-              u AS (SELECT label, CAST(i AS BIGINT) AS pos,
-                           CAST(embedding[i] AS DOUBLE) / nn AS uv
-                    FROM nrm,
-                         UNNEST(generate_series(1, len(embedding))) AS t(i)),
-              cnt AS (SELECT label, COUNT(*) AS n FROM nrm GROUP BY 1),
-              s AS (SELECT label, pos, SUM(uv) AS sv FROM u GROUP BY 1, 2),
-              ss AS (SELECT label, SUM(sv * sv) AS ss FROM s GROUP BY 1)
-         SELECT cnt.label, cnt.n,
-                round(CASE WHEN cnt.n > 1
-                  THEN (ss.ss - cnt.n) / (cnt.n * (cnt.n - 1)) END, 6)
-                  AS cohesion
-         FROM cnt JOIN ss USING (label)""",
-    "q_curation_pipeline" ->
-      s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents),
-              e AS (SELECT doc_id, UNNEST(toks) AS token FROM t),
-              sc AS (SELECT doc_id,
-                       SUM(list_extract($classifierWeightsSql,
-                         CAST(CAST(('0x' || substring(md5('13:' || token), 1, 15))
-                           AS BIGINT) % 64 AS INTEGER) + 1)) AS sw
-                     FROM e GROUP BY doc_id),
-              kept AS (SELECT d.* FROM documents d
-                       LEFT JOIN sc ON sc.doc_id = d.doc_id
-                       WHERE $classifierBiasSql + COALESCE(sc.sw, 0.0) > 0.0),
-              r AS (SELECT doc_id,
-                      ROW_NUMBER() OVER (PARTITION BY
-                        md5(regexp_replace(lower(text), '[^0-9a-z]', '', 'g'))
-                        ORDER BY n_chars DESC, doc_id ASC) AS rn
-                    FROM kept),
-              ded AS (SELECT k.* FROM kept k
-                      JOIN r ON r.doc_id = k.doc_id AND r.rn = 1),
-              sp AS (SELECT doc_id, text,
-                       CASE WHEN CAST(('0x' ||
-                           substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                           AS BIGINT) % 100 < 90
-                         THEN 'train' ELSE 'val' END AS split
-                     FROM ded),
-              tk AS (SELECT doc_id, split, $duckTokens AS toks FROM sp),
-              s2 AS (SELECT doc_id, split, toks, len(toks) AS n
-                     FROM tk WHERE len(toks) > 0),
-              x AS (SELECT doc_id, split, toks,
-                      UNNEST(generate_series(0, n - 1, 32)) AS start
-                    FROM s2)
-         SELECT doc_id, split,
-                CAST(start // 32 AS BIGINT) AS chunk_id,
-                CAST(len(toks[start + 1 : start + 32]) AS BIGINT)
-                  AS n_chunk_tokens,
-                array_to_string(toks[start + 1 : start + 32], ' ')
-                  AS chunk_text
-         FROM x""",
-    "q_welch_ttest" ->
-      """WITH j AS (SELECT c.c_mktsegment AS g, e.event_type AS a, e.value AS v
-                    FROM events e JOIN customer c ON e.user_id = c.c_custkey
-                    WHERE e.event_type IN ('click', 'view')),
-              s AS (SELECT g, a, COUNT(*) AS n, avg(v) AS m,
-                           var_samp(v) AS vv
-                    FROM j GROUP BY 1, 2),
-              aa AS (SELECT g, n AS n_a, m AS m_a, vv AS v_a
-                     FROM s WHERE a = 'click'),
-              bb AS (SELECT g, n AS n_b, m AS m_b, vv AS v_b
-                     FROM s WHERE a = 'view')
-         SELECT g AS c_mktsegment, n_a, n_b,
-                round(m_a - m_b, 6) AS mean_diff,
-                round(CASE WHEN n_a > 1 AND n_b > 1
-                             AND (v_a / n_a + v_b / n_b) > 0
-                  THEN (m_a - m_b) / sqrt(v_a / n_a + v_b / n_b) END, 6)
-                  AS t_stat,
-                round(CASE WHEN n_a > 1 AND n_b > 1
-                             AND (v_a / n_a + v_b / n_b) > 0
-                             AND ((v_a / n_a) * (v_a / n_a) / (n_a - 1)
-                               + (v_b / n_b) * (v_b / n_b) / (n_b - 1)) > 0
-                  THEN ((v_a / n_a + v_b / n_b) * (v_a / n_a + v_b / n_b))
-                       / ((v_a / n_a) * (v_a / n_a) / (n_a - 1)
-                         + (v_b / n_b) * (v_b / n_b) / (n_b - 1)) END, 6)
-                  AS welch_df
-         FROM aa JOIN bb USING (g)""",
-    "q_dp_counts" ->
-      """WITH c AS (SELECT source, COUNT(*) AS t FROM documents GROUP BY 1),
-              u AS (SELECT source, t,
-                      CAST(('0x' || substring(md5('dp:' || CAST(source AS VARCHAR)), 1, 8))
-                        AS BIGINT) / 4294967296.0 - 0.5 AS uu
-                    FROM c)
-         SELECT source,
-                round(t + (-1.0) * sign(uu)
-                  * ln(greatest(1.0 - 2.0 * abs(uu), 1.0 / 4294967296.0)),
-                  6) AS noisy_cnt
-         FROM u""",
-    "q_decayed_topk" -> decayedTopkOracleSql(6.0, 20, 120),
-    "q_dp_contrib_hist" ->
-      """WITH capped AS (SELECT doc_id, lang FROM (
-               SELECT doc_id, lang,
-                      ROW_NUMBER() OVER (PARTITION BY source
-                        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-               FROM documents) WHERE rn <= 16),
-              c AS (SELECT lang, COUNT(*) AS t FROM capped GROUP BY 1),
-              u AS (SELECT lang, t,
-                      CAST(('0x' || substring(md5('dpc:' || CAST(lang AS VARCHAR)), 1, 8))
-                        AS BIGINT) / 4294967296.0 - 0.5 AS uu
-                    FROM c)
-         SELECT lang,
-                round(t + (-16.0) * sign(uu)
-                  * ln(greatest(1.0 - 2.0 * abs(uu), 1.0 / 4294967296.0)),
-                  6) AS noisy_cnt
-         FROM u""",
-    "q_profile_drift" ->
-      """WITH oldt AS (SELECT * FROM orders
-                       WHERE o_orderdate < TIMESTAMP '1998-01-01'),
-              po AS (
-                SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-                       CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-                       count(DISTINCT o_orderstatus) AS n_distinct,
-                       CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-                       CAST(max(o_orderstatus) AS VARCHAR) AS max_str
-                FROM oldt
-                UNION ALL
-                SELECT 'o_custkey', count(*),
-                       CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_custkey),
-                       CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-                FROM oldt
-                UNION ALL
-                SELECT 'o_totalprice', count(*),
-                       CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_totalprice),
-                       CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR)
-                FROM oldt),
-              pn AS (
-                SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-                       CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-                       count(DISTINCT o_orderstatus) AS n_distinct,
-                       CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-                       CAST(max(o_orderstatus) AS VARCHAR) AS max_str
-                FROM orders
-                UNION ALL
-                SELECT 'o_custkey', count(*),
-                       CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_custkey),
-                       CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-                FROM orders
-                UNION ALL
-                SELECT 'o_totalprice', count(*),
-                       CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_totalprice),
-                       CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR)
-                FROM orders)
-         SELECT po.col_name,
-                po.n_rows AS old_rows, pn.n_rows AS new_rows,
-                round(CAST(pn.n_nulls AS DOUBLE) / pn.n_rows
-                  - CAST(po.n_nulls AS DOUBLE) / po.n_rows, 6)
-                  AS null_rate_delta,
-                round(CAST(pn.n_distinct AS DOUBLE) / po.n_distinct, 6)
-                  AS distinct_ratio,
-                pn.min_str <> po.min_str AS min_changed,
-                pn.max_str <> po.max_str AS max_changed
-         FROM po JOIN pn USING (col_name)""",
-    "q_er_score" ->
-      s"""WITH d AS (SELECT * FROM documents WHERE doc_id < 120),
-              r AS (SELECT lang, doc_id,
-                           row_number() OVER (PARTITION BY lang
-                             ORDER BY length(text) ASC, doc_id ASC) AS rnk
-                    FROM d),
-              c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                    FROM r a JOIN r b ON a.lang = b.lang
-                     AND b.rnk > a.rnk AND b.rnk <= a.rnk + 3),
-              h AS (SELECT c.id_a, c.id_b,
-                           coalesce(da.text, '') AS ta,
-                           coalesce(db.text, '') AS tb,
-                           da.source AS sa, db.source AS sb,
-                           ${duckTokensOf("coalesce(da.text, '')")} AS tka,
-                           ${duckTokensOf("coalesce(db.text, '')")} AS tkb
-                    FROM c JOIN d da ON da.doc_id = c.id_a
-                           JOIN d db ON db.doc_id = c.id_b)
-         SELECT id_a, id_b,
-                round(0.5 * (CASE
-                    WHEN len(list_distinct(list_concat(tka, tkb))) = 0
-                    THEN 1.0
-                    ELSE CAST(len(list_filter(list_distinct(tka),
-                           t -> list_contains(tkb, t))) AS DOUBLE)
-                         / len(list_distinct(list_concat(tka, tkb))) END)
-                  + 0.3 * (CASE WHEN greatest(length(ta), length(tb)) = 0
-                    THEN 1.0
-                    ELSE 1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
-                               / greatest(length(ta), length(tb)) END)
-                  + 0.2 * (CASE WHEN sa IS NOT DISTINCT FROM sb
-                    THEN 1.0 ELSE 0.0 END), 6) AS match_score
-         FROM h
-         WHERE round(0.5 * (CASE
-                    WHEN len(list_distinct(list_concat(tka, tkb))) = 0
-                    THEN 1.0
-                    ELSE CAST(len(list_filter(list_distinct(tka),
-                           t -> list_contains(tkb, t))) AS DOUBLE)
-                         / len(list_distinct(list_concat(tka, tkb))) END)
-                  + 0.3 * (CASE WHEN greatest(length(ta), length(tb)) = 0
-                    THEN 1.0
-                    ELSE 1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
-                               / greatest(length(ta), length(tb)) END)
-                  + 0.2 * (CASE WHEN sa IS NOT DISTINCT FROM sb
-                    THEN 1.0 ELSE 0.0 END), 6) >= 0.45""",
-    "q_naive_bayes" ->
-      s"""WITH occ AS (SELECT doc_id, lang, token FROM documents,
-                         UNNEST($duckTokens) AS u(token)),
-              ct AS (SELECT lang AS cand, token, COUNT(*) AS ct_cnt
-                     FROM occ GROUP BY 1, 2),
-              ctot AS (SELECT cand, SUM(ct_cnt) AS c_occ FROM ct GROUP BY 1),
-              pri AS (SELECT lang AS cand, COUNT(*) AS c_docs
-                      FROM documents GROUP BY 1),
-              nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-              v AS (SELECT COUNT(DISTINCT token) AS v_size FROM occ),
-              dtf AS (SELECT doc_id, token, COUNT(*) AS tf
-                      FROM occ GROUP BY 1, 2),
-              sc AS (SELECT dtf.doc_id, ctot.cand,
-                            round(SUM(dtf.tf * ln(
-                                (COALESCE(ct.ct_cnt, 0) + 1)
-                                  / CAST(ctot.c_occ + v.v_size AS DOUBLE)))
-                              + ln(CAST(pri.c_docs AS DOUBLE) / nd.n_docs),
-                              6) AS score
-                     FROM dtf
-                     CROSS JOIN ctot
-                     JOIN pri ON pri.cand = ctot.cand
-                     CROSS JOIN nd CROSS JOIN v
-                     LEFT JOIN ct ON ct.cand = ctot.cand
-                                 AND ct.token = dtf.token
-                     GROUP BY dtf.doc_id, ctot.cand, pri.c_docs, nd.n_docs)
-         SELECT s.doc_id, d.lang, s.cand AS pred, s.score
-         FROM sc s JOIN documents d USING (doc_id)
-         QUALIFY row_number() OVER (PARTITION BY s.doc_id
-           ORDER BY s.score DESC, s.cand ASC) = 1""",
-    "q_zipf_slope" ->
-      s"""WITH tok AS (SELECT lang, token FROM documents,
-                         UNNEST($duckTokens) AS u(token)),
-              f AS (SELECT lang, token, COUNT(*) AS cnt
-                    FROM tok GROUP BY 1, 2),
-              r AS (SELECT lang,
-                           ln(row_number() OVER (PARTITION BY lang
-                             ORDER BY cnt DESC, token ASC)) AS x,
-                           ln(cnt) AS y
-                    FROM f)
-         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n,
-                round(CASE WHEN var_samp(x) > 0
-                  THEN covar_samp(x, y) / var_samp(x) END, 6) AS slope,
-                round(CASE WHEN var_samp(x) > 0
-                  THEN avg(y) - (covar_samp(x, y) / var_samp(x)) * avg(x)
-                  END, 6) AS intercept,
-                round(CASE WHEN var_samp(x) > 0 AND var_samp(y) > 0
-                  THEN covar_samp(x, y) * covar_samp(x, y)
-                         / (var_samp(x) * var_samp(y)) END, 6) AS r2
-         FROM r GROUP BY lang""",
-    "q_skew_report" ->
-      """WITH c AS (SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS cnt
-                    FROM lineitem GROUP BY l_suppkey),
-              t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total,
-                           CAST(COUNT(*) AS BIGINT) AS nkeys FROM c)
-         SELECT c.l_suppkey, c.cnt,
-                round(c.cnt / t.total, 6) AS share,
-                round(CAST(c.cnt AS DOUBLE) * t.nkeys / t.total, 6) AS skew
-         FROM c, t
-         ORDER BY c.cnt DESC, c.l_suppkey ASC
-         LIMIT 10""",
-    "q_winnowing" ->
-      s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents),
-              s AS (SELECT doc_id, toks, len(toks) AS n FROM t
-                    WHERE len(toks) >= 5),
-              pos AS (SELECT doc_id, toks,
-                             UNNEST(generate_series(0, n - 5)) AS i
-                      FROM s),
-              sh AS (SELECT doc_id, i,
-                       CAST(('0x' || substring(md5('17:' ||
-                         array_to_string(toks[i + 1 : i + 5], ' ')), 1, 15))
-                         AS BIGINT) AS h
-                     FROM pos),
-              hs AS (SELECT doc_id, array_agg(h ORDER BY i) AS hs
-                     FROM sh GROUP BY doc_id),
-              win AS (SELECT doc_id, hs,
-                             UNNEST(generate_series(0, len(hs) - 4)) AS j
-                      FROM hs WHERE len(hs) >= 4)
-         SELECT DISTINCT doc_id,
-                list_aggregate(hs[j + 1 : j + 4], 'min') AS fingerprint
-         FROM win""",
-    "q_quality_classifier" ->
-      s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents),
-              e AS (SELECT doc_id, UNNEST(toks) AS token FROM t),
-              s AS (SELECT doc_id,
-                      SUM(list_extract($classifierWeightsSql,
-                        CAST(CAST(('0x' || substring(md5('13:' || token), 1, 15))
-                          AS BIGINT) % 64 AS INTEGER) + 1)) AS sw
-                    FROM e GROUP BY doc_id)
-         SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-                $classifierBiasSql + COALESCE(s.sw, 0.0) AS logit,
-                ($classifierBiasSql + COALESCE(s.sw, 0.0)) > 0.0 AS keep
-         FROM t LEFT JOIN s USING (doc_id)""",
-    "q_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-                     FROM lineitem WHERE l_orderkey % 3 = 0),
-              e AS (SELECT DISTINCT l.pk AS a, r.pk AS b FROM li l
-                    JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-              t AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                    FROM e e1 JOIN e e2 ON e1.b = e2.a
-                    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
-         SELECT id, CAST(COUNT(*) AS BIGINT) AS triangles
-         FROM (SELECT x AS id FROM t
-               UNION ALL SELECT y FROM t
-               UNION ALL SELECT z FROM t)
-         GROUP BY id""",
-    "q_cosine_pairs" ->
-      s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents
-                     WHERE doc_id < 300),
-              tf0 AS (SELECT doc_id, UNNEST(toks) AS term FROM t),
-              g AS (SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf
-                    FROM tf0 GROUP BY doc_id, term),
-              d AS (SELECT term AS dterm, COUNT(*) AS df FROM g GROUP BY term),
-              n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs
-                    FROM t),
-              w AS (SELECT doc_id, term, tf * ln(n_docs / df) AS w
-                    FROM g JOIN d ON g.term = d.dterm CROSS JOIN n),
-              nm AS (SELECT doc_id, sqrt(SUM(w * w)) AS norm
-                     FROM w GROUP BY doc_id),
-              dt AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                            SUM(a.w * b.w) AS dot
-                     FROM w a JOIN w b
-                       ON a.term = b.term AND a.doc_id < b.doc_id
-                     GROUP BY a.doc_id, b.doc_id)
-         SELECT id_a, id_b,
-                round(dot / (x.norm * y.norm), 6) AS cosine
-         FROM dt JOIN nm x ON id_a = x.doc_id JOIN nm y ON id_b = y.doc_id
-         WHERE x.norm > 0 AND y.norm > 0
-           AND round(dot / (x.norm * y.norm), 6) >= 0.8""",
-    "q_interp" ->
-      """WITH hours AS (SELECT user_id, date_trunc('hour', ts) AS hour,
-                               CAST(round(sum(value) * 100, 0) AS BIGINT) AS c
-                        FROM events GROUP BY 1, 2),
-              span AS (SELECT user_id, min(hour) AS lo, max(hour) AS hi
-                       FROM hours GROUP BY 1),
-              grid AS (SELECT user_id,
-                              UNNEST(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
-                       FROM span),
-              sparse AS (SELECT g.user_id, g.hour,
-                                CAST(h.c AS DOUBLE) AS v
-                         FROM grid g LEFT JOIN hours h
-                           ON g.user_id = h.user_id AND g.hour = h.hour),
-              ctx AS (SELECT user_id, hour, v, epoch(hour) AS t,
-                        last_value(v IGNORE NULLS) OVER wp AS pv,
-                        last_value(CASE WHEN v IS NOT NULL
-                          THEN epoch(hour) END IGNORE NULLS) OVER wp AS pt,
-                        first_value(v IGNORE NULLS) OVER wn AS nv,
-                        first_value(CASE WHEN v IS NOT NULL
-                          THEN epoch(hour) END IGNORE NULLS) OVER wn AS nt
-                      FROM sparse
-                      WINDOW wp AS (PARTITION BY user_id ORDER BY hour
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                             wn AS (PARTITION BY user_id ORDER BY hour
-                        ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-         SELECT user_id, hour,
-                (CASE WHEN v IS NOT NULL THEN v
-                      ELSE pv + (nv - pv) * (t - pt) / (nt - pt) END) / 100.0
-                  AS v_interp
-         FROM ctx""",
-    "q_islands" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-                       FROM events),
-              r AS (SELECT user_id, day,
-                           row_number() OVER (PARTITION BY user_id
-                                              ORDER BY day) AS rn
-                    FROM days)
-         SELECT user_id, CAST(min(day) AS TIMESTAMP) AS start_day,
-                CAST(max(day) AS TIMESTAMP) AS end_day,
-                CAST(COUNT(*) AS BIGINT) AS n_days
-         FROM r GROUP BY user_id, day - CAST(rn AS INTEGER)""",
-    "q_auc" ->
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
-              r AS (SELECT s, cp, cn,
-                           coalesce(sum(cp + cn) OVER (ORDER BY s
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0) AS below
-                    FROM per)
-         SELECT CAST(sum(cp) AS BIGINT) AS n_pos,
-                CAST(sum(cn) AS BIGINT) AS n_neg,
-                round(CASE WHEN sum(cp) > 0 AND sum(cn) > 0 THEN
-                  (sum((CAST(below AS DOUBLE)
-                        + CAST(cp + cn + 1 AS DOUBLE) / 2.0) * cp)
-                    - CAST(sum(cp) AS DOUBLE)
-                      * CAST(sum(cp) + 1 AS DOUBLE) / 2.0)
-                  / (CAST(sum(cp) AS DOUBLE) * CAST(sum(cn) AS DOUBLE))
-                  END, 6) AS auc
-         FROM r""",
-    "q_calibration" ->
-      raw"""WITH scored AS (SELECT round(
-               0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-             + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0,
-                 1.0)
-             + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                        THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                        < 0.2 THEN 1.0 ELSE 0.0 END), 6) AS q,
-               (lang = 'en') AS y
-             FROM (SELECT lang, text,
-                     CAST(len($duckTokens) AS DOUBLE) AS n,
-                     CAST(len(list_filter($duckTokens,
-                       t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                       AS BIGINT) AS ns,
-                     length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                   FROM documents
-                   WHERE lang IS NOT NULL)),
-              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
-                          FROM scored)
-         SELECT CAST(least(CAST(floor(s * 10) AS BIGINT), 9) AS BIGINT)
-                  AS bin,
-                CAST(count(*) AS BIGINT) AS n,
-                round(avg(s), 6) AS mean_score,
-                round(avg(CASE WHEN y THEN 1.0 ELSE 0.0 END), 6) AS pos_rate,
-                round(round(avg(CASE WHEN y THEN 1.0 ELSE 0.0 END), 6)
-                  - round(avg(s), 6), 6) AS gap
-         FROM clamped GROUP BY 1""",
-    "q_kappa" ->
-      s"""WITH li AS (SELECT lang AS declared_lang,
-                        CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END)
-                               >= 0.05
-                             THEN 'en' ELSE 'unknown' END AS lang_guess
-                      FROM (SELECT lang,
-                              CAST(len($duckTokens) AS DOUBLE) AS n,
-                              CAST(len(list_filter($duckTokens,
-                                t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                                AS BIGINT) AS ns
-                            FROM documents
-                            WHERE lang IS NOT NULL)),
-              t AS (SELECT count(*) AS n,
-                           sum(CASE WHEN declared_lang = lang_guess
-                               THEN 1 ELSE 0 END) AS n_agree
-                    FROM li),
-              ma AS (SELECT declared_lang AS l, count(*) AS ca
-                     FROM li GROUP BY 1),
-              mb AS (SELECT lang_guess AS l, count(*) AS cb
-                     FROM li GROUP BY 1),
-              pe AS (SELECT coalesce(sum(CAST(ca AS DOUBLE) * cb), 0.0)
-                       AS pe_num
-                     FROM ma JOIN mb USING (l))
-         SELECT CAST(n AS BIGINT) AS n, CAST(n_agree AS BIGINT) AS n_agree,
-                round(CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE), 6)
-                  AS p_observed,
-                round(pe_num
-                  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS p_expected,
-                round(CASE WHEN pe_num
-                    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) < 1.0 THEN
-                  (CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE)
-                    - pe_num
-                      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                  / (1.0 - pe_num
-                      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) END, 6)
-                  AS kappa
-         FROM t, pe""",
-    "q_join_card" ->
-      """WITH lt AS (SELECT count(*) AS n_left,
-                            count(DISTINCT l_orderkey) AS ndv_left
-                     FROM lineitem),
-              rt AS (SELECT count(*) AS n_right,
-                            count(DISTINCT o_orderkey) AS ndv_right
-                     FROM orders),
-              lh AS (SELECT l_orderkey AS k, count(*) AS cl
-                     FROM lineitem GROUP BY 1),
-              rh AS (SELECT o_orderkey AS k, count(*) AS cr
-                     FROM orders GROUP BY 1),
-              a AS (SELECT coalesce(sum(CAST(cl AS DOUBLE) * cr), 0.0)
-                      AS actual
-                    FROM lh JOIN rh USING (k))
-         SELECT CAST(n_left AS BIGINT) AS n_left,
-                CAST(n_right AS BIGINT) AS n_right,
-                CAST(ndv_left AS BIGINT) AS ndv_left,
-                CAST(ndv_right AS BIGINT) AS ndv_right,
-                round(CAST(n_left AS DOUBLE) * CAST(n_right AS DOUBLE)
-                  / CAST(greatest(ndv_left, ndv_right) AS DOUBLE), 6)
-                  AS est_independence,
-                CAST(actual AS BIGINT) AS actual_rows,
-                round(CASE WHEN actual > 0 THEN
-                  CAST(n_left AS DOUBLE) * CAST(n_right AS DOUBLE)
-                    / CAST(greatest(ndv_left, ndv_right) AS DOUBLE) / actual
-                  END, 6) AS est_over_actual
-         FROM lt, rt, a""",
-    "q_bootstrap" ->
-      s"""WITH reps AS (SELECT UNNEST(generate_series(0, 31)) AS r),
-              u AS (SELECT r, n_chars,
-                      CAST(('0x' || substring(md5('boot:' || CAST(r AS VARCHAR)
-                        || ':' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                        / 4294967296.0 AS u
-                    FROM documents, reps),
-              k AS (SELECT r, n_chars,
-                      CASE ${Corpus.poissonCdfLiterals.zipWithIndex
-                        .map { case (t, i) => s"WHEN u < $t THEN $i" }
-                        .mkString(" ")} ELSE 8 END AS w
-                    FROM u)
-         SELECT CAST(r AS BIGINT) AS r, CAST(sum(w) AS BIGINT) AS n_eff,
-                round(CASE WHEN sum(w) > 0 THEN
-                  CAST(sum(w * n_chars) AS DOUBLE) / CAST(sum(w) AS DOUBLE)
-                  END, 6) AS boot_mean
-         FROM k GROUP BY r""",
-    "q_ewma" ->
-      """WITH s AS (SELECT user_id, ts, event_id, value,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY ts ASC, event_id ASC) AS rn
-                    FROM events WHERE value IS NOT NULL),
-              p AS (SELECT a.user_id, a.rn, a.ts, a.event_id, a.value AS v0,
-                           b.value AS v, a.rn - b.rn AS j
-                    FROM s a JOIN s b ON a.user_id = b.user_id
-                      AND b.rn BETWEEN a.rn - 15 AND a.rn)
-         SELECT user_id, ts, event_id, v0 AS value,
-                round(sum(v / CAST(1::BIGINT << (j + 1) AS DOUBLE))
-                  / (1.0 - 1.0 / CAST(1::BIGINT << least(rn, 16) AS DOUBLE)),
-                  6) AS ewma
-         FROM p GROUP BY user_id, rn, ts, event_id, v0""",
-    "q_delta_agg" ->
-      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
-                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                  AS sum_cents
-         FROM orders
-         WHERE (o_orderkey % 7 <> 0 AND o_orderkey % 11 <> 0)
-            OR o_orderkey % 7 = 0
-         GROUP BY 1""",
-    "q_gini" ->
-      s"""WITH f AS (SELECT lang, token, count(*) AS cnt
-                     FROM (SELECT lang, UNNEST($duckTokens) AS token
-                           FROM documents)
-                     GROUP BY 1, 2),
-              r AS (SELECT lang, cnt,
-                           row_number() OVER (PARTITION BY lang
-                                              ORDER BY cnt ASC, token ASC)
-                             AS r
-                    FROM f)
-         SELECT lang, CAST(count(*) AS BIGINT) AS vocab,
-                CAST(sum(cnt) AS BIGINT) AS n_tokens,
-                round(2.0 * sum(CAST(r AS DOUBLE) * cnt)
-                  / (CAST(count(*) AS DOUBLE) * CAST(sum(cnt) AS DOUBLE))
-                  - CAST(count(*) + 1 AS DOUBLE) / CAST(count(*) AS DOUBLE),
-                  6) AS gini
-         FROM r GROUP BY lang""",
-    "q_cuped" ->
-      """WITH units AS (SELECT user_id,
-               coalesce(sum(CASE WHEN ts < TIMESTAMP '2024-01-15'
-                 THEN value END), 0.0) AS x,
-               coalesce(sum(CASE WHEN ts >= TIMESTAMP '2024-01-15'
-                 THEN value END), 0.0) AS y,
-               CASE WHEN CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)),
-                   1, 8)) AS BIGINT) % 100 < 50
-                 THEN 'a' ELSE 'b' END AS arm
-             FROM events GROUP BY user_id),
-              pooled AS (SELECT avg(x) AS xbar, covar_samp(x, y) AS cov,
-                                var_samp(x) AS varx
-                         FROM units),
-              adj AS (SELECT arm, y,
-                        y - (CASE WHEN varx > 0 THEN cov / varx ELSE 0.0 END)
-                          * (x - xbar) AS ya
-                      FROM units, pooled)
-         SELECT arm, CAST(count(*) AS BIGINT) AS n,
-                round(avg(y), 6) AS mean_y,
-                round(avg(ya), 6) AS mean_y_adj,
-                round(var_samp(y), 6) AS var_y,
-                round(var_samp(ya), 6) AS var_y_adj,
-                round(CASE WHEN var_samp(y) > 0
-                  THEN 1.0 - var_samp(ya) / var_samp(y) END, 6)
-                  AS var_reduction
-         FROM adj GROUP BY arm""",
-    "q_pr_auc" ->
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
-              c AS (SELECT s, cp, cn,
-                           sum(cp) OVER (ORDER BY s DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS tp,
-                           sum(cp + cn) OVER (ORDER BY s DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS al
-                    FROM per)
-         SELECT CAST(sum(cp) AS BIGINT) AS n_pos,
-                CAST(sum(cn) AS BIGINT) AS n_neg,
-                round(CASE WHEN sum(cp) > 0 THEN
-                  sum(CAST(cp AS DOUBLE)
-                      * (CAST(tp AS DOUBLE) / CAST(al AS DOUBLE)))
-                    / CAST(sum(cp) AS DOUBLE) END, 6) AS average_precision
-         FROM c""",
-    "q_kcore" -> kCoreOracleSql(k = 4, rounds = 12),
-    "q_quantize_int8" ->
-      """WITH v AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-                    FROM embeddings),
-              s AS (SELECT vec_id, e,
-                      list_max(list_transform(e, x -> abs(x))) / 127.0
-                        AS scale
-                    FROM v),
-              q AS (SELECT vec_id, scale,
-                      CASE WHEN scale > 0
-                        THEN list_transform(e,
-                          x -> CAST(round(x / scale) AS INTEGER))
-                        ELSE list_transform(e, x -> 0) END AS codes,
-                      CASE WHEN scale > 0
-                        THEN list_transform(e,
-                          x -> abs(x - round(x / scale) * scale))
-                        ELSE list_transform(e, x -> 0.0) END AS errs
-                    FROM s)
-         SELECT vec_id, round(scale, 6) AS scale,
-                md5(array_to_string(
-                  list_transform(codes, x -> CAST(x AS VARCHAR)), ','))
-                  AS codes_md5,
-                len(codes) AS dim,
-                round(list_max(errs), 6) AS max_abs_err,
-                round(list_sum(list_transform(errs, x -> x * x))
-                  / len(errs), 6) AS mse
-         FROM q""",
-    "q_int8_topk" ->
-      s"""WITH $int8QuantCteSql,
-              qv AS (SELECT scale AS qs, codes AS qc FROM v
-                     WHERE vec_id = 0)
-         SELECT vec_id,
-                round(scale * qs * CAST(ds AS DOUBLE), 6) AS approx_dot
-         FROM (SELECT vec_id, scale, qs,
-                 list_sum(list_transform(generate_series(1, len(codes)),
-                   i -> CAST(codes[i] AS BIGINT) * qc[i])) AS ds
-               FROM v, qv WHERE vec_id <> 0)
-         ORDER BY approx_dot DESC, vec_id ASC LIMIT 10""",
-    "q_countmin" ->
-      s"""WITH counts AS (SELECT token AS item, count(*) AS true_cnt
-                          FROM (SELECT UNNEST($duckTokens) AS token
-                                FROM documents)
-                          GROUP BY 1),
-              hashed AS (SELECT item, true_cnt, j,
-                           CAST(('0x' || substring(md5(CAST(j AS VARCHAR)
-                             || ':' || item), 1, 8)) AS BIGINT) % 256
-                             AS bucket
-                         FROM counts,
-                           (SELECT UNNEST(generate_series(0, 3)) AS j)),
-              sketch AS (SELECT j, bucket, sum(true_cnt) AS cell
-                         FROM hashed GROUP BY 1, 2),
-              top AS (SELECT item, true_cnt FROM counts
-                      ORDER BY true_cnt DESC, item ASC LIMIT 20)
-         SELECT t.item, CAST(t.true_cnt AS BIGINT) AS true_cnt,
-                CAST(min(s2.cell) AS BIGINT) AS cm_est
-         FROM top t
-         JOIN hashed h ON h.item = t.item
-         JOIN sketch s2 ON s2.j = h.j AND s2.bucket = h.bucket
-         GROUP BY 1, 2""",
-    "q_rrf" ->
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
-              corpus AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                                avg(dl) AS avgdl FROM lens),
-              tf AS (SELECT doc_id, term, count(*) AS tf
-                     FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
-                     WHERE term IN ('data', 'spark', 'merge')
-                     GROUP BY doc_id, term),
-              dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-              bm AS (SELECT doc_id, score FROM (
-                       SELECT f.doc_id,
-                              round(sum(ln(1.0 + (c.n_docs - d.df + 0.5)
-                                  / (d.df + 0.5))
-                                * f.tf * 2.2
-                                / (f.tf + 1.2 * (0.25 + 0.75 * l.dl
-                                    / c.avgdl))), 6) AS score
-                       FROM tf f
-                       JOIN dfreq d ON f.term = d.term
-                       JOIN lens l ON f.doc_id = l.doc_id
-                       CROSS JOIN corpus c
-                       GROUP BY f.doc_id)
-                     ORDER BY score DESC, doc_id ASC LIMIT 50),
-              bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC,
-                        doc_id ASC) AS ra
-                      FROM bm),
-              cq AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-                     FROM embeddings WHERE vec_id = 0),
-              cos AS (SELECT vec_id,
-                        round(list_dot_product(CAST(embedding AS DOUBLE[]),
-                            qv)
-                          / (sqrt(list_dot_product(
-                               CAST(embedding AS DOUBLE[]),
-                               CAST(embedding AS DOUBLE[])))
-                           * sqrt(list_dot_product(qv, qv))), 6)
-                          AS cosine_sim
-                      FROM embeddings, cq
-                      ORDER BY cosine_sim DESC, vec_id LIMIT 50),
-              cosr AS (SELECT vec_id AS doc_id,
-                         row_number() OVER (ORDER BY cosine_sim DESC,
-                           vec_id ASC) AS rb
-                       FROM cos)
-         SELECT coalesce(bmr.doc_id, cosr.doc_id) AS doc_id,
-                round(coalesce(1.0 / (ra + 60), 0.0)
-                  + coalesce(1.0 / (rb + 60), 0.0), 6) AS rrf_score,
-                ra AS rank_a, rb AS rank_b
-         FROM bmr FULL JOIN cosr ON bmr.doc_id = cosr.doc_id
-         ORDER BY rrf_score DESC, doc_id ASC LIMIT 20""",
-    "q_int8_recall" ->
-      s"""WITH $int8QuantCteSql,
-              qv AS (SELECT scale AS qs, codes AS qc FROM v
-                     WHERE vec_id = 0),
-              approx AS (SELECT vec_id FROM (
-                           SELECT vec_id,
-                                  round(scale * qs * CAST(ds AS DOUBLE), 6)
-                                    AS approx_dot
-                           FROM (SELECT vec_id, scale, qs,
-                                   list_sum(list_transform(
-                                     generate_series(1, len(codes)),
-                                     i -> CAST(codes[i] AS BIGINT) * qc[i]))
-                                     AS ds
-                                 FROM v, qv WHERE vec_id <> 0))
-                         ORDER BY approx_dot DESC, vec_id ASC LIMIT 10),
-              eq AS (SELECT CAST(embedding AS DOUBLE[]) AS qd
-                     FROM embeddings WHERE vec_id = 0),
-              ex AS (SELECT vec_id FROM (
-                       SELECT vec_id,
-                              round(list_dot_product(
-                                CAST(embedding AS DOUBLE[]), qd), 6) AS dot
-                       FROM embeddings, eq WHERE vec_id <> 0)
-                     ORDER BY dot DESC, vec_id ASC LIMIT 10),
-              hits AS (SELECT count(*) AS n_hits
-                       FROM ex JOIN approx USING (vec_id))
-         SELECT CAST(0 AS BIGINT) AS query_id, CAST(10 AS BIGINT) AS n_exact,
-                CAST(n_hits AS BIGINT) AS n_hits,
-                round(CAST(n_hits AS DOUBLE) / 10.0, 6) AS recall
-         FROM hits""",
-    "q_jl_distortion" ->
-      s"""WITH pl AS (SELECT ${jlPlanes.map(p =>
-                "[" + p.map(_.toString).mkString(", ") + "]")
-                .mkString("[", ", ", "]")} AS p),
-              e AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings WHERE vec_id < 40),
-              pr AS MATERIALIZED (
-                    SELECT vec_id, v,
-                      list_transform(generate_series(1, 16),
-                        j -> list_sum(list_transform(generate_series(1, 64),
-                               i -> v[i] * p[j][i])) * $jlScale) AS proj
-                    FROM e, pl),
-              d AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                      sqrt(list_sum(list_transform(generate_series(1, 64),
-                        i -> (a.v[i] - b.v[i]) * (a.v[i] - b.v[i]))))
-                        AS dorig,
-                      sqrt(list_sum(list_transform(generate_series(1, 16),
-                        i -> (a.proj[i] - b.proj[i])
-                           * (a.proj[i] - b.proj[i])))) AS dproj
-                    FROM pr a JOIN pr b ON a.vec_id < b.vec_id)
-         SELECT id_a, id_b, round(dorig, 6) AS dist_orig,
-                round(dproj, 6) AS dist_proj,
-                round(CASE WHEN dorig > 0 THEN dproj / dorig END, 6)
-                  AS ratio
-         FROM d""",
-    "q_dp_mean" ->
-      """WITH c AS (SELECT source, count(*) AS n,
-                      avg(greatest(least(CAST(n_chars AS DOUBLE), 2000.0),
-                        0.0)) AS m
-                    FROM documents WHERE n_chars IS NOT NULL
-                    GROUP BY 1),
-              u AS (SELECT source, n, m,
-                      CAST(('0x' || substring(md5('dpm:'
-                        || CAST(source AS VARCHAR)), 1, 8)) AS BIGINT)
-                        / 4294967296.0 - 0.5 AS uu
-                    FROM c)
-         SELECT source, CAST(n AS BIGINT) AS n,
-                round(m + (-2000.0) * sign(uu)
-                  * ln(greatest(1.0 - 2.0 * abs(uu), 1.0 / 4294967296.0))
-                  / n, 6) AS noisy_mean
-         FROM u""",
-    "q_quota_sample" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-              t AS (SELECT sum(n) AS tot FROM c),
-              b AS (SELECT source, n, (100 * n) // tot AS q0,
-                           (100 * n) % tot AS rem
-                    FROM c, t),
-              lo AS (SELECT 100 - sum(q0) AS leftover FROM b),
-              r AS (SELECT source, n, q0,
-                           row_number() OVER (ORDER BY rem DESC, source ASC)
-                             AS rk
-                    FROM b),
-              quota AS (SELECT source,
-                          least(n, q0 + (CASE WHEN rk <= leftover
-                            THEN 1 ELSE 0 END)) AS q
-                        FROM r, lo),
-              ranked AS (SELECT doc_id, source,
-                           row_number() OVER (PARTITION BY source
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)) ASC,
-                               doc_id ASC) AS rn
-                         FROM documents)
-         SELECT doc_id, source
-         FROM ranked JOIN quota USING (source)
-         WHERE rn <= q""",
-    "q_unicode_norm" ->
-      """WITH syn AS (
-           SELECT doc_id,
-                  regexp_replace(regexp_replace(text,
-                    'e', 'e' || chr(769), 'g'),
-                    'o', 'o' || chr(776), 'g') AS dec
-           FROM documents)
-         SELECT doc_id,
-                length(dec) AS n_raw,
-                length(nfc_normalize(dec)) AS n_nfc,
-                md5(nfc_normalize(dec)) AS nfc_md5,
-                md5(strip_accents(dec)) AS folded_md5
-         FROM syn""",
-    "q_fuzzy_contamination" ->
-      s"""WITH ctok AS (SELECT DISTINCT doc_id, UNNEST($duckTokens) AS token
-                        FROM documents),
-              bt AS (SELECT doc_id + 1000000 AS bench_id, $duckTokens AS toks
-                     FROM documents WHERE doc_id % 50 = 3),
-              btok AS (SELECT DISTINCT bench_id, toks[i] AS token
-                       FROM bt, UNNEST(generate_series(1, len(toks))) AS t(i)
-                       WHERE i % 7 <> 0),
-              csig AS (SELECT doc_id, seed,
-                         min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                             AS BIGINT)) AS min_hash
-                       FROM ctok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                       GROUP BY doc_id, seed),
-              bsig AS (SELECT bench_id, seed,
-                         min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                             AS BIGINT)) AS min_hash
-                       FROM btok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                       GROUP BY bench_id, seed),
-              cband AS (SELECT doc_id, seed // 4 AS band,
-                          md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                            AS band_hash
-                        FROM csig GROUP BY doc_id, band),
-              bband AS (SELECT bench_id, seed // 4 AS band,
-                          md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                            AS band_hash
-                        FROM bsig GROUP BY bench_id, band),
-              cand AS (SELECT DISTINCT c.doc_id, b.bench_id
-                       FROM cband c JOIN bband b USING (band, band_hash)),
-              na AS (SELECT doc_id, count(*) AS n_a FROM ctok GROUP BY 1),
-              nb AS (SELECT bench_id, count(*) AS n_b FROM btok GROUP BY 1),
-              inter AS (SELECT cand.doc_id, cand.bench_id, count(*) AS ni
-                        FROM cand
-                        JOIN ctok ON ctok.doc_id = cand.doc_id
-                        JOIN btok ON btok.bench_id = cand.bench_id
-                                 AND btok.token = ctok.token
-                        GROUP BY 1, 2)
-         SELECT i.doc_id, i.bench_id,
-                round(CAST(ni AS DOUBLE) / (n_a + n_b - ni), 6) AS jaccard
-         FROM inter i JOIN na USING (doc_id) JOIN nb USING (bench_id)
-         WHERE round(CAST(ni AS DOUBLE) / (n_a + n_b - ni), 6) >= 0.5""",
-    "q_kcenter" -> kcenterOracleSql(8),
-    "q_mmr_rerank" -> mmrOracleSql(20, 10, 0.7),
-    "q_ndcg" -> ndcgOracleSql(10),
-    "q_mutual_nn" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                     FROM embeddings WHERE vec_id < 100),
-              t1 AS (SELECT query_id, vec_id AS nn, cs FROM (
-                 SELECT q.vec_id AS query_id, e.vec_id,
-                        round(${duckCos("e.v", "q.v")}, 6) AS cs,
-                        ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                          ORDER BY round(${duckCos("e.v", "q.v")}, 6) DESC,
-                                   e.vec_id) AS rn
-                 FROM e q JOIN e ON e.vec_id <> q.vec_id) WHERE rn = 1)
-         SELECT x.query_id AS id_a, x.nn AS id_b, x.cs AS cosine_sim
-         FROM t1 x JOIN t1 y
-           ON x.nn = y.query_id AND y.nn = x.query_id
-         WHERE x.query_id < x.nn""",
-    "q_hard_negatives" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-                     FROM embeddings),
-              q AS (SELECT vec_id AS query_id, v AS qv, label AS qlabel
-                    FROM e WHERE vec_id < 10),
-              s AS (SELECT q.query_id, e.vec_id, e.label,
-                           round(${duckCos("e.v", "q.qv")}, 6) AS cosine_sim
-                    FROM q JOIN e ON e.label <> q.qlabel),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY cosine_sim DESC, vec_id ASC) AS BIGINT) AS rnk
-                    FROM s)
-         SELECT query_id, vec_id, label, cosine_sim, rnk
-         FROM r WHERE rnk <= 5""",
-    "q_power_iteration" -> powerIterOracleSql(8),
-    "q_rbo" -> rboOracleSql(10, 0.9),
-    "q_matryoshka" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-              ex AS (SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, e.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY q.query_id
-                          ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-                 FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-              e16 AS (SELECT vec_id, v[1:16] AS v FROM e),
-              q16 AS (SELECT query_id, qv[1:16] AS qv FROM q),
-              ap AS (SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, e.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY q.query_id
-                          ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-                 FROM q16 q, e16 e WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-              n AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-                    FROM ex GROUP BY 1),
-              h AS (SELECT x.query_id, CAST(count(*) AS BIGINT) AS n_hits
-                    FROM ex x JOIN ap a
-                      ON x.query_id = a.query_id AND x.vec_id = a.vec_id
-                    GROUP BY 1)
-         SELECT n.query_id, n.n_exact, COALESCE(h.n_hits, 0) AS n_hits,
-                round(COALESCE(h.n_hits, 0) / CAST(n.n_exact AS DOUBLE), 6)
-                  AS recall
-         FROM n LEFT JOIN h USING (query_id)""",
-    "q_bpe_merges" -> bpeOracleSql(8),
-    "q_bpe_encode" -> bpeEncodeOracleSql(8),
-    "q_chisq_indep" ->
-      """WITH cells AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n
-                        FROM documents GROUP BY 1, 2),
-              rt AS (SELECT lang, CAST(sum(n) AS BIGINT) AS ra
-                     FROM cells GROUP BY 1),
-              ct AS (SELECT source, CAST(sum(n) AS BIGINT) AS cb
-                     FROM cells GROUP BY 1),
-              g AS (SELECT CAST(sum(n) AS BIGINT) AS gt FROM cells)
-         SELECT c.lang, c.source, c.n,
-                round(CAST(ra AS DOUBLE) * cb / gt, 6) AS expected,
-                round((CAST(c.n AS DOUBLE) - CAST(ra AS DOUBLE) * cb / gt)
-                      * (CAST(c.n AS DOUBLE) - CAST(ra AS DOUBLE) * cb / gt)
-                      / (CAST(ra AS DOUBLE) * cb / gt), 6) AS chi2_contrib
-         FROM cells c JOIN rt USING (lang) JOIN ct USING (source), g""",
-    "q_simpsons" ->
-      """WITH cells AS (
-           SELECT lang AS stratum,
-                  CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                  CAST(sum(CASE WHEN source = 'src0' AND n_chars > 300 THEN 1 ELSE 0 END) AS BIGINT) AS s_a,
-                  CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-                  CAST(sum(CASE WHEN source = 'src1' AND n_chars > 300 THEN 1 ELSE 0 END) AS BIGINT) AS s_b
-           FROM documents WHERE source IN ('src0', 'src1')
-           GROUP BY 1),
-              f AS (SELECT * FROM cells WHERE n_a > 0 AND n_b > 0),
-              t AS (SELECT sum(s_a) AS sa, sum(n_a) AS na,
-                           sum(s_b) AS sb, sum(n_b) AS nb,
-                           sum((CAST(s_a AS DOUBLE) / n_a
-                                - CAST(s_b AS DOUBLE) / n_b)
-                               * CAST(n_a + n_b AS DOUBLE)) AS wd,
-                           sum(n_a + n_b) AS n
-                    FROM f)
-         SELECT stratum, n_a, s_a, n_b, s_b,
-                round(CAST(s_a AS DOUBLE) / n_a, 6) AS rate_a,
-                round(CAST(s_b AS DOUBLE) / n_b, 6) AS rate_b,
-                round(CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb, 6)
-                  AS pooled_diff,
-                round(wd / CAST(n AS DOUBLE), 6) AS weighted_diff,
-                round(CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb, 6)
-                  * round(wd / CAST(n AS DOUBLE), 6) < 0 AS sign_flip
-         FROM f, t""",
-    "q_heaps_law" ->
-      s"""WITH st AS (SELECT doc_id,
-                CAST(floor(CAST(('0x' || substring(md5('heaps:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                     AS BIGINT) / 4294967296.0 * 10) AS INT) + 1 AS b,
-                $duckTokens AS toks
-              FROM documents),
-              tpb AS (SELECT b, CAST(sum(len(toks)) AS BIGINT) AS t
-                      FROM st GROUP BY 1),
-              fb AS (SELECT tok, min(b) AS fbk FROM (
-                       SELECT b, UNNEST(toks) AS tok FROM st) GROUP BY 1),
-              vpb AS (SELECT fbk AS b, CAST(count(*) AS BIGINT) AS v
-                      FROM fb GROUP BY 1),
-              grid AS (SELECT UNNEST(generate_series(1, 10)) AS b),
-              cum AS (SELECT CAST(g.b AS INTEGER) AS checkpoint,
-                        CAST(sum(COALESCE(t, 0)) OVER (ORDER BY g.b
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS BIGINT) AS tokens_cum,
-                        CAST(sum(COALESCE(v, 0)) OVER (ORDER BY g.b
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS BIGINT) AS vocab_cum
-                      FROM grid g LEFT JOIN tpb ON g.b = tpb.b
-                                  LEFT JOIN vpb ON g.b = vpb.b),
-              pts AS (SELECT checkpoint, tokens_cum, vocab_cum,
-                        ln(CAST(tokens_cum AS DOUBLE)) AS x,
-                        ln(CAST(vocab_cum AS DOUBLE)) AS y
-                      FROM cum WHERE tokens_cum > 0 AND vocab_cum > 0),
-              fit AS (SELECT CAST(count(*) AS BIGINT) AS n_points,
-                        covar_samp(x, y) AS cov, var_samp(x) AS vx,
-                        var_samp(y) AS vy, avg(x) AS xb, avg(y) AS yb
-                      FROM pts)
-         SELECT checkpoint, tokens_cum, vocab_cum, n_points,
-                round(CASE WHEN vx > 0 THEN cov / vx END, 6)
-                  AS heaps_exponent,
-                round(yb - (CASE WHEN vx > 0 THEN cov / vx END) * xb, 6)
-                  AS heaps_lnk,
-                round(CASE WHEN vx > 0 AND vy > 0
-                      THEN (cov * cov) / (vx * vy) END, 6) AS r2
-         FROM pts, fit""",
-    "q_readability" ->
-      s"""SELECT doc_id,
-                 CAST(len($duckTokens) AS BIGINT) AS n_words,
-                 CAST(len($duckSentences) AS BIGINT) AS n_sentences,
-                 CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-                      AS BIGINT) AS n_syllables,
-                 round(CASE WHEN len($duckTokens) > 0
-                             AND len($duckSentences) > 0
-                   THEN 206.835
-                        - 1.015 * (CAST(len($duckTokens) AS DOUBLE)
-                                   / len($duckSentences))
-                        - 84.6 * (CAST(len(regexp_extract_all(lower(text),
-                                     '[aeiouy]+')) AS DOUBLE)
-                                  / len($duckTokens)) END, 6) AS flesch
-          FROM documents""",
-    "q_psi" ->
-      """WITH r AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_ref
-                    FROM documents WHERE source = 'src0' GROUP BY 1),
-              c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_cur
-                    FROM documents WHERE source <> 'src0' GROUP BY 1),
-              j AS (SELECT lang, COALESCE(n_ref, 0) AS n_ref,
-                           COALESCE(n_cur, 0) AS n_cur
-                    FROM r FULL OUTER JOIN c USING (lang)),
-              t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-                           CAST(sum(n_cur) AS DOUBLE) AS tc,
-                           CAST(count(*) AS DOUBLE) AS k FROM j)
-         SELECT lang, n_ref, n_cur,
-                round((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k), 6)
-                  AS p_ref,
-                round((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k), 6)
-                  AS p_cur,
-                round(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k)
-                       - (CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))
-                      * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k))
-                           / ((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))),
-                      6) AS psi_contrib
-         FROM j, t""",
-    "q_drift_monitor" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS window_start,
-                           event_type, CAST(count(*) AS BIGINT) AS n
-                    FROM events GROUP BY 1, 2),
-              r AS (SELECT event_type,
-                           CAST(count(*) AS DOUBLE)
-                             / (SELECT count(*) FROM events) AS p_ref
-                    FROM events GROUP BY 1),
-              wt AS (SELECT window_start, CAST(sum(n) AS BIGINT) AS wt
-                     FROM c GROUP BY 1),
-              grid AS (SELECT w.window_start, r.event_type, r.p_ref,
-                              wt.wt, COALESCE(c.n, 0) AS n
-                       FROM (SELECT DISTINCT window_start FROM c) w
-                       CROSS JOIN r
-                       JOIN wt ON wt.window_start = w.window_start
-                       LEFT JOIN c ON c.window_start = w.window_start
-                                  AND c.event_type = r.event_type),
-              t AS (SELECT window_start, wt,
-                           CAST(n AS DOUBLE) / wt AS pw, p_ref
-                    FROM grid)
-         SELECT window_start, max(wt) AS n_events,
-                round(sum(
-                  CASE WHEN pw > 0.0
-                       THEN pw * ln(pw / ((pw + p_ref) / 2.0)) / 2.0
-                       ELSE 0.0 END
-                + CASE WHEN p_ref > 0.0
-                       THEN p_ref * ln(p_ref / ((pw + p_ref) / 2.0)) / 2.0
-                       ELSE 0.0 END), 6) AS jsd
-         FROM t GROUP BY 1""",
-    "q_jsd_drift" ->
-      """WITH r AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_ref
-                    FROM documents WHERE source = 'src0' GROUP BY 1),
-              c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_cur
-                    FROM documents WHERE source <> 'src0' GROUP BY 1),
-              j AS (SELECT lang, COALESCE(n_ref, 0) AS n_ref,
-                           COALESCE(n_cur, 0) AS n_cur
-                    FROM r FULL OUTER JOIN c USING (lang)),
-              t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-                           CAST(sum(n_cur) AS DOUBLE) AS tc FROM j)
-         SELECT lang, n_ref, n_cur,
-                round(CAST(n_ref AS DOUBLE) / tr, 6) AS p_ref,
-                round(CAST(n_cur AS DOUBLE) / tc, 6) AS p_cur,
-                round(
-                  CASE WHEN n_ref > 0
-                       THEN CAST(n_ref AS DOUBLE) / tr
-                            * ln((CAST(n_ref AS DOUBLE) / tr)
-                                 / ((CAST(n_ref AS DOUBLE) / tr
-                                     + CAST(n_cur AS DOUBLE) / tc) / 2.0)) / 2.0
-                       ELSE 0.0 END
-                + CASE WHEN n_cur > 0
-                       THEN CAST(n_cur AS DOUBLE) / tc
-                            * ln((CAST(n_cur AS DOUBLE) / tc)
-                                 / ((CAST(n_ref AS DOUBLE) / tr
-                                     + CAST(n_cur AS DOUBLE) / tc) / 2.0)) / 2.0
-                       ELSE 0.0 END, 6) AS jsd_contrib
-         FROM j, t""",
-    "q_davies_bouldin" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, cent_id, cosv FROM (
-                 SELECT e.vec_id, c.cent_id, ${duckCos("e.v", "c.cv")} AS cosv,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              sc AS (SELECT cent_id AS cell, CAST(count(*) AS BIGINT) AS n_members,
-                            round(CAST(sum(CAST(round(1 - round(cosv, 6), 6)
-                                               AS DECIMAL(18,6))) AS DOUBLE)
-                                  / count(*), 6) AS scatter
-                     FROM asg GROUP BY 1),
-              m AS (SELECT i.cent_id AS cell, j.cent_id AS cell_j,
-                           round(1 - round(${duckCos("i.cv", "j.cv")}, 6), 6) AS sep
-                    FROM c i, c j WHERE i.cent_id <> j.cent_id),
-              r AS (SELECT s.cell, s.n_members, s.scatter, m.cell_j,
-                           round((s.scatter + t.scatter) / m.sep, 6) AS ratio
-                    FROM sc s JOIN m ON m.cell = s.cell
-                              JOIN sc t ON t.cell = m.cell_j)
-         SELECT cell, n_members, scatter, cell_j AS worst_cell,
-                ratio AS db_ratio
-         FROM r
-         QUALIFY ROW_NUMBER() OVER (PARTITION BY cell
-                                    ORDER BY ratio DESC, cell_j ASC) = 1""",
-    "q_dsir_select" ->
-      s"""WITH rocc AS (SELECT doc_id,
-                          CAST(('0x' || substring(md5('0:' || token), 1, 15))
-                               AS BIGINT) % 64 AS b
-                        FROM (SELECT doc_id, UNNEST($duckTokens) AS token
-                              FROM documents)),
-              tocc AS (SELECT doc_id,
-                         CAST(('0x' || substring(md5('0:' || token), 1, 15))
-                              AS BIGINT) % 64 AS b
-                       FROM (SELECT doc_id, UNNEST($duckTokens) AS token
-                             FROM documents WHERE source = 'src0')),
-              rcnt AS (SELECT b, count(*) AS c_r FROM rocc GROUP BY 1),
-              tcnt AS (SELECT b, count(*) AS c_t FROM tocc GROUP BY 1),
-              tot AS (SELECT (SELECT count(*) FROM rocc) AS t_r,
-                             (SELECT count(*) FROM tocc) AS t_t),
-              stats AS (SELECT rcnt.b,
-                          ln(CAST(coalesce(c_t, 0) + 1 AS DOUBLE) / (t_t + 64))
-                        - ln(CAST(c_r + 1 AS DOUBLE) / (t_r + 64)) AS lr
-                        FROM rcnt LEFT JOIN tcnt USING (b), tot),
-              sc AS (SELECT doc_id, avg(lr) AS s FROM rocc
-                     JOIN stats USING (b) GROUP BY 1),
-              keyed AS (SELECT doc_id, s,
-                          round(s - ln(-ln(greatest(
-                            CAST(('0x' || substring(md5('dsir:' ||
-                              CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                              / 4294967296.0,
-                            1.0 / 4294967296.0))), 6) AS sel_key
-                        FROM sc)
-         SELECT doc_id, round(s, 6) AS score, sel_key
-         FROM keyed ORDER BY sel_key DESC, doc_id ASC LIMIT 50""",
-    // Exact-integer mirror of the order-independent anovaF: data-sized
-    // sums are HUGEINT over 1e-6-quantized values (parallel-agg-proof),
-    // the only float reduction is the ORDERED k-row list_reduce fold —
-    // same bits, same order as the engine's sorted aggregate() fold.
-    "q_anova" ->
-      """WITH base AS (SELECT event_type AS g,
-                              CAST(round(value * 1000000.0) AS BIGINT) AS v
-                       FROM events
-                       WHERE event_type IS NOT NULL AND value IS NOT NULL),
-              s AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cn,
-                           CAST(SUM(v) AS HUGEINT) AS sx,
-                           SUM(CAST(v AS HUGEINT) * v) AS sxx
-                    FROM base GROUP BY 1),
-              t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                           CAST(SUM(cn) AS BIGINT) AS n,
-                           CAST(SUM(sx) AS DOUBLE) AS dsx,
-                           CAST(SUM(sxx) AS DOUBLE) AS dsxx,
-                           list_reduce(list_apply(
-                             list(struct_pack(g := g,
-                               t := CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                    / CAST(cn AS DOUBLE)) ORDER BY g),
-                             x -> x.t), (a, b) -> a + b) AS tt
-                    FROM s),
-              fin AS (SELECT k, n, dsxx - tt AS ssw,
-                             tt - dsx * dsx / CAST(n AS DOUBLE) AS ssb
-                      FROM t)
-         SELECT k, n,
-                round(CASE WHEN k > 0 THEN ssb / 1e12 END, 6) AS ss_between,
-                round(CASE WHEN k > 0 THEN ssw / 1e12 END, 6) AS ss_within,
-                round(CASE WHEN k > 1 AND n > k AND ssw > 0
-                  THEN (ssb / CAST(k - 1 AS DOUBLE))
-                       / (ssw / CAST(n - k AS DOUBLE)) END, 6) AS f_stat,
-                round(CASE WHEN k > 0 AND ssb + ssw > 0
-                  THEN ssb / (ssb + ssw) END, 6) AS eta_sq
-         FROM fin""",
-    "q_kruskal_wallis" ->
-      """WITH vc AS (SELECT round(CAST(value AS DOUBLE), 6) AS s,
-                            event_type AS g, COUNT(*) AS c
-                     FROM events
-                     WHERE event_type IS NOT NULL AND value IS NOT NULL
-                     GROUP BY 1, 2),
-              pv AS (SELECT s, CAST(SUM(c) AS BIGINT) AS cv
-                     FROM vc GROUP BY 1),
-              grid AS (SELECT s, cv,
-                         CAST(COALESCE(SUM(cv) OVER (ORDER BY s
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                           0) AS DOUBLE)
-                           + CAST(cv + 1 AS DOUBLE) / 2.0 AS mid
-                       FROM pv),
-              pc AS (SELECT g, CAST(SUM(c) AS BIGINT) AS ng,
-                            SUM(CAST(c AS DOUBLE) * mid) AS r
-                     FROM vc JOIN grid USING (s) GROUP BY 1),
-              tt AS (SELECT CAST(SUM(cv * cv * cv - cv) AS BIGINT) AS t3
-                     FROM grid),
-              agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                             CAST(SUM(ng) AS BIGINT) AS n,
-                             SUM(r * r / CAST(ng AS DOUBLE)) AS rr
-                      FROM pc),
-              fin AS (SELECT k, n,
-                        12.0 / (CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE))
-                          * rr - 3.0 * CAST(n + 1 AS DOUBLE) AS h,
-                        1.0 - CAST(t3 AS DOUBLE)
-                          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                            * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) AS corr_
-                      FROM agg CROSS JOIN tt)
-         SELECT k, n,
-                round(CASE WHEN k > 1 AND corr_ > 0
-                  THEN h / corr_ END, 6) AS h_stat,
-                round(CASE WHEN k > 1 AND corr_ > 0 AND n > k
-                  THEN (h / corr_ - k + 1) / CAST(n - k AS DOUBLE)
-                  END, 6) AS epsilon_sq
-         FROM fin""",
-    "q_mantel_haenszel" ->
-      """WITH j AS (SELECT c.c_mktsegment AS st,
-                           e.event_type = 'click' AS t,
-                           e.value > 50.0 AS y
-                    FROM events e JOIN customer c ON e.user_id = c.c_custkey
-                    WHERE e.event_type IN ('click', 'view')
-                      AND e.value IS NOT NULL
-                      AND c.c_mktsegment IS NOT NULL),
-              cells AS (SELECT st,
-                          CAST(SUM(CASE WHEN t AND y THEN 1 ELSE 0 END)
-                            AS BIGINT) AS a,
-                          CAST(SUM(CASE WHEN t AND NOT y THEN 1 ELSE 0 END)
-                            AS BIGINT) AS b,
-                          CAST(SUM(CASE WHEN NOT t AND y THEN 1 ELSE 0 END)
-                            AS BIGINT) AS c,
-                          CAST(SUM(CASE WHEN NOT t AND NOT y THEN 1 ELSE 0 END)
-                            AS BIGINT) AS d
-                        FROM j GROUP BY 1),
-              r AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-                           CAST(SUM(a) AS BIGINT) AS ta,
-                           CAST(SUM(b) AS BIGINT) AS tb,
-                           CAST(SUM(c) AS BIGINT) AS tc,
-                           CAST(SUM(d) AS BIGINT) AS td,
-                           SUM(CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                             / CAST(a + b + c + d AS DOUBLE)) AS mh_num,
-                           SUM(CAST(b AS DOUBLE) * CAST(c AS DOUBLE)
-                             / CAST(a + b + c + d AS DOUBLE)) AS mh_den
-                    FROM cells)
-         SELECT n_strata,
-                round(CASE WHEN tb * tc > 0
-                  THEN (CAST(ta AS DOUBLE) * CAST(td AS DOUBLE))
-                    / (CAST(tb AS DOUBLE) * CAST(tc AS DOUBLE)) END, 6)
-                  AS or_crude,
-                round(CASE WHEN mh_den > 0 THEN mh_num / mh_den END, 6)
-                  AS or_mh
-         FROM r""",
-    "q_rfm" ->
-      """WITH pu AS (SELECT user_id, max(date_trunc('day', ts)) AS last_d,
-                            COUNT(*) AS frequency,
-                            round(SUM(value), 6) AS monetary
-                     FROM events GROUP BY 1),
-              anc AS (SELECT max(last_d) AS anchor FROM pu),
-              wr AS (SELECT user_id, frequency, monetary,
-                            CAST(date_diff('day', last_d, anchor) AS BIGINT)
-                              AS recency_days
-                     FROM pu CROSS JOIN anc),
-              cuts AS (SELECT
-                round(quantile_cont(recency_days, 0.2), 6) AS r20,
-                round(quantile_cont(recency_days, 0.4), 6) AS r40,
-                round(quantile_cont(recency_days, 0.6), 6) AS r60,
-                round(quantile_cont(recency_days, 0.8), 6) AS r80,
-                round(quantile_cont(frequency, 0.2), 6) AS f20,
-                round(quantile_cont(frequency, 0.4), 6) AS f40,
-                round(quantile_cont(frequency, 0.6), 6) AS f60,
-                round(quantile_cont(frequency, 0.8), 6) AS f80,
-                round(quantile_cont(monetary, 0.2), 6) AS m20,
-                round(quantile_cont(monetary, 0.4), 6) AS m40,
-                round(quantile_cont(monetary, 0.6), 6) AS m60,
-                round(quantile_cont(monetary, 0.8), 6) AS m80
-                FROM wr),
-              sc AS (SELECT user_id, recency_days, frequency, monetary,
-                       1 + (CASE WHEN recency_days < r80 THEN 1 ELSE 0 END)
-                         + (CASE WHEN recency_days < r60 THEN 1 ELSE 0 END)
-                         + (CASE WHEN recency_days < r40 THEN 1 ELSE 0 END)
-                         + (CASE WHEN recency_days < r20 THEN 1 ELSE 0 END)
-                         AS r_score,
-                       1 + (CASE WHEN frequency > f20 THEN 1 ELSE 0 END)
-                         + (CASE WHEN frequency > f40 THEN 1 ELSE 0 END)
-                         + (CASE WHEN frequency > f60 THEN 1 ELSE 0 END)
-                         + (CASE WHEN frequency > f80 THEN 1 ELSE 0 END)
-                         AS f_score,
-                       1 + (CASE WHEN monetary > m20 THEN 1 ELSE 0 END)
-                         + (CASE WHEN monetary > m40 THEN 1 ELSE 0 END)
-                         + (CASE WHEN monetary > m60 THEN 1 ELSE 0 END)
-                         + (CASE WHEN monetary > m80 THEN 1 ELSE 0 END)
-                         AS m_score
-                     FROM wr CROSS JOIN cuts)
-         SELECT user_id, recency_days, frequency, monetary,
-                r_score, f_score, m_score,
-                CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
-                  || CAST(m_score AS VARCHAR) AS rfm_code
-         FROM sc""",
-    "q_inter_arrival" ->
-      """WITH g AS (SELECT user_id,
-                           epoch_us(ts) - LAG(epoch_us(ts), 1) OVER
-                             (PARTITION BY user_id ORDER BY ts, event_id)
-                             AS gap_us
-                    FROM events)
-         SELECT user_id, COUNT(*) AS n_gaps,
-                avg(gap_us) / 1000000.0 AS mean_gap_s,
-                quantile_cont(gap_us, 0.5) / 1000000.0 AS median_gap_s,
-                CAST(max(gap_us) AS DOUBLE) / 1000000.0 AS max_gap_s
-         FROM g WHERE gap_us IS NOT NULL GROUP BY 1""",
-    "q_stationary_dist" ->
-      """WITH tc AS (SELECT prev_type, event_type AS dst, COUNT(*) AS n
-                     FROM (SELECT event_type,
-                             LAG(event_type, 1) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-                           FROM events)
-                     WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-              states AS (SELECT DISTINCT prev_type AS s FROM tc
-                         UNION SELECT DISTINCT dst FROM tc
-                         UNION SELECT DISTINCT event_type FROM events),
-              tot AS (SELECT prev_type, CAST(SUM(n) AS BIGINT) AS t
-                      FROM tc GROUP BY 1),
-              p AS (SELECT tc.prev_type AS src, tc.dst,
-                           CAST(n AS DOUBLE) / CAST(t AS DOUBLE) AS p
-                    FROM tc JOIN tot USING (prev_type)
-                    UNION ALL
-                    SELECT s, s, 1.0 FROM states
-                    WHERE s NOT IN (SELECT prev_type FROM tot)),
-              kk AS (SELECT COUNT(*) AS kn FROM states),
-              v0 AS (SELECT s, 1.0 / kn AS v FROM states CROSS JOIN kk),
-              v1 AS (SELECT dst AS s, SUM(v * p) AS v FROM v0
-                     JOIN p ON v0.s = p.src GROUP BY 1),
-              v2 AS (SELECT dst AS s, SUM(v * p) AS v FROM v1
-                     JOIN p ON v1.s = p.src GROUP BY 1),
-              v3 AS (SELECT dst AS s, SUM(v * p) AS v FROM v2
-                     JOIN p ON v2.s = p.src GROUP BY 1),
-              v4 AS (SELECT dst AS s, SUM(v * p) AS v FROM v3
-                     JOIN p ON v3.s = p.src GROUP BY 1),
-              sh AS (SELECT event_type AS s, COUNT(*) AS n
-                     FROM events GROUP BY 1),
-              t2 AS (SELECT CAST(SUM(n) AS BIGINT) AS t FROM sh),
-              va AS (SELECT states.s, COALESCE(v4.v, 0.0) AS v
-                     FROM states LEFT JOIN v4 USING (s))
-         SELECT va.s AS event_type, round(va.v, 6) AS pi,
-                round(CAST(sh.n AS DOUBLE) / CAST(t2.t AS DOUBLE), 6)
-                  AS empirical_share,
-                round(va.v - CAST(sh.n AS DOUBLE) / CAST(t2.t AS DOUBLE), 6)
-                  AS pi_minus_share
-         FROM va LEFT JOIN sh USING (s) CROSS JOIN t2""",
-    "q_ktruss" -> ktrussOracleSql(rounds = 6, k = 4, thin = 0.12),
-    "q_jaccard_link" ->
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t
-                      FROM documents WHERE doc_id < 120),
-              sh AS (SELECT DISTINCT doc_id,
-                            array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM canon
-                            UNION ALL SELECT b AS id FROM canon)
-                      GROUP BY 1),
-              adj AS (SELECT a AS w, b AS u FROM canon
-                      UNION ALL SELECT b AS w, a AS u FROM canon),
-              cand AS (SELECT n1.u AS u, n2.u AS v, count(*) AS n_common
-                       FROM adj n1
-                       JOIN deg d ON n1.w = d.id AND d.dg <= 1000
-                       JOIN adj n2 ON n1.w = n2.w AND n1.u < n2.u
-                       GROUP BY 1, 2),
-              scored AS (SELECT cand.u, cand.v, cand.n_common,
-                           round(CAST(cand.n_common AS DOUBLE)
-                             / CAST(du.dg + dv.dg - cand.n_common AS DOUBLE),
-                             6) AS jaccard_score
-                         FROM cand
-                         JOIN deg du ON cand.u = du.id
-                         JOIN deg dv ON cand.v = dv.id)
-         SELECT u AS src, v AS dst, n_common, jaccard_score
-         FROM scored
-         WHERE NOT EXISTS (SELECT 1 FROM canon c
-                           WHERE c.a = scored.u AND c.b = scored.v)
-         ORDER BY jaccard_score DESC, src ASC, dst ASC
-         LIMIT 20""",
-    "q_ccf" ->
-      """WITH da AS (SELECT datediff('day', DATE '2024-01-01',
-                              CAST(ts AS DATE)) AS day,
-                            CAST(count(*) AS DOUBLE) AS n
-                     FROM events WHERE event_type = 'click' GROUP BY 1),
-              db AS (SELECT datediff('day', DATE '2024-01-01',
-                              CAST(ts AS DATE)) AS day,
-                            CAST(count(*) AS DOUBLE) AS n
-                     FROM events WHERE event_type = 'purchase' GROUP BY 1),
-              lagged AS (SELECT day, n,
-                           UNNEST(generate_series(-7, 7)) AS lag
-                         FROM da),
-              pairs AS (SELECT a.lag, a.n AS x, b.n AS y
-                        FROM lagged a JOIN db b ON b.day = a.day + a.lag)
-         SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
-                CASE WHEN var_samp(x) > 0 AND var_samp(y) > 0 THEN
-                  round(covar_samp(x, y)
-                    / sqrt(var_samp(x) * var_samp(y)), 6) END AS ccf
-         FROM pairs GROUP BY 1""",
-    "q_seasonal_naive" ->
-      """WITH days AS (SELECT datediff('day', DATE '2024-01-01',
-                                CAST(ts AS DATE)) AS day,
-                              count(*) AS n
-                       FROM events GROUP BY 1),
-              span AS (SELECT min(day) AS lo, max(day) AS hi FROM days),
-              grid AS (SELECT g.day, COALESCE(d.n, 0) AS y
-                       FROM (SELECT UNNEST(generate_series(lo, hi)) AS day
-                             FROM span) g
-                       LEFT JOIN days d USING (day)),
-              e AS (SELECT y,
-                      abs(y - LAG(y, 1) OVER (ORDER BY day)) AS e1,
-                      abs(y - LAG(y, 7) OVER (ORDER BY day)) AS eS
-                    FROM grid),
-              agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-                             CAST(COUNT(e1) AS BIGINT) AS n1,
-                             CAST(SUM(e1) AS BIGINT) AS s1,
-                             CAST(COUNT(eS) AS BIGINT) AS nS,
-                             CAST(SUM(eS) AS BIGINT) AS sS
-                      FROM e)
-         SELECT n_days,
-                round(CASE WHEN n1 > 0
-                  THEN CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) END, 6)
-                  AS naive_mae,
-                round(CASE WHEN nS > 0
-                  THEN CAST(sS AS DOUBLE) / CAST(nS AS DOUBLE) END, 6)
-                  AS seasonal_mae,
-                round(CASE WHEN n1 > 0 AND nS > 0 AND s1 > 0
-                  THEN (CAST(sS AS DOUBLE) / CAST(nS AS DOUBLE))
-                     / (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) END, 6)
-                  AS mase_ratio
-         FROM agg""",
-    "q_key_candidates" ->
-      """WITH base AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM orders),
-              u AS (
-         SELECT 'o_orderkey' AS candidate, n AS n_rows,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-                 WHERE o_orderkey IS NULL) AS n_null_rows,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM
-                  (SELECT DISTINCT o_orderkey FROM orders)) AS n_distinct
-         FROM base
-         UNION ALL
-         SELECT 'o_custkey', n,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-                 WHERE o_custkey IS NULL),
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM
-                  (SELECT DISTINCT o_custkey FROM orders))
-         FROM base
-         UNION ALL
-         SELECT 'o_orderstatus+o_orderpriority', n,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-                 WHERE o_orderstatus IS NULL OR o_orderpriority IS NULL),
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM
-                  (SELECT DISTINCT o_orderstatus, o_orderpriority
-                   FROM orders))
-         FROM base
-         UNION ALL
-         SELECT 'o_custkey+o_orderdate', n,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-                 WHERE o_custkey IS NULL OR o_orderdate IS NULL),
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM
-                  (SELECT DISTINCT o_custkey, o_orderdate FROM orders))
-         FROM base)
-         SELECT candidate, n_rows, n_null_rows, n_distinct,
-                round(CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-                  AS uniqueness,
-                (n_distinct = n_rows AND n_null_rows = 0) AS is_key
-         FROM u""",
-    "q_distinct_intersection" ->
-      """WITH e AS (SELECT c.c_mktsegment AS seg, e.user_id AS u,
-                           e.event_type AS t
-                    FROM events e JOIN customer c ON e.user_id = c.c_custkey
-                    WHERE e.event_type IN ('click', 'view')),
-              ca AS (SELECT seg, CAST(COUNT(DISTINCT u) AS BIGINT) AS n_a
-                     FROM e WHERE t = 'click' GROUP BY 1),
-              cb AS (SELECT seg, CAST(COUNT(DISTINCT u) AS BIGINT) AS n_b
-                     FROM e WHERE t = 'view' GROUP BY 1),
-              cu AS (SELECT seg, CAST(COUNT(DISTINCT u) AS BIGINT) AS n_u
-                     FROM e GROUP BY 1),
-              ci AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_i FROM (
-                       SELECT DISTINCT seg, u FROM e WHERE t = 'click'
-                       INTERSECT
-                       SELECT DISTINCT seg, u FROM e WHERE t = 'view')
-                     GROUP BY 1)
-         SELECT cu.seg AS c_mktsegment,
-                COALESCE(ca.n_a, 0) AS n_exact_click,
-                COALESCE(cb.n_b, 0) AS n_exact_view,
-                cu.n_u AS n_exact_union,
-                COALESCE(ci.n_i, 0) AS n_exact_intersection,
-                TRUE AS union_within_bound,
-                TRUE AS intersection_within_bound
-         FROM cu
-         LEFT JOIN ca ON cu.seg = ca.seg
-         LEFT JOIN cb ON cu.seg = cb.seg
-         LEFT JOIN ci ON cu.seg = ci.seg""",
-    "q_tokenizer_fertility" -> fertilityOracleSql(8),
-    "q_freq_spectrum" ->
-      s"""WITH occ AS (SELECT source, UNNEST($duckTokens) AS tok
-                     FROM documents),
-              wc AS (SELECT source, tok, COUNT(*) AS m
-                     FROM occ GROUP BY 1, 2),
-              vt AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS v
-                     FROM wc GROUP BY 1),
-              sp AS (SELECT source, m, CAST(COUNT(*) AS BIGINT) AS v_m
-                     FROM wc WHERE m <= 8 GROUP BY 1, 2)
-         SELECT sp.source, sp.m, sp.v_m, vt.v AS v_types,
-                round(CAST(sp.v_m AS DOUBLE) / CAST(vt.v AS DOUBLE), 6)
-                  AS share_of_types
-         FROM sp JOIN vt ON sp.source = vt.source""",
-    "q_good_turing" ->
-      s"""WITH occ AS (SELECT source, UNNEST($duckTokens) AS tok
-                     FROM documents),
-              wc AS (SELECT source, tok, COUNT(*) AS m
-                     FROM occ GROUP BY 1, 2),
-              sp AS (SELECT source, m AS r, CAST(COUNT(*) AS BIGINT) AS v_r
-                     FROM wc GROUP BY 1, 2),
-              tot AS (SELECT source, CAST(SUM(m) AS BIGINT) AS n,
-                             CAST(SUM(CASE WHEN m = 1 THEN 1 ELSE 0 END)
-                               AS BIGINT) AS v1
-                      FROM wc GROUP BY 1)
-         SELECT sp.source, sp.r, sp.v_r,
-                round(CASE WHEN nx.v_r IS NOT NULL
-                  THEN CAST(sp.r + 1 AS DOUBLE) * CAST(nx.v_r AS DOUBLE)
-                     / CAST(sp.v_r AS DOUBLE) END, 6) AS r_star,
-                round(CASE WHEN nx.v_r IS NOT NULL
-                  THEN CAST(sp.r + 1 AS DOUBLE) * CAST(nx.v_r AS DOUBLE)
-                     / CAST(sp.v_r AS DOUBLE) / CAST(sp.r AS DOUBLE)
-                  END, 6) AS discount,
-                round(CAST(tot.v1 AS DOUBLE) / CAST(tot.n AS DOUBLE), 6)
-                  AS p0_unseen
-         FROM sp
-         LEFT JOIN sp nx ON sp.source = nx.source AND nx.r = sp.r + 1
-         JOIN tot ON sp.source = tot.source
-         WHERE sp.r <= 5""",
-    "q_mann_whitney" ->
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
-              r AS (SELECT s, cp, cn,
-                           coalesce(sum(cp + cn) OVER (ORDER BY s
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0) AS below
-                    FROM per),
-              agg AS (SELECT CAST(sum(cp) AS BIGINT) AS np,
-                             CAST(sum(cn) AS BIGINT) AS nneg,
-                             sum((CAST(below AS DOUBLE)
-                               + CAST(cp + cn + 1 AS DOUBLE) / 2.0) * cp)
-                               AS rp,
-                             CAST(sum((cp + cn) * (cp + cn) * (cp + cn)
-                               - (cp + cn)) AS BIGINT) AS t3
-                      FROM r),
-              fin AS (SELECT np, nneg, t3,
-                        rp - CAST(np AS DOUBLE)
-                          * (CAST(np AS DOUBLE) + 1.0) / 2.0 AS u,
-                        CAST(np AS DOUBLE) * CAST(nneg AS DOUBLE) / 12.0
-                          * (((CAST(np AS DOUBLE) + CAST(nneg AS DOUBLE))
-                              + 1.0)
-                            - CAST(t3 AS DOUBLE)
-                              / ((CAST(np AS DOUBLE) + CAST(nneg AS DOUBLE))
-                                * ((CAST(np AS DOUBLE)
-                                   + CAST(nneg AS DOUBLE)) - 1.0)))
-                          AS sigma2
-                      FROM agg)
-         SELECT np AS n_pos, nneg AS n_neg,
-                round(u, 6) AS u_stat,
-                round(CASE WHEN np > 0 AND nneg > 0
-                  THEN 2.0 * (u / (CAST(np AS DOUBLE)
-                    * CAST(nneg AS DOUBLE))) - 1.0 END, 6)
-                  AS rank_biserial,
-                round(CASE WHEN np > 0 AND nneg > 0 AND sigma2 > 0
-                  THEN (u - CAST(np AS DOUBLE) * CAST(nneg AS DOUBLE) / 2.0)
-                     / sqrt(sigma2) END, 6) AS z_stat
-         FROM fin""",
-    // Same exact-integer ANOVA tail as q_anova, over the 1e-6-quantized
-    // absolute deviations from each group's median (quantile_cont ≡
-    // Spark percentile bit-for-bit on these inputs, the pinned parity).
-    "q_brown_forsythe" ->
-      """WITH b0 AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v0
-                     FROM events
-                     WHERE event_type IS NOT NULL AND value IS NOT NULL),
-              med AS (SELECT g, quantile_cont(v0, 0.5) AS md
-                      FROM b0 GROUP BY 1),
-              base AS (SELECT b0.g,
-                              CAST(round(abs(v0 - md) * 1000000.0) AS BIGINT)
-                                AS v
-                       FROM b0 JOIN med USING (g)),
-              s AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cn,
-                           CAST(SUM(v) AS HUGEINT) AS sx,
-                           SUM(CAST(v AS HUGEINT) * v) AS sxx
-                    FROM base GROUP BY 1),
-              t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                           CAST(SUM(cn) AS BIGINT) AS n,
-                           CAST(SUM(sx) AS DOUBLE) AS dsx,
-                           CAST(SUM(sxx) AS DOUBLE) AS dsxx,
-                           list_reduce(list_apply(
-                             list(struct_pack(g := g,
-                               t := CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                    / CAST(cn AS DOUBLE)) ORDER BY g),
-                             x -> x.t), (a, b) -> a + b) AS tt
-                    FROM s),
-              fin AS (SELECT k, n, dsxx - tt AS ssw,
-                             tt - dsx * dsx / CAST(n AS DOUBLE) AS ssb
-                      FROM t)
-         SELECT k, n,
-                round(CASE WHEN k > 0 THEN ssb / 1e12 END, 6) AS ss_between,
-                round(CASE WHEN k > 0 THEN ssw / 1e12 END, 6) AS ss_within,
-                round(CASE WHEN k > 1 AND n > k AND ssw > 0
-                  THEN (ssb / CAST(k - 1 AS DOUBLE))
-                       / (ssw / CAST(n - k AS DOUBLE)) END, 6) AS f_stat,
-                round(CASE WHEN k > 0 AND ssb + ssw > 0
-                  THEN ssb / (ssb + ssw) END, 6) AS eta_sq
-         FROM fin""",
-    "q_qte" ->
-      """WITH j AS (SELECT c.c_mktsegment AS g, e.event_type AS a,
-                           e.value AS v
-                    FROM events e JOIN customer c ON e.user_id = c.c_custkey
-                    WHERE e.event_type IN ('click', 'view')
-                      AND e.value IS NOT NULL),
-              s AS (SELECT g, a, CAST(COUNT(*) AS BIGINT) AS n,
-                           quantile_cont(v, 0.25) AS q1,
-                           quantile_cont(v, 0.5) AS q2,
-                           quantile_cont(v, 0.75) AS q3,
-                           quantile_cont(v, 0.9) AS q4
-                    FROM j GROUP BY 1, 2),
-              aa AS (SELECT g, n AS n_a, q1 AS a1, q2 AS a2, q3 AS a3,
-                            q4 AS a4
-                     FROM s WHERE a = 'click'),
-              bb AS (SELECT g, n AS n_b, q1 AS b1, q2 AS b2, q3 AS b3,
-                            q4 AS b4
-                     FROM s WHERE a = 'view'),
-              ab AS (SELECT * FROM aa JOIN bb USING (g)),
-              u AS (SELECT g, n_a, n_b, CAST(0.25 AS DOUBLE) AS q,
-                           a1 AS qa, b1 AS qb FROM ab
-                    UNION ALL
-                    SELECT g, n_a, n_b, CAST(0.5 AS DOUBLE), a2, b2 FROM ab
-                    UNION ALL
-                    SELECT g, n_a, n_b, CAST(0.75 AS DOUBLE), a3, b3 FROM ab
-                    UNION ALL
-                    SELECT g, n_a, n_b, CAST(0.9 AS DOUBLE), a4, b4 FROM ab)
-         SELECT g AS c_mktsegment, n_a, n_b, q,
-                round(qa, 6) AS q_a, round(qb, 6) AS q_b,
-                round(qa - qb, 6) AS qte
-         FROM u""",
-    "q_gain_curve" ->
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
-              tot AS (SELECT CAST(sum(cp + cn) AS BIGINT) AS nn,
-                             CAST(sum(cp) AS BIGINT) AS pp
-                      FROM per),
-              cum AS (SELECT s,
-                             CAST(sum(cp + cn) OVER (ORDER BY s DESC
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS cumN,
-                             CAST(sum(cp) OVER (ORDER BY s DESC
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS cumP
-                      FROM per),
-              bk AS (SELECT CAST(ceil(CAST(cumN AS DOUBLE) * 10
-                               / CAST(nn AS DOUBLE)) AS INTEGER) AS bucket,
-                            CAST(max(cumN) AS BIGINT) AS bN,
-                            CAST(max(cumP) AS BIGINT) AS bP,
-                            CAST(max(nn) AS BIGINT) AS nn,
-                            CAST(max(pp) AS BIGINT) AS pp
-                     FROM cum CROSS JOIN tot
-                     GROUP BY 1)
-         SELECT bucket, bN AS cum_rows, bP AS cum_positives,
-                round(CAST(bN AS DOUBLE) / CAST(nn AS DOUBLE), 6)
-                  AS population_share,
-                round(CASE WHEN pp > 0
-                  THEN CAST(bP AS DOUBLE) / CAST(pp AS DOUBLE) END, 6)
-                  AS capture_share,
-                round(CASE WHEN pp > 0 AND bN > 0
-                  THEN (CAST(bP AS DOUBLE) / CAST(pp AS DOUBLE))
-                     / (CAST(bN AS DOUBLE) / CAST(nn AS DOUBLE)) END, 6)
-                  AS lift
-         FROM bk""",
-    "q_cramers_v" ->
-      """WITH cells AS (SELECT lang, source, COUNT(*) AS n
-                        FROM documents
-                        WHERE lang IS NOT NULL AND source IS NOT NULL
-                        GROUP BY 1, 2),
-              rt AS (SELECT lang, CAST(SUM(n) AS BIGINT) AS ra
-                     FROM cells GROUP BY 1),
-              ct AS (SELECT source, CAST(SUM(n) AS BIGINT) AS cb
-                     FROM cells GROUP BY 1),
-              g AS (SELECT CAST(SUM(n) AS BIGINT) AS gg,
-                           CAST(COUNT(DISTINCT lang) AS BIGINT) AS r,
-                           CAST(COUNT(DISTINCT source) AS BIGINT) AS c
-                    FROM cells),
-              grid AS (SELECT rt.lang, rt.ra, ct.source, ct.cb,
-                              COALESCE(cells.n, 0) AS n
-                       FROM rt CROSS JOIN ct
-                       LEFT JOIN cells ON cells.lang = rt.lang
-                         AND cells.source = ct.source),
-              s AS (SELECT gg, r, c,
-                      SUM((CAST(n AS DOUBLE) - CAST(ra AS DOUBLE) * cb / gg)
-                        * (CAST(n AS DOUBLE) - CAST(ra AS DOUBLE) * cb / gg)
-                        / (CAST(ra AS DOUBLE) * cb / gg)) AS chi2
-                    FROM grid CROSS JOIN g
-                    GROUP BY 1, 2, 3)
-         SELECT r AS n_rows_dim, c AS n_cols_dim, gg AS n,
-                round(chi2, 6) AS chi2,
-                round(CASE WHEN least(r, c) > 1
-                  THEN sqrt(chi2 / (CAST(gg AS DOUBLE)
-                    * CAST(least(r, c) - 1 AS DOUBLE))) END, 6)
-                  AS cramers_v
-         FROM s""",
-    "q_conversion_latency" ->
-      """WITH e AS (SELECT c.c_mktsegment AS g, ev.user_id AS u,
-                           ev.event_type AS t, epoch_us(ev.ts) AS us
-                    FROM events ev
-                    JOIN customer c ON ev.user_id = c.c_custkey),
-              f AS (SELECT g, u, min(us) AS t0
-                    FROM e WHERE t = 'view' GROUP BY 1, 2),
-              j AS (SELECT f.g, f.u, f.t0,
-                           min(CASE WHEN p.us > f.t0 THEN p.us END) AS tc
-                    FROM f LEFT JOIN (SELECT g, u, us FROM e
-                                      WHERE t = 'purchase') p
-                      ON f.g = p.g AND f.u = p.u
-                    GROUP BY 1, 2, 3)
-         SELECT g AS c_mktsegment,
-                CAST(COUNT(*) AS BIGINT) AS n_from_users,
-                CAST(COUNT(tc) AS BIGINT) AS n_converted,
-                round(CAST(COUNT(tc) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE),
-                  6) AS conversion_rate,
-                quantile_cont(tc - t0, 0.5) / 1000000.0 AS p50_latency_s,
-                quantile_cont(tc - t0, 0.9) / 1000000.0 AS p90_latency_s,
-                avg(tc - t0) / 1000000.0 AS mean_latency_s
-         FROM j GROUP BY 1""",
-    "q_ess" ->
-      """WITH w AS (SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS w
-                    FROM lineitem GROUP BY 1),
-              j AS (SELECT s.s_nationkey, CAST(w.w AS DOUBLE) AS w
-                    FROM w JOIN supplier s ON w.l_suppkey = s.s_suppkey),
-              a AS (SELECT s_nationkey,
-                           CAST(COUNT(*) AS BIGINT) AS n_units,
-                           SUM(w) AS sw, SUM(w * w) AS sww
-                    FROM j GROUP BY 1)
-         SELECT s_nationkey, n_units, sw AS sum_w,
-                CASE WHEN sww > 0 THEN sw * sw / sww END AS ess,
-                CASE WHEN sww > 0
-                  THEN (sw * sw / sww) / CAST(n_units AS DOUBLE) END
-                  AS ess_ratio
-         FROM a""",
-    "q_jsd_matrix" ->
-      """WITH counts AS (SELECT source AS g, lang AS b, COUNT(*) AS n
-                         FROM documents GROUP BY 1, 2),
-              tot AS (SELECT g, CAST(SUM(n) AS BIGINT) AS t
-                      FROM counts GROUP BY 1),
-              shares AS (SELECT counts.g, b,
-                                CAST(n AS DOUBLE) / CAST(t AS DOUBLE) AS p
-                         FROM counts JOIN tot USING (g)),
-              grid AS (SELECT a.g AS g_a, b.g AS g_b
-                       FROM (SELECT DISTINCT g FROM shares) a
-                       CROSS JOIN (SELECT DISTINCT g FROM shares) b
-                       WHERE a.g < b.g),
-              ab AS (SELECT grid.g_a, grid.g_b, s.b, s.p AS pa
-                     FROM grid JOIN shares s ON s.g = grid.g_a),
-              bb AS (SELECT grid.g_a, grid.g_b, s.b, s.p AS pb
-                     FROM grid JOIN shares s ON s.g = grid.g_b),
-              f AS (SELECT COALESCE(ab.g_a, bb.g_a) AS g_a,
-                           COALESCE(ab.g_b, bb.g_b) AS g_b,
-                           COALESCE(pa, 0.0) AS pa,
-                           COALESCE(pb, 0.0) AS pb
-                    FROM ab FULL JOIN bb
-                      ON ab.g_a = bb.g_a AND ab.g_b = bb.g_b
-                     AND ab.b = bb.b)
-         SELECT g_a, g_b,
-                round(SUM(
-                  (CASE WHEN pa > 0.0
-                    THEN pa * ln(pa / ((pa + pb) / 2.0)) / 2.0
-                    ELSE 0.0 END)
-                  + (CASE WHEN pb > 0.0
-                    THEN pb * ln(pb / ((pa + pb) / 2.0)) / 2.0
-                    ELSE 0.0 END)), 6) AS jsd
-         FROM f GROUP BY 1, 2""",
-    "q_user_gini" ->
-      """WITH pu AS (SELECT c.c_mktsegment AS g, e.user_id AS u,
-                            CAST(COUNT(*) AS BIGINT) AS v
-                     FROM events e JOIN customer c ON e.user_id = c.c_custkey
-                     GROUP BY 1, 2),
-              rk AS (SELECT g, u, v,
-                            row_number() OVER (PARTITION BY g
-                              ORDER BY v ASC, u ASC) AS r
-                     FROM pu),
-              a AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_units,
-                           CAST(SUM(v) AS BIGINT) AS total,
-                           SUM(CAST(r AS DOUBLE) * v) AS rf
-                    FROM rk GROUP BY 1)
-         SELECT g AS c_mktsegment, n_units, total,
-                round(CASE WHEN total > 0
-                  THEN 2.0 * rf / (CAST(n_units AS DOUBLE)
-                    * CAST(total AS DOUBLE))
-                    - CAST(n_units + 1 AS DOUBLE)
-                      / CAST(n_units AS DOUBLE) END, 6) AS gini
-         FROM a""",
-    "q_wasserstein" ->
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      LEAD(v) OVER (ORDER BY v) - v AS gap,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
-         SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-                round(sum(abs(cuma / na - cumb / nb) * gap), 6) AS w1
-         FROM c""",
-    "q_cliffs_delta" ->
-      """WITH x AS (SELECT value AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
-         SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-                (CAST(sum(ca * (cumb - cb)) AS DOUBLE)
-                  - CAST(sum(ca * (nb - cumb)) AS DOUBLE))
-                  / (CAST(max(na) AS DOUBLE) * CAST(max(nb) AS DOUBLE))
-                  AS cliffs_delta
-         FROM c""",
-    "q_chao1" ->
-      s"""WITH tri AS (SELECT source, array_to_string(t[i:i+2], ' ') AS g
-                       FROM (SELECT source, $duckTokens AS t
-                             FROM documents),
-                         UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              cnt AS (SELECT source, g, count(*) AS c FROM tri GROUP BY 1, 2),
-              r AS (SELECT source,
-                      CAST(count(*) AS BIGINT) AS distinct_tokens,
-                      CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                        AS f1,
-                      CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT)
-                        AS f2
-                    FROM cnt GROUP BY 1)
-         SELECT source, distinct_tokens, f1, f2,
-                CAST(distinct_tokens AS DOUBLE)
-                  + CAST(f1 * (f1 - 1) AS DOUBLE)
-                    / CAST(2 * (f2 + 1) AS DOUBLE) AS chao1
-         FROM r""",
-    "q_rake" ->
-      s"""WITH tok AS (SELECT doc_id, i - 1 AS pos, t[i] AS tok
-                       FROM (SELECT doc_id, $duckTokens AS t FROM documents),
-                         UNNEST(generate_series(1, len(t))) AS u(i)),
-              nz AS (SELECT doc_id, pos, tok,
-                       pos - ROW_NUMBER() OVER (PARTITION BY doc_id
-                         ORDER BY pos) AS island
-                     FROM tok WHERE tok NOT IN ('a', 'the')),
-              ph AS (SELECT doc_id, island,
-                       string_agg(tok, ' ' ORDER BY pos) AS phrase,
-                       count(*) AS len
-                     FROM nz GROUP BY 1, 2),
-              dp AS (SELECT phrase, count(*) AS n_occurrences,
-                       min(len) AS len
-                     FROM ph GROUP BY 1),
-              w AS (SELECT phrase, n_occurrences, len,
-                      UNNEST(string_split(phrase, ' ')) AS wd
-                    FROM dp),
-              ws AS (SELECT wd,
-                       CAST(sum(n_occurrences * len) AS DOUBLE)
-                         / CAST(sum(n_occurrences) AS DOUBLE) AS s
-                     FROM w GROUP BY 1),
-              ps AS (SELECT w.phrase, round(sum(ws.s), 6) AS score
-                     FROM w JOIN ws ON w.wd = ws.wd GROUP BY 1)
-         SELECT dp.phrase, CAST(dp.n_occurrences AS BIGINT) AS n_occurrences,
-                ps.score
-         FROM dp JOIN ps ON dp.phrase = ps.phrase
-         ORDER BY ps.score DESC, dp.phrase ASC LIMIT 20""",
-    "q_isotonic" ->
-      raw"""WITH scored AS (SELECT round(
-               0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-             + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0,
-                 1.0)
-             + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                        THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                        < 0.2 THEN 1.0 ELSE 0.0 END), 6) AS q,
-               (lang = 'en') AS y
-             FROM (SELECT lang, text,
-                     CAST(len($duckTokens) AS DOUBLE) AS n,
-                     CAST(len(list_filter($duckTokens,
-                       t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                       AS BIGINT) AS ns,
-                     length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                   FROM documents
-                   WHERE lang IS NOT NULL)),
-              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
-                          FROM scored),
-              binned AS (SELECT CAST(least(CAST(floor(s * 10) AS BIGINT), 9)
-                             AS BIGINT) AS bin,
-                           count(*) AS n,
-                           SUM(CASE WHEN y THEN 1 ELSE 0 END) AS pos
-                         FROM clamped GROUP BY 1),
-              pre AS (SELECT bin, n, pos,
-                        SUM(n) OVER (ORDER BY bin
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS cumn,
-                        SUM(pos) OVER (ORDER BY bin
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS cumpos
-                      FROM binned),
-              lo AS (SELECT bin AS j, cumn - n AS nlo, cumpos - pos AS plo
-                     FROM pre),
-              hi AS (SELECT bin AS k, cumn AS nhi, cumpos AS phi FROM pre),
-              grid AS (SELECT p.bin, lo.j,
-                         min(CAST(hi.phi - lo.plo AS DOUBLE)
-                           / CAST(hi.nhi - lo.nlo AS DOUBLE)) AS mn
-                       FROM pre p
-                       JOIN lo ON lo.j <= p.bin
-                       JOIN hi ON hi.k >= p.bin
-                       GROUP BY 1, 2),
-              fit AS (SELECT bin, max(mn) AS iso_rate FROM grid GROUP BY 1)
-         SELECT p.bin, CAST(p.n AS BIGINT) AS n,
-                CAST(p.pos AS DOUBLE) / CAST(p.n AS DOUBLE) AS pos_rate,
-                f.iso_rate
-         FROM pre p JOIN fit f ON p.bin = f.bin""",
-    "q_cvm" ->
-      """WITH x AS (SELECT value AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
-         SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-                round(CAST(max(na) AS DOUBLE) * CAST(max(nb) AS DOUBLE)
-                  / ((CAST(max(na) AS DOUBLE) + CAST(max(nb) AS DOUBLE))
-                    * (CAST(max(na) AS DOUBLE) + CAST(max(nb) AS DOUBLE)))
-                  * sum(CAST(ca + cb AS DOUBLE)
-                    * (cuma / na - cumb / nb)
-                    * (cuma / na - cumb / nb)), 6) AS cvm
-         FROM c""",
-    "q_mcnemar" ->
-      s"""WITH li AS (SELECT lang AS declared_lang,
-                        CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END)
-                               >= 0.05
-                             THEN 'en' ELSE 'unknown' END AS lang_guess
-                      FROM (SELECT lang,
-                              CAST(len($duckTokens) AS DOUBLE) AS n,
-                              CAST(len(list_filter($duckTokens,
-                                t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                                AS BIGINT) AS ns
-                            FROM documents
-                            WHERE lang IS NOT NULL)),
-              f AS (SELECT (declared_lang = 'en') AS a,
-                           (lang_guess = 'en') AS b
-                    FROM li),
-              agg AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                        CAST(sum(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)
-                          AS BIGINT) AS b_only,
-                        CAST(sum(CASE WHEN (NOT a) AND b THEN 1 ELSE 0 END)
-                          AS BIGINT) AS c_only
-                      FROM f)
-         SELECT n, b_only, c_only,
-                CASE WHEN b_only + c_only > 0 THEN
-                  CAST((b_only - c_only) * (b_only - c_only) AS DOUBLE)
-                    / CAST(b_only + c_only AS DOUBLE) END AS mcnemar_chi2
-         FROM agg""",
-    "q_kendall_tau" ->
-      s"""WITH d AS (SELECT CAST(floor(n_chars / 100) AS BIGINT) AS x,
-                       CAST(floor(len($duckTokens) / 10) AS BIGINT) AS y
-                     FROM documents),
-              cells AS (SELECT x, y, count(*) AS c FROM d GROUP BY 1, 2),
-              pr AS (SELECT
-                       sum(CASE WHEN b.y > a.y
-                           THEN CAST(a.c AS DOUBLE) * b.c ELSE 0.0 END)
-                         AS cc,
-                       sum(CASE WHEN b.y < a.y
-                           THEN CAST(a.c AS DOUBLE) * b.c ELSE 0.0 END)
-                         AS dd
-                     FROM cells a JOIN cells b ON b.x > a.x),
-              m AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
-              mx AS (SELECT sum(CAST(t AS DOUBLE) * t) AS sx2
-                     FROM (SELECT sum(c) AS t FROM cells GROUP BY x)),
-              my AS (SELECT sum(CAST(t AS DOUBLE) * t) AS sy2
-                     FROM (SELECT sum(c) AS t FROM cells GROUP BY y))
-         SELECT n, CAST(cc AS BIGINT) AS concordant,
-                CAST(dd AS BIGINT) AS discordant,
-                round((cc - dd) / sqrt(
-                  ((CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                    - CAST(n AS DOUBLE)) / 2.0
-                    - (sx2 - CAST(n AS DOUBLE)) / 2.0)
-                  * ((CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                    - CAST(n AS DOUBLE)) / 2.0
-                    - (sy2 - CAST(n AS DOUBLE)) / 2.0)), 6) AS tau_b
-         FROM pr, m, mx, my""",
-    "q_pettitt" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS n_events
-                    FROM events GROUP BY 1),
-              r AS (SELECT day, n_events,
-                      2 * RANK() OVER (ORDER BY n_events)
-                        + COUNT(*) OVER (PARTITION BY n_events) - 1 AS r2,
-                      COUNT(*) OVER () AS t
-                    FROM c),
-              u AS (SELECT day, t,
-                      SUM(r2 - (t + 1)) OVER (ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS ut,
-                      ROW_NUMBER() OVER (ORDER BY day) AS rn
-                    FROM r)
-         SELECT day AS change_day, CAST(t AS BIGINT) AS n_days,
-                CAST(abs(ut) AS BIGINT) AS k_stat,
-                round(least(1.0, 2.0 * exp(-6.0
-                  * (CAST(abs(ut) AS DOUBLE) * CAST(abs(ut) AS DOUBLE))
-                  / (CAST(t AS DOUBLE) * CAST(t AS DOUBLE)
-                      * CAST(t AS DOUBLE)
-                    + CAST(t AS DOUBLE) * CAST(t AS DOUBLE)))), 6)
-                  AS p_approx
-         FROM u WHERE rn < t
-         ORDER BY abs(ut) DESC, day ASC LIMIT 1""",
-    "q_ece" ->
-      raw"""WITH scored AS (SELECT round(
-               0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-             + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0,
-                 1.0)
-             + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                        THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                        < 0.2 THEN 1.0 ELSE 0.0 END), 6) AS q,
-               (lang = 'en') AS y
-             FROM (SELECT lang, text,
-                     CAST(len($duckTokens) AS DOUBLE) AS n,
-                     CAST(len(list_filter($duckTokens,
-                       t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                       AS BIGINT) AS ns,
-                     length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                   FROM documents
-                   WHERE lang IS NOT NULL)),
-              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
-                          FROM scored),
-              binned AS (SELECT CAST(least(CAST(floor(s * 10) AS BIGINT), 9)
-                             AS BIGINT) AS bin,
-                           CAST(count(*) AS DOUBLE) AS nb,
-                           avg(s) AS conf,
-                           avg(CASE WHEN y THEN 1.0 ELSE 0.0 END) AS acc
-                         FROM clamped GROUP BY 1),
-              tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                        CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS DOUBLE)
-                          AS pos,
-                        sum((s - (CASE WHEN y THEN 1.0 ELSE 0.0 END))
-                          * (s - (CASE WHEN y THEN 1.0 ELSE 0.0 END)))
-                          AS sqsum
-                      FROM clamped)
-         SELECT n,
-                round(sqsum / CAST(n AS DOUBLE), 6) AS brier,
-                round(sum(nb / CAST(n AS DOUBLE) * abs(acc - conf)), 6)
-                  AS ece,
-                round(sum(nb / CAST(n AS DOUBLE) * (conf - acc)
-                  * (conf - acc)), 6) AS reliability,
-                round(sum(nb / CAST(n AS DOUBLE)
-                  * (acc - pos / CAST(n AS DOUBLE))
-                  * (acc - pos / CAST(n AS DOUBLE))), 6) AS resolution,
-                round(pos / CAST(n AS DOUBLE)
-                  * (1.0 - pos / CAST(n AS DOUBLE)), 6) AS uncertainty
-         FROM binned, tot GROUP BY n, sqsum, pos""",
-    "q_hurst" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS x
-                    FROM events GROUP BY 1),
-              idx AS (SELECT day, x, ROW_NUMBER() OVER (ORDER BY day) AS rn
-                      FROM c),
-              e AS (SELECT day, x, rn, m,
-                      CAST(floor((rn - 1) / m) AS BIGINT) AS blk
-                    FROM idx, UNNEST([5, 10, 15]) AS u(m)),
-              f AS (SELECT day, x, m, blk,
-                      COUNT(*) OVER (PARTITION BY m, blk) AS cnt,
-                      SUM(x) OVER (PARTITION BY m, blk) AS sx,
-                      SUM(x * x) OVER (PARTITION BY m, blk) AS sxx,
-                      SUM(x) OVER (PARTITION BY m, blk ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cx,
-                      ROW_NUMBER() OVER (PARTITION BY m, blk ORDER BY day)
-                        AS t
-                    FROM e),
-              g AS (SELECT m, blk,
-                      max(CAST(cx AS DOUBLE) - CAST(t AS DOUBLE)
-                        * (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)))
-                      - min(CAST(cx AS DOUBLE) - CAST(t AS DOUBLE)
-                        * (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE))) AS r,
-                      sqrt(greatest(CAST(max(sxx) AS DOUBLE)
-                          / CAST(m AS DOUBLE)
-                        - (CAST(max(sx) AS DOUBLE) / CAST(m AS DOUBLE))
-                          * (CAST(max(sx) AS DOUBLE) / CAST(m AS DOUBLE)),
-                        0.0)) AS sd
-                    FROM f WHERE cnt = m GROUP BY m, blk),
-              h AS (SELECT CAST(m AS BIGINT) AS block_size,
-                      CAST(count(*) AS BIGINT) AS n_blocks,
-                      round(avg(r / sd), 6) AS mean_rs
-                    FROM g WHERE sd > 0.0 GROUP BY 1),
-              fit AS (SELECT CASE WHEN k * suu - su * su > 0.0
-                          THEN round((k * suv - su * sv)
-                            / (k * suu - su * su), 6) END AS hurst
-                      FROM (SELECT CAST(count(*) AS DOUBLE) AS k,
-                              sum(u) AS su, sum(v) AS sv,
-                              sum(u * v) AS suv, sum(u * u) AS suu
-                            FROM (SELECT ln(CAST(block_size AS DOUBLE)) AS u,
-                                    ln(mean_rs) AS v FROM h)))
-         SELECT h.block_size, h.n_blocks, h.mean_rs, fit.hurst
-         FROM h, fit""",
-    "q_burrows_delta" ->
-      s"""WITH tok AS (SELECT source AS g, UNNEST($duckTokens) AS w
-                       FROM documents),
-              gw AS (SELECT g, w, CAST(count(*) AS BIGINT) AS c
-                     FROM tok GROUP BY 1, 2),
-              top AS (SELECT w FROM (SELECT w, sum(c) AS tot
-                                     FROM gw GROUP BY 1)
-                      ORDER BY tot DESC, w ASC LIMIT 30),
-              gt AS (SELECT g, sum(c) AS n FROM gw GROUP BY 1),
-              grid AS (SELECT gt.g, top.w,
-                         CAST(coalesce(gw.c, 0) AS DOUBLE)
-                           / CAST(gt.n AS DOUBLE) AS f
-                       FROM gt CROSS JOIN top
-                       LEFT JOIN gw ON gw.g = gt.g AND gw.w = top.w),
-              kk AS (SELECT CAST(count(DISTINCT g) AS DOUBLE) AS k
-                     FROM grid),
-              st AS (SELECT w, sum(f) / k AS mu, sum(f * f) / k AS m2
-                     FROM grid, kk GROUP BY w, k),
-              sd AS (SELECT w, mu,
-                       sqrt(greatest(m2 - mu * mu, 0.0)) AS sd
-                     FROM st),
-              z AS (SELECT grid.w, grid.g, (grid.f - sd.mu) / sd.sd AS z
-                    FROM grid JOIN sd ON grid.w = sd.w WHERE sd.sd > 0.0)
-         SELECT a.g AS source_a, b.g AS source_b,
-                CAST(count(*) AS BIGINT) AS n_words,
-                round(avg(abs(a.z - b.z)), 6) AS delta
-         FROM z a JOIN z b ON a.w = b.w AND a.g < b.g
-         GROUP BY 1, 2""",
-    "q_yuen" ->
-      """WITH v AS (SELECT event_type AS arm, CAST(value AS DOUBLE) AS x
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL),
-              r AS (SELECT arm, x,
-                      ROW_NUMBER() OVER (PARTITION BY arm ORDER BY x) AS rr,
-                      COUNT(*) OVER (PARTITION BY arm) AS n
-                    FROM v),
-              r2 AS (SELECT arm, x, rr, n,
-                       CAST(floor(CAST(n AS DOUBLE) * 0.2) AS BIGINT) AS g
-                     FROM r),
-              r3 AS (SELECT arm, x, rr, n, g,
-                       max(CASE WHEN rr = g + 1 THEN x END)
-                         OVER (PARTITION BY arm) AS lo,
-                       max(CASE WHEN rr = n - g THEN x END)
-                         OVER (PARTITION BY arm) AS hi
-                     FROM r2),
-              agg AS (SELECT arm, max(n) AS na,
-                        max(n) - 2 * max(g) AS h,
-                        sum(CASE WHEN rr > g AND rr <= n - g
-                            THEN x ELSE 0.0 END)
-                          / CAST(max(n) - 2 * max(g) AS DOUBLE) AS tm,
-                        sum(CASE WHEN rr <= g THEN lo
-                            WHEN rr > n - g THEN hi ELSE x END) AS sw,
-                        sum((CASE WHEN rr <= g THEN lo
-                            WHEN rr > n - g THEN hi ELSE x END)
-                          * (CASE WHEN rr <= g THEN lo
-                            WHEN rr > n - g THEN hi ELSE x END)) AS sww
-                      FROM r3 GROUP BY 1),
-              dd AS (SELECT arm, h, tm,
-                       CAST(na - 1 AS DOUBLE)
-                         * ((sww - sw * sw / CAST(na AS DOUBLE))
-                           / CAST(na - 1 AS DOUBLE))
-                         / (CAST(h AS DOUBLE) * CAST(h - 1 AS DOUBLE))
-                         AS dj
-                     FROM agg)
-         SELECT CAST(a.h AS BIGINT) AS h_a, CAST(b.h AS BIGINT) AS h_b,
-                round(a.tm, 6) AS trimmed_mean_a,
-                round(b.tm, 6) AS trimmed_mean_b,
-                round((a.tm - b.tm) / sqrt(a.dj + b.dj), 6) AS yuen_t,
-                round(1.0 / ((a.dj / (a.dj + b.dj))
-                    * (a.dj / (a.dj + b.dj)) / CAST(a.h - 1 AS DOUBLE)
-                  + (1.0 - a.dj / (a.dj + b.dj))
-                    * (1.0 - a.dj / (a.dj + b.dj))
-                    / CAST(b.h - 1 AS DOUBLE)), 6) AS df
-         FROM (SELECT * FROM dd WHERE arm = 'click') a,
-              (SELECT * FROM dd WHERE arm = 'purchase') b""",
-    "q_doremi" ->
-      s"""WITH tok AS (SELECT source AS g, UNNEST($duckTokens) AS w
-                       FROM documents),
-              st AS (SELECT g, w, CAST(count(*) AS BIGINT) AS c
-                     FROM tok GROUP BY 1, 2),
-              vocab AS (SELECT w, CAST(sum(c) AS BIGINT) AS ct
-                        FROM st GROUP BY 1),
-              tot AS (SELECT CAST(sum(c) AS DOUBLE) AS nn FROM st),
-              ps AS (SELECT g, CAST(sum(c) AS BIGINT) AS n_tokens,
-                       -sum(CAST(c AS DOUBLE)
-                           * ln(CAST(ct AS DOUBLE) / nn))
-                         / CAST(sum(c) AS DOUBLE) AS loss
-                     FROM st JOIN vocab USING (w), tot GROUP BY g, nn),
-              corp AS (SELECT CAST(sum(n_tokens) AS DOUBLE) AS tt,
-                         sum(loss * CAST(n_tokens AS DOUBLE))
-                           / CAST(sum(n_tokens) AS DOUBLE) AS base
-                       FROM ps),
-              sc AS (SELECT g, n_tokens, loss, base,
-                       CAST(n_tokens AS DOUBLE) / tt AS share,
-                       CAST(n_tokens AS DOUBLE) / tt
-                         * exp(1.0 * (loss - base)) AS raw
-                     FROM ps, corp),
-              z AS (SELECT sum(raw) AS zz FROM sc)
-         SELECT g AS source, n_tokens, round(loss, 6) AS loss,
-                round(loss - base, 6) AS excess_loss,
-                round(share, 6) AS share_before,
-                round(raw / zz, 6) AS weight_after
-         FROM sc, z""",
-    "q_twonn" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings WHERE vec_id < 150),
-              d AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-                      list_dot_product(a.v, a.v)
-                        + list_dot_product(b.v, b.v)
-                        - 2.0 * list_dot_product(a.v, b.v) AS d2
-                    FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-              r AS (SELECT ia, d2,
-                      ROW_NUMBER() OVER (PARTITION BY ia
-                        ORDER BY d2 ASC, ib ASC) AS rn
-                    FROM d),
-              nn AS (SELECT ia,
-                       min(CASE WHEN rn = 1 THEN d2 END) AS d1,
-                       min(CASE WHEN rn = 2 THEN d2 END) AS dd2
-                     FROM r WHERE rn <= 2 GROUP BY 1),
-              agg AS (SELECT CAST(count(*) AS BIGINT) AS n_points,
-                        CAST(sum(CASE WHEN d1 > 0.0 THEN 1 ELSE 0 END)
-                          AS BIGINT) AS n_used,
-                        sum(CASE WHEN d1 > 0.0 THEN ln(dd2 / d1) END)
-                          AS slog
-                      FROM nn)
-         SELECT n_points, n_used,
-                round(CASE WHEN slog > 0.0
-                  THEN 2.0 * CAST(n_used AS DOUBLE) / slog END, 6)
-                  AS intrinsic_dim
-         FROM agg""",
-    "q_periodogram" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS x
-                    FROM events GROUP BY 1),
-              i AS (SELECT x,
-                      CAST(ROW_NUMBER() OVER (ORDER BY day) AS DOUBLE) AS t,
-                      COUNT(*) OVER () AS n,
-                      CAST(SUM(x) OVER () AS DOUBLE)
-                        / CAST(COUNT(*) OVER () AS DOUBLE) AS mu
-                    FROM c),
-              p AS (SELECT x, t, n, mu, period
-                    FROM i, UNNEST([7, 10, 15]) AS u(period))
-         SELECT CAST(period AS BIGINT) AS period,
-                CAST(max(n) AS BIGINT) AS n_days,
-                round((sum((CAST(x AS DOUBLE) - mu)
-                    * cos(2.0 * pi() / CAST(period AS DOUBLE) * t))
-                  * sum((CAST(x AS DOUBLE) - mu)
-                    * cos(2.0 * pi() / CAST(period AS DOUBLE) * t))
-                  + sum((CAST(x AS DOUBLE) - mu)
-                    * sin(2.0 * pi() / CAST(period AS DOUBLE) * t))
-                  * sum((CAST(x AS DOUBLE) - mu)
-                    * sin(2.0 * pi() / CAST(period AS DOUBLE) * t)))
-                  / CAST(max(n) AS DOUBLE), 6) AS power
-         FROM p GROUP BY period""",
-    "q_ljung_box" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS x
-                    FROM events GROUP BY 1),
-              i AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT)
-                        AS t,
-                      COUNT(*) OVER () AS n,
-                      CAST(x AS DOUBLE) - CAST(SUM(x) OVER () AS DOUBLE)
-                        / CAST(COUNT(*) OVER () AS DOUBLE) AS cv
-                    FROM c),
-              l AS (SELECT t, n, cv, UNNEST(generate_series(1, 7)) AS lag
-                    FROM i),
-              p AS (SELECT a.lag AS lag, sum(a.cv * b.cv) AS num
-                    FROM l a JOIN l b
-                      ON b.t = a.t - a.lag AND b.lag = a.lag
-                    GROUP BY 1),
-              d AS (SELECT sum(cv * cv) AS den, max(n) AS n0 FROM i),
-              r AS (SELECT lag, n0,
-                      CASE WHEN den > 0 THEN num / den END AS rho,
-                      CASE WHEN den > 0 THEN (num / den) * (num / den)
-                        / CAST(n0 - lag AS DOUBLE) END AS term
-                    FROM p, d)
-         SELECT CAST(lag AS BIGINT) AS lag, CAST(n0 AS BIGINT) AS n_days,
-                round(rho, 6) AS rho,
-                round(CAST(n0 AS DOUBLE) * CAST(n0 + 2 AS DOUBLE)
-                  * SUM(term) OVER (ORDER BY lag
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                  6) AS q_cum
-         FROM r""",
-    "q_energy_dist" ->
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      LEAD(v) OVER (ORDER BY v) - v AS gap,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
-         SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-                round(sum(2.0 * (cuma / na - cumb / nb)
-                  * (cuma / na - cumb / nb) * gap), 6) AS e_dist
-         FROM c""",
-    "q_theil" ->
-      """WITH p AS (SELECT source AS g, CAST(n_chars AS DOUBLE) AS x
-                    FROM documents
-                    WHERE n_chars IS NOT NULL AND n_chars > 0),
-              pg AS (SELECT g, CAST(count(*) AS BIGINT) AS n, sum(x) AS sx,
-                       sum(x * ln(x)) AS sxl
-                     FROM p GROUP BY 1),
-              pg2 AS (SELECT g, n, sx, sx / CAST(n AS DOUBLE) AS mu_g,
-                        sxl / sx - ln(sx / CAST(n AS DOUBLE)) AS tg
-                      FROM pg),
-              tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn, sum(sx) AS tx
-                      FROM pg2),
-              sh AS (SELECT g, n, mu_g, tg, sx / tx AS s,
-                       tx / CAST(nn AS DOUBLE) AS mu
-                     FROM pg2, tot),
-              dec AS (SELECT round(sum(s * ln(mu_g / mu)), 6) AS t_between,
-                        round(sum(s * tg), 6) AS t_within,
-                        round(sum(s * (ln(mu_g / mu) + tg)), 6) AS t_total
-                      FROM sh)
-         SELECT g AS source, n, mu_g AS mean_val, s AS value_share,
-                round(tg, 6) AS t_group, t_between, t_within, t_total
-         FROM sh, dec""",
-    "q_hill_diversity" ->
-      s"""WITH cnt AS (
-            SELECT source, tok, count(*) AS c FROM (
-              SELECT source, UNNEST($duckTokens) AS tok FROM documents)
-            GROUP BY source, tok),
-              agg AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-                        CAST(count(*) AS BIGINT) AS hill_0,
-                        sum(c * ln(c)) AS scl,
-                        CAST(sum(c * c) AS BIGINT) AS sc2
-                      FROM cnt GROUP BY 1),
-              h AS (SELECT source, n_tokens, hill_0,
-                      ln(n_tokens) - scl / CAST(n_tokens AS DOUBLE) AS hh,
-                      sc2
-                    FROM agg)
-         SELECT source, n_tokens, hill_0, round(exp(hh), 6) AS hill_1,
-                CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE)
-                  / CAST(sc2 AS DOUBLE) AS hill_2,
-                CASE WHEN hill_0 > 1 THEN round(hh / ln(hill_0), 6) END
-                  AS pielou
-         FROM h""",
-    "q_markov_entropy" ->
-      """WITH tc AS (SELECT prev_type, event_type AS dst,
-                       CAST(count(*) AS BIGINT) AS n
-                     FROM (SELECT event_type,
-                             LAG(event_type, 1) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-                           FROM events)
-                     WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-              ps AS (SELECT prev_type, CAST(sum(n) AS BIGINT) AS n_out,
-                       sum(CAST(n AS DOUBLE) * ln(n)) AS snl
-                     FROM tc GROUP BY 1),
-              ps2 AS (SELECT prev_type, n_out,
-                        ln(n_out) - snl / CAST(n_out AS DOUBLE) AS h
-                      FROM ps),
-              mg AS (SELECT CAST(sum(m) AS BIGINT) AS nt,
-                       sum(CAST(m AS DOUBLE) * ln(m)) AS sml
-                     FROM (SELECT dst, CAST(sum(n) AS BIGINT) AS m
-                           FROM tc GROUP BY 1)),
-              hm AS (SELECT ln(nt) - sml / CAST(nt AS DOUBLE) AS hmv
-                     FROM mg),
-              hr AS (SELECT sum(CAST(n_out AS DOUBLE) * h)
-                         / CAST(sum(n_out) AS DOUBLE) AS hrv
-                     FROM ps2)
-         SELECT prev_type, n_out, round(h, 6) AS h_state,
-                round(hrv, 6) AS h_rate, round(hmv, 6) AS h_marginal,
-                round(hmv - hrv, 6) AS info_gain
-         FROM ps2, hr, hm""",
-    "q_sprt" ->
-      """WITH d AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS n,
-                      CAST(SUM(CASE WHEN event_type = 'purchase'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS k
-                    FROM events GROUP BY 1),
-              c AS (SELECT day,
-                      SUM(n) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                        PRECEDING AND CURRENT ROW) AS n_cum,
-                      SUM(k) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                        PRECEDING AND CURRENT ROW) AS k_cum
-                    FROM d),
-              l AS (SELECT day, CAST(n_cum AS BIGINT) AS n_cum,
-                      CAST(k_cum AS BIGINT) AS k_cum,
-                      CAST(k_cum AS DOUBLE) * ln(0.22 / 0.18)
-                        + CAST(n_cum - k_cum AS DOUBLE)
-                          * ln((1.0 - 0.22) / (1.0 - 0.18)) AS llr
-                    FROM c)
-         SELECT day, n_cum, k_cum, round(llr, 6) AS llr,
-                CASE WHEN llr >= ln((1.0 - 0.2) / 0.05) THEN 'accept_h1'
-                     WHEN llr <= ln(0.2 / (1.0 - 0.05)) THEN 'accept_h0'
-                     ELSE 'continue' END AS decision
-         FROM l""",
-    "q_eb_shrinkage" ->
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_trials,
-                       CAST(SUM(CASE WHEN event_type = 'purchase'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_success
-                     FROM events GROUP BY 1),
-              pr AS (SELECT user_id, n_trials, n_success,
-                       CAST(n_success AS DOUBLE)
-                         / CAST(n_trials AS DOUBLE) AS r
-                     FROM pu),
-              fit AS (SELECT avg(r) AS mu, var_samp(r) AS v FROM pr),
-              ab AS (SELECT
-                       CASE WHEN v > 0 AND mu * (1 - mu) / v - 1 > 0
-                         THEN mu * (mu * (1 - mu) / v - 1) END AS alpha,
-                       CASE WHEN v > 0 AND mu * (1 - mu) / v - 1 > 0
-                         THEN (1 - mu) * (mu * (1 - mu) / v - 1) END AS beta
-                     FROM fit)
-         SELECT user_id, n_trials, n_success, r AS rate_raw,
-                round(alpha, 6) AS prior_alpha, round(beta, 6) AS prior_beta,
-                round(coalesce((CAST(n_success AS DOUBLE) + alpha)
-                    / (CAST(n_trials AS DOUBLE) + alpha + beta), r), 6)
-                  AS rate_shrunk
-         FROM pr, ab""",
-    "q_capture_recapture" ->
-      """WITH pu AS (SELECT user_id,
-                      max(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                        THEN 1 ELSE 0 END) AS c1,
-                      max(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-                        THEN 1 ELSE 0 END) AS c2
-                    FROM events GROUP BY 1),
-              t AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
-                      CAST(sum(c2) AS BIGINT) AS n2,
-                      CAST(sum(c1 * c2) AS BIGINT) AS m_both
-                    FROM pu)
-         SELECT n1, n2, m_both,
-                CAST(n1 + 1 AS DOUBLE) * CAST(n2 + 1 AS DOUBLE)
-                  / CAST(m_both + 1 AS DOUBLE) - 1.0 AS n_hat,
-                round(sqrt(CAST(n1 + 1 AS DOUBLE) * CAST(n2 + 1 AS DOUBLE)
-                  * CAST(n1 - m_both AS DOUBLE)
-                  * CAST(n2 - m_both AS DOUBLE)
-                  / (CAST(m_both + 1 AS DOUBLE) * CAST(m_both + 1 AS DOUBLE)
-                    * CAST(m_both + 2 AS DOUBLE))), 6) AS se_hat
-         FROM t""",
-    "q_cluster_agreement" ->
-      """WITH cont AS (SELECT CAST(lang AS VARCHAR) AS a,
-                        CAST(source AS VARCHAR) AS b,
-                        CAST(count(*) AS BIGINT) AS c
-                      FROM documents
-                      WHERE lang IS NOT NULL AND source IS NOT NULL
-                      GROUP BY 1, 2),
-              t AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                      sum(CAST(c AS DOUBLE) * CAST(c - 1 AS DOUBLE) / 2.0)
-                        AS idx,
-                      sum(CAST(c AS DOUBLE) * ln(c)) AS hlc
-                    FROM cont),
-              ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ca
-                     FROM cont GROUP BY 1),
-              mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb
-                     FROM cont GROUP BY 1),
-              sa AS (SELECT CAST(count(*) AS BIGINT) AS n_clusters_a,
-                       sum(CAST(ca AS DOUBLE) * CAST(ca - 1 AS DOUBLE)
-                         / 2.0) AS sa2,
-                       sum(CAST(ca AS DOUBLE) * ln(ca)) AS hla
-                     FROM ma),
-              sb AS (SELECT CAST(count(*) AS BIGINT) AS n_clusters_b,
-                       sum(CAST(cb AS DOUBLE) * CAST(cb - 1 AS DOUBLE)
-                         / 2.0) AS sb2,
-                       sum(CAST(cb AS DOUBLE) * ln(cb)) AS hlb
-                     FROM mb),
-              y AS (SELECT n, n_clusters_a, n_clusters_b, idx,
-                      CAST(n AS DOUBLE) AS nd,
-                      ln(CAST(n AS DOUBLE)) - hla / CAST(n AS DOUBLE) AS ha,
-                      ln(CAST(n AS DOUBLE)) - hlb / CAST(n AS DOUBLE) AS hb,
-                      ln(CAST(n AS DOUBLE))
-                        + (hlc - hla - hlb) / CAST(n AS DOUBLE) AS mi,
-                      sa2 * sb2 / (CAST(n AS DOUBLE)
-                        * CAST(n - 1 AS DOUBLE) / 2.0) AS expd,
-                      (sa2 + sb2) / 2.0 AS mx
-                    FROM t, sa, sb)
-         SELECT n, n_clusters_a, n_clusters_b,
-                CASE WHEN abs(mx - expd) > 0
-                  THEN round((idx - expd) / (mx - expd), 6) END AS ari,
-                CASE WHEN ha + hb > 0
-                  THEN round(2.0 * mi / (ha + hb), 6) END AS nmi
-         FROM y""",
-    "q_anderson_darling" ->
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x),
-              t AS (SELECT na, nb, CAST(na + nb AS DOUBLE) AS nn,
-                      CAST(cuma + cumb AS DOUBLE)
-                        / CAST(na + nb AS DOUBLE) AS h,
-                      CAST(cuma AS DOUBLE) / na
-                        - CAST(cumb AS DOUBLE) / nb AS d,
-                      ca + cb AS l
-                    FROM c)
-         SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-                round(CAST(max(na) AS DOUBLE) * max(nb)
-                  / (max(nn) * max(nn))
-                  * sum(CASE WHEN h < 1.0 THEN CAST(l AS DOUBLE) * d * d
-                      / (h * (1.0 - h)) END), 6) AS a2
-         FROM t""",
-    "q_cochran_armitage" ->
-      """WITH ps AS (SELECT CAST(hour(ts) AS DOUBLE) AS w,
-                       CAST(count(*) AS BIGINT) AS n,
-                       CAST(SUM(CASE WHEN event_type = 'purchase'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS k
-                     FROM events GROUP BY 1),
-              f AS (SELECT CAST(sum(n) AS BIGINT) AS n_total,
-                      CAST(sum(k) AS BIGINT) AS n_success,
-                      sum(w * k) AS t, sum(w * n) AS wn,
-                      sum(w * w * n) AS w2n
-                    FROM ps),
-              g AS (SELECT *, CAST(n_success AS DOUBLE)
-                        / CAST(n_total AS DOUBLE) AS p
-                    FROM f),
-              h AS (SELECT *, p * (1.0 - p)
-                        * (w2n - wn * wn / CAST(n_total AS DOUBLE)) AS vr
-                    FROM g)
-         SELECT n_total, n_success, t AS t_stat, p * wn AS t_expected,
-                CASE WHEN vr > 0
-                  THEN round((t - p * wn) / sqrt(vr), 6) END AS z
-         FROM h""",
-    "q_durbin_watson" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS x
-                    FROM events GROUP BY 1),
-              e AS (SELECT day, CAST(x AS DOUBLE)
-                        - CAST(SUM(x) OVER () AS DOUBLE)
-                          / CAST(COUNT(*) OVER () AS DOUBLE) AS ev
-                    FROM c),
-              d AS (SELECT ev, ev - LAG(ev) OVER (ORDER BY day) AS de
-                    FROM e)
-         SELECT CAST(count(*) AS BIGINT) AS n_days,
-                CASE WHEN sum(ev * ev) > 0
-                  THEN round(sum(de * de) / sum(ev * ev), 6) END AS dw
-         FROM d""",
-    "q_gpd_tail" ->
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS x FROM events
-                    WHERE value IS NOT NULL),
-              a AS (SELECT CAST(count(*) AS BIGINT) AS n_total,
-                      CAST(count(CASE WHEN x > 150.0 THEN 1 END) AS BIGINT)
-                        AS n_exceed,
-                      avg(CASE WHEN x > 150.0 THEN x - 150.0 END) AS m,
-                      var_samp(CASE WHEN x > 150.0 THEN x - 150.0 END) AS v
-                    FROM x),
-              b AS (SELECT *, m * m / v AS r FROM a),
-              c AS (SELECT *,
-                      CASE WHEN v > 0 THEN 0.5 * (1.0 - r) END AS xi,
-                      CASE WHEN v > 0 THEN 0.5 * m * (r + 1.0) END AS beta,
-                      CAST(n_exceed AS DOUBLE)
-                        / CAST(n_total AS DOUBLE) AS zeta
-                    FROM b)
-         SELECT n_total, n_exceed, round(m, 6) AS mean_excess,
-                round(xi, 6) AS xi, round(beta, 6) AS beta,
-                round(CASE WHEN xi IS NOT NULL AND abs(xi) > 1e-12
-                        AND xi < 0.5 AND zeta > (1.0 - 0.999)
-                  THEN 150.0 + beta / xi
-                    * (pow((1.0 - 0.999) / zeta, -xi) - 1.0) END, 6)
-                  AS q_est
-         FROM c""",
-    "q_wilson" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_trials,
-                      CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_success
-                    FROM documents GROUP BY 1),
-              w AS (SELECT source, n_trials, n_success,
-                      CAST(n_trials AS DOUBLE) AS n,
-                      CAST(n_success AS DOUBLE)
-                        / CAST(n_trials AS DOUBLE) AS p
-                    FROM g),
-              x AS (SELECT *,
-                      1.0 + 1.96 * 1.96 / n AS den,
-                      p + 1.96 * 1.96 / (2.0 * n) AS ctr,
-                      1.96 * sqrt(p * (1.0 - p) / n
-                        + 1.96 * 1.96 / (4.0 * n * n)) AS hw
-                    FROM w)
-         SELECT source, n_trials, n_success, p AS rate,
-                round((ctr - hw) / den, 6) AS ci_low,
-                round((ctr + hw) / den, 6) AS ci_high
-         FROM x""",
-    "q_poisson_rate" ->
-      """WITH a AS (SELECT
-                      CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                      CAST(SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS k2
-                    FROM events),
-              b AS (SELECT k1, k2, CAST(k1 + k2 AS DOUBLE) AS k,
-                      15.0 / (15.0 + 15.0) AS pi
-                    FROM a)
-         SELECT k1, k2,
-                CASE WHEN k2 > 0 THEN (CAST(k1 AS DOUBLE) / 15.0)
-                  / (CAST(k2 AS DOUBLE) / 15.0) END AS rate_ratio,
-                k * pi AS k1_expected,
-                CASE WHEN k > 0 THEN round((CAST(k1 AS DOUBLE) - k * pi)
-                  / sqrt(k * pi * (1.0 - pi)), 6) END AS z
-         FROM b""",
-    "q_jarque_bera" ->
-      """WITH x AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS x
-                    FROM events WHERE value IS NOT NULL),
-              m AS (SELECT g, avg(x) AS mu, CAST(count(*) AS BIGINT) AS n
-                    FROM x GROUP BY 1),
-              c AS (SELECT x.g, m.n,
-                      sum((x.x - mu) * (x.x - mu)) AS m2,
-                      sum((x.x - mu) * (x.x - mu) * (x.x - mu)) AS m3,
-                      sum((x.x - mu) * (x.x - mu) * (x.x - mu) * (x.x - mu))
-                        AS m4
-                    FROM x JOIN m ON x.g = m.g
-                    GROUP BY 1, 2),
-              d AS (SELECT g, n, CAST(n AS DOUBLE) AS nd,
-                      m2 / CAST(n AS DOUBLE) AS v, m3, m4
-                    FROM c),
-              e AS (SELECT g, n, nd,
-                      CASE WHEN v > 0
-                        THEN m3 / nd / pow(v, 1.5) END AS s,
-                      CASE WHEN v > 0 THEN m4 / nd / (v * v) END AS k
-                    FROM d)
-         SELECT g AS event_type, n, round(s, 6) AS skewness,
-                round(k, 6) AS kurtosis,
-                round(nd * (s * s / 6.0 + (k - 3.0) * (k - 3.0) / 24.0), 6)
-                  AS jb
-         FROM e""",
-    "q_jonckheere" ->
-      """WITH h AS (SELECT CAST(floor((day(ts) - 1) / 5) AS BIGINT) AS g,
-                      CAST(value AS DOUBLE) AS v,
-                      CAST(count(*) AS BIGINT) AS h
-                    FROM events WHERE value IS NOT NULL
-                    GROUP BY 1, 2),
-              grid AS (SELECT gs.g, vs.v, coalesce(h.h, 0) AS hi
-                       FROM (SELECT DISTINCT g FROM h) gs
-                       CROSS JOIN (SELECT DISTINCT v FROM h) vs
-                       LEFT JOIN h ON h.g = gs.g AND h.v = vs.v),
-              cg AS (SELECT g, v, hi,
-                       SUM(hi) OVER (PARTITION BY g ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         - hi AS below
-                     FROM grid),
-              jt AS (SELECT sum(CAST(b.h AS DOUBLE) * a.below
-                         + 0.5 * CAST(a.hi AS DOUBLE) * b.h) AS j_stat
-                     FROM cg a JOIN h b ON a.v = b.v AND a.g < b.g),
-              sz AS (SELECT g, CAST(sum(h) AS BIGINT) AS n
-                     FROM h GROUP BY 1),
-              szf AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-                        CAST(sum(n * n) AS BIGINT) AS sn2,
-                        sum(CAST(n AS DOUBLE) * (n - 1) * (2.0 * n + 5))
-                          AS sn_a,
-                        sum(CAST(n AS DOUBLE) * (n - 1) * (n - 2)) AS sn_b,
-                        sum(CAST(n AS DOUBLE) * (n - 1)) AS sn_c
-                      FROM sz),
-              tf AS (SELECT
-                       sum(CAST(t AS DOUBLE) * (t - 1) * (2.0 * t + 5))
-                         AS st_a,
-                       sum(CAST(t AS DOUBLE) * (t - 1) * (t - 2)) AS st_b,
-                       sum(CAST(t AS DOUBLE) * (t - 1)) AS st_c
-                     FROM (SELECT v, CAST(sum(h) AS BIGINT) AS t
-                           FROM h GROUP BY 1)),
-              fin AS (SELECT nn, j_stat,
-                        CAST(nn * nn - sn2 AS DOUBLE) / 4.0 AS e,
-                        (CAST(nn AS DOUBLE) * (nn - 1) * (2.0 * nn + 5)
-                          - sn_a - st_a) / 72.0
-                          + sn_b * st_b / (36.0 * CAST(nn AS DOUBLE)
-                            * (nn - 1) * (nn - 2))
-                          + sn_c * st_c / (8.0 * CAST(nn AS DOUBLE)
-                            * (nn - 1)) AS vr
-                      FROM jt, szf, tf)
-         SELECT nn AS n_total, j_stat, e AS j_expected,
-                CASE WHEN vr > 0
-                  THEN round((j_stat - e) / sqrt(vr), 6) END AS z
-         FROM fin""",
-    "q_msprt" ->
-      """WITH d AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS n,
-                      CAST(SUM(CASE WHEN event_type = 'purchase'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS k
-                    FROM events GROUP BY 1),
-              c AS (SELECT day,
-                      CAST(SUM(n) OVER w AS BIGINT) AS n_cum,
-                      CAST(SUM(k) OVER w AS BIGINT) AS k_cum
-                    FROM d
-                    WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED
-                      PRECEDING AND CURRENT ROW)),
-              l AS (SELECT day, n_cum, k_cum,
-                      CAST(n_cum AS DOUBLE) AS nd,
-                      CAST(k_cum AS DOUBLE) / CAST(n_cum AS DOUBLE)
-                        - 0.2 AS dev,
-                      0.2 * (1.0 - 0.2) AS s2, 0.05 * 0.05 AS t2
-                    FROM c),
-              m AS (SELECT day, n_cum, k_cum,
-                      sqrt(s2 / (s2 + nd * t2))
-                        * exp(nd * nd * t2 * dev * dev
-                          / (2.0 * s2 * (s2 + nd * t2))) AS lam
-                    FROM l),
-              p AS (SELECT day, n_cum, k_cum, lam,
-                      least(1.0, 1.0 / lam) AS praw
-                    FROM m)
-         SELECT day, n_cum, k_cum, round(lam, 6) AS lambda,
-                round(MIN(praw) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                  PRECEDING AND CURRENT ROW), 6) AS p_always_valid
-         FROM p""",
-    "q_runs_test" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS x
-                    FROM events GROUP BY 1),
-              s AS (SELECT day,
-                      CASE WHEN CAST(x AS DOUBLE) > mu THEN 1
-                           WHEN CAST(x AS DOUBLE) < mu THEN 0 END AS sg
-                    FROM (SELECT day, x,
-                            CAST(SUM(x) OVER () AS DOUBLE)
-                              / CAST(COUNT(*) OVER () AS DOUBLE) AS mu
-                          FROM c)),
-              f AS (SELECT sg,
-                      CASE WHEN LAG(sg) OVER (ORDER BY day) IS NULL
-                             OR LAG(sg) OVER (ORDER BY day) <> sg
-                        THEN 1 ELSE 0 END AS chg
-                    FROM s WHERE sg IS NOT NULL),
-              a AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
-                      CAST(sum(sg) AS BIGINT) AS n_above,
-                      CAST(count(*) - sum(sg) AS BIGINT) AS n_below,
-                      CAST(sum(chg) AS BIGINT) AS n_runs
-                    FROM f),
-              g AS (SELECT *, CAST(n_days AS DOUBLE) AS nn,
-                      2.0 * CAST(n_above AS DOUBLE)
-                        * CAST(n_below AS DOUBLE) AS p
-                    FROM a),
-              h AS (SELECT *, p * (p - nn) / (nn * nn * (nn - 1)) AS vr
-                    FROM g)
-         SELECT n_days, n_above, n_below, n_runs,
-                1.0 + p / nn AS runs_expected,
-                CASE WHEN vr > 0 THEN round((CAST(n_runs AS DOUBLE)
-                  - (1.0 + p / nn)) / sqrt(vr), 6) END AS z
-         FROM h""",
-    "q_friedman" ->
-      """WITH cells AS (SELECT date_trunc('day', ts) AS b,
-                          event_type AS t, avg(value) AS v
-                        FROM events WHERE value IS NOT NULL
-                        GROUP BY 1, 2),
-              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
-                     FROM cb),
-              comp AS (SELECT cb.b, cb.t, cb.v
-                       FROM cb
-                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
-                         ON cb.b = bc.b, kk
-                       WHERE bc.c = kk.k),
-              rk AS (SELECT b, t,
-                       CAST(rank() OVER (PARTITION BY b ORDER BY v)
-                         AS DOUBLE)
-                         + (CAST(count(*) OVER (PARTITION BY b, v)
-                           AS DOUBLE) - 1.0) / 2.0 AS r
-                     FROM comp),
-              pt AS (SELECT t, CAST(count(*) AS BIGINT) AS n_blocks,
-                       sum(r) AS rsum
-                     FROM rk GROUP BY 1),
-              ft AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS bb,
-                       sum(r * r) AS sr2
-                     FROM rk),
-              tt AS (SELECT bb AS n_blocks_used, kk.k AS k_treatments,
-                       CASE WHEN sr2 - CAST(bb AS DOUBLE)
-                           * CAST(kk.k AS DOUBLE) * (kk.k + 1) * (kk.k + 1)
-                           / 4.0 > 0
-                         THEN round((CAST(kk.k AS DOUBLE) - 1)
-                           * (srj2 - CAST(bb AS DOUBLE)
-                             * (CAST(bb AS DOUBLE) * CAST(kk.k AS DOUBLE)
-                               * (kk.k + 1) * (kk.k + 1) / 4.0))
-                           / (sr2 - CAST(bb AS DOUBLE)
-                             * CAST(kk.k AS DOUBLE) * (kk.k + 1)
-                             * (kk.k + 1) / 4.0), 6) END AS t1
-                     FROM (SELECT sum(rsum * rsum) AS srj2 FROM pt),
-                       ft, kk)
-         SELECT t AS event_type, n_blocks, rsum AS rank_sum,
-                rsum / CAST(n_blocks AS DOUBLE) AS mean_rank,
-                n_blocks_used, k_treatments, t1
-         FROM pt, tt""",
-    "q_effect_size" ->
-      """WITH x AS (SELECT event_type AS s, CAST(value AS DOUBLE) AS x
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL),
-              a AS (SELECT
-                      CAST(count(CASE WHEN s = 'click' THEN 1 END)
-                        AS BIGINT) AS n_a,
-                      CAST(count(CASE WHEN s = 'purchase' THEN 1 END)
-                        AS BIGINT) AS n_b,
-                      avg(CASE WHEN s = 'click' THEN x END) AS ma,
-                      avg(CASE WHEN s = 'purchase' THEN x END) AS mb,
-                      var_samp(CASE WHEN s = 'click' THEN x END) AS va,
-                      var_samp(CASE WHEN s = 'purchase' THEN x END) AS vb
-                    FROM x),
-              b AS (SELECT *, sqrt((CAST(n_a - 1 AS DOUBLE) * va
-                        + CAST(n_b - 1 AS DOUBLE) * vb)
-                      / CAST(n_a + n_b - 2 AS DOUBLE)) AS sp
-                    FROM a),
-              c AS (SELECT *, CASE WHEN sp > 0
-                      THEN (ma - mb) / sp END AS d
-                    FROM b)
-         SELECT n_a, n_b, round(ma - mb, 6) AS mean_diff,
-                round(sp, 6) AS sd_pooled, round(d, 6) AS cohens_d,
-                round(d * (1.0 - 3.0
-                  / (4.0 * CAST(n_a + n_b AS DOUBLE) - 9.0)), 6)
-                  AS hedges_g
-         FROM c""",
-    "q_page_trend" ->
-      """WITH cells AS (SELECT date_trunc('day', ts) AS b,
-                          CAST(floor(hour(ts) / 6) AS BIGINT) AS t,
-                          avg(value) AS v
-                        FROM events WHERE value IS NOT NULL
-                        GROUP BY 1, 2),
-              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
-                     FROM cb),
-              comp AS (SELECT cb.b, cb.t, cb.v
-                       FROM cb
-                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
-                         ON cb.b = bc.b, kk
-                       WHERE bc.c = kk.k),
-              rk AS (SELECT b, t,
-                       CAST(rank() OVER (PARTITION BY b ORDER BY v)
-                         AS DOUBLE)
-                         + (CAST(count(*) OVER (PARTITION BY b, v)
-                           AS DOUBLE) - 1.0) / 2.0 AS r,
-                       dense_rank() OVER (ORDER BY t) AS w
-                     FROM comp),
-              ft AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS bb,
-                       sum(CAST(w AS DOUBLE) * r) AS l
-                     FROM rk),
-              fin AS (SELECT bb AS n_blocks_used, kk.k AS k_treatments,
-                        l, CAST(bb AS DOUBLE) AS bd,
-                        CAST(kk.k AS DOUBLE) AS kd
-                      FROM ft, kk),
-              g AS (SELECT n_blocks_used, k_treatments, l,
-                      bd * kd * (kd + 1) * (kd + 1) / 4.0 AS e,
-                      bd * (kd * kd * kd - kd) * (kd * kd * kd - kd)
-                        / (144.0 * (kd - 1)) AS vr
-                    FROM fin)
-         SELECT n_blocks_used, k_treatments, l AS l_stat, e AS l_expected,
-                CASE WHEN vr > 0 THEN round((l - e) / sqrt(vr), 6) END AS z
-         FROM g""",
-    "q_control_rules" ->
-      """WITH c AS (SELECT date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS n
-                    FROM events GROUP BY 1),
-              z AS (SELECT day, n,
-                      CASE WHEN stddev_samp(n) OVER () > 0
-                        THEN (CAST(n AS DOUBLE) - avg(n) OVER ())
-                          / stddev_samp(n) OVER () END AS z
-                    FROM c),
-              w AS (SELECT day, n, z,
-                      COUNT(*) OVER w3 AS c3, COUNT(*) OVER w5 AS c5,
-                      COUNT(*) OVER w8 AS c8,
-                      SUM(CASE WHEN z > 2.0 THEN 1 ELSE 0 END) OVER w3
-                        AS hi2,
-                      SUM(CASE WHEN z < -2.0 THEN 1 ELSE 0 END) OVER w3
-                        AS lo2,
-                      SUM(CASE WHEN z > 1.0 THEN 1 ELSE 0 END) OVER w5
-                        AS hi1,
-                      SUM(CASE WHEN z < -1.0 THEN 1 ELSE 0 END) OVER w5
-                        AS lo1,
-                      SUM(CASE WHEN z > 0.0 THEN 1 ELSE 0 END) OVER w8
-                        AS hi0,
-                      SUM(CASE WHEN z < 0.0 THEN 1 ELSE 0 END) OVER w8
-                        AS lo0
-                    FROM z
-                    WINDOW
-                      w3 AS (ORDER BY day ROWS BETWEEN 2 PRECEDING
-                        AND CURRENT ROW),
-                      w5 AS (ORDER BY day ROWS BETWEEN 4 PRECEDING
-                        AND CURRENT ROW),
-                      w8 AS (ORDER BY day ROWS BETWEEN 7 PRECEDING
-                        AND CURRENT ROW))
-         SELECT day, n, round(z, 6) AS z,
-                abs(z) > 3.0 AS r1_beyond_3s,
-                c3 = 3 AND (hi2 >= 2 OR lo2 >= 2) AS r2_two_of_three_2s,
-                c5 = 5 AND (hi1 >= 4 OR lo1 >= 4) AS r3_four_of_five_1s,
-                c8 = 8 AND (hi0 = 8 OR lo0 = 8) AS r4_eight_one_side
-         FROM w""",
-    "q_brunner_munzel" ->
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x),
-              p AS (SELECT *,
-                      CAST(cuma + cumb - (ca + cb) AS DOUBLE)
-                        + CAST(ca + cb + 1 AS DOUBLE) / 2.0
-                        - (CAST(cuma - ca AS DOUBLE)
-                          + CAST(ca + 1 AS DOUBLE) / 2.0) AS da,
-                      CAST(cuma + cumb - (ca + cb) AS DOUBLE)
-                        + CAST(ca + cb + 1 AS DOUBLE) / 2.0
-                        - (CAST(cumb - cb AS DOUBLE)
-                          + CAST(cb + 1 AS DOUBLE) / 2.0) AS db
-                    FROM c),
-              a AS (SELECT CAST(max(na) AS BIGINT) AS n_a,
-                      CAST(max(nb) AS BIGINT) AS n_b,
-                      sum(CAST(ca AS DOUBLE) * da) AS sda,
-                      sum(CAST(cb AS DOUBLE) * db) AS sdb,
-                      sum(CAST(ca AS DOUBLE) * da * da) AS sda2,
-                      sum(CAST(cb AS DOUBLE) * db * db) AS sdb2
-                    FROM p),
-              b AS (SELECT *, CAST(n_a AS DOUBLE) AS nad,
-                      CAST(n_b AS DOUBLE) AS nbd,
-                      sda / CAST(n_a AS DOUBLE) AS ma,
-                      sdb / CAST(n_b AS DOUBLE) AS mb
-                    FROM a),
-              d AS (SELECT *,
-                      CASE WHEN n_a > 1 THEN (sda2 - nad * ma * ma)
-                        / (nad - 1) END AS va,
-                      CASE WHEN n_b > 1 THEN (sdb2 - nbd * mb * mb)
-                        / (nbd - 1) END AS vb
-                    FROM b),
-              e AS (SELECT *, nad * va + nbd * vb AS s2, mb / nad AS ph
-                    FROM d)
-         SELECT n_a, n_b, ph AS p_hat,
-                CASE WHEN s2 > 0 THEN round(nad * nbd * (ph - 0.5)
-                  / sqrt(s2), 6) END AS w_bm,
-                CASE WHEN s2 > 0 THEN round(s2 * s2
-                  / (nad * va * nad * va / (nad - 1)
-                    + nbd * vb * nbd * vb / (nbd - 1)), 6) END AS df
-         FROM e""",
-    "q_water_fill" ->
-      """WITH ps AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS supply
-                     FROM documents GROUP BY 1),
-              t AS (SELECT source, supply,
-                      SUM(supply) OVER () AS tot, COUNT(*) OVER () AS n,
-                      ROW_NUMBER() OVER (ORDER BY supply, source) AS k,
-                      COALESCE(SUM(supply) OVER (ORDER BY supply, source
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING), 0) AS cumb
-                    FROM ps),
-              l AS (SELECT *, (CAST(tot AS DOUBLE) * 0.5
-                        - CAST(cumb AS DOUBLE))
-                      / CAST(n - k + 1 AS DOUBLE) AS lamk
-                    FROM t),
-              lev AS (SELECT arg_min(lamk, k) AS lambda
-                      FROM l WHERE lamk <= CAST(supply AS DOUBLE)),
-              f AS (SELECT source, supply, lambda,
-                      CASE WHEN lambda IS NOT NULL
-                        THEN least(CAST(supply AS DOUBLE), lambda)
-                        ELSE CAST(supply AS DOUBLE) END AS alloc
-                    FROM l, lev)
-         SELECT source, supply, lambda AS water_level,
-                alloc AS allocation,
-                CASE WHEN supply > 0
-                  THEN alloc / CAST(supply AS DOUBLE) END AS share_kept
-         FROM f""",
-    "q_dunn" ->
-      """WITH b AS (SELECT event_type AS g,
-                      round(CAST(value AS DOUBLE), 6) AS s
-                    FROM events
-                    WHERE event_type IS NOT NULL AND value IS NOT NULL),
-              vc AS (SELECT s, g, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              pv AS (SELECT s, CAST(sum(c) AS BIGINT) AS cv
-                     FROM vc GROUP BY 1),
-              grid AS (SELECT s, cv,
-                         CAST(COALESCE(SUM(cv) OVER (ORDER BY s
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING), 0) AS DOUBLE)
-                           + CAST(cv + 1 AS DOUBLE) / 2.0 AS mid
-                       FROM pv),
-              pc AS (SELECT g, CAST(sum(c) AS BIGINT) AS n,
-                       sum(CAST(c AS DOUBLE) * mid)
-                         / CAST(sum(c) AS DOUBLE) AS rbar
-                     FROM vc JOIN grid USING (s) GROUP BY 1),
-              tot AS (SELECT CAST(sum(cv) AS BIGINT) AS nn,
-                        sum(CAST(cv AS DOUBLE) * cv * cv - cv) AS t3
-                      FROM grid),
-              pr AS (SELECT a.g AS group_a, b2.g AS group_b,
-                       a.n AS n_a, b2.n AS n_b,
-                       a.rbar AS mean_rank_a, b2.rbar AS mean_rank_b,
-                       nn, t3
-                     FROM pc a JOIN pc b2 ON a.g < b2.g, tot),
-              zz AS (SELECT *, CAST(nn AS DOUBLE)
-                         * (CAST(nn AS DOUBLE) + 1) / 12.0
-                         - t3 / (12.0 * (CAST(nn AS DOUBLE) - 1)) AS s2
-                     FROM pr),
-              z2 AS (SELECT group_a, group_b, n_a, n_b,
-                       mean_rank_a, mean_rank_b,
-                       CASE WHEN s2 > 0 THEN (mean_rank_a - mean_rank_b)
-                         / sqrt(s2 * (1.0 / CAST(n_a AS DOUBLE)
-                           + 1.0 / CAST(n_b AS DOUBLE))) END AS zv
-                     FROM zz),
-              ps AS (SELECT *, abs(zv) / sqrt(2.0) AS x,
-                       1.0 / (1.0 + 0.3275911
-                         * (abs(zv) / sqrt(2.0))) AS t
-                     FROM z2),
-              p2 AS (SELECT group_a, group_b, n_a, n_b,
-                       mean_rank_a, mean_rank_b, round(zv, 6) AS z,
-                       round(CASE WHEN zv IS NOT NULL THEN least(1.0,
-                         (((((1.061405429 * t - 1.453152027) * t)
-                           + 1.421413741) * t - 0.284496736) * t
-                           + 0.254829592) * t * exp(-x * x)) END, 6)
-                         AS p_value
-                     FROM ps),
-              ranked AS (SELECT *, CAST(count(*) OVER () AS BIGINT) AS m,
-                           CAST(row_number() OVER (ORDER BY p_value,
-                             group_a, group_b) AS INTEGER) AS bh_rank
-                         FROM p2)
-         SELECT group_a, group_b, n_a, n_b, mean_rank_a, mean_rank_b,
-                z, p_value, bh_rank,
-                round(least(min(CAST(m AS DOUBLE) * p_value / bh_rank)
-                    OVER (ORDER BY p_value, group_a, group_b
-                      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING),
-                  1.0), 6) AS p_adj,
-                round(least(min(CAST(m AS DOUBLE) * p_value / bh_rank)
-                    OVER (ORDER BY p_value, group_a, group_b
-                      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING),
-                  1.0), 6) <= 0.05 AS significant
-         FROM ranked""",
-    "q_seasonal_mk" ->
-      """WITH d AS (SELECT event_type AS k, date_trunc('day', ts) AS day,
-                      CAST(count(*) AS BIGINT) AS y
-                    FROM events GROUP BY 1, 2),
-              g AS (SELECT k, dayofweek(day) AS dow,
-                      datediff('day', DATE '1970-01-01',
-                        CAST(day AS DATE)) AS x, y
-                    FROM d),
-              sp AS (SELECT a.k AS k,
-                       CAST(SUM(CASE WHEN b.y > a.y THEN 1
-                                     WHEN b.y < a.y THEN -1
-                                     ELSE 0 END) AS BIGINT) AS s_stat
-                     FROM g a JOIN g b
-                       ON a.k = b.k AND a.dow = b.dow AND a.x < b.x
-                     GROUP BY 1),
-              vs AS (SELECT k, dow, CAST(count(*) AS BIGINT) AS n,
-                       CAST(count(*) AS DOUBLE) * (count(*) - 1)
-                         * (2.0 * count(*) + 5) AS base
-                     FROM g GROUP BY 1, 2),
-              tc AS (SELECT k, dow,
-                       sum(CAST(t AS DOUBLE) * (t - 1) * (2.0 * t + 5))
-                         AS tcorr
-                     FROM (SELECT k, dow, y, CAST(count(*) AS BIGINT) AS t
-                           FROM g GROUP BY 1, 2, 3)
-                     GROUP BY 1, 2),
-              vk AS (SELECT vs.k AS k, CAST(sum(n) AS BIGINT) AS n_days,
-                       sum(base - tcorr) / 18.0 AS var_s
-                     FROM vs JOIN tc ON vs.k = tc.k AND vs.dow = tc.dow
-                     GROUP BY 1)
-         SELECT sp.k AS event_type, n_days, s_stat, var_s,
-                round(CASE WHEN var_s > 0 THEN
-                  CASE WHEN s_stat > 0
-                         THEN CAST(s_stat - 1 AS DOUBLE) / sqrt(var_s)
-                       WHEN s_stat < 0
-                         THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(var_s)
-                       ELSE 0.0 END END, 6) AS z
-         FROM sp JOIN vk ON sp.k = vk.k""",
-    "q_log_rank" ->
-      """WITH fe AS (SELECT user_id, event_type AS first_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts, event_id) AS rn
-                FROM events) WHERE rn = 1),
-              le AS (SELECT user_id, event_type AS last_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1),
-              u AS (SELECT e.user_id,
-                      CAST(date_diff('day', date_trunc('day', min(e.ts)),
-                        date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
-                      max(l.last_type) = 'purchase' AS ev,
-                      CASE WHEN max(f.first_type) = 'signup'
-                        THEN 'signup_first' ELSE 'other' END AS grp
-                    FROM events e
-                    JOIN le l USING (user_id) JOIN fe f USING (user_id)
-                    GROUP BY e.user_id),
-              pd AS (SELECT dur AS t,
-                       CAST(SUM(CASE WHEN grp = 'signup_first'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-                       CAST(SUM(CASE WHEN grp = 'other'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS cb,
-                       CAST(SUM(CASE WHEN grp = 'signup_first' AND ev
-                         THEN 1 ELSE 0 END) AS BIGINT) AS da,
-                       CAST(SUM(CASE WHEN grp = 'other' AND ev
-                         THEN 1 ELSE 0 END) AS BIGINT) AS db
-                     FROM u GROUP BY 1),
-              rk AS (SELECT *,
-                       SUM(ca) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
-                         AND UNBOUNDED FOLLOWING) AS na,
-                       SUM(cb) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
-                         AND UNBOUNDED FOLLOWING) AS nb
-                     FROM pd),
-              x AS (SELECT *, na + nb AS n, da + db AS d,
-                      CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE) AS pa
-                    FROM rk),
-              y AS (SELECT *, CAST(d AS DOUBLE) * pa AS e,
-                      CASE WHEN n > 1 THEN CAST(d AS DOUBLE) * pa
-                        * (1.0 - pa) * CAST(n - d AS DOUBLE)
-                        / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS v
-                    FROM x),
-              f2 AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-                       CAST(sum(cb) AS BIGINT) AS n_b,
-                       CAST(sum(da) AS BIGINT) AS observed_a,
-                       round(sum(CASE WHEN d > 0 THEN e ELSE 0.0 END), 6)
-                         AS expected_a,
-                       sum(CASE WHEN d > 0 THEN CAST(da AS DOUBLE) - e
-                         ELSE 0.0 END) AS oe,
-                       sum(CASE WHEN d > 0 THEN v ELSE 0.0 END) AS sv
-                     FROM y)
-         SELECT n_a, n_b, observed_a, expected_a,
-                CASE WHEN sv > 0 THEN round(oe / sqrt(sv), 6) END AS z,
-                CASE WHEN sv > 0 THEN round(oe * oe / sv, 6) END AS chi2
-         FROM f2""",
-    "q_wilcoxon" ->
-      """WITH pu AS (SELECT user_id,
-                      avg(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                        THEN value END) AS x,
-                      avg(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-                        THEN value END) AS y
-                    FROM events WHERE value IS NOT NULL GROUP BY 1),
-              dd AS (SELECT d FROM (
-                       SELECT round(y - x, 6) AS d FROM pu
-                       WHERE x IS NOT NULL AND y IS NOT NULL)
-                     WHERE d <> 0.0),
-              pa AS (SELECT abs(d) AS a,
-                       CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END)
-                         AS BIGINT) AS cp,
-                       CAST(count(*) AS BIGINT) AS ct
-                     FROM dd GROUP BY 1),
-              rk AS (SELECT *,
-                       CAST(COALESCE(SUM(ct) OVER (ORDER BY a
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND 1 PRECEDING), 0) AS DOUBLE)
-                         + CAST(ct + 1 AS DOUBLE) / 2.0 AS mid
-                     FROM pa),
-              ag AS (SELECT CAST(sum(ct) AS BIGINT) AS n_pairs,
-                       CAST(sum(cp) AS BIGINT) AS n_positive,
-                       sum(CAST(cp AS DOUBLE) * mid) AS w_plus,
-                       sum(CAST(ct AS DOUBLE) * ct * ct - ct) AS t3
-                     FROM rk),
-              g AS (SELECT n_pairs, n_positive, w_plus, t3,
-                      CAST(n_pairs AS DOUBLE) AS nd
-                    FROM ag),
-              h AS (SELECT n_pairs, n_positive, w_plus,
-                      nd * (nd + 1) / 4.0 AS w_expected,
-                      nd * (nd + 1) * (2.0 * nd + 1) / 24.0
-                        - t3 / 48.0 AS vr
-                    FROM g)
-         SELECT n_pairs, n_positive, w_plus, w_expected,
-                CASE WHEN vr > 0
-                  THEN round((w_plus - w_expected) / sqrt(vr), 6) END AS z
-         FROM h""",
-    "q_cochran_q" ->
-      """WITH ut AS (SELECT DISTINCT user_id AS b, event_type AS t
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k FROM ut),
-              cs AS (SELECT CAST(sum(c) AS BIGINT) AS nn,
-                       CAST(sum(c * c) AS BIGINT) AS sc2
-                     FROM (SELECT t, CAST(count(*) AS BIGINT) AS c
-                           FROM ut GROUP BY 1)),
-              rs AS (SELECT CAST(count(*) AS BIGINT) AS n_blocks,
-                       CAST(sum(r * r) AS BIGINT) AS sr2
-                     FROM (SELECT b, CAST(count(*) AS BIGINT) AS r
-                           FROM ut GROUP BY 1))
-         SELECT n_blocks, kk.k AS k_treatments, nn AS n_successes,
-                CASE WHEN CAST(kk.k * nn - sr2 AS DOUBLE) > 0
-                  THEN round(CAST(kk.k - 1 AS DOUBLE)
-                    * CAST(kk.k * sc2 - nn * nn AS DOUBLE)
-                    / CAST(kk.k * nn - sr2 AS DOUBLE), 6) END AS q_stat
-         FROM cs, kk, rs""",
-    "q_mood_median" ->
-      """WITH x AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-                    FROM events
-                    WHERE event_type IS NOT NULL AND value IS NOT NULL),
-              md AS (SELECT quantile_cont(v, 0.5) AS m FROM x),
-              pg AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-                       CAST(SUM(CASE WHEN v > m THEN 1 ELSE 0 END)
-                         AS BIGINT) AS n_above
-                     FROM x, md GROUP BY 1),
-              t AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-                      CAST(sum(n_above) AS BIGINT) AS ta,
-                      CAST(count(*) AS BIGINT) AS k
-                    FROM pg),
-              sh AS (SELECT g, n, n_above,
-                       CAST(n AS DOUBLE) * CAST(ta AS DOUBLE)
-                         / CAST(nn AS DOUBLE) AS ea,
-                       CAST(n AS DOUBLE) * CAST(nn - ta AS DOUBLE)
-                         / CAST(nn AS DOUBLE) AS eb,
-                       k
-                     FROM pg, t),
-              ch AS (SELECT CAST(max(k) - 1 AS BIGINT) AS df_chi,
-                       round(CASE WHEN max(CASE WHEN ea <= 0 OR eb <= 0
-                           THEN 1 ELSE 0 END) = 0
-                         THEN sum((CAST(n_above AS DOUBLE) - ea)
-                             * (CAST(n_above AS DOUBLE) - ea) / ea
-                           + (CAST(n - n_above AS DOUBLE) - eb)
-                             * (CAST(n - n_above AS DOUBLE) - eb) / eb)
-                         END, 6) AS chi2
-                     FROM sh)
-         SELECT g AS event_type, n, n_above, ea AS expected_above,
-                df_chi, chi2
-         FROM sh, ch""",
-    "q_fleiss_kappa" ->
-      """WITH ev AS (SELECT user_id, event_type,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS rn
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              r AS (SELECT user_id AS i, event_type AS j
-                    FROM ev WHERE rn <= 5),
-              cells AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
-                        FROM r GROUP BY 1, 2),
-              pi AS (SELECT i, CAST(sum(nij) AS BIGINT) AS m,
-                       CAST(sum(nij * nij) AS BIGINT) AS s2i
-                     FROM cells GROUP BY 1),
-              ok AS (SELECT * FROM pi WHERE m = 5),
-              s2 AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
-                       CAST(sum(s2i) AS BIGINT) AS s2v
-                     FROM ok),
-              cj AS (SELECT c.j, CAST(sum(c.nij) AS BIGINT) AS cjv
-                     FROM cells c JOIN ok ON c.i = ok.i GROUP BY 1),
-              sc AS (SELECT CAST(count(*) AS BIGINT) AS k_categories,
-                       CAST(sum(cjv * cjv) AS BIGINT) AS sc2
-                     FROM cj)
-         SELECT n_items, CAST(5 AS BIGINT) AS n_raters, k_categories,
-                CAST(s2v - n_items * 5 AS DOUBLE)
-                  / CAST((n_items * 5) * 4 AS DOUBLE) AS p_bar,
-                CAST(sc2 AS DOUBLE)
-                  / CAST((n_items * 5) * (n_items * 5) AS DOUBLE) AS p_e,
-                CASE WHEN (n_items * 5) * (n_items * 5) <> sc2
-                  THEN CAST((s2v - n_items * 5) * (n_items * 5)
-                         - sc2 * 4 AS DOUBLE)
-                    / CAST(4 * ((n_items * 5) * (n_items * 5) - sc2)
-                        AS DOUBLE) END AS kappa
-         FROM s2, sc""",
-    "q_gwet_ac1" ->
-      """WITH ev AS (SELECT user_id, event_type,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS rn
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              r AS (SELECT user_id AS i, event_type AS j
-                    FROM ev WHERE rn <= 5),
-              cells AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
-                        FROM r GROUP BY 1, 2),
-              pi AS (SELECT i, CAST(sum(nij) AS BIGINT) AS m,
-                       CAST(sum(nij * nij) AS BIGINT) AS s2i
-                     FROM cells GROUP BY 1),
-              ok AS (SELECT * FROM pi WHERE m = 5),
-              s2 AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
-                       CAST(sum(s2i) AS BIGINT) AS s2v
-                     FROM ok),
-              cj AS (SELECT c.j, CAST(sum(c.nij) AS BIGINT) AS cjv
-                     FROM cells c JOIN ok ON c.i = ok.i GROUP BY 1),
-              sc AS (SELECT CAST(count(*) AS BIGINT) AS k_categories,
-                       CAST(sum(cjv * cjv) AS BIGINT) AS sc2
-                     FROM cj)
-         SELECT n_items, CAST(5 AS BIGINT) AS n_raters, k_categories,
-                CAST(s2v - n_items * 5 AS DOUBLE)
-                  / CAST((n_items * 5) * 4 AS DOUBLE) AS p_bar,
-                CAST((n_items * 5) * (n_items * 5) - sc2 AS DOUBLE)
-                  / CAST((k_categories - 1) * (n_items * 5)
-                      * (n_items * 5) AS DOUBLE) AS p_e_gamma,
-                CASE WHEN k_categories >= 2
-                       AND 4 * ((k_categories - 2) * (n_items * 5)
-                         * (n_items * 5) + sc2) <> 0
-                  THEN CAST((s2v - n_items * 5) * (k_categories - 1)
-                         * (n_items * 5)
-                         - ((n_items * 5) * (n_items * 5) - sc2) * 4
-                        AS DOUBLE)
-                    / CAST(4 * ((k_categories - 2) * (n_items * 5)
-                        * (n_items * 5) + sc2) AS DOUBLE) END AS ac1
-         FROM s2, sc""",
-    "q_icc" ->
-      """WITH pg AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-                       sum(CAST(value AS DOUBLE)) AS sy,
-                       sum(CAST(value AS DOUBLE) * CAST(value AS DOUBLE))
-                         AS sy2
-                     FROM events
-                     WHERE user_id IS NOT NULL AND value IS NOT NULL
-                     GROUP BY 1),
-              f AS (SELECT CAST(count(*) AS BIGINT) AS j,
-                      CAST(sum(n) AS BIGINT) AS nn,
-                      sum(sy) AS gsy,
-                      sum(sy * sy / CAST(n AS DOUBLE)) AS sb,
-                      sum(sy2 - sy * sy / CAST(n AS DOUBLE)) AS ssw,
-                      CAST(sum(n * n) AS BIGINT) AS sn2
-                    FROM pg)
-         SELECT j AS n_groups, nn AS n_total,
-                round(CASE WHEN j > 1
-                  THEN (sb - gsy * gsy / CAST(nn AS DOUBLE))
-                    / CAST(j - 1 AS DOUBLE) END, 6) AS msb,
-                round(CASE WHEN nn > j
-                  THEN ssw / CAST(nn - j AS DOUBLE) END, 6) AS msw,
-                round(CASE WHEN j > 1
-                  THEN (CAST(nn AS DOUBLE)
-                    - CAST(sn2 AS DOUBLE) / CAST(nn AS DOUBLE))
-                    / CAST(j - 1 AS DOUBLE) END, 6) AS k0,
-                round(CASE WHEN j > 1 AND nn > j AND
-                    abs((sb - gsy * gsy / CAST(nn AS DOUBLE))
-                        / CAST(j - 1 AS DOUBLE)
-                      + ((CAST(nn AS DOUBLE)
-                          - CAST(sn2 AS DOUBLE) / CAST(nn AS DOUBLE))
-                          / CAST(j - 1 AS DOUBLE) - 1.0)
-                        * (ssw / CAST(nn - j AS DOUBLE))) > 0.0
-                  THEN ((sb - gsy * gsy / CAST(nn AS DOUBLE))
-                        / CAST(j - 1 AS DOUBLE)
-                      - ssw / CAST(nn - j AS DOUBLE))
-                    / ((sb - gsy * gsy / CAST(nn AS DOUBLE))
-                        / CAST(j - 1 AS DOUBLE)
-                      + ((CAST(nn AS DOUBLE)
-                          - CAST(sn2 AS DOUBLE) / CAST(nn AS DOUBLE))
-                          / CAST(j - 1 AS DOUBLE) - 1.0)
-                        * (ssw / CAST(nn - j AS DOUBLE))) END, 6) AS icc
-         FROM f""",
-    "q_bartlett" ->
-      """WITH pg AS (SELECT event_type,
-                       CAST(count(*) AS BIGINT) AS n,
-                       sum(CAST(value AS DOUBLE)) AS sy,
-                       sum(CAST(value AS DOUBLE) * CAST(value AS DOUBLE))
-                         AS sy2
-                     FROM events
-                     WHERE event_type IS NOT NULL AND value IS NOT NULL
-                     GROUP BY 1),
-              pv AS (SELECT n,
-                       (sy2 - sy * sy / CAST(n AS DOUBLE))
-                         / CAST(n - 1 AS DOUBLE) AS s2
-                     FROM pg WHERE n >= 2),
-              pv2 AS (SELECT * FROM pv WHERE s2 > 0.0),
-              f AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                      CAST(sum(n) AS BIGINT) AS nn,
-                      sum(CAST(n - 1 AS DOUBLE) * s2) AS pool,
-                      sum(CAST(n - 1 AS DOUBLE) * ln(s2)) AS slog,
-                      sum(1.0 / CAST(n - 1 AS DOUBLE)) AS sinv
-                    FROM pv2)
-         SELECT k AS k_groups, nn AS n_total,
-                round(CASE WHEN k >= 2 AND nn > k
-                  THEN (CAST(nn - k AS DOUBLE)
-                      * ln(pool / CAST(nn - k AS DOUBLE)) - slog)
-                    / (1.0 + (sinv - 1.0 / CAST(nn - k AS DOUBLE))
-                        / (3.0 * CAST(k - 1 AS DOUBLE))) END, 6)
-                  AS bartlett_stat
-         FROM f""",
-    "q_g_test" ->
-      """WITH ev AS (SELECT event_type AS a,
-                       CAST(datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) % 7 AS VARCHAR) AS b
-                     FROM events WHERE event_type IS NOT NULL),
-              cont AS (SELECT a, b, CAST(count(*) AS BIGINT) AS o
-                       FROM ev GROUP BY 1, 2),
-              tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-                        CAST(count(DISTINCT a) AS BIGINT) AS r_levels,
-                        CAST(count(DISTINCT b) AS BIGINT) AS c_levels
-                      FROM cont),
-              ma AS (SELECT a, CAST(sum(o) AS BIGINT) AS ca
-                     FROM cont GROUP BY 1),
-              mb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb
-                     FROM cont GROUP BY 1),
-              obs AS (SELECT sum(od * ln(od / e)) AS lsum
-                      FROM (SELECT CAST(o AS DOUBLE) AS od,
-                              CAST(ca AS DOUBLE) * cb / n AS e
-                            FROM cont JOIN ma USING (a)
-                              JOIN mb USING (b), tot)),
-              stat AS (SELECT n, r_levels, c_levels,
-                         (r_levels - 1) * (c_levels - 1) AS dof,
-                         2.0 * lsum AS gv
-                       FROM tot, obs),
-              un AS (SELECT n, r_levels, c_levels, dof, gv,
-                       gv * 0.5 AS h, dof / 2 AS m,
-                       1.0 AS t0,
-                       t0 * h / 1.0 AS t1,
-                       t1 * h / 2.0 AS t2,
-                       t2 * h / 3.0 AS t3,
-                       t3 * h / 4.0 AS t4,
-                       t4 * h / 5.0 AS t5,
-                       t5 * h / 6.0 AS t6,
-                       t6 * h / 7.0 AS t7,
-                       t7 * h / 8.0 AS t8,
-                       t8 * h / 9.0 AS t9,
-                       t9 * h / 10.0 AS t10,
-                       t10 * h / 11.0 AS t11,
-                       t11 * h / 12.0 AS t12,
-                       t12 * h / 13.0 AS t13,
-                       t13 * h / 14.0 AS t14,
-                       t14 * h / 15.0 AS t15,
-                       t15 * h / 16.0 AS t16,
-                       t16 * h / 17.0 AS t17,
-                       t17 * h / 18.0 AS t18,
-                       t18 * h / 19.0 AS t19
-                     FROM stat)
-         SELECT n, r_levels, c_levels, dof, round(gv, 6) AS g_stat,
-                round(CASE WHEN dof % 2 = 0 AND dof >= 2 AND dof <= 40
-                    AND gv IS NOT NULL
-                  THEN least(1.0, exp(-h) * (t0 + CASE WHEN 1.0 < m THEN t1 ELSE 0.0 END + CASE WHEN 2.0 < m THEN t2 ELSE 0.0 END + CASE WHEN 3.0 < m THEN t3 ELSE 0.0 END + CASE WHEN 4.0 < m THEN t4 ELSE 0.0 END + CASE WHEN 5.0 < m THEN t5 ELSE 0.0 END + CASE WHEN 6.0 < m THEN t6 ELSE 0.0 END + CASE WHEN 7.0 < m THEN t7 ELSE 0.0 END + CASE WHEN 8.0 < m THEN t8 ELSE 0.0 END + CASE WHEN 9.0 < m THEN t9 ELSE 0.0 END + CASE WHEN 10.0 < m THEN t10 ELSE 0.0 END + CASE WHEN 11.0 < m THEN t11 ELSE 0.0 END + CASE WHEN 12.0 < m THEN t12 ELSE 0.0 END + CASE WHEN 13.0 < m THEN t13 ELSE 0.0 END + CASE WHEN 14.0 < m THEN t14 ELSE 0.0 END + CASE WHEN 15.0 < m THEN t15 ELSE 0.0 END + CASE WHEN 16.0 < m THEN t16 ELSE 0.0 END + CASE WHEN 17.0 < m THEN t17 ELSE 0.0 END + CASE WHEN 18.0 < m THEN t18 ELSE 0.0 END + CASE WHEN 19.0 < m THEN t19 ELSE 0.0 END)) END, 6) AS p_value
-         FROM un""",
-    "q_fdr_by" ->
-      """WITH b AS (SELECT source AS g,
-                           n_chars + CASE WHEN source IN
-                             ('src0','src1','src2','src3','src4')
-                             THEN 150 ELSE 0 END AS v
-                    FROM documents WHERE n_chars IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid),
-              ks AS (SELECT g AS source,
-                            CAST(max(ng) AS BIGINT) AS n_group,
-                            CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                            round(max(CASE WHEN nt > ng THEN
-                              abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                                  - CAST(cumt - cumg AS DOUBLE)
-                                    / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
-                     FROM cum GROUP BY 1),
-              pv AS (SELECT source, n_group, n_rest, ks,
-                            least(1.0, round(2.0 * exp(-2.0 * ks * ks
-                              * (CAST(n_group AS DOUBLE) * CAST(n_rest AS DOUBLE)
-                                 / CAST(n_group + n_rest AS DOUBLE))), 6))
-                              AS p_value
-                     FROM ks),
-              ranked AS (SELECT *,
-                                CAST(count(*) OVER () AS BIGINT) AS m,
-                                CAST(row_number() OVER
-                                  (ORDER BY p_value, source) AS INTEGER)
-                                  AS by_rank
-                         FROM pv),
-              withc AS (SELECT *,
-                               sum(1.0 / by_rank)
-                                 OVER (ORDER BY p_value, source
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                            AND UNBOUNDED FOLLOWING) AS cm
-                        FROM ranked)
-         SELECT source, n_group, n_rest, ks, p_value, by_rank,
-                round(least(min(cm * CAST(m AS DOUBLE) * p_value / by_rank)
-                        OVER (ORDER BY p_value, source
-                              ROWS BETWEEN CURRENT ROW
-                                       AND UNBOUNDED FOLLOWING),
-                      1.0), 6) AS p_adj,
-                round(least(min(cm * CAST(m AS DOUBLE) * p_value / by_rank)
-                        OVER (ORDER BY p_value, source
-                              ROWS BETWEEN CURRENT ROW
-                                       AND UNBOUNDED FOLLOWING),
-                      1.0), 6) <= 0.05 AS significant
-         FROM withc""",
-    "q_cmh" ->
-      """WITH ev AS (SELECT
-                       CAST(datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) % 7 AS VARCHAR) AS s,
-                       CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS e,
-                       CASE WHEN value > 50.0 THEN 1 ELSE 0 END AS o
-                     FROM events
-                     WHERE event_type IS NOT NULL AND value IS NOT NULL),
-              cells AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-                          CAST(sum(CASE WHEN e = 1 AND o = 1
-                              THEN 1 ELSE 0 END) AS BIGINT) AS a,
-                          CAST(sum(CASE WHEN e = 1
-                              THEN 1 ELSE 0 END) AS BIGINT) AS r1,
-                          CAST(sum(CASE WHEN o = 1
-                              THEN 1 ELSE 0 END) AS BIGINT) AS c1
-                        FROM ev GROUP BY 1 HAVING count(*) >= 2),
-              folded AS (SELECT CAST(count(*) AS BIGINT) AS n_strata,
-                           CAST(sum(a) AS BIGINT) AS sum_a,
-                           sum(CAST(r1 AS DOUBLE) * c1
-                             / CAST(n AS DOUBLE)) AS se,
-                           sum(((CAST(r1 AS DOUBLE) * (n - r1)) * c1)
-                             * (n - c1)
-                             / ((CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-                               * (CAST(n AS DOUBLE) - 1.0))) AS sv
-                         FROM cells),
-              chi AS (SELECT *,
-                        CASE WHEN sv > 0 THEN
-                          greatest(abs(CAST(sum_a AS DOUBLE) - se) - 0.5, 0.0)
-                            * greatest(abs(CAST(sum_a AS DOUBLE) - se) - 0.5, 0.0)
-                            / sv END AS c2
-                      FROM folded),
-              ps AS (SELECT *, sqrt(c2) / sqrt(2.0) AS x,
-                       1.0 / (1.0 + 0.3275911 * (sqrt(c2) / sqrt(2.0))) AS t
-                     FROM chi)
-         SELECT n_strata, sum_a, round(se, 6) AS sum_expected,
-                round(sv, 6) AS sum_var, round(c2, 6) AS chi2_cmh,
-                round(CASE WHEN c2 IS NOT NULL THEN least(1.0,
-                  (((((1.061405429 * t - 1.453152027) * t)
-                    + 1.421413741) * t - 0.284496736) * t
-                    + 0.254829592) * t * exp(-x * x)) END, 6) AS p_value
-         FROM ps""",
-    "q_cronbach_alpha" ->
-      """WITH ev AS (SELECT user_id, value,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS rn
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              cells AS (SELECT user_id AS s, CAST(rn AS VARCHAR) AS i,
-                          CAST(value AS DOUBLE) AS x
-                        FROM ev WHERE rn <= 5 AND value IS NOT NULL),
-              subj AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt,
-                         CAST(count(DISTINCT i) AS BIGINT) AS di,
-                         sum(x) AS tot
-                       FROM cells GROUP BY 1),
-              ok AS (SELECT * FROM subj WHERE cnt = 5 AND di = 5),
-              okc AS (SELECT c.i, c.x FROM cells c JOIN ok ON c.s = ok.s),
-              item AS (SELECT i, CAST(count(*) AS BIGINT) AS n,
-                         sum(x) AS sx, sum(x * x) AS sxx
-                       FROM okc GROUP BY 1),
-              iv AS (SELECT sum(CASE WHEN n > 1
-                         THEN (sxx - sx * sx / CAST(n AS DOUBLE))
-                           / (CAST(n AS DOUBLE) - 1.0) END) AS siv
-                     FROM item),
-              tv AS (SELECT CAST(count(*) AS BIGINT) AS n_subjects,
-                       sum(tot) AS st, sum(tot * tot) AS stt
-                     FROM ok),
-              tvv AS (SELECT n_subjects,
-                        CASE WHEN n_subjects > 1
-                          THEN (stt - st * st / CAST(n_subjects AS DOUBLE))
-                            / (CAST(n_subjects AS DOUBLE) - 1.0) END AS vt
-                      FROM tv)
-         SELECT n_subjects, CAST(5 AS BIGINT) AS k_items,
-                round(siv, 6) AS sum_item_var,
-                round(vt, 6) AS total_var,
-                round(CASE WHEN vt > 0
-                  THEN 5.0 / (5.0 - 1.0) * (1.0 - siv / vt) END, 6) AS alpha
-         FROM iv, tvv""",
-    "q_weighted_kappa" ->
-      """WITH per AS (SELECT user_id,
-                       least(CAST(sum(CASE WHEN event_id % 2 = 0
-                           THEN 1 ELSE 0 END) AS BIGINT), 4) AS a,
-                       least(CAST(sum(CASE WHEN event_id % 2 = 1
-                           THEN 1 ELSE 0 END) AS BIGINT), 4) AS b
-                     FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-              cont AS (SELECT a, b, CAST(count(*) AS BIGINT) AS cnt
-                       FROM per GROUP BY 1, 2),
-              tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
-                        CAST(sum(cnt * abs(a - b)) AS BIGINT) AS dlin,
-                        CAST(sum(cnt * (a - b) * (a - b)) AS BIGINT) AS dquad
-                      FROM cont),
-              ma AS (SELECT a, CAST(sum(cnt) AS BIGINT) AS ca
-                     FROM cont GROUP BY 1),
-              mb AS (SELECT b, CAST(sum(cnt) AS BIGINT) AS cb
-                     FROM cont GROUP BY 1),
-              ew AS (SELECT sum(CAST(ca AS DOUBLE) * cb * abs(a - b)) AS elin,
-                       sum(CAST(ca AS DOUBLE) * cb
-                         * ((a - b) * (a - b))) AS equad
-                     FROM ma, mb)
-         SELECT n,
-                round(CASE WHEN elin > 0
-                  THEN 1.0 - CAST(dlin AS DOUBLE) * n / elin END, 6)
-                  AS kappa_linear,
-                round(CASE WHEN equad > 0
-                  THEN 1.0 - CAST(dquad AS DOUBLE) * n / equad END, 6)
-                  AS kappa_quadratic
-         FROM tot, ew""",
-    "q_chi_square" ->
-      """WITH ev AS (SELECT event_type AS a,
-                       CAST(datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) % 7 AS VARCHAR) AS b
-                     FROM events WHERE event_type IS NOT NULL),
-              cont AS (SELECT a, b, CAST(count(*) AS BIGINT) AS o
-                       FROM ev GROUP BY 1, 2),
-              tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-                        CAST(count(DISTINCT a) AS BIGINT) AS r_levels,
-                        CAST(count(DISTINCT b) AS BIGINT) AS c_levels
-                      FROM cont),
-              ma AS (SELECT a, CAST(sum(o) AS BIGINT) AS ca
-                     FROM cont GROUP BY 1),
-              mb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb
-                     FROM cont GROUP BY 1),
-              obs AS (SELECT sum((od - e) * (od - e) / e) AS chi_obs,
-                        sum(e) AS e_obs
-                      FROM (SELECT CAST(o AS DOUBLE) AS od,
-                              CAST(ca AS DOUBLE) * cb / n AS e
-                            FROM cont JOIN ma USING (a)
-                              JOIN mb USING (b), tot)),
-              stat AS (SELECT n, r_levels, c_levels,
-                         (r_levels - 1) * (c_levels - 1) AS dof,
-                         chi_obs + (CAST(n AS DOUBLE) - e_obs) AS c2
-                       FROM tot, obs),
-              un AS (SELECT n, r_levels, c_levels, dof, c2,
-                       c2 * 0.5 AS h, dof / 2 AS m,
-                       1.0 AS t0,
-                       t0 * h / 1.0 AS t1,
-                       t1 * h / 2.0 AS t2,
-                       t2 * h / 3.0 AS t3,
-                       t3 * h / 4.0 AS t4,
-                       t4 * h / 5.0 AS t5,
-                       t5 * h / 6.0 AS t6,
-                       t6 * h / 7.0 AS t7,
-                       t7 * h / 8.0 AS t8,
-                       t8 * h / 9.0 AS t9,
-                       t9 * h / 10.0 AS t10,
-                       t10 * h / 11.0 AS t11,
-                       t11 * h / 12.0 AS t12,
-                       t12 * h / 13.0 AS t13,
-                       t13 * h / 14.0 AS t14,
-                       t14 * h / 15.0 AS t15,
-                       t15 * h / 16.0 AS t16,
-                       t16 * h / 17.0 AS t17,
-                       t17 * h / 18.0 AS t18,
-                       t18 * h / 19.0 AS t19
-                     FROM stat)
-         SELECT n, r_levels, c_levels, dof, round(c2, 6) AS chi2,
-                round(CASE WHEN dof % 2 = 0 AND dof >= 2 AND dof <= 40
-                    AND c2 IS NOT NULL
-                  THEN least(1.0, exp(-h) * (t0 + CASE WHEN 1.0 < m THEN t1 ELSE 0.0 END + CASE WHEN 2.0 < m THEN t2 ELSE 0.0 END + CASE WHEN 3.0 < m THEN t3 ELSE 0.0 END + CASE WHEN 4.0 < m THEN t4 ELSE 0.0 END + CASE WHEN 5.0 < m THEN t5 ELSE 0.0 END + CASE WHEN 6.0 < m THEN t6 ELSE 0.0 END + CASE WHEN 7.0 < m THEN t7 ELSE 0.0 END + CASE WHEN 8.0 < m THEN t8 ELSE 0.0 END + CASE WHEN 9.0 < m THEN t9 ELSE 0.0 END + CASE WHEN 10.0 < m THEN t10 ELSE 0.0 END + CASE WHEN 11.0 < m THEN t11 ELSE 0.0 END + CASE WHEN 12.0 < m THEN t12 ELSE 0.0 END + CASE WHEN 13.0 < m THEN t13 ELSE 0.0 END + CASE WHEN 14.0 < m THEN t14 ELSE 0.0 END + CASE WHEN 15.0 < m THEN t15 ELSE 0.0 END + CASE WHEN 16.0 < m THEN t16 ELSE 0.0 END + CASE WHEN 17.0 < m THEN t17 ELSE 0.0 END + CASE WHEN 18.0 < m THEN t18 ELSE 0.0 END + CASE WHEN 19.0 < m THEN t19 ELSE 0.0 END)) END, 6) AS p_value
-         FROM un""",
-    "q_dawid_skene" ->
-      """WITH ev AS (SELECT user_id, event_type,
-                       CAST(event_id % 3 AS BIGINT) AS rater,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS rn
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              r AS (SELECT user_id AS i, rater AS rr, event_type AS j,
-                      CAST(rn AS BIGINT) AS o
-                    FROM ev WHERE rn <= 5),
-              cls AS (SELECT DISTINCT j AS c FROM r),
-              kk AS (SELECT CAST(count(*) AS BIGINT) AS k FROM cls),
-              rt AS (SELECT DISTINCT rr FROM r),
-              l0 AS (SELECT i, j AS cur FROM (
-                       SELECT i, j, row_number() OVER (PARTITION BY i
-                           ORDER BY count(*) DESC, j ASC) AS rn
-                       FROM r GROUP BY i, j) WHERE rn = 1),
-              nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM l0),
-              j1 AS (SELECT r.i, r.rr, r.j, r.o, l0.cur
-                     FROM r JOIN l0 USING (i)),
-              c1 AS (SELECT rr, cur, j, CAST(count(*) AS BIGINT) AS cnt
-                     FROM j1 GROUP BY 1, 2, 3),
-              d1 AS (SELECT rr, cur, CAST(sum(cnt) AS BIGINT) AS den
-                     FROM c1 GROUP BY 1, 2),
-              g1 AS (SELECT rt.rr, a.c AS cur, b.c AS j,
-                       CAST(floor((coalesce(c1.cnt, 0) + 1) * 1000000
-                         / (coalesce(d1.den, 0) + kk.k)) AS BIGINT)
-                         AS theta
-                     FROM rt CROSS JOIN cls a CROSS JOIN cls b
-                       CROSS JOIN kk
-                     LEFT JOIN c1 ON c1.rr = rt.rr AND c1.cur = a.c
-                       AND c1.j = b.c
-                     LEFT JOIN d1 ON d1.rr = rt.rr AND d1.cur = a.c),
-              p1 AS (SELECT cls.c,
-                       CAST(floor((coalesce(pc.pc, 0) + 1) * 1000000
-                         / (nn.n + kk.k)) AS BIGINT) AS p
-                     FROM cls CROSS JOIN nn CROSS JOIN kk
-                     LEFT JOIN (SELECT cur AS c,
-                         CAST(count(*) AS BIGINT) AS pc
-                       FROM l0 GROUP BY 1) pc ON pc.c = cls.c),
-              s1 AS (SELECT i, c,
-                       max(CASE WHEN o = 1 THEN theta END) AS f1,
-                       max(CASE WHEN o = 2 THEN theta END) AS f2,
-                       max(CASE WHEN o = 3 THEN theta END) AS f3,
-                       max(CASE WHEN o = 4 THEN theta END) AS f4,
-                       max(CASE WHEN o = 5 THEN theta END) AS f5
-                     FROM (SELECT r.i, cls.c, r.o, g1.theta
-                           FROM r CROSS JOIN cls
-                           JOIN g1 ON g1.rr = r.rr AND g1.cur = cls.c
-                             AND g1.j = r.j)
-                     GROUP BY 1, 2),
-              l1 AS (SELECT i, c AS cur FROM (
-                       SELECT s1.i, s1.c,
-                         row_number() OVER (PARTITION BY s1.i ORDER BY
-                           CAST(p1.p AS HUGEINT)
-                           * CAST(coalesce(f1, 1) AS HUGEINT)
-                           * CAST(coalesce(f2, 1) AS HUGEINT)
-                           * CAST(coalesce(f3, 1) AS HUGEINT)
-                           * CAST(coalesce(f4, 1) AS HUGEINT)
-                           * CAST(coalesce(f5, 1) AS HUGEINT) DESC,
-                           s1.c ASC) AS rn
-                       FROM s1 JOIN p1 ON p1.c = s1.c) WHERE rn = 1),
-              j2 AS (SELECT r.i, r.rr, r.j, r.o, l1.cur
-                     FROM r JOIN l1 USING (i)),
-              c2 AS (SELECT rr, cur, j, CAST(count(*) AS BIGINT) AS cnt
-                     FROM j2 GROUP BY 1, 2, 3),
-              d2 AS (SELECT rr, cur, CAST(sum(cnt) AS BIGINT) AS den
-                     FROM c2 GROUP BY 1, 2),
-              g2 AS (SELECT rt.rr, a.c AS cur, b.c AS j,
-                       CAST(floor((coalesce(c2.cnt, 0) + 1) * 1000000
-                         / (coalesce(d2.den, 0) + kk.k)) AS BIGINT)
-                         AS theta
-                     FROM rt CROSS JOIN cls a CROSS JOIN cls b
-                       CROSS JOIN kk
-                     LEFT JOIN c2 ON c2.rr = rt.rr AND c2.cur = a.c
-                       AND c2.j = b.c
-                     LEFT JOIN d2 ON d2.rr = rt.rr AND d2.cur = a.c),
-              p2 AS (SELECT cls.c,
-                       CAST(floor((coalesce(pc.pc, 0) + 1) * 1000000
-                         / (nn.n + kk.k)) AS BIGINT) AS p
-                     FROM cls CROSS JOIN nn CROSS JOIN kk
-                     LEFT JOIN (SELECT cur AS c,
-                         CAST(count(*) AS BIGINT) AS pc
-                       FROM l1 GROUP BY 1) pc ON pc.c = cls.c),
-              s2 AS (SELECT i, c,
-                       max(CASE WHEN o = 1 THEN theta END) AS f1,
-                       max(CASE WHEN o = 2 THEN theta END) AS f2,
-                       max(CASE WHEN o = 3 THEN theta END) AS f3,
-                       max(CASE WHEN o = 4 THEN theta END) AS f4,
-                       max(CASE WHEN o = 5 THEN theta END) AS f5
-                     FROM (SELECT r.i, cls.c, r.o, g2.theta
-                           FROM r CROSS JOIN cls
-                           JOIN g2 ON g2.rr = r.rr AND g2.cur = cls.c
-                             AND g2.j = r.j)
-                     GROUP BY 1, 2),
-              l2 AS (SELECT i, c AS cur FROM (
-                       SELECT s2.i, s2.c,
-                         row_number() OVER (PARTITION BY s2.i ORDER BY
-                           CAST(p2.p AS HUGEINT)
-                           * CAST(coalesce(f1, 1) AS HUGEINT)
-                           * CAST(coalesce(f2, 1) AS HUGEINT)
-                           * CAST(coalesce(f3, 1) AS HUGEINT)
-                           * CAST(coalesce(f4, 1) AS HUGEINT)
-                           * CAST(coalesce(f5, 1) AS HUGEINT) DESC,
-                           s2.c ASC) AS rn
-                       FROM s2 JOIN p2 ON p2.c = s2.c) WHERE rn = 1)
-         SELECT l0.i AS user_id, l0.cur AS majority_label,
-                l2.cur AS ds_label, l0.cur <> l2.cur AS changed
-         FROM l0 JOIN l2 USING (i)""",
-    "q_krippendorff" ->
-      """WITH cells AS (SELECT user_id AS i, event_type AS c,
-                          CAST(count(*) AS BIGINT) AS nic
-                        FROM events
-                        WHERE user_id IS NOT NULL
-                          AND event_type IS NOT NULL
-                        GROUP BY 1, 2),
-              pi AS (SELECT i, CAST(sum(nic) AS BIGINT) AS mi
-                     FROM cells GROUP BY 1
-                     HAVING CAST(sum(nic) AS BIGINT) >= 2),
-              j AS (SELECT cells.i, cells.c, cells.nic, pi.mi
-                    FROM cells JOIN pi USING (i)),
-              oan AS (SELECT CAST(sum(nic) AS BIGINT) AS n,
-                        sum(CAST(nic AS DOUBLE) * CAST(nic - 1 AS DOUBLE)
-                          / CAST(mi - 1 AS DOUBLE)) AS o
-                      FROM j),
-              nc AS (SELECT c, CAST(sum(nic) AS BIGINT) AS ncv
-                     FROM j GROUP BY 1),
-              n2 AS (SELECT CAST(count(*) AS BIGINT) AS k_categories,
-                       CAST(sum(ncv * ncv) AS BIGINT) AS snc2
-                     FROM nc),
-              it AS (SELECT CAST(count(*) AS BIGINT) AS n_items FROM pi)
-         SELECT n_items, k_categories, n AS n_pairable,
-                round(o, 6) AS observed_coincidence,
-                round(CASE WHEN n * n <> snc2
-                  THEN 1.0 - CAST(n - 1 AS DOUBLE)
-                    * (CAST(n AS DOUBLE) - o)
-                    / CAST(n * n - snc2 AS DOUBLE) END, 6) AS alpha
-         FROM oan, n2, it""",
-    "q_kendall_w" ->
-      """WITH cells AS (SELECT event_type AS r, CAST(ts AS DATE) AS it,
-                          CAST(count(*) AS DOUBLE) AS v
-                        FROM events
-                        WHERE event_type IS NOT NULL AND ts IS NOT NULL
-                        GROUP BY 1, 2),
-              m AS (SELECT CAST(count(DISTINCT r) AS BIGINT) AS mv
-                    FROM cells),
-              comp AS (SELECT c.r, c.it, c.v
-                       FROM cells c
-                       JOIN (SELECT it, CAST(count(*) AS BIGINT) AS cnt
-                             FROM cells GROUP BY 1) g ON c.it = g.it, m
-                       WHERE g.cnt = m.mv),
-              ranked AS (SELECT r, it, v,
-                           CAST(rank() OVER (PARTITION BY r ORDER BY v)
-                             AS DOUBLE)
-                           + (CAST(count(*) OVER (PARTITION BY r, v)
-                               AS DOUBLE) - 1) / 2.0 AS rk
-                         FROM comp),
-              shape AS (SELECT CAST(count(DISTINCT it) AS BIGINT) AS nn,
-                          CAST(count(DISTINCT r) AS BIGINT) AS mm
-                        FROM ranked),
-              rs AS (SELECT it, sum(rk) AS ri FROM ranked GROUP BY 1),
-              s AS (SELECT sum((ri - CAST(mm AS DOUBLE)
-                        * CAST(nn + 1 AS DOUBLE) / 2.0)
-                      * (ri - CAST(mm AS DOUBLE)
-                        * CAST(nn + 1 AS DOUBLE) / 2.0)) AS sv
-                    FROM rs, shape),
-              t AS (SELECT sum(tg * tg * tg - tg) AS tt
-                    FROM (SELECT r, v, CAST(count(*) AS BIGINT) AS tg
-                          FROM ranked GROUP BY 1, 2))
-         SELECT nn AS n_items, mm AS n_raters, sv AS s_stat,
-                CASE WHEN CAST(mm * mm * (nn * nn * nn - nn) - mm * tt
-                    AS DOUBLE) > 0
-                  THEN 12.0 * sv
-                    / CAST(mm * mm * (nn * nn * nn - nn) - mm * tt
-                        AS DOUBLE) END AS w
-         FROM shape, s, t""",
-    "q_majority_label" ->
-      """WITH cells AS (SELECT user_id, event_type,
-                          CAST(count(*) AS BIGINT) AS votes
-                        FROM events
-                        WHERE user_id IS NOT NULL
-                          AND event_type IS NOT NULL
-                        GROUP BY 1, 2),
-              w AS (SELECT user_id, event_type, votes,
-                      CAST(sum(votes) OVER (PARTITION BY user_id)
-                        AS BIGINT) AS n_ratings,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY votes DESC,
-                                                  event_type ASC) AS rn
-                    FROM cells)
-         SELECT user_id, event_type AS majority_label, votes, n_ratings,
-                CAST(votes AS DOUBLE) / CAST(n_ratings AS DOUBLE)
-                  AS support
-         FROM w WHERE rn = 1""",
-    "q_levene" ->
-      """WITH base AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-                       FROM events
-                       WHERE event_type IS NOT NULL
-                         AND value IS NOT NULL),
-              c AS (SELECT g, avg(v) AS cm FROM base GROUP BY 1),
-              z AS (SELECT base.g, abs(base.v - c.cm) AS zv
-                    FROM base JOIN c USING (g)),
-              pg AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-                       sum(zv) AS sz, sum(zv * zv) AS sz2
-                     FROM z GROUP BY 1),
-              fit AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                        CAST(sum(n) AS BIGINT) AS nn,
-                        sum(sz) AS gsz,
-                        sum(CAST(n AS DOUBLE) * (sz / CAST(n AS DOUBLE))
-                          * (sz / CAST(n AS DOUBLE))) AS nzb2,
-                        sum(sz2 - CAST(n AS DOUBLE)
-                          * (sz / CAST(n AS DOUBLE))
-                          * (sz / CAST(n AS DOUBLE))) AS withinv
-                      FROM pg),
-              f2 AS (SELECT k AS k_groups, nn AS n_total,
-                       round(CASE WHEN withinv > 0 AND k > 1
-                         THEN CAST(nn - k AS DOUBLE)
-                           / CAST(k - 1 AS DOUBLE)
-                           * (nzb2 - CAST(nn AS DOUBLE)
-                             * (gsz / CAST(nn AS DOUBLE))
-                             * (gsz / CAST(nn AS DOUBLE)))
-                           / withinv END, 6) AS w_stat
-                     FROM fit)
-         SELECT g AS event_type, n,
-                round(sz / CAST(n AS DOUBLE), 6) AS z_mean,
-                k_groups, n_total, w_stat
-         FROM pg, f2""",
-    // Exact integer pair masses over the bounded cell grid — the
-    // kendallTauB oracle pattern with gamma/Somers' closing divisions.
-    "q_gk_gamma" ->
-      """WITH base AS (SELECT CAST(datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) % 7 AS BIGINT) AS x,
-                       CAST(floor(value / 50.0) AS BIGINT) AS y
-                       FROM events
-                       WHERE ts IS NOT NULL AND value IS NOT NULL),
-              cells AS (SELECT x, y, CAST(count(*) AS BIGINT) AS c
-                        FROM base GROUP BY 1, 2),
-              pairs AS (SELECT
-                  COALESCE(SUM(CASE WHEN b.y > a.y
-                    THEN CAST(a.c AS DOUBLE) * b.c ELSE 0.0 END), 0.0) AS cc,
-                  COALESCE(SUM(CASE WHEN b.y < a.y
-                    THEN CAST(a.c AS DOUBLE) * b.c ELSE 0.0 END), 0.0) AS dd
-                FROM cells a JOIN cells b ON b.x > a.x),
-              marg AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cells),
-              tx AS (SELECT SUM(CAST(t AS DOUBLE) * t) AS sx2
-                     FROM (SELECT SUM(c) AS t FROM cells GROUP BY x))
-         SELECT n, CAST(cc AS BIGINT) AS concordant,
-                CAST(dd AS BIGINT) AS discordant,
-                round(CASE WHEN cc + dd > 0
-                  THEN (cc - dd) / (cc + dd) END, 6) AS gamma,
-                round(CASE WHEN n > 1
-                    AND (CAST(n AS DOUBLE) * n - sx2) > 0
-                  THEN (cc - dd)
-                       / ((CAST(n AS DOUBLE) * n - sx2) / 2.0) END, 6)
-                  AS somers_d_yx
-         FROM pairs, marg, tx""",
-    // Ansari-Bradley: exact arithmetic-series score masses per tie
-    // block, quotient/remainder-exact T, linear-rank-statistic moments.
-    "q_ansari" ->
-      """WITH ps AS (SELECT round(CAST(value AS DOUBLE), 6) AS s,
-                       CAST(SUM(CASE WHEN event_type = 'click'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS cp,
-                       CAST(SUM(CASE WHEN event_type = 'click'
-                         THEN 0 ELSE 1 END) AS BIGINT) AS cn
-                     FROM events
-                     WHERE value IS NOT NULL AND event_type IS NOT NULL
-                     GROUP BY 1),
-              tot AS (SELECT CAST(SUM(cp + cn) AS BIGINT) AS nn FROM ps),
-              blk AS (SELECT cp, cn, cp + cn AS sz,
-                        CAST(COALESCE(SUM(cp + cn) OVER (ORDER BY s
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                          0) AS BIGINT) AS lo, nn
-                      FROM ps, tot),
-              sc AS (SELECT cp, cn, sz, nn, lo + 1 AS a, lo + sz AS b,
-                            nn + 1 AS m, (nn + 1) // 2 AS k
-                     FROM blk),
-              sc2 AS (SELECT cp, cn, sz, nn,
-                        (CASE WHEN a <= least(b, k)
-                          THEN ((a + least(b, k)) * (least(b, k) - a + 1)) // 2
-                          ELSE 0 END)
-                      + (CASE WHEN greatest(a, k + 1) <= b
-                          THEN ((m * 2 - greatest(a, k + 1) - b)
-                            * (b - greatest(a, k + 1) + 1)) // 2
-                          ELSE 0 END) AS bs
-                      FROM sc),
-              ag AS (SELECT CAST(SUM(cp) AS BIGINT) AS n_x,
-                            CAST(SUM(cn) AS BIGINT) AS n_y,
-                            CAST(MAX(nn) AS BIGINT) AS nn,
-                            CAST(SUM((cp * bs) // sz) AS DOUBLE)
-                              + SUM(CAST((cp * bs) % sz AS DOUBLE)
-                                / CAST(sz AS DOUBLE)) AS t,
-                            CAST(SUM(bs) AS DOUBLE) AS sa,
-                            SUM(CAST(bs AS DOUBLE) / CAST(sz AS DOUBLE)
-                              * CAST(bs AS DOUBLE)) AS sa2
-                     FROM sc2),
-              fin AS (SELECT n_x, n_y, t,
-                        CAST(n_x AS DOUBLE) * sa / CAST(nn AS DOUBLE) AS e,
-                        CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE)
-                          * (CAST(nn AS DOUBLE) * sa2 - sa * sa)
-                          / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-                            * (CAST(nn AS DOUBLE) - 1.0)) AS v
-                      FROM ag)
-         SELECT n_x, n_y, round(t, 6) AS ab_stat,
-                round(CASE WHEN n_x > 0 AND n_y > 0 AND v > 0
-                  THEN (t - e) / sqrt(v) END, 6) AS z_stat
-         FROM fin""",
-    // Exact integer cumulative weights; both half-mass conventions.
-    "q_weighted_median" ->
-      """WITH grid AS (SELECT round(CAST(l_extendedprice AS DOUBLE), 6) AS v,
-                       CAST(SUM(CAST(floor(CAST(l_quantity AS DOUBLE))
-                         AS BIGINT)) AS BIGINT) AS w
-                       FROM lineitem
-                       WHERE l_extendedprice IS NOT NULL
-                         AND l_quantity IS NOT NULL
-                         AND CAST(floor(CAST(l_quantity AS DOUBLE))
-                           AS BIGINT) > 0
-                       GROUP BY 1),
-              tot AS (SELECT CAST(SUM(w) AS BIGINT) AS tw,
-                             CAST(COUNT(*) AS BIGINT) AS n_values
-                      FROM grid),
-              cum AS (SELECT v, CAST(SUM(w) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS BIGINT) AS c
-                      FROM grid)
-         SELECT tw AS total_weight, n_values,
-                (SELECT min(v) FROM cum, tot WHERE c * 2 >= tw) AS wm_lower,
-                (SELECT min(v) FROM cum, tot WHERE c * 2 > tw) AS wm_upper
-         FROM tot""",
-    "q_partial_corr" ->
-      """WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                      corr(l_quantity, l_extendedprice) AS rxy,
-                      corr(l_quantity, l_discount) AS rxz,
-                      corr(l_extendedprice, l_discount) AS ryz
-                    FROM lineitem
-                    WHERE l_quantity IS NOT NULL
-                      AND l_extendedprice IS NOT NULL
-                      AND l_discount IS NOT NULL)
-         SELECT n, round(rxy, 6) AS r_xy, round(rxz, 6) AS r_xz,
-                round(ryz, 6) AS r_yz,
-                round(CASE WHEN (1.0 - rxz * rxz) * (1.0 - ryz * ryz) > 0
-                  THEN (rxy - rxz * ryz)
-                       / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz))
-                  END, 6) AS r_xy_given_z
-         FROM m""",
-    "q_lin_ccc" ->
-      s"""WITH sc AS (SELECT CAST(len($duckTokens) AS DOUBLE) AS x,
-                        CAST(n_chars AS DOUBLE) / 5.0 AS y
-                      FROM documents
-                      WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-               m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                       avg(x) AS mx, avg(y) AS my, avg(x * x) AS mxx,
-                       avg(y * y) AS myy, avg(x * y) AS mxy
-                     FROM sc),
-               d AS (SELECT n, mx, my,
-                       mxx - mx * mx AS vx, myy - my * my AS vy,
-                       mxy - mx * my AS cov,
-                       mxx - mx * mx + (myy - my * my)
-                         + (mx - my) * (mx - my) AS den
-                     FROM m)
-          SELECT n, round(mx, 6) AS mean_x, round(my, 6) AS mean_y,
-                 round(CASE WHEN den > 0 THEN 2.0 * cov / den END, 6)
-                   AS ccc,
-                 round(CASE WHEN vx > 0 AND vy > 0
-                   THEN cov / sqrt(vx * vy) END, 6) AS pearson_r,
-                 round(CASE WHEN vx > 0 AND vy > 0 AND cov <> 0
-                   THEN (2.0 * cov / den) / (cov / sqrt(vx * vy)) END, 6)
-                   AS c_b
-          FROM d""",
-    // Same KS battery as q_fdr_bh; the adjustment is the Holm step-down
-    // prefix cummax of (m-rank+1)*p.
-    "q_holm" ->
-      """WITH b AS (SELECT source AS g,
-                           n_chars + CASE WHEN source IN
-                             ('src0','src1','src2','src3','src4')
-                             THEN 150 ELSE 0 END AS v
-                    FROM documents WHERE n_chars IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid),
-              ks AS (SELECT g AS source,
-                            CAST(max(ng) AS BIGINT) AS n_group,
-                            CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                            round(max(CASE WHEN nt > ng THEN
-                              abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                                  - CAST(cumt - cumg AS DOUBLE)
-                                    / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
-                     FROM cum GROUP BY 1),
-              pv AS (SELECT source, n_group, n_rest, ks,
-                            least(1.0, round(2.0 * exp(-2.0 * ks * ks
-                              * (CAST(n_group AS DOUBLE) * CAST(n_rest AS DOUBLE)
-                                 / CAST(n_group + n_rest AS DOUBLE))), 6))
-                              AS p_value
-                     FROM ks),
-              ranked AS (SELECT *,
-                                CAST(count(*) OVER () AS BIGINT) AS m,
-                                CAST(row_number() OVER
-                                  (ORDER BY p_value, source) AS INTEGER)
-                                  AS holm_rank
-                         FROM pv)
-         SELECT source, n_group, n_rest, ks, p_value, holm_rank,
-                round(least(max(CAST(m - holm_rank + 1 AS DOUBLE) * p_value)
-                        OVER (ORDER BY p_value, source
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW),
-                      1.0), 6) AS p_adj,
-                round(least(max(CAST(m - holm_rank + 1 AS DOUBLE) * p_value)
-                        OVER (ORDER BY p_value, source
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW),
-                      1.0), 6) <= 0.05 AS significant
-         FROM ranked""",
-    // Exact integer OLS moments over the calendar-bounded daily grid;
-    // the closing algebra mirrors adfDaily term for term.
-    // Exact integer ordinal patterns (ties: earlier index first);
-    // entropy in the single-log fold form on both engines.
-    "q_perm_entropy" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts) AS d,
-                               CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              tri AS (SELECT g, y AS a,
-                             lead(y, 1) OVER (PARTITION BY g ORDER BY d) AS b,
-                             lead(y, 2) OVER (PARTITION BY g ORDER BY d) AS c
-                      FROM daily),
-              pat AS (SELECT g, CASE WHEN a <= b AND b <= c THEN 0
-                                     WHEN a <= b AND b > c AND a <= c THEN 1
-                                     WHEN a <= b AND b > c AND a > c THEN 2
-                                     WHEN a > b AND b <= c AND a <= c THEN 3
-                                     WHEN a > b AND b <= c AND a > c THEN 4
-                                     ELSE 5 END AS p
-                      FROM tri WHERE c IS NOT NULL),
-              cnt AS (SELECT g, p, CAST(count(*) AS BIGINT) AS c
-                      FROM pat GROUP BY 1, 2),
-              ag AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n_windows,
-                            CAST(count(*) AS BIGINT) AS n_patterns,
-                            SUM(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)))
-                              AS clogc
-                     FROM cnt GROUP BY 1)
-         SELECT g AS event_type, n_windows, n_patterns,
-                round(CASE WHEN n_windows > 0 THEN
-                  (ln(CAST(n_windows AS DOUBLE)) - clogc / n_windows)
-                    / ln(6.0) END, 6) AS perm_entropy
-         FROM ag""",
-    // Clipped unigram overlap on the (id+1, token) equi-join; exact
-    // integer min sums; F1 = 2*ov/(|A|+|B|).
-    "q_rouge_pair" ->
-      s"""WITH tf AS (SELECT doc_id AS id, token AS w,
-                             CAST(count(*) AS BIGINT) AS c
-                      FROM documents, UNNEST($duckTokens) AS u(token)
-                      GROUP BY 1, 2),
-              lens AS (SELECT doc_id AS id,
-                              CAST(len($duckTokens) AS BIGINT) AS l
-                       FROM documents),
-              pairs AS (SELECT a.id AS doc_a, a.l AS len_a, b.l AS len_b
-                        FROM lens a JOIN lens b ON b.id = a.id + 1),
-              ov AS (SELECT a.id AS doc_a,
-                            CAST(SUM(least(a.c, b.c)) AS BIGINT) AS ovl
-                     FROM tf a JOIN tf b ON b.id = a.id + 1 AND b.w = a.w
-                     GROUP BY 1)
-         SELECT doc_a, doc_a + 1 AS doc_b, len_a, len_b,
-                COALESCE(ovl, 0) AS overlap,
-                round(CASE WHEN len_a > 0 THEN
-                  CAST(COALESCE(ovl, 0) AS DOUBLE) / len_a END, 6)
-                  AS rouge1_recall,
-                round(CASE WHEN len_b > 0 THEN
-                  CAST(COALESCE(ovl, 0) AS DOUBLE) / len_b END, 6)
-                  AS rouge1_precision,
-                round(CASE WHEN len_a + len_b > 0 THEN
-                  2.0 * COALESCE(ovl, 0) / (len_a + len_b) END, 6)
-                  AS rouge1_f1
-         FROM pairs LEFT JOIN ov USING (doc_a)""",
-    // Exact-integer class sums: knn(k) = sum(nbr degrees)/(k*n_k).
-    "q_knn_degree" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk
-                        FROM lineitem),
-              e AS (SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM pairs
-                    UNION ALL
-                    SELECT sk * 2 + 1 AS src, pk * 2 AS dst FROM pairs),
-              deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS d
-                      FROM e GROUP BY 1),
-              pn AS (SELECT e.src,
-                            CAST(SUM(dd.d) AS BIGINT) AS sumnbr,
-                            CAST(count(*) AS BIGINT) AS k
-                     FROM e JOIN deg dd ON dd.id = e.dst
-                     GROUP BY 1)
-         SELECT k AS degree, CAST(count(*) AS BIGINT) AS n_nodes,
-                round(CAST(SUM(sumnbr) AS DOUBLE)
-                  / CAST(k * count(*) AS DOUBLE), 6) AS avg_knn
-         FROM pn GROUP BY 1""",
-    // Significant-transition graph (exact c*k > sum threshold), then
-    // L_mutual / L with self-loops excluded.
-    "q_reciprocity" ->
-      """WITH tr AS (SELECT event_type AS src,
-                            lead(event_type) OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS dst
-                     FROM events WHERE event_type IS NOT NULL),
-              cnt AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS c
-                      FROM tr WHERE dst IS NOT NULL GROUP BY 1, 2),
-              tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t,
-                             CAST(count(*) AS BIGINT) AS k
-                      FROM cnt),
-              sig AS (SELECT src, dst FROM cnt, tot WHERE c * k > t),
-              e AS (SELECT DISTINCT src, dst FROM sig
-                    WHERE src IS NOT NULL AND dst IS NOT NULL
-                      AND src <> dst),
-              m AS (SELECT count(*) AS n_mut FROM e a
-                    WHERE EXISTS (SELECT 1 FROM e b
-                                  WHERE b.src = a.dst AND b.dst = a.src))
-         SELECT CAST(count(*) AS BIGINT) AS n_edges,
-                CAST(max(m.n_mut) AS BIGINT) AS n_reciprocated,
-                round(CASE WHEN count(*) > 0
-                  THEN CAST(max(m.n_mut) AS DOUBLE) / count(*) END, 6)
-                  AS reciprocity
-         FROM e, m""",
-    // Same lang-guess frame as q_kappa; exact-integer confusion counts,
-    // the MCC numerator stays exact (HUGEINT) before its single double
-    // cast and the denominator multiplies four exact square roots.
-    "q_mcc" ->
-      s"""WITH li AS (SELECT lang AS declared_lang,
-                        CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END)
-                               >= 0.05
-                             THEN 'en' ELSE 'unknown' END AS lang_guess
-                      FROM (SELECT lang,
-                              CAST(len($duckTokens) AS DOUBLE) AS n,
-                              CAST(len(list_filter($duckTokens,
-                                t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                                AS BIGINT) AS ns
-                            FROM documents
-                            WHERE lang IS NOT NULL)),
-              cm AS (SELECT
-                       CAST(sum(CASE WHEN declared_lang = 'en'
-                         AND lang_guess = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-                         AS tp,
-                       CAST(sum(CASE WHEN declared_lang <> 'en'
-                         AND lang_guess = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-                         AS fp,
-                       CAST(sum(CASE WHEN declared_lang = 'en'
-                         AND lang_guess <> 'en' THEN 1 ELSE 0 END) AS BIGINT)
-                         AS fn,
-                       CAST(sum(CASE WHEN declared_lang <> 'en'
-                         AND lang_guess <> 'en' THEN 1 ELSE 0 END) AS BIGINT)
-                         AS tn
-                     FROM li)
-         SELECT tp, fp, fn, tn,
-                round(CASE WHEN tp + fp + fn + tn > 0 THEN
-                  CAST(tp + tn AS DOUBLE) / CAST(tp + fp + fn + tn AS DOUBLE)
-                  END, 6) AS accuracy,
-                round(CASE WHEN tp + fp > 0 THEN
-                  CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END, 6)
-                  AS precision,
-                round(CASE WHEN tp + fn > 0 THEN
-                  CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END, 6)
-                  AS recall,
-                round(CASE WHEN 2 * tp + fp + fn > 0 THEN
-                  CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE)
-                  END, 6) AS f1,
-                round(CASE WHEN (tp + fp) > 0 AND (tp + fn) > 0
-                    AND (tn + fp) > 0 AND (tn + fn) > 0 THEN
-                  CAST(CAST(tp AS HUGEINT) * tn
-                       - CAST(fp AS HUGEINT) * fn AS DOUBLE)
-                  / (sqrt(CAST(tp + fp AS DOUBLE))
-                     * sqrt(CAST(tp + fn AS DOUBLE))
-                     * sqrt(CAST(tn + fp AS DOUBLE))
-                     * sqrt(CAST(tn + fn AS DOUBLE))) END, 6) AS mcc
-         FROM cm""",
-    // V_a x V_b distinct-value difference grid with multiplicity
-    // c_a*c_b; weighted median in the wm_lower/upper (cum*2 >=/> W)
-    // convention of q_weighted_median.
-    "q_hodges_lehmann" ->
-      """WITH a AS (SELECT CAST(l_quantity AS DOUBLE) AS v,
-                           CAST(count(*) AS BIGINT) AS c
-                    FROM lineitem
-                    WHERE l_returnflag = 'R' AND l_quantity IS NOT NULL
-                    GROUP BY 1),
-              b AS (SELECT CAST(l_quantity AS DOUBLE) AS v,
-                           CAST(count(*) AS BIGINT) AS c
-                    FROM lineitem
-                    WHERE l_returnflag = 'A' AND l_quantity IS NOT NULL
-                    GROUP BY 1),
-              d AS (SELECT round(a.v - b.v, 6) AS d,
-                           CAST(SUM(a.c * b.c) AS BIGINT) AS w
-                    FROM a CROSS JOIN b GROUP BY 1),
-              cum AS (SELECT d, w,
-                             sum(w) OVER (ORDER BY d
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cw,
-                             sum(w) OVER () AS tw
-                      FROM d)
-         SELECT COALESCE(CAST(max(tw) AS BIGINT), 0) AS n_pairs,
-                CAST(count(*) AS BIGINT) AS n_diffs,
-                min(CASE WHEN cw * 2 >= tw THEN d END) AS hl_lower,
-                min(CASE WHEN cw * 2 > tw THEN d END) AS hl_upper,
-                round((min(CASE WHEN cw * 2 >= tw THEN d END)
-                       + min(CASE WHEN cw * 2 > tw THEN d END)) / 2.0, 6)
-                  AS hl_shift
-         FROM cum""",
-    // y-CDF + per-x-run telescoping: sum|dr| needs only cum(y) at each
-    // run's min/max y; denominator mass cy*l*(n-l) in exact HUGEINT.
-    "q_chatterjee" ->
-      """WITH base AS (SELECT l_returnflag AS g,
-                              CAST(l_quantity AS DOUBLE) AS x,
-                              CAST(l_extendedprice AS DOUBLE) AS y
-                       FROM lineitem
-                       WHERE l_quantity IS NOT NULL
-                         AND l_extendedprice IS NOT NULL),
-              yg AS (SELECT g, y, CAST(count(*) AS BIGINT) AS cy
-                     FROM base GROUP BY 1, 2),
-              ycdf AS (SELECT g, y, cy,
-                              sum(cy) OVER (PARTITION BY g ORDER BY y
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND CURRENT ROW) AS cum,
-                              sum(cy) OVER (PARTITION BY g) AS n
-                       FROM yg),
-              den AS (SELECT g, CAST(max(n) AS BIGINT) AS n,
-                             SUM(CAST(cy AS HUGEINT)
-                               * (n - cum + cy)
-                               * (n - (n - cum + cy))) AS den
-                      FROM ycdf GROUP BY 1),
-              runs AS (SELECT c.g, c.x,
-                              CAST(min(yc.cum) AS BIGINT) AS lo,
-                              CAST(max(yc.cum) AS BIGINT) AS hi
-                       FROM (SELECT DISTINCT g, x, y FROM base) c
-                       JOIN ycdf yc ON yc.g = c.g AND yc.y = c.y
-                       GROUP BY 1, 2),
-              sweep AS (SELECT g, hi - lo
-                               + COALESCE(abs(lo - lag(hi) OVER
-                                   (PARTITION BY g ORDER BY x)), 0) AS dr
-                        FROM runs),
-              s AS (SELECT g, CAST(SUM(dr) AS BIGINT) AS s
-                    FROM sweep GROUP BY 1)
-         SELECT den.g AS l_returnflag, den.n AS n, s.s AS sum_abs_dr,
-                round(CASE WHEN den.den > 0 THEN
-                  1.0 - CAST(den.n AS DOUBLE) * CAST(s.s AS DOUBLE)
-                    / (2.0 * CAST(den.den AS DOUBLE)) END, 6) AS xi
-         FROM den JOIN s ON s.g = den.g""",
-    // friedman's complete-block cells, block ranks weighted by the
-    // midrank of each block's range; every S term is a dyadic rational
-    // (the friedman exactness contract), T mirrored term for term.
-    "q_quade" ->
-      """WITH cells AS (SELECT date_trunc('day', ts) AS b,
-                          event_type AS t, avg(value) AS v
-                        FROM events WHERE value IS NOT NULL
-                        GROUP BY 1, 2),
-              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
-                     FROM cb),
-              comp AS (SELECT cb.b, cb.t, cb.v, kk.k
-                       FROM cb
-                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
-                         ON cb.b = bc.b, kk
-                       WHERE bc.c = kk.k),
-              rk AS (SELECT b, t, k,
-                       CAST(rank() OVER (PARTITION BY b ORDER BY v)
-                         AS DOUBLE)
-                         + (CAST(count(*) OVER (PARTITION BY b, v)
-                           AS DOUBLE) - 1.0) / 2.0 AS r,
-                       max(v) OVER (PARTITION BY b)
-                         - min(v) OVER (PARTITION BY b) AS rng
-                     FROM comp),
-              wq AS (SELECT b, t, k, r,
-                       (CAST(rank() OVER (ORDER BY rng) AS DOUBLE) - 1.0)
-                         / k + 1.0
-                         + (CAST(count(*) OVER (PARTITION BY rng)
-                             AS DOUBLE) / k - 1.0) / 2.0 AS q
-                     FROM rk),
-              sij AS (SELECT b, t, k,
-                        q * (r - CAST(k + 1 AS DOUBLE) / 2.0) AS s
-                      FROM wq),
-              pt AS (SELECT t, CAST(count(*) AS BIGINT) AS n_blocks,
-                       sum(s) AS sj
-                     FROM sij GROUP BY 1),
-              ft AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS bb,
-                       CAST(max(k) AS BIGINT) AS kt, sum(s * s) AS a
-                     FROM sij),
-              tt AS (SELECT bb AS n_blocks_used, kt AS k_treatments,
-                       CASE WHEN a - sj2 / bb > 0
-                         THEN round(CAST(bb - 1 AS DOUBLE) * (sj2 / bb)
-                           / (a - sj2 / bb), 6) END AS quade_t
-                     FROM (SELECT sum(sj * sj) AS sj2 FROM pt), ft)
-         SELECT t AS event_type, n_blocks, round(sj, 6) AS s_j,
-                n_blocks_used, k_treatments, quade_t
-         FROM pt, tt""",
-    // q_survival's lifetime grid verbatim; the hazard-side folds are
-    // ordered-prefix cumsums (the ks/ewma contract).
-    "q_nelson_aalen" ->
-      """WITH lastev AS (SELECT user_id, event_type AS last_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1),
-              u AS (SELECT e.user_id,
-                           CAST(date_diff('day', date_trunc('day', min(e.ts)),
-                                date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
-                           max(l.last_type) = 'purchase' AS ev
-                    FROM events e JOIN lastev l USING (user_id)
-                    GROUP BY e.user_id),
-              g AS (SELECT dur,
-                           CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
-                             AS n_events,
-                           CAST(sum(CASE WHEN ev THEN 0 ELSE 1 END) AS BIGINT)
-                             AS n_censored
-                    FROM u GROUP BY 1),
-              w AS (SELECT dur, n_events, n_censored,
-                           sum(n_events + n_censored) OVER ()
-                             - COALESCE(sum(n_events + n_censored) OVER
-                                 (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING), 0) AS n_risk
-                    FROM g),
-              s AS (SELECT dur, n_events, n_censored, n_risk,
-                           sum(CAST(n_events AS DOUBLE) / n_risk) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS h,
-                           sum(CAST(n_events AS DOUBLE)
-                               / (CAST(n_risk AS DOUBLE) * n_risk)) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS v
-                    FROM w)
-         SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
-                n_events, n_censored,
-                round(h, 6) AS cum_hazard,
-                round(v, 6) AS hazard_var,
-                round(exp(0.0 - h), 6) AS breslow_survival
-         FROM s WHERE n_events > 0""",
-    // Aligned-unnest positions (no WITH ORDINALITY in DuckDB), one lead
-    // window per offset, exact integer pair counts with the minCount=3
-    // vocabulary floor.
-    "q_skipgrams" ->
-      s"""WITH pos AS (SELECT doc_id, unnest($duckTokens) AS w,
-                              unnest(generate_series(1,
-                                len($duckTokens))) AS p
-                       FROM documents),
-              pairs AS (SELECT w AS center,
-                               lead(w, 1) OVER (PARTITION BY doc_id
-                                 ORDER BY p) AS context,
-                               1 AS dist
-                        FROM pos
-                        UNION ALL
-                        SELECT w,
-                               lead(w, 2) OVER (PARTITION BY doc_id
-                                 ORDER BY p),
-                               2
-                        FROM pos)
-         SELECT center, context, CAST(dist AS INT) AS dist,
-                CAST(count(*) AS BIGINT) AS n_pairs
-         FROM pairs WHERE context IS NOT NULL
-         GROUP BY 1, 2, 3
-         HAVING count(*) >= 3""",
-    // Min-distance BFS as a depth-capped recursive CTE (UNION dedups
-    // (l, node, d) rows; min(d) = first-discovery depth = the engine's
-    // frontier anti-join). Harmonic sum folds as the exact integer
-    // lcm(1..4)/d before its single division.
-    "q_landmark_bfs" ->
-      """WITH RECURSIVE pairs AS (SELECT DISTINCT l_partkey * 2 AS src,
-                                         l_suppkey * 2 + 1 AS dst
-                                  FROM lineitem),
-              e AS (SELECT src, dst FROM pairs
-                    UNION SELECT dst, src FROM pairs),
-              lm AS (SELECT src AS l FROM (SELECT DISTINCT src FROM e)
-                     ORDER BY src LIMIT 4),
-              reach(l, node, d) AS (
-                SELECT l, l, 0 FROM lm
-                UNION
-                SELECT r.l, e.dst, r.d + 1
-                FROM reach r JOIN e ON e.src = r.node
-                WHERE r.d < 4),
-              best AS (SELECT l, node, min(d) AS d
-                       FROM reach GROUP BY 1, 2)
-         SELECT l AS landmark,
-                CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_reached,
-                CAST(max(d) AS BIGINT) AS max_dist,
-                round(CAST(sum(CASE WHEN d > 0 THEN 12 // d ELSE 0 END)
-                    AS DOUBLE) / 12.0, 6) AS harmonic_centrality
-         FROM best GROUP BY 1""",
-    // Clipped uni/bigram overlaps on the (id+1, gram) equi-join (the
-    // rouge construction); BP and the sqrt geometric mean mirrored
-    // term for term.
-    "q_bleu_pair" ->
-      s"""WITH tok AS (SELECT doc_id AS id, $duckTokens AS t
-                       FROM documents),
-              tf1 AS (SELECT id, w, CAST(count(*) AS BIGINT) AS c
-                      FROM (SELECT id, unnest(t) AS w FROM tok)
-                      GROUP BY 1, 2),
-              tf2 AS (SELECT id, g, CAST(count(*) AS BIGINT) AS c
-                      FROM (SELECT id, array_to_string(t[i:i+1], ' ') AS g
-                            FROM tok,
-                              UNNEST(generate_series(1, len(t) - 1)) AS u(i))
-                      GROUP BY 1, 2),
-              lens AS (SELECT id, CAST(len(t) AS BIGINT) AS l FROM tok),
-              ov1 AS (SELECT a.id AS doc_a,
-                             CAST(SUM(least(a.c, b.c)) AS BIGINT) AS o1
-                      FROM tf1 a JOIN tf1 b
-                        ON b.id = a.id + 1 AND b.w = a.w
-                      GROUP BY 1),
-              ov2 AS (SELECT a.id AS doc_a,
-                             CAST(SUM(least(a.c, b.c)) AS BIGINT) AS o2
-                      FROM tf2 a JOIN tf2 b
-                        ON b.id = a.id + 1 AND b.g = a.g
-                      GROUP BY 1),
-              pairs AS (SELECT a.id AS doc_a, a.l AS len_ref,
-                               b.l AS len_cand
-                        FROM lens a JOIN lens b ON b.id = a.id + 1),
-              j AS (SELECT doc_a, len_ref, len_cand,
-                           COALESCE(o1, 0) AS overlap1,
-                           COALESCE(o2, 0) AS overlap2,
-                           CASE WHEN len_cand > 0 THEN
-                             CAST(COALESCE(o1, 0) AS DOUBLE) / len_cand
-                             END AS p1,
-                           CASE WHEN len_cand > 1 THEN
-                             CAST(COALESCE(o2, 0) AS DOUBLE)
-                               / (len_cand - 1) END AS p2,
-                           CASE WHEN len_cand >= len_ref THEN 1.0
-                                WHEN len_cand > 0 THEN exp(1.0
-                                  - CAST(len_ref AS DOUBLE) / len_cand)
-                                END AS bp
-                    FROM pairs LEFT JOIN ov1 USING (doc_a)
-                               LEFT JOIN ov2 USING (doc_a))
-         SELECT doc_a, doc_a + 1 AS doc_b, len_ref, len_cand,
-                overlap1, overlap2,
-                round(p1, 6) AS p1, round(p2, 6) AS p2,
-                round(bp, 6) AS brevity_penalty,
-                round(bp * sqrt(p1 * p2), 6) AS bleu2
-         FROM j""",
-    // Cumulative class counts over the distinct-value grid; the Gini
-    // algebra uses only correctly-rounded ops so the arg-max is
-    // bit-portable; ties break to the smaller threshold.
-    "q_decision_stump" ->
-      """WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS v,
-                              (lang = 'en') AS y
-                       FROM documents
-                       WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
-              grid AS (SELECT v, CAST(count(*) AS BIGINT) AS c,
-                              CAST(sum(CASE WHEN y THEN 1 ELSE 0 END)
-                                AS BIGINT) AS p
-                       FROM base GROUP BY 1),
-              cw AS (SELECT v,
-                            sum(c) OVER (ORDER BY v
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW) AS tl,
-                            sum(p) OVER (ORDER BY v
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW) AS pl,
-                            sum(c) OVER () AS n, sum(p) OVER () AS pp
-                     FROM grid),
-              cand AS (SELECT v, tl, pl, n, pp,
-                         (1.0 - (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                              * (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                              - (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE))
-                              * (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE)))
-                         - (CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              * (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              - (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE))
-                              * (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE)))
-                         - (CAST(n - tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              - (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))) AS g
-                       FROM cw WHERE tl < n),
-              best AS (SELECT * FROM cand ORDER BY g DESC, v ASC LIMIT 1),
-              root AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                              CAST(sum(p) AS BIGINT) AS n_pos
-                       FROM grid)
-         SELECT root.n AS n, root.n_pos AS n_pos,
-                round(1.0
-                  - (CAST(n_pos AS DOUBLE) / CAST(root.n AS DOUBLE))
-                  * (CAST(n_pos AS DOUBLE) / CAST(root.n AS DOUBLE))
-                  - (CAST(root.n - n_pos AS DOUBLE)
-                     / CAST(root.n AS DOUBLE))
-                  * (CAST(root.n - n_pos AS DOUBLE)
-                     / CAST(root.n AS DOUBLE)), 6) AS gini_root,
-                best.v AS threshold, round(best.g, 6) AS gini_gain,
-                CAST(best.tl AS BIGINT) AS n_left,
-                CAST(best.pl AS BIGINT) AS pos_left,
-                CAST(root.n - best.tl AS BIGINT) AS n_right,
-                CAST(root.n_pos - best.pl AS BIGINT) AS pos_right
-         FROM root, best""",
-    // Running mean -> deviation cumsum -> running min, all ordered
-    // prefix folds on the (group, day) grid; arg-max ties break to the
-    // earliest day.
-    "q_page_hinkley" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts) AS d,
-                               CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              r AS (SELECT g, d, y,
-                      count(*) OVER w AS i, sum(y) OVER w AS cum
-                    FROM daily
-                    WINDOW w AS (PARTITION BY g ORDER BY d
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-              dv AS (SELECT g, d,
-                       CAST(y AS DOUBLE)
-                         - CAST(cum AS DOUBLE) / CAST(i AS DOUBLE) AS dev
-                     FROM r),
-              mm AS (SELECT g, d, sum(dev) OVER (PARTITION BY g ORDER BY d
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS m
-                     FROM dv),
-              ph AS (SELECT g, d,
-                       m - min(m) OVER (PARTITION BY g ORDER BY d
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS ph
-                     FROM mm),
-              pick AS (SELECT g, d, ph,
-                         CAST(count(*) OVER (PARTITION BY g) AS BIGINT)
-                           AS n_days,
-                         row_number() OVER (PARTITION BY g
-                           ORDER BY ph DESC, d ASC) AS rn
-                       FROM ph)
-         SELECT g AS event_type, n_days, round(ph, 6) AS ph_stat,
-                d AS alarm_day
-         FROM pick WHERE rn = 1""",
-    // Exact cent-quantized per-group variances; the cross-group total
-    // folds by ordered prefix (max prefix = total for nonneg terms).
-    "q_cochran_c" ->
-      """WITH per AS (SELECT event_type AS g,
-                        CAST(count(*) AS BIGINT) AS n,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT)) AS sq,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)
-                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)) AS sqq
-                      FROM events WHERE value IS NOT NULL
-                      GROUP BY 1 HAVING count(*) > 1),
-              v AS (SELECT g, CAST(n * sqq - sq * sq AS DOUBLE)
-                      / CAST(n * (n - 1) AS DOUBLE) / 10000.0 AS var
-                    FROM per),
-              c AS (SELECT g, var, sum(var) OVER (ORDER BY g
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS cum
-                    FROM v),
-              top AS (SELECT g, var FROM v
-                      ORDER BY var DESC, g DESC LIMIT 1),
-              tot AS (SELECT CAST(count(*) AS BIGINT) AS k_groups,
-                             max(cum) AS tot
-                      FROM c)
-         SELECT k_groups, top.g AS max_var_group,
-                round(top.var, 6) AS max_variance,
-                round(tot, 6) AS sum_variance,
-                round(CASE WHEN tot > 0 THEN top.var / tot END, 6)
-                  AS cochran_c
-         FROM tot, top""",
-    // Pooled MSE from exact per-group SS (ordered-prefix total), then
-    // the k^2 Tukey-Kramer pair grid, q mirrored term for term.
-    "q_tukey_hsd" ->
-      """WITH per AS (SELECT event_type AS g,
-                        CAST(count(*) AS BIGINT) AS n,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT)) AS sq,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)
-                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)) AS sqq
-                      FROM events WHERE value IS NOT NULL
-                      GROUP BY 1),
-              s AS (SELECT g, n, sq,
-                      CAST(n * sqq - sq * sq AS DOUBLE)
-                        / CAST(n AS DOUBLE) / 10000.0 AS ss
-                    FROM per),
-              c AS (SELECT g, ss, sum(ss) OVER (ORDER BY g
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS cum
-                    FROM s),
-              tot AS (SELECT (SELECT CAST(sum(n) AS BIGINT) FROM per)
-                        AS nn,
-                        CAST(count(*) AS BIGINT) AS k_groups,
-                        max(cum) AS sse
-                      FROM c),
-              t2 AS (SELECT k_groups, nn - k_groups AS df_err,
-                       CASE WHEN nn - k_groups > 0 THEN
-                         sse / CAST(nn - k_groups AS DOUBLE) END AS mse
-                     FROM tot),
-              m AS (SELECT g, n,
-                      CAST(sq AS DOUBLE) / CAST(n AS DOUBLE) AS mc
-                    FROM per)
-         SELECT a.g AS group_a, b.g AS group_b, a.n AS n_a, b.n AS n_b,
-                round(a.mc / 100.0, 6) AS mean_a,
-                round(b.mc / 100.0, 6) AS mean_b,
-                round(a.mc / 100.0 - b.mc / 100.0, 6) AS mean_diff,
-                k_groups, df_err,
-                round(sqrt(mse / 2.0 * (1.0 / CAST(a.n AS DOUBLE)
-                  + 1.0 / CAST(b.n AS DOUBLE))), 6) AS se,
-                round(CASE WHEN sqrt(mse / 2.0
-                    * (1.0 / CAST(a.n AS DOUBLE)
-                       + 1.0 / CAST(b.n AS DOUBLE))) > 0 THEN
-                  (a.mc / 100.0 - b.mc / 100.0)
-                    / sqrt(mse / 2.0 * (1.0 / CAST(a.n AS DOUBLE)
-                      + 1.0 / CAST(b.n AS DOUBLE))) END, 6) AS q_stat
-         FROM m a JOIN m b ON a.g < b.g, t2""",
-    // User-unit frame (treated = has purchase), exact cent-quantized
-    // per-arm moments per covariate, SMD mirrored term for term.
-    "q_smd_balance" ->
-      """WITH u AS (SELECT user_id,
-                      sum(CASE WHEN event_type = 'purchase' THEN 1
-                          ELSE 0 END) * 5 > count(*) AS treated,
-                      CAST(count(*) AS BIGINT) AS n_events,
-                      CAST(SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                        AS HUGEINT)) AS DOUBLE) / 100.0 AS total_value,
-                      CAST(date_diff('day', date_trunc('day', min(ts)),
-                        date_trunc('day', max(ts))) AS BIGINT)
-                        AS span_days
-                    FROM events
-                    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-                    GROUP BY 1),
-              mom AS (
-                SELECT 'n_events' AS covariate,
-                  CAST(sum(CASE WHEN treated AND n_events IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-                  SUM(CASE WHEN treated THEN
-                    CAST(CAST(n_events AS DECIMAL(20,2)) * 100 AS HUGEINT)
-                    END) AS st,
-                  SUM(CASE WHEN treated THEN
-                    CAST(CAST(n_events AS DECIMAL(20,2)) * 100 AS HUGEINT)
-                    * CAST(CAST(n_events AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END) AS sst,
-                  CAST(sum(CASE WHEN NOT treated AND n_events IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-                  SUM(CASE WHEN NOT treated THEN
-                    CAST(CAST(n_events AS DECIMAL(20,2)) * 100 AS HUGEINT)
-                    END) AS sc,
-                  SUM(CASE WHEN NOT treated THEN
-                    CAST(CAST(n_events AS DECIMAL(20,2)) * 100 AS HUGEINT)
-                    * CAST(CAST(n_events AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END) AS ssc
-                FROM u
-                UNION ALL
-                SELECT 'total_value',
-                  CAST(sum(CASE WHEN treated AND total_value IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT),
-                  SUM(CASE WHEN treated THEN
-                    CAST(CAST(total_value AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END),
-                  SUM(CASE WHEN treated THEN
-                    CAST(CAST(total_value AS DECIMAL(20,2)) * 100
-                      AS HUGEINT)
-                    * CAST(CAST(total_value AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END),
-                  CAST(sum(CASE WHEN NOT treated
-                    AND total_value IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT),
-                  SUM(CASE WHEN NOT treated THEN
-                    CAST(CAST(total_value AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END),
-                  SUM(CASE WHEN NOT treated THEN
-                    CAST(CAST(total_value AS DECIMAL(20,2)) * 100
-                      AS HUGEINT)
-                    * CAST(CAST(total_value AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END)
-                FROM u
-                UNION ALL
-                SELECT 'span_days',
-                  CAST(sum(CASE WHEN treated AND span_days IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT),
-                  SUM(CASE WHEN treated THEN
-                    CAST(CAST(span_days AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END),
-                  SUM(CASE WHEN treated THEN
-                    CAST(CAST(span_days AS DECIMAL(20,2)) * 100
-                      AS HUGEINT)
-                    * CAST(CAST(span_days AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END),
-                  CAST(sum(CASE WHEN NOT treated AND span_days IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT),
-                  SUM(CASE WHEN NOT treated THEN
-                    CAST(CAST(span_days AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END),
-                  SUM(CASE WHEN NOT treated THEN
-                    CAST(CAST(span_days AS DECIMAL(20,2)) * 100
-                      AS HUGEINT)
-                    * CAST(CAST(span_days AS DECIMAL(20,2)) * 100
-                      AS HUGEINT) END)
-                FROM u),
-              alg AS (SELECT covariate, nt AS n_treat, nc AS n_ctrl,
-                        CAST(st AS DOUBLE) / CAST(nt AS DOUBLE) / 100.0
-                          AS mt,
-                        CAST(sc AS DOUBLE) / CAST(nc AS DOUBLE) / 100.0
-                          AS mc,
-                        CAST(nt * sst - st * st AS DOUBLE)
-                          / CAST(nt * (nt - 1) AS DOUBLE) / 10000.0 AS vt,
-                        CAST(nc * ssc - sc * sc AS DOUBLE)
-                          / CAST(nc * (nc - 1) AS DOUBLE) / 10000.0 AS vc
-                      FROM mom)
-         SELECT covariate, n_treat, n_ctrl,
-                round(mt, 6) AS mean_treat, round(mc, 6) AS mean_ctrl,
-                round(CASE WHEN n_treat > 1 AND n_ctrl > 1
-                    AND (vt + vc) / 2.0 > 0 THEN
-                  (mt - mc) / sqrt((vt + vc) / 2.0) END, 6) AS smd
-         FROM alg""",
-    // Per-group exact cent moments; two ordered folds over the k-row
-    // grid (weights+weighted means, then the centered dispersion), the
-    // grand weighted mean broadcast between them; algebra mirrored
-    // term for term.
-    "q_welch_anova" ->
-      """WITH per AS (SELECT event_type AS g,
-                        CAST(count(*) AS BIGINT) AS n,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT)) AS sq,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)
-                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)) AS sqq
-                      FROM events WHERE value IS NOT NULL
-                      GROUP BY 1 HAVING count(*) > 1),
-              mv AS (SELECT g, n,
-                       CAST(sq AS DOUBLE) / CAST(n AS DOUBLE) / 100.0
-                         AS m,
-                       CAST(n * sqq - sq * sq AS DOUBLE)
-                         / CAST(n * (n - 1) AS DOUBLE) / 10000.0 AS v
-                     FROM per),
-              w1 AS (SELECT g, n, m, v, CAST(n AS DOUBLE) / v AS w
-                     FROM mv WHERE v > 0),
-              c1 AS (SELECT *, sum(w) OVER ow AS cw,
-                       sum(w * m) OVER ow AS cwm
-                     FROM w1
-                     WINDOW ow AS (ORDER BY g ROWS BETWEEN
-                       UNBOUNDED PRECEDING AND CURRENT ROW)),
-              t1 AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                       CAST(SUM(n) AS BIGINT) AS n_total,
-                       (SELECT cw FROM c1 ORDER BY g DESC LIMIT 1) AS tw,
-                       (SELECT cwm FROM c1 ORDER BY g DESC LIMIT 1)
-                         AS twm
-                     FROM c1),
-              c2 AS (SELECT c1.*, t1.k, t1.n_total, t1.tw,
-                       t1.twm / t1.tw AS mw
-                     FROM c1, t1),
-              c3 AS (SELECT *,
-                       sum(w * (m - mw) * (m - mw)) OVER ow AS cnum,
-                       sum(((1.0 - w / tw) * (1.0 - w / tw))
-                         / CAST(n - 1 AS DOUBLE)) OVER ow AS clam
-                     FROM c2
-                     WINDOW ow AS (ORDER BY g ROWS BETWEEN
-                       UNBOUNDED PRECEDING AND CURRENT ROW)),
-              t2 AS (SELECT max(k) AS k_groups, max(n_total) AS n_total,
-                       (SELECT cnum FROM c3 ORDER BY g DESC LIMIT 1)
-                         AS a,
-                       (SELECT clam FROM c3 ORDER BY g DESC LIMIT 1)
-                         AS l
-                     FROM c3)
-         SELECT k_groups, n_total, k_groups - 1 AS df1,
-                round(CASE WHEN l > 0 THEN
-                  CAST(k_groups * k_groups - 1 AS DOUBLE) / (3.0 * l)
-                  END, 6) AS df2,
-                round(CASE WHEN k_groups > 1 AND l >= 0 THEN
-                  (a / CAST(k_groups - 1 AS DOUBLE))
-                    / (1.0 + 2.0 * CAST(k_groups - 2 AS DOUBLE)
-                      / CAST(k_groups * k_groups - 1 AS DOUBLE) * l)
-                  END, 6) AS welch_f
-         FROM t2""",
-    // Hypergeometric support rebuilt by generate_series; probabilities
-    // relative to the observed table via the exact rational ln-step
-    // recurrence, anchored, exp'd, and summed by ordered prefix.
-    "q_fisher_exact" ->
-      """WITH cm AS (SELECT
-                  CAST(sum(CASE WHEN lang = 'en' AND source = 'src0'
-                    THEN 1 ELSE 0 END) AS BIGINT) AS a,
-                  CAST(sum(CASE WHEN lang = 'en' AND source <> 'src0'
-                    THEN 1 ELSE 0 END) AS BIGINT) AS b,
-                  CAST(sum(CASE WHEN lang <> 'en' AND source = 'src0'
-                    THEN 1 ELSE 0 END) AS BIGINT) AS c,
-                  CAST(sum(CASE WHEN lang <> 'en' AND source <> 'src0'
-                    THEN 1 ELSE 0 END) AS BIGINT) AS d
-                FROM documents
-                WHERE lang IS NOT NULL AND source IS NOT NULL),
-              g AS (SELECT a, b, c, d, a + b + c + d AS n,
-                      a + b AS r1, a + c AS c1,
-                      greatest(0, (a + b) + (a + c) - (a + b + c + d))
-                        AS kmin,
-                      least(a + b, a + c) AS kmax
-                    FROM cm),
-              grid AS (SELECT g.*, u.k
-                       FROM g, UNNEST(generate_series(kmin, kmax))
-                         AS u(k)),
-              st AS (SELECT *, CASE WHEN k < kmax THEN
-                       ln(CAST((r1 - k) * (c1 - k) AS DOUBLE)
-                         / CAST((k + 1) * (n - r1 - c1 + k + 1)
-                           AS DOUBLE)) ELSE 0.0 END AS step
-                     FROM grid),
-              cu AS (SELECT *, COALESCE(sum(step) OVER (ORDER BY k
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0.0) AS cum
-                     FROM st),
-              an AS (SELECT *, max(CASE WHEN k = a THEN cum END)
-                       OVER () AS anchor
-                     FROM cu),
-              ra AS (SELECT *, exp(cum - anchor) AS ratio FROM an),
-              f2 AS (SELECT *, sum(ratio) OVER ow AS ct,
-                       sum(CASE WHEN ratio <= 1.0 + 1e-7 THEN ratio
-                           ELSE 0.0 END) OVER ow AS ce,
-                       sum(CASE WHEN k >= a THEN ratio ELSE 0.0 END)
-                         OVER ow AS cr,
-                       sum(CASE WHEN k <= a THEN ratio ELSE 0.0 END)
-                         OVER ow AS cl
-                     FROM ra
-                     WINDOW ow AS (ORDER BY k ROWS BETWEEN
-                       UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT max(a) AS a, max(b) AS b, max(c) AS c, max(d) AS d,
-                round(CASE WHEN max(b) * max(c) > 0 THEN
-                  CAST(max(a) * max(d) AS DOUBLE)
-                    / CAST(max(b) * max(c) AS DOUBLE) END, 6)
-                  AS odds_ratio,
-                round(least(max(ce) / max(ct), 1.0), 6) AS p_two_sided,
-                round(least(max(cr) / max(ct), 1.0), 6) AS p_greater,
-                round(least(max(cl) / max(ct), 1.0), 6) AS p_less
-         FROM f2""",
-    // Exact integer counts into two single-rounding asin calls.
-    "q_cohens_h" ->
-      """WITH a AS (SELECT
-                  CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n1,
-                  CAST(sum(CASE WHEN source = 'src0' AND lang = 'en'
-                    THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                  CAST(sum(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n2,
-                  CAST(sum(CASE WHEN source <> 'src0' AND lang = 'en'
-                    THEN 1 ELSE 0 END) AS BIGINT) AS k2
-                FROM documents
-                WHERE source IS NOT NULL AND lang IS NOT NULL)
-         SELECT n1, n2,
-                round(CAST(k1 AS DOUBLE) / CAST(n1 AS DOUBLE), 6) AS p1,
-                round(CAST(k2 AS DOUBLE) / CAST(n2 AS DOUBLE), 6) AS p2,
-                round(CASE WHEN n1 > 0 AND n2 > 0 THEN
-                  2.0 * asin(sqrt(CAST(k1 AS DOUBLE) / CAST(n1 AS DOUBLE)))
-                    - 2.0 * asin(sqrt(CAST(k2 AS DOUBLE)
-                      / CAST(n2 AS DOUBLE))) END, 6) AS cohens_h
-         FROM a""",
-    // The engine's in-codegen array fold replayed as a recursive CTE:
-    // identical seed (l = y2, b = y2 - y1), identical update order.
-    "q_holt_linear" ->
-      """WITH RECURSIVE daily AS (SELECT event_type AS g,
-                          date_trunc('day', ts) AS d,
-                          CAST(count(*) AS DOUBLE) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              s AS (SELECT g, y, row_number() OVER (PARTITION BY g
-                      ORDER BY d) AS rn
-                    FROM daily),
-              gn AS (SELECT g, CAST(count(*) AS BIGINT) AS n
-                     FROM s GROUP BY 1),
-              init AS (SELECT a.g, b.y AS l, b.y - a.y AS b
-                       FROM s a JOIN s b
-                         ON b.g = a.g AND a.rn = 1 AND b.rn = 2),
-              st(g, rn, l, b, sse) AS (
-                SELECT g, CAST(2 AS BIGINT), l, b,
-                       CAST(0.0 AS DOUBLE) FROM init
-                UNION ALL
-                SELECT st.g, st.rn + 1,
-                       0.5 * s.y + 0.5 * (st.l + st.b),
-                       0.25 * ((0.5 * s.y + 0.5 * (st.l + st.b)) - st.l)
-                         + 0.75 * st.b,
-                       st.sse + (s.y - (st.l + st.b))
-                         * (s.y - (st.l + st.b))
-                FROM st JOIN s ON s.g = st.g AND s.rn = st.rn + 1),
-              fin AS (SELECT st.g, st.l, st.b, st.sse
-                      FROM st JOIN gn ON gn.g = st.g AND st.rn = gn.n)
-         SELECT gn.g AS event_type, gn.n AS n_days,
-                round(fin.l, 6) AS level, round(fin.b, 6) AS trend,
-                round(fin.l + fin.b, 6) AS forecast_next,
-                round(CASE WHEN gn.n > 2 THEN
-                  sqrt(fin.sse / CAST(gn.n - 2 AS DOUBLE)) END, 6)
-                  AS rmse
-         FROM gn LEFT JOIN fin ON fin.g = gn.g""",
-    // Calendar self-join on day-7, tenth-scaled integer losses, one
-    // exact division per (group, tau).
-    "q_pinball" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts)
-                          AS d, CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              j AS (SELECT c.g, c.y, p.y AS f
-                    FROM daily c JOIN daily p
-                      ON p.g = c.g AND c.d = p.d + INTERVAL 7 DAY),
-              t AS (SELECT g, y, f, unnest([1, 5, 9]) AS t10 FROM j),
-              l AS (SELECT g, t10,
-                      CASE WHEN y >= f THEN t10 * (y - f)
-                           ELSE (10 - t10) * (f - y) END AS loss10
-                    FROM t)
-         SELECT g AS event_type,
-                CAST(t10 AS DOUBLE) / 10.0 AS tau,
-                CAST(count(*) AS BIGINT) AS n_days,
-                round(CAST(SUM(loss10) AS DOUBLE)
-                  / CAST(10 * count(*) AS DOUBLE), 6) AS mean_pinball
-         FROM l GROUP BY 1, t10""",
-    // Welch moments per arm from exact cent integers; TOST shifts the
-    // numerator by +/-delta, algebra mirrored term for term.
-    "q_tost" ->
-      """WITH m AS (SELECT
-                  CAST(sum(CASE WHEN event_type = 'click' THEN 1
-                    ELSE 0 END) AS BIGINT) AS n_a,
-                  SUM(CASE WHEN event_type = 'click' THEN c END) AS sa,
-                  SUM(CASE WHEN event_type = 'click' THEN c * c END)
-                    AS ssa,
-                  CAST(sum(CASE WHEN event_type = 'view' THEN 1
-                    ELSE 0 END) AS BIGINT) AS n_b,
-                  SUM(CASE WHEN event_type = 'view' THEN c END) AS sb,
-                  SUM(CASE WHEN event_type = 'view' THEN c * c END)
-                    AS ssb
-                FROM (SELECT event_type,
-                        CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT) AS c
-                      FROM events
-                      WHERE value IS NOT NULL
-                        AND event_type IN ('click', 'view'))),
-              alg AS (SELECT n_a, n_b,
-                        CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE) / 100.0
-                          - CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE)
-                            / 100.0 AS d,
-                        (CAST(n_a * ssa - sa * sa AS DOUBLE)
-                          / CAST(n_a * (n_a - 1) AS DOUBLE) / 10000.0)
-                          / CAST(n_a AS DOUBLE) AS ra,
-                        (CAST(n_b * ssb - sb * sb AS DOUBLE)
-                          / CAST(n_b * (n_b - 1) AS DOUBLE) / 10000.0)
-                          / CAST(n_b AS DOUBLE) AS rb
-                      FROM m),
-              fin AS (SELECT *, sqrt(ra + rb) AS se,
-                        (ra + rb) * (ra + rb)
-                          / (ra * ra / CAST(n_a - 1 AS DOUBLE)
-                            + rb * rb / CAST(n_b - 1 AS DOUBLE)) AS dfw
-                      FROM alg)
-         SELECT n_a, n_b, round(d, 6) AS mean_diff, 2.0 AS delta,
-                round(se, 6) AS se,
-                round(CASE WHEN se > 0 THEN dfw END, 6) AS df_welch,
-                round(CASE WHEN se > 0 THEN (d + 2.0) / se END, 6)
-                  AS t_lower,
-                round(CASE WHEN se > 0 THEN (d - 2.0) / se END, 6)
-                  AS t_upper
-         FROM fin""",
-    // q_sign_test's midpoint half-split as the two measurements; exact
-    // integer difference moments, limits broadcast, outside recount.
-    "q_bland_altman" ->
-      """WITH sp AS (SELECT user_id AS u,
-                            min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi
-                     FROM events WHERE ts IS NOT NULL GROUP BY 1),
-              h AS (SELECT e.user_id AS u,
-                      CAST(SUM(CASE WHEN epoch_us(e.ts) * 2 <= sp.lo + sp.hi
-                        THEN 1 ELSE 0 END) AS BIGINT) AS m1,
-                      CAST(SUM(CASE WHEN epoch_us(e.ts) * 2 > sp.lo + sp.hi
-                        THEN 1 ELSE 0 END) AS BIGINT) AS m2
-                    FROM events e JOIN sp ON sp.u = e.user_id
-                    WHERE e.ts IS NOT NULL
-                    GROUP BY 1),
-              dd AS (SELECT CAST(m1 AS HUGEINT) - m2 AS d FROM h),
-              mom AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                        SUM(d) AS s, SUM(d * d) AS ss
-                      FROM dd),
-              lim AS (SELECT n,
-                        CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS m,
-                        CASE WHEN n > 1 THEN
-                          sqrt(CAST(n * ss - s * s AS DOUBLE)
-                            / CAST(n * (n - 1) AS DOUBLE)) END AS sd
-                      FROM mom),
-              lim2 AS (SELECT n, m, sd,
-                         CASE WHEN n > 1 THEN m - 1.96 * sd END AS lo,
-                         CASE WHEN n > 1 THEN m + 1.96 * sd END AS hi
-                       FROM lim)
-         SELECT max(l.n) AS n, round(max(l.m), 6) AS bias,
-                round(max(l.sd), 6) AS sd_diff,
-                round(max(l.lo), 6) AS loa_lower,
-                round(max(l.hi), 6) AS loa_upper,
-                CASE WHEN max(l.n) > 1 THEN
-                  CAST(sum(CASE WHEN CAST(dd.d AS DOUBLE) < l.lo
-                    OR CAST(dd.d AS DOUBLE) > l.hi THEN 1 ELSE 0 END)
-                    AS BIGINT) END AS n_outside,
-                CASE WHEN max(l.n) > 1 THEN
-                  round(CAST(sum(CASE WHEN CAST(dd.d AS DOUBLE) < l.lo
-                    OR CAST(dd.d AS DOUBLE) > l.hi THEN 1 ELSE 0 END)
-                    AS DOUBLE) / CAST(max(l.n) AS DOUBLE), 6) END
-                  AS pct_outside
-         FROM dd, lim2 l""",
-    // Midrank Borda points over the voter x candidate grid; dyadic
-    // point sums, final rank tie-broken by candidate.
-    "q_borda" ->
-      """WITH b AS (SELECT lang AS voter, source AS cand,
-                           CAST(count(*) AS BIGINT) AS score
-                    FROM documents
-                    WHERE lang IS NOT NULL AND source IS NOT NULL
-                    GROUP BY 1, 2),
-              r AS (SELECT voter, cand,
-                      rank() OVER (PARTITION BY voter
-                        ORDER BY score DESC) AS minr,
-                      count(*) OVER (PARTITION BY voter, score) AS ties,
-                      count(*) OVER (PARTITION BY voter) AS k
-                    FROM b),
-              p AS (SELECT cand, CAST(count(*) AS BIGINT) AS n_ballots,
-                      round(SUM(CAST(k AS DOUBLE)
-                        - (CAST(minr AS DOUBLE)
-                          + CAST(ties - 1 AS DOUBLE) / 2.0)), 6)
-                        AS borda_points
-                    FROM r GROUP BY 1)
-         SELECT cand AS source, n_ballots, borda_points,
-                CAST(rank() OVER (ORDER BY borda_points DESC, cand)
-                  AS INTEGER) AS borda_rank
-         FROM p""",
-    // 7-row sliding list windows, sorted element picks (dyadic medians
-    // of ints), flag constant folded identically.
-    "q_hampel" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts)
-                          AS d, CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              wn AS (SELECT g, d, y,
-                       list_sort(list(y) OVER (PARTITION BY g ORDER BY d
-                         ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING))
-                         AS win
-                     FROM daily),
-              f AS (SELECT * FROM wn WHERE len(win) = 7),
-              m AS (SELECT *,
-                      (CAST(win[(len(win) + 1) // 2] AS DOUBLE)
-                        + CAST(win[len(win) // 2 + 1] AS DOUBLE)) / 2.0
-                        AS med
-                    FROM f),
-              m2 AS (SELECT *, list_sort(list_transform(win,
-                       v -> abs(CAST(v AS DOUBLE) - med))) AS dv
-                     FROM m),
-              m3 AS (SELECT *,
-                       (dv[(len(dv) + 1) // 2]
-                         + dv[len(dv) // 2 + 1]) / 2.0 AS mad
-                     FROM m2)
-         SELECT g AS event_type, d AS day, y AS n_events,
-                round(med, 6) AS local_median,
-                round(mad, 6) AS local_mad,
-                round(CASE WHEN mad > 0 THEN
-                  abs(CAST(y AS DOUBLE) - med) / (1.4826 * mad) END, 6)
-                  AS robust_z,
-                abs(CAST(y AS DOUBLE) - med) > 3.0 * 1.4826 * mad
-                  AS is_outlier
-         FROM m3""",
-    // Weekly block maxima -> exact integer moments; the three
-    // transcendental constants are the SAME driver-side doubles
-    // interpolated into both plans (shortest-round-trip printing).
-    "q_gumbel_fit" ->
-      s"""WITH daily AS (SELECT event_type AS g, date_trunc('day', ts)
-                           AS d, CAST(count(*) AS BIGINT) AS y
-                         FROM events WHERE ts IS NOT NULL
-                         GROUP BY 1, 2),
-              weekly AS (SELECT g, date_trunc('week', d) AS wk,
-                           max(y) AS m
-                         FROM daily GROUP BY 1, 2),
-              mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n_blocks,
-                        SUM(CAST(m AS HUGEINT)) AS s,
-                        SUM(CAST(m AS HUGEINT) * m) AS ss
-                      FROM weekly GROUP BY 1 HAVING count(*) > 1),
-              alg AS (SELECT g, n_blocks,
-                        CAST(s AS DOUBLE) / CAST(n_blocks AS DOUBLE)
-                          AS mean,
-                        sqrt(CAST(n_blocks * ss - s * s AS DOUBLE)
-                          / CAST(n_blocks * (n_blocks - 1) AS DOUBLE))
-                          AS sd
-                      FROM mom),
-              fit AS (SELECT *, sd * ${TimeSeries.GumbelC.sqrt6OverPi}
-                        AS beta
-                      FROM alg),
-              fit2 AS (SELECT *, mean
-                         - ${TimeSeries.GumbelC.eulerGamma} * beta AS mu
-                       FROM fit)
-         SELECT g AS event_type, n_blocks,
-                round(mean, 6) AS block_mean, round(sd, 6) AS block_sd,
-                round(beta, 6) AS gumbel_beta, round(mu, 6) AS gumbel_mu,
-                round(mu - beta * ${TimeSeries.GumbelC.lnln99}, 6)
-                  AS return_level_100
-         FROM fit2""",
-    // Weekday-mean residuals; BOTH variance folds are ordered prefix
-    // cumsums over the per-group day grid, read at the last day.
-    "q_seasonal_strength" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts)
-                          AS d, CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              dw AS (SELECT g, dayofweek(d) AS w, SUM(y) AS sd,
-                       CAST(count(*) AS BIGINT) AS nd
-                     FROM daily GROUP BY 1, 2),
-              j AS (SELECT daily.g, daily.d, CAST(y AS DOUBLE) AS yd,
-                      CAST(y AS DOUBLE)
-                        - CAST(sd AS DOUBLE) / CAST(nd AS DOUBLE) AS r
-                    FROM daily JOIN dw
-                      ON dw.g = daily.g AND dw.w = dayofweek(daily.d)),
-              f AS (SELECT g, d,
-                      count(*) OVER w AS cn, sum(yd) OVER w AS cy,
-                      sum(yd * yd) OVER w AS cyy, sum(r * r) OVER w AS crr
-                    FROM j
-                    WINDOW w AS (PARTITION BY g ORDER BY d ROWS BETWEEN
-                      UNBOUNDED PRECEDING AND CURRENT ROW)),
-              last AS (SELECT * FROM (SELECT *, row_number() OVER
-                         (PARTITION BY g ORDER BY d DESC) AS rn FROM f)
-                       WHERE rn = 1),
-              alg AS (SELECT g, CAST(cn AS BIGINT) AS n_days,
-                        (cyy - cy * cy / CAST(cn AS DOUBLE))
-                          / CAST(cn AS DOUBLE) AS vy,
-                        crr / CAST(cn AS DOUBLE) AS vr
-                      FROM last)
-         SELECT g AS event_type, n_days,
-                round(vy, 6) AS var_total, round(vr, 6) AS var_residual,
-                round(CASE WHEN vy > 0 THEN
-                  greatest(0.0, 1.0 - vr / vy) END, 6)
-                  AS seasonal_strength
-         FROM alg""",
-    // Snapped-dyadic hour angles (exact integer x dyadic sums in any
-    // order); one atan2 + sqrt, constants interpolated.
-    "q_circular_hours" ->
-      s"""WITH cnt AS (SELECT event_type AS g, hour(ts) AS h,
-                         CAST(count(*) AS BIGINT) AS c
-                       FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-              m AS (SELECT g, c,
-                      (CAST([${TimeSeries.circularCos24.mkString(", ")}]
-                        AS DOUBLE[]))[h + 1] AS cs,
-                      (CAST([${TimeSeries.circularSin24.mkString(", ")}]
-                        AS DOUBLE[]))[h + 1] AS sn
-                    FROM cnt),
-              a AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n_events,
-                      SUM(c * cs) AS sc, SUM(c * sn) AS ss
-                    FROM m GROUP BY 1)
-         SELECT g AS event_type, n_events,
-                round(sqrt(sc * sc + ss * ss)
-                  / CAST(n_events AS DOUBLE), 6) AS resultant,
-                round(1.0 - sqrt(sc * sc + ss * ss)
-                  / CAST(n_events AS DOUBLE), 6) AS circular_variance,
-                round(atan2(ss, sc) * ${TimeSeries.twelveOverPi}, 6)
-                  AS mean_hour_signed
-         FROM a""",
-    // Leave-one-fold-out training grids by global-minus-fold
-    // subtraction over the densified fold x value grid; per-fold
-    // argmax carries the held-out confusion.
-    "q_stump_cv" ->
-      """WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS v,
-                         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-                         doc_id % 4 AS f
-                       FROM documents
-                       WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-                         AND doc_id IS NOT NULL),
-              gf AS (SELECT f, v, CAST(count(*) AS BIGINT) AS c,
-                       CAST(sum(y) AS BIGINT) AS p
-                     FROM base GROUP BY 1, 2),
-              vg AS (SELECT v, CAST(count(*) AS BIGINT) AS ca,
-                       CAST(sum(y) AS BIGINT) AS pa
-                     FROM base GROUP BY 1),
-              fl AS (SELECT DISTINCT f FROM base),
-              dense AS (SELECT fl.f, vg.v, vg.ca, vg.pa,
-                          COALESCE(gf.c, 0) AS c, COALESCE(gf.p, 0) AS p
-                        FROM vg CROSS JOIN fl
-                        LEFT JOIN gf ON gf.f = fl.f AND gf.v = vg.v),
-              cw AS (SELECT f, v,
-                       sum(ca) OVER wv - sum(c) OVER wv AS tl,
-                       sum(pa) OVER wv - sum(p) OVER wv AS pl,
-                       sum(ca) OVER wf - sum(c) OVER wf AS n,
-                       sum(pa) OVER wf - sum(p) OVER wf AS pp,
-                       sum(c) OVER wv AS hc, sum(p) OVER wv AS hp,
-                       sum(c) OVER wf AS hn, sum(p) OVER wf AS hpp
-                     FROM dense
-                     WINDOW wv AS (PARTITION BY f ORDER BY v ROWS BETWEEN
-                       UNBOUNDED PRECEDING AND CURRENT ROW),
-                       wf AS (PARTITION BY f ROWS BETWEEN
-                         UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)),
-              cand AS (SELECT *,
-                         (1.0 - (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                            * (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                            - (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE))
-                            * (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE)))
-                         - (CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              * (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              - (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE))
-                              * (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE)))
-                         - (CAST(n - tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              - (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))) AS g
-                       FROM cw WHERE tl > 0 AND tl < n),
-              best AS (SELECT * FROM (SELECT *, row_number() OVER
-                         (PARTITION BY f ORDER BY g DESC, v ASC) AS rn
-                       FROM cand) WHERE rn = 1),
-              fin AS (SELECT f AS fold, v AS threshold,
-                        round(g, 6) AS train_gain,
-                        CAST(hn AS BIGINT) AS test_n,
-                        CAST((CASE WHEN pl * 2 > tl THEN hp
-                              ELSE hc - hp END)
-                          + (CASE WHEN (pp - pl) * 2 > (n - tl)
-                             THEN hpp - hp
-                             ELSE (hn - hc) - (hpp - hp) END) AS BIGINT)
-                          AS test_correct
-                      FROM best)
-         SELECT fold, threshold, train_gain, test_n, test_correct,
-                round(CASE WHEN test_n > 0 THEN
-                  CAST(test_correct AS DOUBLE) / CAST(test_n AS DOUBLE)
-                  END, 6) AS test_accuracy
-         FROM fin""",
-    // (gold, pred) contingency; per-cell masses n^2/margin folded by
-    // ordered prefix over the vocabulary-bounded cell grid.
-    "q_bcubed" ->
-      """WITH cont AS (SELECT lang AS g, source AS p,
-                         CAST(count(*) AS BIGINT) AS n
-                       FROM documents
-                       WHERE lang IS NOT NULL AND source IS NOT NULL
-                       GROUP BY 1, 2),
-              mp AS (SELECT p, CAST(SUM(n) AS BIGINT) AS np
-                     FROM cont GROUP BY 1),
-              mg AS (SELECT g, CAST(SUM(n) AS BIGINT) AS ng
-                     FROM cont GROUP BY 1),
-              f AS (SELECT cont.g, cont.p, n,
-                      sum(CAST(n * n AS DOUBLE) / CAST(np AS DOUBLE))
-                        OVER w AS pm,
-                      sum(CAST(n * n AS DOUBLE) / CAST(ng AS DOUBLE))
-                        OVER w AS rm
-                    FROM cont JOIN mp USING (p) JOIN mg USING (g)
-                    WINDOW w AS (ORDER BY g, p ROWS BETWEEN
-                      UNBOUNDED PRECEDING AND CURRENT ROW)),
-              a AS (SELECT CAST(SUM(n) AS BIGINT) AS n_items,
-                      CAST(count(DISTINCT p) AS BIGINT)
-                        AS n_pred_clusters,
-                      CAST(count(DISTINCT g) AS BIGINT)
-                        AS n_gold_classes,
-                      (SELECT pm FROM f ORDER BY g DESC, p DESC LIMIT 1)
-                        AS sp,
-                      (SELECT rm FROM f ORDER BY g DESC, p DESC LIMIT 1)
-                        AS sr
-                    FROM f)
-         SELECT n_items, n_pred_clusters, n_gold_classes,
-                round(sp / CAST(n_items AS DOUBLE), 6)
-                  AS bcubed_precision,
-                round(sr / CAST(n_items AS DOUBLE), 6) AS bcubed_recall,
-                round(CASE WHEN sp / CAST(n_items AS DOUBLE)
-                    + sr / CAST(n_items AS DOUBLE) > 0 THEN
-                  2.0 * (sp / CAST(n_items AS DOUBLE))
-                    * (sr / CAST(n_items AS DOUBLE))
-                    / (sp / CAST(n_items AS DOUBLE)
-                      + sr / CAST(n_items AS DOUBLE)) END, 6)
-                  AS bcubed_f1
-         FROM a""",
-    // Entropy partials in the single-log fold form over the bounded
-    // contingency and margins; h/c/V mirrored term for term.
-    "q_v_measure" ->
-      """WITH cont AS (SELECT lang AS g, source AS p,
-                         CAST(count(*) AS BIGINT) AS n
-                       FROM documents
-                       WHERE lang IS NOT NULL AND source IS NOT NULL
-                       GROUP BY 1, 2),
-              cells AS (SELECT CAST(SUM(n) AS BIGINT) AS nn,
-                          SUM(CAST(n AS DOUBLE) * ln(CAST(n AS DOUBLE)))
-                            AS scell
-                        FROM cont),
-              mp AS (SELECT SUM(CAST(c AS DOUBLE)
-                         * ln(CAST(c AS DOUBLE))) AS sp2,
-                       CAST(count(*) AS BIGINT) AS n_pred_clusters
-                     FROM (SELECT p, CAST(SUM(n) AS BIGINT) AS c
-                           FROM cont GROUP BY 1)),
-              mg AS (SELECT SUM(CAST(c AS DOUBLE)
-                         * ln(CAST(c AS DOUBLE))) AS sg2,
-                       CAST(count(*) AS BIGINT) AS n_gold_classes
-                     FROM (SELECT g, CAST(SUM(n) AS BIGINT) AS c
-                           FROM cont GROUP BY 1)),
-              alg AS (SELECT nn, n_pred_clusters, n_gold_classes,
-                        ln(CAST(nn AS DOUBLE))
-                          - sg2 / CAST(nn AS DOUBLE) AS hg,
-                        ln(CAST(nn AS DOUBLE))
-                          - sp2 / CAST(nn AS DOUBLE) AS hp,
-                        (sp2 - scell) / CAST(nn AS DOUBLE) AS hggp,
-                        (sg2 - scell) / CAST(nn AS DOUBLE) AS hpgg
-                      FROM cells, mp, mg),
-              hc AS (SELECT *,
-                       CASE WHEN hg > 0 THEN 1.0 - hggp / hg
-                            ELSE 1.0 END AS hom,
-                       CASE WHEN hp > 0 THEN 1.0 - hpgg / hp
-                            ELSE 1.0 END AS comp
-                     FROM alg)
-         SELECT nn AS n_items, n_pred_clusters, n_gold_classes,
-                round(hom, 6) AS homogeneity,
-                round(comp, 6) AS completeness,
-                round(CASE WHEN hom + comp > 0 THEN
-                  2.0 * hom * comp / (hom + comp) END, 6) AS v_measure
-         FROM hc""",
-    // Two calendar equi-joins (day-7, day-1); exact integer squared
-    // errors; two sqrt + one division.
-    "q_theils_u2" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts)
-                          AS d, CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              j AS (SELECT c.g, c.y, w.y AS fm, p.y AS fn
-                    FROM daily c
-                    JOIN daily w ON w.g = c.g
-                      AND c.d = w.d + INTERVAL 7 DAY
-                    JOIN daily p ON p.g = c.g
-                      AND c.d = p.d + INTERVAL 1 DAY),
-              a AS (SELECT g, CAST(count(*) AS BIGINT) AS n_days,
-                      SUM(CAST(fm - y AS HUGEINT) * (fm - y)) AS sm,
-                      SUM(CAST(fn - y AS HUGEINT) * (fn - y)) AS sn2
-                    FROM j GROUP BY 1)
-         SELECT g AS event_type, n_days,
-                round(sqrt(CAST(sm AS DOUBLE)
-                  / CAST(n_days AS DOUBLE)), 6) AS rmse_seasonal,
-                round(sqrt(CAST(sn2 AS DOUBLE)
-                  / CAST(n_days AS DOUBLE)), 6) AS rmse_naive,
-                round(CASE WHEN sqrt(CAST(sn2 AS DOUBLE)
-                    / CAST(n_days AS DOUBLE)) > 0 THEN
-                  sqrt(CAST(sm AS DOUBLE) / CAST(n_days AS DOUBLE))
-                    / sqrt(CAST(sn2 AS DOUBLE)
-                      / CAST(n_days AS DOUBLE)) END, 6) AS theils_u2
-         FROM a""",
-    // Grid-assigned activity quartiles (integer cum*4/N), per-stratum
-    // exact cent outcome means, overall ATE = ordered-prefix weighted
-    // fold read at the last stratum.
-    "q_strat_ate" ->
-      """WITH u AS (SELECT user_id,
-                      sum(CASE WHEN event_type = 'purchase' THEN 1
-                          ELSE 0 END) * 5 > count(*) AS treated,
-                      CAST(count(*) AS BIGINT) AS n_events,
-                      CAST(COALESCE(SUM(CASE WHEN event_type = 'view' THEN
-                        CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT) END), 0) AS DOUBLE) / 100.0
-                        AS view_value
-                    FROM events
-                    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-                    GROUP BY 1),
-              g2 AS (SELECT n_events AS v, CAST(count(*) AS BIGINT) AS c
-                     FROM u GROUP BY 1),
-              st AS (SELECT v, least(4, CAST(floor(
-                       CAST(prev * 4 AS DOUBLE) / CAST(n AS DOUBLE))
-                       AS BIGINT) + 1) AS stratum
-                     FROM (SELECT v, c,
-                             COALESCE(sum(c) OVER (ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND 1 PRECEDING), 0) AS prev,
-                             sum(c) OVER () AS n
-                           FROM g2)),
-              sg AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_s,
-                       CAST(sum(CASE WHEN treated THEN 1 ELSE 0 END)
-                         AS BIGINT) AS n_treat,
-                       CAST(sum(CASE WHEN treated THEN 0 ELSE 1 END)
-                         AS BIGINT) AS n_ctrl,
-                       SUM(CASE WHEN treated THEN vq END) AS yt,
-                       SUM(CASE WHEN NOT treated THEN vq END) AS yc
-                     FROM (SELECT u.treated, st.stratum,
-                             CAST(CAST(u.view_value AS DECIMAL(20,2))
-                               * 100 AS HUGEINT) AS vq
-                           FROM u JOIN st ON u.n_events = st.v
-                           WHERE u.view_value IS NOT NULL)
-                     GROUP BY 1
-                     HAVING sum(CASE WHEN treated THEN 1 ELSE 0 END) > 0
-                        AND sum(CASE WHEN treated THEN 0 ELSE 1 END) > 0),
-              f AS (SELECT stratum, n_s, n_treat, n_ctrl,
-                      CAST(yt AS DOUBLE) / CAST(n_treat AS DOUBLE)
-                        / 100.0 AS mt,
-                      CAST(yc AS DOUBLE) / CAST(n_ctrl AS DOUBLE)
-                        / 100.0 AS mc,
-                      sum(n_s) OVER () AS nu
-                    FROM sg),
-              f2 AS (SELECT *, sum((CAST(n_s AS DOUBLE)
-                       / CAST(nu AS DOUBLE)) * (mt - mc))
-                       OVER (ORDER BY stratum
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cum
-                     FROM f),
-              tot AS (SELECT CAST(count(*) AS BIGINT) AS k_strata,
-                        CAST(max(nu) AS BIGINT) AS n_used,
-                        round((SELECT cum FROM f2
-                               ORDER BY stratum DESC LIMIT 1), 6) AS ate
-                      FROM f2)
-         SELECT stratum, n_s, n_treat, n_ctrl,
-                round(mt, 6) AS mean_treat, round(mc, 6) AS mean_ctrl,
-                round(mt - mc, 6) AS diff, k_strata, n_used, ate
-         FROM f2, tot""",
-    // Exact integer |n*y - sy| under the arg-max (ties -> earliest day);
-    // s mirrors the engine's division order term for term.
-    "q_grubbs" ->
-      """WITH daily AS (SELECT event_type AS g, date_trunc('day', ts) AS d,
-                               CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              m AS (SELECT g, CAST(count(*) AS BIGINT) AS n_days,
-                           CAST(SUM(y) AS HUGEINT) AS sy,
-                           SUM(CAST(y AS HUGEINT) * y) AS syy
-                    FROM daily GROUP BY 1),
-              top AS (SELECT daily.g, d,
-                             abs(CAST(y AS HUGEINT) * n_days - sy) AS sdev,
-                             ROW_NUMBER() OVER (PARTITION BY daily.g
-                               ORDER BY abs(CAST(y AS HUGEINT) * n_days - sy)
-                                 DESC, d ASC) AS rn
-                      FROM daily JOIN m ON m.g = daily.g)
-         SELECT m.g AS event_type, n_days, top.d AS worst_day,
-                round(CASE WHEN n_days > 2
-                        AND CAST(n_days * syy - sy * sy AS DOUBLE) > 0
-                  THEN CAST(sdev AS DOUBLE) / CAST(n_days AS DOUBLE)
-                       / sqrt(CAST(n_days * syy - sy * sy AS DOUBLE)
-                           / CAST(n_days AS DOUBLE)
-                           / (CAST(n_days AS DOUBLE) - 1.0)) END, 6)
-                  AS g_stat
-         FROM m JOIN top ON top.g = m.g AND rn = 1""",
-    // Exact integer half counts (2*us <= lo+hi puts boundary events in
-    // the first half on both engines).
-    "q_sign_test" ->
-      """WITH sp AS (SELECT user_id AS u,
-                            min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi
-                     FROM events WHERE ts IS NOT NULL GROUP BY 1),
-              h AS (SELECT e.user_id AS u,
-                      CAST(SUM(CASE WHEN epoch_us(e.ts) * 2 <= sp.lo + sp.hi
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                      CAST(SUM(CASE WHEN epoch_us(e.ts) * 2 > sp.lo + sp.hi
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n2
-                    FROM events e JOIN sp ON sp.u = e.user_id
-                    WHERE e.ts IS NOT NULL
-                    GROUP BY 1),
-              sg AS (SELECT u, CAST(sign(n2 - n1) AS INTEGER) AS s FROM h),
-              ag AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
-                       CAST(SUM(CASE WHEN s = 1 THEN 1 ELSE 0 END)
-                         AS BIGINT) AS n_plus,
-                       CAST(SUM(CASE WHEN s = -1 THEN 1 ELSE 0 END)
-                         AS BIGINT) AS n_minus,
-                       CAST(SUM(CASE WHEN s = 0 THEN 1 ELSE 0 END)
-                         AS BIGINT) AS n_tie
-                     FROM sg)
-         SELECT n_users, n_plus, n_minus, n_tie,
-                round(CASE WHEN n_plus + n_minus > 0
-                  THEN CAST(n_plus - n_minus AS DOUBLE)
-                       / sqrt(CAST(n_plus + n_minus AS DOUBLE)) END, 6)
-                  AS z_stat
-         FROM ag""",
-    // Global lower median from the distinct-value grid; chi2 from exact
-    // integer O/E arithmetic; ties at-or-below on both engines.
-    "q_moods_median" ->
-      """WITH base AS (SELECT event_type AS g,
-                              round(CAST(value AS DOUBLE), 6) AS v
-                       FROM events
-                       WHERE value IS NOT NULL AND event_type IS NOT NULL),
-              grid AS (SELECT v, CAST(count(*) AS BIGINT) AS w
-                       FROM base GROUP BY 1),
-              cum AS (SELECT v, CAST(SUM(w) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS BIGINT) AS c,
-                             CAST(SUM(w) OVER () AS BIGINT) AS tw
-                      FROM grid),
-              med AS (SELECT min(v) AS m FROM cum WHERE c * 2 >= tw),
-              cont AS (SELECT g,
-                         CAST(SUM(CASE WHEN v > m THEN 1 ELSE 0 END)
-                           AS BIGINT) AS n_above,
-                         CAST(SUM(CASE WHEN v <= m THEN 1 ELSE 0 END)
-                           AS BIGINT) AS n_at_or_below
-                       FROM base, med GROUP BY 1),
-              tot AS (SELECT CAST(SUM(n_above) AS BIGINT) AS ta,
-                             CAST(SUM(n_at_or_below) AS BIGINT) AS tb,
-                             CAST(count(*) AS BIGINT) AS k_groups
-                      FROM cont),
-              chi AS (SELECT max(k_groups) AS k_groups,
-                        CAST(SUM(n_above + n_at_or_below) AS BIGINT) AS n,
-                        SUM((CASE WHEN CAST(n_above + n_at_or_below AS DOUBLE)
-                                * ta / (ta + tb) > 0
-                          THEN (n_above - CAST(n_above + n_at_or_below
-                                AS DOUBLE) * ta / (ta + tb))
-                             * (n_above - CAST(n_above + n_at_or_below
-                                AS DOUBLE) * ta / (ta + tb))
-                             / (CAST(n_above + n_at_or_below AS DOUBLE)
-                                * ta / (ta + tb)) ELSE 0.0 END)
-                          + (CASE WHEN CAST(n_above + n_at_or_below
-                                AS DOUBLE) * tb / (ta + tb) > 0
-                          THEN (n_at_or_below - CAST(n_above + n_at_or_below
-                                AS DOUBLE) * tb / (ta + tb))
-                             * (n_at_or_below - CAST(n_above + n_at_or_below
-                                AS DOUBLE) * tb / (ta + tb))
-                             / (CAST(n_above + n_at_or_below AS DOUBLE)
-                                * tb / (ta + tb)) ELSE 0.0 END)) AS chi2
-                      FROM cont, tot)
-         SELECT n, k_groups, m AS global_median,
-                CAST(k_groups - 1 AS BIGINT) AS dof,
-                round(CASE WHEN k_groups > 1 THEN chi2 END, 6) AS chi2
-         FROM chi, med""",
-    "q_adf" ->
-      """WITH obs AS (SELECT event_type AS g, date_trunc('day', ts) AS d,
-                               CAST(count(*) AS BIGINT) AS y
-                        FROM events WHERE ts IS NOT NULL
-                        GROUP BY 1, 2),
-              cal AS (SELECT g, unnest(generate_series(min(d), max(d),
-                               INTERVAL 1 DAY)) AS d
-                      FROM obs GROUP BY g),
-              daily AS (SELECT cal.g, cal.d, COALESCE(obs.y, 0) AS y
-                        FROM cal LEFT JOIN obs
-                          ON obs.g = cal.g AND obs.d = cal.d),
-              lagd AS (SELECT g, y,
-                              lag(y) OVER (PARTITION BY g ORDER BY d) AS x
-                       FROM daily),
-              d2 AS (SELECT g, x, y - x AS dy FROM lagd
-                     WHERE x IS NOT NULL),
-              m AS (SELECT g, CAST(count(*) AS BIGINT) AS n_days,
-                           CAST(SUM(x) AS HUGEINT) AS sx,
-                           CAST(SUM(dy) AS HUGEINT) AS sy,
-                           SUM(CAST(x AS HUGEINT) * dy) AS sxy,
-                           SUM(CAST(x AS HUGEINT) * x) AS sxx,
-                           SUM(CAST(dy AS HUGEINT) * dy) AS syy
-                    FROM d2 GROUP BY 1),
-              f AS (SELECT g, n_days,
-                           CAST(n_days * sxx - sx * sx AS DOUBLE) AS sxxc,
-                           CAST(n_days * sxy - sx * sy AS DOUBLE) AS sxyc,
-                           CAST(n_days * syy - sy * sy AS DOUBLE) AS syyc
-                    FROM m)
-         SELECT g AS event_type, n_days,
-                round(CASE WHEN sxxc > 0 THEN sxyc / sxxc END, 6) AS gamma,
-                round(CASE WHEN n_days > 2 AND sxxc > 0
-                        AND (syyc - (sxyc / sxxc) * sxyc) > 0
-                  THEN (sxyc / sxxc)
-                       / sqrt((syyc - (sxyc / sxxc) * sxyc)
-                           / CAST(n_days AS DOUBLE)
-                           / (CAST(n_days AS DOUBLE) - 2.0)
-                           / (sxxc / CAST(n_days AS DOUBLE))) END, 6)
-                  AS adf_stat
-         FROM f""",
-    // Exact cent-unit moments per side; closing algebra mirrors
-    // regressionDiscontinuity term for term.
-    "q_rdd" ->
-      """WITH base AS (SELECT (CAST(l_quantity AS DOUBLE) >= 25.5) AS r,
-                         CAST(round(CAST(l_quantity AS DOUBLE) * 100.0)
-                           - 2550 AS BIGINT) AS x,
-                         CAST(round(CAST(l_extendedprice AS DOUBLE) * 100.0)
-                           AS BIGINT) AS y
-                       FROM lineitem
-                       WHERE l_quantity IS NOT NULL
-                         AND l_extendedprice IS NOT NULL
-                         AND abs(CAST(l_quantity AS DOUBLE) - 25.5) <= 20.0),
-              m AS (SELECT
-                      CAST(SUM(CASE WHEN NOT r THEN 1 ELSE 0 END)
-                        AS BIGINT) AS nl,
-                      SUM(CASE WHEN NOT r THEN CAST(x AS HUGEINT)
-                        ELSE 0 END) AS sxl,
-                      SUM(CASE WHEN NOT r THEN CAST(y AS HUGEINT)
-                        ELSE 0 END) AS syl,
-                      SUM(CASE WHEN NOT r THEN CAST(x AS HUGEINT) * y
-                        ELSE 0 END) AS sxyl,
-                      SUM(CASE WHEN NOT r THEN CAST(x AS HUGEINT) * x
-                        ELSE 0 END) AS sxxl,
-                      CAST(SUM(CASE WHEN r THEN 1 ELSE 0 END)
-                        AS BIGINT) AS nr,
-                      SUM(CASE WHEN r THEN CAST(x AS HUGEINT)
-                        ELSE 0 END) AS sxr,
-                      SUM(CASE WHEN r THEN CAST(y AS HUGEINT)
-                        ELSE 0 END) AS syr,
-                      SUM(CASE WHEN r THEN CAST(x AS HUGEINT) * y
-                        ELSE 0 END) AS sxyr,
-                      SUM(CASE WHEN r THEN CAST(x AS HUGEINT) * x
-                        ELSE 0 END) AS sxxr
-                    FROM base),
-              f AS (SELECT nl, nr,
-                      CASE WHEN nl > 1 AND (nl * sxxl - sxl * sxl) > 0
-                        THEN CAST(nl * sxyl - sxl * syl AS DOUBLE)
-                             / CAST(nl * sxxl - sxl * sxl AS DOUBLE)
-                        END AS sll,
-                      CASE WHEN nr > 1 AND (nr * sxxr - sxr * sxr) > 0
-                        THEN CAST(nr * sxyr - sxr * syr AS DOUBLE)
-                             / CAST(nr * sxxr - sxr * sxr AS DOUBLE)
-                        END AS slr,
-                      sxl, syl, sxr, syr
-                    FROM m),
-              g AS (SELECT nl, nr, sll, slr,
-                      CASE WHEN sll IS NOT NULL THEN
-                        (CAST(syl AS DOUBLE) - sll * CAST(sxl AS DOUBLE))
-                          / CAST(nl AS DOUBLE) / 100.0 END AS il,
-                      CASE WHEN slr IS NOT NULL THEN
-                        (CAST(syr AS DOUBLE) - slr * CAST(sxr AS DOUBLE))
-                          / CAST(nr AS DOUBLE) / 100.0 END AS ir
-                    FROM f)
-         SELECT nl AS n_left, nr AS n_right,
-                round(sll, 6) AS slope_left, round(slr, 6) AS slope_right,
-                round(il, 6) AS intercept_left,
-                round(ir, 6) AS intercept_right,
-                round(ir - il, 6) AS rd_jump
-         FROM g""",
-    "q_hellinger" ->
-      """WITH r AS (SELECT lang, CAST(count(*) AS BIGINT) AS nr
-                    FROM documents WHERE source = 'src0' GROUP BY 1),
-              c AS (SELECT lang, CAST(count(*) AS BIGINT) AS nc
-                    FROM documents WHERE source <> 'src0' GROUP BY 1),
-              bins AS (SELECT COALESCE(nr, 0) AS nr, COALESCE(nc, 0) AS nc
-                       FROM r FULL JOIN c USING (lang)),
-              a AS (SELECT CAST(count(*) AS BIGINT) AS n_bins,
-                           CAST(COALESCE(SUM(nr), 0) AS BIGINT) AS tr,
-                           CAST(COALESCE(SUM(nc), 0) AS BIGINT) AS tc,
-                           SUM(sqrt(CAST(nr AS DOUBLE) * nc)) AS sq
-                    FROM bins)
-         SELECT n_bins, tr AS n_ref, tc AS n_cur,
-                round(CASE WHEN tr > 0 AND tc > 0
-                  THEN sq / sqrt(CAST(tr AS DOUBLE) * tc) END, 6) AS bc_coef,
-                round(CASE WHEN tr > 0 AND tc > 0
-                  THEN sqrt(greatest(0.0, 1.0
-                    - sq / sqrt(CAST(tr AS DOUBLE) * tc))) END, 6)
-                  AS hellinger
-         FROM a""",
-    // The q_ks_per_source grid with SIGNED deviations: V = D+ + D-.
-    "q_kuiper" ->
-      """WITH b AS (SELECT event_type AS g,
-                           CAST(datediff('day', DATE '2024-01-01',
-                             CAST(ts AS DATE)) % 7 AS BIGINT) AS v
-                    FROM events WHERE ts IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid)
-         SELECT g AS event_type,
-                CAST(max(ng) AS BIGINT) AS n_group,
-                CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                CASE WHEN max(nt - ng) > 0 THEN
-                round(greatest(max(CASE WHEN nt > ng THEN
-                    CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                      - CAST(cumt - cumg AS DOUBLE)
-                        / CAST(nt - ng AS DOUBLE) END), 0.0)
-                  + greatest(max(CASE WHEN nt > ng THEN
-                    -(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                      - CAST(cumt - cumg AS DOUBLE)
-                        / CAST(nt - ng AS DOUBLE)) END), 0.0), 6)
-                END AS kuiper_v
-         FROM cum GROUP BY 1""",
-    // Exact 4*sum(rank^2) integer moments (midranks are half-integers);
-    // the closing algebra mirrors cucconiTest term for term.
-    "q_cucconi" ->
-      """WITH ps AS (SELECT round(CAST(value AS DOUBLE), 6) AS s,
-                       CAST(SUM(CASE WHEN event_type = 'click'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS cp,
-                       CAST(SUM(CASE WHEN event_type = 'click'
-                         THEN 0 ELSE 1 END) AS BIGINT) AS cn
-                     FROM events
-                     WHERE value IS NOT NULL AND event_type IS NOT NULL
-                     GROUP BY 1),
-              blk AS (SELECT cp, cn, cp + cn AS sz,
-                        CAST(COALESCE(SUM(cp + cn) OVER (ORDER BY s
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                          0) AS BIGINT) AS lo,
-                        CAST(SUM(cp + cn) OVER () AS BIGINT) AS nn
-                      FROM ps),
-              rk AS (SELECT cp, cn, nn, lo * 2 + sz + 1 AS r2,
-                            (nn + 1) * 2 - (lo * 2 + sz + 1) AS q2
-                     FROM blk),
-              ag AS (SELECT CAST(SUM(cp) AS BIGINT) AS n_x,
-                            CAST(SUM(cn) AS BIGINT) AS n_y,
-                            CAST(MAX(nn) AS BIGINT) AS nn,
-                            SUM(CAST(cp AS HUGEINT) * r2 * r2) AS s4,
-                            SUM(CAST(cp AS HUGEINT) * q2 * q2) AS c4
-                     FROM rk),
-              f AS (SELECT n_x, n_y,
-                      CAST(n_x AS DOUBLE) AS dm, CAST(n_y AS DOUBLE) AS dny,
-                      CAST(nn AS DOUBLE) AS dbn,
-                      CAST(s4 AS DOUBLE) AS ds4, CAST(c4 AS DOUBLE) AS dc4
-                    FROM ag),
-              g AS (SELECT n_x, n_y,
-                      (6.0 * ds4 / 4.0 - dm * (dbn + 1.0) * (2.0 * dbn + 1.0))
-                        / sqrt(dm * dny * (dbn + 1.0) * (2.0 * dbn + 1.0)
-                          * (8.0 * dbn + 11.0) / 5.0) AS u,
-                      (6.0 * dc4 / 4.0 - dm * (dbn + 1.0) * (2.0 * dbn + 1.0))
-                        / sqrt(dm * dny * (dbn + 1.0) * (2.0 * dbn + 1.0)
-                          * (8.0 * dbn + 11.0) / 5.0) AS v,
-                      2.0 * (dbn * dbn - 4.0)
-                        / ((2.0 * dbn + 1.0) * (8.0 * dbn + 11.0)) - 1.0
-                        AS rho
-                    FROM f)
-         SELECT n_x, n_y,
-                round(CASE WHEN n_x > 0 AND n_y > 0 THEN u END, 6) AS u_stat,
-                round(CASE WHEN n_x > 0 AND n_y > 0 THEN v END, 6) AS v_stat,
-                round(CASE WHEN n_x > 0 AND n_y > 0 AND rho * rho < 1.0
-                  THEN (u * u + v * v - 2.0 * rho * u * v)
-                       / (2.0 * (1.0 - rho * rho)) END, 6) AS cucconi_c
-         FROM g""",
-    // The q_assortativity pair graph with exact integer club counts.
-    "q_rich_club" ->
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 300),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a AS a, i.id_b AS b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM pairs
-                            UNION ALL SELECT b AS id FROM pairs)
-                      GROUP BY 1),
-              rc AS (SELECT CAST(k AS BIGINT) AS k
-                     FROM (VALUES (1), (2), (4)) v(k)),
-              nk AS (SELECT rc.k,
-                            CAST(SUM(CASE WHEN deg.dg > rc.k
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_nodes
-                     FROM rc CROSS JOIN deg GROUP BY 1),
-              pd AS (SELECT p.a, p.b, da.dg AS dga, db.dg AS dgb
-                     FROM pairs p
-                     JOIN deg da ON p.a = da.id
-                     JOIN deg db ON p.b = db.id),
-              ek AS (SELECT rc.k,
-                            CAST(SUM(CASE WHEN dga > rc.k AND dgb > rc.k
-                              THEN 1 ELSE 0 END) AS BIGINT) AS e_club
-                     FROM rc CROSS JOIN pd GROUP BY 1)
-         SELECT nk.k, nk.n_nodes, COALESCE(ek.e_club, 0) AS e_club,
-                round(CASE WHEN nk.n_nodes >= 2 THEN
-                  2.0 * CAST(COALESCE(ek.e_club, 0) AS DOUBLE)
-                    / (CAST(nk.n_nodes AS DOUBLE)
-                       * (CAST(nk.n_nodes AS DOUBLE) - 1.0)) END, 6) AS phi
-         FROM nk LEFT JOIN ek ON nk.k = ek.k""",
-  )
 }

@@ -28,13 +28,13 @@ object Tables {
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")
   /** The events table's `ts` physical type has drifted across testdata
     * generations: TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
-    * read nanos as long via the legacy conf and truncate with integer
-    * division; plain `/` would go through double and lose precision above
-    * 2^53 ns) and plain TIMESTAMP(MICROS) without the UTC-adjusted flag
-    * (which Spark reads as TIMESTAMP_NTZ). Either way, normalize to the
-    * session-zone TimestampType every downstream operator expects
-    * (watermarks, unix_micros, window()); under the UTC session the NTZ
-    * cast is a pure reinterpretation, matching DuckDB's naive reading. */
+    * read nanos as long via the legacy conf [[Sessions.local]] sets and
+    * truncate with integer division; plain `/` would go through double and
+    * lose precision above 2^53 ns) and plain TIMESTAMP(MICROS) without the
+    * UTC-adjusted flag (which Spark reads as TIMESTAMP_NTZ). Either way,
+    * normalize to the session-zone TimestampType every downstream operator
+    * expects (watermarks, unix_micros, window()); under the UTC session the
+    * NTZ cast is a pure reinterpretation, matching DuckDB's naive reading. */
   def normalizeEventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -43,16 +43,13 @@ object Tables {
       case _ => raw
     }
 
-  def events(spark: SparkSession, d: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, d: String): DataFrame =
     normalizeEventTs(load(spark, d, "events"))
-  }
 
-  /** Raw on-disk schema of the events parquet (ts as nanos long). */
-  def rawEventSchema(spark: SparkSession, d: String): org.apache.spark.sql.types.StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Raw on-disk schema of the events parquet (ts as nanos long under the
+    * [[Sessions.local]] conf). */
+  def rawEventSchema(spark: SparkSession, d: String): org.apache.spark.sql.types.StructType =
     load(spark, d, "events").schema
-  }
   def documents(spark: SparkSession, d: String): DataFrame = load(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = load(spark, d, "embeddings")
 }

@@ -1,14 +1,17 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+
+import org.apache.commons.io.FileUtils
+
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (dev loop; the driver
-    // always runs the full map)
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
+    // always runs the full registry)
+    val qs = if (args.length > 2) SparkEntry.named(args(2).split(",").toSeq)
+      else SparkEntry.registry
     // The session carries the full extension set (functions, GroupTopK
     // strategy, row_number→heap rewrite) for EVERY query: the oracle gate
     // doubles as the standing equivalence proof for the optimizer rule.
@@ -21,13 +24,17 @@ object Verify {
     if (sys.env.get("SPARK_GRAFT_AQE_OFF").contains("1"))
       spark.conf.set("spark.sql.adaptive.enabled", "false")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    qs.foreach { q =>
+      // A build that throws never starts the write, so a previous run's
+      // dump would survive and hash as OK: clear it first, and again on
+      // failure, so the oracle check reports the query as missing.
+      val out = new java.io.File(outDir, q.name)
+      FileUtils.deleteQuietly(out)
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(out.getPath)
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        FileUtils.deleteQuietly(out)
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -135,7 +135,8 @@ object EventStreams {
   }
 
   /** Session windows with a gap timeout (streaming-native sessionization;
-    * the batch twin is SparkEntry.q_sessionize's lag/sum formulation). */
+    * the batch twin is q_sessionize's lag/sum formulation in
+    * [[graft.queries.EventQueries]]). */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
@@ -147,7 +148,8 @@ object EventStreams {
   /** Session spans via Spark's native `session_window`: one row per
     * (user, session) with start (first event ts), end (last event ts + gap)
     * and aggregates. Works on static and streaming frames; the batch twin
-    * is oracle-checked (SparkEntry.q_session_window), stream/batch parity
+    * is oracle-checked (q_session_window in [[graft.queries.EventQueries]]),
+    * stream/batch parity
     * is asserted in StreamingSpec. */
   def sessionSpans(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events

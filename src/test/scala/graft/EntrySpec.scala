@@ -1,31 +1,39 @@
 package graft
 
-/** Smoke: the driver contract — entry() returns rows; every declared query
-  * runs at sf0.001 and every oracle key refers to a declared query. */
+import graft.queries.Q
+import graft.queries.Shared.{duckSentences, duckTokens, duckTokensOf}
+
+/** Smoke: the driver contract — entry() returns rows; the registry's names
+  * are unique and every oracle is real; every query runs at sf0.001. */
 class EntrySpec extends SparkSuite {
 
   test("entry returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
+    // collect, not count(): count() lets Catalyst prune projected columns
+    assert(SparkEntry.entry(spark).collect().nonEmpty)
   }
 
-  test("oracleSql keys are a subset of queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle entries without a query impl: $missing")
+  test("the registry declares 413 uniquely named queries") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 413 && names.distinct.size == 413)
   }
 
-  test("every query has an oracle, except the declared rows-only set") {
-    // The round-4 judge caught 7 queries shipped without oracles (one
-    // oracle even written but never registered). This pins the invariant:
-    // a new query MUST land with its oracle, or be explicitly declared
-    // rows-only here with a reason. Since round 8 the set is EMPTY: the
-    // three sketch-boundary queries emit exact-side columns + acceptance
-    // booleans their oracles pin to TRUE, so every query is hash-checked.
-    val rowsOnly = Set.empty[String]
-    val unverified = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unverified == rowsOnly,
-      s"queries without an oracle (add one or declare rows-only): " +
-        s"${unverified -- rowsOnly}; stale rows-only declarations: " +
-        s"${rowsOnly -- unverified}")
+  test("every oracle is non-blank") {
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+  }
+
+  test("a registry with a duplicate name fails its require") {
+    val q = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.unique(Seq(q, Q(q.name, "SELECT 1")(q.build))))
+    assert(e.getMessage.contains(q.name))
+  }
+
+  test("named rejects unknown names and lists every one") {
+    assert(SparkEntry.named(Seq(" q_pagerank", "")).map(_.name) == Seq("q_pagerank"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.named(Seq("q_no_such", "q_pagerank", "q_nor_this")))
+    assert(e.getMessage.contains("q_no_such") && e.getMessage.contains("q_nor_this"))
   }
 
   test("every oracle tokenizer use is the canonical guarded expression") {
@@ -34,11 +42,11 @@ class EntrySpec extends SparkSuite {
     // TextFunctions.tokens on edge-case rows.
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       val scrubbed = sql
-        .replace(SparkEntry.duckTokens, "")
-        .replace(SparkEntry.duckTokensOf("s"), "")
-        .replace(SparkEntry.duckTokensOf("coalesce(da.text, '')"), "")
-        .replace(SparkEntry.duckTokensOf("coalesce(db.text, '')"), "")
-        .replace(SparkEntry.duckSentences, "")
+        .replace(duckTokens, "")
+        .replace(duckTokensOf("s"), "")
+        .replace(duckTokensOf("coalesce(da.text, '')"), "")
+        .replace(duckTokensOf("coalesce(db.text, '')"), "")
+        .replace(duckSentences, "")
       assert(!scrubbed.contains("string_split_regex"),
         s"$name uses a tokenizer/splitter variant that differs from the " +
           "canonical guarded expressions")
