@@ -80,11 +80,6 @@ object TextFunctions {
       .otherwise(transform(sequence(lit(1), length(norm) - 2),
         i => norm.substr(i, lit(3))))
 
-  /** Convenience single-expression form for small/one-off inputs; for table
-    * scans stage [[letterNormalize]] into a column first (see caveat on
-    * [[charTrigramsOf]]). */
-  def charTrigrams(text: Column): Column = charTrigramsOf(letterNormalize(text))
-
   /** Fraction of a trigram-array column's entries that hit a language
     * profile (a small set of that language's most frequent trigrams) — 0
     * for empty arrays. The classic cheap n-gram language-ID signal. Pass a
@@ -93,10 +88,6 @@ object TextFunctions {
     when(size(tri) > 0,
       size(filter(tri, t => t.isin(profile.map(lit): _*))).cast("double") / size(tri))
       .otherwise(lit(0.0))
-
-  /** One-shot score from raw text (small inputs only — see caveats). */
-  def ngramProfileScore(text: Column, profile: Seq[String]): Column =
-    trigramProfileRatio(charTrigrams(text), profile)
 
   /** Frequent-trigram profiles (tiny, illustrative: production profiles are
     * learned from a labeled corpus — the expression shape is identical). */
@@ -116,13 +107,6 @@ object TextFunctions {
       when(s === bestScore && bestScore >= minScore, lit(lang)).otherwise(acc)
     }
   }
-
-  /** One-shot n-gram language ID from raw text (small inputs only; table
-    * scans should stage trigrams + scores as columns — see q_lang_ngram). */
-  def langIdNgram(text: Column, minScore: Double = 0.05): Column =
-    langGuessFromScores(
-      trigramProfiles.map { case (l, p) => l -> ngramProfileScore(text, p) },
-      minScore)
 
   /** RE2-compatible PII patterns (no lookaround/backrefs — the same strings
     * run in Java regex and DuckDB/RE2 for the oracle). Public so specs and

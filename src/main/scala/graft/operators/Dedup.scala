@@ -95,24 +95,23 @@ object Dedup {
     * bound the join fan-out; for word-shingles the fan-out is naturally
     * tiny because shingles are near-unique. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   threshold: Double, cacheSets: Boolean = true,
+                   threshold: Double,
                    maxDocFreq: Option[Long] = None): DataFrame =
     jaccardPairsFrom(tokenSets(docs, idCol, textCol), idCol, threshold,
-      cacheSets, maxDocFreq)
+      maxDocFreq)
 
   /** Jaccard pairs from ANY exploded (id, token) set relation — word
     * tokens, shingles, character n-grams, hashes. */
   def jaccardPairsFrom(sets0: DataFrame, idCol: String,
-                       threshold: Double, cacheSets: Boolean = true,
+                       threshold: Double,
                        maxDocFreq: Option[Long] = None): DataFrame = {
     // The set relation feeds three consumers (both join sides + the
-    // size table); caching computes the tokenize+distinct once. At corpus
-    // sizes beyond executor storage, pass cacheSets=false (recompute) or
-    // checkpoint the relation instead — don't pin 100 TB in memory.
-    val sets = if (cacheSets) sets0.cache() else sets0
+    // size table); caching computes the tokenize+distinct once
+    // (MEMORY_AND_DISK: spills rather than pins at corpus scale).
+    val sets = sets0.cache()
     // |A∪B| uses the FULL set sizes regardless of pruning (pruning only
     // shrinks the inverted index), so similarity is never overestimated.
-    val sizes = sets.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
+    val sizes = setSizes(sets, idCol)
     // Stop-token pruning — the 100 TB fan-out bound: a token present in f
     // documents contributes O(f²) join pairs, so ultra-frequent tokens
     // dominate shuffle volume while carrying almost no similarity signal.
@@ -127,20 +126,36 @@ object Dedup {
         sets.join(rare, Seq("token"), "left_semi").select(col(idCol), col("token"))
       case None => sets
     }
-    val a = index.toDF("id_a", "token")
-    val b = index.toDF("id_b", "token")
-    val inter = a.join(b, Seq("token"))
+    jaccardAtLeast(sharedTokens(index), sizes, threshold)
+  }
+
+  /** Per-set sizes (`idCol`, `set_size`) of an exploded (id, token) set. */
+  private def setSizes(sets: DataFrame, idCol: String): DataFrame =
+    sets.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
+
+  /** Ordered pairs (id_a < id_b) with their shared-token count `n_common`:
+    * the inverted-index equi-join of an exploded (id, token) relation. */
+  private def sharedTokens(index: DataFrame): DataFrame =
+    index.toDF("id_a", "token").join(index.toDF("id_b", "token"), Seq("token"))
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_common"))
+
+  /** `inter` (id_a, id_b, n_common) with both sides' `size_a`/`size_b`. */
+  private def withSizes(inter: DataFrame, sizes: DataFrame): DataFrame =
     inter
       .join(sizes.toDF("id_a", "size_a"), Seq("id_a"))
       .join(sizes.toDF("id_b", "size_b"), Seq("id_b"))
+
+  /** The size-join-and-threshold tail of every Jaccard path: (id_a, id_b,
+    * jaccard) for the `inter` pairs with |A∩B|/|A∪B| ≥ `threshold`. */
+  private def jaccardAtLeast(inter: DataFrame, sizes: DataFrame,
+                             threshold: Double): DataFrame =
+    withSizes(inter, sizes)
       .withColumn("jaccard",
         col("n_common") / (col("size_a") + col("size_b") - col("n_common")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** TF-IDF-weighted cosine similarity pairs — the weighted upgrade of
     * [[jaccardPairs]]: common boilerplate words contribute almost nothing
@@ -318,12 +333,12 @@ object Dedup {
     * candidate pairs: two equi-joins proportional to Σ|candidate sets|,
     * never the corpus cross product. */
   def jaccardPairsPrefix(sets0: DataFrame, idCol: String,
-                         threshold: Double, cacheSets: Boolean = true): DataFrame = {
+                         threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(threshold > 0 && threshold <= 1,
       s"prefix filtering needs threshold in (0, 1] (got $threshold)")
-    val sets = if (cacheSets) sets0.cache() else sets0
-    val sizes = sets.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
+    val sets = sets0.cache()
+    val sizes = setSizes(sets, idCol)
     val tokenDf = sets.groupBy(col("token")).agg(count(lit(1)).as("__df"))
     // canonical rank within each set: ascending global df, token tiebreak.
     // The window partitions by DOCUMENT — bounded groups, fully parallel.
@@ -348,13 +363,7 @@ object Dedup {
       .join(sets.toDF("id_b", "token"), Seq("id_b", "token"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.toDF("id_a", "size_a"), Seq("id_a"))
-      .join(sizes.toDF("id_b", "size_b"), Seq("id_b"))
-      .withColumn("jaccard",
-        col("n_common") / (col("size_a") + col("size_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardAtLeast(inter, sizes, threshold)
   }
 
   /** Pairwise CONTAINMENT from an exploded (id, token) set relation —
@@ -365,18 +374,9 @@ object Dedup {
     * `threshold`. Same inverted-index equi-join shape — shuffle ∝
     * collisions, never n²; same stop-token pruning applies upstream. */
   def containmentPairs(sets0: DataFrame, idCol: String,
-                       threshold: Double, cacheSets: Boolean = true): DataFrame = {
-    val sets = if (cacheSets) sets0.cache() else sets0
-    val sizes = sets.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
-    val a = sets.toDF("id_a", "token")
-    val b = sets.toDF("id_b", "token")
-    val inter = a.join(b, Seq("token"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.toDF("id_a", "size_a"), Seq("id_a"))
-      .join(sizes.toDF("id_b", "size_b"), Seq("id_b"))
+                       threshold: Double): DataFrame = {
+    val sets = sets0.cache()
+    withSizes(sharedTokens(sets), setSizes(sets, idCol))
       .withColumn("containment_a", col("n_common") / col("size_a"))
       .withColumn("containment_b", col("n_common") / col("size_b"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)

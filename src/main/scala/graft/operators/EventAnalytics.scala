@@ -196,26 +196,21 @@ object EventAnalytics {
         col("touch_type"), col("credit"))
   }
 
-  /** Kaplan-Meier survival curve (Kaplan & Meier, JASA'58) over per-user
-    * observation lifetimes: a user's duration runs first-event-day →
-    * last-event-day; the lifetime counts as an EVENT when the user's
-    * final event (by the (ts, id) deterministic ordering) is
-    * `terminalType`, and as right-CENSORED otherwise — the product-limit
-    * estimator then reads S(t) = Π_{t_i ≤ t, d_i > 0} (1 − d_i/n_i),
-    * reported at event times only (the standard step points). When some
-    * d_i = n_i the curve hits exactly 0 and stays there (guarded — Spark
-    * ln(0) is null while DuckDB's is -inf, so the zero is tracked as a
-    * flag, not through the log).
+  /** The lifetime at-risk grid behind [[kaplanMeier]] and
+    * [[nelsonAalen]]: a user's duration runs first-event-day →
+    * last-event-day, and the lifetime is an EVENT when the user's final
+    * event (by the (ts, id) deterministic ordering) is `terminalType`,
+    * right-CENSORED otherwise. One row per distinct duration `dur` with
+    * `n_events`, `n_censored` and the users still at risk `__n_risk`.
     *
     * Scale shape: two user-level aggregates (map-side combined), one
-    * duration-level aggregate, then THREE cumulative windows over the
+    * duration-level aggregate, then cumulative windows over the
     * DISTINCT-DURATION grid — bounded by the observation span in days,
     * never user count; the single-partition window is over that tiny
-    * grid only. Cumulative ln-sums accumulate in dur order in both
-    * engines (the ks/ewma ordered-prefix contract). */
-  def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
-                  idCol: String, typeCol: String,
-                  terminalType: String): DataFrame = {
+    * grid only. */
+  private def lifetimeAtRisk(events: DataFrame, userCol: String,
+                             tsCol: String, idCol: String, typeCol: String,
+                             terminalType: String): DataFrame = {
     val perUser = events.groupBy(col(userCol)).agg(
       date_trunc("day", min(col(tsCol))).as("__first"),
       date_trunc("day", max(col(tsCol))).as("__last"),
@@ -229,15 +224,33 @@ object EventAnalytics {
         sum(when(col("__ev"), 0L).otherwise(1L)).as("n_censored"))
     val wPrev = Window.orderBy(col("dur"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("dur"))
-      .rowsBetween(Window.unboundedPreceding, 0)
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
-    val atRisk = grid
+    grid
       .withColumn("__n_risk",
         sum(col("n_events") + col("n_censored")).over(wAll)
           - coalesce(sum(col("n_events") + col("n_censored")).over(wPrev),
             lit(0L)))
+  }
+
+  /** Kaplan-Meier survival curve (Kaplan & Meier, JASA'58) over the
+    * per-user observation lifetimes of [[lifetimeAtRisk]] — the
+    * product-limit estimator reads S(t) = Π_{t_i ≤ t, d_i > 0} (1 − d_i/n_i),
+    * reported at event times only (the standard step points). When some
+    * d_i = n_i the curve hits exactly 0 and stays there (guarded — Spark
+    * ln(0) is null while DuckDB's is -inf, so the zero is tracked as a
+    * flag, not through the log).
+    *
+    * Scale shape: [[lifetimeAtRisk]]'s grid, then cumulative windows over
+    * it; ln-sums accumulate in dur order in both engines (the ks/ewma
+    * ordered-prefix contract). */
+  def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
+                  idCol: String, typeCol: String,
+                  terminalType: String): DataFrame = {
+    val atRisk = lifetimeAtRisk(events, userCol, tsCol, idCol, typeCol,
+      terminalType)
+    val wCum = Window.orderBy(col("dur"))
+      .rowsBetween(Window.unboundedPreceding, 0)
     val d = col("n_events")
     atRisk
       .withColumn("__zeros",
@@ -260,40 +273,17 @@ object EventAnalytics {
     * form), plus the Breslow survival exp(−Ĥ) — the hazard-side view KM
     * does not give: a straightening Ĥ(t) reads directly as a constant
     * event rate, and Ĥ is the additive quantity hazard models consume.
-    * Lifetime/censoring semantics are IDENTICAL to kaplanMeier (a
-    * user's final event of `terminalType` marks an event, anything else
-    * right-censors) so the two curves are comparable row for row.
-    *
-    * Scale shape: same two user-level aggregates + duration-grid
-    * cumulative windows as kaplanMeier — the window runs over the
-    * distinct-duration grid (bounded by the observation span in days),
-    * and the float cumsum accumulates in dur order on both engines (the
-    * ks/ewma ordered-prefix contract). */
+    * Both read the one [[lifetimeAtRisk]] grid, so lifetimes and
+    * censoring match kaplanMeier's and the two curves are comparable row
+    * for row. The float cumsum accumulates in dur order on both engines
+    * (the ks/ewma ordered-prefix contract). */
   def nelsonAalen(events: DataFrame, userCol: String, tsCol: String,
                   idCol: String, typeCol: String,
                   terminalType: String): DataFrame = {
-    val perUser = events.groupBy(col(userCol)).agg(
-      date_trunc("day", min(col(tsCol))).as("__first"),
-      date_trunc("day", max(col(tsCol))).as("__last"),
-      max(struct(col(tsCol), col(idCol), col(typeCol))).getField(typeCol)
-        .as("__lastType"))
-    val grid = perUser
-      .select(datediff(col("__last"), col("__first")).cast("long").as("dur"),
-        (col("__lastType") === terminalType).as("__ev"))
-      .groupBy(col("dur"))
-      .agg(sum(when(col("__ev"), 1L).otherwise(0L)).as("n_events"),
-        sum(when(col("__ev"), 0L).otherwise(1L)).as("n_censored"))
-    val wPrev = Window.orderBy(col("dur"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val atRisk = lifetimeAtRisk(events, userCol, tsCol, idCol, typeCol,
+      terminalType)
     val wCum = Window.orderBy(col("dur"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val atRisk = grid
-      .withColumn("__n_risk",
-        sum(col("n_events") + col("n_censored")).over(wAll)
-          - coalesce(sum(col("n_events") + col("n_censored")).over(wPrev),
-            lit(0L)))
     val d = col("n_events").cast("double")
     val nr = col("__n_risk").cast("double")
     atRisk

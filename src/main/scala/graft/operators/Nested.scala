@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Nested-data kit (SURVEY.md §2: S4-S5 shapes, T8, T20-T21).
   *
@@ -91,11 +91,4 @@ object Nested {
       d.withColumn(s"evt_$t", col(t).isNotNull && col(t) > 0).drop(t)
     }
   }
-
-  /** True when a column is an `array<struct<...>>` (kv-shaped). */
-  def isKvArray(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType match {
-      case ArrayType(_: StructType, _) => true
-      case _ => false
-    }
 }

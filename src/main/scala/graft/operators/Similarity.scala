@@ -1426,48 +1426,6 @@ object Similarity {
     sel.toDF("sel_rank", "vec_id", "radius")
   }
 
-  /** [[kCenterSelect]] with a PERSISTED running min-distance column — the
-    * k=256+ path: round r computes ONE cosine per point (to the newest
-    * center) and folds it into the materialized minimum, so total work is
-    * O(n·k) distance evals instead of the recompute variant's O(n·k²/2),
-    * at the cost of a localCheckpoint materialization of the n-row state
-    * each round (the CC-family lineage-truncation idiom — without it the
-    * plan nests k `least` layers deep). Selection is IDENTICAL to
-    * [[kCenterSelect]]: `min` over doubles is associative and exact, so
-    * folding the running minimum yields bit-for-bit the same 6dp-rounded
-    * radii and the same (radius, id)-ordered picks — pinned in
-    * SimilaritySpec. Prefer the recompute variant at k ≲ 64 where
-    * re-evaluating the centers is cheaper than k state materializations. */
-  def kCenterSelectCached(embeddings: DataFrame, idCol: String, vecCol: String,
-                          k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val pts = embeddings.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).as("__v"))
-    val seed = pts.orderBy(col("__id").asc).limit(1).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        "kCenterSelectCached: empty embeddings input"))
-    def distTo(cv: Seq[Double]) = lit(1.0) -
-      VectorFunctions.cosineSimilarity(col("__v"), array(cv.map(lit): _*))
-    var sel = Vector[(Long, Long, Option[Double])]((1L, seed.getLong(0), None))
-    var state = pts
-      .withColumn("__mind", distTo(seed.getSeq[Float](1).map(_.toDouble)))
-      .localCheckpoint()
-    for (r <- 2 to k) {
-      val best = state
-        .select(col("__id"), col("__v"), round(col("__mind"), 6).as("__rmind"))
-        .orderBy(col("__rmind").desc, col("__id").asc)
-        .limit(1).collect().head
-      sel :+= ((r.toLong, best.getLong(0), Some(best.getDouble(2))))
-      if (r < k) state = state
-        .withColumn("__mind", least(col("__mind"),
-          distTo(best.getSeq[Float](1).map(_.toDouble))))
-        .localCheckpoint()
-    }
-    sel.toDF("sel_rank", "vec_id", "radius")
-  }
-
   /** 1-bit (sign) quantization: bit i of word j is set iff
     * vec[32j + i] ≥ 0, packed into ⌈dim/32⌉ 32-bit words carried as a
     * LONG array (public: the binary-embedding idiom of Charikar STOC'02

@@ -750,7 +750,21 @@ object Stats {
     * values, never row count (bin/round a continuous column first, same
     * as [[ksStatistic]]). A single-group corpus reports null ks. */
   def groupKsDrift(df: DataFrame, groupCol: String, valCol: String,
-                   roundScale: Int = 6): DataFrame = {
+                   roundScale: Int = 6): DataFrame =
+    groupEcdfGrid(df, groupCol, valCol)
+      .groupBy(col("__g").as(groupCol))
+      .agg(max(col("__ng")).as("n_group"),
+        max(col("__nt") - col("__ng")).as("n_rest"),
+        round(max(when(col("__nt") > col("__ng"), abs(groupRestDev))),
+          roundScale).as("ks"))
+
+  /** The group-vs-rest ECDF grid of [[groupKsDrift]] and
+    * [[groupKuiperDrift]]: every group × the union value line (`__g`,
+    * `__v`, group count `__c`, total count `__ct`), with the group's and
+    * the total's running counts (`__cumg`, `__cumt`) and sizes (`__ng`,
+    * `__nt`). Null values are dropped. */
+  private def groupEcdfGrid(df: DataFrame, groupCol: String,
+                            valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = df.filter(col(valCol).isNotNull)
     val gv = base.groupBy(col(groupCol).as("__g"), col(valCol).as("__v"))
@@ -764,19 +778,17 @@ object Stats {
       .rowsBetween(Window.unboundedPreceding, 0)
     val entire = Window.partitionBy(col("__g"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val dev = abs(col("__cumg") / col("__ng")
-      - (col("__cumt") - col("__cumg")) / (col("__nt") - col("__ng")))
     grid
       .withColumn("__cumg", sum(col("__c")).over(w))
       .withColumn("__cumt", sum(col("__ct")).over(w))
       .withColumn("__ng", sum(col("__c")).over(entire))
       .withColumn("__nt", sum(col("__ct")).over(entire))
-      .groupBy(col("__g").as(groupCol))
-      .agg(max(col("__ng")).as("n_group"),
-        max(col("__nt") - col("__ng")).as("n_rest"),
-        round(max(when(col("__nt") > col("__ng"), dev)), roundScale)
-          .as("ks"))
   }
+
+  /** Signed ECDF_group − ECDF_rest on a [[groupEcdfGrid]] row. */
+  private def groupRestDev: Column =
+    col("__cumg") / col("__ng") -
+      (col("__cumt") - col("__cumg")) / (col("__nt") - col("__ng"))
 
   /** Per-group Kuiper drift V = D⁺ + D⁻ (public: Kuiper 1960) — the
     * CYCLIC-sensitive sibling of [[groupKsDrift]]: KS's single max |F−G|
@@ -784,31 +796,12 @@ object Stats {
     * mixes, day-of-week cycles — a shifted peak moves mass both ways and
     * the signed deviations partly cancel at any single point); Kuiper
     * sums the largest positive and largest negative deviation, making
-    * the statistic invariant under cyclic shifts of the support. Same
-    * group-vs-rest contract and value-grid shape as groupKsDrift (one
-    * grid, one cumulative window, one fold). */
+    * the statistic invariant under cyclic shifts of the support. Both
+    * fold the one [[groupEcdfGrid]]. */
   def groupKuiperDrift(df: DataFrame, groupCol: String, valCol: String,
                        roundScale: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = df.filter(col(valCol).isNotNull)
-    val gv = base.groupBy(col(groupCol).as("__g"), col(valCol).as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val tv = base.groupBy(col(valCol).as("__v")).agg(count(lit(1)).as("__ct"))
-    val groups = gv.select(col("__g")).distinct()
-    val grid = tv.crossJoin(groups)
-      .join(gv, Seq("__g", "__v"), "left")
-      .na.fill(0L, Seq("__c"))
-    val w = Window.partitionBy(col("__g")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val entire = Window.partitionBy(col("__g"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val dev = col("__cumg") / col("__ng") -
-      (col("__cumt") - col("__cumg")) / (col("__nt") - col("__ng"))
-    grid
-      .withColumn("__cumg", sum(col("__c")).over(w))
-      .withColumn("__cumt", sum(col("__ct")).over(w))
-      .withColumn("__ng", sum(col("__c")).over(entire))
-      .withColumn("__nt", sum(col("__ct")).over(entire))
+    val dev = groupRestDev
+    groupEcdfGrid(df, groupCol, valCol)
       .groupBy(col("__g").as(groupCol))
       // n_rest = 0 (the group IS the corpus): the deviation is undefined,
       // not zero -- greatest() would swallow the null max and read as "no
@@ -1352,33 +1345,7 @@ object Stats {
     * folds — shuffle ∝ cells, never rows. */
   def friedmanTest(cells: DataFrame, blockCol: String, treatCol: String,
                    valCol: String, roundScale: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val kAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val base = cells
-      .filter(col(valCol).isNotNull)
-      .select(col(blockCol).as("__b"), col(treatCol).as("__t"),
-        col(valCol).cast("double").as("__v"))
-      .withColumn("__k", size(collect_set(col("__t")).over(kAll)))
-    // completeness requires BOTH the row count and the distinct
-    // treatment count per block to equal k: a duplicate (block,
-    // treatment) cell can make a block missing a treatment pass a
-    // row-count-only check (same enforcement as Agreement.kendallW) —
-    // malformed blocks drop instead of skewing the ranks
-    val complete = base
-      .withColumn("__bk", count(lit(1)).over(
-        Window.partitionBy(col("__b"))))
-      .withColumn("__dk", size(collect_set(col("__t")).over(
-        Window.partitionBy(col("__b")))))
-      .filter(col("__bk") === col("__k") && col("__dk") === col("__k"))
-    val ranked = complete
-      .withColumn("__minr", rank().over(Window.partitionBy(col("__b"))
-        .orderBy(col("__v"))))
-      .withColumn("__ties", count(lit(1)).over(
-        Window.partitionBy(col("__b"), col("__v"))))
-      // midrank = min-rank + (t−1)/2 — the mean of the tied positions
-      .withColumn("__r", col("__minr").cast("double")
-        + (col("__ties") - 1).cast("double") / 2.0)
+    val ranked = completeBlockMidranks(cells, blockCol, treatCol, valCol)
       // cached: the bounded b×k rank grid feeds the per-treatment fold,
       // the dispersion fold, AND the final select — uncached, the
       // caller's cell aggregate (data-sized) would re-run per consumer
@@ -1405,6 +1372,43 @@ object Stats {
         col("__rsum").as("rank_sum"),
         (col("__rsum") / col("n_blocks").cast("double")).as("mean_rank"))
       .crossJoin(broadcast(t1))
+  }
+
+  /** The complete-block midrank step of [[friedmanTest]],
+    * [[pageTrendTest]] and [[quadeTest]]: the non-null cells as (`__b`
+    * block, `__t` treatment, `__v` value, `__k` treatment count), only
+    * the blocks holding every treatment once, each value midranked
+    * within its block as `__r`. */
+  private def completeBlockMidranks(cells: DataFrame, blockCol: String,
+                                    treatCol: String,
+                                    valCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val kAll = Window.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val base = cells
+      .filter(col(valCol).isNotNull)
+      .select(col(blockCol).as("__b"), col(treatCol).as("__t"),
+        col(valCol).cast("double").as("__v"))
+      .withColumn("__k", size(collect_set(col("__t")).over(kAll)))
+    // completeness requires BOTH the row count and the distinct
+    // treatment count per block to equal k: a duplicate (block,
+    // treatment) cell can make a block missing a treatment pass a
+    // row-count-only check (same enforcement as Agreement.kendallW) —
+    // malformed blocks drop instead of skewing the ranks
+    val complete = base
+      .withColumn("__bk", count(lit(1)).over(
+        Window.partitionBy(col("__b"))))
+      .withColumn("__dk", size(collect_set(col("__t")).over(
+        Window.partitionBy(col("__b")))))
+      .filter(col("__bk") === col("__k") && col("__dk") === col("__k"))
+    complete
+      .withColumn("__minr", rank().over(Window.partitionBy(col("__b"))
+        .orderBy(col("__v"))))
+      .withColumn("__ties", count(lit(1)).over(
+        Window.partitionBy(col("__b"), col("__v"))))
+      // midrank = min-rank + (t−1)/2 — the mean of the tied positions
+      .withColumn("__r", col("__minr").cast("double")
+        + (col("__ties") - 1).cast("double") / 2.0)
   }
 
   /** Brunner–Munzel test (Brunner & Munzel, Biometrical J. '00): the
@@ -1536,36 +1540,12 @@ object Stats {
     * Treatment order is `treatCol`'s natural ascending order. L and
     * E[L] are exact halves/quarters — UNROUNDED; z rounds.
     *
-    * Shape: identical to [[friedmanTest]] — one bounded b×k rank grid
-    * (cached), dense-rank for treatment weights, two folds. */
+    * Shape: [[completeBlockMidranks]]' bounded b×k rank grid (cached),
+    * dense-rank for treatment weights, two folds. */
   def pageTrendTest(cells: DataFrame, blockCol: String, treatCol: String,
                     valCol: String, roundScale: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val kAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val base = cells
-      .filter(col(valCol).isNotNull)
-      .select(col(blockCol).as("__b"), col(treatCol).as("__t"),
-        col(valCol).cast("double").as("__v"))
-      .withColumn("__k", size(collect_set(col("__t")).over(kAll)))
-    // completeness requires BOTH the row count and the distinct
-    // treatment count per block to equal k: a duplicate (block,
-    // treatment) cell can make a block missing a treatment pass a
-    // row-count-only check (same enforcement as Agreement.kendallW) —
-    // malformed blocks drop instead of skewing the ranks
-    val complete = base
-      .withColumn("__bk", count(lit(1)).over(
-        Window.partitionBy(col("__b"))))
-      .withColumn("__dk", size(collect_set(col("__t")).over(
-        Window.partitionBy(col("__b")))))
-      .filter(col("__bk") === col("__k") && col("__dk") === col("__k"))
-    val ranked = complete
-      .withColumn("__minr", rank().over(Window.partitionBy(col("__b"))
-        .orderBy(col("__v"))))
-      .withColumn("__ties", count(lit(1)).over(
-        Window.partitionBy(col("__b"), col("__v"))))
-      .withColumn("__r", col("__minr").cast("double")
-        + (col("__ties") - 1).cast("double") / 2.0)
+    val ranked = completeBlockMidranks(cells, blockCol, treatCol, valCol)
       .withColumn("__w", dense_rank().over(Window.orderBy(col("__t"))))
       .cache()
     val fit = ranked.agg(max(col("__k")).as("__kk"),
@@ -1578,8 +1558,10 @@ object Stats {
         * (col("__kd") + 1) * (col("__kd") + 1) / 4.0)
       .withColumn("__k3", col("__kd") * col("__kd") * col("__kd")
         - col("__kd"))
-      .withColumn("__var", col("__bd") * col("__k3") * col("__k3")
-        / (lit(144.0) * (col("__kd") - 1)))
+      // one treatment (k = 1) has no order to trend along: null variance
+      // (and z) instead of a division by zero, which throws under ANSI
+      .withColumn("__var", when(col("__kd") > 1, col("__bd") * col("__k3")
+        * col("__k3") / (lit(144.0) * (col("__kd") - 1))))
       .select(col("__bb").as("n_blocks_used"),
         col("__kk").cast("long").as("k_treatments"),
         col("__l").as("l_stat"), col("__e").as("l_expected"),
@@ -3749,11 +3731,26 @@ object Stats {
     * or df > 40 emit null p (stat and df still exact) — the honest
     * boundary, not a wrong approximation.
     *
-    * Shape: ONE data-sized pass to the r×c cell table
-    * (localCheckpointed: totals/marginals/χ² are four bounded
-    * consumers); everything downstream is cells-sized. */
+    * Shape: the [[contingency]] cell table, then cells-sized folds. */
   def chiSquareTest(df: DataFrame, colA: String, colB: String,
                     roundScale: Int = 6): DataFrame = {
+    val (totals, cells) = contingency(df, colA, colB)
+    val obs = cells
+      .agg(coalesce(sum((col("__od") - col("__e")) * (col("__od") - col("__e"))
+        / col("__e")), lit(0.0)).as("__chiObs"),
+        coalesce(sum(col("__e")), lit(0.0)).as("__eObs"))
+    independenceRow(totals, obs, "__chi2",
+      col("__chiObs") + (col("n").cast("double") - col("__eObs")), "chi2",
+      roundScale)
+  }
+
+  /** The r×c contingency of [[chiSquareTest]] and [[gTest]]: its totals
+    * (n, r_levels, c_levels) and, per observed cell, the expected `__e`
+    * and observed `__od` counts. ONE data-sized pass builds the cell
+    * table, localCheckpointed: totals, marginals and the cell fold are
+    * its bounded consumers. */
+  private def contingency(df: DataFrame, colA: String,
+                          colB: String): (DataFrame, DataFrame) = {
     val cont = df
       .select(col(colA).cast("string").as("__a"), col(colB).cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
@@ -3768,23 +3765,27 @@ object Stats {
       .crossJoin(broadcast(totals.select(col("n").as("__nn"))))
       .select((col("__ca").cast("double") * col("__cb") / col("__nn"))
         .as("__e"), col("__o").cast("double").as("__od"))
-      .agg(coalesce(sum((col("__od") - col("__e")) * (col("__od") - col("__e"))
-        / col("__e")), lit(0.0)).as("__chiObs"),
-        coalesce(sum(col("__e")), lit(0.0)).as("__eObs"))
-    // Vacuous contingency (empty/all-null input): n = 0 would otherwise
-    // emit chi2 = 0 with dof = (0−1)·(0−1) = 1 — reads as a valid
-    // "perfect independence" result. Null statistic/dof/p instead, like
-    // the other degenerate boundaries (odd df, df > 40).
-    val stat = totals.crossJoin(obs)
+    (totals, obs)
+  }
+
+  /** One test row from the 1-row `totals` and statistic inputs `obs`:
+    * size, levels, dof and `stat` (built as `tmp`, reported as `name`)
+    * with its [[evenDfChi2P]] p-value. A vacuous contingency (empty or
+    * all-null input) would otherwise emit a 0 statistic at dof = (0−1)·
+    * (0−1) = 1, a valid-looking "perfect independence": n = 0 nulls the
+    * statistic, dof and p instead, like the other degenerate boundaries
+    * (odd df, df > 40). */
+  private def independenceRow(totals: DataFrame, obs: DataFrame,
+                              tmp: String, stat: Column, name: String,
+                              roundScale: Int): DataFrame =
+    totals.crossJoin(obs)
       .withColumn("dof", when(col("n") > 0,
         (col("r_levels") - 1) * (col("c_levels") - 1)))
-      .withColumn("__chi2", when(col("n") > 0,
-        col("__chiObs") + (col("n").cast("double") - col("__eObs"))))
-    stat.select(col("n"), col("r_levels"), col("c_levels"), col("dof"),
-      round(col("__chi2"), roundScale).as("chi2"),
-      round(when(col("__chi2").isNotNull,
-        evenDfChi2P(col("__chi2"), col("dof"))), roundScale).as("p_value"))
-  }
+      .withColumn(tmp, when(col("n") > 0, stat))
+      .select(col("n"), col("r_levels"), col("c_levels"), col("dof"),
+        round(col(tmp), roundScale).as(name),
+        round(when(col(tmp).isNotNull,
+          evenDfChi2P(col(tmp), col("dof"))), roundScale).as("p_value"))
 
   /** Survival P[χ²_df > x] for EVEN df in [2, 40] as the truncated
     * Poisson sum e^(−x/2)·Σ_{j<df/2}(x/2)^j/j!, built as an UNROLLED
@@ -3819,36 +3820,16 @@ object Stats {
     * cells contribute 0 (the o·ln(o/e) limit), so only observed cells
     * fold; df = (r−1)(c−1) and the p-value shares [[evenDfChi2P]].
     *
-    * Shape: identical to chiSquareTest — one data-sized pass to the
-    * localCheckpointed cell table, bounded folds after. */
+    * Shape: the [[contingency]] and [[independenceRow]] it shares with
+    * chiSquareTest, with the G fold between them. */
   def gTest(df: DataFrame, colA: String, colB: String,
             roundScale: Int = 6): DataFrame = {
-    val cont = df
-      .select(col(colA).cast("string").as("__a"), col(colB).cast("string").as("__b"))
-      .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__o"))
-      .localCheckpoint()
-    val totals = cont.agg(coalesce(sum(col("__o")), lit(0L)).as("n"),
-      countDistinct(col("__a")).cast("long").as("r_levels"),
-      countDistinct(col("__b")).cast("long").as("c_levels"))
-    val margA = cont.groupBy(col("__a")).agg(sum(col("__o")).as("__ca"))
-    val margB = cont.groupBy(col("__b")).agg(sum(col("__o")).as("__cb"))
-    val obs = cont.join(margA, Seq("__a")).join(margB, Seq("__b"))
-      .crossJoin(broadcast(totals.select(col("n").as("__nn"))))
-      .select((col("__ca").cast("double") * col("__cb") / col("__nn"))
-        .as("__e"), col("__o").cast("double").as("__od"))
+    val (totals, cells) = contingency(df, colA, colB)
+    val obs = cells
       .agg(coalesce(sum(col("__od") * log(col("__od") / col("__e"))),
         lit(0.0)).as("__lSum"))
-    // Same vacuous-input guard as [[chiSquareTest]]: n = 0 nulls the
-    // statistic, dof and p rather than reporting G = 0 at dof = 1.
-    val stat = totals.crossJoin(obs)
-      .withColumn("dof", when(col("n") > 0,
-        (col("r_levels") - 1) * (col("c_levels") - 1)))
-      .withColumn("__g", when(col("n") > 0, lit(2.0) * col("__lSum")))
-    stat.select(col("n"), col("r_levels"), col("c_levels"), col("dof"),
-      round(col("__g"), roundScale).as("g_stat"),
-      round(when(col("__g").isNotNull,
-        evenDfChi2P(col("__g"), col("dof"))), roundScale).as("p_value"))
+    independenceRow(totals, obs, "__g", lit(2.0) * col("__lSum"), "g_stat",
+      roundScale)
   }
 
   /** Grubbs' max-normed-residual outlier statistic per group (public:
@@ -4431,6 +4412,25 @@ object Stats {
         .as("v_measure"))
   }
 
+  /** Per-group (`__g`) count `__n` and exact cent-quantized sums
+    * `__sq` = Σq, `__sqq` = Σq² (q = value·100 as decimal) over the
+    * non-null values: the moment frame of [[cochranC]], [[tukeyHsd]] and
+    * [[welchAnova]]. */
+  private def centMoments(df: DataFrame, groupCol: String,
+                          valCol: String): DataFrame = {
+    val q = (col(valCol).cast("decimal(20,2)") * 100).cast("decimal(38,0)")
+    df.filter(col(valCol).isNotNull)
+      .groupBy(col(groupCol).as("__g"))
+      .agg(count(lit(1)).as("__n"), sum(q).as("__sq"),
+        sum(q * q).as("__sqq"))
+  }
+
+  /** Sample variance of a [[centMoments]] group, one double division. */
+  private def centVariance: Column =
+    ((col("__n").cast("decimal(38,0)") * col("__sqq")
+      - col("__sq") * col("__sq")).cast("double") /
+      (col("__n") * (col("__n") - 1)).cast("double")) / 10000.0
+
   /** Cochran's C test statistic (public: Cochran '41) — the
     * variance-outlier screen: C = max_j s_j² / Σ_j s_j², "is one group's
     * spread dominating the pooled picture", the dispersion-side
@@ -4447,18 +4447,11 @@ object Stats {
   def cochranC(df: DataFrame, groupCol: String, valCol: String,
                roundScale: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = (col(valCol).cast("decimal(20,2)") * 100).cast("decimal(38,0)")
-    val per = df.filter(col(valCol).isNotNull)
-      .groupBy(col(groupCol).as("__g"))
-      .agg(count(lit(1)).as("__n"), sum(q).as("__sq"),
-        sum(q * q).as("__sqq"))
+    val per = centMoments(df, groupCol, valCol)
       .filter(col("__n") > 1)
-    val varc = ((col("__n").cast("decimal(38,0)") * col("__sqq")
-      - col("__sq") * col("__sq")).cast("double") /
-      (col("__n") * (col("__n") - 1)).cast("double")) / 10000.0
     val wCum = Window.orderBy(col("__g"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    per.withColumn("__var", varc)
+    per.withColumn("__var", centVariance)
       .withColumn("__cum", sum(col("__var")).over(wCum))
       .agg(count(lit(1)).as("k_groups"),
         max(struct(col("__var").as("v"), col("__g").as("g"))).as("__top"),
@@ -4489,11 +4482,7 @@ object Stats {
   def tukeyHsd(df: DataFrame, groupCol: String, valCol: String,
                roundScale: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = (col(valCol).cast("decimal(20,2)") * 100).cast("decimal(38,0)")
-    val per = df.filter(col(valCol).isNotNull)
-      .groupBy(col(groupCol).as("__g"))
-      .agg(count(lit(1)).as("__n"), sum(q).as("__sq"),
-        sum(q * q).as("__sqq"))
+    val per = centMoments(df, groupCol, valCol)
     // the k-row group frame feeds the SSE fold AND both pair sides —
     // re-aggregating 3x is cheaper than a checkpoint AND keeps the
     // Aggregate visible to the plan audit's structural window proof
@@ -4663,22 +4652,15 @@ object Stats {
   def welchAnova(df: DataFrame, groupCol: String, valCol: String,
                  roundScale: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = (col(valCol).cast("decimal(20,2)") * 100).cast("decimal(38,0)")
-    val per = df.filter(col(valCol).isNotNull)
-      .groupBy(col(groupCol).as("__g"))
-      .agg(count(lit(1)).as("__n"), sum(q).as("__sq"),
-        sum(q * q).as("__sqq"))
+    val per = centMoments(df, groupCol, valCol)
       .filter(col("__n") > 1)
     val mj = (col("__sq").cast("double") / col("__n").cast("double")) / 100.0
-    val vj = ((col("__n").cast("decimal(38,0)") * col("__sqq")
-      - col("__sq") * col("__sq")).cast("double") /
-      (col("__n") * (col("__n") - 1)).cast("double")) / 10000.0
     val wj = col("__n").cast("double") / col("__v")
     val wCum = Window.orderBy(col("__g"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val lastOf = (c: Column) =>
       max(struct(col("__g").as("g"), c.as("c"))).getField("c")
-    val g1 = per.withColumn("__m", mj).withColumn("__v", vj)
+    val g1 = per.withColumn("__m", mj).withColumn("__v", centVariance)
       .filter(col("__v") > 0)
       .withColumn("__w", wj)
       .withColumn("__cw", sum(col("__w")).over(wCum))
@@ -4873,36 +4855,16 @@ object Stats {
     * Emits per-treatment weighted rank sums S_j plus the shared T (A=B,
     * the perfect-separation edge, → null T per the F-limit convention).
     *
-    * Scale shape: same bounded b×k cell grid as friedmanTest (complete
-    * blocks only — both the row count AND distinct-treatment count must
-    * equal k), two rank windows over it, one aggregate. Midranks step in
+    * Scale shape: [[completeBlockMidranks]]' bounded b×k cell grid, two
+    * rank windows over it, one aggregate. Midranks step in
     * exact halves and every S term is a dyadic rational well inside
     * 2⁵³, so all sums are order-independent — the friedman exactness
     * contract. */
   def quadeTest(cells: DataFrame, blockCol: String, treatCol: String,
                 valCol: String, roundScale: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val kAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val base = cells
-      .filter(col(valCol).isNotNull)
-      .select(col(blockCol).as("__b"), col(treatCol).as("__t"),
-        col(valCol).cast("double").as("__v"))
-      .withColumn("__k", size(collect_set(col("__t")).over(kAll)))
-    val complete = base
-      .withColumn("__bk", count(lit(1)).over(
-        Window.partitionBy(col("__b"))))
-      .withColumn("__dk", size(collect_set(col("__t")).over(
-        Window.partitionBy(col("__b")))))
-      .filter(col("__bk") === col("__k") && col("__dk") === col("__k"))
     // within-block midranks + per-block range, then range midranks Q_b
-    val ranked = complete
-      .withColumn("__minr", rank().over(Window.partitionBy(col("__b"))
-        .orderBy(col("__v"))))
-      .withColumn("__ties", count(lit(1)).over(
-        Window.partitionBy(col("__b"), col("__v"))))
-      .withColumn("__r", col("__minr").cast("double")
-        + (col("__ties") - 1).cast("double") / 2.0)
+    val ranked = completeBlockMidranks(cells, blockCol, treatCol, valCol)
       .withColumn("__range", max(col("__v")).over(
         Window.partitionBy(col("__b")))
         - min(col("__v")).over(Window.partitionBy(col("__b"))))

@@ -805,6 +805,17 @@ object TimeSeries {
           .as("mase_ratio"))
   }
 
+  /** The daily-grid prologue of the per-key daily-count operators:
+    * (`__g` = key, `__day` = day of `tsCol`, `__y` = events that day) over
+    * the rows with a timestamp. Days without events are absent rows. */
+  private def dailyCounts(events: DataFrame, keyCol: String,
+                          tsCol: String): DataFrame =
+    events
+      .filter(col(tsCol).isNotNull)
+      .groupBy(col(keyCol).as("__g"),
+        date_trunc("day", col(tsCol)).as("__day"))
+      .agg(count(lit(1)).as("__y"))
+
   /** Normalized permutation entropy of order 3 per group (public: Bandt
     * & Pompe PRL'02): the entropy of ORDINAL PATTERNS — which of the 6
     * rank orders each consecutive day-count triple takes — over the
@@ -822,11 +833,7 @@ object TimeSeries {
   def permutationEntropyDaily(events: DataFrame, keyCol: String,
                               tsCol: String, roundScale: Int = 6)
       : DataFrame = {
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("__g")).orderBy(col("__day"))
     val tri = daily
       .withColumn("__b", lead(col("__y"), 1).over(w))
@@ -937,11 +944,7 @@ object TimeSeries {
     * once. */
   def pinballEval(events: DataFrame, keyCol: String, tsCol: String,
                   roundScale: Int = 6): DataFrame = {
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val joined = daily.as("cur")
       .join(daily.as("prev"),
         col("cur.__g") === col("prev.__g") &&
@@ -985,11 +988,7 @@ object TimeSeries {
     require(windowRadius >= 1 && windowRadius <= 30,
       s"windowRadius must be in [1, 30]: $windowRadius")
     val width = 2 * windowRadius + 1
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("__g")).orderBy(col("__day"))
       .rowsBetween(-windowRadius, windowRadius)
     // lower/upper element average = exact dyadic median; indices are
@@ -1035,11 +1034,7 @@ object TimeSeries {
     * integer moments × shared constants. */
   def gumbelBlockMax(events: DataFrame, keyCol: String, tsCol: String,
                      roundScale: Int = 6): DataFrame = {
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val weekly = daily
       .groupBy(col("__g"), date_trunc("week", col("__day")).as("__wk"))
       .agg(max(col("__y")).as("__m"))
@@ -1085,11 +1080,7 @@ object TimeSeries {
   def seasonalStrength(events: DataFrame, keyCol: String, tsCol: String,
                        roundScale: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val dow = daily
       .groupBy(col("__g"), dayofweek(col("__day")).as("__dow"))
       .agg(sum(col("__y")).as("__sd"), count(lit(1)).as("__nd"))
@@ -1189,11 +1180,7 @@ object TimeSeries {
     * division at the end. */
   def theilsU2(events: DataFrame, keyCol: String, tsCol: String,
                roundScale: Int = 6): DataFrame = {
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val joined = daily.as("cur")
       .join(daily.as("wk"), col("cur.__g") === col("wk.__g") &&
         col("cur.__day") === col("wk.__day") + expr("INTERVAL 7 DAYS"))
@@ -1232,11 +1219,7 @@ object TimeSeries {
     * adfDaily convention, documented). */
   def pageHinkleyDaily(events: DataFrame, keyCol: String, tsCol: String,
                        roundScale: Int = 6): DataFrame = {
-    val daily = events
-      .filter(col(tsCol).isNotNull)
-      .groupBy(col(keyCol).as("__g"),
-        date_trunc("day", col(tsCol)).as("__day"))
-      .agg(count(lit(1)).as("__y"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("__g")).orderBy(col("__day"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val m = daily

@@ -36,30 +36,118 @@ object AgreementQueries {
       .filter(col("__rn") <= 5)
   }
 
+  /** `base` (6dp stopword share `s`, is-en label `y`) and `per` (positive
+    * `cp` and negative `cn` counts per distinct s): the oracle twin of
+    * [[enScored]], collapsed per score. */
+  private val enScoredPerSql: String =
+    s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
+                          6) AS s,
+                        (lang = 'en') AS y
+                 FROM (SELECT lang, $stopwordCountsSql
+                       FROM documents
+                       WHERE lang IS NOT NULL)),
+              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
+                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
+                      FROM base GROUP BY s),"""
+
+  /** `r`: [[enScoredPerSql]]'s `per` with the row count `below` each s. */
+  private val belowSql: String =
+    """r AS (SELECT s, cp, cn,
+                 coalesce(sum(cp + cn) OVER (ORDER BY s
+                   ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND 1 PRECEDING), 0) AS below
+          FROM per)"""
+
+  /** `li`: declared lang vs the stopword guess per document with a lang —
+    * the oracle twin of [[TextQueries.langId]] minus null langs. */
+  private val langGuessSql: String =
+    s"""WITH li AS (SELECT lang AS declared_lang,
+                        $stopwordGuessSql AS lang_guess
+                      FROM (SELECT lang, $stopwordCountsSql
+                            FROM documents
+                            WHERE lang IS NOT NULL)),"""
+
+  /** `scored` and `clamped(s, y)`: the quality score vs is-en per document
+    * with a lang — the oracle twin of [[qualityScored]]. */
+  private val qualityClampedSql: String =
+    s"""WITH scored AS (SELECT $qualityBlendSql AS q,
+               (lang = 'en') AS y
+             FROM (SELECT lang, $qualityInputsSql
+                   FROM documents
+                   WHERE lang IS NOT NULL)),
+              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
+                          FROM scored)"""
+
+  /** The 6dp quality score vs the lang='en' label: the calibration input. */
+  private def qualityScored(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(
+      round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
+      (col("lang") === "en").as("is_en"))
+
+  /** `ev` … `sc` and the leading output columns through `p_bar`: each
+    * user's first 5 event types as 5 ratings, the items rated exactly 5
+    * times, and their agreement sums — the shared prefix of the Fleiss
+    * kappa and Gwet AC1 oracles (the oracle twin of [[ratingsFirst5]]). */
+  private val ratingsFirst5Sql: String =
+    """WITH ev AS (SELECT user_id, event_type,
+                       row_number() OVER (PARTITION BY user_id
+                                          ORDER BY ts, event_id) AS rn
+                     FROM events
+                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
+              r AS (SELECT user_id AS i, event_type AS j
+                    FROM ev WHERE rn <= 5),
+              cells AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
+                        FROM r GROUP BY 1, 2),
+              pi AS (SELECT i, CAST(sum(nij) AS BIGINT) AS m,
+                       CAST(sum(nij * nij) AS BIGINT) AS s2i
+                     FROM cells GROUP BY 1),
+              ok AS (SELECT * FROM pi WHERE m = 5),
+              s2 AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
+                       CAST(sum(s2i) AS BIGINT) AS s2v
+                     FROM ok),
+              cj AS (SELECT c.j, CAST(sum(c.nij) AS BIGINT) AS cjv
+                     FROM cells c JOIN ok ON c.i = ok.i GROUP BY 1),
+              sc AS (SELECT CAST(count(*) AS BIGINT) AS k_categories,
+                       CAST(sum(cjv * cjv) AS BIGINT) AS sc2
+                     FROM cj)
+         SELECT n_items, CAST(5 AS BIGINT) AS n_raters, k_categories,
+                CAST(s2v - n_items * 5 AS DOUBLE)
+                  / CAST((n_items * 5) * 4 AS DOUBLE) AS p_bar,"""
+
+  /** Gini gain `g` of splitting at `v`: root impurity of (n, pp) minus the
+    * size-weighted impurities of the left (tl, pl) and right sides —
+    * correctly-rounded ops only, so the arg-max is bit-portable. */
+  private val giniGainSql: String =
+    """(1.0 - (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
+            * (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
+            - (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE))
+            * (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE)))
+       - (CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))
+         * (1.0
+            - (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
+            * (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
+            - (CAST(tl - pl AS DOUBLE)
+               / CAST(tl AS DOUBLE))
+            * (CAST(tl - pl AS DOUBLE)
+               / CAST(tl AS DOUBLE)))
+       - (CAST(n - tl AS DOUBLE) / CAST(n AS DOUBLE))
+         * (1.0
+            - (CAST(pp - pl AS DOUBLE)
+               / CAST(n - tl AS DOUBLE))
+            * (CAST(pp - pl AS DOUBLE)
+               / CAST(n - tl AS DOUBLE))
+            - (CAST((n - tl) - (pp - pl) AS DOUBLE)
+               / CAST(n - tl AS DOUBLE))
+            * (CAST((n - tl) - (pp - pl) AS DOUBLE)
+               / CAST(n - tl AS DOUBLE))) AS g"""
+
   val all: Seq[Q] = Seq(
     /** §2b ROC-AUC eval: the stopword-ratio "englishness" score ranked
       * against the declared lang='en' label — Mann–Whitney midrank AUC as
       * per-distinct-score aggregates + one bounded cumulative window; the
       * threshold-free quality-filter readout. */
     Q("q_auc",
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
-              r AS (SELECT s, cp, cn,
-                           coalesce(sum(cp + cn) OVER (ORDER BY s
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0) AS below
-                    FROM per)
+      s"""$enScoredPerSql $belowSql
          SELECT CAST(sum(cp) AS BIGINT) AS n_pos,
                 CAST(sum(cn) AS BIGINT) AS n_neg,
                 round(CASE WHEN sum(cp) > 0 AND sum(cn) > 0 THEN
@@ -78,25 +166,7 @@ object AgreementQueries {
       * aggregate on the bin id, the readout any downstream threshold
       * consumes. */
     Q("q_calibration",
-      raw"""WITH scored AS (SELECT round(
-               0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-             + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0,
-                 1.0)
-             + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                        THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                        < 0.2 THEN 1.0 ELSE 0.0 END), 6) AS q,
-               (lang = 'en') AS y
-             FROM (SELECT lang, text,
-                     CAST(len($duckTokens) AS DOUBLE) AS n,
-                     CAST(len(list_filter($duckTokens,
-                       t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                       AS BIGINT) AS ns,
-                     length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                   FROM documents
-                   WHERE lang IS NOT NULL)),
-              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
-                          FROM scored)
+      s"""$qualityClampedSql
          SELECT CAST(least(CAST(floor(s * 10) AS BIGINT), 9) AS BIGINT)
                   AS bin,
                 CAST(count(*) AS BIGINT) AS n,
@@ -105,11 +175,7 @@ object AgreementQueries {
                 round(round(avg(CASE WHEN y THEN 1.0 ELSE 0.0 END), 6)
                   - round(avg(s), 6), 6) AS gap
          FROM clamped GROUP BY 1""") { (s, d) =>
-      Stats.calibrationBins(
-        Tables.documents(s, d).select(
-          round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
-          (col("lang") === "en").as("is_en")),
-        "quality", "is_en", bins = 10)
+      Stats.calibrationBins(qualityScored(s, d), "quality", "is_en", bins = 10)
     },
 
     /** §2b Cohen's kappa: chance-corrected agreement between the stopword
@@ -117,17 +183,7 @@ object AgreementQueries {
       * raw accuracy when classes are imbalanced (guessing the majority
       * class scores high p_o but κ≈0). */
     Q("q_kappa",
-      s"""WITH li AS (SELECT lang AS declared_lang,
-                        CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END)
-                               >= 0.05
-                             THEN 'en' ELSE 'unknown' END AS lang_guess
-                      FROM (SELECT lang,
-                              CAST(len($duckTokens) AS DOUBLE) AS n,
-                              CAST(len(list_filter($duckTokens,
-                                t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                                AS BIGINT) AS ns
-                            FROM documents
-                            WHERE lang IS NOT NULL)),
+      s"""$langGuessSql
               t AS (SELECT count(*) AS n,
                            sum(CASE WHEN declared_lang = lang_guess
                                THEN 1 ELSE 0 END) AS n_agree
@@ -160,19 +216,7 @@ object AgreementQueries {
       * q_auc over the SAME [[enScored]] frame — per-distinct-score
       * collapse, one descending cumulative window, one reduce. */
     Q("q_pr_auc",
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
+      s"""$enScoredPerSql
               c AS (SELECT s, cp, cn,
                            sum(cp) OVER (ORDER BY s DESC
                              ROWS BETWEEN UNBOUNDED PRECEDING
@@ -195,24 +239,7 @@ object AgreementQueries {
       * the stopword-score separation of English vs non-English docs — the
       * z-test companion to q_auc on the same collapse. */
     Q("q_mann_whitney",
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
-              r AS (SELECT s, cp, cn,
-                           coalesce(sum(cp + cn) OVER (ORDER BY s
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0) AS below
-                    FROM per),
+      s"""$enScoredPerSql $belowSql,
               agg AS (SELECT CAST(sum(cp) AS BIGINT) AS np,
                              CAST(sum(cn) AS BIGINT) AS nneg,
                              sum((CAST(below AS DOUBLE)
@@ -251,19 +278,7 @@ object AgreementQueries {
       * catch what fraction" — the operating-point companion to q_auc on
       * the same collapse. */
     Q("q_gain_curve",
-      s"""WITH base AS (SELECT round(CASE WHEN n > 0 THEN ns / n ELSE 0.0 END,
-                          6) AS s,
-                        (lang = 'en') AS y
-                 FROM (SELECT lang,
-                         CAST(len($duckTokens) AS DOUBLE) AS n,
-                         CAST(len(list_filter($duckTokens,
-                           t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                           AS BIGINT) AS ns
-                       FROM documents
-                       WHERE lang IS NOT NULL)),
-              per AS (SELECT s, sum(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-                             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS cn
-                      FROM base GROUP BY s),
+      s"""$enScoredPerSql
               tot AS (SELECT CAST(sum(cp + cn) AS BIGINT) AS nn,
                              CAST(sum(cp) AS BIGINT) AS pp
                       FROM per),
@@ -301,25 +316,7 @@ object AgreementQueries {
       * the deployable monotone fit beside the raw reliability readout;
       * minimax form, every value an exact-integer ratio, UNROUNDED. */
     Q("q_isotonic",
-      raw"""WITH scored AS (SELECT round(
-               0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-             + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0,
-                 1.0)
-             + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                        THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                        < 0.2 THEN 1.0 ELSE 0.0 END), 6) AS q,
-               (lang = 'en') AS y
-             FROM (SELECT lang, text,
-                     CAST(len($duckTokens) AS DOUBLE) AS n,
-                     CAST(len(list_filter($duckTokens,
-                       t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                       AS BIGINT) AS ns,
-                     length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                   FROM documents
-                   WHERE lang IS NOT NULL)),
-              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
-                          FROM scored),
+      s"""$qualityClampedSql,
               binned AS (SELECT CAST(least(CAST(floor(s * 10) AS BIGINT), 9)
                              AS BIGINT) AS bin,
                            count(*) AS n,
@@ -348,11 +345,8 @@ object AgreementQueries {
                 CAST(p.pos AS DOUBLE) / CAST(p.n AS DOUBLE) AS pos_rate,
                 f.iso_rate
          FROM pre p JOIN fit f ON p.bin = f.bin""") { (s, d) =>
-      Stats.isotonicCalibration(
-        Tables.documents(s, d).select(
-          round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
-          (col("lang") === "en").as("is_en")),
-        "quality", "is_en", bins = 10)
+      Stats.isotonicCalibration(qualityScored(s, d), "quality", "is_en",
+        bins = 10)
     },
 
     /** §2b McNemar paired-rates test: declared 'en' vs the stopword
@@ -360,17 +354,7 @@ object AgreementQueries {
       * 'en' at the same MARGINAL rate (only discordant docs carry
       * evidence; the paired companion to q_kappa's agreement readout). */
     Q("q_mcnemar",
-      s"""WITH li AS (SELECT lang AS declared_lang,
-                        CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END)
-                               >= 0.05
-                             THEN 'en' ELSE 'unknown' END AS lang_guess
-                      FROM (SELECT lang,
-                              CAST(len($duckTokens) AS DOUBLE) AS n,
-                              CAST(len(list_filter($duckTokens,
-                                t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                                AS BIGINT) AS ns
-                            FROM documents
-                            WHERE lang IS NOT NULL)),
+      s"""$langGuessSql
               f AS (SELECT (declared_lang = 'en') AS a,
                            (lang_guess = 'en') AS b
                     FROM li),
@@ -397,25 +381,7 @@ object AgreementQueries {
       * in one row — "how good is the quality score as an is-en
       * probability, and why". */
     Q("q_ece",
-      raw"""WITH scored AS (SELECT round(
-               0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-             + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0,
-                 1.0)
-             + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                        THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                        < 0.2 THEN 1.0 ELSE 0.0 END), 6) AS q,
-               (lang = 'en') AS y
-             FROM (SELECT lang, text,
-                     CAST(len($duckTokens) AS DOUBLE) AS n,
-                     CAST(len(list_filter($duckTokens,
-                       t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                       AS BIGINT) AS ns,
-                     length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
-                   FROM documents
-                   WHERE lang IS NOT NULL)),
-              clamped AS (SELECT greatest(least(q, 1.0), 0.0) AS s, y
-                          FROM scored),
+      s"""$qualityClampedSql,
               binned AS (SELECT CAST(least(CAST(floor(s * 10) AS BIGINT), 9)
                              AS BIGINT) AS bin,
                            CAST(count(*) AS DOUBLE) AS nb,
@@ -441,11 +407,8 @@ object AgreementQueries {
                 round(pos / CAST(n AS DOUBLE)
                   * (1.0 - pos / CAST(n AS DOUBLE)), 6) AS uncertainty
          FROM binned, tot GROUP BY n, sqsum, pos""") { (s, d) =>
-      Stats.forecastDecomposition(
-        Tables.documents(s, d).select(
-          round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
-          (col("lang") === "en").as("is_en")),
-        "quality", "is_en", bins = 10)
+      Stats.forecastDecomposition(qualityScored(s, d), "quality", "is_en",
+        bins = 10)
     },
 
     /** §2b ARI + NMI between the lang and source partitions of the
@@ -501,30 +464,7 @@ object AgreementQueries {
       * of the user by event-type "category"; chance-corrected multi-rater
       * agreement, the labeling-QA gate. Exact integer ratio, unrounded. */
     Q("q_fleiss_kappa",
-      """WITH ev AS (SELECT user_id, event_type,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS rn
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              r AS (SELECT user_id AS i, event_type AS j
-                    FROM ev WHERE rn <= 5),
-              cells AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
-                        FROM r GROUP BY 1, 2),
-              pi AS (SELECT i, CAST(sum(nij) AS BIGINT) AS m,
-                       CAST(sum(nij * nij) AS BIGINT) AS s2i
-                     FROM cells GROUP BY 1),
-              ok AS (SELECT * FROM pi WHERE m = 5),
-              s2 AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
-                       CAST(sum(s2i) AS BIGINT) AS s2v
-                     FROM ok),
-              cj AS (SELECT c.j, CAST(sum(c.nij) AS BIGINT) AS cjv
-                     FROM cells c JOIN ok ON c.i = ok.i GROUP BY 1),
-              sc AS (SELECT CAST(count(*) AS BIGINT) AS k_categories,
-                       CAST(sum(cjv * cjv) AS BIGINT) AS sc2
-                     FROM cj)
-         SELECT n_items, CAST(5 AS BIGINT) AS n_raters, k_categories,
-                CAST(s2v - n_items * 5 AS DOUBLE)
-                  / CAST((n_items * 5) * 4 AS DOUBLE) AS p_bar,
+      s"""$ratingsFirst5Sql
                 CAST(sc2 AS DOUBLE)
                   / CAST((n_items * 5) * (n_items * 5) AS DOUBLE) AS p_e,
                 CASE WHEN (n_items * 5) * (n_items * 5) <> sc2
@@ -541,30 +481,7 @@ object AgreementQueries {
       * prevalence-robust agreement twin (kappa-paradox guard); exact
       * integer ratio, unrounded. */
     Q("q_gwet_ac1",
-      """WITH ev AS (SELECT user_id, event_type,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS rn
-                     FROM events
-                     WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-              r AS (SELECT user_id AS i, event_type AS j
-                    FROM ev WHERE rn <= 5),
-              cells AS (SELECT i, j, CAST(count(*) AS BIGINT) AS nij
-                        FROM r GROUP BY 1, 2),
-              pi AS (SELECT i, CAST(sum(nij) AS BIGINT) AS m,
-                       CAST(sum(nij * nij) AS BIGINT) AS s2i
-                     FROM cells GROUP BY 1),
-              ok AS (SELECT * FROM pi WHERE m = 5),
-              s2 AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
-                       CAST(sum(s2i) AS BIGINT) AS s2v
-                     FROM ok),
-              cj AS (SELECT c.j, CAST(sum(c.nij) AS BIGINT) AS cjv
-                     FROM cells c JOIN ok ON c.i = ok.i GROUP BY 1),
-              sc AS (SELECT CAST(count(*) AS BIGINT) AS k_categories,
-                       CAST(sum(cjv * cjv) AS BIGINT) AS sc2
-                     FROM cj)
-         SELECT n_items, CAST(5 AS BIGINT) AS n_raters, k_categories,
-                CAST(s2v - n_items * 5 AS DOUBLE)
-                  / CAST((n_items * 5) * 4 AS DOUBLE) AS p_bar,
+      s"""$ratingsFirst5Sql
                 CAST((n_items * 5) * (n_items * 5) - sc2 AS DOUBLE)
                   / CAST((k_categories - 1) * (n_items * 5)
                       * (n_items * 5) AS DOUBLE) AS p_e_gamma,
@@ -953,20 +870,10 @@ object AgreementQueries {
       * verdict beside q_kappa's chance correction: exact-integer
       * confusion counts, four-√-factor denominator. */
     Q("q_mcc",
-      // Same lang-guess frame as q_kappa; exact-integer confusion counts,
+      // [[langGuessSql]] as for q_kappa; exact-integer confusion counts,
       // the MCC numerator stays exact (HUGEINT) before its single double
       // cast and the denominator multiplies four exact square roots.
-      s"""WITH li AS (SELECT lang AS declared_lang,
-                        CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END)
-                               >= 0.05
-                             THEN 'en' ELSE 'unknown' END AS lang_guess
-                      FROM (SELECT lang,
-                              CAST(len($duckTokens) AS DOUBLE) AS n,
-                              CAST(len(list_filter($duckTokens,
-                                t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                                AS BIGINT) AS ns
-                            FROM documents
-                            WHERE lang IS NOT NULL)),
+      s"""$langGuessSql
               cm AS (SELECT
                        CAST(sum(CASE WHEN declared_lang = 'en'
                          AND lang_guess = 'en' THEN 1 ELSE 0 END) AS BIGINT)
@@ -1014,7 +921,7 @@ object AgreementQueries {
       // Cumulative class counts over the distinct-value grid; the Gini
       // algebra uses only correctly-rounded ops so the arg-max is
       // bit-portable; ties break to the smaller threshold.
-      """WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS v,
+      s"""WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS v,
                               (lang = 'en') AS y
                        FROM documents
                        WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
@@ -1031,29 +938,7 @@ object AgreementQueries {
                                        AND CURRENT ROW) AS pl,
                             sum(c) OVER () AS n, sum(p) OVER () AS pp
                      FROM grid),
-              cand AS (SELECT v, tl, pl, n, pp,
-                         (1.0 - (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                              * (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                              - (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE))
-                              * (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE)))
-                         - (CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              * (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              - (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE))
-                              * (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE)))
-                         - (CAST(n - tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              - (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))) AS g
+              cand AS (SELECT v, tl, pl, n, pp, $giniGainSql
                        FROM cw WHERE tl < n),
               best AS (SELECT * FROM cand ORDER BY g DESC, v ASC LIMIT 1),
               root AS (SELECT CAST(sum(c) AS BIGINT) AS n,
@@ -1181,7 +1066,7 @@ object AgreementQueries {
       // Leave-one-fold-out training grids by global-minus-fold
       // subtraction over the densified fold x value grid; per-fold
       // argmax carries the held-out confusion.
-      """WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS v,
+      s"""WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS v,
                          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
                          doc_id % 4 AS f
                        FROM documents
@@ -1210,29 +1095,7 @@ object AgreementQueries {
                        UNBOUNDED PRECEDING AND CURRENT ROW),
                        wf AS (PARTITION BY f ROWS BETWEEN
                          UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)),
-              cand AS (SELECT *,
-                         (1.0 - (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                            * (CAST(pp AS DOUBLE) / CAST(n AS DOUBLE))
-                            - (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE))
-                            * (CAST(n - pp AS DOUBLE) / CAST(n AS DOUBLE)))
-                         - (CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              * (CAST(pl AS DOUBLE) / CAST(tl AS DOUBLE))
-                              - (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE))
-                              * (CAST(tl - pl AS DOUBLE)
-                                 / CAST(tl AS DOUBLE)))
-                         - (CAST(n - tl AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0
-                              - (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST(pp - pl AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              - (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))
-                              * (CAST((n - tl) - (pp - pl) AS DOUBLE)
-                                 / CAST(n - tl AS DOUBLE))) AS g
+              cand AS (SELECT *, $giniGainSql
                        FROM cw WHERE tl > 0 AND tl < n),
               best AS (SELECT * FROM (SELECT *, row_number() OVER
                          (PARTITION BY f ORDER BY g DESC, v ASC) AS rn

@@ -604,9 +604,7 @@ object CorpusQueries {
       s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents),
               e AS (SELECT doc_id, UNNEST(toks) AS token FROM t),
               sc AS (SELECT doc_id,
-                       SUM(list_extract($classifierWeightsSql,
-                         CAST(CAST(('0x' || substring(md5('13:' || token), 1, 15))
-                           AS BIGINT) % 64 AS INTEGER) + 1)) AS sw
+                       $classifierTokenSumSql
                      FROM e GROUP BY doc_id),
               kept AS (SELECT d.* FROM documents d
                        LEFT JOIN sc ON sc.doc_id = d.doc_id

@@ -2,6 +2,7 @@ package graft
 package queries
 
 import graft.operators._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication and record-linkage queries: exact, Jaccard, MinHash,
@@ -46,23 +47,174 @@ object DedupQueries {
         WHERE a.doc_id < c.doc_id
           AND bit_count(xor(a.simhash, c.simhash)) <= 8"""
 
+  /** `tok` (distinct word tokens of the documents with doc_id < `maxId`),
+    * `sizes` and `inter`: the doc-token Jaccard edge CTEs of the oracles. */
+  private def tokenInterSql(maxId: Int): String =
+    s"${tokSql(maxId)}, ${sizesInterSql("tok")}"
+
+  /** `tok`: distinct word tokens of the documents with doc_id < `maxId`. */
+  private def tokSql(maxId: Int): String =
+    s"""tok AS (SELECT DISTINCT doc_id, UNNEST($duckTokens) AS token
+                 FROM documents WHERE doc_id < $maxId)"""
+
+  /** [[tokenInterSql]] over distinct word 3-gram shingles (`sh`). */
+  private def shingleInterSql(maxId: Int): String =
+    s"""tok AS (SELECT doc_id, $duckTokens AS t
+                 FROM documents WHERE doc_id < $maxId),
+         sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
+                FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
+         ${sizesInterSql("sh")}"""
+
+  /** `sizes` of the per-doc token relation `rel`, and `inter`: ordered doc
+    * pairs sharing a token, with the shared count. */
+  private def sizesInterSql(rel: String): String =
+    s"""sizes AS (SELECT doc_id, count(*) AS n FROM $rel GROUP BY doc_id),
+        inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+                  FROM $rel a JOIN $rel b
+                    ON a.token = b.token AND a.doc_id < b.doc_id
+                  GROUP BY 1, 2)"""
+
+  /** FROM … WHERE tail keeping the `inter` pairs with Jaccard ≥ `t`. */
+  private def jaccardAtLeastSql(t: Double): String =
+    s"$interSizesSql WHERE i.n_common / (sa.n + sb.n - i.n_common) >= $t"
+
+  /** `inter` joined to both sides' `sizes` (`sa`, `sb`). */
+  private val interSizesSql: String =
+    """FROM inter i
+       JOIN sizes sa ON i.id_a = sa.doc_id
+       JOIN sizes sb ON i.id_b = sb.doc_id"""
+
+  /** `WITH RECURSIVE` chain from `inter` (a [[tokenInterSql]] or
+    * [[shingleInterSql]] over doc_id < `maxId`) to `pairs` (Jaccard ≥ `t`),
+    * the undirected `edges`, and `cl(id, cluster)`: the min-label walk the
+    * engine's [[Dedup.duplicateClusters]] computes. */
+  private def clustersSql(inter: String, maxId: Int, t: Double): String =
+    s"""WITH RECURSIVE $inter,
+           pairs AS (SELECT i.id_a, i.id_b ${jaccardAtLeastSql(t)}),
+           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                     UNION
+                     SELECT id_b AS src, id_a AS dst FROM pairs),
+           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < $maxId),
+           walk(id, lbl) AS (
+             SELECT id, id FROM nodes
+             UNION
+             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
+           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)"""
+
+  /** Token-Jaccard ≥ 0.3 clusters over doc_id < 60. */
+  private def tokenClustersSql: String = clustersSql(tokenInterSql(60), 60, 0.3)
+
+  /** Shingle-Jaccard ≥ 0.02 clusters over doc_id < 120. */
+  private def shingleClustersSql: String =
+    clustersSql(shingleInterSql(120), 120, 0.02)
+
+  /** The shingle-Jaccard ≥ 0.02 graph over doc_id < 120 as `canon(a, b)`. */
+  private val shingleCanonSql: String =
+    s"""WITH ${shingleInterSql(120)},
+              pairs AS (SELECT i.id_a, i.id_b ${jaccardAtLeastSql(0.02)}),
+              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),"""
+
+  /** The shingle-Jaccard ≥ 0.02 graph over doc_id < 300 as `pairs(a, b)`,
+    * with node degrees `deg`. */
+  private val shingleDegSql: String =
+    s"""WITH ${shingleInterSql(300)},
+              pairs AS (SELECT i.id_a AS a, i.id_b AS b ${jaccardAtLeastSql(0.02)}),
+              ${degSql("pairs")},"""
+
+  /** `deg(id, dg)`: node degrees of the undirected edge relation `rel(a, b)`. */
+  private def degSql(rel: String): String =
+    s"""deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
+                FROM (SELECT a AS id FROM $rel
+                      UNION ALL SELECT b AS id FROM $rel)
+                GROUP BY 1)"""
+
+  /** `deg`, `adj` and the hub-capped wedge `cand(u, v, n_common …)` over
+    * `canon`, plus the aggregates in `extra`: the link-prediction oracles'
+    * common-neighbor CTEs. */
+  private def wedgeSql(extra: String): String =
+    s"""${degSql("canon")},
+        adj AS (SELECT a AS w, b AS u FROM canon
+                UNION ALL SELECT b AS w, a AS u FROM canon),
+        cand AS (SELECT n1.u AS u, n2.u AS v, count(*) AS n_common$extra
+                 FROM adj n1
+                 JOIN deg d ON n1.w = d.id AND d.dg <= 1000
+                 JOIN adj n2 ON n1.w = n2.w AND n1.u < n2.u
+                 GROUP BY 1, 2)"""
+
+  /** `sig`: 16 seeded MinHash minima per `tok` document. */
+  private val sigSql: String =
+    """sig AS (SELECT doc_id, seed,
+                 min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
+                     AS BIGINT)) AS min_hash
+               FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
+               GROUP BY doc_id, seed)"""
+
+  /** `sig` and `banded`: the 4 bands × 4 rows band hashes per document. */
+  private val bandedSql: String =
+    s"""$sigSql,
+        banded AS (SELECT doc_id, seed // 4 AS band,
+                     md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
+                       AS band_hash
+                   FROM sig GROUP BY doc_id, band)"""
+
+  /** Ordered doc pairs sharing any band hash: the LSH candidates. */
+  private val bandPairsSql: String =
+    """SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+       FROM banded a JOIN banded b USING (band, band_hash)
+       WHERE a.doc_id < b.doc_id"""
+
+  /** [[bandedSql]] followed by the candidates as `cand(id_a, id_b)`. */
+  private val lshCandSql: String = s"$bandedSql, cand AS ($bandPairsSql)"
+
   /** Shared oracle for q_jaccard_pairs AND q_jaccard_prefix (the prefix
     * filter is an exact optimization — both must match this bit-for-bit). */
   private def jaccardPairsOracleSql: String =
-    """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 60),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
-         SELECT i.id_a, i.id_b,
-                round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.doc_id
-         JOIN sizes sb ON i.id_b = sb.doc_id
-         WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3"""
+    s"""WITH ${tokenInterSql(60)}
+         SELECT i.id_a, i.id_b, $roundedJaccardSql
+         ${jaccardAtLeastSql(0.3)}"""
+
+  /** An `inter` pair's Jaccard, 6dp, as `jaccard`. */
+  private val roundedJaccardSql: String =
+    "round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard"
+
+  /** q_er_score's 6dp match score of a candidate pair: 0.5 token
+    * Jaccard + 0.3 Levenshtein similarity + 0.2 exact source match. */
+  private val erScoreSql: String =
+    """round(0.5 * (CASE
+        WHEN len(list_distinct(list_concat(tka, tkb))) = 0
+        THEN 1.0
+        ELSE CAST(len(list_filter(list_distinct(tka),
+               t -> list_contains(tkb, t))) AS DOUBLE)
+             / len(list_distinct(list_concat(tka, tkb))) END)
+      + 0.3 * (CASE WHEN greatest(length(ta), length(tb)) = 0
+        THEN 1.0
+        ELSE 1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
+                   / greatest(length(ta), length(tb)) END)
+      + 0.2 * (CASE WHEN sa IS NOT DISTINCT FROM sb
+        THEN 1.0 ELSE 0.0 END), 6)"""
+
+  /** The documents with doc_id < `maxId`. */
+  private def docsBelow(s: SparkSession, d: String, maxId: Int): DataFrame =
+    Tables.documents(s, d).filter(col("doc_id") < maxId)
+
+  /** Engine twin of [[tokenClustersSql]]'s `pairs`: token Jaccard ≥ 0.3. */
+  private def tokenPairs(docs: DataFrame): DataFrame =
+    Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
+
+  /** Engine twin of the shingle oracles' `pairs`: 3-gram Jaccard ≥ 0.02. */
+  private def shinglePairs(docs: DataFrame): DataFrame =
+    Dedup.jaccardPairsFrom(Dedup.shingleSets(docs, "doc_id", "text"),
+      "doc_id", 0.02)
+
+  /** Pairs as graph edges (`src`, `dst`). */
+  private def asEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+
+  /** MinHash-LSH candidates of `docs` (16 hashes, 4 bands × 4 rows). */
+  private def lshCandidates(docs: DataFrame): DataFrame =
+    Dedup.minHashLshCandidates(
+      Dedup.minHashSignatures(docs, "doc_id", "text", 16),
+      "doc_id", bands = 4, rowsPerBand = 4)
 
   val all: Seq[Q] = Seq(
     /** §2b exact dedup by canonical-text fingerprint. */
@@ -87,8 +239,7 @@ object DedupQueries {
     /** §2b n-gram Jaccard near-dup pairs via inverted-index join (bounded id
       * range keeps the oracle cheap; the operator itself is linear-ish). */
     Q("q_jaccard_pairs", jaccardPairsOracleSql) { (s, d) =>
-      Dedup.jaccardPairs(Tables.documents(s, d).filter(col("doc_id") < 60),
-        "doc_id", "text", 0.3)
+      tokenPairs(docsBelow(s, d, 60))
         .withColumn("jaccard", round(col("jaccard"), 6))
     },
 
@@ -101,9 +252,7 @@ object DedupQueries {
       // exact optimization), so the prefix variant shares the oracle
       jaccardPairsOracleSql) { (s, d) =>
       Dedup.jaccardPairsPrefix(
-        Dedup.tokenSets(Tables.documents(s, d).filter(col("doc_id") < 60),
-          "doc_id", "text"),
-        "doc_id", 0.3)
+        Dedup.tokenSets(docsBelow(s, d, 60), "doc_id", "text"), "doc_id", 0.3)
         .withColumn("jaccard", round(col("jaccard"), 6))
     },
 
@@ -175,8 +324,7 @@ object DedupQueries {
     /** §2b word-shingle (3-gram) Jaccard near-dup pairs — the n-gram variant:
       * shingles are near-unique so the inverted index barely fans out. */
     Q("q_shingle_pairs",
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
+      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t
                       FROM documents WHERE doc_id < 300),
               sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
                      FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
@@ -185,19 +333,11 @@ object DedupQueries {
                         FROM sh a JOIN sh b
                           ON a.shingle = b.shingle AND a.doc_id < b.doc_id
                         GROUP BY 1, 2)
-         SELECT i.id_a, i.id_b,
-                round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.doc_id
-         JOIN sizes sb ON i.id_b = sb.doc_id
-         WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02""") { (s, d) =>
+         SELECT i.id_a, i.id_b, $roundedJaccardSql ${jaccardAtLeastSql(0.02)}""") { (s, d) =>
       // doc_id < 300 @ 0.02 yields ~116 qualifying pairs at sf0.01 — a
       // non-vacuous oracle comparison (the earlier 120/0.05 cut matched on
       // 0 = 0 rows, which a broken implementation would also "pass").
-      Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(Tables.documents(s, d).filter(col("doc_id") < 300),
-          "doc_id", "text"),
-        "doc_id", 0.02)
+      shinglePairs(docsBelow(s, d, 300))
         .withColumn("jaccard", round(col("jaccard"), 6))
     },
 
@@ -208,25 +348,7 @@ object DedupQueries {
       * hub-to-leaf stars (one canonical doc with many variants). One row:
       * edge count + 6dp r via the engines' shared corr aggregate. */
     Q("q_assortativity",
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 300),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a AS a, i.id_b AS b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM pairs
-                            UNION ALL SELECT b AS id FROM pairs)
-                      GROUP BY 1),
+      s"""$shingleDegSql
               bidir AS (SELECT a, b FROM pairs
                         UNION ALL SELECT b AS a, a AS b FROM pairs)
          SELECT CAST(count(*) / 2 AS BIGINT) AS n_edges,
@@ -244,12 +366,7 @@ object DedupQueries {
       // the stats join — uncached, the shingle equi-join reruns per
       // consumer (measured 5.9 s → 1.9 s at sf0.1; same rationale as
       // q_modularity's cache)
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(Tables.documents(s, d).filter(col("doc_id") < 300),
-          "doc_id", "text"),
-        "doc_id", 0.02).cache()
-      Graph.assortativity(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      Graph.assortativity(asEdges(shinglePairs(docsBelow(s, d, 300)).cache()))
     },
 
     /** §2b duplicate-cluster resolution: near-dup pairs → connected
@@ -258,33 +375,11 @@ object DedupQueries {
       * (A,C) was never a pair. Oracle re-derives the closure with a DuckDB
       * recursive CTE. */
     Q("q_dup_clusters",
-      """WITH RECURSIVE
-           tok AS (SELECT DISTINCT doc_id,
-                     UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                   FROM documents WHERE doc_id < 60),
-           sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM tok a JOIN tok b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
+      s"""$tokenClustersSql
          SELECT id AS doc_id, cluster, (id = cluster) AS is_canonical FROM cl""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
-      Dedup.duplicateClusters(docs.select(col("doc_id")), pairs, "doc_id")
+      val docs = docsBelow(s, d, 60)
+      Dedup.duplicateClusters(docs.select(col("doc_id")), tokenPairs(docs),
+        "doc_id")
         .withColumn("is_canonical", col("doc_id") === col("cluster"))
     },
 
@@ -300,37 +395,12 @@ object DedupQueries {
       * (the earlier word-token/0.3 cut chained all 60 docs into one
       * cluster, a single-row result almost any aggregate would match). */
     Q("q_dedup_weights",
-      """WITH RECURSIVE
-           tok AS (SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                   FROM documents WHERE doc_id < 120),
-           sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                  FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM sh a JOIN sh b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 120),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
+      s"""$shingleClustersSql
          SELECT cluster AS doc_id, CAST(count(*) AS BIGINT) AS weight
          FROM cl GROUP BY 1""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02)
-      Dedup.duplicateClusters(docs.select(col("doc_id")), pairs, "doc_id")
+      val docs = docsBelow(s, d, 120)
+      Dedup.duplicateClusters(docs.select(col("doc_id")), shinglePairs(docs),
+        "doc_id")
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("weight"))
         .select(col("cluster").as("doc_id"), col("weight"))
@@ -345,31 +415,7 @@ object DedupQueries {
       * less than their edge share suggests). Multi-member clusters AND
       * zero-contribution singletons both appear at every SF. */
     Q("q_modularity",
-      """WITH RECURSIVE
-           tok AS (SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                   FROM documents WHERE doc_id < 120),
-           sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                  FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM sh a JOIN sh b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 120),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id),
+      s"""$shingleClustersSql,
            canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
            mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM canon),
            intra AS (SELECT ca.cluster AS c, CAST(count(*) AS BIGINT) AS e_c
@@ -378,10 +424,7 @@ object DedupQueries {
                      JOIN cl cb ON canon.b = cb.id
                      WHERE ca.cluster = cb.cluster
                      GROUP BY 1),
-           deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                   FROM (SELECT a AS id FROM canon
-                         UNION ALL SELECT b AS id FROM canon)
-                   GROUP BY 1),
+           ${degSql("canon")},
            dm AS (SELECT cl.cluster AS c, CAST(count(*) AS BIGINT) AS n_nodes,
                          CAST(COALESCE(sum(deg.dg), 0) AS BIGINT) AS d_c
                   FROM cl LEFT JOIN deg ON cl.id = deg.id
@@ -394,17 +437,14 @@ object DedupQueries {
                           * (CAST(dm.d_c AS DOUBLE) / (2.0 * m.m)), 6)
                 END AS q_contrib
          FROM dm LEFT JOIN intra ON dm.c = intra.c, mm m""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
+      val docs = docsBelow(s, d, 120)
       // cached: the pair relation feeds the CC labels AND modularity's
       // canon/intra/degree consumers — uncached, the token equi-join reruns
       // per consumer
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
+      val pairs = shinglePairs(docs).cache()
       val labels = Dedup.duplicateClusters(docs.select(col("doc_id")), pairs,
         "doc_id")
-      Graph.modularity(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-        labels, "doc_id", "cluster")
+      Graph.modularity(asEdges(pairs), labels, "doc_id", "cluster")
     },
 
     /** §2b Adamic–Adar link prediction ([[Graph.adamicAdar]]) over the
@@ -414,48 +454,18 @@ object DedupQueries {
       * loses transitive pairs; AA surfaces exactly those). Wedge join on
       * the common-neighbor center, hub-capped, TakeOrdered. */
     Q("q_adamic_adar",
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 120),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM canon
-                            UNION ALL SELECT b AS id FROM canon)
-                      GROUP BY 1),
-              adj AS (SELECT a AS w, b AS u FROM canon
-                      UNION ALL SELECT b AS w, a AS u FROM canon),
-              cand AS (SELECT n1.u AS u, n2.u AS v, count(*) AS n_common,
-                         sum(1.0 / ln(CAST(d.dg AS DOUBLE))) AS aa
-                       FROM adj n1
-                       JOIN deg d ON n1.w = d.id AND d.dg <= 1000
-                       JOIN adj n2 ON n1.w = n2.w AND n1.u < n2.u
-                       GROUP BY 1, 2)
+      s"""$shingleCanonSql
+              ${wedgeSql(", sum(1.0 / ln(CAST(d.dg AS DOUBLE))) AS aa")}
          SELECT u AS src, v AS dst, n_common, round(aa, 6) AS aa_score
          FROM cand
          WHERE NOT EXISTS (SELECT 1 FROM canon c
                            WHERE c.a = cand.u AND c.b = cand.v)
          ORDER BY aa_score DESC, src ASC, dst ASC
          LIMIT 20""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
       // cached: adamicAdar's canon feeds deg, both adjacency halves, the
       // wedge join's two sides and the anti-join — five consumers of the
       // shingle equi-join (q_modularity's cache rationale)
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
-      Graph.adamicAdar(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
+      Graph.adamicAdar(asEdges(shinglePairs(docsBelow(s, d, 120)).cache()),
         topN = 20)
     },
 
@@ -466,22 +476,7 @@ object DedupQueries {
       * boilerplate stars score 0; the per-node readout of what
       * q_triangles measures in aggregate. */
     Q("q_clustering_coef",
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 120),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
+      s"""$shingleCanonSql
               deg AS (SELECT id, CAST(count(*) AS BIGINT) AS degree
                       FROM (SELECT a AS id FROM canon
                             UNION ALL SELECT b AS id FROM canon)
@@ -500,11 +495,8 @@ object DedupQueries {
                   round(2 * COALESCE(tri.triangles, CAST(0 AS BIGINT))
                     / (deg.degree * (deg.degree - 1)), 6) END AS lcc
          FROM deg LEFT JOIN tri ON deg.id = tri.id""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
       Graph.clusteringCoefficient(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+        asEdges(shinglePairs(docsBelow(s, d, 120)).cache()))
     },
 
     /** §2b LSH S-curve calibration: per exact-Jaccard decile, the observed
@@ -514,36 +506,14 @@ object DedupQueries {
       * chains (j², j⁴, (1−j⁴)², (1−j⁴)⁴) — no pow, bit-identical
       * cross-engine. */
     Q("q_lsh_calibration",
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 40),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
+      s"""WITH ${tokenInterSql(40)},
               p AS (SELECT i.id_a, i.id_b,
                            i.n_common / (sa.n + sb.n - i.n_common) AS j
-                    FROM inter i
-                    JOIN sizes sa ON i.id_a = sa.doc_id
-                    JOIN sizes sb ON i.id_b = sb.doc_id
-                    WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.05),
+                    ${jaccardAtLeastSql(0.05)}),
               e1 AS (SELECT id_a, id_b, j, (j * j) * (j * j) AS j4 FROM p),
               e2 AS (SELECT id_a, id_b, j, 1.0 - j4 AS y FROM e1),
               e3 AS (SELECT id_a, id_b, j, y * y AS y2 FROM e2),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b USING (band, band_hash)
-                       WHERE a.doc_id < b.doc_id),
+              $lshCandSql,
               scored AS (SELECT LEAST(CAST(floor(e3.j * 10) AS BIGINT), 9)
                                   AS jaccard_decile,
                                 1.0 - e3.y2 * e3.y2 AS exp_p,
@@ -555,12 +525,9 @@ object DedupQueries {
                 round(avg(exp_p), 6) AS expected_rate,
                 round(CAST(sum(obs) AS DOUBLE) / count(*), 6) AS observed_rate
          FROM scored GROUP BY 1""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
+      val docs = docsBelow(s, d, 40)
       val truth = Dedup.jaccardPairs(docs, "doc_id", "text", 0.05)
-      val cands = Dedup.minHashLshCandidates(
-          Dedup.minHashSignatures(docs, "doc_id", "text", 16),
-          "doc_id", bands = 4, rowsPerBand = 4)
-        .withColumn("__hit", lit(1L))
+      val cands = lshCandidates(docs).withColumn("__hit", lit(1L))
       val j = col("jaccard")
       val j4 = (j * j) * (j * j)
       val y = lit(1.0) - j4
@@ -581,29 +548,7 @@ object DedupQueries {
       * Jaccard dup clusters as q_dup_clusters — longest text + modal lang
       * per cluster, lowest id as the canonical key (the MDM merge step). */
     Q("q_golden_record",
-      """WITH RECURSIVE
-           tok AS (SELECT DISTINCT doc_id,
-                     UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                   FROM documents WHERE doc_id < 60),
-           sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM tok a JOIN tok b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id),
+      s"""$tokenClustersSql,
            j AS (SELECT d.doc_id, d.text, d.lang, c.cluster
                  FROM documents d JOIN cl c ON d.doc_id = c.id
                  WHERE d.doc_id < 60),
@@ -623,10 +568,9 @@ object DedupQueries {
          SELECT b.cluster, b.canonical_id, b.n_members,
                 pick.text_golden, md.lang_golden
          FROM base b JOIN pick USING (cluster) JOIN md USING (cluster)""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
+      val docs = docsBelow(s, d, 60)
       val clusters = Dedup.duplicateClusters(
-        docs.select(col("doc_id")), pairs, "doc_id")
+        docs.select(col("doc_id")), tokenPairs(docs), "doc_id")
       Dedup.goldenRecord(docs, "doc_id", clusters, "text", "lang")
     },
 
@@ -636,20 +580,9 @@ object DedupQueries {
       * anything (same-split near-dups are waste; cross-split ones are
       * leakage). Pure composition: jaccardPairs × hashSplit. */
     Q("q_split_leakage",
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 60),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              p AS (SELECT i.id_a, i.id_b,
-                           round(i.n_common / (sa.n + sb.n - i.n_common), 6) AS jaccard
-                    FROM inter i
-                    JOIN sizes sa ON i.id_a = sa.doc_id
-                    JOIN sizes sb ON i.id_b = sb.doc_id
-                    WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
+      s"""WITH ${tokenInterSql(60)},
+              p AS (SELECT i.id_a, i.id_b, $roundedJaccardSql
+                    ${jaccardAtLeastSql(0.3)}),
               sp AS (SELECT doc_id,
                        CASE WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
                                  AS BIGINT) % 100 < 90
@@ -660,8 +593,8 @@ object DedupQueries {
          FROM p JOIN sp a ON p.id_a = a.doc_id
                 JOIN sp b ON p.id_b = b.doc_id
          WHERE a.split <> b.split""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
+      val docs = docsBelow(s, d, 60)
+      val pairs = tokenPairs(docs)
         .withColumn("jaccard", round(col("jaccard"), 6))
       val split = Corpus.hashSplit(docs.select(col("doc_id")), "doc_id",
         Seq("train" -> 90, "test" -> 100)).select(col("doc_id"), col("split"))
@@ -681,42 +614,16 @@ object DedupQueries {
       * assignment and no cluster can straddle train/test by construction.
       * Multi-member clusters and singletons both present at every SF. */
     Q("q_leakage_safe_split",
-      """WITH RECURSIVE
-           tok AS (SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                   FROM documents WHERE doc_id < 120),
-           sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                  FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM sh a JOIN sh b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 120),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
+      s"""$shingleClustersSql
          SELECT id AS doc_id, cluster, pct AS split_pct,
                 CASE WHEN pct < 90 THEN 'train' ELSE 'test' END AS split
          FROM (SELECT id, cluster,
                  CAST(('0x' || substring(md5(CAST(cluster AS VARCHAR)), 1, 8))
                    AS BIGINT) % 100 AS pct
                FROM cl)""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02)
-      val labels = Dedup.duplicateClusters(docs.select(col("doc_id")), pairs,
-        "doc_id")
+      val docs = docsBelow(s, d, 120)
+      val labels = Dedup.duplicateClusters(docs.select(col("doc_id")),
+        shinglePairs(docs), "doc_id")
       Corpus.leakageSafeSplit(labels, "doc_id", "cluster",
         Seq("train" -> 90, "test" -> 100))
     },
@@ -740,14 +647,7 @@ object DedupQueries {
       * signature agreement alone (no exact re-verification) — the path used
       * when re-joining raw token sets is too expensive. */
     Q("q_minhash_est",
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 200),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
+      s"""WITH ${tokSql(200)}, $sigSql,
               agree AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                                count(*) AS n_agree
                         FROM sig a JOIN sig b
@@ -758,8 +658,7 @@ object DedupQueries {
                 round(CAST(n_agree AS DOUBLE) / 16, 6) AS est_jaccard
          FROM agree WHERE CAST(n_agree AS DOUBLE) / 16 >= 0.25""") { (s, d) =>
       Dedup.minHashEstimate(
-        Dedup.minHashSignatures(
-          Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id", "text", 16),
+        Dedup.minHashSignatures(docsBelow(s, d, 200), "doc_id", "text", 16),
         "doc_id", 16, 0.25)
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
     },
@@ -780,25 +679,8 @@ object DedupQueries {
     /** §2b MinHash-LSH banding: candidate pairs sharing any band hash
       * (16 hashes, 4 bands × 4 rows — tuned for ~0.5 similarity). */
     Q("q_lsh_candidates",
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 40),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band)
-         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM banded a JOIN banded b USING (band, band_hash)
-         WHERE a.doc_id < b.doc_id""") { (s, d) =>
-      Dedup.minHashLshCandidates(
-        Dedup.minHashSignatures(Tables.documents(s, d).filter(col("doc_id") < 40),
-          "doc_id", "text", 16),
-        "doc_id", bands = 4, rowsPerBand = 4)
+      s"WITH ${tokSql(40)}, $bandedSql $bandPairsSql") { (s, d) =>
+      lshCandidates(docsBelow(s, d, 40))
     },
 
     /** §2b batch twin of the streaming near-dup ingest
@@ -810,20 +692,7 @@ object DedupQueries {
       * re-rank and the admission logic in SQL; StreamingSpec pins the
       * foreachBatch sink's surviving set equal to this twin's. */
     Q("q_neardup_admit",
-      s"""WITH tok AS (SELECT DISTINCT doc_id, UNNEST($duckTokens) AS token
-                       FROM documents WHERE doc_id < 120),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b USING (band, band_hash)
-                       WHERE a.doc_id < b.doc_id),
+      s"""WITH ${tokSql(120)}, $lshCandSql,
               sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY 1),
               inter AS (SELECT ta.doc_id AS id_a, tb.doc_id AS id_b,
                                count(*) AS ni
@@ -886,56 +755,24 @@ object DedupQueries {
     /** §2b end-to-end near-dup survivorship: Jaccard pairs → connected
       * components → one surviving doc per cluster with its member count. */
     Q("q_neardup_survivors",
-      """WITH RECURSIVE
-           tok AS (SELECT DISTINCT doc_id,
-                     UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                   FROM documents WHERE doc_id < 60),
-           sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-           inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                     FROM tok a JOIN tok b
-                       ON a.token = b.token AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2),
-           pairs AS (SELECT i.id_a, i.id_b
-                     FROM inter i
-                     JOIN sizes sa ON i.id_a = sa.doc_id
-                     JOIN sizes sb ON i.id_b = sb.doc_id
-                     WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.3),
-           edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                     UNION
-                     SELECT id_b AS src, id_a AS dst FROM pairs),
-           nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-           walk(id, lbl) AS (
-             SELECT id, id FROM nodes
-             UNION
-             SELECT e.dst, w.lbl FROM walk w JOIN edges e ON w.id = e.src),
-           cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
+      s"""$tokenClustersSql
          SELECT cluster AS doc_id, count(*) AS n_members FROM cl GROUP BY cluster""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 60)
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.3)
-      Dedup.nearDupSurvivors(docs.select(col("doc_id")), pairs, "doc_id")
+      val docs = docsBelow(s, d, 60)
+      Dedup.nearDupSurvivors(docs.select(col("doc_id")), tokenPairs(docs),
+        "doc_id")
     },
 
     /** §2b asymmetric containment pairs — subset-duplication detection. */
     Q("q_containment",
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 60),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2)
+      s"""WITH ${tokenInterSql(60)}
          SELECT i.id_a, i.id_b,
                 round(i.n_common / CAST(sa.n AS DOUBLE), 6) AS containment_a,
                 round(i.n_common / CAST(sb.n AS DOUBLE), 6) AS containment_b
-         FROM inter i
-         JOIN sizes sa ON i.id_a = sa.doc_id
-         JOIN sizes sb ON i.id_b = sb.doc_id
+         $interSizesSql
          WHERE greatest(i.n_common / CAST(sa.n AS DOUBLE),
                         i.n_common / CAST(sb.n AS DOUBLE)) >= 0.5""") { (s, d) =>
       Dedup.containmentPairs(
-        Dedup.tokenSets(Tables.documents(s, d).filter(col("doc_id") < 60),
-          "doc_id", "text"), "doc_id", 0.5)
+        Dedup.tokenSets(docsBelow(s, d, 60), "doc_id", "text"), "doc_id", 0.5)
         .withColumn("containment_a", round(col("containment_a"), 6))
         .withColumn("containment_b", round(col("containment_b"), 6))
     },
@@ -1135,32 +972,8 @@ object DedupQueries {
       * same docs — precision/recall in one row; both are strictly inside
       * (0,1) on this fixture, so the check is non-vacuous. */
     Q("q_lsh_dedup_eval",
-      """WITH tok AS (SELECT DISTINCT doc_id,
-                        UNNEST(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS token
-                      FROM documents WHERE doc_id < 40),
-              sig AS (SELECT doc_id, seed,
-                        min(CAST(('0x' || substring(md5(seed || ':' || token), 1, 15))
-                            AS BIGINT)) AS min_hash
-                      FROM tok, (SELECT UNNEST(generate_series(0, 15)) AS seed)
-                      GROUP BY doc_id, seed),
-              banded AS (SELECT doc_id, seed // 4 AS band,
-                           md5(string_agg(CAST(min_hash AS VARCHAR), ',' ORDER BY seed))
-                             AS band_hash
-                         FROM sig GROUP BY doc_id, band),
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                       FROM banded a JOIN banded b USING (band, band_hash)
-                       WHERE a.doc_id < b.doc_id),
-              sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM tok a JOIN tok b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              truth AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.7),
+      s"""WITH ${tokSql(40)}, $lshCandSql, ${sizesInterSql("tok")},
+              truth AS (SELECT i.id_a, i.id_b ${jaccardAtLeastSql(0.7)}),
               hits AS (SELECT c.* FROM cand c
                        JOIN truth t ON c.id_a = t.id_a AND c.id_b = t.id_b)
          SELECT (SELECT COUNT(*) FROM cand) AS n_candidates,
@@ -1174,13 +987,11 @@ object DedupQueries {
                   THEN (SELECT COUNT(*) FROM hits)
                        / CAST((SELECT COUNT(*) FROM truth) AS DOUBLE) END, 6)
                   AS recall""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 40)
+      val docs = docsBelow(s, d, 40)
       // multi-consumer rule: each frame feeds its own count AND the hits
       // semi-join — cache or the signature/shingle pipelines (and their
       // codegen) run twice apiece; both frames are ≤ |pairs(40 docs)| rows
-      val cands = Dedup.minHashLshCandidates(
-        Dedup.minHashSignatures(docs, "doc_id", "text", 16),
-        "doc_id", bands = 4, rowsPerBand = 4).cache()
+      val cands = lshCandidates(docs).cache()
       val truth = Dedup.jaccardPairs(docs, "doc_id", "text", 0.7)
         .select(col("id_a"), col("id_b")).cache()
       val hits = cands.join(truth, Seq("id_a", "id_b"), "left_semi")
@@ -1216,31 +1027,9 @@ object DedupQueries {
                     FROM c JOIN d da ON da.doc_id = c.id_a
                            JOIN d db ON db.doc_id = c.id_b)
          SELECT id_a, id_b,
-                round(0.5 * (CASE
-                    WHEN len(list_distinct(list_concat(tka, tkb))) = 0
-                    THEN 1.0
-                    ELSE CAST(len(list_filter(list_distinct(tka),
-                           t -> list_contains(tkb, t))) AS DOUBLE)
-                         / len(list_distinct(list_concat(tka, tkb))) END)
-                  + 0.3 * (CASE WHEN greatest(length(ta), length(tb)) = 0
-                    THEN 1.0
-                    ELSE 1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
-                               / greatest(length(ta), length(tb)) END)
-                  + 0.2 * (CASE WHEN sa IS NOT DISTINCT FROM sb
-                    THEN 1.0 ELSE 0.0 END), 6) AS match_score
+                $erScoreSql AS match_score
          FROM h
-         WHERE round(0.5 * (CASE
-                    WHEN len(list_distinct(list_concat(tka, tkb))) = 0
-                    THEN 1.0
-                    ELSE CAST(len(list_filter(list_distinct(tka),
-                           t -> list_contains(tkb, t))) AS DOUBLE)
-                         / len(list_distinct(list_concat(tka, tkb))) END)
-                  + 0.3 * (CASE WHEN greatest(length(ta), length(tb)) = 0
-                    THEN 1.0
-                    ELSE 1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
-                               / greatest(length(ta), length(tb)) END)
-                  + 0.2 * (CASE WHEN sa IS NOT DISTINCT FROM sb
-                    THEN 1.0 ELSE 0.0 END), 6) >= 0.45""") { (s, d) =>
+         WHERE $erScoreSql >= 0.45""") { (s, d) =>
       val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
       val cands = Dedup.sortedNeighborhoodPairs(docs, "doc_id", "text", "lang", 3)
       Dedup.matchScore(cands, docs, "doc_id",
@@ -1254,34 +1043,8 @@ object DedupQueries {
       * adamicAdar sibling where sharing MOST of a small neighborhood
       * outranks sharing a sliver of two hubs. */
     Q("q_jaccard_link",
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t
-                      FROM documents WHERE doc_id < 120),
-              sh AS (SELECT DISTINCT doc_id,
-                            array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a, i.id_b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              canon AS (SELECT id_a AS a, id_b AS b FROM pairs),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM canon
-                            UNION ALL SELECT b AS id FROM canon)
-                      GROUP BY 1),
-              adj AS (SELECT a AS w, b AS u FROM canon
-                      UNION ALL SELECT b AS w, a AS u FROM canon),
-              cand AS (SELECT n1.u AS u, n2.u AS v, count(*) AS n_common
-                       FROM adj n1
-                       JOIN deg d ON n1.w = d.id AND d.dg <= 1000
-                       JOIN adj n2 ON n1.w = n2.w AND n1.u < n2.u
-                       GROUP BY 1, 2),
+      s"""$shingleCanonSql
+              ${wedgeSql("")},
               scored AS (SELECT cand.u, cand.v, cand.n_common,
                            round(CAST(cand.n_common AS DOUBLE)
                              / CAST(du.dg + dv.dg - cand.n_common AS DOUBLE),
@@ -1295,12 +1058,8 @@ object DedupQueries {
                            WHERE c.a = scored.u AND c.b = scored.v)
          ORDER BY jaccard_score DESC, src ASC, dst ASC
          LIMIT 20""") { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 120)
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(docs, "doc_id", "text"), "doc_id", 0.02).cache()
       Graph.jaccardLinkPrediction(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-        topN = 20)
+        asEdges(shinglePairs(docsBelow(s, d, 120)).cache()), topN = 20)
     },
 
     /** §2b rich-club coefficient over the doc-similarity graph
@@ -1309,27 +1068,8 @@ object DedupQueries {
       * regions — φ(k) at k ∈ {1, 2, 4} beside q_assortativity's single
       * correlation. Same cached pair graph as q_assortativity. */
     Q("q_rich_club",
-      // The q_assortativity pair graph with exact integer club counts.
-      """WITH tok AS (SELECT doc_id,
-                        CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END AS t
-                      FROM documents WHERE doc_id < 300),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS token
-                     FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-              sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                               count(*) AS n_common
-                        FROM sh a JOIN sh b
-                          ON a.token = b.token AND a.doc_id < b.doc_id
-                        GROUP BY 1, 2),
-              pairs AS (SELECT i.id_a AS a, i.id_b AS b
-                        FROM inter i
-                        JOIN sizes sa ON i.id_a = sa.doc_id
-                        JOIN sizes sb ON i.id_b = sb.doc_id
-                        WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.02),
-              deg AS (SELECT id, CAST(count(*) AS BIGINT) AS dg
-                      FROM (SELECT a AS id FROM pairs
-                            UNION ALL SELECT b AS id FROM pairs)
-                      GROUP BY 1),
+      // [[shingleDegSql]] (q_assortativity's graph), exact club counts.
+      s"""$shingleDegSql
               rc AS (SELECT CAST(k AS BIGINT) AS k
                      FROM (VALUES (1), (2), (4)) v(k)),
               nk AS (SELECT rc.k,
@@ -1350,12 +1090,7 @@ object DedupQueries {
                     / (CAST(nk.n_nodes AS DOUBLE)
                        * (CAST(nk.n_nodes AS DOUBLE) - 1.0)) END, 6) AS phi
          FROM nk LEFT JOIN ek ON nk.k = ek.k""") { (s, d) =>
-      val pairs = Dedup.jaccardPairsFrom(
-        Dedup.shingleSets(Tables.documents(s, d).filter(col("doc_id") < 300),
-          "doc_id", "text"),
-        "doc_id", 0.02).cache()
-      Graph.richClub(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
+      Graph.richClub(asEdges(shinglePairs(docsBelow(s, d, 300)).cache()),
         Seq(1, 2, 4))
     },
   )

@@ -10,11 +10,10 @@ import org.apache.spark.sql.functions._
   * transforms. */
 object EventQueries {
 
-  val all: Seq[Q] = Seq(
-    /** §2b custom-state sessionization (flatMapGroupsWithState), batch twin:
-      * bounded input ⇒ end-of-data closes every session (emitOpen=true). */
-    Q("q_stateful_sessions",
-      """WITH flagged AS (
+  /** `flagged`: every event with `new_sess` = 1 where the gap to the
+    * user's previous event exceeds 30 minutes — the sessionization CTE. */
+  private val sessionFlagsSql: String =
+    """WITH flagged AS (
            SELECT user_id, event_id, ts, value,
                   CASE WHEN prev_us IS NULL
                          OR (epoch_us(ts) - prev_us) > 1800000000
@@ -22,13 +21,61 @@ object EventQueries {
            FROM (SELECT user_id, event_id, ts, value,
                         LAG(epoch_us(ts), 1) OVER
                           (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-                 FROM events)),
+                 FROM events)),"""
+
+  /** Each `flagged` event's session number: the running `new_sess` sum. */
+  private val sessionIdSql: String =
+    """CAST(SUM(new_sess) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND CURRENT ROW) AS BIGINT)"""
+
+  /** `cte(user_id, as)`: each user's first (`order` ascending) or last
+    * (descending) event type by the (ts, event_id) order. */
+  private def edgeEventSql(cte: String, as: String, order: String): String =
+    s"""$cte AS (SELECT user_id, event_type AS $as FROM (
+                SELECT user_id, event_type,
+                       ROW_NUMBER() OVER (PARTITION BY user_id
+                         ORDER BY $order) AS rn
+                FROM events) WHERE rn = 1)"""
+
+  /** `lastev` … `w`: per-user first→last event-day lifetimes (an event
+    * when the final action is a purchase, else right-censored), grouped
+    * per duration with the users at risk — the oracle twin of
+    * [[EventAnalytics]]' lifetime at-risk grid. */
+  private val lifetimeAtRiskSql: String =
+    s"""WITH ${edgeEventSql("lastev", "last_type", "ts DESC, event_id DESC")},
+              u AS (SELECT e.user_id,
+                           CAST(date_diff('day', date_trunc('day', min(e.ts)),
+                                date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
+                           max(l.last_type) = 'purchase' AS ev
+                    FROM events e JOIN lastev l USING (user_id)
+                    GROUP BY e.user_id),
+              g AS (SELECT dur,
+                           CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
+                             AS n_events,
+                           CAST(sum(CASE WHEN ev THEN 0 ELSE 1 END) AS BIGINT)
+                             AS n_censored
+                    FROM u GROUP BY 1),
+              w AS (SELECT dur, n_events, n_censored,
+                           sum(n_events + n_censored) OVER ()
+                             - COALESCE(sum(n_events + n_censored) OVER
+                                 (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND 1 PRECEDING), 0) AS n_risk
+                    FROM g),"""
+
+  /** The running window in duration order. */
+  private val durPrefixSql: String =
+    "(ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+
+  val all: Seq[Q] = Seq(
+    /** §2b custom-state sessionization (flatMapGroupsWithState), batch twin:
+      * bounded input ⇒ end-of-data closes every session (emitOpen=true). */
+    Q("q_stateful_sessions",
+      s"""$sessionFlagsSql
               sess AS (
            SELECT user_id, epoch_us(ts) AS us, value,
-                  CAST(SUM(new_sess) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND CURRENT ROW) AS BIGINT) AS sid
+                  $sessionIdSql AS sid
            FROM flagged)
          SELECT user_id, min(us) AS session_start_us, max(us) AS session_end_us,
                 count(*) AS n_events, round(sum(value), 2) AS session_value
@@ -53,21 +100,10 @@ object EventQueries {
 
     /** §2b sessionization: gap>30min splits, via lag + running sum. */
     Q("q_sessionize",
-      """WITH flagged AS (
-           SELECT user_id, event_id, ts, value,
-                  CASE WHEN prev_us IS NULL
-                         OR (epoch_us(ts) - prev_us) > 1800000000
-                       THEN 1 ELSE 0 END AS new_sess
-           FROM (SELECT user_id, event_id, ts, value,
-                        LAG(epoch_us(ts), 1) OVER
-                          (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-                 FROM events)),
+      s"""$sessionFlagsSql
               sess AS (
            SELECT user_id, value,
-                  CAST(SUM(new_sess) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND CURRENT ROW) AS BIGINT)
+                  $sessionIdSql
                     AS session_id
            FROM flagged)
          SELECT user_id, session_id, count(*) AS n_events,
@@ -159,39 +195,15 @@ object EventQueries {
       * first→last event-day lifetimes, a lifetime counting as an event when
       * the user's final action is a purchase (else right-censored). */
     Q("q_survival",
-      """WITH lastev AS (SELECT user_id, event_type AS last_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1),
-              u AS (SELECT e.user_id,
-                           CAST(date_diff('day', date_trunc('day', min(e.ts)),
-                                date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
-                           max(l.last_type) = 'purchase' AS ev
-                    FROM events e JOIN lastev l USING (user_id)
-                    GROUP BY e.user_id),
-              g AS (SELECT dur,
-                           CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
-                             AS n_events,
-                           CAST(sum(CASE WHEN ev THEN 0 ELSE 1 END) AS BIGINT)
-                             AS n_censored
-                    FROM u GROUP BY 1),
-              w AS (SELECT dur, n_events, n_censored,
-                           sum(n_events + n_censored) OVER ()
-                             - COALESCE(sum(n_events + n_censored) OVER
-                                 (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING), 0) AS n_risk
-                    FROM g),
+      s"""$lifetimeAtRiskSql
               s AS (SELECT dur, n_events, n_censored, n_risk,
                            sum(CASE WHEN n_events > 0 AND n_events = n_risk
                                 THEN 1 ELSE 0 END) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS zeros,
+                             $durPrefixSql AS zeros,
                            sum(CASE WHEN n_events > 0 AND n_events < n_risk
                                 THEN ln(1.0 - CAST(n_events AS DOUBLE) / n_risk)
                                 ELSE 0.0 END) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS lnsum
+                             $durPrefixSql AS lnsum
                     FROM w)
          SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
                 n_events, n_censored,
@@ -598,16 +610,8 @@ object EventQueries {
       * KM companion that says whether the curve gap is real, risk-set
       * weighted per event time. */
     Q("q_log_rank",
-      """WITH fe AS (SELECT user_id, event_type AS first_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts, event_id) AS rn
-                FROM events) WHERE rn = 1),
-              le AS (SELECT user_id, event_type AS last_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1),
+      s"""WITH ${edgeEventSql("fe", "first_type", "ts, event_id")},
+              ${edgeEventSql("le", "last_type", "ts DESC, event_id DESC")},
               u AS (SELECT e.user_id,
                       CAST(date_diff('day', date_trunc('day', min(e.ts)),
                         date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
@@ -672,39 +676,15 @@ object EventQueries {
       * q_survival's Kaplan–Meier curve, identical lifetime/censoring
       * semantics. */
     Q("q_nelson_aalen",
-      // q_survival's lifetime grid verbatim; the hazard-side folds are
+      // [[lifetimeAtRiskSql]] as for q_survival; the hazard-side folds are
       // ordered-prefix cumsums (the ks/ewma contract).
-      """WITH lastev AS (SELECT user_id, event_type AS last_type FROM (
-                SELECT user_id, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1),
-              u AS (SELECT e.user_id,
-                           CAST(date_diff('day', date_trunc('day', min(e.ts)),
-                                date_trunc('day', max(e.ts))) AS BIGINT) AS dur,
-                           max(l.last_type) = 'purchase' AS ev
-                    FROM events e JOIN lastev l USING (user_id)
-                    GROUP BY e.user_id),
-              g AS (SELECT dur,
-                           CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
-                             AS n_events,
-                           CAST(sum(CASE WHEN ev THEN 0 ELSE 1 END) AS BIGINT)
-                             AS n_censored
-                    FROM u GROUP BY 1),
-              w AS (SELECT dur, n_events, n_censored,
-                           sum(n_events + n_censored) OVER ()
-                             - COALESCE(sum(n_events + n_censored) OVER
-                                 (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING), 0) AS n_risk
-                    FROM g),
+      s"""$lifetimeAtRiskSql
               s AS (SELECT dur, n_events, n_censored, n_risk,
                            sum(CAST(n_events AS DOUBLE) / n_risk) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS h,
+                             $durPrefixSql AS h,
                            sum(CAST(n_events AS DOUBLE)
                                / (CAST(n_risk AS DOUBLE) * n_risk)) OVER
-                             (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS v
+                             $durPrefixSql AS v
                     FROM w)
          SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
                 n_events, n_censored,

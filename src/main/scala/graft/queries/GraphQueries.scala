@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 /** Graph queries: PageRank, HITS, personalized PageRank, label
   * propagation, k-core, k-truss, triangles and near-dup-graph metrics. */
 object GraphQueries {
+  import Shared._
 
   /** DIRECTED part→supplier purchase edges from lineitem, LONG-id encoded
     * for the float-rank families (r13 sf10 probe: every pageRank/HITS round
@@ -79,59 +80,24 @@ object GraphQueries {
       s"      <> (SELECT count(*) FROM n${rounds - 1})"
   }
 
+  /** `ep`: the distinct part → supplier edges of lineitem. */
+  private val partSupplierEpSql: String =
+    """ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
+                         's' || CAST(l_suppkey AS VARCHAR) AS dst
+                  FROM lineitem)"""
+
   /** Generated oracle for q_pagerank: the engine's 3 fixed iterations
-    * unrolled as CTEs. The teleport term is spelled as the SAME
-    * subtraction the engine computes ((1 - 0.85) is not the double 0.15),
-    * and every division is forced to DOUBLE so DuckDB's decimal literals
-    * can't change the arithmetic. */
-  private def pageRankOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (SELECT e.dst AS id, SUM($prev.rank / od.outdeg) AS c
-                  FROM e JOIN $prev ON e.src = $prev.id
-                         JOIN od ON e.src = od.src
-                  GROUP BY e.dst),
-          r$i AS (SELECT nodes.id,
-                         (CAST(1 AS DOUBLE) - 0.85) / (SELECT n FROM nn)
-                           + 0.85 * COALESCE(c$i.c, CAST(0 AS DOUBLE)) AS rank
-                  FROM nodes LEFT JOIN c$i USING (id))"""
-    }.mkString(",\n")
-    s"""WITH ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-                    FROM lineitem),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
-            nodes AS (SELECT DISTINCT src AS id FROM e),
-            nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-            od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-                   FROM e GROUP BY src),
-            r0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS rank
-                   FROM nodes),
-            $iters
+    * unrolled as CTEs ([[Shared.uniformPageRankSql]]). */
+  private def pageRankOracleSql: String =
+    s"""WITH $partSupplierEpSql, $uniformPageRankSql
         SELECT id, round(rank, 9) AS rank FROM r3"""
-  }
 
   /** Generated oracle for q_ppr: personalized PageRank's 3 iterations
     * unrolled; the teleport column is built with the same left join +
     * coalesce/|S| division the engine computes, and (1 − 0.85) is spelled
     * as the same subtraction. */
-  private def pprOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (SELECT e.dst AS id, SUM($prev.rank / od.outdeg) AS c
-                  FROM e JOIN $prev ON e.src = $prev.id
-                         JOIN od ON e.src = od.src
-                  GROUP BY e.dst),
-          r$i AS (SELECT tele.id,
-                         (CAST(1 AS DOUBLE) - 0.85) * tele.t
-                           + 0.85 * COALESCE(c$i.c, CAST(0 AS DOUBLE)) AS rank
-                  FROM tele LEFT JOIN c$i USING (id))"""
-    }.mkString(",\n")
-    s"""WITH ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-                    FROM lineitem),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
+  private def pprOracleSql: String =
+    s"""WITH $partSupplierEpSql, $undirectedEdgesSql,
             nodes AS (SELECT DISTINCT src AS id FROM e),
             seeds AS (SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS id
                       FROM lineitem WHERE l_suppkey < 5),
@@ -143,9 +109,8 @@ object GraphQueries {
             od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
                    FROM e GROUP BY src),
             r0 AS (SELECT id, t AS rank FROM tele),
-            $iters
+            ${pageRankItersSql("tele", "(CAST(1 AS DOUBLE) - 0.85) * tele.t")}
         SELECT id, round(rank, 9) AS rank FROM r3"""
-  }
 
   /** Generated oracle for q_label_prop: 3 synchronous label-propagation
     * rounds unrolled as CTEs; the argmax-with-min-label-tiebreak is the
@@ -160,11 +125,7 @@ object GraphQueries {
                   QUALIFY row_number() OVER (PARTITION BY id
                     ORDER BY c DESC, label ASC) = 1)"""
     }.mkString(",\n")
-    s"""WITH ep AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-                    FROM lineitem),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
+    s"""WITH $partSupplierEpSql, $undirectedEdgesSql,
             l0 AS (SELECT DISTINCT src AS id, src AS label FROM e),
             $iters
         SELECT id, label FROM l3"""

@@ -2,11 +2,12 @@ package graft
 package queries
 
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Hypothesis tests and multiple-testing corrections. */
 object HypothesisTestQueries {
+  import Shared._
 
   /** The drift battery the multiple-testing queries adjust: doc lengths of
     * sources src0..src4 shifted by +150, one-vs-rest KS per source
@@ -24,40 +25,26 @@ object HypothesisTestQueries {
     ks.withColumn("p_value", p)
   }
 
+  /** Per-`cum`-group sizes and the 6dp one-vs-rest KS distance. */
+  private val groupKsSelectSql: String =
+    """SELECT g AS source,
+              CAST(max(ng) AS BIGINT) AS n_group,
+              CAST(max(nt - ng) AS BIGINT) AS n_rest,
+              round(max(CASE WHEN nt > ng THEN
+                abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
+                    - CAST(cumt - cumg AS DOUBLE)
+                      / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
+       FROM cum GROUP BY 1"""
+
   /** DuckDB twin of [[shiftedKsPvalues]]: the `b` … `pv` CTEs, followed in
     * each oracle by its adjustment's own CTEs. */
   private val shiftedKsPvaluesSql: String =
-    """WITH b AS (SELECT source AS g,
+    groupEcdfGridSql("""SELECT source AS g,
                            n_chars + CASE WHEN source IN
                              ('src0','src1','src2','src3','src4')
                              THEN 150 ELSE 0 END AS v
-                    FROM documents WHERE n_chars IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid),
-              ks AS (SELECT g AS source,
-                            CAST(max(ng) AS BIGINT) AS n_group,
-                            CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                            round(max(CASE WHEN nt > ng THEN
-                              abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                                  - CAST(cumt - cumg AS DOUBLE)
-                                    / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
-                     FROM cum GROUP BY 1),
+                    FROM documents WHERE n_chars IS NOT NULL""") + s""",
+              ks AS ($groupKsSelectSql),
               pv AS (SELECT source, n_group, n_rest, ks,
                             least(1.0, round(2.0 * exp(-2.0 * ks * ks
                               * (CAST(n_group AS DOUBLE) * CAST(n_rest AS DOUBLE)
@@ -65,13 +52,12 @@ object HypothesisTestQueries {
                               AS p_value
                      FROM ks),"""
 
-  val all: Seq[Q] = Seq(
-    /** §2b per-source one-vs-rest KS drift of the doc-length distribution
-      * ([[Stats.groupKsDrift]]) — which source's shape diverges from the
-      * corpus, the KS small-multiples companion to q_psi/q_jsd_drift. */
-    Q("q_ks_per_source",
-      """WITH b AS (SELECT source AS g, n_chars AS v FROM documents
-                    WHERE n_chars IS NOT NULL),
+  /** `b` (the `SELECT` producing group `g` and value `v`) through `cum`:
+    * per group and distinct value, the group's and the total's running
+    * counts (`cumg`, `cumt`) and sizes (`ng`, `nt`) — the one-vs-rest ECDF
+    * grid of [[Stats.groupKsDrift]] and [[Stats.groupKuiperDrift]]. */
+  private def groupEcdfGridSql(b: String): String =
+    s"""WITH b AS ($b),
               gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
                      FROM b GROUP BY 1, 2),
               tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
@@ -89,15 +75,152 @@ object HypothesisTestQueries {
                                         AND CURRENT ROW) AS cumt,
                              sum(c) OVER (PARTITION BY g) AS ng,
                              sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid)
-         SELECT g AS source,
-                CAST(max(ng) AS BIGINT) AS n_group,
-                CAST(max(nt - ng) AS BIGINT) AS n_rest,
-                round(max(CASE WHEN nt > ng THEN
-                  abs(CAST(cumg AS DOUBLE) / CAST(ng AS DOUBLE)
-                      - CAST(cumt - cumg AS DOUBLE)
-                        / CAST(nt - ng AS DOUBLE)) END), 6) AS ks
-         FROM cum GROUP BY 1""") { (s, d) =>
+                      FROM grid)"""
+
+  /** Weekday index of `ts` from the 2024-01-01 anchor, cast to `sqlType`. */
+  private def weekdaySql(sqlType: String): String =
+    s"""CAST(datediff('day', DATE '2024-01-01',
+         CAST(ts AS DATE)) % 7 AS $sqlType)"""
+
+  /** Engine twin of [[weekdaySql]]. */
+  private def weekday: Column =
+    datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7
+
+  /** Event type × weekday index (as a string), null types dropped: the
+    * contingency input of q_chi_square and q_g_test. */
+  private def typeByWeekday(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).filter(col("event_type").isNotNull)
+      .select(col("event_type"), weekday.cast("string").as("dow"))
+
+  /** The event type × weekday contingency (`cont`, margins `ma`/`mb`,
+    * totals `tot`), `obs` holding the aggregates `obsAggs` over the
+    * observed `od` and expected `e` cell counts, the statistic `stat`
+    * computed by `statExpr` from those, and its closed-form even-df
+    * Poisson-sum p-value unrolled to df 40: the shared oracle of
+    * [[Stats.chiSquareTest]] and [[Stats.gTest]], reporting the
+    * statistic as `statName`. */
+  private def weekdayIndependenceSql(obsAggs: String, stat: String,
+                                     statExpr: String,
+                                     statName: String): String =
+    s"""WITH ev AS (SELECT event_type AS a, ${weekdaySql("VARCHAR")} AS b
+                     FROM events WHERE event_type IS NOT NULL),
+              cont AS (SELECT a, b, CAST(count(*) AS BIGINT) AS o
+                       FROM ev GROUP BY 1, 2),
+              tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
+                        CAST(count(DISTINCT a) AS BIGINT) AS r_levels,
+                        CAST(count(DISTINCT b) AS BIGINT) AS c_levels
+                      FROM cont),
+              ma AS (SELECT a, CAST(sum(o) AS BIGINT) AS ca
+                     FROM cont GROUP BY 1),
+              mb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb
+                     FROM cont GROUP BY 1),
+              obs AS (SELECT $obsAggs
+                      FROM (SELECT CAST(o AS DOUBLE) AS od,
+                              CAST(ca AS DOUBLE) * cb / n AS e
+                            FROM cont JOIN ma USING (a)
+                              JOIN mb USING (b), tot)),
+              stat AS (SELECT n, r_levels, c_levels,
+                         (r_levels - 1) * (c_levels - 1) AS dof,
+                         $statExpr AS $stat
+                       FROM tot, obs),
+              un AS (SELECT n, r_levels, c_levels, dof, $stat,
+                       $stat * 0.5 AS h, dof / 2 AS m,
+                       1.0 AS t0,
+                       ${(1 to 19).map(k => s"t${k - 1} * h / $k.0 AS t$k").mkString(", ")}
+                     FROM stat)
+         SELECT n, r_levels, c_levels, dof, round($stat, 6) AS $statName,
+                round(CASE WHEN dof % 2 = 0 AND dof >= 2 AND dof <= 40
+                    AND $stat IS NOT NULL
+                  THEN least(1.0, exp(-h) * (t0 + ${(1 to 19).map(k => s"CASE WHEN $k.0 < m THEN t$k ELSE 0.0 END").mkString(" + ")})) END, 6) AS p_value
+         FROM un"""
+
+  /** `s` … `fin` and the closing `SELECT` of the exact-integer one-way
+    * ANOVA over `base(g, v)` (v quantized to 1e-6 as BIGINT): HUGEINT sums,
+    * and one ordered k-row `list_reduce` fold, the same order as the
+    * engine's sorted fold in [[Stats.anovaF]]. */
+  private val exactAnovaTailSql: String =
+    """s AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cn,
+                    CAST(SUM(v) AS HUGEINT) AS sx,
+                    SUM(CAST(v AS HUGEINT) * v) AS sxx
+             FROM base GROUP BY 1),
+       t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
+                    CAST(SUM(cn) AS BIGINT) AS n,
+                    CAST(SUM(sx) AS DOUBLE) AS dsx,
+                    CAST(SUM(sxx) AS DOUBLE) AS dsxx,
+                    list_reduce(list_apply(
+                      list(struct_pack(g := g,
+                        t := CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
+                             / CAST(cn AS DOUBLE)) ORDER BY g),
+                      x -> x.t), (a, b) -> a + b) AS tt
+             FROM s),
+       fin AS (SELECT k, n, dsxx - tt AS ssw,
+                      tt - dsx * dsx / CAST(n AS DOUBLE) AS ssb
+               FROM t)
+  SELECT k, n,
+         round(CASE WHEN k > 0 THEN ssb / 1e12 END, 6) AS ss_between,
+         round(CASE WHEN k > 0 THEN ssw / 1e12 END, 6) AS ss_within,
+         round(CASE WHEN k > 1 AND n > k AND ssw > 0
+           THEN (ssb / CAST(k - 1 AS DOUBLE))
+                / (ssw / CAST(n - k AS DOUBLE)) END, 6) AS f_stat,
+         round(CASE WHEN k > 0 AND ssb + ssw > 0
+           THEN ssb / (ssb + ssw) END, 6) AS eta_sq
+  FROM fin"""
+
+  /** `per`: each event type's count `n` and exact cent-quantized value
+    * sums `sq`, `sqq` (HUGEINT), grouped with the clause `group` — the
+    * moments CTE of the [[Stats.cochranC]], [[Stats.tukeyHsd]] and
+    * [[Stats.welchAnova]] oracles. */
+  private def centMomentsSql(group: String): String =
+    s"""WITH per AS (SELECT event_type AS g,
+                        CAST(count(*) AS BIGINT) AS n,
+                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
+                          AS HUGEINT)) AS sq,
+                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
+                              AS HUGEINT)
+                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
+                              AS HUGEINT)) AS sqq
+                      FROM events WHERE value IS NOT NULL
+                      $group),"""
+
+  /** Per-day mean value of the event cells `cells(b, t, v)` with the
+    * treatment expression `t`, through `comp`: the blocks (days) holding
+    * every treatment, with the extra columns `compCols` — the
+    * complete-block prefix of the Friedman, Page and Quade oracles. */
+  private def completeBlocksSql(t: String, compCols: String): String =
+    s"""WITH cells AS (SELECT date_trunc('day', ts) AS b,
+                          $t AS t, avg(value) AS v
+                        FROM events WHERE value IS NOT NULL
+                        GROUP BY 1, 2),
+              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
+              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
+                     FROM cb),
+              comp AS (SELECT cb.b, cb.t, cb.v$compCols
+                       FROM cb
+                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
+                         ON cb.b = bc.b, kk
+                       WHERE bc.c = kk.k),"""
+
+  /** Within-block midrank `r` of `v` (ties get the mean rank). */
+  private val blockMidrankSql: String =
+    """CAST(rank() OVER (PARTITION BY b ORDER BY v) AS DOUBLE)
+         + (CAST(count(*) OVER (PARTITION BY b, v) AS DOUBLE) - 1.0) / 2.0
+         AS r"""
+
+  /** Engine twin of [[completeBlocksSql]]'s `cells`: the mean event value
+    * per day and treatment `t`. */
+  private def dailyMeans(s: SparkSession, d: String, t: Column): DataFrame =
+    Tables.events(s, d)
+      .filter(col("value").isNotNull)
+      .groupBy(date_trunc("day", col("ts")).as("day"), t)
+      .agg(avg(col("value")).as("mean_value"))
+
+  val all: Seq[Q] = Seq(
+    /** §2b per-source one-vs-rest KS drift of the doc-length distribution
+      * ([[Stats.groupKsDrift]]) — which source's shape diverges from the
+      * corpus, the KS small-multiples companion to q_psi/q_jsd_drift. */
+    Q("q_ks_per_source",
+      groupEcdfGridSql("""SELECT source AS g, n_chars AS v FROM documents
+                    WHERE n_chars IS NOT NULL""") + " " + groupKsSelectSql) { (s, d) =>
       Stats.groupKsDrift(Tables.documents(s, d), "source", "n_chars")
     },
 
@@ -186,24 +309,7 @@ object HypothesisTestQueries {
       * values — max ECDF gap from one hash aggregate + a distinct-value-
       * sized cumulative window. */
     Q("q_ks_statistic",
-      """WITH x AS (SELECT value AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
+      s"""${clickPurchaseEcdfSql("value", cumAbSql)}
          SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
                 round(max(abs(cuma / na - cumb / nb)), 6) AS ks
          FROM c""") { (s, d) =>
@@ -254,36 +360,11 @@ object HypothesisTestQueries {
       // sums are HUGEINT over 1e-6-quantized values (parallel-agg-proof),
       // the only float reduction is the ORDERED k-row list_reduce fold —
       // same bits, same order as the engine's sorted aggregate() fold.
-      """WITH base AS (SELECT event_type AS g,
+      s"""WITH base AS (SELECT event_type AS g,
                               CAST(round(value * 1000000.0) AS BIGINT) AS v
                        FROM events
                        WHERE event_type IS NOT NULL AND value IS NOT NULL),
-              s AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cn,
-                           CAST(SUM(v) AS HUGEINT) AS sx,
-                           SUM(CAST(v AS HUGEINT) * v) AS sxx
-                    FROM base GROUP BY 1),
-              t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                           CAST(SUM(cn) AS BIGINT) AS n,
-                           CAST(SUM(sx) AS DOUBLE) AS dsx,
-                           CAST(SUM(sxx) AS DOUBLE) AS dsxx,
-                           list_reduce(list_apply(
-                             list(struct_pack(g := g,
-                               t := CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                    / CAST(cn AS DOUBLE)) ORDER BY g),
-                             x -> x.t), (a, b) -> a + b) AS tt
-                    FROM s),
-              fin AS (SELECT k, n, dsxx - tt AS ssw,
-                             tt - dsx * dsx / CAST(n AS DOUBLE) AS ssb
-                      FROM t)
-         SELECT k, n,
-                round(CASE WHEN k > 0 THEN ssb / 1e12 END, 6) AS ss_between,
-                round(CASE WHEN k > 0 THEN ssw / 1e12 END, 6) AS ss_within,
-                round(CASE WHEN k > 1 AND n > k AND ssw > 0
-                  THEN (ssb / CAST(k - 1 AS DOUBLE))
-                       / (ssw / CAST(n - k AS DOUBLE)) END, 6) AS f_stat,
-                round(CASE WHEN k > 0 AND ssb + ssw > 0
-                  THEN ssb / (ssb + ssw) END, 6) AS eta_sq
-         FROM fin""") { (s, d) =>
+              $exactAnovaTailSql""") { (s, d) =>
       Stats.anovaF(Tables.events(s, d), "event_type", "value")
     },
 
@@ -383,10 +464,10 @@ object HypothesisTestQueries {
       * variance-equality gate before pooled tests, and the volatility
       * monitor the mean contrast can't see. */
     Q("q_brown_forsythe",
-      // Same exact-integer ANOVA tail as q_anova, over the 1e-6-quantized
+      // [[exactAnovaTailSql]] (as q_anova) over the 1e-6-quantized
       // absolute deviations from each group's median (quantile_cont ≡
       // Spark percentile bit-for-bit on these inputs, the pinned parity).
-      """WITH b0 AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v0
+      s"""WITH b0 AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v0
                      FROM events
                      WHERE event_type IS NOT NULL AND value IS NOT NULL),
               med AS (SELECT g, quantile_cont(v0, 0.5) AS md
@@ -395,32 +476,7 @@ object HypothesisTestQueries {
                               CAST(round(abs(v0 - md) * 1000000.0) AS BIGINT)
                                 AS v
                        FROM b0 JOIN med USING (g)),
-              s AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cn,
-                           CAST(SUM(v) AS HUGEINT) AS sx,
-                           SUM(CAST(v AS HUGEINT) * v) AS sxx
-                    FROM base GROUP BY 1),
-              t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                           CAST(SUM(cn) AS BIGINT) AS n,
-                           CAST(SUM(sx) AS DOUBLE) AS dsx,
-                           CAST(SUM(sxx) AS DOUBLE) AS dsxx,
-                           list_reduce(list_apply(
-                             list(struct_pack(g := g,
-                               t := CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                    / CAST(cn AS DOUBLE)) ORDER BY g),
-                             x -> x.t), (a, b) -> a + b) AS tt
-                    FROM s),
-              fin AS (SELECT k, n, dsxx - tt AS ssw,
-                             tt - dsx * dsx / CAST(n AS DOUBLE) AS ssb
-                      FROM t)
-         SELECT k, n,
-                round(CASE WHEN k > 0 THEN ssb / 1e12 END, 6) AS ss_between,
-                round(CASE WHEN k > 0 THEN ssw / 1e12 END, 6) AS ss_within,
-                round(CASE WHEN k > 1 AND n > k AND ssw > 0
-                  THEN (ssb / CAST(k - 1 AS DOUBLE))
-                       / (ssw / CAST(n - k AS DOUBLE)) END, 6) AS f_stat,
-                round(CASE WHEN k > 0 AND ssb + ssw > 0
-                  THEN ssb / (ssb + ssw) END, 6) AS eta_sq
-         FROM fin""") { (s, d) =>
+              $exactAnovaTailSql""") { (s, d) =>
       Stats.brownForsythe(Tables.events(s, d), "event_type", "value")
     },
 
@@ -428,24 +484,7 @@ object HypothesisTestQueries {
       * comparison — completes the shift trio (KS sup / W1 mass×distance /
       * CvM pooled L2) over one shared histogram shape. */
     Q("q_cvm",
-      """WITH x AS (SELECT value AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
+      s"""${clickPurchaseEcdfSql("value", cumAbSql)}
          SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
                 round(CAST(max(na) AS DOUBLE) * CAST(max(nb) AS DOUBLE)
                   / ((CAST(max(na) AS DOUBLE) + CAST(max(nb) AS DOUBLE))
@@ -549,24 +588,7 @@ object HypothesisTestQueries {
       * drift ladder (1/(Ĥ(1−Ĥ)) weighting diverges at both CDF ends),
       * completing KS/W1/energy on the shared histogram shape. */
     Q("q_anderson_darling",
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x),
+      s"""${clickPurchaseEcdfSql("CAST(value AS DOUBLE)", cumAbSql)},
               t AS (SELECT na, nb, CAST(na + nb AS DOUBLE) AS nn,
                       CAST(cuma + cumb AS DOUBLE)
                         / CAST(na + nb AS DOUBLE) AS h,
@@ -743,24 +765,8 @@ object HypothesisTestQueries {
       * levels BLOCKED by day — day-level shifts cancel inside each
       * block, isolating the treatment contrast KW would drown. */
     Q("q_friedman",
-      """WITH cells AS (SELECT date_trunc('day', ts) AS b,
-                          event_type AS t, avg(value) AS v
-                        FROM events WHERE value IS NOT NULL
-                        GROUP BY 1, 2),
-              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
-                     FROM cb),
-              comp AS (SELECT cb.b, cb.t, cb.v
-                       FROM cb
-                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
-                         ON cb.b = bc.b, kk
-                       WHERE bc.c = kk.k),
-              rk AS (SELECT b, t,
-                       CAST(rank() OVER (PARTITION BY b ORDER BY v)
-                         AS DOUBLE)
-                         + (CAST(count(*) OVER (PARTITION BY b, v)
-                           AS DOUBLE) - 1.0) / 2.0 AS r
-                     FROM comp),
+      s"""${completeBlocksSql("event_type", "")}
+              rk AS (SELECT b, t, $blockMidrankSql FROM comp),
               pt AS (SELECT t, CAST(count(*) AS BIGINT) AS n_blocks,
                        sum(r) AS rsum
                      FROM rk GROUP BY 1),
@@ -784,35 +790,16 @@ object HypothesisTestQueries {
                 rsum / CAST(n_blocks AS DOUBLE) AS mean_rank,
                 n_blocks_used, k_treatments, t1
          FROM pt, tt""") { (s, d) =>
-      val cells = Tables.events(s, d)
-        .filter(col("value").isNotNull)
-        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg(avg(col("value")).as("mean_value"))
-      Stats.friedmanTest(cells, "day", "event_type", "mean_value")
+      Stats.friedmanTest(dailyMeans(s, d, col("event_type")), "day",
+        "event_type", "mean_value")
     },
 
     /** §2b Page's L: does mean event value TREND upward across the four
       * six-hour buckets, blocked by day — the ordered/blocked cell of the
       * KW/JT/Friedman/Page 2×2. */
     Q("q_page_trend",
-      """WITH cells AS (SELECT date_trunc('day', ts) AS b,
-                          CAST(floor(hour(ts) / 6) AS BIGINT) AS t,
-                          avg(value) AS v
-                        FROM events WHERE value IS NOT NULL
-                        GROUP BY 1, 2),
-              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
-                     FROM cb),
-              comp AS (SELECT cb.b, cb.t, cb.v
-                       FROM cb
-                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
-                         ON cb.b = bc.b, kk
-                       WHERE bc.c = kk.k),
-              rk AS (SELECT b, t,
-                       CAST(rank() OVER (PARTITION BY b ORDER BY v)
-                         AS DOUBLE)
-                         + (CAST(count(*) OVER (PARTITION BY b, v)
-                           AS DOUBLE) - 1.0) / 2.0 AS r,
+      s"""${completeBlocksSql("CAST(floor(hour(ts) / 6) AS BIGINT)", "")}
+              rk AS (SELECT b, t, $blockMidrankSql,
                        dense_rank() OVER (ORDER BY t) AS w
                      FROM comp),
               ft AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS bb,
@@ -830,12 +817,9 @@ object HypothesisTestQueries {
          SELECT n_blocks_used, k_treatments, l AS l_stat, e AS l_expected,
                 CASE WHEN vr > 0 THEN round((l - e) / sqrt(vr), 6) END AS z
          FROM g""") { (s, d) =>
-      val cells = Tables.events(s, d)
-        .filter(col("value").isNotNull)
-        .groupBy(date_trunc("day", col("ts")).as("day"),
-          floor(hour(col("ts")) / 6).as("slot"))
-        .agg(avg(col("value")).as("mean_value"))
-      Stats.pageTrendTest(cells, "day", "slot", "mean_value")
+      Stats.pageTrendTest(
+        dailyMeans(s, d, floor(hour(col("ts")) / 6).as("slot")), "day",
+        "slot", "mean_value")
     },
 
     /** §2b Brunner–Munzel test for click vs purchase values — the
@@ -843,24 +827,7 @@ object HypothesisTestQueries {
       * own placement variance + Welch–Satterthwaite df), folded from the
       * same distinct-value histogram. */
     Q("q_brunner_munzel",
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x),
+      s"""${clickPurchaseEcdfSql("CAST(value AS DOUBLE)", cumAbSql)},
               p AS (SELECT *,
                       CAST(cuma + cumb - (ca + cb) AS DOUBLE)
                         + CAST(ca + cb + 1 AS DOUBLE) / 2.0
@@ -1168,125 +1135,19 @@ object HypothesisTestQueries {
       * closed-form Poisson-sum p-value applies, unrolled identically in
       * both engines. */
     Q("q_chi_square",
-      """WITH ev AS (SELECT event_type AS a,
-                       CAST(datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) % 7 AS VARCHAR) AS b
-                     FROM events WHERE event_type IS NOT NULL),
-              cont AS (SELECT a, b, CAST(count(*) AS BIGINT) AS o
-                       FROM ev GROUP BY 1, 2),
-              tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-                        CAST(count(DISTINCT a) AS BIGINT) AS r_levels,
-                        CAST(count(DISTINCT b) AS BIGINT) AS c_levels
-                      FROM cont),
-              ma AS (SELECT a, CAST(sum(o) AS BIGINT) AS ca
-                     FROM cont GROUP BY 1),
-              mb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb
-                     FROM cont GROUP BY 1),
-              obs AS (SELECT sum((od - e) * (od - e) / e) AS chi_obs,
-                        sum(e) AS e_obs
-                      FROM (SELECT CAST(o AS DOUBLE) AS od,
-                              CAST(ca AS DOUBLE) * cb / n AS e
-                            FROM cont JOIN ma USING (a)
-                              JOIN mb USING (b), tot)),
-              stat AS (SELECT n, r_levels, c_levels,
-                         (r_levels - 1) * (c_levels - 1) AS dof,
-                         chi_obs + (CAST(n AS DOUBLE) - e_obs) AS c2
-                       FROM tot, obs),
-              un AS (SELECT n, r_levels, c_levels, dof, c2,
-                       c2 * 0.5 AS h, dof / 2 AS m,
-                       1.0 AS t0,
-                       t0 * h / 1.0 AS t1,
-                       t1 * h / 2.0 AS t2,
-                       t2 * h / 3.0 AS t3,
-                       t3 * h / 4.0 AS t4,
-                       t4 * h / 5.0 AS t5,
-                       t5 * h / 6.0 AS t6,
-                       t6 * h / 7.0 AS t7,
-                       t7 * h / 8.0 AS t8,
-                       t8 * h / 9.0 AS t9,
-                       t9 * h / 10.0 AS t10,
-                       t10 * h / 11.0 AS t11,
-                       t11 * h / 12.0 AS t12,
-                       t12 * h / 13.0 AS t13,
-                       t13 * h / 14.0 AS t14,
-                       t14 * h / 15.0 AS t15,
-                       t15 * h / 16.0 AS t16,
-                       t16 * h / 17.0 AS t17,
-                       t17 * h / 18.0 AS t18,
-                       t18 * h / 19.0 AS t19
-                     FROM stat)
-         SELECT n, r_levels, c_levels, dof, round(c2, 6) AS chi2,
-                round(CASE WHEN dof % 2 = 0 AND dof >= 2 AND dof <= 40
-                    AND c2 IS NOT NULL
-                  THEN least(1.0, exp(-h) * (t0 + CASE WHEN 1.0 < m THEN t1 ELSE 0.0 END + CASE WHEN 2.0 < m THEN t2 ELSE 0.0 END + CASE WHEN 3.0 < m THEN t3 ELSE 0.0 END + CASE WHEN 4.0 < m THEN t4 ELSE 0.0 END + CASE WHEN 5.0 < m THEN t5 ELSE 0.0 END + CASE WHEN 6.0 < m THEN t6 ELSE 0.0 END + CASE WHEN 7.0 < m THEN t7 ELSE 0.0 END + CASE WHEN 8.0 < m THEN t8 ELSE 0.0 END + CASE WHEN 9.0 < m THEN t9 ELSE 0.0 END + CASE WHEN 10.0 < m THEN t10 ELSE 0.0 END + CASE WHEN 11.0 < m THEN t11 ELSE 0.0 END + CASE WHEN 12.0 < m THEN t12 ELSE 0.0 END + CASE WHEN 13.0 < m THEN t13 ELSE 0.0 END + CASE WHEN 14.0 < m THEN t14 ELSE 0.0 END + CASE WHEN 15.0 < m THEN t15 ELSE 0.0 END + CASE WHEN 16.0 < m THEN t16 ELSE 0.0 END + CASE WHEN 17.0 < m THEN t17 ELSE 0.0 END + CASE WHEN 18.0 < m THEN t18 ELSE 0.0 END + CASE WHEN 19.0 < m THEN t19 ELSE 0.0 END)) END, 6) AS p_value
-         FROM un""") { (s, d) =>
-      val ev = Tables.events(s, d).filter(col("event_type").isNotNull)
-        .select(col("event_type"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-            .cast("string").as("dow"))
-      Stats.chiSquareTest(ev, "event_type", "dow")
+      weekdayIndependenceSql(
+        "sum((od - e) * (od - e) / e) AS chi_obs, sum(e) AS e_obs", "c2",
+        "chi_obs + (CAST(n AS DOUBLE) - e_obs)", "chi2")) { (s, d) =>
+      Stats.chiSquareTest(typeByWeekday(s, d), "event_type", "dow")
     },
 
     /** §2b G-test (likelihood-ratio χ²) on the SAME event-type × weekday
       * grid as q_chi_square — the additive independence statistic
       * (sub-tables sum to the total), sharing the even-df closed-form p. */
     Q("q_g_test",
-      """WITH ev AS (SELECT event_type AS a,
-                       CAST(datediff('day', DATE '2024-01-01',
-                         CAST(ts AS DATE)) % 7 AS VARCHAR) AS b
-                     FROM events WHERE event_type IS NOT NULL),
-              cont AS (SELECT a, b, CAST(count(*) AS BIGINT) AS o
-                       FROM ev GROUP BY 1, 2),
-              tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-                        CAST(count(DISTINCT a) AS BIGINT) AS r_levels,
-                        CAST(count(DISTINCT b) AS BIGINT) AS c_levels
-                      FROM cont),
-              ma AS (SELECT a, CAST(sum(o) AS BIGINT) AS ca
-                     FROM cont GROUP BY 1),
-              mb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb
-                     FROM cont GROUP BY 1),
-              obs AS (SELECT sum(od * ln(od / e)) AS lsum
-                      FROM (SELECT CAST(o AS DOUBLE) AS od,
-                              CAST(ca AS DOUBLE) * cb / n AS e
-                            FROM cont JOIN ma USING (a)
-                              JOIN mb USING (b), tot)),
-              stat AS (SELECT n, r_levels, c_levels,
-                         (r_levels - 1) * (c_levels - 1) AS dof,
-                         2.0 * lsum AS gv
-                       FROM tot, obs),
-              un AS (SELECT n, r_levels, c_levels, dof, gv,
-                       gv * 0.5 AS h, dof / 2 AS m,
-                       1.0 AS t0,
-                       t0 * h / 1.0 AS t1,
-                       t1 * h / 2.0 AS t2,
-                       t2 * h / 3.0 AS t3,
-                       t3 * h / 4.0 AS t4,
-                       t4 * h / 5.0 AS t5,
-                       t5 * h / 6.0 AS t6,
-                       t6 * h / 7.0 AS t7,
-                       t7 * h / 8.0 AS t8,
-                       t8 * h / 9.0 AS t9,
-                       t9 * h / 10.0 AS t10,
-                       t10 * h / 11.0 AS t11,
-                       t11 * h / 12.0 AS t12,
-                       t12 * h / 13.0 AS t13,
-                       t13 * h / 14.0 AS t14,
-                       t14 * h / 15.0 AS t15,
-                       t15 * h / 16.0 AS t16,
-                       t16 * h / 17.0 AS t17,
-                       t17 * h / 18.0 AS t18,
-                       t18 * h / 19.0 AS t19
-                     FROM stat)
-         SELECT n, r_levels, c_levels, dof, round(gv, 6) AS g_stat,
-                round(CASE WHEN dof % 2 = 0 AND dof >= 2 AND dof <= 40
-                    AND gv IS NOT NULL
-                  THEN least(1.0, exp(-h) * (t0 + CASE WHEN 1.0 < m THEN t1 ELSE 0.0 END + CASE WHEN 2.0 < m THEN t2 ELSE 0.0 END + CASE WHEN 3.0 < m THEN t3 ELSE 0.0 END + CASE WHEN 4.0 < m THEN t4 ELSE 0.0 END + CASE WHEN 5.0 < m THEN t5 ELSE 0.0 END + CASE WHEN 6.0 < m THEN t6 ELSE 0.0 END + CASE WHEN 7.0 < m THEN t7 ELSE 0.0 END + CASE WHEN 8.0 < m THEN t8 ELSE 0.0 END + CASE WHEN 9.0 < m THEN t9 ELSE 0.0 END + CASE WHEN 10.0 < m THEN t10 ELSE 0.0 END + CASE WHEN 11.0 < m THEN t11 ELSE 0.0 END + CASE WHEN 12.0 < m THEN t12 ELSE 0.0 END + CASE WHEN 13.0 < m THEN t13 ELSE 0.0 END + CASE WHEN 14.0 < m THEN t14 ELSE 0.0 END + CASE WHEN 15.0 < m THEN t15 ELSE 0.0 END + CASE WHEN 16.0 < m THEN t16 ELSE 0.0 END + CASE WHEN 17.0 < m THEN t17 ELSE 0.0 END + CASE WHEN 18.0 < m THEN t18 ELSE 0.0 END + CASE WHEN 19.0 < m THEN t19 ELSE 0.0 END)) END, 6) AS p_value
-         FROM un""") { (s, d) =>
-      val ev = Tables.events(s, d).filter(col("event_type").isNotNull)
-        .select(col("event_type"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-            .cast("string").as("dow"))
-      Stats.gTest(ev, "event_type", "dow")
+      weekdayIndependenceSql("sum(od * ln(od / e)) AS lsum", "gv",
+        "2.0 * lsum", "g_stat")) { (s, d) =>
+      Stats.gTest(typeByWeekday(s, d), "event_type", "dow")
     },
 
     /** §2b Benjamini–Yekutieli FDR over the SAME per-source KS battery as
@@ -1677,26 +1538,11 @@ object HypothesisTestQueries {
       * weighted by their range rank; same complete-block day×type cells
       * as q_friedman. */
     Q("q_quade",
-      // friedman's complete-block cells, block ranks weighted by the
+      // [[completeBlocksSql]] (as q_friedman), block ranks weighted by the
       // midrank of each block's range; every S term is a dyadic rational
       // (the friedman exactness contract), T mirrored term for term.
-      """WITH cells AS (SELECT date_trunc('day', ts) AS b,
-                          event_type AS t, avg(value) AS v
-                        FROM events WHERE value IS NOT NULL
-                        GROUP BY 1, 2),
-              cb AS (SELECT b, t, v FROM cells WHERE v IS NOT NULL),
-              kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k
-                     FROM cb),
-              comp AS (SELECT cb.b, cb.t, cb.v, kk.k
-                       FROM cb
-                       JOIN (SELECT b, count(*) AS c FROM cb GROUP BY 1) bc
-                         ON cb.b = bc.b, kk
-                       WHERE bc.c = kk.k),
-              rk AS (SELECT b, t, k,
-                       CAST(rank() OVER (PARTITION BY b ORDER BY v)
-                         AS DOUBLE)
-                         + (CAST(count(*) OVER (PARTITION BY b, v)
-                           AS DOUBLE) - 1.0) / 2.0 AS r,
+      s"""${completeBlocksSql("event_type", ", kk.k")}
+              rk AS (SELECT b, t, k, $blockMidrankSql,
                        max(v) OVER (PARTITION BY b)
                          - min(v) OVER (PARTITION BY b) AS rng
                      FROM comp),
@@ -1723,11 +1569,8 @@ object HypothesisTestQueries {
          SELECT t AS event_type, n_blocks, round(sj, 6) AS s_j,
                 n_blocks_used, k_treatments, quade_t
          FROM pt, tt""") { (s, d) =>
-      val cells = Tables.events(s, d)
-        .filter(col("value").isNotNull)
-        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg(avg(col("value")).as("mean_value"))
-      Stats.quadeTest(cells, "day", "event_type", "mean_value")
+      Stats.quadeTest(dailyMeans(s, d, col("event_type")), "day",
+        "event_type", "mean_value")
     },
 
     /** §2b Cochran's C variance-outlier screen across event types on
@@ -1736,16 +1579,7 @@ object HypothesisTestQueries {
     Q("q_cochran_c",
       // Exact cent-quantized per-group variances; the cross-group total
       // folds by ordered prefix (max prefix = total for nonneg terms).
-      """WITH per AS (SELECT event_type AS g,
-                        CAST(count(*) AS BIGINT) AS n,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT)) AS sq,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)
-                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)) AS sqq
-                      FROM events WHERE value IS NOT NULL
-                      GROUP BY 1 HAVING count(*) > 1),
+      s"""${centMomentsSql("GROUP BY 1 HAVING count(*) > 1")}
               v AS (SELECT g, CAST(n * sqq - sq * sq AS DOUBLE)
                       / CAST(n * (n - 1) AS DOUBLE) / 10000.0 AS var
                     FROM per),
@@ -1773,16 +1607,7 @@ object HypothesisTestQueries {
     Q("q_tukey_hsd",
       // Pooled MSE from exact per-group SS (ordered-prefix total), then
       // the k^2 Tukey-Kramer pair grid, q mirrored term for term.
-      """WITH per AS (SELECT event_type AS g,
-                        CAST(count(*) AS BIGINT) AS n,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT)) AS sq,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)
-                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)) AS sqq
-                      FROM events WHERE value IS NOT NULL
-                      GROUP BY 1),
+      s"""${centMomentsSql("GROUP BY 1")}
               s AS (SELECT g, n, sq,
                       CAST(n * sqq - sq * sq AS DOUBLE)
                         / CAST(n AS DOUBLE) / 10000.0 AS ss
@@ -1828,16 +1653,7 @@ object HypothesisTestQueries {
       // grid (weights+weighted means, then the centered dispersion), the
       // grand weighted mean broadcast between them; algebra mirrored
       // term for term.
-      """WITH per AS (SELECT event_type AS g,
-                        CAST(count(*) AS BIGINT) AS n,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                          AS HUGEINT)) AS sq,
-                        SUM(CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)
-                            * CAST(CAST(value AS DECIMAL(20,2)) * 100
-                              AS HUGEINT)) AS sqq
-                      FROM events WHERE value IS NOT NULL
-                      GROUP BY 1 HAVING count(*) > 1),
+      s"""${centMomentsSql("GROUP BY 1 HAVING count(*) > 1")}
               mv AS (SELECT g, n,
                        CAST(sq AS DOUBLE) / CAST(n AS DOUBLE) / 100.0
                          AS m,
@@ -2007,29 +1823,10 @@ object HypothesisTestQueries {
       * rotation-sensitive drift screen KS under-weights on cyclic
       * supports (a shifted weekly peak cancels at any single point). */
     Q("q_kuiper",
-      // The q_ks_per_source grid with SIGNED deviations: V = D+ + D-.
-      """WITH b AS (SELECT event_type AS g,
-                           CAST(datediff('day', DATE '2024-01-01',
-                             CAST(ts AS DATE)) % 7 AS BIGINT) AS v
-                    FROM events WHERE ts IS NOT NULL),
-              gv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c
-                     FROM b GROUP BY 1, 2),
-              tv AS (SELECT v, CAST(count(*) AS BIGINT) AS ct
-                     FROM b GROUP BY 1),
-              gs AS (SELECT DISTINCT g FROM b),
-              grid AS (SELECT gs.g, tv.v, tv.ct, COALESCE(gv.c, 0) AS c
-                       FROM tv CROSS JOIN gs
-                       LEFT JOIN gv ON gv.g = gs.g AND gv.v = tv.v),
-              cum AS (SELECT g,
-                             sum(c) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumg,
-                             sum(ct) OVER (PARTITION BY g ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cumt,
-                             sum(c) OVER (PARTITION BY g) AS ng,
-                             sum(ct) OVER (PARTITION BY g) AS nt
-                      FROM grid)
+      // [[groupEcdfGridSql]] with SIGNED deviations: V = D+ + D-.
+      groupEcdfGridSql(s"""SELECT event_type AS g,
+                           ${weekdaySql("BIGINT")} AS v
+                    FROM events WHERE ts IS NOT NULL""") + """
          SELECT g AS event_type,
                 CAST(max(ng) AS BIGINT) AS n_group,
                 CAST(max(nt - ng) AS BIGINT) AS n_rest,
@@ -2046,8 +1843,7 @@ object HypothesisTestQueries {
          FROM cum GROUP BY 1""") { (s, d) =>
       Stats.groupKuiperDrift(
         Tables.events(s, d).select(col("event_type"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) % 7)
-            .cast("long").as("dow_ix")),
+          weekday.cast("long").as("dow_ix")),
         "event_type", "dow_ix")
     },
 

@@ -3,6 +3,7 @@ package queries
 
 import graft.operators._
 import graft.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -46,6 +47,128 @@ object RelationalQueries {
                      * (CAST(n AS DOUBLE) - tt * ($eCase))
                      / (tt * ($eCase)), 6) AS chi2_contrib
         FROM c, t"""
+  }
+
+  /** The [[operators.ColumnHygiene.columnProfile]] oracle over `table`:
+    * one row per column of `cols` (null count, distinct count, min/max as
+    * strings), the first SELECT naming the output columns. */
+  private def columnProfileSql(table: String, cols: Seq[String]): String =
+    cols.zipWithIndex.map { case (c, i) =>
+      def as(name: String) = if (i == 0) s" AS $name" else ""
+      s"""SELECT '$c'${as("col_name")}, count(*)${as("n_rows")},
+                CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)${as("n_nulls")},
+                count(DISTINCT $c)${as("n_distinct")},
+                CAST(min($c) AS VARCHAR)${as("min_str")},
+                CAST(max($c) AS VARCHAR)${as("max_str")}
+         FROM $table"""
+    }.mkString(" UNION ALL ")
+
+  /** The columns q_profile_drift audits. */
+  private val profiledCols = Seq("o_orderstatus", "o_custkey", "o_totalprice")
+
+  /** The Octadesk e2e oracle: orders as tickets (`updatedAt` from the
+    * expression `updatedAt`, the clerk as `autor`), customers as chats
+    * (segment as `segment`, name as `name`), the full-outer merge, uuid
+    * synthesis, the pinned upload stamp and the dedup against the
+    * pre-1995 destination. */
+  private def octadeskE2eSql(updatedAt: String, autor: String,
+                             segment: String, name: String): String =
+    s"""WITH tickets AS (
+           SELECT 'T' || CAST(o_orderkey AS VARCHAR) AS uuid,
+                  CAST(o_orderkey AS VARCHAR) AS n_ticket,
+                  CAST(NULL AS VARCHAR) AS titulo,
+                  o_orderstatus || ',' || o_orderpriority AS tags_ticket,
+                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS createdAt,
+                  $updatedAt AS updatedAt,
+                  o_orderstatus AS status_ticket,
+                  o_orderpriority AS channel_ticket,
+                  'Clerk#' || CAST(o_custkey % 1000 AS VARCHAR) AS $autor,
+                  'clerk' || CAST(o_custkey % 1000 AS VARCHAR) || '@example.com' AS email_ticket,
+                  CAST(o_custkey % 10 AS BIGINT) AS grupo_responsavel_ticket,
+                  o_orderstatus AS status_ticket2,
+                  to_json([{'key': 'n_do_pedido', 'value': CAST(o_orderkey AS VARCHAR)},
+                           {'key': 'produto', 'value': o_orderpriority},
+                           {'key': 'nao_listado', 'value': 'drop me'}])
+                    AS campo_custom_ticket,
+                  CAST(NULL AS VARCHAR) AS campo_custom_ticket2,
+                  CAST(NULL AS VARCHAR) AS ticket_codigo_de_rastreio,
+                  CAST(NULL AS VARCHAR) AS ticket_cpf,
+                  CAST(NULL AS VARCHAR) AS ticket_data_de_pagamento,
+                  CAST(NULL AS VARCHAR) AS ticket_email_do_cliente,
+                  CAST(NULL AS VARCHAR) AS ticket_motivo_de_contatos,
+                  CAST(NULL AS VARCHAR) AS ticket_n_da_nota_fiscal,
+                  CAST(o_orderkey AS VARCHAR) AS ticket_n_do_pedido,
+                  CAST(NULL AS VARCHAR) AS ticket_n_do_pedido_bling,
+                  o_orderpriority AS ticket_produto,
+                  CAST(NULL AS VARCHAR) AS ticket_tipo_do_problema,
+                  '' AS contact_cf_n_mero_do_ticket
+           FROM orders),
+         chats AS (
+           SELECT 'C' || CAST(c_custkey AS VARCHAR) AS chat_id,
+                  CAST(c_custkey * 4 AS VARCHAR) AS ck,
+                  c_mktsegment AS $segment,
+                  c_name AS $name
+           FROM customer),
+         merged AS (
+           SELECT COALESCE(c.ck, t.n_ticket) AS n_ticket,
+                  c.chat_id, c.$segment, c.$name,
+                  t.uuid, t.titulo, t.tags_ticket, t.createdAt, t.updatedAt,
+                  t.status_ticket, t.channel_ticket,
+                  t.$autor, t.email_ticket,
+                  t.grupo_responsavel_ticket, t.status_ticket2,
+                  t.campo_custom_ticket, t.campo_custom_ticket2,
+                  t.ticket_codigo_de_rastreio, t.ticket_cpf,
+                  t.ticket_data_de_pagamento, t.ticket_email_do_cliente,
+                  t.ticket_motivo_de_contatos, t.ticket_n_da_nota_fiscal,
+                  t.ticket_n_do_pedido, t.ticket_n_do_pedido_bling,
+                  t.ticket_produto, t.ticket_tipo_do_problema,
+                  t.contact_cf_n_mero_do_ticket
+           FROM chats c FULL OUTER JOIN tickets t ON c.ck = t.n_ticket)
+         SELECT * REPLACE (
+                  CASE WHEN uuid IS NULL OR trim(uuid) = ''
+                       THEN 'gen-' || n_ticket ELSE uuid END AS uuid),
+                TIMESTAMP '2026-08-13 00:00:00' AS upload
+         FROM merged m
+         WHERE NOT EXISTS (SELECT 1 FROM orders dd
+                           WHERE dd.o_orderdate < TIMESTAMP '1995-01-01 00:00:00'
+                             AND CAST(dd.o_orderkey AS VARCHAR) = m.n_ticket)"""
+
+  /** The Octadesk e2e build: orders re-shaped into the reference's nested
+    * ticket JSON (date columns `dates`), customers as chats (`chat_id`,
+    * the ticketNumber link, then `chatCols`), the pre-1995 orders as the
+    * destination, through [[Pipeline.run]]; the custom-field payload
+    * JSON-stringified and the upload stamp pinned for the oracle. */
+  private def octadeskE2e(s: SparkSession, d: String, dates: Seq[Column],
+                          chatCols: Seq[Column]): DataFrame = {
+    val o = Tables.orders(s, d)
+    val tickets = o.select(Seq(
+      concat(lit("T"), col("o_orderkey").cast("string")).as("id"),
+      col("o_orderkey").as("number")) ++ dates ++ Seq(
+      concat(col("o_orderstatus"), lit(","), col("o_orderpriority")).as("tags"),
+      struct(col("o_orderstatus").as("name")).as("status"),
+      struct(col("o_orderpriority").as("name")).as("channel"),
+      struct(concat(lit("Clerk#"), (col("o_custkey") % 1000).cast("string")).as("name"),
+        concat(lit("clerk"), (col("o_custkey") % 1000).cast("string"),
+          lit("@example.com")).as("email")).as("requester"),
+      struct((col("o_custkey") % 10).as("id")).as("group"),
+      struct(struct(col("o_orderstatus").as("status")).as("propertiesChanges"))
+        .as("lastHumanInteraction"),
+      array(
+        struct(lit("n_do_pedido").as("key"),
+          col("o_orderkey").cast("string").as("value")),
+        struct(lit("produto").as("key"), col("o_orderpriority").as("value")),
+        struct(lit("nao_listado").as("key"), lit("drop me").as("value"))
+      ).as("customField")): _*)
+    val chats = Tables.customer(s, d).select(Seq(
+      concat(lit("C"), col("c_custkey").cast("string")).as("chat_id"),
+      (col("c_custkey") * 4).cast("string").as("evt_ticket_ticketNumber")) ++
+      chatCols: _*)
+    val dest = o.filter(col("o_orderdate") < lit("1995-01-01").cast("timestamp"))
+      .select(col("o_orderkey").cast("string").as("n_ticket"))
+    Pipeline.run(tickets, chats, dest,
+        uuidGen = concat(lit("gen-"), col("n_ticket")))
+      .withColumn("campo_custom_ticket", to_json(col("campo_custom_ticket")))
+      .withColumn("upload", lit("2026-08-13 00:00:00").cast("timestamp"))
   }
 
   /** T18/S10: SELECT DISTINCT open keys (reference/main.py:146-150). */
@@ -1122,24 +1245,8 @@ object RelationalQueries {
       * audit over orders (string/long columns only — a double min/max cast
       * to string would be float-format-sensitive across engines). */
     Q("q_column_profile",
-      """SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-                CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-                count(DISTINCT o_orderstatus) AS n_distinct,
-                CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-                CAST(max(o_orderstatus) AS VARCHAR) AS max_str
-         FROM orders
-         UNION ALL
-         SELECT 'o_custkey', count(*),
-                CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                count(DISTINCT o_custkey),
-                CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderpriority', count(*),
-                CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                count(DISTINCT o_orderpriority),
-                CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR)
-         FROM orders""") { (s, d) =>
+      columnProfileSql("orders",
+        Seq("o_orderstatus", "o_custkey", "o_orderpriority"))) { (s, d) =>
       ColumnHygiene.columnProfile(Tables.orders(s, d),
         Seq("o_orderstatus", "o_custkey", "o_orderpriority"))
         .withColumnRenamed("column", "col_name")
@@ -1218,46 +1325,12 @@ object RelationalQueries {
       * null-rate delta, distinct-count ratio, min/max movement per column;
       * two single-pass 1-row aggregates + a #columns join. */
     Q("q_profile_drift",
-      """WITH oldt AS (SELECT * FROM orders
+      s"""WITH oldt AS (SELECT * FROM orders
                        WHERE o_orderdate < TIMESTAMP '1998-01-01'),
               po AS (
-                SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-                       CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-                       count(DISTINCT o_orderstatus) AS n_distinct,
-                       CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-                       CAST(max(o_orderstatus) AS VARCHAR) AS max_str
-                FROM oldt
-                UNION ALL
-                SELECT 'o_custkey', count(*),
-                       CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_custkey),
-                       CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-                FROM oldt
-                UNION ALL
-                SELECT 'o_totalprice', count(*),
-                       CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_totalprice),
-                       CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR)
-                FROM oldt),
+                ${columnProfileSql("oldt", profiledCols)}),
               pn AS (
-                SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-                       CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-                       count(DISTINCT o_orderstatus) AS n_distinct,
-                       CAST(min(o_orderstatus) AS VARCHAR) AS min_str,
-                       CAST(max(o_orderstatus) AS VARCHAR) AS max_str
-                FROM orders
-                UNION ALL
-                SELECT 'o_custkey', count(*),
-                       CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_custkey),
-                       CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-                FROM orders
-                UNION ALL
-                SELECT 'o_totalprice', count(*),
-                       CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                       count(DISTINCT o_totalprice),
-                       CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR)
-                FROM orders)
+                ${columnProfileSql("orders", profiledCols)})
          SELECT po.col_name,
                 po.n_rows AS old_rows, pn.n_rows AS new_rows,
                 round(CAST(pn.n_nulls AS DOUBLE) / pn.n_rows
@@ -1270,8 +1343,7 @@ object RelationalQueries {
          FROM po JOIN pn USING (col_name)""") { (s, d) =>
       val all = Tables.orders(s, d)
       val old = all.filter(col("o_orderdate") < lit("1998-01-01 00:00:00"))
-      ColumnHygiene.profileDrift(old, all,
-          Seq("o_orderstatus", "o_custkey", "o_totalprice"))
+      ColumnHygiene.profileDrift(old, all, profiledCols)
         .withColumnRenamed("column", "col_name")
     },
 
@@ -1420,97 +1492,12 @@ object RelationalQueries {
       * in df_ticket_filtro1; it is JSON-stringified at the end ONLY because
       * the driver's canonicalizer cannot sort raw array cells. */
     Q("q_octadesk_e2e",
-      """WITH tickets AS (
-           SELECT 'T' || CAST(o_orderkey AS VARCHAR) AS uuid,
-                  CAST(o_orderkey AS VARCHAR) AS n_ticket,
-                  CAST(NULL AS VARCHAR) AS titulo,
-                  o_orderstatus || ',' || o_orderpriority AS tags_ticket,
-                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS createdAt,
-                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS updatedAt,
-                  o_orderstatus AS status_ticket,
-                  o_orderpriority AS channel_ticket,
-                  'Clerk#' || CAST(o_custkey % 1000 AS VARCHAR) AS autor_ticket_ticket,
-                  'clerk' || CAST(o_custkey % 1000 AS VARCHAR) || '@example.com' AS email_ticket,
-                  CAST(o_custkey % 10 AS BIGINT) AS grupo_responsavel_ticket,
-                  o_orderstatus AS status_ticket2,
-                  to_json([{'key': 'n_do_pedido', 'value': CAST(o_orderkey AS VARCHAR)},
-                           {'key': 'produto', 'value': o_orderpriority},
-                           {'key': 'nao_listado', 'value': 'drop me'}])
-                    AS campo_custom_ticket,
-                  CAST(NULL AS VARCHAR) AS campo_custom_ticket2,
-                  CAST(NULL AS VARCHAR) AS ticket_codigo_de_rastreio,
-                  CAST(NULL AS VARCHAR) AS ticket_cpf,
-                  CAST(NULL AS VARCHAR) AS ticket_data_de_pagamento,
-                  CAST(NULL AS VARCHAR) AS ticket_email_do_cliente,
-                  CAST(NULL AS VARCHAR) AS ticket_motivo_de_contatos,
-                  CAST(NULL AS VARCHAR) AS ticket_n_da_nota_fiscal,
-                  CAST(o_orderkey AS VARCHAR) AS ticket_n_do_pedido,
-                  CAST(NULL AS VARCHAR) AS ticket_n_do_pedido_bling,
-                  o_orderpriority AS ticket_produto,
-                  CAST(NULL AS VARCHAR) AS ticket_tipo_do_problema,
-                  '' AS contact_cf_n_mero_do_ticket
-           FROM orders),
-         chats AS (
-           SELECT 'C' || CAST(c_custkey AS VARCHAR) AS chat_id,
-                  CAST(c_custkey * 4 AS VARCHAR) AS ck,
-                  c_mktsegment AS segmento,
-                  c_name AS autor_ticket_chat
-           FROM customer),
-         merged AS (
-           SELECT COALESCE(c.ck, t.n_ticket) AS n_ticket,
-                  c.chat_id, c.segmento, c.autor_ticket_chat,
-                  t.uuid, t.titulo, t.tags_ticket, t.createdAt, t.updatedAt,
-                  t.status_ticket, t.channel_ticket,
-                  t.autor_ticket_ticket, t.email_ticket,
-                  t.grupo_responsavel_ticket, t.status_ticket2,
-                  t.campo_custom_ticket, t.campo_custom_ticket2,
-                  t.ticket_codigo_de_rastreio, t.ticket_cpf,
-                  t.ticket_data_de_pagamento, t.ticket_email_do_cliente,
-                  t.ticket_motivo_de_contatos, t.ticket_n_da_nota_fiscal,
-                  t.ticket_n_do_pedido, t.ticket_n_do_pedido_bling,
-                  t.ticket_produto, t.ticket_tipo_do_problema,
-                  t.contact_cf_n_mero_do_ticket
-           FROM chats c FULL OUTER JOIN tickets t ON c.ck = t.n_ticket)
-         SELECT * REPLACE (
-                  CASE WHEN uuid IS NULL OR trim(uuid) = ''
-                       THEN 'gen-' || n_ticket ELSE uuid END AS uuid),
-                TIMESTAMP '2026-08-13 00:00:00' AS upload
-         FROM merged m
-         WHERE NOT EXISTS (SELECT 1 FROM orders dd
-                           WHERE dd.o_orderdate < TIMESTAMP '1995-01-01 00:00:00'
-                             AND CAST(dd.o_orderkey AS VARCHAR) = m.n_ticket)""") { (s, d) =>
-      val o = Tables.orders(s, d)
-      val tickets = o.select(
-        concat(lit("T"), col("o_orderkey").cast("string")).as("id"),
-        col("o_orderkey").as("number"),
-        Relational.isoFormat(col("o_orderdate")).as("createdAt"),
-        Relational.isoFormat(col("o_orderdate")).as("updatedAt"),
-        concat(col("o_orderstatus"), lit(","), col("o_orderpriority")).as("tags"),
-        struct(col("o_orderstatus").as("name")).as("status"),
-        struct(col("o_orderpriority").as("name")).as("channel"),
-        struct(concat(lit("Clerk#"), (col("o_custkey") % 1000).cast("string")).as("name"),
-          concat(lit("clerk"), (col("o_custkey") % 1000).cast("string"),
-            lit("@example.com")).as("email")).as("requester"),
-        struct((col("o_custkey") % 10).as("id")).as("group"),
-        struct(struct(col("o_orderstatus").as("status")).as("propertiesChanges"))
-          .as("lastHumanInteraction"),
-        array(
-          struct(lit("n_do_pedido").as("key"),
-            col("o_orderkey").cast("string").as("value")),
-          struct(lit("produto").as("key"), col("o_orderpriority").as("value")),
-          struct(lit("nao_listado").as("key"), lit("drop me").as("value"))
-        ).as("customField"))
-      val chats = Tables.customer(s, d).select(
-        concat(lit("C"), col("c_custkey").cast("string")).as("chat_id"),
-        (col("c_custkey") * 4).cast("string").as("evt_ticket_ticketNumber"),
-        col("c_mktsegment").as("segmento"),
-        col("c_name").as("autor_ticket"))
-      val dest = o.filter(col("o_orderdate") < lit("1995-01-01").cast("timestamp"))
-        .select(col("o_orderkey").cast("string").as("n_ticket"))
-      Pipeline.run(tickets, chats, dest,
-          uuidGen = concat(lit("gen-"), col("n_ticket")))
-        .withColumn("campo_custom_ticket", to_json(col("campo_custom_ticket")))
-        .withColumn("upload", lit("2026-08-13 00:00:00").cast("timestamp"))
+      octadeskE2eSql(
+        "strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000'",
+        "autor_ticket_ticket", "segmento", "autor_ticket_chat")) { (s, d) =>
+      val iso = Relational.isoFormat(col("o_orderdate"))
+      octadeskE2e(s, d, Seq(iso.as("createdAt"), iso.as("updatedAt")),
+        Seq(col("c_mktsegment").as("segmento"), col("c_name").as("autor_ticket")))
     },
 
     /** FLAGSHIP drift variant — the SAME [[Pipeline.run]] under schema
@@ -1526,97 +1513,13 @@ object RelationalQueries {
       * the exact failure mode of reference chat.py:21-31's regex rename.
       * Oracle keeps the first (c_name) copy and the evolved null columns. */
     Q("q_octadesk_e2e_drift",
-      """WITH tickets AS (
-           SELECT 'T' || CAST(o_orderkey AS VARCHAR) AS uuid,
-                  CAST(o_orderkey AS VARCHAR) AS n_ticket,
-                  CAST(NULL AS VARCHAR) AS titulo,
-                  o_orderstatus || ',' || o_orderpriority AS tags_ticket,
-                  strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S') || '+0000' AS createdAt,
-                  CAST(NULL AS VARCHAR) AS updatedAt,
-                  o_orderstatus AS status_ticket,
-                  o_orderpriority AS channel_ticket,
-                  'Clerk#' || CAST(o_custkey % 1000 AS VARCHAR) AS autor_ticket,
-                  'clerk' || CAST(o_custkey % 1000 AS VARCHAR) || '@example.com' AS email_ticket,
-                  CAST(o_custkey % 10 AS BIGINT) AS grupo_responsavel_ticket,
-                  o_orderstatus AS status_ticket2,
-                  to_json([{'key': 'n_do_pedido', 'value': CAST(o_orderkey AS VARCHAR)},
-                           {'key': 'produto', 'value': o_orderpriority},
-                           {'key': 'nao_listado', 'value': 'drop me'}])
-                    AS campo_custom_ticket,
-                  CAST(NULL AS VARCHAR) AS campo_custom_ticket2,
-                  CAST(NULL AS VARCHAR) AS ticket_codigo_de_rastreio,
-                  CAST(NULL AS VARCHAR) AS ticket_cpf,
-                  CAST(NULL AS VARCHAR) AS ticket_data_de_pagamento,
-                  CAST(NULL AS VARCHAR) AS ticket_email_do_cliente,
-                  CAST(NULL AS VARCHAR) AS ticket_motivo_de_contatos,
-                  CAST(NULL AS VARCHAR) AS ticket_n_da_nota_fiscal,
-                  CAST(o_orderkey AS VARCHAR) AS ticket_n_do_pedido,
-                  CAST(NULL AS VARCHAR) AS ticket_n_do_pedido_bling,
-                  o_orderpriority AS ticket_produto,
-                  CAST(NULL AS VARCHAR) AS ticket_tipo_do_problema,
-                  '' AS contact_cf_n_mero_do_ticket
-           FROM orders),
-         chats AS (
-           SELECT 'C' || CAST(c_custkey AS VARCHAR) AS chat_id,
-                  CAST(c_custkey * 4 AS VARCHAR) AS ck,
-                  c_mktsegment AS cf_segmento_novo,
-                  c_name AS cf_n_mero_do_cliente
-           FROM customer),
-         merged AS (
-           SELECT COALESCE(c.ck, t.n_ticket) AS n_ticket,
-                  c.chat_id, c.cf_segmento_novo, c.cf_n_mero_do_cliente,
-                  t.uuid, t.titulo, t.tags_ticket, t.createdAt, t.updatedAt,
-                  t.status_ticket, t.channel_ticket,
-                  t.autor_ticket, t.email_ticket,
-                  t.grupo_responsavel_ticket, t.status_ticket2,
-                  t.campo_custom_ticket, t.campo_custom_ticket2,
-                  t.ticket_codigo_de_rastreio, t.ticket_cpf,
-                  t.ticket_data_de_pagamento, t.ticket_email_do_cliente,
-                  t.ticket_motivo_de_contatos, t.ticket_n_da_nota_fiscal,
-                  t.ticket_n_do_pedido, t.ticket_n_do_pedido_bling,
-                  t.ticket_produto, t.ticket_tipo_do_problema,
-                  t.contact_cf_n_mero_do_ticket
-           FROM chats c FULL OUTER JOIN tickets t ON c.ck = t.n_ticket)
-         SELECT * REPLACE (
-                  CASE WHEN uuid IS NULL OR trim(uuid) = ''
-                       THEN 'gen-' || n_ticket ELSE uuid END AS uuid),
-                TIMESTAMP '2026-08-13 00:00:00' AS upload
-         FROM merged m
-         WHERE NOT EXISTS (SELECT 1 FROM orders dd
-                           WHERE dd.o_orderdate < TIMESTAMP '1995-01-01 00:00:00'
-                             AND CAST(dd.o_orderkey AS VARCHAR) = m.n_ticket)""") { (s, d) =>
-      val o = Tables.orders(s, d)
-      val tickets = o.select(
-        concat(lit("T"), col("o_orderkey").cast("string")).as("id"),
-        col("o_orderkey").as("number"),
-        Relational.isoFormat(col("o_orderdate")).as("createdAt"),
-        concat(col("o_orderstatus"), lit(","), col("o_orderpriority")).as("tags"),
-        struct(col("o_orderstatus").as("name")).as("status"),
-        struct(col("o_orderpriority").as("name")).as("channel"),
-        struct(concat(lit("Clerk#"), (col("o_custkey") % 1000).cast("string")).as("name"),
-          concat(lit("clerk"), (col("o_custkey") % 1000).cast("string"),
-            lit("@example.com")).as("email")).as("requester"),
-        struct((col("o_custkey") % 10).as("id")).as("group"),
-        struct(struct(col("o_orderstatus").as("status")).as("propertiesChanges"))
-          .as("lastHumanInteraction"),
-        array(
-          struct(lit("n_do_pedido").as("key"),
-            col("o_orderkey").cast("string").as("value")),
-          struct(lit("produto").as("key"), col("o_orderpriority").as("value")),
-          struct(lit("nao_listado").as("key"), lit("drop me").as("value"))
-        ).as("customField"))
-      val chats = Tables.customer(s, d).select(
-        concat(lit("C"), col("c_custkey").cast("string")).as("chat_id"),
-        (col("c_custkey") * 4).cast("string").as("evt_ticket_ticketNumber"),
-        col("c_mktsegment").as("cf_segmento?novo"),
-        col("c_name").as("cf_n?mero_do_cliente"),
-        col("c_nationkey").cast("string").as("cf_n-mero_do_cliente"))
-      val dest = o.filter(col("o_orderdate") < lit("1995-01-01").cast("timestamp"))
-        .select(col("o_orderkey").cast("string").as("n_ticket"))
-      Pipeline.run(tickets, chats, dest,
-          uuidGen = concat(lit("gen-"), col("n_ticket")))
-        .withColumn("campo_custom_ticket", to_json(col("campo_custom_ticket")))
-        .withColumn("upload", lit("2026-08-13 00:00:00").cast("timestamp"))
+      octadeskE2eSql("CAST(NULL AS VARCHAR)", "autor_ticket",
+        "cf_segmento_novo", "cf_n_mero_do_cliente")) { (s, d) =>
+      octadeskE2e(s, d,
+        Seq(Relational.isoFormat(col("o_orderdate")).as("createdAt")),
+        Seq(col("c_mktsegment").as("cf_segmento?novo"),
+          col("c_name").as("cf_n?mero_do_cliente"),
+          col("c_nationkey").cast("string").as("cf_n-mero_do_cliente")))
     },
 
     /** §2b candidate-key discovery: exact uniqueness/null audit of four

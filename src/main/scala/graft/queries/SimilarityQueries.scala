@@ -3,7 +3,7 @@ package queries
 
 import graft.operators._
 import graft.functions._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Vector similarity queries: exact and approximate nearest neighbours,
@@ -85,22 +85,19 @@ object SimilarityQueries {
         ORDER BY adc_dist ASC, e.vec_id ASC LIMIT 10"""
   }
 
-  /** Generated oracle for q_ivf_topk_bcast: the q_ivf_topk oracle shape
-    * with the 256-cell codebook and nprobe=8 (same 1/32 scan fraction). */
-  private def ivfTopkBcastOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 256),
+  /** IVF top-10 oracle for query vec_id 0: `nCents` seed cells, the
+    * `nprobe` cells nearest the query, exact cosine re-rank inside them.
+    * q_ivf_topk uses 8 cells and nprobe 2; q_ivf_topk_bcast the 256-cell
+    * codebook and nprobe 8 (same 1/32 scan fraction). */
+  private def ivfTopkOracleSql(nCents: Int, nprobe: Int): String =
+    s"""WITH ${centroidsSql(nCents)},
             qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-            asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-               SELECT e.vec_id, e.v, c.cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-               FROM e, c) WHERE rn = 1),
+            $asgSql,
             probe AS (SELECT cent_id AS cell FROM (
                SELECT c.cent_id,
                       ROW_NUMBER() OVER (ORDER BY round(${duckCos("c.cv", "qv.q")}, 6) DESC,
                                          c.cent_id) AS rn
-               FROM c, qv) WHERE rn <= 8)
+               FROM c, qv) WHERE rn <= $nprobe)
        SELECT vec_id, cell, round(${duckCos("asg.v", "qv.q")}, 6) AS cosine_sim
        FROM asg JOIN probe USING (cell), qv
        ORDER BY round(${duckCos("asg.v", "qv.q")}, 6) DESC, vec_id LIMIT 10"""
@@ -111,18 +108,7 @@ object SimilarityQueries {
     * literal. */
   private def ivfNprobeSweepOracleSql(probes: Seq[Int]): String = {
     val branches = probes.map { np =>
-      s"""p$np AS (SELECT query_id, cell FROM (
-               SELECT q.query_id, c.cent_id AS cell,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
-               FROM q, c) WHERE rn <= $np),
-           ap$np AS (SELECT query_id, vec_id FROM (
-               SELECT p.query_id, a.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY p.query_id
-                        ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
-               FROM p$np p JOIN asg a ON a.cell = p.cell
-                           JOIN q ON q.query_id = p.query_id
-               WHERE a.vec_id <> p.query_id) WHERE rn <= 10),
+      s"""${probedSql(s"p$np", np, s"ap$np", "query_id, vec_id", 10)},
            r$np AS (SELECT n.query_id, n.n_exact,
                            COALESCE(h.n_hits, 0) AS n_hits,
                            round(COALESCE(h.n_hits, 0) / n.n_exact, 6) AS recall,
@@ -133,23 +119,46 @@ object SimilarityQueries {
                                        AND x.vec_id = a.vec_id
                                       GROUP BY 1) h USING (query_id))"""
     }
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-            ex AS (SELECT query_id, vec_id FROM (
-               SELECT q.query_id, e.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-               FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-            asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-               SELECT e.vec_id, e.v, c.cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-               FROM e, c) WHERE rn = 1),
+    s"""WITH ${annBaseSql("query_id, vec_id", 10)},
             n AS (SELECT query_id, count(*) AS n_exact FROM ex GROUP BY 1),
             ${branches.mkString(",\n")}
        ${probes.map(np => s"SELECT * FROM r$np").mkString("\n UNION ALL ")}"""
   }
+
+  /** `e`, `c`, the vec_id < 5 queries `q`, their exact top-`k` list `ex`
+    * (columns `cols` of query_id, vec_id, rn) and the cell assignment
+    * `asg`: the truth side of the exact-vs-IVF evals. */
+  private def annBaseSql(cols: String, k: Int): String =
+    s"""${centroidsSql(8)},
+            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
+            ${exactTopSql(cols, k)},
+            $asgSql"""
+
+  /** `ex`: each `q` query's exact cosine top-`k` over `e` (itself
+    * excluded), as the columns `cols` of query_id, vec_id, rn. */
+  private def exactTopSql(cols: String, k: Int): String =
+    s"""ex AS (SELECT $cols FROM (
+               SELECT q.query_id, e.vec_id,
+                      ROW_NUMBER() OVER (PARTITION BY q.query_id
+                        ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
+               FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= $k)"""
+
+  /** `probe`: each query's `np` nearest cells, and `ap`: its IVF top-`k`
+    * inside them (columns `cols` of query_id, vec_id, rn). */
+  private def probedSql(probe: String, np: Int, ap: String, cols: String,
+                        k: Int): String =
+    s"""$probe AS (SELECT query_id, cell FROM (
+               SELECT q.query_id, c.cent_id AS cell,
+                      ROW_NUMBER() OVER (PARTITION BY q.query_id
+                        ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
+               FROM q, c) WHERE rn <= $np),
+           $ap AS (SELECT $cols FROM (
+               SELECT p.query_id, a.vec_id,
+                      ROW_NUMBER() OVER (PARTITION BY p.query_id
+                        ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
+               FROM $probe p JOIN asg a ON a.cell = p.cell
+                           JOIN q ON q.query_id = p.query_id
+               WHERE a.vec_id <> p.query_id) WHERE rn <= $k)"""
 
   /** Generated k-center oracle: the greedy selection unrolled into k-1
     * MATERIALIZED 1-row rounds (round r cross-joins all previously selected
@@ -218,31 +227,8 @@ object SimilarityQueries {
   /** Shared oracle CTE chain for the exact-vs-IVF rank-list evals
     * (q_ndcg, q_rbo): `ex` / `ap` are the two top-k lists with ranks. */
   private def annListCtes(k: Int): String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-            ex AS (SELECT query_id, vec_id, rn FROM (
-               SELECT q.query_id, e.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-               FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= $k),
-            asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-               SELECT e.vec_id, e.v, c.cent_id,
-                      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-               FROM e, c) WHERE rn = 1),
-            probe AS (SELECT query_id, cell FROM (
-               SELECT q.query_id, c.cent_id AS cell,
-                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                        ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
-               FROM q, c) WHERE rn <= 2),
-            ap AS (SELECT query_id, vec_id, rn FROM (
-               SELECT p.query_id, a.vec_id,
-                      ROW_NUMBER() OVER (PARTITION BY p.query_id
-                        ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
-               FROM probe p JOIN asg a ON a.cell = p.cell
-                            JOIN q ON q.query_id = p.query_id
-               WHERE a.vec_id <> p.query_id) WHERE rn <= $k)"""
+    s"""${annBaseSql("query_id, vec_id, rn", k)},
+            ${probedSql("probe", 2, "ap", "query_id, vec_id, rn", k)}"""
 
   /** Generated NDCG oracle: the q_ann_recall exact/IVF CTEs with ranks
     * kept, then gain/discount CASE chains built from the SAME dyadic
@@ -342,6 +328,68 @@ object SimilarityQueries {
   private def duckCos(a: String, b: String): String =
     s"(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))))"
 
+  /** `e` (embeddings as DOUBLE[]) and `c`: the vec_id < `nCents` seed
+    * centroids of the IVF oracles. */
+  private def centroidsSql(nCents: Int): String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $nCents)"""
+
+  /** `asg`: each `e` vector's nearest `c` cell (cosine, id tiebreak). */
+  private def asgSql: String =
+    s"""asg AS (SELECT vec_id, v, cent_id AS cell FROM (
+           SELECT e.vec_id, e.v, c.cent_id,
+                  ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                    ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
+           FROM e, c) WHERE rn = 1)"""
+
+  /** `cellPairs`: same-`asg`-cell pairs with 6dp cosine ≥ 0.38 over the
+    * 8 seed cells — the q_semantic_dedup / q_density_clusters graph, as
+    * `pairs(id_a, id_b)` after a `WITH RECURSIVE`. */
+  private def cellPairsSql: String =
+    s"""WITH RECURSIVE
+              ${centroidsSql(8)},
+              $asgSql,
+              pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+                        FROM asg a JOIN asg b
+                          ON a.cell = b.cell AND a.vec_id < b.vec_id
+                        WHERE round(${duckCos("a.v", "b.v")}, 6) >= 0.38)"""
+
+  /** `ids` and `cells`: the synthetic images' sizes and 8×8
+    * nearest-neighbor sample cells, the aHash oracles' closed form. */
+  private val imageCellsSql: String =
+    """WITH ids AS (SELECT doc_id AS id, CAST(8 + doc_id % 9 AS INTEGER) AS w,
+                        CAST(8 + doc_id % 7 AS INTEGER) AS h
+                      FROM documents),
+              cells AS (SELECT id, w, h, cxs.cx, cys.cy,
+                          (cx * w) // 8 AS sx, (cy * h) // 8 AS sy
+                        FROM ids,
+                             UNNEST(generate_series(0, 7)) AS cxs(cx),
+                             UNNEST(generate_series(0, 7)) AS cys(cy)),"""
+
+  /** The seed centroids (vec_id < 8) of the IVF queries' builds. */
+  private def seedCentroids(emb: DataFrame): Seq[(Long, Seq[Double])] =
+    Similarity.collectCentroids(
+      emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+
+  /** The vec_id < 5 query vectors (`query_id`, `qv`) of the ANN evals. */
+  private def annQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+
+  /** The exact top-10 and the IVF (nprobe 2 of 8 cells) top-10 lists of
+    * [[annQueries]]: the two inputs of q_ann_recall, q_ndcg and q_rbo. */
+  private def exactVsIvf(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(s, d)
+    val cents = seedCentroids(emb)
+    val queries = annQueries(emb)
+    val exact = Similarity.bruteForceTopKMulti(
+      emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
+    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
+    val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
+      cents, queries, "query_id", "qv", 10, 2)
+    (exact, approx)
+  }
+
   /** DuckDB expression computing the engine's hyperplane LSH bucket id of
     * a DOUBLE[] column `v` (plane literals from the same deterministic
     * generator the engine uses). */
@@ -411,8 +459,7 @@ object SimilarityQueries {
       * per-cell mean (b − a)/max(a, b) in cosine distance — the
       * k-selection readout beside q_davies_bouldin, map-side at O(n·k). */
     Q("q_silhouette",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
+      s"""WITH ${centroidsSql(8)},
               scored AS (SELECT e.vec_id, c.cent_id,
                            ${duckCos("e.v", "c.cv")} AS cos,
                            ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -432,8 +479,7 @@ object SimilarityQueries {
                 round(avg(s), 6) AS mean_silhouette
          FROM sil GROUP BY 1""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val cents = seedCentroids(emb)
       Similarity.silhouetteSimplified(emb, "vec_id", "embedding", cents)
     },
 
@@ -508,25 +554,9 @@ object SimilarityQueries {
       * the deterministic centroid set), probe the 2 cells nearest the query,
       * exact re-rank inside them — the scan-fraction dial of a 100 TB ANN. */
     Q("q_ivf_topk",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              probe AS (SELECT cent_id AS cell FROM (
-                 SELECT c.cent_id,
-                        ROW_NUMBER() OVER (ORDER BY round(${duckCos("c.cv", "qv.q")}, 6) DESC,
-                                           c.cent_id) AS rn
-                 FROM c, qv) WHERE rn <= 2)
-         SELECT vec_id, cell, round(${duckCos("asg.v", "qv.q")}, 6) AS cosine_sim
-         FROM asg JOIN probe USING (cell), qv
-         ORDER BY round(${duckCos("asg.v", "qv.q")}, 6) DESC, vec_id LIMIT 10""") { (s, d) =>
+      ivfTopkOracleSql(8, 2)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val cents = seedCentroids(emb)
       val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
       Similarity.ivfTopK(assigned, "vec_id", "embedding", cents,
@@ -542,7 +572,7 @@ object SimilarityQueries {
       * the measured JIT-variance / 64 KB-method-limit regime). nprobe=8
       * keeps the 1/32 scan fraction of the literal twin; assignment is
       * bit-identical to literal [[Similarity.ivfAssign]] (SimilaritySpec). */
-    Q("q_ivf_topk_bcast", ivfTopkBcastOracleSql) { (s, d) =>
+    Q("q_ivf_topk_bcast", ivfTopkOracleSql(256, 8)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.collectCentroids(
         emb.filter(col("vec_id") < 256), "vec_id", "embedding")
@@ -557,19 +587,13 @@ object SimilarityQueries {
       * long form. The full train loop just re-feeds these means as the next
       * centroid literals ([[Similarity.kmeansTrain]]). */
     Q("q_kmeans_step",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1)
+      s"""WITH ${centroidsSql(8)},
+              $asgSql
          SELECT cell, t.pos, round(avg(v[t.pos + 1]), 6) AS c_val, count(*) AS n
          FROM asg, range(64) t(pos)
          GROUP BY cell, t.pos""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val cents = seedCentroids(emb)
       Similarity.kmeansStep(emb, "vec_id", "embedding", cents)
         .select(col("cell"), col("pos").cast("long").as("pos"),
           round(col("c_val"), 6).as("c_val"), col("n"))
@@ -620,18 +644,7 @@ object SimilarityQueries {
       * survivors. (0.38 because the synthetic embeddings are spread — max
       * pairwise cosine ≈ 0.51; a real corpus runs this at ~0.95+.) */
     Q("q_semantic_dedup",
-      s"""WITH RECURSIVE
-              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                        FROM asg a JOIN asg b
-                          ON a.cell = b.cell AND a.vec_id < b.vec_id
-                        WHERE round(${duckCos("a.v", "b.v")}, 6) >= 0.38),
+      s"""$cellPairsSql,
               edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
                         UNION
                         SELECT id_b AS src, id_a AS dst FROM pairs),
@@ -642,8 +655,7 @@ object SimilarityQueries {
               cl AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
          SELECT id AS vec_id, cluster, (id = cluster) AS is_canonical FROM cl""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val cents = seedCentroids(emb)
       Similarity.semanticDedup(emb, "vec_id", "embedding", cents, 0.38)
     },
 
@@ -653,18 +665,7 @@ object SimilarityQueries {
       * border attachment — the blob-vs-bridge refinement of single-linkage
       * semantic dedup (the bridge point becomes noise, the chain breaks). */
     Q("q_density_clusters",
-      s"""WITH RECURSIVE
-              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                        FROM asg a JOIN asg b
-                          ON a.cell = b.cell AND a.vec_id < b.vec_id
-                        WHERE round(${duckCos("a.v", "b.v")}, 6) >= 0.38),
+      s"""$cellPairsSql,
               sym AS (SELECT id_a AS id, id_b AS nb FROM pairs
                       UNION ALL SELECT id_b AS id, id_a AS nb FROM pairs),
               degs AS (SELECT id, CAST(count(*) AS BIGINT) AS n_neighbors
@@ -698,8 +699,7 @@ object SimilarityQueries {
          LEFT JOIN degs ON emb.vec_id = degs.id
          LEFT JOIN lab ON emb.vec_id = lab.id""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val cents = seedCentroids(emb)
       Similarity.densityClusters(emb, "vec_id", "embedding", cents, 0.38,
         minPts = 3)
     },
@@ -771,31 +771,8 @@ object SimilarityQueries {
     /** §2b ANN quality evaluation: recall@10 of IVF (nprobe=2 of 8 cells)
       * against exact brute force, for query vectors vec_id < 5. */
     Q("q_ann_recall",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-              q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-              ex AS (SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, e.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY q.query_id
-                          ORDER BY round(${duckCos("e.v", "q.qv")}, 6) DESC, e.vec_id) AS rn
-                 FROM q, e WHERE e.vec_id <> q.query_id) WHERE rn <= 10),
-              asg AS (SELECT vec_id, v, cent_id AS cell FROM (
-                 SELECT e.vec_id, e.v, c.cent_id,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${duckCos("e.v", "c.cv")} DESC, c.cent_id) AS rn
-                 FROM e, c) WHERE rn = 1),
-              probe AS (SELECT query_id, cell FROM (
-                 SELECT q.query_id, c.cent_id AS cell,
-                        ROW_NUMBER() OVER (PARTITION BY q.query_id
-                          ORDER BY round(${duckCos("c.cv", "q.qv")}, 6) DESC, c.cent_id) AS rn
-                 FROM q, c) WHERE rn <= 2),
-              ap AS (SELECT query_id, vec_id FROM (
-                 SELECT p.query_id, a.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY p.query_id
-                          ORDER BY round(${duckCos("a.v", "q.qv")}, 6) DESC, a.vec_id) AS rn
-                 FROM probe p JOIN asg a ON a.cell = p.cell
-                              JOIN q ON q.query_id = p.query_id
-                 WHERE a.vec_id <> p.query_id) WHERE rn <= 10),
+      s"""WITH ${annBaseSql("query_id, vec_id", 10)},
+              ${probedSql("probe", 2, "ap", "query_id, vec_id", 10)},
               n AS (SELECT query_id, count(*) AS n_exact FROM ex GROUP BY 1),
               h AS (SELECT x.query_id, count(*) AS n_hits
                     FROM ex x JOIN ap a
@@ -804,16 +781,7 @@ object SimilarityQueries {
          SELECT n.query_id, n.n_exact, COALESCE(h.n_hits, 0) AS n_hits,
                 round(COALESCE(h.n_hits, 0) / n.n_exact, 6) AS recall
          FROM n LEFT JOIN h USING (query_id)""") { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopKMulti(
-        emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-      val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
-        cents, queries, "query_id", "qv", 10, 2)
+      val (exact, approx) = exactVsIvf(s, d)
       Similarity.recallAtK(exact, approx, "query_id", "vec_id")
     },
 
@@ -828,10 +796,8 @@ object SimilarityQueries {
     Q("q_ivf_nprobe_sweep",
       ivfNprobeSweepOracleSql(Seq(1, 2, 4, 8))) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val cents = seedCentroids(emb)
+      val queries = annQueries(emb)
       val exact = Similarity.bruteForceTopKMulti(
         emb, "vec_id", "embedding", queries, "query_id", "qv", 10).cache()
       val assigned =
@@ -909,16 +875,7 @@ object SimilarityQueries {
       * dyadic-snapped discounts — so it reports WHERE the true neighbors
       * landed in the ANN list, not just how many survived. */
     Q("q_ndcg", ndcgOracleSql(10)) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopKMulti(
-        emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-      val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
-        cents, queries, "query_id", "qv", 10, 2)
+      val (exact, approx) = exactVsIvf(s, d)
       Similarity.ndcgAtK(exact, approx, "query_id", "vec_id", "rnk", 10)
     },
 
@@ -926,8 +883,7 @@ object SimilarityQueries {
       * DB ratio per populated cell of the vec_id<8 seed clustering — the
       * choose-k readout before an IVF or semantic-dedup build. */
     Q("q_davies_bouldin",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-              c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
+      s"""WITH ${centroidsSql(8)},
               asg AS (SELECT vec_id, cent_id, cosv FROM (
                  SELECT e.vec_id, c.cent_id, ${duckCos("e.v", "c.cv")} AS cosv,
                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -951,8 +907,7 @@ object SimilarityQueries {
          QUALIFY ROW_NUMBER() OVER (PARTITION BY cell
                                     ORDER BY ratio DESC, cell_j ASC) = 1""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val cents = seedCentroids(emb)
       Similarity.daviesBouldin(emb, "vec_id", "embedding", cents)
     },
 
@@ -960,16 +915,7 @@ object SimilarityQueries {
       * against the exact list with NO relevance judgments (p=0.9, k=10) —
       * the between-index-builds "how much did the ranking move" monitor. */
     Q("q_rbo", rboOracleSql(10, 0.9)) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val cents = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val exact = Similarity.bruteForceTopKMulti(
-        emb, "vec_id", "embedding", queries, "query_id", "qv", 10)
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-      val approx = Similarity.ivfTopKMulti(assigned, "vec_id", "embedding",
-        cents, queries, "query_id", "qv", 10, 2)
+      val (exact, approx) = exactVsIvf(s, d)
       Similarity.rboAtK(exact, approx, "query_id", "vec_id", "rnk", 10, 0.9)
     },
 
@@ -1095,14 +1041,7 @@ object SimilarityQueries {
     Q("q_image_neardup",
       // Both aHashes from the closed form (brightened twin via
       // LEAST(255, .+4)); hamming = bit_count(xor) over the two halves.
-      """WITH ids AS (SELECT doc_id AS id, CAST(8 + doc_id % 9 AS INTEGER) AS w,
-                        CAST(8 + doc_id % 7 AS INTEGER) AS h
-                      FROM documents),
-              cells AS (SELECT id, w, h, cxs.cx, cys.cy,
-                          (cx * w) // 8 AS sx, (cy * h) // 8 AS sy
-                        FROM ids,
-                             UNNEST(generate_series(0, 7)) AS cxs(cx),
-                             UNNEST(generate_series(0, 7)) AS cys(cy)),
+      imageCellsSql + """
               luma AS (SELECT id, cy*8 + cx AS bit,
                          (299*((7*id + 3*sx + 5*sy) % 256)
                           + 587*((11*id + 2*sx + 7*sy) % 256)
@@ -1156,14 +1095,7 @@ object SimilarityQueries {
     Q("q_image_ahash",
       // aHash from the same closed form: 8x8 nearest-neighbor cells,
       // integer Rec.601 luma, integer mean, unsigned 32-bit halves.
-      """WITH ids AS (SELECT doc_id AS id, CAST(8 + doc_id % 9 AS INTEGER) AS w,
-                        CAST(8 + doc_id % 7 AS INTEGER) AS h
-                      FROM documents),
-              cells AS (SELECT id, w, h, cxs.cx, cys.cy,
-                          (cx * w) // 8 AS sx, (cy * h) // 8 AS sy
-                        FROM ids,
-                             UNNEST(generate_series(0, 7)) AS cxs(cx),
-                             UNNEST(generate_series(0, 7)) AS cys(cy)),
+      imageCellsSql + """
               luma AS (SELECT id, cy*8 + cx AS bit,
                          (299*((7*id + 3*sx + 5*sy) % 256)
                           + 587*((11*id + 2*sx + 7*sy) % 256)
@@ -1223,8 +1155,7 @@ object SimilarityQueries {
       * step per subspace, not just the ranking. */
     Q("q_pq_topk", pqTopkOracleSql()) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val seeds = Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding")
+      val seeds = seedCentroids(emb)
       val codebooks = Similarity.sliceCodebooks(seeds, nSub = 4)
       val assigned = Similarity.pqAssign(emb, "vec_id", "embedding", codebooks)
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))

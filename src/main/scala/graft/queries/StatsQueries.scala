@@ -34,6 +34,36 @@ object StatsQueries {
           .as("view_value"))
   }
 
+  /** `j` (the reference `r(key, n_ref)` and current `c(key, n_cur)` counts
+    * full-outer-joined on `key`), `t` (totals and bin count) and the
+    * Laplace-smoothed PSI contribution per bin — the tail of the
+    * [[Stats.psi]] oracles. */
+  private def psiTailSql(key: String): String =
+    s"""j AS (SELECT $key, COALESCE(n_ref, 0) AS n_ref,
+                     COALESCE(n_cur, 0) AS n_cur
+              FROM r FULL OUTER JOIN c USING ($key)),
+        t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
+                     CAST(sum(n_cur) AS DOUBLE) AS tc,
+                     CAST(count(*) AS DOUBLE) AS k FROM j)
+   SELECT $key, n_ref, n_cur,
+          round((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k), 6)
+            AS p_ref,
+          round((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k), 6)
+            AS p_cur,
+          round(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k)
+                 - (CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))
+                * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k))
+                     / ((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))),
+                6) AS psi_contrib
+   FROM j, t"""
+
+  /** src0's decile (1–10, strict `>` against its edges `q`) of `n_chars`,
+    * for the documents whose source matches `sourceTest`. */
+  private def src0DecileSql(sourceTest: String): String =
+    "SELECT 1 + " +
+      (1 to 9).map(i => s"CAST((n_chars > q[$i]) AS INT)").mkString(" + ") +
+      s" AS decile FROM documents, e WHERE source $sourceTest"
+
   val all: Seq[Q] = Seq(
     /** §2b burstiness audit: per-event-type variance-to-mean ratio of the
       * daily count series — Poisson-stable feeds sit at VMR ≈ 1; bursts and
@@ -93,50 +123,16 @@ object StatsQueries {
       * bin assignment) — the numeric companion to q_psi's categorical form,
       * reusing Stats.psi for the smoothed contribution arithmetic. */
     Q("q_psi_numeric",
-      """WITH e AS (SELECT quantile_cont(n_chars,
+      s"""WITH e AS (SELECT quantile_cont(n_chars,
                        [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q
                     FROM documents WHERE source = 'src0'),
-              rb AS (SELECT 1 + CAST((n_chars > q[1]) AS INT)
-                       + CAST((n_chars > q[2]) AS INT)
-                       + CAST((n_chars > q[3]) AS INT)
-                       + CAST((n_chars > q[4]) AS INT)
-                       + CAST((n_chars > q[5]) AS INT)
-                       + CAST((n_chars > q[6]) AS INT)
-                       + CAST((n_chars > q[7]) AS INT)
-                       + CAST((n_chars > q[8]) AS INT)
-                       + CAST((n_chars > q[9]) AS INT) AS decile
-                     FROM documents, e WHERE source = 'src0'),
-              cb AS (SELECT 1 + CAST((n_chars > q[1]) AS INT)
-                       + CAST((n_chars > q[2]) AS INT)
-                       + CAST((n_chars > q[3]) AS INT)
-                       + CAST((n_chars > q[4]) AS INT)
-                       + CAST((n_chars > q[5]) AS INT)
-                       + CAST((n_chars > q[6]) AS INT)
-                       + CAST((n_chars > q[7]) AS INT)
-                       + CAST((n_chars > q[8]) AS INT)
-                       + CAST((n_chars > q[9]) AS INT) AS decile
-                     FROM documents, e WHERE source <> 'src0'),
+              rb AS (${src0DecileSql("= 'src0'")}),
+              cb AS (${src0DecileSql("<> 'src0'")}),
               r AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_ref
                     FROM rb GROUP BY 1),
               c AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_cur
                     FROM cb GROUP BY 1),
-              j AS (SELECT decile, COALESCE(n_ref, 0) AS n_ref,
-                           COALESCE(n_cur, 0) AS n_cur
-                    FROM r FULL OUTER JOIN c USING (decile)),
-              t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-                           CAST(sum(n_cur) AS DOUBLE) AS tc,
-                           CAST(count(*) AS DOUBLE) AS k FROM j)
-         SELECT decile, n_ref, n_cur,
-                round((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k), 6)
-                  AS p_ref,
-                round((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k), 6)
-                  AS p_cur,
-                round(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k)
-                       - (CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))
-                      * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k))
-                           / ((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))),
-                      6) AS psi_contrib
-         FROM j, t""") { (s, d) =>
+              ${psiTailSql("decile")}""") { (s, d) =>
       val docs = Tables.documents(s, d)
       val ref = docs.filter(col("source") === "src0")
       val cur = docs.filter(col("source") =!= "src0")
@@ -322,27 +318,11 @@ object StatsQueries {
       * src0 (reference) vs the rest of the corpus (current), Laplace-
       * smoothed so one-sided bins stay finite. */
     Q("q_psi",
-      """WITH r AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_ref
+      s"""WITH r AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_ref
                     FROM documents WHERE source = 'src0' GROUP BY 1),
               c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_cur
                     FROM documents WHERE source <> 'src0' GROUP BY 1),
-              j AS (SELECT lang, COALESCE(n_ref, 0) AS n_ref,
-                           COALESCE(n_cur, 0) AS n_cur
-                    FROM r FULL OUTER JOIN c USING (lang)),
-              t AS (SELECT CAST(sum(n_ref) AS DOUBLE) AS tr,
-                           CAST(sum(n_cur) AS DOUBLE) AS tc,
-                           CAST(count(*) AS DOUBLE) AS k FROM j)
-         SELECT lang, n_ref, n_cur,
-                round((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k), 6)
-                  AS p_ref,
-                round((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k), 6)
-                  AS p_cur,
-                round(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k)
-                       - (CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))
-                      * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (tr + 0.5 * k))
-                           / ((CAST(n_cur AS DOUBLE) + 0.5) / (tc + 0.5 * k))),
-                      6) AS psi_contrib
-         FROM j, t""") { (s, d) =>
+              ${psiTailSql("lang")}""") { (s, d) =>
       val docs = Tables.documents(s, d)
       Stats.psi(docs.filter(col("source") === "src0"),
         docs.filter(col("source") =!= "src0"), "lang")
@@ -550,25 +530,8 @@ object StatsQueries {
       * the SAME per-distinct-value histogram (KS flags the worst gap, W1
       * ranks how much moved how far). */
     Q("q_wasserstein",
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      LEAD(v) OVER (ORDER BY v) - v AS gap,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
+      s"""${clickPurchaseEcdfSql("CAST(value AS DOUBLE)",
+          s"$cumAbSql, LEAD(v) OVER (ORDER BY v) - v AS gap")}
          SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
                 round(sum(abs(cuma / na - cumb / nb) * gap), 6) AS w1
          FROM c""") { (s, d) =>
@@ -580,21 +543,7 @@ object StatsQueries {
       * comparison — dominance probability on [−1,1], reported UNROUNDED
       * (one exact-integer division; the rational-halves rule). */
     Q("q_cliffs_delta",
-      """WITH x AS (SELECT value AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
+      s"""${clickPurchaseEcdfSql("value", runningSumSql("cb", "cumb"))}
          SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
                 (CAST(sum(ca * (cumb - cb)) AS DOUBLE)
                   - CAST(sum(ca * (nb - cumb)) AS DOUBLE))
@@ -649,25 +598,8 @@ object StatsQueries {
       * p = ∞/1/2 drift profile beside q_ks_statistic and q_wasserstein,
       * on the SAME per-distinct-value histogram shape. */
     Q("q_energy_dist",
-      """WITH x AS (SELECT CAST(value AS DOUBLE) AS v,
-                      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS ca,
-                      SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS cb
-                    FROM events
-                    WHERE event_type IN ('click', 'purchase')
-                      AND value IS NOT NULL
-                    GROUP BY 1),
-              c AS (SELECT v, ca, cb,
-                      SUM(ca) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cuma,
-                      SUM(cb) OVER (ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cumb,
-                      LEAD(v) OVER (ORDER BY v) - v AS gap,
-                      SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-                    FROM x)
+      s"""${clickPurchaseEcdfSql("CAST(value AS DOUBLE)",
+          s"$cumAbSql, LEAD(v) OVER (ORDER BY v) - v AS gap")}
          SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
                 round(sum(2.0 * (cuma / na - cumb / nb)
                   * (cuma / na - cumb / nb) * gap), 6) AS e_dist

@@ -13,21 +13,10 @@ object TextQueries {
   import Shared._
 
   /** Generated oracle for q_textrank: the SAME unrolled 3-iteration
-    * PageRank recurrence as [[pageRankOracleSql]], over the word
-    * co-occurrence graph (adjacent-token pairs with support >= 5,
-    * undirected, both directions). */
-  private def textRankOracleSql: String = {
-    val iters = (1 to 3).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (SELECT e.dst AS id, SUM($prev.rank / od.outdeg) AS c
-                  FROM e JOIN $prev ON e.src = $prev.id
-                         JOIN od ON e.src = od.src
-                  GROUP BY e.dst),
-          r$i AS (SELECT nodes.id,
-                         (CAST(1 AS DOUBLE) - 0.85) / (SELECT n FROM nn)
-                           + 0.85 * COALESCE(c$i.c, CAST(0 AS DOUBLE)) AS rank
-                  FROM nodes LEFT JOIN c$i USING (id))"""
-    }.mkString(",\n")
+    * PageRank recurrence as q_pagerank ([[Shared.uniformPageRankSql]]),
+    * over the word co-occurrence graph (adjacent-token pairs with
+    * support >= 5, undirected, both directions). */
+  private def textRankOracleSql: String =
     s"""WITH tok AS (SELECT $duckTokens AS t
                      FROM documents),
             bc AS (SELECT t[i] AS w1, t[i+1] AS w2, count(*) AS c
@@ -36,18 +25,9 @@ object TextQueries {
             ep AS (SELECT DISTINCT least(w1, w2) AS src,
                           greatest(w1, w2) AS dst
                    FROM bc WHERE c >= 5 AND w1 <> w2),
-            e AS (SELECT src, dst FROM ep
-                  UNION ALL SELECT dst AS src, src AS dst FROM ep),
-            nodes AS (SELECT DISTINCT src AS id FROM e),
-            nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-            od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-                   FROM e GROUP BY src),
-            r0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS rank
-                   FROM nodes),
-            $iters
+            $uniformPageRankSql
         SELECT id AS keyword, round(rank, 9) AS rank FROM r3
         ORDER BY rank DESC, keyword ASC LIMIT 30"""
-  }
 
   /** Generated BPE-training oracle: the same unrolled merge rounds as
     * [[operators.TextAnalytics.bpeTrain]] over the U+001F-wrapped vocab.
@@ -91,10 +71,10 @@ object TextQueries {
         ${selects.mkString("\n        UNION ALL ")}"""
   }
 
-  /** Generated BPE-encode oracle: the training CTE chain, then every
-    * document wrapped and pushed through the same rank-ordered replace
-    * chain (the b_r winners are 1-row CTEs cross-joined in). */
-  private def bpeEncodeOracleSql(rounds: Int): String = {
+  /** The training CTE chain, then every document wrapped and pushed
+    * through the same rank-ordered replace chain (the b_r winners are
+    * 1-row CTEs cross-joined in): `e(doc_id, n_words, n_subwords)`. */
+  private def bpeEncodedSql(rounds: Int): String = {
     val S = "chr(31)"
     val enc = (1 to rounds).foldLeft("wd.wd")((acc, r) =>
       s"replace($acc, $S || b$r.a || $S || $S || b$r.b || $S, " +
@@ -109,33 +89,23 @@ object TextQueries {
         e AS (SELECT wd.doc_id, wd.n_words,
                      (length($enc) - length(replace($enc, $S, ''))) // 2
                        AS n_subwords
-              FROM wd, $froms)
+              FROM wd, $froms)"""
+  }
+
+  /** Generated BPE-encode oracle: [[bpeEncodedSql]] per document. */
+  private def bpeEncodeOracleSql(rounds: Int): String =
+    s"""${bpeEncodedSql(rounds)}
    SELECT doc_id, n_words, CAST(n_subwords AS BIGINT) AS n_subwords,
           round(CASE WHEN n_words > 0
             THEN CAST(n_subwords AS DOUBLE) / n_words END, 6)
             AS subwords_per_word
    FROM e"""
-  }
 
   /** Generated q_tokenizer_fertility oracle: the q_bpe_encode CTE chain
     * (same trained merges, same wrapped-word replace encoding) joined to
     * each doc's language + char count and aggregated per language. */
-  private def fertilityOracleSql(rounds: Int): String = {
-    val S = "chr(31)"
-    val enc = (1 to rounds).foldLeft("wd.wd")((acc, r) =>
-      s"replace($acc, $S || b$r.a || $S || $S || b$r.b || $S, " +
-        s"$S || b$r.a || b$r.b || $S)")
-    val froms = (1 to rounds).map(r => s"b$r").mkString(", ")
-    s"""WITH ${bpeCtes(rounds)},
-        wd AS (SELECT doc_id, CAST(len($duckTokens) AS BIGINT) AS n_words,
-                      array_to_string(list_transform($duckTokens,
-                        w -> regexp_replace(w, '(.)', $S || '\\1' || $S, 'g')),
-                        ' ') AS wd
-               FROM documents),
-        e AS (SELECT wd.doc_id, wd.n_words,
-                     (length($enc) - length(replace($enc, $S, ''))) // 2
-                       AS n_subwords
-              FROM wd, $froms),
+  private def fertilityOracleSql(rounds: Int): String =
+    s"""${bpeEncodedSql(rounds)},
         j AS (SELECT d.lang, e.n_words,
                      CAST(e.n_subwords AS BIGINT) AS n_subwords, d.n_chars
               FROM e JOIN documents d ON e.doc_id = d.doc_id)
@@ -150,7 +120,6 @@ object TextQueries {
             THEN CAST(SUM(n_chars) AS DOUBLE)
                / CAST(SUM(n_subwords) AS DOUBLE) END, 6) AS chars_per_subword
    FROM j GROUP BY 1"""
-  }
 
   /** Generated oracle for q_lang_ngram: profile literals come from the same
     * TextFunctions.trigramProfiles, so Spark and DuckDB score identical
@@ -186,16 +155,55 @@ object TextQueries {
        FROM g"""
   }
 
+  /** `pres` (distinct doc × lang × token), per-(lang, token) document
+    * counts `pc`, class sizes `cd`, token document counts `td` and the
+    * corpus size `nd`: the presence contingency of q_chi2_tokens and
+    * q_mi_tokens. */
+  private val tokenPresenceSql: String =
+    s"""WITH pres AS (SELECT DISTINCT doc_id, lang, token FROM documents,
+                          UNNEST($duckTokens) AS u(token)),
+              pc AS (SELECT lang, token,
+                            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS a
+                     FROM pres GROUP BY 1, 2),
+              cd AS (SELECT lang, COUNT(*) AS n_class
+                     FROM documents GROUP BY 1),
+              td AS (SELECT token, COUNT(DISTINCT doc_id) AS n_token
+                     FROM pres GROUP BY 1),
+              nd AS (SELECT COUNT(*) AS n_docs FROM documents),"""
+
+  /** `tok` … `dfreq`: document lengths, corpus stats and the term
+    * frequencies of the literal query terms data/spark/merge — the BM25
+    * inputs of q_bm25 and q_rrf. */
+  private val bm25TermStatsSql: String =
+    s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
+              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
+              corpus AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+                                avg(dl) AS avgdl FROM lens),
+              tf AS (SELECT doc_id, term, count(*) AS tf
+                     FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
+                     WHERE term IN ('data', 'spark', 'merge')
+                     GROUP BY doc_id, term),
+              dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term)"""
+
+  /** The `limit` best documents by 6dp BM25 score (k1 1.2, b 0.75) over
+    * [[bm25TermStatsSql]]. */
+  private def bm25TopSql(limit: Int): String =
+    s"""SELECT doc_id, score FROM (
+           SELECT f.doc_id,
+                  round(sum(ln(1.0 + (c.n_docs - d.df + 0.5) / (d.df + 0.5))
+                    * f.tf * 2.2
+                    / (f.tf + 1.2 * (0.25 + 0.75 * l.dl / c.avgdl))), 6) AS score
+           FROM tf f
+           JOIN dfreq d ON f.term = d.term
+           JOIN lens l ON f.doc_id = l.doc_id
+           CROSS JOIN corpus c
+           GROUP BY f.doc_id)
+         ORDER BY score DESC, doc_id ASC LIMIT $limit"""
+
   /** §2b language-ID heuristic vs declared lang. */
   val langId: Q = Q("q_lang_id",
-    """SELECT doc_id, lang AS declared_lang,
-                CASE WHEN (CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) >= 0.05
-                     THEN 'en' ELSE 'unknown' END AS lang_guess
-         FROM (SELECT doc_id, lang,
-                 CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS DOUBLE) AS n,
-                 CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                   t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                   AS BIGINT) AS ns
+    s"""SELECT doc_id, lang AS declared_lang, $stopwordGuessSql AS lang_guess
+         FROM (SELECT doc_id, lang, $stopwordCountsSql
                FROM documents)""") { (s, d) =>
     Tables.documents(s, d).select(col("doc_id"), col("lang").as("declared_lang"),
       TextFunctions.langIdHeuristic(col("text")).as("lang_guess"))
@@ -245,9 +253,9 @@ object TextQueries {
 
     /** §2b text statistics: token/stopword/char counts. */
     Q("q_token_stats",
-      """SELECT doc_id,
-                CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS BIGINT) AS n_tokens,
-                CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
+      s"""SELECT doc_id,
+                CAST(len($duckTokens) AS BIGINT) AS n_tokens,
+                CAST(len(list_filter($duckTokens,
                   t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
                   AS BIGINT) AS n_stopwords,
                 CAST(length(text) AS BIGINT) AS n_chars_actual
@@ -261,19 +269,8 @@ object TextQueries {
 
     /** §2b quality scoring (deterministic blend, rounded). */
     Q("q_text_quality",
-      """SELECT doc_id, round(
-           0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-         + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0, 1.0)
-         + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                    THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END) < 0.2
-                    THEN 1.0 ELSE 0.0 END), 6) AS quality
-         FROM (SELECT doc_id, text,
-                 CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS DOUBLE) AS n,
-                 CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                   t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                   AS BIGINT) AS ns,
-                 length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
+      s"""SELECT doc_id, $qualityBlendSql AS quality
+         FROM (SELECT doc_id, $qualityInputsSql
                FROM documents)""") { (s, d) =>
       Tables.documents(s, d).select(col("doc_id"),
         round(TextFunctions.qualityScore(col("text")), 6).as("quality"))
@@ -507,19 +504,8 @@ object TextQueries {
     /** §2b quantile-threshold quality filter: drop the bottom quartile of
       * quality score within each language (rank-based — no interpolation). */
     Q("q_quality_filter",
-      """WITH q AS (SELECT doc_id, round(
-              0.4 * (CASE WHEN n BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-            + 0.3 * least((CASE WHEN n > 0 THEN ns / n ELSE 0.0 END) * 5.0, 1.0)
-            + 0.3 * (CASE WHEN (CASE WHEN length(text) > 0
-                       THEN np / CAST(length(text) AS DOUBLE) ELSE 0.0 END) < 0.2
-                       THEN 1.0 ELSE 0.0 END), 6) AS quality
-            FROM (SELECT doc_id, text,
-                    CAST(len(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END) AS DOUBLE) AS n,
-                    CAST(len(list_filter(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split_regex(trim(text), '\s+') END,
-                      t -> t IN ('the','a','an','and','or','of','to','in','is','it')))
-                      AS BIGINT) AS ns,
-                    length(text) - length(regexp_replace(text,
-                      '[.,;:!?''"()\[\]{}-]', '', 'g')) AS np
+      s"""WITH q AS (SELECT doc_id, $qualityBlendSql AS quality
+            FROM (SELECT doc_id, $qualityInputsSql
                   FROM documents)),
            r AS (SELECT d.doc_id, d.lang, q.quality,
                    percent_rank() OVER (PARTITION BY d.lang
@@ -571,9 +557,7 @@ object TextQueries {
       s"""WITH t AS (SELECT doc_id, $duckTokens AS toks FROM documents),
               e AS (SELECT doc_id, UNNEST(toks) AS token FROM t),
               s AS (SELECT doc_id,
-                      SUM(list_extract($classifierWeightsSql,
-                        CAST(CAST(('0x' || substring(md5('13:' || token), 1, 15))
-                          AS BIGINT) % 64 AS INTEGER) + 1)) AS sw
+                      $classifierTokenSumSql
                     FROM e GROUP BY doc_id)
          SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
                 $classifierBiasSql + COALESCE(s.sw, 0.0) AS logit,
@@ -830,27 +814,8 @@ object TextQueries {
     /** §2b BM25 ranked retrieval: top-20 documents for a literal query-term
       * set — early term filter, broadcast stats, TakeOrdered top-k. */
     Q("q_bm25",
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
-              corpus AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                                avg(dl) AS avgdl FROM lens),
-              tf AS (SELECT doc_id, term, count(*) AS tf
-                     FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
-                     WHERE term IN ('data', 'spark', 'merge')
-                     GROUP BY doc_id, term),
-              dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-         SELECT doc_id, score FROM (
-           SELECT f.doc_id,
-                  round(sum(ln(1.0 + (c.n_docs - d.df + 0.5) / (d.df + 0.5))
-                    * f.tf * 2.2
-                    / (f.tf + 1.2 * (0.25 + 0.75 * l.dl / c.avgdl))), 6) AS score
-           FROM tf f
-           JOIN dfreq d ON f.term = d.term
-           JOIN lens l ON f.doc_id = l.doc_id
-           CROSS JOIN corpus c
-           GROUP BY f.doc_id)
-         ORDER BY score DESC, doc_id ASC
-         LIMIT 20""") { (s, d) =>
+      s"""$bm25TermStatsSql
+         ${bm25TopSql(20)}""") { (s, d) =>
       TextAnalytics.bm25(Tables.documents(s, d), "doc_id", "text",
         Seq("data", "spark", "merge"), 20)
     },
@@ -1153,16 +1118,7 @@ object TextQueries {
       * per lang by document-level presence — the vocabulary a language-ID
       * profile actually wants (raw frequency ranks filler words first). */
     Q("q_chi2_tokens",
-      s"""WITH pres AS (SELECT DISTINCT doc_id, lang, token FROM documents,
-                          UNNEST($duckTokens) AS u(token)),
-              pc AS (SELECT lang, token,
-                            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS a
-                     FROM pres GROUP BY 1, 2),
-              cd AS (SELECT lang, COUNT(*) AS n_class
-                     FROM documents GROUP BY 1),
-              td AS (SELECT token, COUNT(DISTINCT doc_id) AS n_token
-                     FROM pres GROUP BY 1),
-              nd AS (SELECT COUNT(*) AS n_docs FROM documents),
+      s"""$tokenPresenceSql
               cells AS (SELECT pc.lang, pc.token, pc.a,
                           round(CASE WHEN
                               CAST(td.n_token AS DOUBLE)
@@ -1215,9 +1171,7 @@ object TextQueries {
                        FROM t GROUP BY source),
               e AS (SELECT doc_id, UNNEST(toks) AS token FROM t),
               sc AS (SELECT doc_id,
-                       SUM(list_extract($classifierWeightsSql,
-                         CAST(CAST(('0x' || substring(md5('13:' || token), 1, 15))
-                           AS BIGINT) % 64 AS INTEGER) + 1)) AS sw
+                       $classifierTokenSumSql
                      FROM e GROUP BY doc_id),
               q AS (SELECT t.source,
                       round(avg($classifierBiasSql + COALESCE(sc.sw, 0.0)), 6)
@@ -1329,16 +1283,7 @@ object TextQueries {
       * sibling of q_chi2_tokens over the same presence contingency — the 5
       * highest-MI tokens per language. */
     Q("q_mi_tokens",
-      s"""WITH pres AS (SELECT DISTINCT doc_id, lang, token FROM documents,
-                          UNNEST($duckTokens) AS u(token)),
-              pc AS (SELECT lang, token,
-                            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS a
-                     FROM pres GROUP BY 1, 2),
-              cd AS (SELECT lang, COUNT(*) AS n_class
-                     FROM documents GROUP BY 1),
-              td AS (SELECT token, COUNT(DISTINCT doc_id) AS n_token
-                     FROM pres GROUP BY 1),
-              nd AS (SELECT COUNT(*) AS n_docs FROM documents),
+      s"""$tokenPresenceSql
               cells AS (SELECT pc.lang, pc.token, pc.a,
                                td.n_token, cd.n_class, nd.n_docs,
                                td.n_token - pc.a AS b,
@@ -1459,28 +1404,8 @@ object TextQueries {
       * and the embedding cosine top-50 over the shared id space — rank-only
       * fusion over two bounded candidate lists. */
     Q("q_rrf",
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS t FROM documents),
-              lens AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM tok),
-              corpus AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                                avg(dl) AS avgdl FROM lens),
-              tf AS (SELECT doc_id, term, count(*) AS tf
-                     FROM (SELECT doc_id, UNNEST(t) AS term FROM tok)
-                     WHERE term IN ('data', 'spark', 'merge')
-                     GROUP BY doc_id, term),
-              dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-              bm AS (SELECT doc_id, score FROM (
-                       SELECT f.doc_id,
-                              round(sum(ln(1.0 + (c.n_docs - d.df + 0.5)
-                                  / (d.df + 0.5))
-                                * f.tf * 2.2
-                                / (f.tf + 1.2 * (0.25 + 0.75 * l.dl
-                                    / c.avgdl))), 6) AS score
-                       FROM tf f
-                       JOIN dfreq d ON f.term = d.term
-                       JOIN lens l ON f.doc_id = l.doc_id
-                       CROSS JOIN corpus c
-                       GROUP BY f.doc_id)
-                     ORDER BY score DESC, doc_id ASC LIMIT 50),
+      s"""$bm25TermStatsSql,
+              bm AS (${bm25TopSql(50)}),
               bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC,
                         doc_id ASC) AS ra
                       FROM bm),

@@ -134,17 +134,6 @@ object EventStreams {
         round(sum(half(pw) + half(col("p_ref"))), 6).as("jsd"))
   }
 
-  /** Session windows with a gap timeout (streaming-native sessionization;
-    * the batch twin is q_sessionize's lag/sum formulation in
-    * [[graft.queries.EventQueries]]). */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"), col("user_id"),
-        col("n_events"))
-
   /** Session spans via Spark's native `session_window`: one row per
     * (user, session) with start (first event ts), end (last event ts + gap)
     * and aggregates. Works on static and streaming frames; the batch twin

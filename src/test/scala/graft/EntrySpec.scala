@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
 import graft.queries.Q
 import graft.queries.Shared.{duckSentences, duckTokens, duckTokensOf}
 
@@ -20,6 +23,29 @@ class EntrySpec extends SparkSuite {
   test("every oracle is non-blank") {
     val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
     assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+  }
+
+  test("every oracle matches its pinned digest in oracle_digests.tsv") {
+    // One line per query: the name, a tab, and the SHA-256 of its oracle
+    // with every whitespace run collapsed to one space. Folding oracles
+    // into shared SQL generators must leave every digest unchanged; an
+    // intended oracle edit updates its line in the same change.
+    def digest(sql: String): String =
+      MessageDigest.getInstance("SHA-256")
+        .digest(sql.replaceAll("\\s+", " ").trim.getBytes(UTF_8))
+        .map(b => f"$b%02x").mkString
+    val src = scala.io.Source.fromResource("oracle_digests.tsv")(
+      scala.io.Codec.UTF8)
+    val pinned = try src.getLines().map(_.split("\t"))
+      .map(a => a(0) -> a(1)).toMap finally src.close()
+    assert(pinned.keySet == SparkEntry.oracleSql.keySet,
+      s"unpinned: ${SparkEntry.oracleSql.keySet -- pinned.keySet}, " +
+        s"pinned but gone: ${pinned.keySet -- SparkEntry.oracleSql.keySet}")
+    val changed = SparkEntry.oracleSql.collect {
+      case (name, sql) if digest(sql) != pinned(name) => name
+    }
+    assert(changed.isEmpty,
+      s"oracles that differ from their pinned text: ${changed.toSeq.sorted}")
   }
 
   test("a registry with a duplicate name fails its require") {

@@ -176,6 +176,33 @@ class EventAnalyticsSpec extends SparkSuite {
       2L -> ((2L, 1L, 1L, 0.833333, 0.361111, 0.434598))))
   }
 
+  test("kaplanMeier/nelsonAalen: empty events give no rows; one terminal event one step") {
+    val empty = Seq.empty[(Long, Timestamp, Long, String)]
+      .toDF("user_id", "ts", "event_id", "event_type")
+    for (f <- Seq(EventAnalytics.kaplanMeier _, EventAnalytics.nelsonAalen _))
+      assert(f(empty, "user_id", "ts", "event_id", "event_type", "purchase")
+        .collect().isEmpty)
+    // one user whose only event is terminal: a day-0 death, n_risk 1
+    val one = Seq((1L, ts(1), 1L, "purchase"))
+      .toDF("user_id", "ts", "event_id", "event_type")
+    val km = EventAnalytics.kaplanMeier(one, "user_id", "ts", "event_id",
+      "event_type", "purchase").collect()
+    assert(km.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getDouble(4))).toSeq === Seq((0L, 1L, 1L, 0L, 0.0)))
+    val na = EventAnalytics.nelsonAalen(one, "user_id", "ts", "event_id",
+      "event_type", "purchase").collect()
+    assert(na.map(r => (r.getLong(0), r.getLong(1), r.getDouble(4),
+      r.getDouble(5), r.getDouble(6))).toSeq ===
+      Seq((0L, 1L, 1.0, 1.0, 0.367879)))
+    // a lone censored lifetime has no event time: no step at all
+    val censored = Seq((1L, ts(1), 1L, "view"))
+      .toDF("user_id", "ts", "event_id", "event_type")
+    assert(EventAnalytics.kaplanMeier(censored, "user_id", "ts", "event_id",
+      "event_type", "purchase").collect().isEmpty)
+    assert(EventAnalytics.nelsonAalen(censored, "user_id", "ts", "event_id",
+      "event_type", "purchase").collect().isEmpty)
+  }
+
   test("associationRules: hand-checked support/confidence/lift, duplicates collapse") {
     // u1:{a,b}, u2:{a,b,c}, u3:{a} — the repeated (u1,a) row must not count twice
     val ev = Seq((1L, "a"), (1L, "a"), (1L, "b"), (2L, "a"), (2L, "b"),

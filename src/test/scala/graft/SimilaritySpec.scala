@@ -598,28 +598,6 @@ class SimilaritySpec extends SparkSuite {
     }
   }
 
-  test("kCenterSelectCached equals the recompute variant on the fixture and real embeddings") {
-    val e = Seq(
-      (0L, Array(1.0f, 0.0f)),
-      (1L, Array(0.0f, 1.0f)),
-      (2L, Array(1.0f, 0.01f)),
-      (3L, Array(-1.0f, 0.0f))
-    ).toDF("vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq
-    assert(rows(Similarity.kCenterSelectCached(e, "vec_id", "embedding", 4))
-      === rows(Similarity.kCenterSelect(e, "vec_id", "embedding", 4)))
-    // real embeddings at a k where both paths are cheap: identical picks
-    // AND identical 6dp radii (min over doubles is exact, so the cached
-    // running minimum cannot drift from the recomputed least())
-    val emb = Tables.embeddings(spark, sf).filter($"vec_id" < 200)
-    assert(rows(Similarity.kCenterSelectCached(emb, "vec_id", "embedding", 12))
-      === rows(Similarity.kCenterSelect(emb, "vec_id", "embedding", 12)))
-    intercept[IllegalArgumentException] {
-      Similarity.kCenterSelectCached(e.filter($"vec_id" < 0), "vec_id", "embedding", 2)
-    }
-  }
-
   test("powerIterationPCA: axis-aligned covariance recovers the dominant axis") {
     // centered data, diagonal cov: var(x)=5/3, var(y)=1/12, trace=7/4
     val e = Seq(

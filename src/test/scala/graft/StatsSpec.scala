@@ -1630,6 +1630,52 @@ class StatsSpec extends SparkSuite {
     assert(rd.isNullAt(4), "r_yz = 1 → zero denominator → null")
   }
 
+  test("friedman/page/quade: empty cells and a single cell do not throw") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, String, Double)].toDF("b", "t", "v")
+    assert(Stats.friedmanTest(empty, "b", "t", "v").collect().isEmpty)
+    assert(Stats.quadeTest(empty, "b", "t", "v").collect().isEmpty)
+    val pe = Stats.pageTrendTest(empty, "b", "t", "v").collect()
+    assert(pe.length === 1 && pe.head.getLong(0) === 0L)
+    assert((1 to 4).forall(pe.head.isNullAt), "no blocks: k, L, E, z null")
+    // one block, one treatment: ranks exist, every statistic is null
+    val one = Seq((1L, "x", 2.0)).toDF("b", "t", "v")
+    val f = Stats.friedmanTest(one, "b", "t", "v").collect()
+    assert(f.length === 1 && f.head.getDouble(2) === 1.0 && f.head.isNullAt(6))
+    val q = Stats.quadeTest(one, "b", "t", "v").collect()
+    assert(q.length === 1 && q.head.getDouble(2) === 0.0 && q.head.isNullAt(5))
+    val p = Stats.pageTrendTest(one, "b", "t", "v").collect().head
+    assert(p.getLong(0) === 1L && p.getLong(1) === 1L && p.isNullAt(4))
+  }
+
+  test("groupKsDrift/groupKuiperDrift: empty input no rows, one group null") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long)].toDF("g", "v")
+    assert(Stats.groupKsDrift(empty, "g", "v").collect().isEmpty)
+    assert(Stats.groupKuiperDrift(empty, "g", "v").collect().isEmpty)
+    val one = Seq(("a", 3L)).toDF("g", "v")
+    val ks = Stats.groupKsDrift(one, "g", "v").collect().head
+    val kv = Stats.groupKuiperDrift(one, "g", "v").collect().head
+    for (r <- Seq(ks, kv)) {
+      assert(r.getLong(1) === 1L && r.getLong(2) === 0L)
+      assert(r.isNullAt(3), "a group with no rest has no drift statistic")
+    }
+  }
+
+  test("welchAnova/tukeyHsd/cochranC: empty and one-row inputs do not throw") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Double)].toDF("g", "v")
+    val one = Seq(("a", 1.5)).toDF("g", "v")
+    for (df <- Seq(empty, one)) {
+      // cochranC and welchAnova need groups of n > 1: none qualify
+      val c = Stats.cochranC(df, "g", "v").collect().head
+      assert(c.getLong(0) === 0L && (1 to 4).forall(c.isNullAt))
+      val w = Stats.welchAnova(df, "g", "v").collect()
+      assert(w.length === 1 && (0 to 4).forall(w.head.isNullAt))
+      assert(Stats.tukeyHsd(df, "g", "v").collect().isEmpty, "no pairs")
+    }
+  }
+
   test("chiSquareTest/gTest: vacuous contingency yields null stat, dof and p") {
     import spark.implicits._
     // empty and all-null inputs used to emit chi2 = 0 with

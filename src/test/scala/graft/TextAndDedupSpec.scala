@@ -645,6 +645,16 @@ class TextAndDedupSpec extends SparkSuite {
     assert(admitted === Set(1L, 3L, 4L, 5L))
   }
 
+  test("jaccardPairsFrom/Prefix/containmentPairs: empty and one-set inputs give no pairs") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "token")
+    val one = Seq((1L, "a"), (1L, "b")).toDF("doc_id", "token")
+    for (sets <- Seq(empty, one)) {
+      assert(Dedup.jaccardPairsFrom(sets, "doc_id", 0.3).collect().isEmpty)
+      assert(Dedup.jaccardPairsPrefix(sets, "doc_id", 0.3).collect().isEmpty)
+      assert(Dedup.containmentPairs(sets, "doc_id", 0.5).collect().isEmpty)
+    }
+  }
+
   test("containmentPairs scores a subset at 1.0 where Jaccard stays low") {
     val d = Seq(
       (0L, "alpha beta"),

@@ -582,4 +582,23 @@ class TimeSeriesSpec extends SparkSuite {
     assert(out("f").getTimestamp(3).getTime === 0L)
   }
 
+  test("daily-grid operators: empty events no rows, one event does not throw") {
+    import org.apache.spark.sql.functions._
+    val empty = Seq.empty[(String, Long)].toDF("g", "us")
+      .withColumn("ts", expr("timestamp_micros(us)")).drop("us")
+    val one = Seq(("a", 0L)).toDF("g", "us")
+      .withColumn("ts", expr("timestamp_micros(us)")).drop("us")
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => Long)] = Seq(
+      "pinballEval" -> (TimeSeries.pinballEval(_, "g", "ts").count()),
+      "theilsU2" -> (TimeSeries.theilsU2(_, "g", "ts").count()),
+      "gumbelBlockMax" -> (TimeSeries.gumbelBlockMax(_, "g", "ts").count()),
+      "pageHinkleyDaily" -> (TimeSeries.pageHinkleyDaily(_, "g", "ts").count()))
+    for ((name, run) <- ops) assert(run(empty) === 0L, name)
+    // one day of one key: no week-ago or day-ago forecast day, one block
+    // (gumbel needs two), so only Page–Hinkley reports the key
+    val oneRows = ops.map { case (name, run) => name -> run(one) }.toMap
+    assert(oneRows === Map("pinballEval" -> 0L, "theilsU2" -> 0L,
+      "gumbelBlockMax" -> 0L, "pageHinkleyDaily" -> 1L))
+  }
+
 }
