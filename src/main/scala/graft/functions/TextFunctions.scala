@@ -99,12 +99,12 @@ object TextFunctions {
 
   /** N-gram language guess from per-language score COLUMNS (cheap double
     * refs, safe to duplicate in the when-chain): the language with the best
-    * ratio, `unknown` below `minScore`; ties break to the first profile in
-    * declaration order. */
-  def langGuessFromScores(scored: Seq[(String, Column)], minScore: Double = 0.05): Column = {
+    * ratio, `unknown` below a 0.05 score; ties break to the first profile
+    * in declaration order. */
+  def langGuessFromScores(scored: Seq[(String, Column)]): Column = {
     val bestScore = scored.map(_._2).reduce((a, b) => greatest(a, b))
     scored.foldRight(lit("unknown")) { case ((lang, s), acc) =>
-      when(s === bestScore && bestScore >= minScore, lit(lang)).otherwise(acc)
+      when(s === bestScore && bestScore >= 0.05, lit(lang)).otherwise(acc)
     }
   }
 
@@ -195,10 +195,10 @@ object TextFunctions {
     when(m <= 0, array().cast("array<string>")).otherwise(joined)
   }
 
-  /** One-shot form from raw text (small inputs / single use): tokenizes
-    * inline, which [[shinglesOf]]'s slices evaluate n times per row —
-    * table scans should stage the token array first. */
-  def shingles(text: Column, n: Int = 3): Column = shinglesOf(tokens(text), n)
+  /** One-shot 3-gram form from raw text (small inputs / single use):
+    * tokenizes inline, which [[shinglesOf]]'s slices evaluate 3 times per
+    * row — table scans should stage the token array first. */
+  def shingles(text: Column): Column = shinglesOf(tokens(text), 3)
 
   /** Regex sentence segmentation: split on terminator runs ([.!?]+)
     * followed by whitespace or end-of-text, dropping empty segments.

@@ -141,7 +141,7 @@ object Agreement {
     * same-same coincidence mass:
     *   α = 1 − (n−1)(n − o) / (n² − Σ_c n_c²)
     * n and n_c are integers, but o divides by a per-item (m_i−1), so its
-    * sum is order-dependent float noise → α ROUNDS at `roundScale`
+    * sum is order-dependent float noise → α ROUNDS at 6 decimals
     * (convention: round noise-carrying values only).
     *
     * Shape: the same sparse (item, label) cell count as kappa, a per-item
@@ -150,7 +150,7 @@ object Agreement {
     * it is computed once (cached) and self-joined on the item key —
     * shuffle ∝ distinct cells either way. */
   def krippendorffAlpha(ratings: DataFrame, itemCol: String,
-                        labelCol: String, roundScale: Int = 6): DataFrame = {
+                        labelCol: String): DataFrame = {
     val cells = ratings
       .filter(col(itemCol).isNotNull && col(labelCol).isNotNull)
       .groupBy(col(itemCol).as("__i"), col(labelCol).as("__c"))
@@ -173,12 +173,12 @@ object Agreement {
     oAndN.crossJoin(broadcast(nc2)).crossJoin(broadcast(items))
       .select(col("n_items"), col("k_categories"),
         col("__n").as("n_pairable"),
-        round(col("__o"), roundScale).as("observed_coincidence"),
+        round(col("__o"), 6).as("observed_coincidence"),
         round(when(col("__n") * col("__n") =!= col("__snc2"),
           lit(1.0) - (col("__n") - 1L).cast("double")
             * (col("__n").cast("double") - col("__o"))
             / (col("__n") * col("__n") - col("__snc2")).cast("double")),
-          roundScale).as("alpha"))
+          6).as("alpha"))
   }
 
   /** Kendall's coefficient of concordance W, tie-corrected (Kendall &
@@ -263,7 +263,8 @@ object Agreement {
     * aggregator — learn each RATER's confusion matrix from the data and
     * re-score every item by how much each rater's vote is actually worth,
     * so two colluding spammers stop outvoting one reliable annotator.
-    * Init = majority vote (lexicographic tiebreak); each iteration then
+    * Init = majority vote (lexicographic tiebreak); each of two iterations
+    * then
     * (1) counts confusion n(r, c→j) and class priors against the current
     * labels, (2) Laplace-smooths and re-labels every item with the
     * maximum-a-posteriori class under the plug-in model
@@ -276,7 +277,7 @@ object Agreement {
     * (10⁶)^(m+1) ≤ 10³⁶ for m ≤ 5, inside decimal128 — compared exactly.
     * A float product/log-sum would make the argmax flip on last-ulp noise
     * between engines and between partition orders; the integer form makes
-    * the whole fixed-point iteration bit-deterministic. `maxRatings ≤ 5`
+    * the whole fixed-point iteration bit-deterministic. At most 5
     * ratings per item enter (the caller supplies 1-based `ordCol`; the
     * decimal-width bound, documented above, is why).
     *
@@ -290,15 +291,11 @@ object Agreement {
     * whole DAG and the scan count grows geometrically. Emits one row per
     * item: majority_label, ds_label, changed. */
   def dawidSkene(ratings: DataFrame, itemCol: String, raterCol: String,
-                 labelCol: String, ordCol: String, iters: Int = 2,
-                 maxRatings: Int = 5): DataFrame = {
-    require(iters >= 1, s"need >= 1 iteration, got $iters")
-    require(maxRatings >= 1 && maxRatings <= 5,
-      s"maxRatings must be 1..5 (decimal-width bound), got $maxRatings")
+                 labelCol: String, ordCol: String): DataFrame = {
     val scale = 1000000L
     val r = ratings
       .filter(col(itemCol).isNotNull && col(raterCol).isNotNull &&
-        col(labelCol).isNotNull && col(ordCol) <= maxRatings)
+        col(labelCol).isNotNull && col(ordCol) <= 5)
       .select(col(itemCol).as("__i"), col(raterCol).as("__r"),
         col(labelCol).as("__j"), col(ordCol).as("__o"))
       .localCheckpoint()
@@ -317,7 +314,7 @@ object Agreement {
       .localCheckpoint()
 
     var labels = lab0
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 2) {
       val joined = r.join(labels, Seq("__i"))
       val conf = joined.groupBy(col("__r"), col("__cur"), col("__j"))
         .agg(count(lit(1)).as("__cnt"))
@@ -344,9 +341,9 @@ object Agreement {
       val cand = r
         .crossJoin(broadcast(classes.select(col("__c"))))
         .join(broadcast(grid), Seq("__r", "__c", "__j"))
-      val factors = (1 to maxRatings).map(k =>
+      val factors = (1 to 5).map(k =>
         max(when(col("__o") === k, col("__theta"))).as(s"__f$k"))
-      val score = (1 to maxRatings)
+      val score = (1 to 5)
         .map(k => coalesce(col(s"__f$k"), lit(1L)).cast("decimal(7,0)"))
         .foldLeft(col("__p").cast("decimal(7,0)"))(_ * _)
       labels = cand.groupBy(col("__i"), col("__c"))
@@ -418,8 +415,7 @@ object Agreement {
     * the variances carry order-dependent float addition).
     * Degenerate s²_T = 0 (or < 2 complete subjects) yields null alpha. */
   def cronbachAlpha(df: DataFrame, subjectCol: String, itemCol: String,
-                    valCol: String, items: Int,
-                    roundScale: Int = 6): DataFrame = {
+                    valCol: String, items: Int): DataFrame = {
     require(items >= 2, s"items must be >= 2: $items")
     val cells = df
       .filter(col(subjectCol).isNotNull && col(itemCol).isNotNull &&
@@ -451,11 +447,11 @@ object Agreement {
     val k = lit(items.toDouble)
     totVar.crossJoin(itemVar)
       .select(col("n_subjects"), lit(items.toLong).as("k_items"),
-        round(col("__sumItemVar"), roundScale).as("sum_item_var"),
-        round(col("__vt"), roundScale).as("total_var"),
+        round(col("__sumItemVar"), 6).as("sum_item_var"),
+        round(col("__vt"), 6).as("total_var"),
         round(when(col("__vt") > 0,
           k / (k - 1.0) * (lit(1.0) - col("__sumItemVar") / col("__vt"))),
-          roundScale).as("alpha"))
+          6).as("alpha"))
   }
 
   /** Lin's concordance correlation coefficient (public: Lin,
@@ -471,8 +467,7 @@ object Agreement {
     * ratios/means of fixed magnitude, so the float sums' relative
     * error (~√n·ε) stays far below 6dp at any corpus size. Degenerate
     * denominator (both spreads zero AND equal means) yields null. */
-  def linCcc(df: DataFrame, xCol: String, yCol: String,
-             roundScale: Int = 6): DataFrame = {
+  def linCcc(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val base = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("double").as("__x"),
         col(yCol).cast("double").as("__y"))
@@ -487,16 +482,16 @@ object Agreement {
     val dm = col("__mx") - col("__my")
     val den = vx + vy + dm * dm
     m.select(col("n"),
-      round(col("__mx"), roundScale).as("mean_x"),
-      round(col("__my"), roundScale).as("mean_y"),
-      round(when(den > 0, lit(2.0) * cov / den), roundScale).as("ccc"),
-      round(when(vx > 0 && vy > 0, cov / sqrt(vx * vy)), roundScale)
+      round(col("__mx"), 6).as("mean_x"),
+      round(col("__my"), 6).as("mean_y"),
+      round(when(den > 0, lit(2.0) * cov / den), 6).as("ccc"),
+      round(when(vx > 0 && vy > 0, cov / sqrt(vx * vy)), 6)
         .as("pearson_r"),
       // the bias-correction factor C_b = CCC / r isolates HOW the
       // scorers disagree: 1 = pure correlation loss, < 1 = systematic
       // location/scale shift
       round(when(vx > 0 && vy > 0 && cov =!= 0.0,
-        (lit(2.0) * cov / den) / (cov / sqrt(vx * vy))), roundScale)
+        (lit(2.0) * cov / den) / (cov / sqrt(vx * vy))), 6)
         .as("c_b"))
   }
 
@@ -513,8 +508,7 @@ object Agreement {
     * Scale shape: one exact moment aggregate over the differences, the
     * 1-row limits broadcast back, one outside-count aggregate — two
     * passes, no window, no sort. */
-  def blandAltman(units: DataFrame, m1Col: String, m2Col: String,
-                  roundScale: Int = 6): DataFrame = {
+  def blandAltman(units: DataFrame, m1Col: String, m2Col: String): DataFrame = {
     val d = (col(m1Col).cast("decimal(38,0)")
       - col(m2Col).cast("decimal(38,0)"))
     val base = units
@@ -537,16 +531,16 @@ object Agreement {
       when(col("n") > 1, meanD + lit(1.96) * sdD).as("__hi"))
     base.crossJoin(broadcast(lim))
       .agg(max(col("n")).as("n"),
-        round(max(col("__m")), roundScale).as("bias"),
-        round(max(col("__sd")), roundScale).as("sd_diff"),
-        round(max(col("__lo")), roundScale).as("loa_lower"),
-        round(max(col("__hi")), roundScale).as("loa_upper"),
+        round(max(col("__m")), 6).as("bias"),
+        round(max(col("__sd")), 6).as("sd_diff"),
+        round(max(col("__lo")), 6).as("loa_lower"),
+        round(max(col("__hi")), 6).as("loa_upper"),
         when(max(col("n")) > 1,
           sum(when(col("__d").cast("double") < col("__lo")
             || col("__d").cast("double") > col("__hi"), 1L).otherwise(0L)))
           .as("n_outside"))
       .withColumn("pct_outside", round(col("n_outside").cast("double")
-        / col("n").cast("double"), roundScale))
+        / col("n").cast("double"), 6))
   }
 
   /** Borda-count rank aggregation (public: Borda 1781; the baseline
@@ -563,7 +557,7 @@ object Agreement {
     * one final rank over the ≤k-row result. Midranks are dyadic, sums
     * exact. */
   def bordaCount(ballots: DataFrame, voterCol: String, candCol: String,
-                 scoreCol: String, roundScale: Int = 6): DataFrame = {
+                 scoreCol: String): DataFrame = {
     val wv = Window.partitionBy(col(voterCol)).orderBy(col(scoreCol).desc)
     val ranked = ballots
       .filter(col(scoreCol).isNotNull)
@@ -578,7 +572,7 @@ object Agreement {
           + (col("__ties") - 1).cast("double") / 2.0))
     ranked.groupBy(col(candCol))
       .agg(count(lit(1)).as("n_ballots"),
-        round(sum(col("__pts")), roundScale).as("borda_points"))
+        round(sum(col("__pts")), 6).as("borda_points"))
       .withColumn("borda_rank", rank().over(
         Window.orderBy(col("borda_points").desc, col(candCol))))
   }

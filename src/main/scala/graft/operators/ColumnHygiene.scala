@@ -95,7 +95,7 @@ object ColumnHygiene {
     * a #columns-row join — the data is scanned once per side regardless
     * of column count. */
   def profileDrift(oldDf: DataFrame, newDf: DataFrame,
-                   cols: Seq[String], roundScale: Int = 6): DataFrame = {
+                   cols: Seq[String]): DataFrame = {
     val po = columnProfile(oldDf, cols).select(col("column"),
       col("n_rows").as("old_rows"), col("n_nulls").as("old_nulls"),
       col("n_distinct").as("old_distinct"),
@@ -110,11 +110,11 @@ object ColumnHygiene {
       .select(col("column"),
         col("old_rows"), col("new_rows"),
         round(rate(col("new_nulls"), col("new_rows"))
-          - rate(col("old_nulls"), col("old_rows")), roundScale)
+          - rate(col("old_nulls"), col("old_rows")), 6)
           .as("null_rate_delta"),
         when(col("old_distinct") > 0,
           round(col("new_distinct").cast("double") / col("old_distinct"),
-            roundScale)).as("distinct_ratio"),
+            6)).as("distinct_ratio"),
         (col("new_min") =!= col("old_min")).as("min_changed"),
         (col("new_max") =!= col("old_max")).as("max_changed"))
   }

@@ -90,7 +90,7 @@ object Corpus {
     * rule — alpha=1 keeps the natural distribution, alpha→0 flattens it).
     * The smallest group keeps everything; a group of size n keeps
     * (n/n_min)^(alpha-1) of its rows, chosen deterministically by
-    * [[hashUnit]].
+    * [[hashUnit]] (salt "temp").
     *
     * Shape: one count aggregate (map-side combinable, #groups rows), the
     * min and per-group fraction computed ON the tiny stats frame, then a
@@ -98,7 +98,7 @@ object Corpus {
     * shuffles. keep_frac is rounded to 6dp so a last-ulp `pow` difference
     * between engines cannot flip a keep decision at the boundary. */
   def temperatureResample(df: DataFrame, groupCol: String, idCol: String,
-                          alpha: Double, salt: String = "temp"): DataFrame = {
+                          alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1]: $alpha")
     val counts = df.groupBy(col(groupCol)).agg(count(lit(1)).as("n_group"))
     // unpartitioned window over the #groups-row stats frame only — fine.
@@ -110,7 +110,7 @@ object Corpus {
           alpha - 1.0), 6))
     df.join(broadcast(stats), df(groupCol) <=> stats(groupCol))
       .drop(stats(groupCol))
-      .withColumn("mix_u", hashUnit(col(idCol), salt))
+      .withColumn("mix_u", hashUnit(col(idCol), "temp"))
       .filter(col("mix_u") < col("keep_frac"))
   }
 
@@ -260,7 +260,7 @@ object Corpus {
   }
 
   /** Per-group Tukey (IQR) outlier fences for `valCol`: rows outside
-    * [q1 − k·IQR, q3 + k·IQR] are flagged, not dropped — the robust
+    * [q1 − 1.5·IQR, q3 + 1.5·IQR] are flagged, not dropped — the robust
     * complement to [[zscore]] (quartiles ignore the outliers themselves,
     * where mean/stddev are dragged by them).
     *
@@ -269,37 +269,32 @@ object Corpus {
     * window. The exact `percentile` buffers each group's values inside
     * the aggregate; at corpus scale swap in approx_percentile exactly as
     * [[quantileFilterApprox]] does for [[quantileFilter]]. */
-  def iqrOutliers(df: DataFrame, groupCol: String, valCol: String,
-                  k: Double = 1.5): DataFrame = {
-    require(k >= 0, s"fence multiplier must be >= 0 (got $k)")
+  def iqrOutliers(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val stats = df.groupBy(col(groupCol)).agg(
       expr(s"percentile($valCol, 0.25)").as("__q1"),
       expr(s"percentile($valCol, 0.75)").as("__q3"))
     val iqr = col("__q3") - col("__q1")
     df.join(broadcast(stats), df(groupCol) <=> stats(groupCol))
       .drop(stats(groupCol))
-      .withColumn("lo_fence", col("__q1") - lit(k) * iqr)
-      .withColumn("hi_fence", col("__q3") + lit(k) * iqr)
+      .withColumn("lo_fence", col("__q1") - lit(1.5) * iqr)
+      .withColumn("hi_fence", col("__q3") + lit(1.5) * iqr)
       .withColumn("is_outlier",
         col(valCol) < col("lo_fence") || col(valCol) > col("hi_fence"))
       .drop("__q1", "__q3")
   }
 
   /** Per-group winsorization: clamp `valCol` into its group's
-    * [loPct, hiPct] quantile band (outliers are CAPPED, not dropped — the
+    * [5%, 95%] quantile band (outliers are CAPPED, not dropped — the
     * standard treatment when the row must survive but its magnitude must
     * not dominate a downstream mean/mixture weight). Emits `outCol` beside
     * the original. Same scale shape as [[iqrOutliers]]: one aggregate
     * broadcast back, data never shuffles; swap in approx_percentile at
     * corpus scale as [[quantileFilterApprox]] does. */
   def winsorize(df: DataFrame, groupCol: String, valCol: String,
-                outCol: String, loPct: Double = 0.05,
-                hiPct: Double = 0.95): DataFrame = {
-    require(loPct >= 0 && hiPct <= 1 && loPct <= hiPct,
-      s"need 0 <= loPct <= hiPct <= 1 (got $loPct, $hiPct)")
+                outCol: String): DataFrame = {
     val stats = df.groupBy(col(groupCol)).agg(
-      expr(s"percentile($valCol, $loPct)").as("__plo"),
-      expr(s"percentile($valCol, $hiPct)").as("__phi"))
+      expr(s"percentile($valCol, 0.05)").as("__plo"),
+      expr(s"percentile($valCol, 0.95)").as("__phi"))
     df.join(broadcast(stats), df(groupCol) <=> stats(groupCol))
       .drop(stats(groupCol))
       .withColumn(outCol,
@@ -343,17 +338,16 @@ object Corpus {
     * core instead of serializing into one window task — broadcast back and
     * applied as a map-side `>=` filter. The trade: the cut happens at a
     * sketch-approximate data value, not the exact percent_rank boundary
-    * (off by at most the sketch error around the quantile; `accuracy` is
-    * the GK sketch knob, error ~ 1/accuracy). Survivor sets of the two
+    * (off by at most the sketch error around the quantile: the GK sketch
+    * runs at accuracy 10000, error ~ 1/10000). Survivor sets of the two
     * variants differ only at the boundary value — asserted in CorpusSpec.
     * Null group keys form their own group (null-safe join), matching
     * [[quantileFilter]]'s window semantics. */
   def quantileFilterApprox(df: DataFrame, groupCol: String, valCol: String,
-                           minPct: Double, accuracy: Int = 10000): DataFrame = {
+                           minPct: Double): DataFrame = {
     require(minPct >= 0.0 && minPct <= 1.0, s"minPct must be in [0,1]: $minPct")
-    require(accuracy > 0, s"accuracy must be positive: $accuracy")
     val thresholds = df.groupBy(col(groupCol))
-      .agg(percentile_approx(col(valCol), lit(minPct), lit(accuracy))
+      .agg(percentile_approx(col(valCol), lit(minPct), lit(10000))
         .as("q_threshold"))
     df.join(broadcast(thresholds), df(groupCol) <=> thresholds(groupCol))
       .drop(thresholds(groupCol))
@@ -431,8 +425,7 @@ object Corpus {
     * (map-side keep filter), one kept-count aggregate — the corpus is
     * read twice and never shuffled beyond the two bin-keyed aggregates. */
   def matchDistribution(df: DataFrame, idCol: String, valCol: String,
-                        binWidth: Long, salt: String,
-                        roundScale: Int = 6): DataFrame = {
+                        binWidth: Long, salt: String): DataFrame = {
     require(binWidth >= 1, s"binWidth must be positive: $binWidth")
     val binned = df.select(col(idCol).as("__id"),
       floor(col(valCol) / binWidth).cast("long").as("bin"))
@@ -455,10 +448,10 @@ object Corpus {
     rates.join(kept, Seq("bin"), "left").na.fill(0L, Seq("n_kept"))
       .crossJoin(broadcast(totKept))
       .select(col("bin"), col("n_before"), col("n_kept"),
-        round(col("__q"), roundScale).as("q_keep"),
-        round(col("n_before").cast("double") / col("__tot"), roundScale)
+        round(col("__q"), 6).as("q_keep"),
+        round(col("n_before").cast("double") / col("__tot"), 6)
           .as("share_before"),
-        round(col("n_kept").cast("double") / col("__tk"), roundScale)
+        round(col("n_kept").cast("double") / col("__tk"), 6)
           .as("share_after"))
   }
 
@@ -475,8 +468,7 @@ object Corpus {
     * the corpus + a 1-row totals broadcast; every per-group readout is
     * arithmetic on the group table. A single-group input reports null
     * loo/delta (there is no corpus left to compare against). */
-  def sourceAblation(df: DataFrame, groupCol: String, metricCol: String,
-                     roundScale: Int = 6): DataFrame = {
+  def sourceAblation(df: DataFrame, groupCol: String, metricCol: String): DataFrame = {
     val g = df.groupBy(col(groupCol)).agg(
       count(lit(1)).as("n_rows"), sum(col(metricCol)).as("__s"))
     val tot = g.agg(sum(col("n_rows")).as("__tn"), sum(col("__s")).as("__ts"))
@@ -487,9 +479,9 @@ object Corpus {
     val globalMean = col("__ts").cast("double") / col("__tn")
     g.crossJoin(broadcast(tot))
       .select(col(groupCol), col("n_rows"),
-        round(mean, roundScale).as("group_mean"),
-        round(looMean, roundScale).as("loo_mean"),
-        round(looMean - globalMean, roundScale).as("ablation_delta"))
+        round(mean, 6).as("group_mean"),
+        round(looMean, 6).as("loo_mean"),
+        round(looMean - globalMean, 6).as("ablation_delta"))
   }
 
   /** Per-group quantile-rank normalization of a score column: replace the
@@ -619,7 +611,8 @@ object Corpus {
 
   /** Deterministic weighted sampling without replacement, k per group
     * (Efraimidis–Spirakis exponential race): each row draws
-    * `es_key = −ln(u)/w` with `u` the engine-portable [[hashUnit]] and
+    * `es_key = −ln(u)/w` with `u` the engine-portable [[hashUnit]] (salt
+    * "wsample") and
     * `w` its weight; the k SMALLEST keys per group win, giving inclusion
     * probability ∝ weight with no RNG state — rerun/cluster-size/
     * incremental-ingest invariant like every sampler here. Keys are
@@ -632,14 +625,13 @@ object Corpus {
     * bounded). For a single global draw prefer orderBy(es_key).limit(k)
     * — TakeOrdered, no single-task window. */
   def weightedSample(df: DataFrame, groupCol: String, idCol: String,
-                     weightCol: String, k: Int,
-                     salt: String = "wsample"): DataFrame = {
+                     weightCol: String, k: Int): DataFrame = {
     require(k >= 1, s"sample size must be >= 1: $k")
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col("es_key").asc, col(idCol).asc)
     df.filter(col(weightCol) > 0)
       .withColumn("es_key",
-        round(-log(hashUnit(col(idCol), salt)) / col(weightCol), 9))
+        round(-log(hashUnit(col(idCol), "wsample")) / col(weightCol), 9))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -861,7 +853,7 @@ object Corpus {
   }
 
   /** Count-min sketch build + point-estimate eval (public: Cormode &
-    * Muthukrishnan '05): `depth` md5 hash rows × `width` buckets, cell =
+    * Muthukrishnan '05): 4 md5 hash rows × `width` buckets, cell =
     * Σ counts of colliding items, estimate = min over rows — the
     * fixed-size frequency summary for streams/corpora too wide to
     * wordcount, with the one-sided guarantee est ≥ truth (collisions
@@ -875,16 +867,15 @@ object Corpus {
     * rows out), and a topK·depth-row probe join — nothing data-sized
     * shuffles twice. Deterministic md5 bucketing ⇒ identical sketches on
     * any engine, rerun, or cluster size. */
-  def countMinEstimates(df: DataFrame, itemCol: String, depth: Int = 4,
+  def countMinEstimates(df: DataFrame, itemCol: String,
                         width: Int = 256, topK: Int = 20): DataFrame = {
-    require(depth >= 1 && width >= 2 && topK >= 1,
-      s"need depth>=1, width>=2, topK>=1: $depth/$width/$topK")
+    require(width >= 2 && topK >= 1, s"need width>=2, topK>=1: $width/$topK")
     val counts = df.select(col(itemCol).cast("string").as("item"))
       .filter(col("item").isNotNull)
       .groupBy(col("item")).agg(count(lit(1)).as("true_cnt"))
     val hashed = counts
       .select(col("item"), col("true_cnt"),
-        explode(sequence(lit(0), lit(depth - 1))).as("j"))
+        explode(sequence(lit(0), lit(3))).as("j"))
       .withColumn("bucket",
         conv(substring(md5(concat(col("j").cast("string"), lit(":"),
           col("item"))), 1, 8), 16, 10).cast("long") % width)
@@ -920,7 +911,8 @@ object Corpus {
   /** Poisson bootstrap (public: Chamandy et al., "Estimating uncertainty
     * for massive data streams", Google TR'12): `replicates` deterministic
     * resamples of the corpus, each row entering replicate r with
-    * multiplicity w = F⁻¹_Poisson(1)(hashUnit(r:id)) — the standard way
+    * multiplicity w = F⁻¹_Poisson(1)(hashUnit(r:id), salt "boot") — the
+    * standard way
     * to put a confidence interval on ANY corpus mean without a second
     * pass, a shuffle, or an RNG (resampling n rows with replacement
     * needs coordination; independent Poisson(1) weights don't, and at
@@ -939,8 +931,7 @@ object Corpus {
     * (much smaller) per-doc stat table, not raw text — the input here IS
     * per-doc stats. */
   def bootstrapMeans(df: DataFrame, idCol: String, valCol: String,
-                     replicates: Int = 32, salt: String = "boot",
-                     roundScale: Int = 6): DataFrame = {
+                     replicates: Int = 32): DataFrame = {
     require(replicates > 0, s"replicates must be positive: $replicates")
     // integral-only input: a fractional column would TRUNCATE through the
     // long cast and every replicate mean would be silently wrong — make
@@ -963,7 +954,7 @@ object Corpus {
       .select(col("__id"), col("__x"),
         explode(sequence(lit(0), lit(replicates - 1))).as("r"))
       .withColumn("__u", hashUnit(
-        concat(col("r").cast("string"), lit(":"), col("__id")), salt))
+        concat(col("r").cast("string"), lit(":"), col("__id")), "boot"))
       .withColumn("__w", poissonWeight(col("__u")))
       .groupBy(col("r").cast("long").as("r"))
       .agg(sum(col("__w")).as("n_eff"),
@@ -971,13 +962,13 @@ object Corpus {
       .select(col("r"), col("n_eff"),
         round(when(col("n_eff") > 0,
           col("__wsum").cast("double") / col("n_eff").cast("double")),
-          roundScale).as("boot_mean"))
+          6).as("boot_mean"))
   }
 
   /** One domain-reweighting step, DoReMi-style (Xie et al., NeurIPS'23:
     * Group-DRO multiplicative-weights over domains; this is the
     * proxy-free single step): each source's mixture weight is its token
-    * share scaled by exp(η · excess loss) and renormalized —
+    * share scaled by exp(η · excess loss), η = 1, and renormalized —
     * up-weighting domains the reference model finds HARD relative to
     * the corpus average, the principled alternative to hand-tuned
     * [[temperatureMix]] exponents. Loss here is the per-token
@@ -995,8 +986,7 @@ object Corpus {
     * Shape: one (source, token) aggregate, one vocab aggregate off it,
     * an equi-join back, one per-source aggregate, a 1-row corpus
     * broadcast — shuffle ∝ distinct (source, token). */
-  def domainReweight(docs: DataFrame, groupCol: String, textCol: String,
-                     eta: Double = 1.0, roundScale: Int = 6): DataFrame = {
+  def domainReweight(docs: DataFrame, groupCol: String, textCol: String): DataFrame = {
     val st = docs.select(col(groupCol).as("__g"),
         explode(graft.functions.TextFunctions.tokens(col(textCol)))
           .as("__w"))
@@ -1020,15 +1010,15 @@ object Corpus {
       .withColumn("__share",
         col("n_tokens").cast("double") / col("__tot"))
       .withColumn("__raw",
-        col("__share") * exp(lit(eta) * (col("__loss") - col("__base"))))
+        col("__share") * exp(lit(1.0) * (col("__loss") - col("__base"))))
       .localCheckpoint()
     val norm = scored.agg(sum(col("__raw")).as("__z"))
     scored.crossJoin(broadcast(norm))
       .select(col("__g").as(groupCol), col("n_tokens"),
-        round(col("__loss"), roundScale).as("loss"),
-        round(col("__loss") - col("__base"), roundScale).as("excess_loss"),
-        round(col("__share"), roundScale).as("share_before"),
-        round(col("__raw") / col("__z"), roundScale).as("weight_after"))
+        round(col("__loss"), 6).as("loss"),
+        round(col("__loss") - col("__base"), 6).as("excess_loss"),
+        round(col("__share"), 6).as("share_before"),
+        round(col("__raw") / col("__z"), 6).as("weight_after"))
   }
 
   /** Water-filling budget allocation across sources (the classical

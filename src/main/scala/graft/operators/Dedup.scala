@@ -59,9 +59,8 @@ object Dedup {
     * composing pair generation (Jaccard/LSH/SimHash — caller's choice) →
     * clustering → survivor election. Singletons survive with n_members=1.
     * Adds one count aggregate on top of the clustering rounds. */
-  def nearDupSurvivors(nodes: DataFrame, pairs: DataFrame, idCol: String,
-                       maxIter: Int = 20): DataFrame =
-    duplicateClusters(nodes, pairs, idCol, maxIter)
+  def nearDupSurvivors(nodes: DataFrame, pairs: DataFrame, idCol: String): DataFrame =
+    duplicateClusters(nodes, pairs, idCol)
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"))
       .select(col("cluster").as(idCol), col("n_members"))
@@ -76,16 +75,16 @@ object Dedup {
       .select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("token"))
       .distinct()
 
-  /** Distinct word n-gram (shingle) set per document — the n-gram Jaccard
+  /** Distinct word 3-gram (shingle) set per document — the n-gram Jaccard
     * basis. Shingles are near-unique across documents, so the inverted
     * index barely fans out (no stop-token problem) at the cost of missing
-    * reordered near-dups. Documents with < n tokens contribute nothing.
+    * reordered near-dups. Documents with < 3 tokens contribute nothing.
     * Same [[FanOut.widen]] rationale as [[tokenSets]] (r15). */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
+  def shingleSets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     FanOut.widen(docs, col(idCol))
       .select(col(idCol), TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
-        explode(TextFunctions.shinglesOf(col("__toks"), n)).as("token"))
+        explode(TextFunctions.shinglesOf(col("__toks"), 3)).as("token"))
       .distinct()
 
   /** Pairwise n-gram/token Jaccard similarity via inverted-index equi-join
@@ -221,7 +220,7 @@ object Dedup {
     * Training Data Makes Language Models Better", there built on suffix
     * arrays over the concatenated corpus; re-expressed here in Spark's
     * wordcount shape): fingerprint every k-token window of every document
-    * and keep fingerprints occurring in ≥ `minDocs` distinct documents.
+    * and keep fingerprints occurring in ≥ 2 distinct documents.
     * Catches the boilerplate/license-header/quoted-paragraph duplication
     * that document-level exact and Jaccard dedup both miss (the containing
     * documents are different; the span is identical).
@@ -233,10 +232,8 @@ object Dedup {
     * exact-dedup pass, ~k× wider on the wire. Portable hashing keeps the
     * output oracle-checkable. */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                      k: Int, minDocs: Int = 2,
-                      includeExample: Boolean = true): DataFrame = {
+                      k: Int, includeExample: Boolean = true): DataFrame = {
     require(k >= 2, s"span width k must be >= 2 (got $k)")
-    require(minDocs >= 2, s"minDocs must be >= 2 (got $minDocs)")
     val spans = docs
       .select(col(idCol), TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
@@ -256,11 +253,12 @@ object Dedup {
       .select(col(idCol), md5(col("__span")).as("span_hash"), col("__span"))
       .groupBy(col("span_hash"))
       .agg(aggs.head, aggs.tail: _*)
-      .filter(col("n_docs") >= minDocs)
+      .filter(col("n_docs") >= 2)
   }
 
   /** Winnowing document fingerprints (public: Schleimer, Wilkerson, Aiken
-    * SIGMOD'03 — the MOSS algorithm): hash every k-token shingle, slide a
+    * SIGMOD'03 — the MOSS algorithm): hash (seed 17) every k-token
+    * shingle, slide a
     * w-hash window across the hash sequence and keep each window's
     * MINIMUM; the distinct kept hashes are the document's fingerprint
     * set. Guarantee: any verbatim run of ≥ w+k−1 shared tokens yields at
@@ -274,7 +272,7 @@ object Dedup {
     * array → hash transform → per-position window minima → explode) plus
     * one distinct aggregate; shuffle ∝ fingerprints kept. */
   def winnowingFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                            k: Int = 5, w: Int = 4, seed: Int = 17): DataFrame = {
+                            k: Int = 5, w: Int = 4): DataFrame = {
     require(k >= 2, s"shingle width k must be >= 2 (got $k)")
     require(w >= 1, s"window width w must be >= 1 (got $w)")
     // tokenize+shingle+hash+window-min is all map-side — widen over
@@ -284,7 +282,7 @@ object Dedup {
       .select(col(idCol), TextFunctions.shinglesOf(col("__toks"), k).as("__sh"))
       .select(col(idCol),
         transform(col("__sh"),
-          s => TextFunctions.portableHash(s, seed)).as("__hs"))
+          s => TextFunctions.portableHash(s, 17)).as("__hs"))
       .filter(size(col("__hs")) >= w)
     hs.select(col(idCol),
         explode(transform(sequence(lit(0), size(col("__hs")) - w),
@@ -620,20 +618,18 @@ object Dedup {
     collapsed.join(rejected, Seq(idCol), "left_anti")
   }
 
-  /** SimHash near-duplicate pairs: block on `bands` equal-width bit bands
+  /** SimHash near-duplicate pairs: block on 10 equal-width 6-bit bands
     * of the 60-bit signature, equi-join within blocks, keep pairs with
-    * Hamming distance ≤ `maxHamming` (native popcount expression). By
-    * pigeonhole, a pair within maxHamming < bands differing bits must
-    * agree on at least one whole band — so the blocking has EXACT recall
+    * Hamming distance ≤ 8 (native popcount expression). By pigeonhole,
+    * a pair within 8 < 10 differing bits must agree on at least one
+    * whole band — so the blocking has EXACT recall
     * while the join stays an equi-join (shuffle ∝ collisions, never n²). */
-  def simHashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 8, bands: Int = 10): DataFrame = {
-    require(maxHamming < bands, "pigeonhole recall needs maxHamming < bands")
-    val bitsPerBand = 60 / bands
+  def simHashNearDups(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val bitsPerBand = 6
     val mask = (1L << bitsPerBand) - 1
     val sigs = simHash(docs, idCol, textCol)
     val banded = sigs.select(col(idCol), col("simhash"),
-      explode(array((0 until bands).map { b =>
+      explode(array((0 until 10).map { b =>
         struct(lit(b).as("band"),
           shiftright(col("simhash"), b * bitsPerBand).bitwiseAND(mask).as("band_val"))
       }: _*)).as("bv"))
@@ -644,7 +640,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .withColumn("hamming",
         graft.functions.VectorFunctions.hammingDistance(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 8)
       .select(col("id_a"), col("id_b"), col("hamming"))
       .distinct()
   }
@@ -672,9 +668,8 @@ object Dedup {
     *
     * `nodes` = one row per document id (singletons keep cluster = own id);
     * `pairs` must have id_a/id_b columns of the same type as `nodes`. */
-  def duplicateClusters(nodes: DataFrame, pairs: DataFrame, idCol: String,
-                        maxIter: Int = 20): DataFrame =
-    duplicateClustersRun(nodes, pairs, idCol, maxIter).clusters
+  def duplicateClusters(nodes: DataFrame, pairs: DataFrame, idCol: String): DataFrame =
+    duplicateClustersRun(nodes, pairs, idCol).clusters
 
   /** One [[duplicateClustersRun]] execution with its convergence
     * telemetry — the [[Graph.KCoreRun]] contract for the CC loop:
@@ -682,7 +677,7 @@ object Dedup {
     * propagation+jump round (strictly positive until the closing
     * round's 0 — the fixpoint witness), `activeNodes`/`directedEdges`
     * size the edge-induced subgraph the loop actually iterates, and
-    * `converged` makes the maxIter cap observable. Data-dependent round
+    * `converged` makes the 20-round cap observable. Data-dependent round
     * growth (long chains from transitive drift vs. the usual
     * diameter-2 clique blobs) reads directly off the trace length in
     * production instead of surfacing as an opaque wall-clock shift. */
@@ -695,8 +690,8 @@ object Dedup {
 
   /** [[duplicateClusters]] with the per-round telemetry attached (same
     * plan, same result — q_dup_clusters runs through this path). */
-  def duplicateClustersRun(nodes: DataFrame, pairs: DataFrame, idCol: String,
-                           maxIter: Int = 20): DupClustersRun = {
+  def duplicateClustersRun(nodes: DataFrame, pairs: DataFrame,
+                           idCol: String): DupClustersRun = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
@@ -714,7 +709,7 @@ object Dedup {
     val trace = scala.collection.mutable.ArrayBuffer.empty[Long]
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < 20) {
       val propagated = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("cluster"))
       // checkpoint the propagation+aggregate ONCE — the two hops below
@@ -1063,7 +1058,7 @@ object Dedup {
     * At 100 TB with a daily batch this is the difference between minutes
     * and a full-corpus CC rebuild. */
   def incrementalClusters(prior: DataFrame, idCol: String, clusterCol: String,
-                          newPairs: DataFrame, maxIter: Int = 20): DataFrame = {
+                          newPairs: DataFrame): DataFrame = {
     val lookup = prior.select(col(idCol).as("__pid"),
       col(clusterCol).as("__proot"))
     def toRoot(pairs: DataFrame, side: String): DataFrame =
@@ -1082,7 +1077,7 @@ object Dedup {
       .cache()
     val cnodes = contracted.select(col("id_a").as(idCol))
       .unionByName(contracted.select(col("id_b").as(idCol))).distinct()
-    val merged = duplicateClusters(cnodes, contracted, idCol, maxIter)
+    val merged = duplicateClusters(cnodes, contracted, idCol)
       .select(col(idCol).as("__cr"), col("cluster").as("__cnew"))
     val ids = prior.select(col(idCol))
       .unionByName(newPairs.select(col("id_a").as(idCol)))

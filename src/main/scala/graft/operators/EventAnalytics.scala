@@ -361,7 +361,7 @@ object EventAnalytics {
     * percentile (spec-pinned). The anchor day rides the same broadcast
     * chain, so nothing shuffles twice. */
   def rfm(events: DataFrame, userCol: String, tsCol: String,
-          valCol: String, roundScale: Int = 6): DataFrame = {
+          valCol: String): DataFrame = {
     // cached: the user-grain aggregate feeds THREE consumers (the anchor
     // 1-row max, the quantile-cut 1-row aggregate, and the scored
     // output) — uncached, the corpus-sized events aggregate would run
@@ -372,7 +372,7 @@ object EventAnalytics {
       .groupBy(col(userCol))
       .agg(max(date_trunc("day", col(tsCol))).as("__last"),
         count(lit(1)).as("frequency"),
-        round(sum(col(valCol)), roundScale).as("monetary"))
+        round(sum(col(valCol)), 6).as("monetary"))
       .cache()
     val anchor = perUser.agg(max(col("__last")).as("__anchor"))
     val withRec = perUser.crossJoin(broadcast(anchor))
@@ -390,13 +390,13 @@ object EventAnalytics {
     def cuts4(d: DataFrame, metric: String, tag: String): DataFrame = {
       val h = d.groupBy(col(metric)).agg(count(lit(1)).as("__cnt"))
       h.agg(
-        round(expr(s"percentile($metric, 0.2D, __cnt)"), roundScale)
+        round(expr(s"percentile($metric, 0.2D, __cnt)"), 6)
           .as(s"__${tag}20"),
-        round(expr(s"percentile($metric, 0.4D, __cnt)"), roundScale)
+        round(expr(s"percentile($metric, 0.4D, __cnt)"), 6)
           .as(s"__${tag}40"),
-        round(expr(s"percentile($metric, 0.6D, __cnt)"), roundScale)
+        round(expr(s"percentile($metric, 0.6D, __cnt)"), 6)
           .as(s"__${tag}60"),
-        round(expr(s"percentile($metric, 0.8D, __cnt)"), roundScale)
+        round(expr(s"percentile($metric, 0.8D, __cnt)"), 6)
           .as(s"__${tag}80"))
     }
     val cuts = cuts4(withRec, "recency_days", "r")
@@ -486,12 +486,11 @@ object EventAnalytics {
     * exact integer ratio, 6dp. */
   def conversionLatency(events: DataFrame, groupCol: String,
                         userCol: String, tsCol: String,
-                        fromType: String, toType: String,
-                        typeCol: String = "event_type"): DataFrame = {
-    val first = events.filter(col(typeCol) === fromType)
+                        fromType: String, toType: String): DataFrame = {
+    val first = events.filter(col("event_type") === fromType)
       .groupBy(col(groupCol), col(userCol))
       .agg(min(unix_micros(col(tsCol))).as("__t0"))
-    val conv = events.filter(col(typeCol) === toType)
+    val conv = events.filter(col("event_type") === toType)
       .select(col(groupCol), col(userCol),
         unix_micros(col(tsCol)).as("__t1"))
     // cached: the (group, user) conversion frame feeds TWO consumers
@@ -556,8 +555,7 @@ object EventAnalytics {
     * pageRank/hits). */
   def stationaryDistribution(events: DataFrame, userCol: String,
                              tsCol: String, tieCol: String, typeCol: String,
-                             iters: Int = 8,
-                             roundScale: Int = 6): DataFrame = {
+                             iters: Int = 8): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     // tc/shares/states/p are all ≤ types²-row frames referenced by EVERY
     // unrolled power iteration (and by each other) — cache them or the
@@ -607,9 +605,9 @@ object EventAnalytics {
         .select(col("__s"), (col("__n").cast("double")
           / col("__t").cast("double")).as("__emp")), Seq("__s"), "left")
       .select(col("__s").as(typeCol),
-        round(col("__v"), roundScale).as("pi"),
-        round(col("__emp"), roundScale).as("empirical_share"),
-        round(col("__v") - col("__emp"), roundScale).as("pi_minus_share"))
+        round(col("__v"), 6).as("pi"),
+        round(col("__emp"), 6).as("empirical_share"),
+        round(col("__v") - col("__emp"), 6).as("pi_minus_share"))
   }
 
   /** Two-group log-rank test (Mantel, Cancer Chemother. Rep. '66; Peto
@@ -632,8 +630,7 @@ object EventAnalytics {
     * reduce. Observed/expected are float-summed rationals → rounded;
     * χ² degenerate (zero variance) → null. */
   def logRank(units: DataFrame, groupCol: String, durCol: String,
-              eventCol: Column, sideA: String, sideB: String,
-              roundScale: Int = 6): DataFrame = {
+              eventCol: Column, sideA: String, sideB: String): DataFrame = {
     val perDur = units
       .filter(col(groupCol).isin(sideA, sideB) && col(durCol).isNotNull)
       .groupBy(col(durCol).cast("long").as("__t"))
@@ -659,16 +656,16 @@ object EventAnalytics {
       .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
         sum(col("__da")).as("observed_a"),
         round(sum(when(col("__d") > 0, col("__e")).otherwise(lit(0.0))),
-          roundScale).as("expected_a"),
+          6).as("expected_a"),
         sum(when(col("__d") > 0, col("__da").cast("double") - col("__e"))
           .otherwise(lit(0.0))).as("__oe"),
         sum(when(col("__d") > 0, col("__v")).otherwise(lit(0.0)))
           .as("__sv"))
       .select(col("n_a"), col("n_b"), col("observed_a"), col("expected_a"),
         round(when(col("__sv") > 0, col("__oe") / sqrt(col("__sv"))),
-          roundScale).as("z"),
+          6).as("z"),
         round(when(col("__sv") > 0,
-          col("__oe") * col("__oe") / col("__sv")), roundScale)
+          col("__oe") * col("__oe") / col("__sv")), 6)
           .as("chi2"))
   }
 
@@ -690,8 +687,7 @@ object EventAnalytics {
     * ≤ types² rows. Entropies fold from (Σn, Σ n ln n) partials —
     * h = ln N − (Σ n ln n)/N — one pass, no per-share division. */
   def markovEntropy(events: DataFrame, userCol: String, tsCol: String,
-                    tieCol: String, typeCol: String,
-                    roundScale: Int = 6): DataFrame = {
+                    tieCol: String, typeCol: String): DataFrame = {
     val tc = transitionCounts(events, userCol, tsCol, tieCol, typeCol)
       .withColumnRenamed(typeCol, "__dst").cache()
     val perState = tc.groupBy(col("prev_type"))
@@ -715,13 +711,13 @@ object EventAnalytics {
     // decimal difference, which is engine-divergent
     perState
       .select(col("prev_type"), col("n_out"),
-        round(col("__h"), roundScale).as("h_state"))
+        round(col("__h"), 6).as("h_state"))
       .crossJoin(broadcast(rate))
       .crossJoin(broadcast(marg))
       .select(col("prev_type"), col("n_out"), col("h_state"),
-        round(col("__hr"), roundScale).as("h_rate"),
-        round(col("__hm"), roundScale).as("h_marginal"),
-        round(col("__hm") - col("__hr"), roundScale).as("info_gain"))
+        round(col("__hr"), 6).as("h_rate"),
+        round(col("__hm"), 6).as("h_marginal"),
+        round(col("__hm") - col("__hr"), 6).as("info_gain"))
   }
 
   /** Lincoln–Petersen capture–recapture population estimate with the
@@ -745,7 +741,7 @@ object EventAnalytics {
     * then one fold to the 2×2 capture table — shuffle ∝ users, no
     * window, no join. */
   def captureRecapture(events: DataFrame, userCol: String, tsCol: String,
-                       splitTs: String, roundScale: Int = 6): DataFrame = {
+                       splitTs: String): DataFrame = {
     val perUser = events
       .groupBy(col(userCol))
       .agg(max(when(col(tsCol) < lit(splitTs).cast("timestamp"), 1L)
@@ -763,7 +759,7 @@ object EventAnalytics {
           * (col("n2") - col("m_both")).cast("double")
           / ((col("m_both") + 1).cast("double")
             * (col("m_both") + 1).cast("double")
-            * (col("m_both") + 2).cast("double"))), roundScale)
+            * (col("m_both") + 2).cast("double"))), 6)
           .as("se_hat"))
   }
 }

@@ -252,7 +252,7 @@ object Graph {
   /** Personalized PageRank (public: Page et al. '99 §6 "personalized";
     * Jeh & Widom WWW'03): identical update to [[pageRank]] except the
     * teleport mass returns to a SEED SET instead of spreading uniformly —
-    * rank'(v) = (1−d)·seed(v)/|S| + d·Σ rank(u)/outdeg(u). The
+    * rank'(v) = (1−d)·seed(v)/|S| + d·Σ rank(u)/outdeg(u), d = 0.85. The
     * "related to THESE" primitive: seed the near-dup cluster / trusted
     * domains / one document, and the ranks order the graph by proximity
     * to the seeds (far components decay to exactly 0).
@@ -263,11 +263,10 @@ object Graph {
     * the teleport column. Seeds not present in the graph contribute
     * teleport mass that simply decays — they are counted in |S|, which
     * keeps the formula a function of the caller's declared seed set. */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-                           damping: Double = 0.85): DataFrame = {
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (fixed, unrolled plan): $iters")
-    require(damping > 0 && damping < 1, s"damping must be in (0, 1): $damping")
+    val damping = 0.85
     // same data-sized width as pageRank (r15, see edgeWidth)
     val e0 = edges.select(col("src"), col("dst"))
     val e = repartitionBy(e0, edgeWidth(e0), col("src")).cache()
@@ -460,8 +459,8 @@ object Graph {
     * sound because a peel round is IDEMPOTENT at the fixpoint (peeling
     * a k-core returns the same k-core), so any unroll depth ≥ the true
     * peel depth yields the exact answer. */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame =
-    kCoreRun(edges, k, maxIter).core
+  def kCore(edges: DataFrame, k: Int): DataFrame =
+    kCoreRun(edges, k).core
 
   /** One [[kCore]] execution with its peel telemetry: `survivorsPerRound`
     * is the surviving-node count after the initial degree filter and
@@ -591,10 +590,8 @@ object Graph {
     * oracle for [[kCoreRun]]'s incremental degree maintenance
     * (GraphSpec pins result equality across both adaptive branches);
     * O(rounds · E), so never the production path. */
-  private[graft] def kCoreRecompute(edges: DataFrame, k: Int,
-                                    maxIter: Int = 30): DataFrame = {
+  private[graft] def kCoreRecompute(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     var e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .localCheckpoint()
@@ -604,7 +601,7 @@ object Graph {
     var prev = -1L
     var i = 0
     var n = survivors.count()
-    while (prev != n && i < maxIter) {
+    while (prev != n && i < 30) {
       prev = n
       val keep = survivors.select(col("id"))
       e = e
@@ -965,8 +962,8 @@ object Graph {
     * as [[kCoreRun]]: rounds continue until no edge falls below k−2
     * (1-row aggregate per round) or `maxIter` caps, returning the
     * partially-peeled set. */
-  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 20): DataFrame =
-    kTrussRun(edges, k, maxIter).truss
+  def kTruss(edges: DataFrame, k: Int): DataFrame =
+    kTrussRun(edges, k).truss
 
   /** [[kTruss]] with the per-round telemetry attached (same plan, same
     * result — q_ktruss runs through this path). */
@@ -1066,10 +1063,8 @@ object Graph {
     * support aggregate + filter every round. Kept as the independent
     * oracle for [[kTrussRun]]'s incremental maintenance (GraphSpec pins
     * result equality); O(rounds · E^1.5), so never the production path. */
-  private[graft] def kTrussRecompute(edges: DataFrame, k: Int,
-                                     maxIter: Int = 20): DataFrame = {
+  private[graft] def kTrussRecompute(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 3, s"k must be >= 3: $k")
-    require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     var canon = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -1079,7 +1074,7 @@ object Graph {
     var prev = -1L
     var n = canon.count()
     var i = 0
-    while (prev != n && i < maxIter) {
+    while (prev != n && i < 20) {
       prev = n
       val filtered = supportOf(canon)
         .filter(col("support") >= k - 2)
@@ -1223,7 +1218,7 @@ object Graph {
     * exact integer Σ lcm(1..maxDepth)/d and divided ONCE, so the float
     * is a single deterministic rounding on both engines. */
   def landmarkDistances(edges: DataFrame, numLandmarks: Int = 4,
-                        maxDepth: Int = 4, roundScale: Int = 6): DataFrame = {
+                        maxDepth: Int = 4): DataFrame = {
     require(numLandmarks >= 1 && numLandmarks <= 64,
       s"numLandmarks must be in [1, 64]: $numLandmarks")
     require(maxDepth >= 1 && maxDepth <= 12,
@@ -1266,7 +1261,7 @@ object Graph {
           floor(lit(lcmAll.toDouble) / col("d")).cast("long"))
           .otherwise(0L)).as("__hsum"))
       .select(col("landmark"), col("n_reached"), col("max_dist"),
-        round(col("__hsum").cast("double") / lcmAll.toDouble, roundScale)
+        round(col("__hsum").cast("double") / lcmAll.toDouble, 6)
           .as("harmonic_centrality"))
   }
 }

@@ -14,30 +14,26 @@ import org.apache.spark.sql.functions._
 object Joins {
 
   /** Left enrichment join (reference/main.py:91): fact LEFT JOIN a small
-    * extracted-attributes table on a key. `hint`s broadcast when the right
-    * side is a bounded dimension. */
-  def enrichLeft(fact: DataFrame, dim: DataFrame, key: String,
-                 broadcastDim: Boolean = true): DataFrame = {
-    val right = if (broadcastDim) broadcast(dim) else dim
-    fact.join(right, Seq(key), "left")
-  }
+    * extracted-attributes table on a key. The right side is a bounded
+    * dimension and is broadcast. */
+  def enrichLeft(fact: DataFrame, dim: DataFrame, key: String): DataFrame =
+    fact.join(broadcast(dim), Seq(key), "left")
 
   /** Full-outer entity merge with collision suffixing (reference/chat.py:119-132
     * `merge_ou_concat_campo_ticket`): chats ⟗ tickets on
     * `leftKey = rightKey`; columns present on both sides get deterministic
-    * `_<leftSuffix>` / `_<rightSuffix>` suffixes (pandas merge suffixes are
+    * `_chat` / `_ticket` suffixes (pandas merge suffixes are
     * implicit; Spark joins don't auto-suffix, so we rename before joining);
     * the join keys are coalesced into one output key column. */
   def fullOuterMerge(left: DataFrame, right: DataFrame,
                      leftKey: String, rightKey: String,
-                     leftSuffix: String = "chat", rightSuffix: String = "ticket",
                      outKey: String = "merge_key"): DataFrame = {
     val collisions = (left.columns.toSet intersect right.columns.toSet) - leftKey - rightKey
     def suffixed(df: DataFrame, suffix: String) =
       df.toDF(df.columns.map(c =>
         if (collisions.contains(c)) s"${c}_$suffix" else c).toIndexedSeq: _*)
-    val l = suffixed(left, leftSuffix)
-    val r = suffixed(right, rightSuffix)
+    val l = suffixed(left, "chat")
+    val r = suffixed(right, "ticket")
     val joined = l.join(r, l(leftKey) === r(rightKey), "full_outer")
     val outCols = coalesce(l(leftKey), r(rightKey)).as(outKey) +:
       (l.columns.filterNot(_ == leftKey).map(l(_)) ++
@@ -53,17 +49,12 @@ object Joins {
     * (enrichment columns null), so downstream stages can route/retry
     * failures without a second scan. Same broadcast posture as
     * [[enrichLeft]]. */
-  def enrichLeftWithError(fact: DataFrame, dim: DataFrame, key: String,
-                          errCol: String = "error",
-                          missMsg: String = "chat not found",
-                          broadcastDim: Boolean = true): DataFrame = {
-    require(!fact.columns.contains(errCol) && !dim.columns.contains(errCol),
-      s"error column '$errCol' already exists in the input")
-    val marked = dim.withColumn("__hit", lit(1))
-    val right = if (broadcastDim) broadcast(marked) else marked
-    fact.join(right, Seq(key), "left")
-      .withColumn(errCol,
-        when(col("__hit").isNull, lit(missMsg)).otherwise(lit(null).cast("string")))
+  def enrichLeftWithError(fact: DataFrame, dim: DataFrame, key: String): DataFrame = {
+    require(!fact.columns.contains("error") && !dim.columns.contains("error"),
+      "column 'error' already exists in the input")
+    fact.join(broadcast(dim.withColumn("__hit", lit(1))), Seq(key), "left")
+      .withColumn("error", when(col("__hit").isNull, lit("chat not found"))
+        .otherwise(lit(null).cast("string")))
       .drop("__hit")
   }
 
@@ -93,21 +84,20 @@ object Joins {
     * set every ingest. Here the destination keys fold into one compact
     * sketch (`BloomFilterAggregate` merges map-side — only KB-MB sketches
     * cross the wire, no key shuffle), the batch probes it as a pure
-    * map-side filter, and only the ~fpp false-positive fraction plus the
+    * map-side filter, and only the ~3% false-positive fraction plus the
     * true duplicates reach the exact anti-join. "Definitely absent" is
     * certain for a Bloom filter, so no-false-negative soundness holds and
     * the exact join on the survivors restores exactness.
     *
     * The one-row sketch collect is a legitimate tiny-collect (like the
-    * IVF centroid table): the sketch is `optimalNumOfBits(expected, fpp)`
+    * IVF centroid table): the sketch is `optimalNumOfBits(expected, 0.03)`
     * bits regardless of destination size. Size `expectedItems` to the
     * destination's distinct-key cardinality; an undersized sketch only
     * raises the false-positive rate (more rows take the exact-join path),
     * never breaks correctness. Rows with a null key hash skip the probe
     * and take the exact path, matching the anti-join's null semantics. */
   def dedupAgainstBloom(batch: DataFrame, dest: DataFrame, keyCols: Seq[String],
-                        expectedItems: Long = 1000000L,
-                        fpp: Double = 0.03): DataFrame = {
+                        expectedItems: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.graft.expressions.{bloomFilterAgg, mightContain}
     keyCols.foldLeft(batch) { (b, k) =>
       // no distinct: a Bloom insert is idempotent, and the exact
@@ -115,7 +105,7 @@ object Joins {
       val destKeys = dest.select(col(k)).na.drop()
       val hashOf = (c: org.apache.spark.sql.Column) => xxhash64(c.cast("string"))
       val sketch = destKeys
-        .select(bloomFilterAgg(hashOf(col(k)), expectedItems, fpp).as("bf"))
+        .select(bloomFilterAgg(hashOf(col(k)), expectedItems, 0.03).as("bf"))
         .head().getAs[Array[Byte]]("bf")
       if (sketch == null) b // empty destination: everything is new
       else {
@@ -136,14 +126,13 @@ object Joins {
 
   /** Skew-mitigating salted join: the big side's rows are salted into
     * `buckets` sub-keys (uniform per-row hash — any salt works for an
-    * inner/left equi-join since the small side is replicated across all
+    * inner equi-join since the small side is replicated across all
     * salts), the small side is replicated once per salt, and the join key
     * becomes (key, salt) — a hot key's rows now spread over `buckets`
     * shuffle partitions instead of one straggler. Result is identical to
-    * `big.join(small, key, how)` (JoinsSpec pins it against the plain
-    * join on a skewed fixture). Inner/left joins only: an outer join
-    * would emit `buckets` copies of each unmatched replicated small-side
-    * row.
+    * `big.join(small, key)` (JoinsSpec pins it against the plain join on
+    * a skewed fixture). Inner join only: an outer join would emit
+    * `buckets` copies of each unmatched replicated small-side row.
     *
     * When to reach for which skew tool (JoinsSpec demonstrates the AQE
     * row with plan assertions):
@@ -163,15 +152,12 @@ object Joins {
     *    aggregate), and pre-shuffled inputs (bucketed tables) where no
     *    exchange exists for AQE to re-plan. */
   def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 buckets: Int, how: String = "inner"): DataFrame = {
-    require(how == "inner" || how == "left" || how == "leftouter" || how == "left_outer",
-      s"saltedJoin supports inner/left joins only (got '$how'): outer joins " +
-        "would duplicate unmatched small-side rows per salt bucket")
+                 buckets: Int): DataFrame = {
     val salted = big.withColumn("__salt",
       pmod(hash(monotonically_increasing_id()), lit(buckets)))
     val replicated = small.withColumn("__salt",
       explode(sequence(lit(0), lit(buckets - 1))))
-    salted.join(replicated, Seq(key, "__salt"), how).drop("__salt")
+    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
   /** As-of join: for each left row (key, ts), attach the latest right row
@@ -278,20 +264,20 @@ object Joins {
     * newState = baseAgg ⊕ Σ_inserts (1, x) ⊖ Σ_deletes (1, x): one hash
     * aggregate over the (small) delta + one full-outer join on the key —
     * work ∝ |delta| + |touched keys|, never ∝ |base data|. Keys whose
-    * count reaches 0 are dropped (fully retired). Unknown `op` values
+    * count reaches 0 are dropped (fully retired). The state carries
+    * `cnt` and `sum_val` per key; the delta's `op` column is `I` or `D`
+    * (case-insensitive). Unknown `op` values
     * fail the job loudly (raise_error) rather than silently skewing the
     * state. `maintainAgg(agg(base), delta) == agg(apply(base, delta))`
     * is the oracle-checked contract; keep the summed column integral
     * (e.g. cents) if you need that equality BIT-exact — float sums
     * associate differently on the two paths. */
   def maintainAgg(baseAgg: DataFrame, delta: DataFrame, key: String,
-                  valCol: String, cntName: String = "cnt",
-                  sumName: String = "sum_val",
-                  opCol: String = "op"): DataFrame = {
-    val sign = when(upper(col(opCol)) === "I", 1L)
-      .when(upper(col(opCol)) === "D", -1L)
+                  valCol: String): DataFrame = {
+    val sign = when(upper(col("op")) === "I", 1L)
+      .when(upper(col("op")) === "D", -1L)
       .otherwise(raise_error(concat(lit("maintainAgg: unknown op "),
-        col(opCol))))
+        col("op"))))
     // a null value in the delta would desync cnt from sum (count moves,
     // sum doesn't) — reject loudly like an unknown op
     val deltaAgg = delta
@@ -304,11 +290,11 @@ object Joins {
     // (null != null) — base state and delta state for the "same" key
     baseAgg.join(deltaAgg, col(key) <=> col("__dKey"), "full_outer")
       .select(coalesce(col(key), col("__dKey")).as(key),
-        (coalesce(col(cntName), lit(0L)) + coalesce(col("__dCnt"), lit(0L)))
-          .as(cntName),
-        (coalesce(col(sumName), lit(0L)) + coalesce(col("__dSum"), lit(0L)))
-          .as(sumName))
-      .filter(col(cntName) > 0)
+        (coalesce(col("cnt"), lit(0L)) + coalesce(col("__dCnt"), lit(0L)))
+          .as("cnt"),
+        (coalesce(col("sum_val"), lit(0L)) + coalesce(col("__dSum"), lit(0L)))
+          .as("sum_val"))
+      .filter(col("cnt") > 0)
   }
 
   /** Keyed upsert = MERGE emulation without a transactional table format
@@ -391,8 +377,7 @@ object Joins {
     * before multiplying (row-count products overflow long at warehouse
     * scale). */
   def joinCardEstimate(left: DataFrame, leftKey: String,
-                       right: DataFrame, rightKey: String,
-                       roundScale: Int = 6): DataFrame = {
+                       right: DataFrame, rightKey: String): DataFrame = {
     val lHist = left.groupBy(col(leftKey).as("__k"))
       .agg(count(lit(1)).as("__cl"))
     val rHist = right.groupBy(col(rightKey).as("__k"))
@@ -412,10 +397,10 @@ object Joins {
     lTot.crossJoin(rTot).crossJoin(actual)
       .select(col("n_left"), col("n_right"),
         col("ndv_left"), col("ndv_right"),
-        round(est, roundScale).as("est_independence"),
+        round(est, 6).as("est_independence"),
         col("actual_rows"),
         round(when(col("actual_rows") > 0,
-          est / col("actual_rows").cast("double")), roundScale)
+          est / col("actual_rows").cast("double")), 6)
           .as("est_over_actual"))
   }
 }

@@ -430,10 +430,10 @@ object Multimodal {
     * partition's payload batch to a codec (that boundary is exactly
     * here — mapPartitions gives amortized per-batch setup, the Scala
     * analogue of mapInPandas batches). The stub emits a deterministic
-    * `featureDim`-float vector derived from payload bytes, and a
+    * 8-float vector derived from payload bytes, and a
     * decode_error column instead of failing the task (per-row error
     * capture, reference/chat.py:289-291 shape). */
-  def stubDecode(assets: DataFrame, featureDim: Int = 8): DataFrame = {
+  def stubDecode(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     val rows = assets.select(col("asset_id"), col("payload")).rdd.mapPartitions { it =>
       // per-partition setup would init the codec once here
@@ -443,10 +443,10 @@ object Multimodal {
         if (payload == null)
           Row(id, null, "null payload")
         else {
-          val feat = Array.tabulate(featureDim) { i =>
+          val feat = Array.tabulate(8) { i =>
             var h = 1125899906842597L
             var j = i
-            while (j < payload.length) { h = 31 * h + payload(j); j += featureDim }
+            while (j < payload.length) { h = 31 * h + payload(j); j += 8 }
             (h % 1000).toFloat / 1000.0f
           }
           Row(id, feat.toSeq, null)

@@ -20,7 +20,7 @@ object Nested {
     * `status.name` → column "status.name" (callers typically sanitize
     * names afterwards). Arrays are left intact (flattened only by explicit
     * explode/pivot operators). */
-  def flattenStructs(df: DataFrame, sep: String = "."): DataFrame = {
+  def flattenStructs(df: DataFrame): DataFrame = {
     // Column references are built with each path segment backtick-quoted, so
     // field names containing dots/spaces/special characters (the messy JSON
     // names json_normalize must cope with, e.g. "Número do ticket") resolve
@@ -33,7 +33,7 @@ object Nested {
         val q = s"$quoted.${quote(f.name)}"
         f.dataType match {
           case st: StructType => expandNested(st, p, q)
-          case _ => Seq(col(q).alias(p.replace(".", sep)))
+          case _ => Seq(col(q).alias(p))
         }
       }
     val cols = df.schema.fields.flatMap { f =>

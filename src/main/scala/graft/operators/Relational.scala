@@ -44,16 +44,16 @@ object Relational {
       when(col(keyCol).isNull || trim(col(keyCol)) === "", generator)
         .otherwise(col(keyCol)))
 
-  /** Audit timestamp constant per run (reference/main.py:110-112).
+  /** Audit timestamp constant per run (reference/main.py:110-112), in
+    * the `upload` column.
     *
     * `fixedClock` (an ISO `yyyy-MM-dd HH:mm:ss` literal) pins the stamp for
     * reproducible runs / oracle checks; None (the default, matching the
     * reference) stamps the query-start `current_timestamp()`, which Spark
     * already evaluates once per query, not per row — constant-per-run either
     * way. */
-  def auditTimestamp(df: DataFrame, colName: String = "upload",
-                     fixedClock: Option[String] = None): DataFrame =
-    df.withColumn(colName,
+  def auditTimestamp(df: DataFrame, fixedClock: Option[String] = None): DataFrame =
+    df.withColumn("upload",
       fixedClock.map(ts => lit(ts).cast("timestamp")).getOrElse(current_timestamp()))
 
   /** ISO-8601 formatting with numeric offset, offset rendered without colon —

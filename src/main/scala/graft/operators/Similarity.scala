@@ -307,8 +307,7 @@ object Similarity {
     * the scale path runs it on a deterministic sample (intrinsic dim is
     * a population property; a few hundred points suffice per the
     * paper). */
-  def twoNN(embeddings: DataFrame, idCol: String, vecCol: String,
-            roundScale: Int = 6): DataFrame = {
+  def twoNN(embeddings: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val a = embeddings.select(col(idCol).as("__ida"), col(vecCol).as("__va"))
     val b = embeddings.select(col(idCol).as("__idb"), col(vecCol).as("__vb"))
     val d2 = a.crossJoin(b)
@@ -331,7 +330,7 @@ object Similarity {
       .select(col("n_points"), col("n_used"),
         round(when(col("__slog") > 0.0,
           lit(2.0) * col("n_used").cast("double") / col("__slog")),
-          roundScale).as("intrinsic_dim"))
+          6).as("intrinsic_dim"))
   }
 
   /** SemDeDup-style semantic near-dup pairs: all (id_a < id_b) pairs
@@ -1209,8 +1208,7 @@ object Similarity {
     * is the entire point of quantizing there. The all-zero vector has
     * scale 0 and quantizes to all-zero codes with zero error (guarded,
     * never NaN). */
-  def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String,
-                   roundScale: Int = 6): DataFrame = {
+  def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val staged = emb
       .select(col(idCol),
         transform(col(vecCol), x => x.cast("double")).as("__e"))
@@ -1227,11 +1225,11 @@ object Similarity {
       .withColumn("codes", codes)
       .withColumn("__errs", errs)
       .select(col(idCol),
-        round(col("__scale"), roundScale).as("scale"),
+        round(col("__scale"), 6).as("scale"),
         col("codes"),
-        round(array_max(col("__errs")), roundScale).as("max_abs_err"),
+        round(array_max(col("__errs")), 6).as("max_abs_err"),
         round(aggregate(col("__errs"), lit(0.0), (a, x) => a + x * x)
-          / size(col("__errs")), roundScale).as("mse"))
+          / size(col("__errs")), 6).as("mse"))
   }
 
   /** Top-k maximum-inner-product search ON the int8 codes: score ≈
@@ -1246,7 +1244,7 @@ object Similarity {
     * rounded BEFORE ranking with an id tiebreak, so the top-k set is
     * engine-deterministic. */
   def int8TopK(emb: DataFrame, idCol: String, vecCol: String,
-               queryId: Long, k: Int, roundScale: Int = 6): DataFrame = {
+               queryId: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     val quantized = quantizeInt8(emb, idCol, vecCol)
       .select(col(idCol), col("scale"), col("codes"))
@@ -1260,7 +1258,7 @@ object Similarity {
     quantized
       .filter(col(idCol) =!= queryId)
       .select(col(idCol),
-        round(col("scale") * qScale * intDot.cast("double"), roundScale)
+        round(col("scale") * qScale * intDot.cast("double"), 6)
           .as("approx_dot"))
       .orderBy(col("approx_dot").desc, col(idCol).asc)
       .limit(k)
@@ -1292,32 +1290,28 @@ object Similarity {
 
   /** Reciprocal-rank fusion (public: Cormack, Clarke & Büttcher
     * SIGIR'09): merge two rankings of the same id space by
-    * score = Σ 1/(kConst + rank) — THE standard hybrid-retrieval merge
+    * score = Σ 1/(60 + rank) — THE standard hybrid-retrieval merge
     * (lexical BM25 + embedding ANN), robust precisely because it uses
     * only ranks, never the incomparable raw scores. Ids present in one
     * list only contribute that list's term.
     *
     * Inputs carry (idCol, rank); output: (idCol, rrf_score, rank_a,
-    * rank_b) top-`topN`. One full-outer join on the id over two
+    * rank_b) top-20. One full-outer join on the id over two
     * ALREADY-bounded top-N lists (candidate-list-sized, not corpus-
     * sized) + TakeOrdered. The two 1/(k+r) terms are added in a fixed
     * order, so the score is engine-deterministic before its round. */
-  def rrfFuse(a: DataFrame, b: DataFrame, idCol: String,
-              kConst: Int = 60, topN: Int = 20,
-              roundScale: Int = 6): DataFrame = {
-    require(kConst >= 1 && topN > 0,
-      s"need kConst>=1, topN>0: $kConst/$topN")
+  def rrfFuse(a: DataFrame, b: DataFrame, idCol: String): DataFrame = {
     val ra = a.select(col(idCol), col("rank").as("__ra"))
     val rb = b.select(col(idCol), col("rank").as("__rb"))
     ra.join(rb, Seq(idCol), "full_outer")
       .select(col(idCol),
         round(
-          coalesce(lit(1.0) / (col("__ra") + kConst), lit(0.0))
-            + coalesce(lit(1.0) / (col("__rb") + kConst), lit(0.0)),
-          roundScale).as("rrf_score"),
+          coalesce(lit(1.0) / (col("__ra") + 60), lit(0.0))
+            + coalesce(lit(1.0) / (col("__rb") + 60), lit(0.0)),
+          6).as("rrf_score"),
         col("__ra").as("rank_a"), col("__rb").as("rank_b"))
       .orderBy(col("rrf_score").desc, col(idCol).asc)
-      .limit(topN)
+      .limit(20)
   }
 
   /** MMR re-ranking (Carbonell & Goldstein, SIGIR'98): greedily order the

@@ -19,8 +19,7 @@ object Stats {
     * after the aggregate — one shuffle on the group key, partial
     * aggregation map-side. Groups with < 2 rows or zero variance yield
     * null slope/intercept/r2 rather than NaN/Infinity. */
-  def groupOls(df: DataFrame, groupCol: String, xCol: String, yCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def groupOls(df: DataFrame, groupCol: String, xCol: String, yCol: String): DataFrame = {
     val agg = df.groupBy(col(groupCol)).agg(
       count(lit(1)).as("n"),
       covar_samp(col(xCol), col(yCol)).as("__cov"),
@@ -35,9 +34,9 @@ object Stats {
     val r2 = when(col("__varx") > 0 && col("__vary") > 0,
       (col("__cov") * col("__cov")) / (col("__varx") * col("__vary")))
     agg.select(col(groupCol), col("n"),
-      round(slope, roundScale).as("slope"),
-      round(col("__ybar") - slope * col("__xbar"), roundScale).as("intercept"),
-      round(r2, roundScale).as("r2"))
+      round(slope, 6).as("slope"),
+      round(col("__ybar") - slope * col("__xbar"), 6).as("intercept"),
+      round(r2, 6).as("r2"))
   }
 
   /** Sample-ratio-mismatch (SRM) check: the χ² goodness-of-fit statistic
@@ -51,8 +50,7 @@ object Stats {
     * dyadic default ratio keep the statistic engine-portable at the 6dp
     * round. */
   def sampleRatioCheck(df: DataFrame, armCol: String,
-                       armA: String, armB: String, ratioA: Double = 0.5,
-                       roundScale: Int = 6): DataFrame = {
+                       armA: String, armB: String, ratioA: Double = 0.5): DataFrame = {
     require(ratioA > 0 && ratioA < 1, s"ratioA must be in (0,1): $ratioA")
     val counts = df.filter(col(armCol).isin(armA, armB))
       .agg(sum(when(col(armCol) === armA, 1L).otherwise(0L)).as("n_a"),
@@ -64,7 +62,7 @@ object Stats {
       (col("n_a") - ea) * (col("n_a") - ea) / ea
         + (col("n_b") - eb) * (col("n_b") - eb) / eb)
     counts.select(col("n_a"), col("n_b"),
-      round(chi2, roundScale).as("srm_chi2"))
+      round(chi2, 6).as("srm_chi2"))
   }
 
   /** Two-sample Kolmogorov–Smirnov statistic: max |ECDF_a − ECDF_b| —
@@ -80,8 +78,7 @@ object Stats {
     * billions of distinct points). ECDF fractions are exact-integer
     * divisions — deterministic cross-engine. */
   def ksStatistic(df: DataFrame, sideCol: String, valCol: String,
-                  sideA: String, sideB: String,
-                  roundScale: Int = 6): DataFrame = {
+                  sideA: String, sideB: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // null values are excluded: an ECDF is defined over observed values,
     // and engines disagree on where NULL sorts (Spark ascending = NULLS
@@ -90,7 +87,7 @@ object Stats {
     sideCumGrid(df, sideCol, col(valCol), sideA, sideB)
       .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
         round(max(abs(col("__cuma") / col("__na")
-          - col("__cumb") / col("__nb"))), roundScale).as("ks"))
+          - col("__cumb") / col("__nb"))), 6).as("ks"))
   }
 
   /** Shared two-sample ECDF grid (r16): per distinct value `__v`, side
@@ -136,8 +133,7 @@ object Stats {
     * the exact-rational KS fractions. Nulls are excluded (ECDF contract,
     * NULL sort order is engine-dependent). */
   def wasserstein1(df: DataFrame, sideCol: String, valCol: String,
-                   sideA: String, sideB: String,
-                   roundScale: Int = 6): DataFrame = {
+                   sideA: String, sideB: String): DataFrame = {
     val grid = sideCumGrid(df, sideCol, col(valCol).cast("double"),
       sideA, sideB)
     Prefix.leadAcross(grid, Nil, "__v", "__v", wide = Prefix.isWide(df))
@@ -145,7 +141,7 @@ object Stats {
       .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
         round(sum(abs(col("__cuma") / col("__na")
             - col("__cumb") / col("__nb")) * col("__gap")),
-          roundScale).as("w1"))
+          6).as("w1"))
   }
 
   /** Two-sample 1-D energy distance (Székely & Rizzo, InterStat '04):
@@ -165,8 +161,7 @@ object Stats {
     * gap)² × spacing via lead. Segment products are floating sums →
     * rounded. Nulls excluded (ECDF contract). */
   def energyDistance(df: DataFrame, sideCol: String, valCol: String,
-                     sideA: String, sideB: String,
-                     roundScale: Int = 6): DataFrame = {
+                     sideA: String, sideB: String): DataFrame = {
     val grid = sideCumGrid(df, sideCol, col(valCol).cast("double"),
       sideA, sideB)
     Prefix.leadAcross(grid, Nil, "__v", "__v", wide = Prefix.isWide(df))
@@ -175,7 +170,7 @@ object Stats {
         - col("__cumb") / col("__nb"))
       .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
         round(sum(lit(2.0) * col("__d") * col("__d") * col("__gap")),
-          roundScale).as("e_dist"))
+          6).as("e_dist"))
   }
 
   /** Two-sample Anderson–Darling statistic (Pettitt, Biometrika '76),
@@ -195,8 +190,7 @@ object Stats {
     * over the distinct-value table, one fold. Floating term sums →
     * rounded. */
   def andersonDarling(df: DataFrame, sideCol: String, valCol: String,
-                      sideA: String, sideB: String,
-                      roundScale: Int = 6): DataFrame = {
+                      sideA: String, sideB: String): DataFrame = {
     sideCumGrid(df, sideCol, col(valCol).cast("double"), sideA, sideB)
       .withColumn("__nn", (col("__na") + col("__nb")).cast("double"))
       .withColumn("__h", (col("__cuma") + col("__cumb")).cast("double")
@@ -210,7 +204,7 @@ object Stats {
             (col("__ca") + col("__cb")).cast("double")
               * col("__d") * col("__d")
               / (col("__h") * (lit(1.0) - col("__h"))))),
-          roundScale).as("a2"))
+          6).as("a2"))
   }
 
   /** Cochran–Armitage trend test (Cochran, Biometrics '54; Armitage
@@ -225,8 +219,7 @@ object Stats {
     * one fold over the score table. All moments are exact-integer
     * sums; p̄ and the weighted sums mix into a √ → z rounds. Null z on
     * degenerate inputs (all success, none, or a single score). */
-  def cochranArmitage(df: DataFrame, scoreCol: String, successCol: Column,
-                      roundScale: Int = 6): DataFrame = {
+  def cochranArmitage(df: DataFrame, scoreCol: String, successCol: Column): DataFrame = {
     val perScore = df.filter(col(scoreCol).isNotNull)
       .groupBy(col(scoreCol).cast("double").as("__w"))
       .agg(count(lit(1)).as("__n"),
@@ -249,7 +242,7 @@ object Stats {
         (col("__p") * col("__wn")).as("t_expected"),
         round(when(col("__var") > 0,
           (col("__t") - col("__p") * col("__wn")) / sqrt(col("__var"))),
-          roundScale).as("z"))
+          6).as("z"))
   }
 
   /** Peaks-over-threshold GPD tail fit by method of moments (Pickands,
@@ -257,6 +250,7 @@ object Stats {
     * for the MoM recipe): over excesses y = x−u of a high threshold u,
     * ξ̂ = ½(1 − m²/v), β̂ = ½m(m²/v + 1) from the excess mean/variance,
     * and the return-level estimate x_p = u + (β/ξ)((( (1−p)/ζ_u )^−ξ) − 1)
+    * at p = 0.999
     * with ζ_u = n_exc/N — EXTRAPOLATED tail quantiles: an empirical
     * p99.99 needs 10⁴+ tail points, the GPD fit prices it from however
     * many exceedances exist (latency SLOs, value caps, outlier fences
@@ -270,9 +264,8 @@ object Stats {
     *
     * Shape: one filtered 1-row moment aggregate + arithmetic — no
     * window, no join; the corpus is touched once. */
-  def gpdTailFit(df: DataFrame, valCol: String, threshold: Double,
-                 p: Double = 0.999, roundScale: Int = 6): DataFrame = {
-    require(p > 0 && p < 1, s"quantile must be in (0,1): $p")
+  def gpdTailFit(df: DataFrame, valCol: String, threshold: Double): DataFrame = {
+    val p = 0.999
     val x = df.filter(col(valCol).isNotNull)
       .select(col(valCol).cast("double").as("__x"))
     x.agg(count(lit(1)).as("n_total"),
@@ -289,15 +282,15 @@ object Stats {
       .withColumn("__zeta", col("n_exceed").cast("double")
         / col("n_total").cast("double"))
       .select(col("n_total"), col("n_exceed"),
-        round(col("__m"), roundScale).as("mean_excess"),
-        round(col("__xi"), roundScale).as("xi"),
-        round(col("__beta"), roundScale).as("beta"),
+        round(col("__m"), 6).as("mean_excess"),
+        round(col("__xi"), 6).as("xi"),
+        round(col("__beta"), 6).as("beta"),
         round(when(col("__xi").isNotNull
             && abs(col("__xi")) > 1e-12 && col("__xi") < 0.5
             && col("__zeta") > (lit(1.0) - p),
           lit(threshold) + col("__beta") / col("__xi")
             * (pow((lit(1.0) - p) / col("__zeta"), -col("__xi")) - 1.0)),
-          roundScale).as("q_est"))
+          6).as("q_est"))
   }
 
   /** Theil T inequality index with exact between/within-group
@@ -322,8 +315,7 @@ object Stats {
     * — T_g folds from Σx and Σ x ln x via T_g = Σ(x/Σx)ln(x/μ_g) =
     * (Σ x ln x)/(N_g μ_g) − ln μ_g — then a ≤#groups-row rollup; no
     * window, no pair work, shuffle ∝ groups. */
-  def theilDecomposition(df: DataFrame, groupCol: String, valCol: String,
-                         roundScale: Int = 6): DataFrame = {
+  def theilDecomposition(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val pos = df.filter(col(valCol).isNotNull && col(valCol) > 0)
       .select(col(groupCol).as("__g"), col(valCol).cast("double").as("__x"))
     val perGroup = pos.groupBy(col("__g"))
@@ -337,10 +329,10 @@ object Stats {
       .withColumn("__s", col("__sx") / col("__tx"))
     val decomp = shared.agg(
       round(sum(col("__s") * log(col("__mu_g") / col("__mu"))),
-        roundScale).as("t_between"),
-      round(sum(col("__s") * col("__tg")), roundScale).as("t_within"),
+        6).as("t_between"),
+      round(sum(col("__s") * col("__tg")), 6).as("t_within"),
       round(sum(col("__s") * (log(col("__mu_g") / col("__mu"))
-        + col("__tg"))), roundScale).as("t_total"))
+        + col("__tg"))), 6).as("t_total"))
     // mean_val / value_share are exact-integer ratios for integer value
     // columns — deliberately UNROUNDED (the rational-halves rule); only
     // the ln-carrying Theil terms round.
@@ -348,7 +340,7 @@ object Stats {
       .select(col("__g").as(groupCol), col("n"),
         col("__mu_g").as("mean_val"),
         col("__s").as("value_share"),
-        round(col("__tg"), roundScale).as("t_group"))
+        round(col("__tg"), 6).as("t_group"))
       .crossJoin(broadcast(decomp))
   }
 
@@ -400,8 +392,7 @@ object Stats {
     * statistic is rounded (KS's exact rationals don't survive
     * squaring+weighting). Nulls excluded per the ECDF contract. */
   def cramerVonMises(df: DataFrame, sideCol: String, valCol: String,
-                     sideA: String, sideB: String,
-                     roundScale: Int = 6): DataFrame = {
+                     sideA: String, sideB: String): DataFrame = {
     sideCumGrid(df, sideCol, col(valCol), sideA, sideB)
       .withColumn("__d",
         col("__cuma") / col("__na") - col("__cumb") / col("__nb"))
@@ -412,7 +403,7 @@ object Stats {
         round(col("n_a").cast("double") * col("n_b").cast("double")
           / ((col("n_a") + col("n_b")).cast("double")
             * (col("n_a") + col("n_b")).cast("double"))
-          * col("__s"), roundScale).as("cvm"))
+          * col("__s"), 6).as("cvm"))
   }
 
   /** McNemar's test on paired binary flags (McNemar, Psychometrika'47):
@@ -457,8 +448,7 @@ object Stats {
     * and the tie terms come off the marginals. Products are
     * exact-integer doubles (exact to 2^53); the final √ is the one
     * libm step, so τ-b is rounded while n/C/D stay exact. */
-  def kendallTauB(df: DataFrame, xCol: String, yCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def kendallTauB(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
       .agg(count(lit(1)).as("__c"))
@@ -494,7 +484,7 @@ object Stats {
             * ((col("__n").cast("double") * col("__n").cast("double")
               - col("__n").cast("double")) / 2.0
               - (col("__sy2") - col("__n").cast("double")) / 2.0)),
-          roundScale).as("tau_b"))
+          6).as("tau_b"))
   }
 
   /** Goodman–Kruskal γ and Somers' D (public: Goodman & Kruskal JASA'54;
@@ -513,8 +503,7 @@ object Stats {
     * exact to 2^53), and the statistics are two divisions — every input
     * to the final expressions is an exact integer, so the output is
     * engine-portable at any corpus size. */
-  def gammaSomers(df: DataFrame, xCol: String, yCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def gammaSomers(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
       .agg(count(lit(1)).as("__c"))
@@ -541,14 +530,14 @@ object Stats {
         col("__dd").cast("long").as("discordant"),
         round(when(col("__cc") + col("__dd") > 0,
           (col("__cc") - col("__dd")) / (col("__cc") + col("__dd"))),
-          roundScale).as("gamma"),
+          6).as("gamma"),
         // n₀ − n_x = (n² − Σ_x t_x²)/2: unordered pairs differing on x
         round(when(col("__n") > 1 &&
             (col("__n").cast("double") * col("__n").cast("double")
               - col("__sx2")) > 0,
           (col("__cc") - col("__dd"))
             / ((col("__n").cast("double") * col("__n").cast("double")
-              - col("__sx2")) / 2.0)), roundScale).as("somers_d_yx"))
+              - col("__sx2")) / 2.0)), 6).as("somers_d_yx"))
   }
 
   /** Probabilistic-forecast quality decomposition: row-exact Brier score
@@ -563,21 +552,19 @@ object Stats {
     * [[isotonicCalibration]] (the fix).
     *
     * Shape: one row-level aggregate (Brier, n, base rate) + one
-    * ≤`bins`-row binned aggregate, merged by a 1-row broadcast cross
+    * ≤10-row binned aggregate, merged by a 1-row broadcast cross
     * join. Binned terms and the Brier are floating sums → rounded;
     * the decomposition identity holds exactly only when scores are
     * constant within bins, so brier and rel−res+unc are BOTH reported
     * (their gap is the within-bin variance term, a data readout, not an
     * error). */
   def forecastDecomposition(df: DataFrame, scoreCol: String,
-                            labelCol: String, bins: Int = 10,
-                            roundScale: Int = 6): DataFrame = {
-    require(bins > 0, s"bins must be positive: $bins")
+                            labelCol: String): DataFrame = {
     val s = greatest(least(col(scoreCol).cast("double"), lit(1.0)), lit(0.0))
     val base = df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(s.as("__s"),
         when(col(labelCol).cast("boolean"), 1.0).otherwise(0.0).as("__y"),
-        least(floor(s * bins).cast("long"), lit(bins - 1L)).as("__bin"))
+        least(floor(s * 10).cast("long"), lit(9L)).as("__bin"))
     val row = base.agg(count(lit(1)).as("n"),
       sum(col("__y")).cast("double").as("__pos"),
       sum(((col("__s") - col("__y")) * (col("__s") - col("__y"))))
@@ -588,29 +575,29 @@ object Stats {
     perBin.crossJoin(broadcast(row))
       .agg(
         max(col("n")).as("n"),
-        round(max(col("__sqsum") / col("n").cast("double")), roundScale)
+        round(max(col("__sqsum") / col("n").cast("double")), 6)
           .as("brier"),
         round(sum(col("__nb") / col("n").cast("double")
-          * abs(col("__acc") - col("__conf"))), roundScale).as("ece"),
+          * abs(col("__acc") - col("__conf"))), 6).as("ece"),
         round(sum(col("__nb") / col("n").cast("double")
           * (col("__conf") - col("__acc"))
-          * (col("__conf") - col("__acc"))), roundScale).as("reliability"),
+          * (col("__conf") - col("__acc"))), 6).as("reliability"),
         round(sum(col("__nb") / col("n").cast("double")
           * (col("__acc") - col("__pos") / col("n").cast("double"))
           * (col("__acc") - col("__pos") / col("n").cast("double"))),
-          roundScale).as("resolution"),
+          6).as("resolution"),
         round(max(col("__pos") / col("n").cast("double")
           * (lit(1.0) - col("__pos") / col("n").cast("double"))),
-          roundScale).as("uncertainty"))
+          6).as("uncertainty"))
   }
 
   /** Yuen's trimmed-mean two-sample test (Yuen, Biometrika'74): Welch's
-    * t on `trimFrac`-trimmed means with winsorized variances — the
+    * t on 20%-trimmed means with winsorized variances — the
     * heavy-tail-robust member of the experimentation ladder
     * ([[welchTTest]] mean / [[mannWhitney]] rank / Yuen trimmed /
     * [[quantileTreatmentEffect]] quantile): a handful of whale users
     * moves Welch's t arbitrarily but touches Yuen's only through the
-    * clamp. Per arm g = ⌊trim·n⌋ rows leave each tail (by rank; equal
+    * clamp. Per arm g = ⌊0.2·n⌋ rows leave each tail (by rank; equal
     * values make the trimmed multiset order-independent), the trimmed
     * mean averages the middle h = n−2g, the winsorized variance clamps
     * the tails to the retained extremes; t = (m̄₁−m̄₂)/√(d₁+d₂) with
@@ -621,18 +608,15 @@ object Stats {
     * and means are float sums → t and df are rounded; h counts stay
     * exact. */
   def yuenTrimmedTest(df: DataFrame, armCol: String, valCol: String,
-                      armA: String, armB: String, trimFrac: Double = 0.2,
-                      roundScale: Int = 6): DataFrame = {
+                      armA: String, armB: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(trimFrac >= 0 && trimFrac < 0.5,
-      s"trimFrac must be in [0, 0.5): $trimFrac")
     val byArm = Window.partitionBy(col("__arm"))
     val ranked = df.filter(col(armCol).isin(armA, armB))
       .filter(col(valCol).isNotNull)
       .select(col(armCol).as("__arm"), col(valCol).cast("double").as("__x"))
       .withColumn("__r", row_number().over(byArm.orderBy(col("__x"))))
       .withColumn("__n", count(lit(1)).over(byArm))
-      .withColumn("__gg", floor(col("__n").cast("double") * trimFrac)
+      .withColumn("__gg", floor(col("__n").cast("double") * 0.2)
         .cast("long"))
     val arm = ranked
       .withColumn("__keep",
@@ -672,14 +656,14 @@ object Stats {
     a.crossJoin(broadcast(b))
       .withColumn("__c", col("__da") / (col("__da") + col("__db")))
       .select(col("h_a"), col("h_b"),
-        round(col("__tma"), roundScale).as("trimmed_mean_a"),
-        round(col("__tmb"), roundScale).as("trimmed_mean_b"),
+        round(col("__tma"), 6).as("trimmed_mean_a"),
+        round(col("__tmb"), 6).as("trimmed_mean_b"),
         round((col("__tma") - col("__tmb"))
-          / sqrt(col("__da") + col("__db")), roundScale).as("yuen_t"),
+          / sqrt(col("__da") + col("__db")), 6).as("yuen_t"),
         round(lit(1.0) / (col("__c") * col("__c")
             / (col("h_a") - 1L).cast("double")
           + (lit(1.0) - col("__c")) * (lit(1.0) - col("__c"))
-            / (col("h_b") - 1L).cast("double")), roundScale).as("df"))
+            / (col("h_b") - 1L).cast("double")), 6).as("df"))
   }
 
   /** Isotonic (PAV) calibration over score bins: the monotone
@@ -691,21 +675,20 @@ object Stats {
     * construction, pooling adjacent bins the raw rates leave inverted.
     *
     * Shape: the corpus collapses through ONE [[calibrationBins]]-style
-    * hash aggregate to ≤ `bins` rows; the minimax runs on the bins³
-    * grid (≤1000 rows at the default 10) built from prefix sums off a
+    * hash aggregate to ≤ 10 bins; the minimax runs on the bins³
+    * grid (≤1000 rows) built from prefix sums off a
     * localCheckpoint-pinned bin table (it feeds the grid twice + the
     * output join — the multi-consumer rule). Every interval average is
     * one division of exact integers and min/max pick one of them —
     * the fit is deterministic cross-engine and deliberately UNROUNDED. */
-  def isotonicCalibration(df: DataFrame, scoreCol: String, labelCol: String,
-                          bins: Int = 10): DataFrame = {
+  def isotonicCalibration(df: DataFrame, scoreCol: String,
+                          labelCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(bins > 0, s"bins must be positive: $bins")
     val s = greatest(least(col(scoreCol).cast("double"), lit(1.0)), lit(0.0))
     val ord = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val binned = df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .select(least(floor(s * bins).cast("long"), lit(bins - 1L)).as("bin"),
+      .select(least(floor(s * 10).cast("long"), lit(9L)).as("bin"),
         col(labelCol).cast("boolean").as("__y"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
@@ -749,14 +732,13 @@ object Stats {
     * partitioned windows over that grid — bounded by groups × distinct
     * values, never row count (bin/round a continuous column first, same
     * as [[ksStatistic]]). A single-group corpus reports null ks. */
-  def groupKsDrift(df: DataFrame, groupCol: String, valCol: String,
-                   roundScale: Int = 6): DataFrame =
+  def groupKsDrift(df: DataFrame, groupCol: String, valCol: String): DataFrame =
     groupEcdfGrid(df, groupCol, valCol)
       .groupBy(col("__g").as(groupCol))
       .agg(max(col("__ng")).as("n_group"),
         max(col("__nt") - col("__ng")).as("n_rest"),
         round(max(when(col("__nt") > col("__ng"), abs(groupRestDev))),
-          roundScale).as("ks"))
+          6).as("ks"))
 
   /** The group-vs-rest ECDF grid of [[groupKsDrift]] and
     * [[groupKuiperDrift]]: every group × the union value line (`__g`,
@@ -798,8 +780,7 @@ object Stats {
     * sums the largest positive and largest negative deviation, making
     * the statistic invariant under cyclic shifts of the support. Both
     * fold the one [[groupEcdfGrid]]. */
-  def groupKuiperDrift(df: DataFrame, groupCol: String, valCol: String,
-                       roundScale: Int = 6): DataFrame = {
+  def groupKuiperDrift(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val dev = groupRestDev
     groupEcdfGrid(df, groupCol, valCol)
       .groupBy(col("__g").as(groupCol))
@@ -812,7 +793,7 @@ object Stats {
           round(
             greatest(max(when(col("__nt") > col("__ng"), dev)), lit(0.0))
               + greatest(max(when(col("__nt") > col("__ng"), -dev)),
-                lit(0.0)), roundScale)).as("kuiper_v"))
+                lit(0.0)), 6)).as("kuiper_v"))
   }
 
   /** Cucconi joint location-scale test (public: Cucconi, Giorn. Econom.
@@ -829,10 +810,9 @@ object Stats {
     * EXACT integer sums of cp·(2·midrank)² in decimal (midranks are
     * half-integers, so 4·Σ S² is an exact integer), making the
     * statistic order-independent and engine-portable at any scale. */
-  def cucconiTest(df: DataFrame, scoreCol: String, labelCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def cucconiTest(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(20,0)")
-    val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
+    val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__sz", col("__cp") + col("__cn"))
     val blocks = Prefix.cumBefore(perScore, Nil, "__s", Seq("__sz"),
         wide = Prefix.isWide(df), withTotals = true)
@@ -862,12 +842,12 @@ object Stats {
     val c = (u * u + v * v - lit(2.0) * rho * u * v) /
       (lit(2.0) * (lit(1.0) - rho * rho))
     agg.select(col("n_x"), col("n_y"),
-      round(when(col("n_x") > 0 && col("n_y") > 0, u), roundScale)
+      round(when(col("n_x") > 0 && col("n_y") > 0, u), 6)
         .as("u_stat"),
-      round(when(col("n_x") > 0 && col("n_y") > 0, v), roundScale)
+      round(when(col("n_x") > 0 && col("n_y") > 0, v), 6)
         .as("v_stat"),
       round(when(col("n_x") > 0 && col("n_y") > 0 && rho * rho < 1.0, c),
-        roundScale).as("cucconi_c"))
+        6).as("cucconi_c"))
   }
 
   /** Welch's two-sample t statistic per metric group (public: Welch
@@ -886,8 +866,7 @@ object Stats {
     * against the group list if absent-arm groups are themselves the
     * signal you monitor). 6dp-rounded outputs. */
   def welchTTest(df: DataFrame, groupCol: String, armCol: String,
-                 valCol: String, armA: String, armB: String,
-                 roundScale: Int = 6): DataFrame = {
+                 valCol: String, armA: String, armB: String): DataFrame = {
     val stats = df
       .filter(col(armCol).isin(armA, armB))
       .groupBy(col(groupCol), col(armCol))
@@ -908,9 +887,9 @@ object Stats {
         (se2a * se2a / (col("n_a") - 1) + se2b * se2b / (col("n_b") - 1)))
     arm("a", armA).join(arm("b", armB), Seq(groupCol))
       .select(col(groupCol), col("n_a"), col("n_b"),
-        round(col("m_a") - col("m_b"), roundScale).as("mean_diff"),
-        round(t, roundScale).as("t_stat"),
-        round(dof, roundScale).as("welch_df"))
+        round(col("m_a") - col("m_b"), 6).as("mean_diff"),
+        round(t, 6).as("t_stat"),
+        round(dof, 6).as("welch_df"))
   }
 
   /** Per-group element-wise vector moments: count, mean and sample
@@ -923,16 +902,15 @@ object Stats {
     * factor — not a join) + ONE map-side-combined hash aggregate on
     * (group, dim). Output is #groups × dim rows. Singleton groups get
     * null variance (not NaN); float cancellation is clamped at 0. */
-  def vectorMoments(df: DataFrame, groupCol: String, vecCol: String,
-                    roundScale: Int = 6): DataFrame =
+  def vectorMoments(df: DataFrame, groupCol: String, vecCol: String): DataFrame =
     df.select(col(groupCol),
         posexplode(col(vecCol)).as(Seq("pos", "__v")))
       .select(col(groupCol), col("pos").cast("long").as("pos"),
         col("__v").cast("double").as("__v"))
       .groupBy(col(groupCol), col("pos"))
       .agg(count(lit(1)).as("n"),
-        round(avg(col("__v")), roundScale).as("mean"),
-        round(greatest(var_samp(col("__v")), lit(0.0)), roundScale)
+        round(avg(col("__v")), 6).as("mean"),
+        round(greatest(var_samp(col("__v")), lit(0.0)), 6)
           .as("variance"))
       .withColumn("variance",
         when(col("n") > 1, col("variance")))
@@ -940,7 +918,7 @@ object Stats {
   /** Per-group robust outliers by median absolute deviation (public:
     * Hampel '74; the `1.4826` consistency constant makes MAD estimate σ
     * under normality). Flags rows with
-    * |x − median| / (1.4826 · MAD) > z — the robust z-score, immune to
+    * |x − median| / (1.4826 · MAD) > 3 — the robust z-score, immune to
     * the outliers themselves inflating the spread the way mean/stddev
     * z-scores ([[graft.operators.Corpus.zscore]]) are.
     *
@@ -953,20 +931,18 @@ object Stats {
     * values in one task — fine to ~10⁸ rows per group; beyond that swap
     * in `percentile_approx` or [[graft.operators.Corpus.percentilesBinned]]
     * (same two-pass shape, sketch/histogram medians). */
-  def madOutliers(df: DataFrame, groupCol: String, valCol: String,
-                  z: Double = 3.0, consistency: Double = 1.4826,
-                  roundScale: Int = 6): DataFrame = {
+  def madOutliers(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val g = col(groupCol)
     val med = df.groupBy(g).agg(percentile(col(valCol), lit(0.5)).as("med"))
     val withMed = df.join(med, groupCol)
     val mad = withMed.groupBy(g)
       .agg(percentile(abs(col(valCol) - col("med")), lit(0.5)).as("mad"))
     val robustZ = when(col("mad") > 0,
-      round(abs(col(valCol) - col("med")) / (col("mad") * consistency),
-        roundScale))
+      round(abs(col(valCol) - col("med")) / (col("mad") * 1.4826),
+        6))
     withMed.join(mad, groupCol)
       .withColumn("robust_z", robustZ)
-      .filter(col("robust_z") > z)
+      .filter(col("robust_z") > 3.0)
   }
 
   /** ROC-AUC of a score as a ranker of a boolean label, via the
@@ -979,7 +955,7 @@ object Stats {
     * per-DISTINCT-SCORE (pos, neg) counts, then a cumulative window + a
     * 1-row reduce over the distinct-score table — the global window ranks
     * score VALUES, never raw rows, so its single task is bounded by score
-    * cardinality (scores are rounded to `roundScale` first, which both
+    * cardinality (scores are rounded to 6 decimals first, which both
     * bounds the cardinality and makes tie groups engine-portable).
     * Midranks are exact halves and counts are integers, so everything is
     * exact until the final division. Degenerate inputs (a single class)
@@ -989,17 +965,16 @@ object Stats {
     * counts — one hash aggregate, null score/label rows dropped. Both
     * metrics' tie semantics flow from this single definition. */
   private def perScoreCounts(df: DataFrame, scoreCol: String,
-                             labelCol: String, roundScale: Int): DataFrame =
+                             labelCol: String): DataFrame =
     df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .select(round(col(scoreCol).cast("double"), roundScale).as("__s"),
+      .select(round(col(scoreCol).cast("double"), 6).as("__s"),
         col(labelCol).cast("boolean").as("__y"))
       .groupBy(col("__s"))
       .agg(sum(when(col("__y"), 1L).otherwise(0L)).as("__cp"),
         sum(when(!col("__y"), 1L).otherwise(0L)).as("__cn"))
 
-  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String,
-             roundScale: Int = 6): DataFrame = {
-    val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
+  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+    val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__ct", col("__cp") + col("__cn"))
     // midrank of every row in a tie group = (#rows strictly below) +
     // (group size + 1)/2 — an exact half-integer
@@ -1016,7 +991,7 @@ object Stats {
             - col("n_pos").cast("double") * (col("n_pos") + 1).cast("double")
               / 2.0)
             / (col("n_pos").cast("double") * col("n_neg").cast("double"))),
-          roundScale).as("auc"))
+          6).as("auc"))
   }
 
   /** Average precision — the step-wise area under the precision-recall
@@ -1033,9 +1008,8 @@ object Stats {
     * share a threshold), one closing reduce. Counts and cumulative
     * sums are exact integers; precision ratios and the final division
     * are the only float ops. No positives → null. */
-  def averagePrecision(df: DataFrame, scoreCol: String, labelCol: String,
-                       roundScale: Int = 6): DataFrame = {
-    val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
+  def averagePrecision(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+    val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__ct", col("__cp") + col("__cn"))
     Prefix.cumBefore(perScore, Nil, "__s", Seq("__cp", "__ct"),
         desc = true, wide = Prefix.isWide(df))
@@ -1047,7 +1021,7 @@ object Stats {
           .as("__apNum"))
       .select(col("n_pos"), col("n_neg"),
         round(when(col("n_pos") > 0,
-          col("__apNum") / col("n_pos").cast("double")), roundScale)
+          col("__apNum") / col("n_pos").cast("double")), 6)
           .as("average_precision"))
   }
 
@@ -1058,23 +1032,22 @@ object Stats {
     * whether the score VALUES mean what they claim, which is what any
     * downstream threshold actually consumes).
     *
-    * ONE map-side-combined hash aggregate on the bin id; scores are
+    * ONE map-side-combined hash aggregate on the bin id (10 equal-width
+    * bins); scores are
     * clamped into [0,1] and the top edge folds into the last bin. Exact
-    * integer counts; means rounded at `roundScale`. */
-  def calibrationBins(df: DataFrame, scoreCol: String, labelCol: String,
-                      bins: Int = 10, roundScale: Int = 6): DataFrame = {
-    require(bins > 0, s"bins must be positive: $bins")
+    * integer counts; means rounded at 6 decimals. */
+  def calibrationBins(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val s = greatest(least(col(scoreCol).cast("double"), lit(1.0)), lit(0.0))
     df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .select(least(floor(s * bins).cast("long"), lit(bins - 1L)).as("bin"),
+      .select(least(floor(s * 10).cast("long"), lit(9L)).as("bin"),
         s.as("__s"), col(labelCol).cast("boolean").as("__y"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
-        round(avg(col("__s")), roundScale).as("mean_score"),
-        round(avg(when(col("__y"), 1.0).otherwise(0.0)), roundScale)
+        round(avg(col("__s")), 6).as("mean_score"),
+        round(avg(when(col("__y"), 1.0).otherwise(0.0)), 6)
           .as("pos_rate"))
       .withColumn("gap", round(col("pos_rate") - col("mean_score"),
-        roundScale))
+        6))
   }
 
   /** CUPED variance reduction (public: Deng, Xu, Kohavi & Walker,
@@ -1097,7 +1070,7 @@ object Stats {
     * Zero-variance x falls back to θ = 0 (no adjustment, never NaN);
     * a zero-variance y reports null var_reduction. */
   def cupedAdjusted(units: DataFrame, armCol: String, preCol: String,
-                    yCol: String, roundScale: Int = 6): DataFrame = {
+                    yCol: String): DataFrame = {
     val pooled = units.agg(
       avg(col(preCol)).as("__xbar"),
       covar_samp(col(preCol), col(yCol)).as("__cov"),
@@ -1109,20 +1082,20 @@ object Stats {
         col(yCol) - theta * (col(preCol) - col("__xbar")))
       .groupBy(col(armCol))
       .agg(count(lit(1)).as("n"),
-        round(avg(col(yCol)), roundScale).as("mean_y"),
-        round(avg(col("__adj")), roundScale).as("mean_y_adj"),
-        round(var_samp(col(yCol)), roundScale).as("var_y"),
-        round(var_samp(col("__adj")), roundScale).as("var_y_adj"),
+        round(avg(col(yCol)), 6).as("mean_y"),
+        round(avg(col("__adj")), 6).as("mean_y_adj"),
+        round(var_samp(col(yCol)), 6).as("var_y"),
+        round(var_samp(col("__adj")), 6).as("var_y_adj"),
         round(when(var_samp(col(yCol)) > 0,
           lit(1.0) - var_samp(col("__adj")) / var_samp(col(yCol))),
-          roundScale).as("var_reduction"))
+          6).as("var_reduction"))
   }
 
   /** Wald's sequential probability ratio test over the daily
     * success-rate stream (Wald, AMS '45): per day, the cumulative
     * log-likelihood ratio LLR = k·ln(p₁/p₀) + (n−k)·ln((1−p₁)/(1−p₀))
     * of H₁: rate = p₁ against H₀: rate = p₀, compared to the exact Wald
-    * boundaries A = ln((1−β)/α), B = ln(β/(1−α)) — the ORIGINAL
+    * boundaries A = ln((1−β)/α), B = ln(β/(1−α)) at α = 0.05 — the ORIGINAL
     * early-stopping design: unlike a fixed-horizon z-test peeked daily
     * (which inflates α badly), SPRT's error rates hold at EVERY
     * crossing, and it decides in ~½ the samples on average. Emits the
@@ -1138,12 +1111,11 @@ object Stats {
     * calendar-bounded exception). */
   def sprtDaily(events: DataFrame, tsCol: String, typeCol: String,
                 successType: String, p0: Double, p1: Double,
-                alpha: Double = 0.05, beta: Double = 0.2,
-                roundScale: Int = 6): DataFrame = {
+                beta: Double = 0.2): DataFrame = {
     require(p0 > 0 && p0 < 1 && p1 > 0 && p1 < 1 && p0 != p1,
       s"need distinct rates in (0,1): p0=$p0 p1=$p1")
-    require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1,
-      s"need error rates in (0,1): alpha=$alpha beta=$beta")
+    require(beta > 0 && beta < 1, s"need beta in (0,1): $beta")
+    val alpha = 0.05
     import org.apache.spark.sql.expressions.Window
     val lS = math.log(p1 / p0)
     val lF = math.log((1.0 - p1) / (1.0 - p0))
@@ -1160,7 +1132,7 @@ object Stats {
       .withColumn("__llr", col("k_cum").cast("double") * lit(lS)
         + (col("n_cum") - col("k_cum")).cast("double") * lit(lF))
       .select(col("day"), col("n_cum"), col("k_cum"),
-        round(col("__llr"), roundScale).as("llr"),
+        round(col("__llr"), 6).as("llr"),
         when(col("__llr") >= a, "accept_h1")
           .when(col("__llr") <= b, "accept_h0")
           .otherwise("continue").as("decision"))
@@ -1187,8 +1159,7 @@ object Stats {
     * Scale shape: one exact-percentile aggregate (1-row broadcast),
     * one per-group conditional aggregate, a k-row fold — shuffle ∝
     * groups. */
-  def moodMedianTest(df: DataFrame, classCol: String, valCol: String,
-                     roundScale: Int = 6): DataFrame = {
+  def moodMedianTest(df: DataFrame, classCol: String, valCol: String): DataFrame = {
     val x = df.filter(col(classCol).isNotNull && col(valCol).isNotNull)
       .select(col(classCol).as("__g"), col(valCol).cast("double").as("__v"))
     val med = x.agg(expr("percentile(__v, 0.5D)").as("__m"))
@@ -1220,7 +1191,7 @@ object Stats {
         max(when(col("__ea") <= 0 || col("__eb") <= 0, 1L).otherwise(0L))
           .as("__degen"))
       .select((col("__kk") - 1).cast("long").as("df_chi"),
-        round(when(col("__degen") === 0, col("__chi")), roundScale)
+        round(when(col("__degen") === 0, col("__chi")), 6)
           .as("chi2"))
     shared
       .select(col("__g").as(classCol), col("n"), col("n_above"),
@@ -1244,8 +1215,7 @@ object Stats {
     * histogram ([[ksStatistic]] collapse) carrying positive/negative
     * counts per value — W⁺ and the tie sums are exact halves,
     * UNROUNDED; z rounds. n = 0 (all zero differences) → null z. */
-  def wilcoxonSignedRank(pairs: DataFrame, xCol: String, yCol: String,
-                         roundScale: Int = 6): DataFrame = {
+  def wilcoxonSignedRank(pairs: DataFrame, xCol: String, yCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // differences round BEFORE the histogram (the kruskalWallis value
     // convention): x/y are usually float aggregates, and a 1-ulp
@@ -1253,7 +1223,7 @@ object Stats {
     val d = pairs
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(round(col(yCol).cast("double") - col(xCol).cast("double"),
-        roundScale).as("__d"))
+        6).as("__d"))
       .filter(col("__d") =!= 0.0)
     val perAbs = d.groupBy(abs(col("__d")).as("__a"))
       .agg(sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__cp"),
@@ -1275,7 +1245,7 @@ object Stats {
       .select(col("n_pairs"), col("n_positive"), col("w_plus"),
         col("__e").as("w_expected"),
         round(when(col("__var") > 0,
-          (col("w_plus") - col("__e")) / sqrt(col("__var"))), roundScale)
+          (col("w_plus") - col("__e")) / sqrt(col("__var"))), 6)
           .as("z"))
   }
 
@@ -1296,8 +1266,7 @@ object Stats {
     * no filtering needed. Everything integer-exact until the final
     * division; Q rounds, the totals don't. Degenerate denominator
     * (every block hits every treatment) → null. */
-  def cochranQ(df: DataFrame, blockCol: String, treatCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def cochranQ(df: DataFrame, blockCol: String, treatCol: String): DataFrame = {
     val ut = df
       .filter(col(blockCol).isNotNull && col(treatCol).isNotNull)
       .select(col(blockCol).as("__b"), col(treatCol).as("__t"))
@@ -1319,7 +1288,7 @@ object Stats {
         round(when(col("__den") > 0,
           (col("__k") - 1).cast("double")
             * (col("__k") * col("__sc2") - col("__nn") * col("__nn"))
-              .cast("double") / col("__den")), roundScale).as("q_stat"))
+              .cast("double") / col("__den")), 6).as("q_stat"))
   }
 
   /** Friedman test for k treatments over b blocks, in Conover's
@@ -1344,7 +1313,7 @@ object Stats {
     * via block-partitioned windows on the bounded b×k cell grid, two
     * folds — shuffle ∝ cells, never rows. */
   def friedmanTest(cells: DataFrame, blockCol: String, treatCol: String,
-                   valCol: String, roundScale: Int = 6): DataFrame = {
+                   valCol: String): DataFrame = {
     val ranked = completeBlockMidranks(cells, blockCol, treatCol, valCol)
       // cached: the bounded b×k rank grid feeds the per-treatment fold,
       // the dispersion fold, AND the final select — uncached, the
@@ -1366,7 +1335,7 @@ object Stats {
         col("__kk").cast("long").as("k_treatments"),
         round(when(col("__sr2") - col("__c") > 0,
           (col("__kd") - 1) * (col("__srj2") - col("__bd") * col("__c"))
-            / (col("__sr2") - col("__c"))), roundScale).as("t1"))
+            / (col("__sr2") - col("__c"))), 6).as("t1"))
     perTreat
       .select(col("__t").as(treatCol), col("n_blocks"),
         col("__rsum").as("rank_sum"),
@@ -1430,8 +1399,7 @@ object Stats {
     * mix √ and round. Degenerate placement variances (both samples
     * constant) → null W/df. */
   def brunnerMunzel(df: DataFrame, sideCol: String, valCol: String,
-                    sideA: String, sideB: String,
-                    roundScale: Int = 6): DataFrame = {
+                    sideA: String, sideB: String): DataFrame = {
     val placed = sideCumGrid(df, sideCol, col(valCol).cast("double"),
         sideA, sideB)
       // pooled midrank at v: #below + (t+1)/2; within-sample likewise —
@@ -1474,13 +1442,13 @@ object Stats {
           / sqrt(col("__s2"))))
       .select(col("n_a"), col("n_b"),
         col("__ph").as("p_hat"),
-        round(col("__w"), roundScale).as("w_bm"),
+        round(col("__w"), 6).as("w_bm"),
         round(when(col("__s2") > 0,
           col("__s2") * col("__s2")
             / (col("__nad") * col("__va") * col("__nad") * col("__va")
                 / (col("__nad") - 1)
               + col("__nbd") * col("__vb") * col("__nbd") * col("__vb")
-                / (col("__nbd") - 1))), roundScale).as("df"))
+                / (col("__nbd") - 1))), 6).as("df"))
   }
 
   /** Two-sample standardized effect sizes (Cohen '88; Hedges, JEBS
@@ -1497,8 +1465,7 @@ object Stats {
     * d/g (the honest constant-arms fallback); float moments → all
     * rounded. */
   def effectSize(df: DataFrame, sideCol: String, valCol: String,
-                 sideA: String, sideB: String,
-                 roundScale: Int = 6): DataFrame = {
+                 sideA: String, sideB: String): DataFrame = {
     val x = df.filter(col(sideCol).isin(sideA, sideB))
       .filter(col(valCol).isNotNull)
       .select(col(sideCol).as("__s"), col(valCol).cast("double").as("__x"))
@@ -1516,12 +1483,12 @@ object Stats {
       .withColumn("__d", when(col("__sp") > 0,
         (col("__ma") - col("__mb")) / col("__sp")))
       .select(col("n_a"), col("n_b"),
-        round(col("__ma") - col("__mb"), roundScale).as("mean_diff"),
-        round(col("__sp"), roundScale).as("sd_pooled"),
-        round(col("__d"), roundScale).as("cohens_d"),
+        round(col("__ma") - col("__mb"), 6).as("mean_diff"),
+        round(col("__sp"), 6).as("sd_pooled"),
+        round(col("__d"), 6).as("cohens_d"),
         round(col("__d") * (lit(1.0) - lit(3.0)
           / (lit(4.0) * (col("n_a") + col("n_b")).cast("double") - 9.0)),
-          roundScale).as("hedges_g"))
+          6).as("hedges_g"))
   }
 
   /** Page's trend test for ORDERED treatments over blocks (Page, JASA
@@ -1543,7 +1510,7 @@ object Stats {
     * Shape: [[completeBlockMidranks]]' bounded b×k rank grid (cached),
     * dense-rank for treatment weights, two folds. */
   def pageTrendTest(cells: DataFrame, blockCol: String, treatCol: String,
-                    valCol: String, roundScale: Int = 6): DataFrame = {
+                    valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ranked = completeBlockMidranks(cells, blockCol, treatCol, valCol)
       .withColumn("__w", dense_rank().over(Window.orderBy(col("__t"))))
@@ -1566,7 +1533,7 @@ object Stats {
         col("__kk").cast("long").as("k_treatments"),
         col("__l").as("l_stat"), col("__e").as("l_expected"),
         round(when(col("__var") > 0,
-          (col("__l") - col("__e")) / sqrt(col("__var"))), roundScale)
+          (col("__l") - col("__e")) / sqrt(col("__var"))), 6)
           .as("z"))
   }
 
@@ -1589,14 +1556,13 @@ object Stats {
     * min windows on the ≤days-row grid (the calendar-bounded
     * exception). */
   def msprtDaily(events: DataFrame, tsCol: String, typeCol: String,
-                 successType: String, p0: Double, tau: Double,
-                 roundScale: Int = 6): DataFrame =
+                 successType: String, p0: Double, tau: Double): DataFrame =
     msprtOverCounts(
       events.groupBy(date_trunc("day", col(tsCol)).as("day"))
         .agg(count(lit(1)).as("n_events"),
           sum(when(col(typeCol) === successType, 1L).otherwise(0L))
             .as("n_success")),
-      p0, tau, roundScale)
+      p0, tau)
 
   /** The [[msprtDaily]] finalizer over an already-folded (day,
     * n_events, n_success) table — the seam the STREAMING monitor
@@ -1606,8 +1572,7 @@ object Stats {
     * [[TimeSeries.cusumOverCounts]] contract. Deliberate recompute
     * over the day grid each call: the running min re-bases with every
     * new day, and the grid is calendar-bounded. */
-  def msprtOverCounts(counts: DataFrame, p0: Double, tau: Double,
-                      roundScale: Int = 6): DataFrame = {
+  def msprtOverCounts(counts: DataFrame, p0: Double, tau: Double): DataFrame = {
     require(p0 > 0 && p0 < 1, s"null rate must be in (0,1): $p0")
     require(tau > 0, s"mixing sd must be positive: $tau")
     import org.apache.spark.sql.expressions.Window
@@ -1627,8 +1592,8 @@ object Stats {
             / (lit(2.0) * s2 * (lit(s2) + col("__nd") * t2))))
       .withColumn("__praw", least(lit(1.0), lit(1.0) / col("__lam")))
       .select(col("day"), col("n_cum"), col("k_cum"),
-        round(col("__lam"), roundScale).as("lambda"),
-        round(min(col("__praw")).over(cum), roundScale).as("p_always_valid"))
+        round(col("__lam"), 6).as("lambda"),
+        round(min(col("__praw")).over(cum), 6).as("p_always_valid"))
   }
 
   /** Empirical-Bayes beta–binomial shrinkage of per-unit success rates
@@ -1650,8 +1615,7 @@ object Stats {
     * Scale shape: one per-unit conditional aggregate (shuffle ∝ units),
     * one 1-row moment fold over unit rates, one broadcast crossJoin —
     * no window, no pair work. */
-  def ebBetaBinomial(df: DataFrame, unitCol: String, successCol: Column,
-                     roundScale: Int = 6): DataFrame = {
+  def ebBetaBinomial(df: DataFrame, unitCol: String, successCol: Column): DataFrame = {
     val perUnit = df.groupBy(col(unitCol))
       .agg(count(lit(1)).as("n_trials"),
         sum(when(successCol, 1L).otherwise(0L)).as("n_success"))
@@ -1670,13 +1634,13 @@ object Stats {
     perUnit.crossJoin(broadcast(fit))
       .select(col(unitCol), col("n_trials"), col("n_success"),
         col("__r").as("rate_raw"),
-        round(col("__alpha"), roundScale).as("prior_alpha"),
-        round(col("__beta"), roundScale).as("prior_beta"),
+        round(col("__alpha"), 6).as("prior_alpha"),
+        round(col("__beta"), 6).as("prior_beta"),
         round(coalesce(
           (col("n_success").cast("double") + col("__alpha"))
             / (col("n_trials").cast("double") + col("__alpha")
               + col("__beta")),
-          col("__r")), roundScale).as("rate_shrunk"))
+          col("__r")), 6).as("rate_shrunk"))
   }
 
   /** Jonckheere–Terpstra test for an ORDERED k-sample alternative
@@ -1707,8 +1671,7 @@ object Stats {
     * deliberately UNROUNDED; z rounds.
     *
     * Group order is `groupCol`'s natural ascending order. */
-  def jonckheereTerpstra(df: DataFrame, groupCol: String, valCol: String,
-                         roundScale: Int = 6): DataFrame = {
+  def jonckheereTerpstra(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val wide = Prefix.isWide(df)
     val h = df.filter(col(valCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), col(valCol).cast("double").as("__v"))
@@ -1764,7 +1727,7 @@ object Stats {
       .select(col("__nn").as("n_total"), col("j_stat"),
         col("__e").as("j_expected"),
         round(when(col("__var") > 0,
-          (col("j_stat") - col("__e")) / sqrt(col("__var"))), roundScale)
+          (col("j_stat") - col("__e")) / sqrt(col("__var"))), 6)
           .as("z"))
   }
 
@@ -1777,14 +1740,13 @@ object Stats {
     * per-source/per-domain rate table: a 2-for-2 source prints
     * [0.34, 1.0], not "100%".
     *
-    * z defaults to 1.96 (the conventional 95% two-sided score). Rate is
+    * z = 1.96 (the conventional 95% two-sided score). Rate is
     * an exact-integer ratio, UNROUNDED; the √-carrying bounds round.
     *
     * Shape: one per-group conditional aggregate + arithmetic — shuffle
     * ∝ groups, no window, no join. */
-  def wilsonInterval(df: DataFrame, groupCol: String, successCol: Column,
-                     z: Double = 1.96, roundScale: Int = 6): DataFrame = {
-    require(z > 0, s"z must be positive: $z")
+  def wilsonInterval(df: DataFrame, groupCol: String, successCol: Column): DataFrame = {
+    val z = 1.96
     val z2 = z * z
     df.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_trials"),
@@ -1797,9 +1759,9 @@ object Stats {
         / col("__n") + lit(z2) / (lit(4.0) * col("__n") * col("__n"))))
       .select(col(groupCol), col("n_trials"), col("n_success"),
         col("__p").as("rate"),
-        round((col("__ctr") - col("__hw")) / col("__den"), roundScale)
+        round((col("__ctr") - col("__hw")) / col("__den"), 6)
           .as("ci_low"),
-        round((col("__ctr") + col("__hw")) / col("__den"), roundScale)
+        round((col("__ctr") + col("__hw")) / col("__den"), 6)
           .as("ci_high"))
   }
 
@@ -1818,8 +1780,7 @@ object Stats {
     * lengths), counts exact integers. The ratio is exact-rational,
     * UNROUNDED; z mixes a √ and rounds. */
   def poissonRateTest(events: DataFrame, tsCol: String, splitTs: String,
-                      t1: Double, t2: Double,
-                      roundScale: Int = 6): DataFrame = {
+                      t1: Double, t2: Double): DataFrame = {
     require(t1 > 0 && t2 > 0, s"exposures must be positive: $t1, $t2")
     val pi = t1 / (t1 + t2)
     events
@@ -1834,7 +1795,7 @@ object Stats {
         (col("__k") * pi).as("k1_expected"),
         round(when(col("__k") > 0,
           (col("k1").cast("double") - col("__k") * pi)
-            / sqrt(col("__k") * pi * (1.0 - pi))), roundScale).as("z"))
+            / sqrt(col("__k") * pi * (1.0 - pi))), 6).as("z"))
   }
 
   /** Per-group Jarque–Bera normality screen (Jarque & Bera, Econ.
@@ -1854,8 +1815,7 @@ object Stats {
     * Shape: one per-group mean aggregate, one broadcast join back, one
     * per-group moment aggregate — shuffle ∝ groups both passes, no
     * window. */
-  def jarqueBera(df: DataFrame, groupCol: String, valCol: String,
-                 roundScale: Int = 6): DataFrame = {
+  def jarqueBera(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val x = df.filter(col(valCol).isNotNull)
       .select(col(groupCol).as("__g"), col(valCol).cast("double").as("__x"))
     val means = x.groupBy(col("__g"))
@@ -1873,10 +1833,10 @@ object Stats {
       .withColumn("__k", when(col("__v") > 0, col("__m4") / col("__nd")
         / (col("__v") * col("__v"))))
     cent.select(col("__g").as(groupCol), col("n"),
-      round(col("__s"), roundScale).as("skewness"),
-      round(col("__k"), roundScale).as("kurtosis"),
+      round(col("__s"), 6).as("skewness"),
+      round(col("__k"), 6).as("kurtosis"),
       round(col("__nd") * (col("__s") * col("__s") / 6.0
-        + (col("__k") - 3.0) * (col("__k") - 3.0) / 24.0), roundScale)
+        + (col("__k") - 3.0) * (col("__k") - 3.0) / 24.0), 6)
         .as("jb"))
   }
 
@@ -1891,8 +1851,7 @@ object Stats {
     * one). Integer counts and products throughout — exact until the final
     * divisions. Perfect-chance inputs (p_e = 1, i.e. both sides constant
     * and equal) yield null kappa. */
-  def cohenKappa(df: DataFrame, colA: String, colB: String,
-                 roundScale: Int = 6): DataFrame = {
+  def cohenKappa(df: DataFrame, colA: String, colB: String): DataFrame = {
     // ONE data-sized pass builds the labels² contingency; totals and both
     // marginals re-aggregate that tiny table (the shared-contingency
     // shape mutualInfoTokens uses)
@@ -1920,9 +1879,9 @@ object Stats {
     val pe = col("__peNum") / (nD * nD)
     totals.crossJoin(peNum)
       .select(col("n"), col("n_agree"),
-        round(po, roundScale).as("p_observed"),
-        round(pe, roundScale).as("p_expected"),
-        round(when(pe < 1.0, (po - pe) / (lit(1.0) - pe)), roundScale)
+        round(po, 6).as("p_observed"),
+        round(pe, 6).as("p_expected"),
+        round(when(pe < 1.0, (po - pe) / (lit(1.0) - pe)), 6)
           .as("kappa"))
   }
 
@@ -1945,8 +1904,7 @@ object Stats {
     * four index terms re-aggregate that bounded table. Pair counts
     * C(x,2) multiply as doubles (exact to 2^53; the ratio is immediate,
     * exactness beyond is not needed). */
-  def clusterAgreement(df: DataFrame, colA: String, colB: String,
-                       roundScale: Int = 6): DataFrame = {
+  def clusterAgreement(df: DataFrame, colA: String, colB: String): DataFrame = {
     def comb2(c: Column): Column =
       c.cast("double") * (c - 1).cast("double") / 2.0
     val cont = df
@@ -1980,10 +1938,10 @@ object Stats {
       .select(col("n"), col("n_clusters_a"), col("n_clusters_b"),
         round(when(abs(col("__max") - col("__exp")) > 0,
           (col("__index") - col("__exp")) / (col("__max") - col("__exp"))),
-          roundScale).as("ari"),
+          6).as("ari"),
         round(when(col("__ha") + col("__hb") > 0,
           lit(2.0) * col("__mi") / (col("__ha") + col("__hb"))),
-          roundScale).as("nmi"))
+          6).as("nmi"))
   }
 
   /** Burstiness audit: per-key variance-to-mean ratio (index of
@@ -1996,8 +1954,7 @@ object Stats {
     *
     * Scale shape: one (key, day) count aggregate then one key-level
     * aggregate, both map-side combined; nothing else moves. */
-  def burstiness(events: DataFrame, keyCol: String, tsCol: String,
-                 roundScale: Int = 6): DataFrame = {
+  def burstiness(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = events
       .groupBy(col(keyCol), date_trunc("day", col(tsCol)).as("__day"))
       .agg(count(lit(1)).as("__x"))
@@ -2011,9 +1968,9 @@ object Stats {
       greatest((col("__ss").cast("double") - col("__s").cast("double") * mean)
         / (n - 1.0), lit(0.0)))
     st.select(col(keyCol), col("n_days"),
-      round(mean, roundScale).as("mean_daily"),
-      round(varS, roundScale).as("var_daily"),
-      round(varS / mean, roundScale).as("vmr"))
+      round(mean, 6).as("mean_daily"),
+      round(varS, 6).as("var_daily"),
+      round(varS / mean, 6).as("vmr"))
   }
 
   /** Pearson χ² independence audit for two categorical columns — "is the
@@ -2069,8 +2026,7 @@ object Stats {
     * marginals but never match the grid's equi-join, double-counting
     * its expected mass as pure deviation while countDistinct excludes
     * it from r/c — a silently inflated (even >1) V. */
-  def cramersV(df: DataFrame, aCol: String, bCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def cramersV(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol), col(bCol))
@@ -2088,11 +2044,11 @@ object Stats {
       .agg(sum(dev * dev / e).as("__chi2"))
       .select(col("__r").as("n_rows_dim"), col("__c").as("n_cols_dim"),
         col("__g").as("n"),
-        round(col("__chi2"), roundScale).as("chi2"),
+        round(col("__chi2"), 6).as("chi2"),
         round(when(least(col("__r"), col("__c")) > 1,
           sqrt(col("__chi2") / (col("__g").cast("double")
             * (least(col("__r"), col("__c")) - 1).cast("double")))),
-          roundScale).as("cramers_v"))
+          6).as("cramers_v"))
   }
 
   /** Simpson's-paradox guard for a two-group rate comparison: the pooled
@@ -2184,8 +2140,7 @@ object Stats {
     * (one map-combined aggregate — the only corpus-sized pass); the
     * pairwise self-join runs on the day grid, whose size is bounded by
     * the calendar (≤366²/2 pairs per group-year), not the data. */
-  def theilSenDaily(events: DataFrame, keyCol: String, tsCol: String,
-                    roundScale: Int = 6): DataFrame = {
+  def theilSenDaily(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = events
       .groupBy(col(keyCol), date_trunc("day", col(tsCol)).as("__day"))
       .agg(count(lit(1)).as("__c"))
@@ -2207,9 +2162,9 @@ object Stats {
     pairs.groupBy(col(keyCol)).agg(
       count(lit(1)).as("n_pairs"),
       sum(col("__sgn")).as("mk_s"),
-      round(sum(col("__sgn")).cast("double") / count(lit(1)), roundScale)
+      round(sum(col("__sgn")).cast("double") / count(lit(1)), 6)
         .as("kendall_tau"),
-      round(expr("percentile(__slope, 0.5)"), roundScale).as("sen_slope"))
+      round(expr("percentile(__slope, 0.5)"), 6).as("sen_slope"))
   }
 
   /** Seasonal Mann–Kendall trend test (Hirsch & Slack, WRR '84) over
@@ -2230,8 +2185,7 @@ object Stats {
     * Scale shape: the corpus collapses to the (key, day) grid first;
     * pair work is per (key, weekday) stratum — ≤ (days/7)² pairs per
     * stratum, calendar-bounded like the plain MK. */
-  def seasonalMannKendall(events: DataFrame, keyCol: String, tsCol: String,
-                          roundScale: Int = 6): DataFrame = {
+  def seasonalMannKendall(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = events
       .groupBy(col(keyCol), date_trunc("day", col(tsCol)).as("__day"))
       .agg(count(lit(1)).as("__y"))
@@ -2271,7 +2225,7 @@ object Stats {
             (col("s_stat") - 1).cast("double") / sqrt(col("__var")))
             .when(col("s_stat") < 0,
               (col("s_stat") + 1).cast("double") / sqrt(col("__var")))
-            .otherwise(lit(0.0))), roundScale).as("z"))
+            .otherwise(lit(0.0))), 6).as("z"))
   }
 
   /** Jensen–Shannon divergence per bin (nats) — the bounded, symmetric
@@ -2325,7 +2279,7 @@ object Stats {
     * contract silently — units with v < 0 are out of contract and
     * excluded from n_units/total like nulls. */
   def giniIndex(df: DataFrame, groupCol: String, unitCol: String,
-                valCol: String, roundScale: Int = 6): DataFrame = {
+                valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col(valCol).asc, col(unitCol).asc)
@@ -2339,7 +2293,7 @@ object Stats {
           lit(2.0) * col("__rf")
             / (col("n_units").cast("double") * col("total").cast("double"))
             - (col("n_units") + 1).cast("double")
-              / col("n_units").cast("double")), roundScale).as("gini"))
+              / col("n_units").cast("double")), 6).as("gini"))
   }
 
   /** Pairwise Jensen–Shannon divergence matrix: for every unordered
@@ -2393,13 +2347,13 @@ object Stats {
   /** Benjamini–Hochberg step-up FDR control (Benjamini & Hochberg,
     * JRSS-B'95) over a frame of hypotheses: per row, the BH rank, the
     * adjusted p-value p_adj(i) = min_{j≥i} m·p_(j)/j (the monotone
-    * step-up form), and the rejection verdict p_adj ≤ α. THE correction
+    * step-up form), and the rejection verdict p_adj ≤ α = 0.05. THE correction
     * to run over a battery of per-slice drift tests (KS per source, χ²
     * per segment): with m slices, per-test α lets ~m·α false alarms
     * through every run, while Bonferroni's α/m kills real drift — BH
     * bounds the expected false-discovery RATE at α with far more power.
     *
-    * Determinism: the input p is rounded to `roundScale` BEFORE ranking
+    * Determinism: the input p is rounded to 6 decimals BEFORE ranking
     * (so a cross-engine exp/erfc ulp cannot reorder ties), ranking
     * tie-breaks on `tieCols`, and p_adj is rounded before the ≤ α
     * comparison — verdicts are engine-stable end to end.
@@ -2408,8 +2362,7 @@ object Stats {
     * thousands), so the two unpartitioned windows (rank, suffix-min) run
     * over an m-row frame in one task BY DESIGN; aggregate row-grain data
     * to hypothesis grain first, never feed raw rows. */
-  def bhAdjust(tests: DataFrame, pCol: String, tieCols: Seq[String],
-               alpha: Double = 0.05, roundScale: Int = 6): DataFrame = {
+  def bhAdjust(tests: DataFrame, pCol: String, tieCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(tieCols.nonEmpty, "tieCols must make the hypothesis order total")
     val ord = col("__p").asc +: tieCols.map(col(_).asc)
@@ -2419,14 +2372,14 @@ object Stats {
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     tests
-      .withColumn("__p", round(col(pCol), roundScale))
+      .withColumn("__p", round(col(pCol), 6))
       .withColumn("__m", count(lit(1)).over(wAll))
       .withColumn("bh_rank", row_number().over(wRank))
       .withColumn("__stat",
         col("__m").cast("double") * col("__p") / col("bh_rank"))
       .withColumn("p_adj",
-        round(least(min(col("__stat")).over(wSuffix), lit(1.0)), roundScale))
-      .withColumn("significant", col("p_adj") <= lit(alpha))
+        round(least(min(col("__stat")).over(wSuffix), lit(1.0)), 6))
+      .withColumn("significant", col("p_adj") <= lit(0.05))
       .drop("__p", "__m", "__stat")
   }
 
@@ -2441,8 +2394,7 @@ object Stats {
     *
     * Same battery-sized shape as bhAdjust: one bounded window pass over
     * the test battery, never the data. */
-  def holmAdjust(tests: DataFrame, pCol: String, tieCols: Seq[String],
-                 alpha: Double = 0.05, roundScale: Int = 6): DataFrame = {
+  def holmAdjust(tests: DataFrame, pCol: String, tieCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(tieCols.nonEmpty, "tieCols must make the hypothesis order total")
     val ord = col("__p").asc +: tieCols.map(col(_).asc)
@@ -2452,14 +2404,14 @@ object Stats {
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     tests
-      .withColumn("__p", round(col(pCol), roundScale))
+      .withColumn("__p", round(col(pCol), 6))
       .withColumn("__m", count(lit(1)).over(wAll))
       .withColumn("holm_rank", row_number().over(wRank))
       .withColumn("__stat",
         (col("__m") - col("holm_rank") + 1).cast("double") * col("__p"))
       .withColumn("p_adj",
-        round(least(max(col("__stat")).over(wPrefix), lit(1.0)), roundScale))
-      .withColumn("significant", col("p_adj") <= lit(alpha))
+        round(least(max(col("__stat")).over(wPrefix), lit(1.0)), 6))
+      .withColumn("significant", col("p_adj") <= lit(0.05))
       .drop("__p", "__m", "__stat")
   }
 
@@ -2482,8 +2434,7 @@ object Stats {
     * in decimal (counts are integers), so the statistic is
     * order-independent and engine-portable at any scale.
     * Groups need ≥ 3 days and non-constant y_{t−1}, else null. */
-  def adfDaily(events: DataFrame, keyCol: String, tsCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def adfDaily(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val observed = events
       .filter(col(tsCol).isNotNull)
@@ -2520,9 +2471,9 @@ object Stats {
     val sse = (syyc - gamma * sxyc) / nd
     val se = sqrt(sse / (nd - 2.0) / (sxxc / nd))
     m.select(col("__g").as(keyCol), col("n_days"),
-      round(when(sxxc > 0, gamma), roundScale).as("gamma"),
+      round(when(sxxc > 0, gamma), 6).as("gamma"),
       round(when(col("n_days") > 2 && sxxc > 0 && syyc - gamma * sxyc > 0,
-        gamma / se), roundScale).as("adf_stat"))
+        gamma / se), 6).as("adf_stat"))
   }
 
   /** Sharp regression-discontinuity jump estimate (public: Thistlethwaite
@@ -2540,8 +2491,7 @@ object Stats {
     * rescales once. Sides need ≥ 2 rows and non-constant x, else null
     * columns. */
   def regressionDiscontinuity(df: DataFrame, xCol: String, yCol: String,
-                              cutoff: Double, bandwidth: Double,
-                              roundScale: Int = 6): DataFrame = {
+                              cutoff: Double, bandwidth: Double): DataFrame = {
     require(bandwidth > 0, s"bandwidth must be > 0: $bandwidth")
     val dec = (c: Column) => c.cast("decimal(20,0)")
     // exact cent-units relative to the cutoff
@@ -2583,11 +2533,11 @@ object Stats {
     val (sl, il) = fit("l")
     val (sr, ir) = fit("r")
     m.select(col("__nl").as("n_left"), col("__nr").as("n_right"),
-      round(sl, roundScale).as("slope_left"),
-      round(sr, roundScale).as("slope_right"),
-      round(il, roundScale).as("intercept_left"),
-      round(ir, roundScale).as("intercept_right"),
-      round(ir - il, roundScale).as("rd_jump"))
+      round(sl, 6).as("slope_left"),
+      round(sr, 6).as("slope_right"),
+      round(il, 6).as("intercept_left"),
+      round(ir, 6).as("intercept_right"),
+      round(ir - il, 6).as("rd_jump"))
   }
 
   /** Hellinger distance between a reference and a current categorical
@@ -2601,8 +2551,7 @@ object Stats {
     *
     * Scale shape: two bin aggregates + one full outer join on the
     * bounded bin key, one closing fold. */
-  def hellinger(ref: DataFrame, cur: DataFrame, binCol: String,
-                roundScale: Int = 6): DataFrame = {
+  def hellinger(ref: DataFrame, cur: DataFrame, binCol: String): DataFrame = {
     val r = ref.groupBy(col(binCol)).agg(count(lit(1)).as("__nr"))
     val c = cur.groupBy(col(binCol)).agg(count(lit(1)).as("__nc"))
     val bins = r.join(c, Seq(binCol), "full")
@@ -2616,11 +2565,11 @@ object Stats {
       .select(col("n_bins"), col("__tr").as("n_ref"), col("__tc").as("n_cur"),
         round(when(col("__tr") > 0 && col("__tc") > 0,
           col("__sqSum") / sqrt(col("__tr").cast("double") * col("__tc"))),
-          roundScale).as("bc_coef"),
+          6).as("bc_coef"),
         round(when(col("__tr") > 0 && col("__tc") > 0,
           sqrt(greatest(lit(0.0), lit(1.0)
             - col("__sqSum") / sqrt(col("__tr").cast("double")
-              * col("__tc"))))), roundScale).as("hellinger"))
+              * col("__tc"))))), 6).as("hellinger"))
   }
 
   /** Benjamini–Yekutieli FDR adjustment (public: Benjamini & Yekutieli,
@@ -2634,8 +2583,7 @@ object Stats {
     * Same battery-sized shape as bhAdjust; the harmonic sum folds over
     * the SAME (p, tie) ordering in both engines (full-frame ordered
     * window), so the float fold is order-mirrored. */
-  def byAdjust(tests: DataFrame, pCol: String, tieCols: Seq[String],
-               alpha: Double = 0.05, roundScale: Int = 6): DataFrame = {
+  def byAdjust(tests: DataFrame, pCol: String, tieCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(tieCols.nonEmpty, "tieCols must make the hypothesis order total")
     val ord = col("__p").asc +: tieCols.map(col(_).asc)
@@ -2645,7 +2593,7 @@ object Stats {
     val wAllOrdered = Window.orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     tests
-      .withColumn("__p", round(col(pCol), roundScale))
+      .withColumn("__p", round(col(pCol), 6))
       .withColumn("__m", count(lit(1)).over(wAllOrdered))
       .withColumn("by_rank", row_number().over(wRank))
       .withColumn("__cm",
@@ -2653,8 +2601,8 @@ object Stats {
       .withColumn("__stat", col("__cm") * col("__m").cast("double")
         * col("__p") / col("by_rank"))
       .withColumn("p_adj",
-        round(least(min(col("__stat")).over(wSuffix), lit(1.0)), roundScale))
-      .withColumn("significant", col("p_adj") <= lit(alpha))
+        round(least(min(col("__stat")).over(wSuffix), lit(1.0)), 6))
+      .withColumn("significant", col("p_adj") <= lit(0.05))
       .drop("__p", "__m", "__cm", "__stat")
   }
 
@@ -2677,8 +2625,7 @@ object Stats {
     * per-class fold, then a k²-row pair self-join and the m = k(k−1)/2
     * row BH windows — nothing row-sized past the first aggregate.
     * Mean ranks are exact rationals of midrank halves — UNROUNDED. */
-  def dunnPostHoc(df: DataFrame, classCol: String, valCol: String,
-                  alpha: Double = 0.05, roundScale: Int = 6): DataFrame = {
+  def dunnPostHoc(df: DataFrame, classCol: String, valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // cached: the bounded (value, class) histogram feeds the midrank
     // grid, the per-class fold (both pair sides), and the tie fold —
@@ -2686,7 +2633,7 @@ object Stats {
     // counted 5 scans)
     val vc = df
       .filter(col(classCol).isNotNull && col(valCol).isNotNull)
-      .select(round(col(valCol).cast("double"), roundScale).as("__s"),
+      .select(round(col(valCol).cast("double"), 6).as("__s"),
         col(classCol).as("__g"))
       .groupBy(col("__s"), col("__g"))
       .agg(count(lit(1)).as("__c"))
@@ -2726,12 +2673,11 @@ object Stats {
       + 1.421413741) * t - 0.284496736) * t + 0.254829592) * t
     val scored = pairs
       .withColumn("p_value", round(when(col("__z").isNotNull,
-        least(lit(1.0), poly * exp(-x * x))), roundScale))
+        least(lit(1.0), poly * exp(-x * x))), 6))
       .select(col("group_a"), col("group_b"), col("n_a"), col("n_b"),
         col("mean_rank_a"), col("mean_rank_b"),
-        round(col("__z"), roundScale).as("z"), col("p_value"))
-    bhAdjust(scored, "p_value", Seq("group_a", "group_b"), alpha,
-      roundScale)
+        round(col("__z"), 6).as("z"), col("p_value"))
+    bhAdjust(scored, "p_value", Seq("group_a", "group_b"))
   }
 
   /** Difference-in-differences (the 2×2 natural-experiment workhorse,
@@ -2969,8 +2915,7 @@ object Stats {
     * + a k-row closing reduce — aggregates-only at any corpus size.
     * k < 2 classes or zero SSW yield null F (never NaN/∞); empty
     * input yields k = 0 with null statistics. */
-  def anovaF(df: DataFrame, classCol: String, valCol: String,
-             roundScale: Int = 6): DataFrame = {
+  def anovaF(df: DataFrame, classCol: String, valCol: String): DataFrame = {
     // ORDER-INDEPENDENT construction (the standing-sf1-gate contract):
     // values quantize to exact 1e-6-unit integers, so every DATA-SIZED
     // aggregate below is an exact integer sum — invariant under
@@ -3010,14 +2955,14 @@ object Stats {
     val ssb = col("__T") - col("__SX").cast("double") *
       col("__SX").cast("double") / col("n").cast("double")
     folded.select(col("k"), col("n"),
-      round(when(col("k") > 0, ssb / lit(1e12)), roundScale).as("ss_between"),
-      round(when(col("k") > 0, ssw / lit(1e12)), roundScale).as("ss_within"),
+      round(when(col("k") > 0, ssb / lit(1e12)), 6).as("ss_between"),
+      round(when(col("k") > 0, ssw / lit(1e12)), 6).as("ss_within"),
       round(when(col("k") > 1 && col("n") > col("k") && ssw > 0,
         (ssb / (col("k") - 1).cast("double"))
-          / (ssw / (col("n") - col("k")).cast("double"))), roundScale)
+          / (ssw / (col("n") - col("k")).cast("double"))), 6)
         .as("f_stat"),
       round(when(col("k") > 0 && ssb + ssw > 0,
-        ssb / (ssb + ssw)), roundScale).as("eta_sq"))
+        ssb / (ssb + ssw)), 6).as("eta_sq"))
   }
 
   /** Kruskal–Wallis H (JASA 1952): the rank-based one-way ANOVA — does
@@ -3036,12 +2981,11 @@ object Stats {
     * integer/half-integer arithmetic until the closing divisions, so
     * the statistic is engine-portable. All-tied inputs (C = 0) and
     * k < 2 yield null. */
-  def kruskalWallis(df: DataFrame, classCol: String, valCol: String,
-                    roundScale: Int = 6): DataFrame = {
+  def kruskalWallis(df: DataFrame, classCol: String, valCol: String): DataFrame = {
     val wide = Prefix.isWide(df)
     val vc0 = df
       .filter(col(classCol).isNotNull && col(valCol).isNotNull)
-      .select(round(col(valCol).cast("double"), roundScale).as("__s"),
+      .select(round(col(valCol).cast("double"), 6).as("__s"),
         col(classCol).as("__g"))
       .groupBy(col("__s"), col("__g"))
       .agg(count(lit(1)).as("__c"))
@@ -3089,10 +3033,10 @@ object Stats {
             * col("n").cast("double") - col("n").cast("double")))
       .select(col("k"), col("n"),
         round(when(col("k") > 1 && col("__corr") > 0,
-          col("__h") / col("__corr")), roundScale).as("h_stat"),
+          col("__h") / col("__corr")), 6).as("h_stat"),
         round(when(col("k") > 1 && col("__corr") > 0 && col("n") > col("k"),
           (col("__h") / col("__corr") - col("k") + 1)
-            / (col("n") - col("k")).cast("double")), roundScale)
+            / (col("n") - col("k")).cast("double")), 6)
           .as("epsilon_sq"))
   }
 
@@ -3112,9 +3056,8 @@ object Stats {
     * doubles (exact to ~208k-row tie groups, ~1e-16 relative beyond,
     * absorbed by 6dp rounding; a Long cube would wrap past ~2.1M-row
     * ties). All-tied inputs (σ = 0) or an empty class yield null z. */
-  def mannWhitney(df: DataFrame, scoreCol: String, labelCol: String,
-                  roundScale: Int = 6): DataFrame = {
-    val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
+  def mannWhitney(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+    val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__ct", col("__cp") + col("__cn"))
     val mid = col("__cb___ct").cast("double") +
       (col("__ct") + 1).cast("double") / 2.0
@@ -3134,12 +3077,12 @@ object Stats {
     val sigma2 = n1 * n2 / 12.0 *
       ((nn + 1.0) - col("__t3").cast("double") / (nn * (nn - 1.0)))
     agg.select(col("n_pos"), col("n_neg"),
-      round(u, roundScale).as("u_stat"),
+      round(u, 6).as("u_stat"),
       round(when(col("n_pos") > 0 && col("n_neg") > 0,
-        lit(2.0) * (u / (n1 * n2)) - 1.0), roundScale)
+        lit(2.0) * (u / (n1 * n2)) - 1.0), 6)
         .as("rank_biserial"),
       round(when(col("n_pos") > 0 && col("n_neg") > 0 && sigma2 > 0,
-        (u - n1 * n2 / 2.0) / sqrt(sigma2)), roundScale).as("z_stat"))
+        (u - n1 * n2 / 2.0) / sqrt(sigma2)), 6).as("z_stat"))
   }
 
   /** Ansari–Bradley two-sample SCALE test (public: Ansari & Bradley,
@@ -3164,9 +3107,8 @@ object Stats {
     * size. Overflow contract: largest tie block sz must satisfy
     * sz²·(N+1)/2 < 2^63 (a ~1.7M-row tie block at N = 6M — far beyond
     * any real continuous score). */
-  def ansariBradley(df: DataFrame, scoreCol: String, labelCol: String,
-                    roundScale: Int = 6): DataFrame = {
-    val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
+  def ansariBradley(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+    val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__sz", col("__cp") + col("__cn"))
     val totals = perScore.agg(sum(col("__sz")).as("__N"))
     val blocks = Prefix.cumBefore(perScore, Nil, "__s", Seq("__sz"),
@@ -3208,9 +3150,9 @@ object Stats {
     val v = dm * dn * (dN * col("__sa2") - col("__sa") * col("__sa")) /
       (dN * dN * (dN - 1.0))
     agg.select(col("n_x"), col("n_y"),
-      round(col("__T"), roundScale).as("ab_stat"),
+      round(col("__T"), 6).as("ab_stat"),
       round(when(col("n_x") > 0 && col("n_y") > 0 && v > 0,
-        (col("__T") - e) / sqrt(v)), roundScale).as("z_stat"))
+        (col("__T") - e) / sqrt(v)), 6).as("z_stat"))
   }
 
   /** Cumulative gains / lift curve (the classic marketing-response
@@ -3230,10 +3172,10 @@ object Stats {
     * heavy ties and `n_rows` reports the truth). Exact integers to the
     * closing divisions, 6dp. */
   def gainCurve(df: DataFrame, scoreCol: String, labelCol: String,
-                buckets: Int = 10, roundScale: Int = 6): DataFrame = {
+                buckets: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(buckets >= 2, s"buckets must be >= 2: $buckets")
-    val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
+    val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__ct", col("__cp") + col("__cn"))
     val totals = perScore.agg(sum(col("__ct")).as("__N"),
       sum(col("__cp")).as("__P"))
@@ -3278,8 +3220,7 @@ object Stats {
     * the k-row median table back onto the input, then [[anovaF]]'s
     * single aggregate + k-row reduce. Same degenerate-input nulls as
     * anovaF. */
-  def brownForsythe(df: DataFrame, classCol: String, valCol: String,
-                    roundScale: Int = 6): DataFrame = {
+  def brownForsythe(df: DataFrame, classCol: String, valCol: String): DataFrame = {
     val medians = df
       .filter(col(classCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(classCol))
@@ -3288,7 +3229,7 @@ object Stats {
       .filter(col(classCol).isNotNull && col(valCol).isNotNull)
       .join(broadcast(medians), Seq(classCol))
       .select(col(classCol), abs(col(valCol) - col("__med")).as("__adev"))
-    anovaF(centered, classCol, "__adev", roundScale)
+    anovaF(centered, classCol, "__adev")
   }
 
   /** Quantile treatment effects (the Lehmann–Doksum quantile-difference
@@ -3311,8 +3252,7 @@ object Stats {
   def quantileTreatmentEffect(df: DataFrame, groupCol: String,
                               armCol: String, valCol: String,
                               armA: String, armB: String,
-                              qs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.9),
-                              roundScale: Int = 6): DataFrame = {
+                              qs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.9)): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q < 1),
       s"quantiles must be in (0,1): $qs")
     val qArr = qs.map(q => s"${q}D").mkString("array(", ", ", ")")
@@ -3336,9 +3276,9 @@ object Stats {
         posexplode(arrays_zip(col("__qv_a"), col("__qv_b"))))
       .select(col(groupCol), col("n_a"), col("n_b"),
         element_at(typedLit(qs), col("pos") + 1).as("q"),
-        round(col("col.__qv_a"), roundScale).as("q_a"),
-        round(col("col.__qv_b"), roundScale).as("q_b"),
-        round(col("col.__qv_a") - col("col.__qv_b"), roundScale).as("qte"))
+        round(col("col.__qv_a"), 6).as("q_a"),
+        round(col("col.__qv_b"), 6).as("q_b"),
+        round(col("col.__qv_a") - col("col.__qv_b"), 6).as("qte"))
   }
 
   /** Cochran–Mantel–Haenszel pooled odds ratio (Mantel & Haenszel JNCI
@@ -3356,8 +3296,7 @@ object Stats {
     * are the first float ops. Strata with n = 0 cannot occur (they have
     * no rows); a zero MH denominator yields null. */
   def mantelHaenszel(df: DataFrame, strataCol: String, armCol: String,
-                     treatArm: String, outcomeCol: String,
-                     roundScale: Int = 6): DataFrame = {
+                     treatArm: String, outcomeCol: String): DataFrame = {
     val t = col(armCol) === treatArm
     val y = col(outcomeCol).cast("boolean")
     val cells = df
@@ -3382,9 +3321,9 @@ object Stats {
         round(when(col("__tb") * col("__tc") > 0,
           (col("__ta").cast("double") * col("__td").cast("double"))
             / (col("__tb").cast("double") * col("__tc").cast("double"))),
-          roundScale).as("or_crude"),
+          6).as("or_crude"),
         round(when(col("__mhDen") > 0, col("__mhNum") / col("__mhDen")),
-          roundScale).as("or_mh"))
+          6).as("or_mh"))
   }
 
   /** Intraclass correlation ICC(1) — one-way random effects (Shrout &
@@ -3406,8 +3345,7 @@ object Stats {
     * J-row group table — SSW = Σ(Σy² − (Σy)²/n), SSB = Σ(Σy)²/n −
     * (ΣΣy)²/N — a single shuffle on the group key. Degenerate designs
     * (J < 2, N ≤ J, zero denominator) → null ICC. */
-  def icc1(df: DataFrame, groupCol: String, valCol: String,
-           roundScale: Int = 6): DataFrame = {
+  def icc1(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val pg = df
       .filter(col(groupCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(groupCol))
@@ -3429,12 +3367,12 @@ object Stats {
       - col("__sn2").cast("double") / col("__nn").cast("double"))
       / (col("__j") - 1L).cast("double"))
     fold.select(col("__j").as("n_groups"), col("__nn").as("n_total"),
-      round(when(col("__j") > 1L, msb), roundScale).as("msb"),
-      round(when(col("__nn") > col("__j"), msw), roundScale).as("msw"),
-      round(when(col("__j") > 1L, k0), roundScale).as("k0"),
+      round(when(col("__j") > 1L, msb), 6).as("msb"),
+      round(when(col("__nn") > col("__j"), msw), 6).as("msw"),
+      round(when(col("__j") > 1L, k0), 6).as("k0"),
       round(when(col("__j") > 1L && col("__nn") > col("__j") &&
         abs(msb + (k0 - 1.0) * msw) > 0.0,
-        (msb - msw) / (msb + (k0 - 1.0) * msw)), roundScale).as("icc"))
+        (msb - msw) / (msb + (k0 - 1.0) * msw)), 6).as("icc"))
   }
 
   /** Bartlett's test of equal variances (Bartlett, Proc. R. Soc. '37):
@@ -3452,8 +3390,7 @@ object Stats {
     *
     * Shape: one per-group aggregate, one fold over the k-row table —
     * single shuffle on the group key. */
-  def bartlettTest(df: DataFrame, groupCol: String, valCol: String,
-                   roundScale: Int = 6): DataFrame = {
+  def bartlettTest(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
     val pg = df
       .filter(col(groupCol).isNotNull && col(valCol).isNotNull)
@@ -3475,7 +3412,7 @@ object Stats {
         val c = lit(1.0) + ((col("__sinv") - lit(1.0) / nk)
           / (lit(3.0) * (col("__k") - 1L).cast("double")))
         t / c
-      }), roundScale).as("bartlett_stat"))
+      }), 6).as("bartlett_stat"))
   }
 
   /** Levene's test of variance homogeneity (Levene '60; Brown & Forsythe
@@ -3498,7 +3435,7 @@ object Stats {
     * row-level window. Emits one row per group plus the broadcast 1-row
     * (k, N, W) fit. */
   def leveneTest(df: DataFrame, groupCol: String, valCol: String,
-                 center: String = "mean", roundScale: Int = 6): DataFrame = {
+                 center: String = "mean"): DataFrame = {
     require(center == "mean" || center == "median",
       s"center must be mean|median, got $center")
     val base = df
@@ -3530,11 +3467,11 @@ object Stats {
         round(when(col("__within") > 0 && col("__k") > 1,
           (col("__nn") - col("__k")).cast("double")
             / (col("__k") - 1).cast("double")
-            * col("__between") / col("__within")), roundScale)
+            * col("__between") / col("__within")), 6)
           .as("w_stat"))
     perGroup
       .select(col("__g").as(groupCol), col("n"),
-        round(col("__sz") / col("n").cast("double"), roundScale)
+        round(col("__sz") / col("n").cast("double"), 6)
           .as("z_mean"))
       .crossJoin(broadcast(fit))
   }
@@ -3555,8 +3492,7 @@ object Stats {
     * longs; the chance side multiplies marginals as doubles (ĉ_i·ĉ_j
     * approaches n²). Constant identical labelings (zero chance
     * disagreement) yield null kappa. */
-  def weightedKappa(df: DataFrame, colA: String, colB: String,
-                    roundScale: Int = 6): DataFrame = {
+  def weightedKappa(df: DataFrame, colA: String, colB: String): DataFrame = {
     val cont = df
       .select(col(colA).cast("long").as("__a"), col(colB).cast("long").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
@@ -3579,10 +3515,10 @@ object Stats {
     totals.crossJoin(ew).select(col("n"),
       round(when(col("__eLin") > 0, lit(1.0)
         - col("__dLin").cast("double") * col("n") / col("__eLin")),
-        roundScale).as("kappa_linear"),
+        6).as("kappa_linear"),
       round(when(col("__eQuad") > 0, lit(1.0)
         - col("__dQuad").cast("double") * col("n") / col("__eQuad")),
-        roundScale).as("kappa_quadratic"))
+        6).as("kappa_quadratic"))
   }
 
   /** Cochran–Mantel–Haenszel test (public: Mantel & Haenszel, JNCI '59;
@@ -3599,7 +3535,7 @@ object Stats {
     * (integer-exact), then a strata-sized fold — the E/V float terms
     * sum over ≤ #strata rows, rounded 6dp. */
   def cmhTest(df: DataFrame, stratumCol: String, exposureCol: String,
-              outcomeCol: String, roundScale: Int = 6): DataFrame = {
+              outcomeCol: String): DataFrame = {
     val cells = df
       .select(col(stratumCol).cast("string").as("__s"),
         col(exposureCol).cast("int").as("__e"),
@@ -3636,11 +3572,11 @@ object Stats {
     val poly = (((((lit(1.061405429) * tt - 1.453152027) * tt)
       + 1.421413741) * tt - 0.284496736) * tt + 0.254829592) * tt
     folded.select(col("n_strata"), col("sum_a"),
-      round(col("__sumE"), roundScale).as("sum_expected"),
-      round(col("__sumV"), roundScale).as("sum_var"),
-      round(chi, roundScale).as("chi2_cmh"),
+      round(col("__sumE"), 6).as("sum_expected"),
+      round(col("__sumV"), 6).as("sum_var"),
+      round(chi, 6).as("chi2_cmh"),
       round(when(chi.isNotNull, least(lit(1.0), poly * exp(-x * x))),
-        roundScale).as("p_value"))
+        6).as("p_value"))
   }
 
   /** Weighted median (lower and upper) — the robust center of a
@@ -3656,8 +3592,7 @@ object Stats {
     * contract; fractional weights should be pre-scaled), one bounded
     * cumulative window, two guarded mins. Exact integer comparisons
     * throughout (2·cum vs W) — engine-portable at any size. */
-  def weightedMedian(df: DataFrame, valCol: String, weightCol: String,
-                     roundScale: Int = 6): DataFrame = {
+  def weightedMedian(df: DataFrame, valCol: String, weightCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // explicit floor BEFORE the long cast: Spark's cast("long") truncates
     // toward zero but DuckDB's CAST(.. AS BIGINT) rounds to nearest, so
@@ -3667,7 +3602,7 @@ object Stats {
     val grid = df
       .filter(col(valCol).isNotNull && col(weightCol).isNotNull &&
         wQuant > 0)
-      .groupBy(round(col(valCol).cast("double"), roundScale).as("__v"))
+      .groupBy(round(col(valCol).cast("double"), 6).as("__v"))
       .agg(sum(wQuant).as("__w"))
     // both cumulative forms run over the aggregate-collapsed value grid
     // (the mannWhitney/kendallW bounded-window contract), scale-adaptive
@@ -3695,8 +3630,7 @@ object Stats {
     * error stays ~√n·ε regardless of magnitude — 6dp-stable at any
     * corpus size, the q_stats_agg-pinned parity) + scalar algebra.
     * Degenerate denominators (|r| = 1) yield null. */
-  def partialCorr(df: DataFrame, xCol: String, yCol: String, zCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def partialCorr(df: DataFrame, xCol: String, yCol: String, zCol: String): DataFrame = {
     val a = df.filter(col(xCol).isNotNull && col(yCol).isNotNull &&
         col(zCol).isNotNull)
       .agg(count(lit(1)).as("n"),
@@ -3706,12 +3640,12 @@ object Stats {
     val den = (lit(1.0) - col("__rxz") * col("__rxz")) *
       (lit(1.0) - col("__ryz") * col("__ryz"))
     a.select(col("n"),
-      round(col("__rxy"), roundScale).as("r_xy"),
-      round(col("__rxz"), roundScale).as("r_xz"),
-      round(col("__ryz"), roundScale).as("r_yz"),
+      round(col("__rxy"), 6).as("r_xy"),
+      round(col("__rxz"), 6).as("r_xz"),
+      round(col("__ryz"), 6).as("r_yz"),
       round(when(den > 0,
         (col("__rxy") - col("__rxz") * col("__ryz")) / sqrt(den)),
-        roundScale).as("r_xy_given_z"))
+        6).as("r_xy_given_z"))
   }
 
   /** Pearson χ² test of independence over an r×c contingency (public:
@@ -3732,16 +3666,14 @@ object Stats {
     * boundary, not a wrong approximation.
     *
     * Shape: the [[contingency]] cell table, then cells-sized folds. */
-  def chiSquareTest(df: DataFrame, colA: String, colB: String,
-                    roundScale: Int = 6): DataFrame = {
+  def chiSquareTest(df: DataFrame, colA: String, colB: String): DataFrame = {
     val (totals, cells) = contingency(df, colA, colB)
     val obs = cells
       .agg(coalesce(sum((col("__od") - col("__e")) * (col("__od") - col("__e"))
         / col("__e")), lit(0.0)).as("__chiObs"),
         coalesce(sum(col("__e")), lit(0.0)).as("__eObs"))
     independenceRow(totals, obs, "__chi2",
-      col("__chiObs") + (col("n").cast("double") - col("__eObs")), "chi2",
-      roundScale)
+      col("__chiObs") + (col("n").cast("double") - col("__eObs")), "chi2")
   }
 
   /** The r×c contingency of [[chiSquareTest]] and [[gTest]]: its totals
@@ -3776,16 +3708,15 @@ object Stats {
     * statistic, dof and p instead, like the other degenerate boundaries
     * (odd df, df > 40). */
   private def independenceRow(totals: DataFrame, obs: DataFrame,
-                              tmp: String, stat: Column, name: String,
-                              roundScale: Int): DataFrame =
+                              tmp: String, stat: Column, name: String): DataFrame =
     totals.crossJoin(obs)
       .withColumn("dof", when(col("n") > 0,
         (col("r_levels") - 1) * (col("c_levels") - 1)))
       .withColumn(tmp, when(col("n") > 0, stat))
       .select(col("n"), col("r_levels"), col("c_levels"), col("dof"),
-        round(col(tmp), roundScale).as(name),
+        round(col(tmp), 6).as(name),
         round(when(col(tmp).isNotNull,
-          evenDfChi2P(col(tmp), col("dof"))), roundScale).as("p_value"))
+          evenDfChi2P(col(tmp), col("dof"))), 6).as("p_value"))
 
   /** Survival P[χ²_df > x] for EVEN df in [2, 40] as the truncated
     * Poisson sum e^(−x/2)·Σ_{j<df/2}(x/2)^j/j!, built as an UNROLLED
@@ -3822,14 +3753,12 @@ object Stats {
     *
     * Shape: the [[contingency]] and [[independenceRow]] it shares with
     * chiSquareTest, with the G fold between them. */
-  def gTest(df: DataFrame, colA: String, colB: String,
-            roundScale: Int = 6): DataFrame = {
+  def gTest(df: DataFrame, colA: String, colB: String): DataFrame = {
     val (totals, cells) = contingency(df, colA, colB)
     val obs = cells
       .agg(coalesce(sum(col("__od") * log(col("__od") / col("__e"))),
         lit(0.0)).as("__lSum"))
-    independenceRow(totals, obs, "__g", lit(2.0) * col("__lSum"), "g_stat",
-      roundScale)
+    independenceRow(totals, obs, "__g", lit(2.0) * col("__lSum"), "g_stat")
   }
 
   /** Grubbs' max-normed-residual outlier statistic per group (public:
@@ -3847,8 +3776,7 @@ object Stats {
     * earliest day), so the statistic is order-independent and
     * engine-portable at any scale. Groups need ≥ 3 days and
     * non-constant counts, else a null statistic. */
-  def grubbsDaily(events: DataFrame, keyCol: String, tsCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def grubbsDaily(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dec = (c: Column) => c.cast("decimal(20,0)")
     val daily = events
@@ -3880,7 +3808,7 @@ object Stats {
       col("__top").getField("__d").as("worst_day"),
       round(when(col("n_days") > 2 && ssn > 0,
         col("__top").getField("__sdev").cast("double") / nd / sSample),
-        roundScale).as("g_stat"))
+        6).as("g_stat"))
   }
 
   /** Paired sign test per user (public: Arbuthnott 1710 by way of every
@@ -3897,8 +3825,7 @@ object Stats {
     * micros; boundary events land in the first half on both engines).
     * Single-event users are − signs by construction (n₁ = 1, n₂ = 0 →
     * n₂ − n₁ < 0); callers wanting them out filter upstream. */
-  def signTestHalves(events: DataFrame, userCol: String, tsCol: String,
-                     roundScale: Int = 6): DataFrame = {
+  def signTestHalves(events: DataFrame, userCol: String, tsCol: String): DataFrame = {
     val us = unix_micros(col(tsCol))
     val spans = events
       .filter(col(tsCol).isNotNull)
@@ -3926,7 +3853,7 @@ object Stats {
         round(when(col("n_plus") + col("n_minus") > 0,
           (col("n_plus") - col("n_minus")).cast("double")
             / sqrt((col("n_plus") + col("n_minus")).cast("double"))),
-          roundScale).as("z_stat"))
+          6).as("z_stat"))
   }
 
   /** Mood's median test (public: Mood 1950): the 2 × k contingency of
@@ -3940,10 +3867,9 @@ object Stats {
     * window; the contingency is a second small aggregate; chi² is exact
     * integer O/E arithmetic in doubles. Ties sit in the at-or-below
     * row on both engines (6dp-rounded values, exact comparisons). */
-  def moodsMedianTest(df: DataFrame, groupCol: String, valCol: String,
-                      roundScale: Int = 6): DataFrame = {
+  def moodsMedianTest(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val v = round(col(valCol).cast("double"), roundScale)
+    val v = round(col(valCol).cast("double"), 6)
     val base = df.filter(col(valCol).isNotNull && col(groupCol).isNotNull)
     val grid = base.groupBy(v.as("__v")).agg(count(lit(1)).as("__w"))
     val med = Prefix.cumBefore(grid, Nil, "__v", Seq("__w"),
@@ -3987,7 +3913,7 @@ object Stats {
             .otherwise(0.0)).as("__chi"))
     chi.select(col("n"), col("k_groups"), col("__gmed").as("global_median"),
       (col("k_groups") - 1).cast("long").as("dof"),
-      round(when(col("k_groups") > 1, col("__chi")), roundScale)
+      round(when(col("k_groups") > 1, col("__chi")), 6)
         .as("chi2"))
   }
 
@@ -4007,7 +3933,7 @@ object Stats {
     * exact well past 10¹⁵ rows. Degenerate margins (any factor 0) →
     * null MCC, per the standard convention. */
   def matthewsCorr(df: DataFrame, labelCol: String, predCol: String,
-                   positive: String, roundScale: Int = 6): DataFrame = {
+                   positive: String): DataFrame = {
     val lab = col(labelCol) === positive
     val prd = col(predCol) === positive
     val cm = df
@@ -4026,18 +3952,18 @@ object Stats {
     val n = (col("tp") + col("fp") + col("fn") + col("tn")).cast("double")
     cm.select(col("tp"), col("fp"), col("fn"), col("tn"),
       round(when(n > 0, (col("tp") + col("tn")).cast("double") / n),
-        roundScale).as("accuracy"),
+        6).as("accuracy"),
       round(when(col("tp") + col("fp") > 0,
         col("tp").cast("double") / (col("tp") + col("fp")).cast("double")),
-        roundScale).as("precision"),
+        6).as("precision"),
       round(when(col("tp") + col("fn") > 0,
         col("tp").cast("double") / (col("tp") + col("fn")).cast("double")),
-        roundScale).as("recall"),
+        6).as("recall"),
       round(when(lit(2L) * col("tp") + col("fp") + col("fn") > 0,
         (lit(2L) * col("tp")).cast("double")
           / (lit(2L) * col("tp") + col("fp") + col("fn")).cast("double")),
-        roundScale).as("f1"),
-      round(when(den > 0, num / den), roundScale).as("mcc"))
+        6).as("f1"),
+      round(when(den > 0, num / den), 6).as("mcc"))
   }
 
   /** Two-sample Hodges–Lehmann location shift (public: Hodges & Lehmann
@@ -4057,8 +3983,7 @@ object Stats {
     * weights c_a·c_b and the total n_a·n_b stay in exact longs
     * (≤ 9·10¹⁵ at 60M rows/side). */
   def hodgesLehmannShift(df: DataFrame, classCol: String, valCol: String,
-                         classA: String, classB: String,
-                         roundScale: Int = 6): DataFrame = {
+                         classA: String, classB: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def grid(cls: String, v: String, c: String): DataFrame = df
       .filter(col(classCol) === cls && col(valCol).isNotNull)
@@ -4068,7 +3993,7 @@ object Stats {
     // nested loop over two value histograms, never a row-level shuffle
     val diffs = grid(classA, "__va", "__ca")
       .crossJoin(broadcast(grid(classB, "__vb", "__cb")))
-      .groupBy(round(col("__va") - col("__vb"), roundScale).as("__d"))
+      .groupBy(round(col("__va") - col("__vb"), 6).as("__d"))
       .agg(sum(col("__ca") * col("__cb")).as("__w"))
     Prefix.cumBefore(diffs, Nil, "__d", Seq("__w"),
         wide = Prefix.isWide(df), withTotals = true)
@@ -4081,7 +4006,7 @@ object Stats {
         min(when(col("__cum") * 2L > col("__W"), col("__d")))
           .as("hl_upper"))
       .withColumn("hl_shift",
-        round((col("hl_lower") + col("hl_upper")) / 2.0, roundScale))
+        round((col("hl_lower") + col("hl_upper")) / 2.0, 6))
   }
 
   /** Chatterjee's ξ rank correlation (public: Chatterjee, JASA '21
@@ -4109,7 +4034,7 @@ object Stats {
     * only. All counts exact integers (decimal(38,0) for the l(n−l)
     * mass); the single division happens once at the end. */
   def chatterjeeXi(df: DataFrame, groupCol: String, xCol: String,
-                   yCol: String, roundScale: Int = 6): DataFrame = {
+                   yCol: String): DataFrame = {
     val wide = Prefix.isWide(df)
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val base = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
@@ -4164,7 +4089,7 @@ object Stats {
         round(when(col("__den") > 0,
           lit(1.0) - dec(col("__n")).cast("double")
             * col("__s").cast("double")
-            / (lit(2.0) * col("__den").cast("double"))), roundScale)
+            / (lit(2.0) * col("__den").cast("double"))), 6)
           .as("xi"))
   }
 
@@ -4180,8 +4105,7 @@ object Stats {
     * an exact integer and the Gini algebra uses only IEEE
     * correctly-rounded ops (÷ × −), so the arg-max is engine-portable
     * bit for bit. Gain ties break toward the SMALLER threshold. */
-  def decisionStump(df: DataFrame, featureCol: String, labelCol: String,
-                    roundScale: Int = 6): DataFrame = {
+  def decisionStump(df: DataFrame, featureCol: String, labelCol: String): DataFrame = {
     val grid = df
       .filter(col(featureCol).isNotNull && col(labelCol).isNotNull)
       .groupBy(col(featureCol).cast("double").as("__v"))
@@ -4212,9 +4136,9 @@ object Stats {
     val root = grid.agg(sum(col("__c")).as("n"), sum(col("__p")).as("n_pos"))
     root.crossJoin(broadcast(best))
       .select(col("n"), col("n_pos"),
-        round(gini(col("n_pos"), col("n")), roundScale).as("gini_root"),
+        round(gini(col("n_pos"), col("n")), 6).as("gini_root"),
         col("__b").getField("v").as("threshold"),
-        round(col("__b").getField("g"), roundScale).as("gini_gain"),
+        round(col("__b").getField("g"), 6).as("gini_gain"),
         col("__b").getField("tl").as("n_left"),
         col("__b").getField("pl").as("pos_left"),
         (col("n") - col("__b").getField("tl")).as("n_right"),
@@ -4236,7 +4160,7 @@ object Stats {
     * confusion along, so test scoring needs no second pass. Majority
     * ties inside a train partition read negative (2p > t strictly). */
   def stumpCv(df: DataFrame, featureCol: String, labelCol: String,
-              foldCol: String, roundScale: Int = 6): DataFrame = {
+              foldCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = df
       .filter(col(featureCol).isNotNull && col(labelCol).isNotNull &&
@@ -4304,12 +4228,12 @@ object Stats {
           - (b.getField("hpp") - b.getField("hp")))
     best.select(col("__f").as("fold"),
         b.getField("v").as("threshold"),
-        round(b.getField("g"), roundScale).as("train_gain"),
+        round(b.getField("g"), 6).as("train_gain"),
         b.getField("hn").as("test_n"),
         correct.as("test_correct"),
         round(when(b.getField("hn") > 0,
           correct.cast("double") / b.getField("hn").cast("double")),
-          roundScale).as("test_accuracy"))
+          6).as("test_accuracy"))
   }
 
   /** B-cubed clustering precision/recall (public: Bagga & Baldwin '98;
@@ -4326,8 +4250,7 @@ object Stats {
     * hash aggregate; per-cell masses n²/n_pred and n²/n_gold then fold
     * by ordered prefix over the vocabulary-bounded cell grid (the
     * cochranC contract for the float sums). */
-  def bcubed(df: DataFrame, goldCol: String, predCol: String,
-             roundScale: Int = 6): DataFrame = {
+  def bcubed(df: DataFrame, goldCol: String, predCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cont = df
       .select(col(goldCol).cast("string").as("__g"),
@@ -4358,9 +4281,9 @@ object Stats {
     val r = col("__sr") / nD
     agg.select(col("n_items"), col("n_pred_clusters"),
       col("n_gold_classes"),
-      round(p, roundScale).as("bcubed_precision"),
-      round(r, roundScale).as("bcubed_recall"),
-      round(when(p + r > 0, lit(2.0) * p * r / (p + r)), roundScale)
+      round(p, 6).as("bcubed_precision"),
+      round(r, 6).as("bcubed_recall"),
+      round(when(p + r > 0, lit(2.0) * p * r / (p + r)), 6)
         .as("bcubed_f1"))
   }
 
@@ -4374,8 +4297,7 @@ object Stats {
     * Scale shape: the (gold, pred) contingency + two margins, entropy
     * partials Σ c·ln c in the single-log fold form over the
     * vocabulary-bounded grids (the clusterAgreement construction). */
-  def vMeasure(df: DataFrame, goldCol: String, predCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def vMeasure(df: DataFrame, goldCol: String, predCol: String): DataFrame = {
     val cont = df
       .select(col(goldCol).cast("string").as("__g"),
         col(predCol).cast("string").as("__p"))
@@ -4405,10 +4327,10 @@ object Stats {
     val comp = when(hP > 0, lit(1.0) - hPgG / hP).otherwise(lit(1.0))
     j.select(col("__nn").as("n_items"), col("n_pred_clusters"),
       col("n_gold_classes"),
-      round(hom, roundScale).as("homogeneity"),
-      round(comp, roundScale).as("completeness"),
+      round(hom, 6).as("homogeneity"),
+      round(comp, 6).as("completeness"),
       round(when(hom + comp > 0,
-        lit(2.0) * hom * comp / (hom + comp)), roundScale)
+        lit(2.0) * hom * comp / (hom + comp)), 6)
         .as("v_measure"))
   }
 
@@ -4444,8 +4366,7 @@ object Stats {
     * group frame (max prefix = total for the nonnegative variances) —
     * the ks/ewma ordered-prefix contract, never an unordered float
     * sum. */
-  def cochranC(df: DataFrame, groupCol: String, valCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def cochranC(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val per = centMoments(df, groupCol, valCol)
       .filter(col("__n") > 1)
@@ -4458,10 +4379,10 @@ object Stats {
         max(col("__cum")).as("__tot"))
       .select(col("k_groups"),
         col("__top").getField("g").as("max_var_group"),
-        round(col("__top").getField("v"), roundScale).as("max_variance"),
-        round(col("__tot"), roundScale).as("sum_variance"),
+        round(col("__top").getField("v"), 6).as("max_variance"),
+        round(col("__tot"), 6).as("sum_variance"),
         round(when(col("__tot") > 0,
-          col("__top").getField("v") / col("__tot")), roundScale)
+          col("__top").getField("v") / col("__tot")), 6)
           .as("cochran_c"))
   }
 
@@ -4479,8 +4400,7 @@ object Stats {
     * (nonnegative per-group SS — the [[cochranC]] contract), then the
     * k² pair grid — bounded by the group vocabulary, never data-sized
     * (the q_jsd_matrix contract). */
-  def tukeyHsd(df: DataFrame, groupCol: String, valCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def tukeyHsd(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val per = centMoments(df, groupCol, valCol)
     // the k-row group frame feeds the SSE fold AND both pair sides —
@@ -4512,14 +4432,14 @@ object Stats {
     a.join(b, col("group_a") < col("group_b"))
       .crossJoin(broadcast(tot))
       .select(col("group_a"), col("group_b"), col("n_a"), col("n_b"),
-        round(mean(col("__ma")), roundScale).as("mean_a"),
-        round(mean(col("__mb")), roundScale).as("mean_b"),
-        round(mean(col("__ma")) - mean(col("__mb")), roundScale)
+        round(mean(col("__ma")), 6).as("mean_a"),
+        round(mean(col("__mb")), 6).as("mean_b"),
+        round(mean(col("__ma")) - mean(col("__mb")), 6)
           .as("mean_diff"),
         col("k_groups"), col("df_err"),
-        round(se, roundScale).as("se"),
+        round(se, 6).as("se"),
         round(when(se > 0, (mean(col("__ma")) - mean(col("__mb"))) / se),
-          roundScale).as("q_stat"))
+          6).as("q_stat"))
   }
 
   /** Standardized-mean-difference covariate balance table (public: the
@@ -4536,7 +4456,7 @@ object Stats {
     * mean/variance a single deterministic division. Degenerate arms
     * (n ≤ 1 or zero pooled variance) → null SMD. */
   def smdBalance(units: DataFrame, treatCol: String,
-                 covCols: Seq[String], roundScale: Int = 6): DataFrame = {
+                 covCols: Seq[String]): DataFrame = {
     require(covCols.nonEmpty, "at least one covariate required")
     val t = col(treatCol).cast("boolean")
     def row(cov: String): DataFrame = {
@@ -4570,12 +4490,12 @@ object Stats {
     }
     covCols.map(row).reduce(_.unionByName(_))
       .select(col("covariate"), col("n_treat"), col("n_ctrl"),
-        round(col("__mt"), roundScale).as("mean_treat"),
-        round(col("__mc"), roundScale).as("mean_ctrl"),
+        round(col("__mt"), 6).as("mean_treat"),
+        round(col("__mc"), 6).as("mean_ctrl"),
         round(when(col("n_treat") > 1 && col("n_ctrl") > 1
           && (col("__vt") + col("__vc")) / 2.0 > 0,
           (col("__mt") - col("__mc"))
-            / sqrt((col("__vt") + col("__vc")) / 2.0)), roundScale)
+            / sqrt((col("__vt") + col("__vc")) / 2.0)), 6)
           .as("smd"))
   }
 
@@ -4594,7 +4514,7 @@ object Stats {
     * ORDERED prefix over the ≤k-row grid with the last prefix read back
     * via struct-argmax — never an unordered float sum. */
   def stratifiedAte(units: DataFrame, treatCol: String, outcomeCol: String,
-                    strataCol: String, roundScale: Int = 6): DataFrame = {
+                    strataCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val t = col(treatCol).cast("boolean")
     val q = (col(outcomeCol).cast("decimal(20,2)") * 100)
@@ -4627,12 +4547,12 @@ object Stats {
         max(struct(col("stratum").as("s"), col("__cum").as("c")))
           .as("__last"))
       .select(col("k_strata"), col("n_used"),
-        round(col("__last").getField("c"), roundScale).as("ate"))
+        round(col("__last").getField("c"), 6).as("ate"))
     folded.select(col("stratum"), col("n_s"), col("n_treat"),
         col("n_ctrl"),
-        round(col("__mt"), roundScale).as("mean_treat"),
-        round(col("__mc"), roundScale).as("mean_ctrl"),
-        round(col("__mt") - col("__mc"), roundScale).as("diff"))
+        round(col("__mt"), 6).as("mean_treat"),
+        round(col("__mc"), 6).as("mean_ctrl"),
+        round(col("__mt") - col("__mc"), 6).as("diff"))
       .crossJoin(broadcast(tot))
   }
 
@@ -4649,8 +4569,7 @@ object Stats {
     * mean broadcast between them) — cross-group float sums always
     * accumulate in group order (the [[cochranC]] contract; the signed
     * folds read back at the last prefix via struct-argmax). */
-  def welchAnova(df: DataFrame, groupCol: String, valCol: String,
-                 roundScale: Int = 6): DataFrame = {
+  def welchAnova(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val per = centMoments(df, groupCol, valCol)
       .filter(col("__n") > 1)
@@ -4685,12 +4604,12 @@ object Stats {
         (col("k_groups") - 1).as("df1"),
         round(when(col("__L") > 0,
           (col("k_groups") * col("k_groups") - 1).cast("double")
-            / (lit(3.0) * col("__L"))), roundScale).as("df2"),
+            / (lit(3.0) * col("__L"))), 6).as("df2"),
         round(when(col("k_groups") > 1 && col("__L") >= 0,
           (col("__A") / (col("k_groups") - 1).cast("double"))
             / (lit(1.0) + lit(2.0) * (col("k_groups") - 2).cast("double")
               / (col("k_groups") * col("k_groups") - 1).cast("double")
-              * col("__L"))), roundScale).as("welch_f"))
+              * col("__L"))), 6).as("welch_f"))
   }
 
   /** Fisher's exact test on a 2×2 contingency (public: Fisher '35) —
@@ -4709,8 +4628,7 @@ object Stats {
     * ratio sums again folded in k order (max prefix = total for the
     * nonnegative ratios). No factorial, no lgamma, no overflow — the
     * largest intermediate is n². */
-  def fisherExact(df: DataFrame, aCol: String, bCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def fisherExact(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ta = col(aCol).cast("boolean")
     val tb = col(bCol).cast("boolean")
@@ -4763,13 +4681,13 @@ object Stats {
       .select(col("a"), col("b"), col("c"), col("d"),
         round(when(col("b") * col("c") > 0,
           (col("a") * col("d")).cast("double")
-            / (col("b") * col("c")).cast("double")), roundScale)
+            / (col("b") * col("c")).cast("double")), 6)
           .as("odds_ratio"),
-        round(least(col("__e") / col("__t"), lit(1.0)), roundScale)
+        round(least(col("__e") / col("__t"), lit(1.0)), 6)
           .as("p_two_sided"),
-        round(least(col("__r") / col("__t"), lit(1.0)), roundScale)
+        round(least(col("__r") / col("__t"), lit(1.0)), 6)
           .as("p_greater"),
-        round(least(col("__l") / col("__t"), lit(1.0)), roundScale)
+        round(least(col("__l") / col("__t"), lit(1.0)), 6)
           .as("p_less"))
   }
 
@@ -4786,8 +4704,7 @@ object Stats {
     * (single hash agg with conditional sums), pure scalar algebra
     * after — the welchTTest shape with the shifted numerators. */
   def tostEquivalence(df: DataFrame, classCol: String, valCol: String,
-                      armA: String, armB: String, delta: Double,
-                      roundScale: Int = 6): DataFrame = {
+                      armA: String, armB: String, delta: Double): DataFrame = {
     require(delta > 0, s"equivalence bound delta must be positive: $delta")
     val q = (col(valCol).cast("decimal(20,2)") * 100).cast("decimal(38,0)")
     val isA = col(classCol) === armA
@@ -4813,12 +4730,12 @@ object Stats {
       (ra * ra / (col("n_a") - 1).cast("double")
         + rb * rb / (col("n_b") - 1).cast("double"))
     mom.select(col("n_a"), col("n_b"),
-      round(d, roundScale).as("mean_diff"),
+      round(d, 6).as("mean_diff"),
       lit(delta).as("delta"),
-      round(se, roundScale).as("se"),
-      round(when(se > 0, dfw), roundScale).as("df_welch"),
-      round(when(se > 0, (d + lit(delta)) / se), roundScale).as("t_lower"),
-      round(when(se > 0, (d - lit(delta)) / se), roundScale).as("t_upper"))
+      round(se, 6).as("se"),
+      round(when(se > 0, dfw), 6).as("df_welch"),
+      round(when(se > 0, (d + lit(delta)) / se), 6).as("t_lower"),
+      round(when(se > 0, (d - lit(delta)) / se), 6).as("t_upper"))
   }
 
   /** Cohen's h (public: Cohen '88) — the arcsine-stabilized effect size
@@ -4827,8 +4744,7 @@ object Stats {
     * power-analysis currency for "is this rate shift big"). One
     * aggregate; exact integer counts into two single-rounding asin
     * calls. */
-  def cohensH(df: DataFrame, condCol: String, flagCol: String,
-              roundScale: Int = 6): DataFrame = {
+  def cohensH(df: DataFrame, condCol: String, flagCol: String): DataFrame = {
     val cond = col(condCol).cast("boolean")
     val flag = col(flagCol).cast("boolean")
     val agg = df.filter(cond.isNotNull && flag.isNotNull)
@@ -4839,10 +4755,10 @@ object Stats {
     val p1 = col("__k1").cast("double") / col("n1").cast("double")
     val p2 = col("__k2").cast("double") / col("n2").cast("double")
     agg.select(col("n1"), col("n2"),
-      round(p1, roundScale).as("p1"), round(p2, roundScale).as("p2"),
+      round(p1, 6).as("p1"), round(p2, 6).as("p2"),
       round(when(col("n1") > 0 && col("n2") > 0,
         lit(2.0) * asin(sqrt(p1)) - lit(2.0) * asin(sqrt(p2))),
-        roundScale).as("cohens_h"))
+        6).as("cohens_h"))
   }
 
   /** Quade test (public: Quade, JASA '79) — the block-weighted upgrade
@@ -4861,7 +4777,7 @@ object Stats {
     * 2⁵³, so all sums are order-independent — the friedman exactness
     * contract. */
   def quadeTest(cells: DataFrame, blockCol: String, treatCol: String,
-                valCol: String, roundScale: Int = 6): DataFrame = {
+                valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // within-block midranks + per-block range, then range midranks Q_b
     val ranked = completeBlockMidranks(cells, blockCol, treatCol, valCol)
@@ -4894,10 +4810,10 @@ object Stats {
           (col("__bb") - 1).cast("double")
             * (col("__sj2") / col("__bb"))
             / (col("__a") - col("__sj2") / col("__bb"))),
-          roundScale).as("quade_t"))
+          6).as("quade_t"))
     perTreat
       .select(col("__t").as(treatCol), col("n_blocks"),
-        round(col("__sj"), roundScale).as("s_j"))
+        round(col("__sj"), 6).as("s_j"))
       .crossJoin(broadcast(t))
   }
 }

@@ -36,7 +36,8 @@ object TextAnalytics {
   /** BM25 ranked retrieval for a literal query-term set: the standard
     * lexical relevance score
     * `Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` with
-    * `idf = ln(1 + (N−df+0.5)/(df+0.5))`. Top-k by the 6dp-rounded score
+    * `idf = ln(1 + (N−df+0.5)/(df+0.5))`, with the customary k1 = 1.2 and
+    * b = 0.75. Top-k by the 6dp-rounded score
     * (id tiebreak) so cross-engine double ulps cannot flip the ranking.
     *
     * Scale shape: term frequencies are filtered to the query's terms
@@ -45,9 +46,10 @@ object TextAnalytics {
     * aggregate each, joined back as broadcasts. No full-vocabulary state
     * anywhere — cost ∝ documents containing query terms. */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
-           queryTerms: Seq[String], k: Int,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+           queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+    val k1 = 1.2
+    val b = 0.75
     val tf = termFrequencies(docs, idCol, textCol)
       .filter(col("term").isin(queryTerms.map(lit): _*))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -179,12 +181,11 @@ object TextAnalytics {
     *
     * Scale shape: the benchmark side is eval suites — thousands of
     * documents against a 100 TB corpus — so its distinct shingle set
-    * broadcasts (`broadcastBenchmark=false` falls back to a shuffle join
-    * if a giant holdout ever doesn't fit); the corpus side is one explode
-    * + one aggregate, shuffle ∝ matches, not corpus size. */
+    * always broadcasts; the corpus side is one explode + one aggregate,
+    * shuffle ∝ matches, not corpus size. */
   def contamination(docs: DataFrame, idCol: String, textCol: String,
                     benchmark: DataFrame, benchTextCol: String,
-                    n: Int = 13, broadcastBenchmark: Boolean = true): DataFrame = {
+                    n: Int = 13): DataFrame = {
     require(n > 0, s"shingle width must be positive: $n")
     // stage the token arrays: shinglesOf's slices would otherwise re-run
     // the tokenizing regex n times per row (and the naive transform
@@ -198,8 +199,7 @@ object TextAnalytics {
       .select(TextFunctions.tokens(col(benchTextCol)).as("__toks"))
       .select(explode(TextFunctions.shinglesOf(col("__toks"), n)).as("shingle"))
       .distinct()
-    val probe = if (broadcastBenchmark) broadcast(benchShingles) else benchShingles
-    docShingles.join(probe, Seq("shingle"))
+    docShingles.join(broadcast(benchShingles), Seq("shingle"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_contaminated_shingles"))
   }
@@ -436,8 +436,7 @@ object TextAnalytics {
     * deliberately UNROUNDED below the 2^53 exactness bar (N < ~9·10^7
     * tokens per source; round it beyond); the libm-carrying hill_1 and
     * pielou round. */
-  def hillDiversity(docs: DataFrame, sourceCol: String, textCol: String,
-                    roundScale: Int = 6): DataFrame =
+  def hillDiversity(docs: DataFrame, sourceCol: String, textCol: String): DataFrame =
     docs
       .select(col(sourceCol), explode(TextFunctions.tokens(col(textCol)))
         .as("tok"))
@@ -449,11 +448,11 @@ object TextAnalytics {
       .withColumn("__h", log(col("n_tokens"))
         - col("__scl") / col("n_tokens").cast("double"))
       .select(col(sourceCol), col("n_tokens"), col("hill_0"),
-        round(exp(col("__h")), roundScale).as("hill_1"),
+        round(exp(col("__h")), 6).as("hill_1"),
         (col("n_tokens").cast("double") * col("n_tokens").cast("double")
           / col("__sc2").cast("double")).as("hill_2"),
         when(col("hill_0") > 1,
-          round(col("__h") / log(col("hill_0")), roundScale)).as("pielou"))
+          round(col("__h") / log(col("hill_0")), 6)).as("pielou"))
 
   /** Per-document mean unigram log-likelihood under the corpus's own
     * add-one-smoothed unigram LM — the cheapest perplexity proxy: documents
@@ -753,7 +752,8 @@ object TextAnalytics {
 
   /** Hashed-feature linear text classifier — the fastText-style scoring
     * shape (public literature: Joulin et al. '16 "Bag of Tricks"; feature
-    * hashing per Weinberger et al. ICML'09): each token hashes into one of
+    * hashing per Weinberger et al. ICML'09): each token hashes (seed 13)
+    * into one of
     * `weights.length` buckets and the document logit is
     * `bias + Σ weights(bucket(token))`. This is how a LEARNED quality /
     * toxicity / domain filter runs at corpus scale once training happened
@@ -768,10 +768,9 @@ object TextAnalytics {
     * (multiples of 2^-n) and the score is EXACT, engine-portable with no
     * rounding step. Empty/blank documents score `bias`.
     *
-    * Emits (id, n_tokens, logit, keep = logit > threshold). */
+    * Emits (id, n_tokens, logit, keep = logit > 0). */
   def hashedLinearScore(docs: DataFrame, idCol: String, textCol: String,
-                        weights: Seq[Double], bias: Double,
-                        threshold: Double = 0.0, seed: Int = 13): DataFrame = {
+                        weights: Seq[Double], bias: Double): DataFrame = {
     require(weights.nonEmpty, "weights must be non-empty")
     val f = weights.length
     val w = typedlit(weights)
@@ -781,23 +780,22 @@ object TextAnalytics {
         size(col("__toks")).cast("long").as("n_tokens"),
         aggregate(col("__toks"), lit(bias),
           (acc, t) => acc + element_at(w,
-            (pmod(TextFunctions.portableHash(t, seed), lit(f.toLong)) + 1)
+            (pmod(TextFunctions.portableHash(t, 13), lit(f.toLong)) + 1)
               .cast("int"))).as("logit"))
-      .withColumn("keep", col("logit") > threshold)
+      .withColumn("keep", col("logit") > 0.0)
   }
 
   /** Top-k terms per document by TF-IDF, ranked on the score rounded to
-    * `roundScale` decimals with a term tiebreak — rounding before ranking
+    * 6 decimals with a term tiebreak — rounding before ranking
     * keeps the selection reproducible across engines (mathematically-equal
     * scores computed as different float expressions round identically,
     * where raw-double ordering could flip on the last ulp). This is the
     * bounded output form the harness oracle checks (q_tfidf). */
-  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int,
-               roundScale: Int = 6): DataFrame = {
+  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("tf_idf").desc, col("term").asc)
     tfIdf(docs, idCol, textCol)
-      .withColumn("tf_idf", round(col("tf_idf"), roundScale))
+      .withColumn("tf_idf", round(col("tf_idf"), 6))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -1026,8 +1024,7 @@ object TextAnalytics {
     * Rank ties (equal counts) are broken by token so the ranking is
     * deterministic, and any tie order gives the same Σ r·f_r within a
     * tie group anyway. */
-  def giniConcentration(docs: DataFrame, groupCol: String, textCol: String,
-                        roundScale: Int = 6): DataFrame = {
+  def giniConcentration(docs: DataFrame, groupCol: String, textCol: String): DataFrame = {
     val freqs = docs
       .select(col(groupCol),
         explode(TextFunctions.tokens(col(textCol))).as("__token"))
@@ -1048,7 +1045,7 @@ object TextAnalytics {
           lit(2.0) * col("__rf")
             / (col("vocab").cast("double") * col("n_tokens").cast("double"))
             - (col("vocab") + 1).cast("double") / col("vocab").cast("double"),
-          roundScale).as("gini"))
+          6).as("gini"))
   }
 
   /** DSIR-style targeted selection (public method: Xie et al., "Data
@@ -1062,7 +1059,8 @@ object TextAnalytics {
     * Features = portable-md5 token hash mod `buckets` (hashed n-gram
     * buckets); both distributions are Laplace-smoothed over the bucket
     * domain; doc score = mean per-occurrence log-ratio (length-normalized).
-    * Gumbel keys use the engine-portable [[Corpus.hashUnit]] — the
+    * Gumbel keys use the engine-portable [[Corpus.hashUnit]] (salt
+    * "dsir") — the
     * Gumbel-max trick makes top-k(score+g) a sample without replacement
     * ∝ softmax(score), but DETERMINISTIC: reruns, engines and cluster
     * sizes agree row-for-row (the same rerun-invariance contract as
@@ -1073,8 +1071,7 @@ object TextAnalytics {
     * TakeOrdered(nSelect) — no shuffle beyond the aggregates, no driver
     * loop, no model training. */
   def dsirSelect(raw: DataFrame, target: DataFrame, idCol: String,
-                 textCol: String, buckets: Int, nSelect: Int,
-                 salt: String = "dsir"): DataFrame = {
+                 textCol: String, buckets: Int, nSelect: Int): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2: $buckets")
     require(nSelect >= 1, s"nSelect must be >= 1: $nSelect")
     def occ(df: DataFrame) = df
@@ -1100,7 +1097,7 @@ object TextAnalytics {
       .join(broadcast(stats), Seq("b"))
       .groupBy(col(idCol))
       .agg(avg(col("__lr")).as("__score"))
-    val u = greatest(Corpus.hashUnit(col(idCol), salt), lit(1.0 / 4294967296.0))
+    val u = greatest(Corpus.hashUnit(col(idCol), "dsir"), lit(1.0 / 4294967296.0))
     scored
       .withColumn("sel_key", round(col("__score") - log(-log(u)), 6))
       .withColumn("score", round(col("__score"), 6))
@@ -1346,18 +1343,17 @@ object TextAnalytics {
     * number that says which languages pay more tokens for the same
     * text, i.e. whose context window and training budget a tokenizer
     * quietly taxes. Input is bpeEncode's per-doc output joined with the
-    * grouping column and a character count.
+    * grouping column and an `n_chars` character count.
     *
     * Scale shape: ONE hash aggregate over the already-map-side encode
     * projection; exact integer sums, two closing divisions. Groups with
     * zero subwords (all-empty text) yield nulls, never NaN. */
-  def tokenizerFertility(encoded: DataFrame, groupCol: String,
-                         charsCol: String = "n_chars"): DataFrame =
+  def tokenizerFertility(encoded: DataFrame, groupCol: String): DataFrame =
     encoded.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_words")).as("n_words"),
         sum(col("n_subwords")).as("n_subwords"),
-        sum(col(charsCol)).as("n_chars"))
+        sum(col("n_chars")).as("n_chars"))
       .select(col(groupCol), col("n_docs"), col("n_words"),
         col("n_subwords"), col("n_chars"),
         round(when(col("n_words") > 0,
@@ -1459,15 +1455,15 @@ object TextAnalytics {
     * aggregate — shuffle ∝ distinct (group, shingle), never corpus
     * tokens. The correction term is ONE division of exact integers —
     * deterministic, deliberately UNROUNDED (rational-halves rule).
-    * `n` is the token n-gram width: richness over n-grams (n chosen so
-    * the type space is not saturated — a saturated space has f1=f2=0
-    * and the estimator degenerates to D, truthfully but vacuously). */
+    * Richness is over token 3-grams (wide enough that the type space
+    * is not saturated — a saturated space has f1=f2=0 and the
+    * estimator degenerates to D, truthfully but vacuously). */
   def chao1Richness(docs: DataFrame, groupCol: String,
-                    textCol: String, n: Int = 3): DataFrame = {
+                    textCol: String): DataFrame = {
     val counts = docs
       .select(col(groupCol), TextFunctions.tokens(col(textCol)).as("__t"))
       .select(col(groupCol),
-        explode(TextFunctions.shinglesOf(col("__t"), n)).as("__tok"))
+        explode(TextFunctions.shinglesOf(col("__t"), 3)).as("__tok"))
       .groupBy(col(groupCol), col("__tok"))
       .agg(count(lit(1)).as("__m"))
     counts.groupBy(col(groupCol))
@@ -1498,7 +1494,7 @@ object TextAnalytics {
     * are exact ratios; the across-group moments and the final mean are
     * float sums → delta is rounded. */
   def burrowsDelta(docs: DataFrame, groupCol: String, textCol: String,
-                   topM: Int = 30, roundScale: Int = 6): DataFrame = {
+                   topM: Int = 30): DataFrame = {
     require(topM > 0, s"topM must be positive: $topM")
     val toks = docs.select(col(groupCol).as("__g"),
       explode(TextFunctions.tokens(col(textCol))).as("__w"))
@@ -1531,7 +1527,7 @@ object TextAnalytics {
       .filter(col("source_a") < col("source_b"))
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_words"),
-        round(avg(abs(col("__za") - col("__zb"))), roundScale).as("delta"))
+        round(avg(abs(col("__za") - col("__zb"))), 6).as("delta"))
   }
 
   /** RAKE keyword extraction (Rose, Engel, Cramer & Cowley, ch. 1 of
@@ -1550,10 +1546,9 @@ object TextAnalytics {
     * instances; the phrase score re-join is an equi-join on the word.
     * Word scores are single exact-integer divisions; the phrase-level
     * SUM of them is a floating sum over member words, so the final
-    * score is rounded to `roundScale` (the one noise-carrying step). */
+    * score is rounded to 6 decimals (the one noise-carrying step). */
   def rakeKeywords(docs: DataFrame, idCol: String, textCol: String,
-                   stopwords: Seq[String], k: Int = 20,
-                   roundScale: Int = 6): DataFrame = {
+                   stopwords: Seq[String], k: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(stopwords.nonEmpty, "RAKE needs a stopword delimiter list")
     val byDoc = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
@@ -1586,7 +1581,7 @@ object TextAnalytics {
     val phraseScore = dpWords
       .join(wordScore, Seq("__w"))
       .groupBy(col("phrase"))
-      .agg(round(sum(col("__ws")), roundScale).as("score"))
+      .agg(round(sum(col("__ws")), 6).as("score"))
     dp.select(col("phrase"), col("n_occurrences"))
       .join(phraseScore, Seq("phrase"))
       .orderBy(col("score").desc, col("phrase").asc)
@@ -1607,8 +1602,7 @@ object TextAnalytics {
     * shared vocabulary per adjacent pair, never corpus² — and exact
     * integer clipped sums; F1 = 2·ov/(|A|+|B|) is one division. Pairs
     * with no shared tokens still appear (overlap 0). */
-  def rouge1Pairs(docs: DataFrame, idCol: String, textCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def rouge1Pairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tf = docs
       .select(col(idCol).cast("long").as("__id"),
         explode(TextFunctions.tokens(col(textCol))).as("__w"))
@@ -1629,14 +1623,14 @@ object TextAnalytics {
       .select(col("doc_a"), (col("doc_a") + 1).as("doc_b"),
         col("len_a"), col("len_b"), col("overlap"),
         round(when(col("len_a") > 0,
-          col("overlap").cast("double") / col("len_a")), roundScale)
+          col("overlap").cast("double") / col("len_a")), 6)
           .as("rouge1_recall"),
         round(when(col("len_b") > 0,
-          col("overlap").cast("double") / col("len_b")), roundScale)
+          col("overlap").cast("double") / col("len_b")), 6)
           .as("rouge1_precision"),
         round(when(col("len_a") + col("len_b") > 0,
           lit(2.0) * col("overlap") / (col("len_a") + col("len_b"))),
-          roundScale).as("rouge1_f1"))
+          6).as("rouge1_f1"))
   }
 
   /** BLEU-2 between consecutive documents (public: Papineni et al.
@@ -1655,8 +1649,7 @@ object TextAnalytics {
     * (doc, gram), never pairwise in the corpus. Overlap counts are
     * exact integers; p₁/p₂/BLEU are single-rounding ratios (√ and ×
     * are IEEE-exact given identical inputs). */
-  def bleuPairs(docs: DataFrame, idCol: String, textCol: String,
-                roundScale: Int = 6): DataFrame = {
+  def bleuPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import graft.functions.TextFunctions
     val toks = docs.select(col(idCol).cast("long").as("__id"),
       TextFunctions.tokens(col(textCol)).as("__t")).cache()
@@ -1689,16 +1682,16 @@ object TextAnalytics {
         exp(lit(1.0) - col("len_ref").cast("double") / col("len_cand"))))
     pairs.select(col("doc_a"), (col("doc_a") + 1).as("doc_b"),
       col("len_ref"), col("len_cand"), col("overlap1"), col("overlap2"),
-      round(p1, roundScale).as("p1"),
-      round(p2, roundScale).as("p2"),
-      round(bp, roundScale).as("brevity_penalty"),
-      round(bp * sqrt(p1 * p2), roundScale).as("bleu2"))
+      round(p1, 6).as("p1"),
+      round(p2, 6).as("p2"),
+      round(bp, 6).as("brevity_penalty"),
+      round(bp * sqrt(p1 * p2), 6).as("bleu2"))
   }
 
   /** Skip-gram context-pair extraction (public: the word2vec
     * training-pair generator, Mikolov et al. NIPS'13): every ordered
     * (center, context) token pair within a forward window of
-    * `maxOffset` positions, counted corpus-wide with the offset kept as
+    * 2 positions, counted corpus-wide with the offset kept as
     * a column — the raw material for embedding training, co-occurrence
     * PMI at distance > 1 (q_ngram_pmi stops at adjacency), and
     * collocation mining. `minCount` drops the long tail (the standard
@@ -1706,15 +1699,13 @@ object TextAnalytics {
     * corpus-sized.
     *
     * Scale shape: ALL offsets come out of ONE window pass —
-    * `lead(token, o)` for o = 1..maxOffset share a single
+    * `lead(token, o)` for o = 1, 2 share a single
     * partition-by-document sort (bounded by doc length — never a
     * position self-join), unpivoted with one explode — then ONE
     * map-side-combining count aggregate; every count is an exact
     * integer. Output is vocabulary-pair-sized. */
   def skipgramPairs(docs: DataFrame, idCol: String, textCol: String,
-                    maxOffset: Int = 2, minCount: Long = 3L): DataFrame = {
-    require(maxOffset >= 1 && maxOffset <= 8,
-      s"maxOffset must be in [1, 8]: $maxOffset")
+                    minCount: Long = 3L): DataFrame = {
     require(minCount >= 1, s"minCount must be positive: $minCount")
     import org.apache.spark.sql.expressions.Window
     val positioned = docs
@@ -1724,10 +1715,10 @@ object TextAnalytics {
     val wDoc = Window.partitionBy(col("__id")).orderBy(col("__pos"))
     // leads materialize in a plain select first (window expressions are
     // not allowed inside a generator), then ONE explode unpivots them
-    val withLeads = positioned.select(col("__w") +: (1 to maxOffset).map {
+    val withLeads = positioned.select(col("__w") +: (1 to 2).map {
       o => lead(col("__w"), o).over(wDoc).as(s"__l$o")
     }: _*)
-    val contexts = array((1 to maxOffset).map { o =>
+    val contexts = array((1 to 2).map { o =>
       struct(lit(o).as("dist"), col(s"__l$o").as("ctx"))
     }: _*)
     withLeads

@@ -88,16 +88,16 @@ object TimeSeries {
     * next) — the partitioning is reused, entities are numerous and
     * individually bounded, nothing global.
     *
-    * `roundScale < 0` skips the output rounding entirely: when the input
-    * values are exact (integer-quantized) doubles the blend is a fixed
-    * IEEE expression over exact operands, so the UNROUNDED output is
-    * bit-deterministic — whereas rounding near a decimal boundary is
+    * The output is NOT rounded: when the input values are exact
+    * (integer-quantized) doubles the blend is a fixed IEEE expression
+    * over exact operands, so the unrounded output is bit-deterministic —
+    * whereas rounding near a decimal boundary is
     * engine-implementation-defined (Spark rounds the shortest decimal
     * representation, other engines round a scaled double). Hourly grids
     * make boundary-exact blends STRUCTURAL (time fractions are dyadic),
     * so exact-input-no-rounding is the hash-stable configuration. */
   def interpolateLinear(series: DataFrame, entityCol: String, tsCol: String,
-                        valCol: String, roundScale: Int = 6): DataFrame = {
+                        valCol: String): DataFrame = {
     val fwd = Window.partitionBy(col(entityCol)).orderBy(col(tsCol).asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     // "first observation AFTER this row" as a GROWING frame over the
@@ -117,8 +117,7 @@ object TimeSeries {
     val blended = prevV +
       (nextV - prevV) * (t - prevT) / (nextT - prevT)
     val interp = when(col(valCol).isNotNull, col(valCol)).otherwise(blended)
-    series.withColumn("v_interp",
-      if (roundScale < 0) interp else round(interp, roundScale))
+    series.withColumn("v_interp", interp)
   }
 
   /** Gaps-and-islands: maximal runs of CONSECUTIVE active days per entity
@@ -167,8 +166,7 @@ object TimeSeries {
     * window). Null values are excluded up front — a null inside
     * collect_list would silently misalign the weight vector. */
   def ewmaHalving(series: DataFrame, entityCol: String, tsCol: String,
-                  tieCol: String, valCol: String, lookback: Int = 16,
-                  roundScale: Int = 6): DataFrame = {
+                  tieCol: String, valCol: String, lookback: Int = 16): DataFrame = {
     require(lookback > 0 && lookback <= 62,
       s"lookback must be in [1,62]: $lookback")
     val w = Window.partitionBy(col(entityCol))
@@ -189,7 +187,7 @@ object TimeSeries {
           zip_with(col("__hist"), slice(weights, lit(1), size(col("__hist"))),
             (x, wt) => x * wt),
           lit(0.0), (acc, x) => acc + x)
-          / element_at(denoms, size(col("__hist"))), roundScale))
+          / element_at(denoms, size(col("__hist"))), 6))
       .drop("__hist")
   }
 
@@ -209,22 +207,21 @@ object TimeSeries {
     * [[decayWeights]] literals. Bucketing by month keeps the weight table
     * a literal array instead of a per-day expression, and makes every
     * contribution integer×dyadic = exact — the ranking is deterministic
-    * with (score desc, id asc) tiebreak on the 6dp-rounded score.
+    * with (score desc, id asc) tiebreak on the 6dp-rounded score. Ages
+    * past 119 months share the last bucket's weight.
     *
     * Scale shape: one 1-row max broadcast, ONE (id, bucket) hash
     * aggregate with map-side combine, one id-level aggregate, then
     * TakeOrdered — no window, no full sort. */
   def decayedTopK(df: DataFrame, idCol: String, tsCol: String,
-                  halfLifeMonths: Double = 6.0, k: Int = 20,
-                  maxBuckets: Int = 120): DataFrame = {
-    require(halfLifeMonths > 0 && k >= 1 && maxBuckets >= 1,
-      s"bad params: $halfLifeMonths/$k/$maxBuckets")
-    val wArr = array(decayWeights(maxBuckets, halfLifeMonths).map(lit): _*)
+                  halfLifeMonths: Double = 6.0, k: Int = 20): DataFrame = {
+    require(halfLifeMonths > 0 && k >= 1, s"bad params: $halfLifeMonths/$k")
+    val wArr = array(decayWeights(120, halfLifeMonths).map(lit): _*)
     val mx = df.agg(max(col(tsCol)).as("__md"))
     df.crossJoin(broadcast(mx))
       .select(col(idCol),
         least(floor(datediff(col("__md"), col(tsCol)) / 30).cast("int"),
-          lit(maxBuckets - 1)).as("__b"))
+          lit(119)).as("__b"))
       .groupBy(col(idCol), col("__b")).agg(count(lit(1)).as("__c"))
       .groupBy(col(idCol))
       .agg(round(sum(col("__c").cast("double")
@@ -235,8 +232,8 @@ object TimeSeries {
 
   /** One-sided CUSUM change-point detection (Page, Biometrika'54) over the
     * daily event-count series — the drift alarm for pipeline throughput:
-    * S_t = max(0, S_{t−1} + x_t − μ − k) with slack k = `slackSigmas`·σ,
-    * alarm when S_t > `hSigmas`·σ. The recursion is re-expressed through
+    * S_t = max(0, S_{t−1} + x_t − μ − k) with slack k = 0.5σ,
+    * alarm when S_t > 4σ. The recursion is re-expressed through
     * the prefix-sum identity S_t = P_t − min(0, min_{i≤t} P_i) with
     * P_t = Σ(x − μ − k), so it needs only a cumulative sum and a
     * cumulative min — no sequential state. The alarm compares the
@@ -246,13 +243,10 @@ object TimeSeries {
     * Scale shape: one day-grain count aggregate (map-side combined), a
     * 1-row stats broadcast, then two cumulative windows over the
     * DAY GRID — bounded by the observation span, never event count. */
-  def cusumDaily(events: DataFrame, tsCol: String,
-                 slackSigmas: Double = 0.5,
-                 hSigmas: Double = 4.0): DataFrame =
+  def cusumDaily(events: DataFrame, tsCol: String): DataFrame =
     cusumOverCounts(
       events.groupBy(date_trunc("day", col(tsCol)).as("day"))
-        .agg(count(lit(1)).as("n_events")),
-      slackSigmas, hSigmas)
+        .agg(count(lit(1)).as("n_events")))
 
   /** [[cusumDaily]]'s finalizer over an ALREADY-AGGREGATED `(day,
     * n_events)` table — exposed so the streaming monitor
@@ -260,11 +254,7 @@ object TimeSeries {
     * IDENTICAL evaluation over its accumulated day-count state, making
     * stream/batch parity a shared-code fact rather than a reimplementation
     * (the windowDrift finalizer contract). */
-  def cusumOverCounts(counts: DataFrame,
-                      slackSigmas: Double = 0.5,
-                      hSigmas: Double = 4.0): DataFrame = {
-    require(slackSigmas >= 0 && hSigmas > 0,
-      s"need slackSigmas >= 0 and hSigmas > 0: $slackSigmas/$hSigmas")
+  def cusumOverCounts(counts: DataFrame): DataFrame = {
     val stats = counts.agg(
       sum(col("n_events")).cast("double").as("__s"),
       sum(col("n_events") * col("n_events")).cast("double").as("__ss"),
@@ -275,13 +265,13 @@ object TimeSeries {
       .rowsBetween(Window.unboundedPreceding, 0)
     counts.crossJoin(broadcast(stats))
       .withColumn("__p",
-        sum(col("n_events").cast("double") - (mu + lit(slackSigmas) * sigma))
+        sum(col("n_events").cast("double") - (mu + lit(0.5) * sigma))
           .over(wCum))
       .withColumn("__s_t",
         col("__p") - least(lit(0.0), min(col("__p")).over(wCum)))
       .select(col("day"), col("n_events"),
         round(col("__s_t"), 6).as("cusum"),
-        round(lit(hSigmas) * sigma, 6).as("threshold"))
+        round(lit(4.0) * sigma, 6).as("threshold"))
       .withColumn("alarm", col("cusum") > col("threshold"))
   }
 
@@ -304,17 +294,15 @@ object TimeSeries {
     * never event count ([[cusumDaily]]'s contract). The last day's
     * U_T = 0 is excluded from the argmax (no "change after everything"
     * degenerate). */
-  def pettittDaily(events: DataFrame, tsCol: String,
-                   roundScale: Int = 6): DataFrame =
+  def pettittDaily(events: DataFrame, tsCol: String): DataFrame =
     pettittOverCounts(
       events.groupBy(date_trunc("day", col(tsCol)).as("day"))
-        .agg(count(lit(1)).as("n_events")), roundScale)
+        .agg(count(lit(1)).as("n_events")))
 
   /** [[pettittDaily]]'s finalizer over an already-aggregated
     * `(day, n_events)` grid — the shared-finalizer contract
     * ([[cusumOverCounts]]). */
-  def pettittOverCounts(counts: DataFrame,
-                        roundScale: Int = 6): DataFrame = {
+  def pettittOverCounts(counts: DataFrame): DataFrame = {
     val byVal = Window.orderBy(col("n_events"))
     val byDay = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -337,7 +325,7 @@ object TimeSeries {
           / (col("__t").cast("double") * col("__t").cast("double")
             * col("__t").cast("double")
             + col("__t").cast("double") * col("__t").cast("double")))),
-          roundScale).as("p_approx"))
+          6).as("p_approx"))
   }
 
   /** Hurst exponent by rescaled-range (R/S) analysis (Hurst, Trans.
@@ -364,8 +352,7 @@ object TimeSeries {
     * `hurst` slope repeated (a 1-row regression over ≤|blockSizes|
     * points, broadcast back). */
   def hurstDaily(events: DataFrame, tsCol: String,
-                 blockSizes: Seq[Int] = Seq(8, 16, 32),
-                 roundScale: Int = 6): DataFrame = {
+                 blockSizes: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
     require(blockSizes.nonEmpty && blockSizes.forall(_ >= 2),
       s"need block sizes >= 2: $blockSizes")
     val counts = events
@@ -398,7 +385,7 @@ object TimeSeries {
       .filter(col("__sd") > 0.0)
     val perM = blocks.groupBy(col("__m").cast("long").as("block_size"))
       .agg(count(lit(1)).as("n_blocks"),
-        round(avg(col("__r") / col("__sd")), roundScale).as("mean_rs"))
+        round(avg(col("__r") / col("__sd")), 6).as("mean_rs"))
     // least-squares slope over (ln m, ln mean_rs) — ≤|blockSizes| points
     val fit = perM
       .select(log(col("block_size").cast("double")).as("__u"),
@@ -411,7 +398,7 @@ object TimeSeries {
         when(col("__k") * col("__suu") - col("__su") * col("__su") > 0.0,
           (col("__k") * col("__suv") - col("__su") * col("__sv"))
             / (col("__k") * col("__suu") - col("__su") * col("__su"))),
-        roundScale).as("hurst"))
+        6).as("hurst"))
     perM.crossJoin(broadcast(fit))
   }
 
@@ -429,8 +416,7 @@ object TimeSeries {
     * aggregate — bounded by days × periods. cos/sin are the libm steps
     * and the projections are float sums → power is rounded. */
   def periodogramDaily(events: DataFrame, tsCol: String,
-                       periods: Seq[Int] = Seq(7, 14, 30),
-                       roundScale: Int = 6): DataFrame = {
+                       periods: Seq[Int] = Seq(7, 14, 30)): DataFrame = {
     require(periods.nonEmpty && periods.forall(_ >= 2),
       s"need periods >= 2: $periods")
     val counts = events
@@ -456,7 +442,7 @@ object TimeSeries {
           * sum(col("__xc") * cos(col("__w") * col("__t")))
           + sum(col("__xc") * sin(col("__w") * col("__t")))
           * sum(col("__xc") * sin(col("__w") * col("__t"))))
-          / max(col("__n")).cast("double"), roundScale).as("power"))
+          / max(col("__n")).cast("double"), 6).as("power"))
   }
 
   /** Ljung–Box portmanteau statistic over the daily event counts
@@ -477,7 +463,7 @@ object TimeSeries {
     * by days × h, and Q's cumulative sum is a window over h rows. The
     * day-grid windows are the documented calendar-bounded exception. */
   def ljungBoxDaily(events: DataFrame, tsCol: String,
-                    maxLag: Int, roundScale: Int = 6): DataFrame = {
+                    maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 60, s"maxLag must be in [1,60]: $maxLag")
     val entire = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -506,9 +492,9 @@ object TimeSeries {
         / (col("__n0") - col("lag")).cast("double"))
       .select(col("lag").cast("long").as("lag"),
         col("__n0").cast("long").as("n_days"),
-        round(col("__rho"), roundScale).as("rho"),
+        round(col("__rho"), 6).as("rho"),
         round(col("__n0").cast("double") * (col("__n0") + 2).cast("double")
-          * sum(col("__term")).over(cum), roundScale).as("q_cum"))
+          * sum(col("__term")).over(cum), 6).as("q_cum"))
   }
 
   /** Wald–Wolfowitz runs test over the daily counts dichotomized at
@@ -528,8 +514,7 @@ object TimeSeries {
     *
     * Shape: one day-grain aggregate, one mean window, one lag-1 window
     * over the day grid, one fold — the calendar-bounded exception. */
-  def runsTestDaily(events: DataFrame, tsCol: String,
-                    roundScale: Int = 6): DataFrame = {
+  def runsTestDaily(events: DataFrame, tsCol: String): DataFrame = {
     val entire = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val ord = Window.orderBy(col("__day"))
@@ -556,7 +541,7 @@ object TimeSeries {
         (lit(1.0) + col("__p") / col("__nn")).as("runs_expected"),
         round(when(col("__var") > 0,
           (col("n_runs").cast("double") - (lit(1.0) + col("__p")
-            / col("__nn"))) / sqrt(col("__var"))), roundScale).as("z"))
+            / col("__nn"))) / sqrt(col("__var"))), 6).as("z"))
   }
 
   /** Western Electric zone rules over the daily-count control chart
@@ -580,8 +565,7 @@ object TimeSeries {
     * Shape: one day-grain aggregate, one mean/sd window, four bounded
     * trailing windows over the day grid — the calendar-bounded
     * exception. */
-  def controlRulesDaily(events: DataFrame, tsCol: String,
-                        roundScale: Int = 6): DataFrame = {
+  def controlRulesDaily(events: DataFrame, tsCol: String): DataFrame = {
     val entire = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     def trail(n: Int) = Window.orderBy(col("day")).rowsBetween(-(n - 1), 0)
@@ -609,7 +593,7 @@ object TimeSeries {
       .withColumn("__lo0", sum(when(col("__z") < 0.0, 1).otherwise(0))
         .over(trail(8)))
       .select(col("day"), col("n"),
-        round(col("__z"), roundScale).as("z"),
+        round(col("__z"), 6).as("z"),
         (abs(col("__z")) > 3.0).as("r1_beyond_3s"),
         (col("__c3") === 3 && (col("__hi2") >= 2 || col("__lo2") >= 2))
           .as("r2_two_of_three_2s"),
@@ -630,8 +614,7 @@ object TimeSeries {
     *
     * Shape: one day-grain aggregate, one lag-1 window over the day
     * grid, one fold — the documented calendar-bounded exception. */
-  def durbinWatsonDaily(events: DataFrame, tsCol: String,
-                        roundScale: Int = 6): DataFrame = {
+  def durbinWatsonDaily(events: DataFrame, tsCol: String): DataFrame = {
     val entire = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val ord = Window.orderBy(col("__day"))
@@ -645,7 +628,7 @@ object TimeSeries {
       .agg(count(lit(1)).as("n_days"),
         round(when(sum(col("__e") * col("__e")) > 0,
           sum(col("__d") * col("__d")) / sum(col("__e") * col("__e"))),
-          roundScale).as("dw"))
+          6).as("dw"))
   }
 
   /** Autocorrelation function of the daily event count at lags
@@ -831,7 +814,7 @@ object TimeSeries {
     * aggregate), two lead windows over it, ONE ≤6-row-per-group pattern
     * aggregate; the entropy folds 6 bounded terms. */
   def permutationEntropyDaily(events: DataFrame, keyCol: String,
-                              tsCol: String, roundScale: Int = 6)
+                              tsCol: String)
       : DataFrame = {
     val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("__g")).orderBy(col("__day"))
@@ -863,13 +846,14 @@ object TimeSeries {
         round(when(col("n_windows") > 0,
           (log(col("n_windows").cast("double"))
             - col("__clogc") / col("n_windows")) / log(lit(6.0))),
-          roundScale).as("perm_entropy"))
+          6).as("perm_entropy"))
   }
 
   /** Holt's linear (double-exponential) smoothing over each group's
     * daily count series (public: Holt '57 / Winters '60, the
     * trend-aware upgrade of the EWMA): level and trend update as
-    * ℓ' = α·y + (1−α)(ℓ+b), b' = β(ℓ'−ℓ) + (1−β)b, seeded with
+    * ℓ' = α·y + (1−α)(ℓ+b), b' = β(ℓ'−ℓ) + (1−β)b with α = 0.5 and
+    * β = 0.25, seeded with
     * ℓ = y₂, b = y₂−y₁. Emits the final state, the one-step-ahead
     * forecast ℓ+b and the in-sample RMSE of the one-step forecasts —
     * the capacity-planning readout beside [[pageHinkleyDaily]]'s alarm.
@@ -882,11 +866,7 @@ object TimeSeries {
     * float ops replay identically in the oracle's recursive CTE (same
     * order, correctly-rounded ops), the ks/ewma ordered-fold contract
     * extended to a recurrence. */
-  def holtLinear(events: DataFrame, keyCol: String, tsCol: String,
-                 alpha: Double = 0.5, beta: Double = 0.25,
-                 roundScale: Int = 6): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha must be in (0,1): $alpha")
-    require(beta > 0 && beta < 1, s"beta must be in (0,1): $beta")
+  def holtLinear(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val series = events
       .filter(col(tsCol).isNotNull)
       .groupBy(col(keyCol).as("__g"),
@@ -909,23 +889,23 @@ object TimeSeries {
       (acc, x) => {
         val f = acc.getField("l") + acc.getField("b")
         val e = x.getField("y") - f
-        val l2 = lit(alpha) * x.getField("y") + lit(1.0 - alpha) * f
+        val l2 = lit(0.5) * x.getField("y") + lit(0.5) * f
         struct(
           l2.as("l"),
-          (lit(beta) * (l2 - acc.getField("l"))
-            + lit(1.0 - beta) * acc.getField("b")).as("b"),
+          (lit(0.25) * (l2 - acc.getField("l"))
+            + lit(0.75) * acc.getField("b")).as("b"),
           (acc.getField("sse") + e * e).as("sse"))
       })
     series
       .withColumn("__f", when(col("__n") >= 2, folded))
       .select(col("__g").as(keyCol), col("__n").cast("long").as("n_days"),
-        round(col("__f").getField("l"), roundScale).as("level"),
-        round(col("__f").getField("b"), roundScale).as("trend"),
+        round(col("__f").getField("l"), 6).as("level"),
+        round(col("__f").getField("b"), 6).as("trend"),
         round(col("__f").getField("l") + col("__f").getField("b"),
-          roundScale).as("forecast_next"),
+          6).as("forecast_next"),
         round(when(col("__n") > 2,
           sqrt(col("__f").getField("sse") / (col("__n") - 2)
-            .cast("double"))), roundScale).as("rmse"))
+            .cast("double"))), 6).as("rmse"))
   }
 
   /** Pinball (quantile) loss of the week-over-week seasonal-naive
@@ -942,8 +922,7 @@ object TimeSeries {
     * tenths so every per-day loss is the integer (10τ)·|y−f| or
     * (10−10τ)·|f−y| — the mean divides the exact integer sum by 10·n
     * once. */
-  def pinballEval(events: DataFrame, keyCol: String, tsCol: String,
-                  roundScale: Int = 6): DataFrame = {
+  def pinballEval(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = dailyCounts(events, keyCol, tsCol)
     val joined = daily.as("cur")
       .join(daily.as("prev"),
@@ -962,7 +941,7 @@ object TimeSeries {
       .select(col(keyCol), (col("__t10").cast("double") / 10.0).as("tau"),
         col("n_days"),
         round(col("__s").cast("double")
-          / (lit(10L) * col("n_days")).cast("double"), roundScale)
+          / (lit(10L) * col("n_days")).cast("double"), 6)
           .as("mean_pinball"))
   }
 
@@ -982,15 +961,11 @@ object TimeSeries {
     * convention). Every interior day is emitted with its flag (output
     * bounded by the calendar grid); callers filter `is_outlier` for the
     * alarm stream. */
-  def hampelFilter(events: DataFrame, keyCol: String, tsCol: String,
-                   windowRadius: Int = 3, nSigma: Double = 3.0,
-                   roundScale: Int = 6): DataFrame = {
-    require(windowRadius >= 1 && windowRadius <= 30,
-      s"windowRadius must be in [1, 30]: $windowRadius")
-    val width = 2 * windowRadius + 1
+  def hampelFilter(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
+    val width = 7
     val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("__g")).orderBy(col("__day"))
-      .rowsBetween(-windowRadius, windowRadius)
+      .rowsBetween(-3, 3)
     // lower/upper element average = exact dyadic median; indices are
     // Scala-side ints (every judged window has exactly `width` rows)
     val loIdx = (width + 1) / 2
@@ -1009,12 +984,12 @@ object TimeSeries {
       .withColumn("__dev", abs(col("__y").cast("double") - col("__med")))
       .select(col("__g").as(keyCol), col("__day").as("day"),
         col("__y").as("n_events"),
-        round(col("__med"), roundScale).as("local_median"),
-        round(col("__mad"), roundScale).as("local_mad"),
+        round(col("__med"), 6).as("local_median"),
+        round(col("__mad"), 6).as("local_mad"),
         round(when(col("__mad") > 0,
-          col("__dev") / (lit(1.4826) * col("__mad"))), roundScale)
+          col("__dev") / (lit(1.4826) * col("__mad"))), 6)
           .as("robust_z"),
-        (col("__dev") > lit(nSigma) * lit(1.4826) * col("__mad"))
+        (col("__dev") > lit(3.0) * lit(1.4826) * col("__mad"))
           .as("is_outlier"))
   }
 
@@ -1032,8 +1007,7 @@ object TimeSeries {
     * DRIVER-side literals serialized identically into the plan and the
     * oracle SQL (the JL/IVF literal contract), so the fit is exact
     * integer moments × shared constants. */
-  def gumbelBlockMax(events: DataFrame, keyCol: String, tsCol: String,
-                     roundScale: Int = 6): DataFrame = {
+  def gumbelBlockMax(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = dailyCounts(events, keyCol, tsCol)
     val weekly = daily
       .groupBy(col("__g"), date_trunc("week", col("__day")).as("__wk"))
@@ -1050,11 +1024,11 @@ object TimeSeries {
     val beta = sd * lit(GumbelC.sqrt6OverPi)
     val mu = mean - lit(GumbelC.eulerGamma) * beta
     mom.select(col("__g").as(keyCol), col("n_blocks"),
-      round(mean, roundScale).as("block_mean"),
-      round(sd, roundScale).as("block_sd"),
-      round(beta, roundScale).as("gumbel_beta"),
-      round(mu, roundScale).as("gumbel_mu"),
-      round(mu - beta * lit(GumbelC.lnln99), roundScale)
+      round(mean, 6).as("block_mean"),
+      round(sd, 6).as("block_sd"),
+      round(beta, 6).as("gumbel_beta"),
+      round(mu, 6).as("gumbel_mu"),
+      round(mu - beta * lit(GumbelC.lnln99), 6)
         .as("return_level_100"))
   }
 
@@ -1077,8 +1051,7 @@ object TimeSeries {
     * joined back (broadcast — 7·groups rows), then BOTH variance folds
     * as ordered prefix cumsums over the per-group day grid (residuals
     * are floats; unordered sums would flap — the cochranC contract). */
-  def seasonalStrength(events: DataFrame, keyCol: String, tsCol: String,
-                       roundScale: Int = 6): DataFrame = {
+  def seasonalStrength(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = dailyCounts(events, keyCol, tsCol)
     val dow = daily
@@ -1110,10 +1083,10 @@ object TimeSeries {
     val varY = (col("__syy") - col("__sy") * col("__sy") / nD) / nD
     val varR = col("__srr") / nD
     agg.select(col(keyCol), col("n_days"),
-      round(varY, roundScale).as("var_total"),
-      round(varR, roundScale).as("var_residual"),
+      round(varY, 6).as("var_total"),
+      round(varR, 6).as("var_residual"),
       round(when(varY > 0, greatest(lit(0.0), lit(1.0) - varR / varY)),
-        roundScale).as("seasonal_strength"))
+        6).as("seasonal_strength"))
   }
 
   /** Circular statistics of event time-of-day (public: Mardia & Jupp,
@@ -1141,8 +1114,7 @@ object TimeSeries {
   }
   private[graft] val twelveOverPi: Double = 12.0 / math.Pi
 
-  def circularHours(events: DataFrame, keyCol: String, tsCol: String,
-                    roundScale: Int = 6): DataFrame = {
+  def circularHours(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val cosA = circularCos24
     val sinA = circularSin24
     val counts = events
@@ -1160,10 +1132,10 @@ object TimeSeries {
     val r = sqrt(col("__sumc") * col("__sumc")
       + col("__sums") * col("__sums")) / col("n_events").cast("double")
     agg.select(col(keyCol), col("n_events"),
-      round(r, roundScale).as("resultant"),
-      round(lit(1.0) - r, roundScale).as("circular_variance"),
+      round(r, 6).as("resultant"),
+      round(lit(1.0) - r, 6).as("circular_variance"),
       round(atan2(col("__sums"), col("__sumc")) * lit(twelveOverPi),
-        roundScale).as("mean_hour_signed"))
+        6).as("mean_hour_signed"))
   }
 
   /** Theil's U₂ forecast-quality ratio (public: Theil '66, the
@@ -1178,8 +1150,7 @@ object TimeSeries {
     * (day−7 and day−1); squared errors of integer counts are exact
     * integers, folded per group in one hash aggregate; two sqrt + one
     * division at the end. */
-  def theilsU2(events: DataFrame, keyCol: String, tsCol: String,
-               roundScale: Int = 6): DataFrame = {
+  def theilsU2(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = dailyCounts(events, keyCol, tsCol)
     val joined = daily.as("cur")
       .join(daily.as("wk"), col("cur.__g") === col("wk.__g") &&
@@ -1198,9 +1169,9 @@ object TimeSeries {
     val rm = sqrt(col("__sm").cast("double") / nD)
     val rn = sqrt(col("__sn").cast("double") / nD)
     agg.select(col(keyCol), col("n_days"),
-      round(rm, roundScale).as("rmse_seasonal"),
-      round(rn, roundScale).as("rmse_naive"),
-      round(when(rn > 0, rm / rn), roundScale).as("theils_u2"))
+      round(rm, 6).as("rmse_seasonal"),
+      round(rn, 6).as("rmse_naive"),
+      round(when(rn > 0, rm / rn), 6).as("theils_u2"))
   }
 
   /** Page–Hinkley change detector (public: Page, Biometrika '54; the
@@ -1217,8 +1188,7 @@ object TimeSeries {
     * ordered-prefix contract; the arg-max ties break to the EARLIEST
     * day. Gap days are absent rows, not zeros (the pre-densify
     * adfDaily convention, documented). */
-  def pageHinkleyDaily(events: DataFrame, keyCol: String, tsCol: String,
-                       roundScale: Int = 6): DataFrame = {
+  def pageHinkleyDaily(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("__g")).orderBy(col("__day"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1236,7 +1206,7 @@ object TimeSeries {
           (lit(0L) - unix_micros(col("__day"))).as("nt"),
           col("__day").as("d"))).as("__top"))
       .select(col(keyCol), col("n_days"),
-        round(col("__top").getField("ph"), roundScale).as("ph_stat"),
+        round(col("__top").getField("ph"), 6).as("ph_stat"),
         col("__top").getField("d").as("alarm_day"))
   }
 }

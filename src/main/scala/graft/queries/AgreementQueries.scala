@@ -175,7 +175,7 @@ object AgreementQueries {
                 round(round(avg(CASE WHEN y THEN 1.0 ELSE 0.0 END), 6)
                   - round(avg(s), 6), 6) AS gap
          FROM clamped GROUP BY 1""") { (s, d) =>
-      Stats.calibrationBins(qualityScored(s, d), "quality", "is_en", bins = 10)
+      Stats.calibrationBins(qualityScored(s, d), "quality", "is_en")
     },
 
     /** §2b Cohen's kappa: chance-corrected agreement between the stopword
@@ -345,8 +345,7 @@ object AgreementQueries {
                 CAST(p.pos AS DOUBLE) / CAST(p.n AS DOUBLE) AS pos_rate,
                 f.iso_rate
          FROM pre p JOIN fit f ON p.bin = f.bin""") { (s, d) =>
-      Stats.isotonicCalibration(qualityScored(s, d), "quality", "is_en",
-        bins = 10)
+      Stats.isotonicCalibration(qualityScored(s, d), "quality", "is_en")
     },
 
     /** §2b McNemar paired-rates test: declared 'en' vs the stopword
@@ -407,8 +406,7 @@ object AgreementQueries {
                 round(pos / CAST(n AS DOUBLE)
                   * (1.0 - pos / CAST(n AS DOUBLE)), 6) AS uncertainty
          FROM binned, tot GROUP BY n, sqsum, pos""") { (s, d) =>
-      Stats.forecastDecomposition(qualityScored(s, d), "quality", "is_en",
-        bins = 10)
+      Stats.forecastDecomposition(qualityScored(s, d), "quality", "is_en")
     },
 
     /** §2b ARI + NMI between the lang and source partitions of the
@@ -664,8 +662,7 @@ object AgreementQueries {
       val rated = ratingsFirst5(s, d)
         .select(col("user_id"), (col("event_id") % 3L).as("rater"),
           col("event_type"), col("__rn"))
-      Agreement.dawidSkene(rated, "user_id", "rater", "event_type", "__rn",
-        iters = 2, maxRatings = 5)
+      Agreement.dawidSkene(rated, "user_id", "rater", "event_type", "__rn")
     },
 
     /** §2b Krippendorff's nominal alpha over the full (user, event_type)

@@ -919,8 +919,7 @@ object CorpusQueries {
                 round(share, 6) AS share_before,
                 round(raw / zz, 6) AS weight_after
          FROM sc, z""") { (s, d) =>
-      Corpus.domainReweight(Tables.documents(s, d), "source", "text",
-        eta = 1.0)
+      Corpus.domainReweight(Tables.documents(s, d), "source", "text")
     },
 
     /** §2b water-filling allocation of a 50% token budget across

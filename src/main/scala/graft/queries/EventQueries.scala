@@ -81,7 +81,7 @@ object EventQueries {
                 count(*) AS n_events, round(sum(value), 2) AS session_value
          FROM sess GROUP BY user_id, sid""") { (s, d) =>
       graft.streaming.EventStreams
-        .statefulSessions(Tables.events(s, d), 30, emitOpen = true)
+        .statefulSessions(Tables.events(s, d), emitOpen = true)
         .toDF()
         .withColumn("session_value", round(col("session_value"), 2))
     },

@@ -257,8 +257,7 @@ object HypothesisTestQueries {
                                        AND UNBOUNDED FOLLOWING),
                       1.0), 6) <= 0.05 AS significant
          FROM ranked""") { (s, d) =>
-      Stats.bhAdjust(shiftedKsPvalues(s, d), "p_value", Seq("source"),
-        alpha = 0.05)
+      Stats.bhAdjust(shiftedKsPvalues(s, d), "p_value", Seq("source"))
     },
 
     /** §2b χ² independence audit: lang × source contingency — which cells
@@ -549,7 +548,7 @@ object HypothesisTestQueries {
          FROM (SELECT * FROM dd WHERE arm = 'click') a,
               (SELECT * FROM dd WHERE arm = 'purchase') b""") { (s, d) =>
       Stats.yuenTrimmedTest(Tables.events(s, d), "event_type", "value",
-        armA = "click", armB = "purchase", trimFrac = 0.2)
+        armA = "click", armB = "purchase")
     },
 
     /** §2b Wald SPRT daily trajectory testing H₀: purchase share = 0.18
@@ -1180,8 +1179,7 @@ object HypothesisTestQueries {
                                        AND UNBOUNDED FOLLOWING),
                       1.0), 6) <= 0.05 AS significant
          FROM withc""") { (s, d) =>
-      Stats.byAdjust(shiftedKsPvalues(s, d), "p_value", Seq("source"),
-        alpha = 0.05)
+      Stats.byAdjust(shiftedKsPvalues(s, d), "p_value", Seq("source"))
     },
 
     /** §2b Cochran–Mantel–Haenszel test — exposure = even event id,
@@ -1364,8 +1362,7 @@ object HypothesisTestQueries {
                                        AND CURRENT ROW),
                       1.0), 6) <= 0.05 AS significant
          FROM ranked""") { (s, d) =>
-      Stats.holmAdjust(shiftedKsPvalues(s, d), "p_value", Seq("source"),
-        alpha = 0.05)
+      Stats.holmAdjust(shiftedKsPvalues(s, d), "p_value", Seq("source"))
     },
 
     /** §2b Dickey–Fuller unit-root screen per event type over the daily

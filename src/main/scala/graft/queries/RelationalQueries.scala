@@ -16,9 +16,9 @@ object RelationalQueries {
 
   /** DuckDB expression for the Morton key of two BIGINT columns — the
     * same static bit-interleave fold the engine codegens
-    * (Sinks.mortonKey), unrolled to SQL. */
-  private def mortonSql(x: String, y: String, bits: Int = 21): String =
-    (0 until bits).flatMap(b => Seq(
+    * (Sinks.mortonKey, 21 bits per coordinate), unrolled to SQL. */
+  private def mortonSql(x: String, y: String): String =
+    (0 until 21).flatMap(b => Seq(
       s"((($x >> $b) & 1) << ${2 * b})",
       s"((($y >> $b) & 1) << ${2 * b + 1})")).mkString(" | ")
 
@@ -327,7 +327,7 @@ object RelationalQueries {
       val orders = Tables.orders(s, d)
       val dest = orders.filter(col("o_orderstatus") === "F")
       Joins.dedupAgainstBloom(orders, dest, Seq("o_orderkey"),
-        expectedItems = 2000L, fpp = 0.03)
+        expectedItems = 2000L)
     },
 
     /** T19/S3: union of (column-drifting) scan slices. */
@@ -381,7 +381,7 @@ object RelationalQueries {
          FROM orders""") { (s, d) =>
       Relational.auditTimestamp(
         Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-        "upload", Some("2024-01-15 12:00:00"))
+        Some("2024-01-15 12:00:00"))
     },
 
     /** T13: null-or-blank key synthesis (deterministic generator for oracle). */

@@ -275,7 +275,7 @@ object StatsQueries {
                        JOIN mad USING (event_type)
          WHERE mad.mad > 0
            AND round(abs(e.value - med.med) / (mad.mad * 1.4826), 6) > 3.0""") { (s, d) =>
-      Stats.madOutliers(Tables.events(s, d), "event_type", "value", z = 3.0)
+      Stats.madOutliers(Tables.events(s, d), "event_type", "value")
         .select(col("event_id"), col("event_type"), col("value"),
           col("med"), col("mad"), col("robust_z"))
     },
@@ -693,8 +693,7 @@ object StatsQueries {
                     * (pow((1.0 - 0.999) / zeta, -xi) - 1.0) END, 6)
                   AS q_est
          FROM c""") { (s, d) =>
-      Stats.gpdTailFit(Tables.events(s, d), "value", threshold = 150.0,
-        p = 0.999)
+      Stats.gpdTailFit(Tables.events(s, d), "value", threshold = 150.0)
     },
 
     /** §2b Wilson score intervals for the per-source share of English

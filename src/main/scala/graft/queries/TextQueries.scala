@@ -648,11 +648,10 @@ object TextQueries {
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
                 TRUE AS kept_consistent, TRUE AS rank_ok
          FROM documents GROUP BY lang""") { (s, d) =>
-      val accuracy = 10000
+      val accuracy = 10000 // quantileFilterApprox's GK sketch accuracy
       val staged = Tables.documents(s, d).select(col("doc_id"), col("lang"),
         round(TextFunctions.qualityScore(col("text")), 6).as("quality"))
-      val kept = Corpus.quantileFilterApprox(staged, "lang", "quality",
-        0.25, accuracy)
+      val kept = Corpus.quantileFilterApprox(staged, "lang", "quality", 0.25)
       // one evaluation of the sketch: the threshold is read back from the
       // operator's own output (constant per lang), never recomputed
       val keptAgg = kept.groupBy(col("lang"))
@@ -1663,8 +1662,7 @@ object TextQueries {
                   + CAST(f1 * (f1 - 1) AS DOUBLE)
                     / CAST(2 * (f2 + 1) AS DOUBLE) AS chao1
          FROM r""") { (s, d) =>
-      TextAnalytics.chao1Richness(Tables.documents(s, d), "source", "text",
-        n = 3)
+      TextAnalytics.chao1Richness(Tables.documents(s, d), "source", "text")
     },
 
     /** §2b RAKE keyword extraction: stopword-delimited phrase runs,
@@ -1826,7 +1824,7 @@ object TextQueries {
          GROUP BY 1, 2, 3
          HAVING count(*) >= 3""") { (s, d) =>
       TextAnalytics.skipgramPairs(Tables.documents(s, d), "doc_id", "text",
-        maxOffset = 2, minCount = 3L)
+        minCount = 3L)
     },
 
     /** §2b BLEU-2 between consecutive documents

@@ -223,8 +223,7 @@ object TimeSeriesQueries {
             .as("hour"))
       val sparse = grid.join(hours, Seq("user_id", "hour"), "left")
         .select(col("user_id"), col("hour"), col("c").cast("double").as("v"))
-      TimeSeries.interpolateLinear(sparse, "user_id", "hour", "v",
-          roundScale = -1)
+      TimeSeries.interpolateLinear(sparse, "user_id", "hour", "v")
         .select(col("user_id"), col("hour"),
           (col("v_interp") / 100.0).as("v_interp"))
     },

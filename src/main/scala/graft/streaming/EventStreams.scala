@@ -18,7 +18,7 @@ case class SessionOut(user_id: Long, session_start_us: Long,
                       session_value: Double)
 
 /** Bounded memory carried per key by [[EventStreams.ewmaStream]]: the
-  * last `lookback − 1` values, newest first. */
+  * last 15 values, newest first. */
 case class EwmaMemory(recent: List[Double])
 
 /** One smoothed point emitted by [[EventStreams.ewmaStream]]. `ewma` is
@@ -52,7 +52,7 @@ case class ShardSketch(shard: Int, counters: Map[String, Long],
   * operator): [[statefulSessions]] ONE 4-scalar record per OPEN session
   * (watermark-timeout bounded); [[runningUserStats]] one 3-scalar record
   * per distinct user (unbounded in users — pair with a TTL policy);
-  * [[ewmaStream]] ≤ `lookback` doubles per user; [[streamingHeavyHitters]]
+  * [[ewmaStream]] ≤ 16 doubles per user; [[streamingHeavyHitters]]
   * shards × k counters, CONSTANT in stream length; dedup state = event ids
   * inside the watermark. At 100-TB user cardinality, run the unbounded-key
   * operators under the RocksDB provider
@@ -74,12 +74,11 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
 
-  /** Sliding-window variant. */
-  def slidingCounts(events: DataFrame, windowLength: String = "1 hour",
-                    slide: String = "15 minutes"): DataFrame =
+  /** Sliding-window variant: 1-hour windows every 15 minutes. */
+  def slidingCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), windowLength, slide), col("event_type"))
+      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"))
 
@@ -134,33 +133,34 @@ object EventStreams {
         round(sum(half(pw) + half(col("p_ref"))), 6).as("jsd"))
   }
 
-  /** Session spans via Spark's native `session_window`: one row per
-    * (user, session) with start (first event ts), end (last event ts + gap)
-    * and aggregates. Works on static and streaming frames; the batch twin
-    * is oracle-checked (q_session_window in [[graft.queries.EventQueries]]),
-    * stream/batch parity
-    * is asserted in StreamingSpec. */
-  def sessionSpans(events: DataFrame, gap: String = "30 minutes"): DataFrame =
+  /** Session spans via Spark's native `session_window` (30-minute gap):
+    * one row per (user, session) with start (first event ts), end (last
+    * event ts + gap) and aggregates. Works on static and streaming
+    * frames; the batch twin is oracle-checked (q_session_window in
+    * [[graft.queries.EventQueries]]), stream/batch parity is asserted in
+    * StreamingSpec. */
+  def sessionSpans(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("session_value"))
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"), col("session_value"))
 
   /** Stream-stream interval join (attribution): each purchase matched to
-    * every click by the same user in the preceding `gap` window. The ONE
+    * every click by the same user in the preceding 30 minutes. The ONE
     * join shape Structured Streaming can run unbounded: an equi-join on
     * the user key plus a both-sided time-range condition, with watermarks
     * on both inputs — the range bound + watermark lets Spark expire join
-    * state, so state is O(events within gap+watermark), not O(stream).
+    * state, so state is O(events within 30 minutes + watermark), not
+    * O(stream).
     *
     * Works identically on a static events frame (watermarks no-op, the
     * range condition rides the user_id hash join as a post-filter — NOT a
     * nested-loop join), which is how the batch twin q_interval_join is
     * oracle-checked; stream/batch parity is asserted in StreamingSpec. */
-  def attributedPurchases(events: DataFrame, gap: String = "30 minutes"): DataFrame = {
+  def attributedPurchases(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("click_user"),
         col("event_id").as("click_id"), col("ts").as("click_ts"))
@@ -172,7 +172,7 @@ object EventStreams {
     clicks.join(purchases,
         col("click_user") === col("user_id") &&
         col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $gap"))
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 minutes"))
       .select(col("user_id"), col("click_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"), col("value"))
   }
@@ -226,7 +226,7 @@ object EventStreams {
     * `flatMapGroupsWithState` shape for session logic the built-in
     * `session_window` can't express (per-session custom folds, mid-session
     * emissions, model state). Events are folded in (ts, event_id) order;
-    * a gap > `gapMinutes` closes the session and emits it.
+    * a gap > 30 minutes closes the session and emits it.
     *
     * Batch vs stream: on a BOUNDED input end-of-data closes every session,
     * so the batch twin passes `emitOpen = true` and emits the final open
@@ -242,10 +242,10 @@ object EventStreams {
     * (ts, event_id): per-key-per-batch volume, the same bound every
     * mapGroups carries; the cross-batch accumulation lives in the
     * 4-scalar state, never a growing buffer. */
-  def statefulSessions(events: DataFrame, gapMinutes: Int = 30,
+  def statefulSessions(events: DataFrame,
                        emitOpen: Boolean = false): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
+    val gapUs = 30L * 60L * 1000000L
     events
       // the raw ts column rides along untouched: the streaming planner
       // requires the WATERMARKED event-time attribute to reach the
@@ -293,7 +293,7 @@ object EventStreams {
               state.remove()
             } else {
               // timeout is in millis event time; fires once watermark > it
-              val flushAtMs = o.end_us / 1000L + gapMinutes.toLong * 60000L
+              val flushAtMs = o.end_us / 1000L + gapUs / 1000L
               val wm =
                 try state.getCurrentWatermarkMs()
                 catch { case _: UnsupportedOperationException => Long.MinValue }
@@ -409,8 +409,8 @@ object EventStreams {
   /** Streaming NEAR-dup ingestion — [[dedupedIngest]]'s fuzzy sibling:
     * each micro-batch first drops exact id replays against the
     * destination (idempotent at-least-once ingest), then runs the
-    * incremental MinHash-LSH admission
-    * ([[graft.operators.Dedup.admitNearDups]]): batch docs that are
+    * incremental MinHash-LSH admission (16 hashes in bands of 4,
+    * [[graft.operators.Dedup.admitNearDups]]): batch docs that are
     * near-duplicates of an accepted destination doc — or of a lower-id
     * doc in the same batch — are rejected, survivors append. Per-batch
     * work ∝ batch (the destination contributes one band equi-join +
@@ -421,8 +421,7 @@ object EventStreams {
     * keep-first admission). StreamingSpec pins stream == batch-twin on
     * the same split. */
   def nearDupIngest(stream: DataFrame, destPath: String, idCol: String,
-                    textCol: String, numHashes: Int = 16,
-                    rowsPerBand: Int = 4, threshold: Double = 0.5)
+                    textCol: String, threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
@@ -433,10 +432,10 @@ object EventStreams {
             val dest = graft.operators.Sinks.readEvolved(spark, destPath)
             val unseen = graft.operators.Joins.dedupAgainst(batch, dest, Seq(idCol))
             graft.operators.Dedup.admitNearDups(unseen, dest, idCol, textCol,
-              numHashes, rowsPerBand, threshold)
+              16, 4, threshold)
           } else
             graft.operators.Dedup.admitNearDups(batch, batch.filter(lit(false)),
-              idCol, textCol, numHashes, rowsPerBand, threshold)
+              idCol, textCol, 16, 4, threshold)
         graft.operators.Sinks.appendEvolving(fresh, destPath)
       }
       .start()
@@ -464,9 +463,7 @@ object EventStreams {
     * a replayed batch double-counts — feed this from an exactly-once
     * source or compose with [[dedupedIngest]]'s anti-join upstream
     * (how StreamingSpec's replay case runs it). */
-  def cusumMonitor(stream: DataFrame, statePath: String,
-                   tsCol: String = "ts", slackSigmas: Double = 0.5,
-                   hSigmas: Double = 4.0)
+  def cusumMonitor(stream: DataFrame, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
@@ -474,7 +471,7 @@ object EventStreams {
         val spark = batch.sparkSession
         val countsPath = s"$statePath/day_counts"
         val bCounts = batch
-          .groupBy(date_trunc("day", col(tsCol)).as("day"))
+          .groupBy(date_trunc("day", col("ts")).as("day"))
           .agg(count(lit(1)).as("n_events"))
         val merged =
           if (new java.io.File(countsPath).exists())
@@ -484,8 +481,7 @@ object EventStreams {
           else bCounts
         merged.localCheckpoint().write.mode("overwrite").parquet(countsPath)
         graft.operators.TimeSeries
-          .cusumOverCounts(spark.read.parquet(countsPath),
-            slackSigmas, hSigmas)
+          .cusumOverCounts(spark.read.parquet(countsPath))
           .write.mode("overwrite").parquet(s"$statePath/alarms")
       }
       .start()
@@ -502,11 +498,9 @@ object EventStreams {
     * is monotone, so the stream can alarm at ANY micro-batch without
     * α-inflation. Same at-least-once caveat as [[cusumMonitor]]:
     * count folding adds, so route replays through [[dedupedIngest]]
-    * upstream. */
-  def msprtMonitor(stream: DataFrame, statePath: String,
-                   tsCol: String = "ts", typeCol: String = "event_type",
-                   successType: String = "purchase",
-                   p0: Double = 0.2, tau: Double = 0.05)
+    * upstream. A trial is an event, a success a `purchase` event; the
+    * null rate is p0 = 0.2 with mixing scale tau = 0.05. */
+  def msprtMonitor(stream: DataFrame, statePath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
@@ -514,9 +508,9 @@ object EventStreams {
         val spark = batch.sparkSession
         val countsPath = s"$statePath/day_counts"
         val bCounts = batch
-          .groupBy(date_trunc("day", col(tsCol)).as("day"))
+          .groupBy(date_trunc("day", col("ts")).as("day"))
           .agg(count(lit(1)).as("n_events"),
-            sum(when(col(typeCol) === successType, 1L).otherwise(0L))
+            sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
               .as("n_success"))
         val merged =
           if (new java.io.File(countsPath).exists())
@@ -527,31 +521,11 @@ object EventStreams {
           else bCounts
         merged.localCheckpoint().write.mode("overwrite").parquet(countsPath)
         graft.operators.Stats
-          .msprtOverCounts(spark.read.parquet(countsPath), p0, tau)
+          .msprtOverCounts(spark.read.parquet(countsPath), 0.2, 0.05)
           .write.mode("overwrite").parquet(s"$statePath/monitor")
       }
       .start()
 
-  /** Streaming twin of [[graft.operators.TimeSeries.ewmaHalving]]: the
-    * same truncated α=1/2 EWMA, but carried as keyed state so each event
-    * is smoothed the moment it arrives instead of re-windowing a batch.
-    * State per key is the last `lookback − 1` values — a FIXED-size
-    * deque, so total state is O(keys · lookback) regardless of stream
-    * length (no timeout needed for boundedness; add one if key churn
-    * demands eviction).
-    *
-    * Parity is BIT-exact by construction, not approximate: the per-point
-    * arithmetic (newest-first zip with the dyadic weight vector, left
-    * fold, 1 − 2^{-len} normalizer) replays the batch operator's
-    * `aggregate(zip_with(...))` evaluation order double-for-double —
-    * StreamingSpec pins stream == batch on both a static frame and a
-    * replayed MemoryStream. Within a micro-batch, events are re-ordered
-    * by (ts, event_id); ACROSS batches arrival order is trusted (the
-    * watermark discipline that would buffer stragglers belongs to the
-    * source, as in statefulSessions).
-    *
-    * Null values must be filtered upstream (the batch twin does the
-    * same) — a null inside the memory would misalign the weights. */
   /** Sharded streaming Misra–Gries heavy hitters (public: Misra & Gries
     * '82; the streaming face of [[graft.operators.Corpus.heavyHitters]],
     * whose Aggregator supplies the IDENTICAL reduce/merge arithmetic):
@@ -596,10 +570,29 @@ object EventStreams {
       }
   }
 
-  def ewmaStream(events: DataFrame, lookback: Int = 16): Dataset[EwmaPoint] = {
+  /** Streaming twin of [[graft.operators.TimeSeries.ewmaHalving]]: the
+    * same truncated α=1/2 EWMA, but carried as keyed state so each event
+    * is smoothed the moment it arrives instead of re-windowing a batch.
+    * State per key is the last 15 values (lookback 16) — a FIXED-size
+    * deque, so total state is O(keys · 16) regardless of stream
+    * length (no timeout needed for boundedness; add one if key churn
+    * demands eviction).
+    *
+    * Parity is BIT-exact by construction, not approximate: the per-point
+    * arithmetic (newest-first zip with the dyadic weight vector, left
+    * fold, 1 − 2^{-len} normalizer) replays the batch operator's
+    * `aggregate(zip_with(...))` evaluation order double-for-double —
+    * StreamingSpec pins stream == batch on both a static frame and a
+    * replayed MemoryStream. Within a micro-batch, events are re-ordered
+    * by (ts, event_id); ACROSS batches arrival order is trusted (the
+    * watermark discipline that would buffer stragglers belongs to the
+    * source, as in statefulSessions).
+    *
+    * Null values must be filtered upstream (the batch twin does the
+    * same) — a null inside the memory would misalign the weights. */
+  def ewmaStream(events: DataFrame): Dataset[EwmaPoint] = {
     import events.sparkSession.implicits._
-    require(lookback > 0 && lookback <= 62,
-      s"lookback must be in [1,62]: $lookback")
+    val lookback = 16
     val weights = (0 until lookback).map(j => 1.0 / (1L << (j + 1))).toArray
     events
       .filter(col("value").isNotNull)

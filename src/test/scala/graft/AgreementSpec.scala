@@ -230,7 +230,7 @@ class AgreementSpec extends SparkSuite {
         (i.toLong, "C", t, 3), (i.toLong, "D", w, 4), (i.toLong, "E", w, 5))
     } ++ Seq((9L, "A", "x", 1), (9L, "D", "y", 2), (9L, "E", "y", 3))
     val out = Agreement.dawidSkene(rows.toDF("item", "rater", "label",
-      "ord"), "item", "rater", "label", "ord", iters = 2)
+      "ord"), "item", "rater", "label", "ord")
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out(9L).getString(1) === "y")      // majority
     assert(out(9L).getString(2) === "x")      // DS corrects it
@@ -247,7 +247,7 @@ class AgreementSpec extends SparkSuite {
       yield (i.toLong, r, if (i % 2 == 0) "p" else "q",
         Seq("A", "B", "C").indexOf(r) + 1)
     val out = Agreement.dawidSkene(rows.toDF("item", "rater", "label",
-      "ord"), "item", "rater", "label", "ord", iters = 2).collect()
+      "ord"), "item", "rater", "label", "ord").collect()
     assert(out.length === 6)
     assert(out.forall(!_.getBoolean(3)))
     assert(out.forall(r => r.getString(1) === r.getString(2)))

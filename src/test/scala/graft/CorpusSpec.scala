@@ -384,7 +384,7 @@ class CorpusSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     val items = (Seq.fill(5)("a") ++ Seq.fill(3)("b") ++ Seq("c")).toDF("t")
     // width 2 forces collisions: every estimate must still be >= truth
-    val tight = Corpus.countMinEstimates(items, "t", depth = 4, width = 2,
+    val tight = Corpus.countMinEstimates(items, "t", width = 2,
       topK = 3).collect().map(r => r.getString(0) -> r).toMap
     assert(tight.keySet === Set("a", "b", "c"))
     tight.values.foreach(r => assert(r.getLong(2) >= r.getLong(1),
@@ -640,7 +640,7 @@ class CorpusSpec extends SparkSuite {
     // from the corpus (higher cross-entropy) and must gain weight
     val docs = Seq((1L, "A", "x x y"), (2L, "B", "y y y"))
       .toDF("id", "src", "text")
-    val out = Corpus.domainReweight(docs, "src", "text", eta = 1.0)
+    val out = Corpus.domainReweight(docs, "src", "text")
       .collect().map(r => r.getString(0) -> r).toMap
     def r6(x: Double) = BigDecimal(x)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

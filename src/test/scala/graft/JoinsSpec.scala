@@ -51,7 +51,7 @@ class JoinsSpec extends SparkSuite {
     val dest = (1L to 100L).map(i => (i * 2, "d")).toDF("k", "w")
     val exact = Joins.dedupAgainst(batch, dest, Seq("k")).collect().toSet
     val bloom = Joins.dedupAgainstBloom(batch, dest, Seq("k"),
-      expectedItems = 8L, fpp = 0.03).collect().toSet
+      expectedItems = 8L).collect().toSet
     assert(bloom === exact)
     assert(bloom.size === 100)
   }

@@ -25,7 +25,7 @@ class MultimodalSpec extends SparkSuite {
     val df = Seq((1L, pngMagic), (2L, null.asInstanceOf[Array[Byte]]))
       .toDF("id", "bytes")
     val assets = Multimodal.toAssets(df, "id", "bytes")
-    val out = Multimodal.stubDecode(assets, featureDim = 8)
+    val out = Multimodal.stubDecode(assets)
     assert(out.schema === Multimodal.decodedSchema)
     val rows = out.collect().map(r => r.getLong(0) -> r).toMap
     assert(rows(1L).getSeq[Float](1).length === 8)

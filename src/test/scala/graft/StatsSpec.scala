@@ -382,7 +382,7 @@ class StatsSpec extends SparkSuite {
       0.0344, 0.0459, 0.3240, 0.4262, 0.5719, 0.6528, 0.7590, 1.0000)
     val tests = ps.zipWithIndex.map { case (p, i) => (f"h$i%02d", p) }
       .toDF("hyp", "p")
-    val out = Stats.bhAdjust(tests, "p", Seq("hyp"), alpha = 0.05)
+    val out = Stats.bhAdjust(tests, "p", Seq("hyp"))
       .orderBy(col("bh_rank")).collect()
     assert(out.map(_.getAs[Int]("bh_rank")).toSeq === (1 to 15))
     val adj = out.map(_.getAs[Double]("p_adj"))
@@ -788,7 +788,7 @@ class StatsSpec extends SparkSuite {
     // unc .1875; scores constant within bins → brier = rel−res+unc
     val df = Seq((0.05, false), (0.05, true), (0.95, true), (0.95, true))
       .toDF("s", "y")
-    val r = Stats.forecastDecomposition(df, "s", "y", bins = 10)
+    val r = Stats.forecastDecomposition(df, "s", "y")
       .collect().head
     assert(r.getLong(0) === 4L)
     assert(r.getDouble(1) === 0.2275)
@@ -822,7 +822,7 @@ class StatsSpec extends SparkSuite {
     // bin 9 stays at 1.
     val df = Seq((0.05, true), (0.05, false), (0.55, false), (0.95, true))
       .toDF("s", "y")
-    val out = Stats.isotonicCalibration(df, "s", "y", bins = 10)
+    val out = Stats.isotonicCalibration(df, "s", "y")
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out.keySet === Set(0L, 5L, 9L))
     assert(out(0L).getDouble(2) === 0.5 && out(5L).getDouble(2) === 0.0)
@@ -833,7 +833,7 @@ class StatsSpec extends SparkSuite {
     // always nondecreasing
     val mono = Seq((0.05, false), (0.55, true), (0.55, false), (0.95, true))
       .toDF("s", "y")
-    val fit = Stats.isotonicCalibration(mono, "s", "y", bins = 10)
+    val fit = Stats.isotonicCalibration(mono, "s", "y")
       .collect().sortBy(_.getLong(0))
     assert(fit.map(_.getDouble(3)).toSeq === Seq(0.0, 0.5, 1.0))
     assert(fit.sliding(2).forall(p => p.head.getDouble(3) <= p.last.getDouble(3)))
@@ -895,7 +895,7 @@ class StatsSpec extends SparkSuite {
     val day2 = (1 to 5).map(i => (t(2, i), "s"))
     val ev = (day1 ++ day2).toDF("ts", "et")
     val out = Stats.sprtDaily(ev, "ts", "et", "s", p0 = 0.2, p1 = 0.8,
-        alpha = 0.05, beta = 0.05)
+        beta = 0.05)
       .collect().sortBy(_.getTimestamp(0).getTime)
     def r6(x: Double) =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -982,7 +982,7 @@ class StatsSpec extends SparkSuite {
     // excesses {1,2,3} over u=0: m=2, v=1 → r=4, ξ=−1.5, β=5;
     // ζ=1 → q.999 = (β/ξ)(0.001^1.5 − 1)
     val df = Seq(1.0, 2.0, 3.0, -1.0).map(Tuple1(_)).toDF("v")
-    val r = Stats.gpdTailFit(df, "v", threshold = 0.0, p = 0.999)
+    val r = Stats.gpdTailFit(df, "v", threshold = 0.0)
       .collect().head
     def r6(x: Double) =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

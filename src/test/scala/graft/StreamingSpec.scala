@@ -261,7 +261,7 @@ class StreamingSpec extends SparkSuite {
     val expected = EventStreams.sessionSpans(events)
       .select(unix_micros(col("session_start")), col("user_id"), col("n_events"))
       .collect().map(_.toSeq).toSet
-    val got = EventStreams.statefulSessions(events, 30, emitOpen = true)
+    val got = EventStreams.statefulSessions(events, emitOpen = true)
       .toDF()
       .select(col("session_start_us"), col("user_id"), col("n_events"))
       .collect().map(_.toSeq).toSet
@@ -281,7 +281,7 @@ class StreamingSpec extends SparkSuite {
     val ms = MemoryStream[(Long, String)]
     val input = ms.toDF().toDF("doc_id", "text")
     val q = EventStreams.nearDupIngest(input, dest, "doc_id", "text",
-      numHashes = 16, rowsPerBand = 4, threshold = 0.3)
+      threshold = 0.3)
     try {
       ms.addData(b1: _*)
       q.processAllAvailable()
@@ -311,7 +311,7 @@ class StreamingSpec extends SparkSuite {
     val input = ms.toDF().toDF("user_id", "us", "event_id", "value")
       .withColumn("ts", timestamp_micros(col("us"))).drop("us")
       .withWatermark("ts", "1 minute")
-    val q = EventStreams.statefulSessions(input, gapMinutes = 30)
+    val q = EventStreams.statefulSessions(input)
       .writeStream.outputMode("append")
       .format("memory").queryName("stateful_out")
       .start()
@@ -351,7 +351,7 @@ class StreamingSpec extends SparkSuite {
     val input = ms.toDF().toDF("user_id", "us", "event_id", "value")
       .withColumn("ts", timestamp_micros(col("us"))).drop("us")
       .withWatermark("ts", "1 minute")
-    val q = EventStreams.statefulSessions(input, gapMinutes = 30)
+    val q = EventStreams.statefulSessions(input)
       .writeStream.outputMode("append")
       .format("memory").queryName("stateful_wm_behind")
       .start()
@@ -387,7 +387,7 @@ class StreamingSpec extends SparkSuite {
     val input = ms.toDF().toDF("user_id", "us", "event_id", "value")
       .withColumn("ts", timestamp_micros(col("us"))).drop("us")
       .withWatermark("ts", "1 hour") // generous: the late row must NOT be dropped
-    val q = EventStreams.statefulSessions(input, gapMinutes = 30)
+    val q = EventStreams.statefulSessions(input)
       .writeStream.outputMode("append")
       .format("memory").queryName("ooo_out")
       .start()
@@ -649,7 +649,7 @@ class StreamingSpec extends SparkSuite {
         .withColumn("ts", timestamp_micros(col("us"))).drop("us")
         .withWatermark("ts", "1 minute")
       qn += 1
-      val q2 = EventStreams.statefulSessions(in2, gapMinutes = 30).writeStream
+      val q2 = EventStreams.statefulSessions(in2).writeStream
         .outputMode("append").format("memory").queryName(s"rocks_sess_$qn").start()
       val sessions = try {
         ms2.addData((1L, t0, 1L, 1.0), (1L, t0 + 5 * min, 2L, 2.0))
@@ -748,7 +748,7 @@ class StreamingSpec extends SparkSuite {
     val in2 = ms2.toDF().toDF("user_id", "us", "event_id", "value")
       .withColumn("ts", timestamp_micros(col("us"))).drop("us")
       .withWatermark("ts", "1 minute")
-    val q2 = EventStreams.statefulSessions(in2, gapMinutes = 30).writeStream
+    val q2 = EventStreams.statefulSessions(in2).writeStream
       .outputMode("append").format("memory").queryName("st_sess").start()
     try {
       ms2.addData((1L, t0, 1L, 1.0), (1L, t0 + 5 * min, 2L, 2.0),

@@ -37,14 +37,14 @@ class TextAndDedupSpec extends SparkSuite {
 
   test("shingles produce overlapping n-grams") {
     val s = Seq(("a b c d")).toDF("text")
-      .select(TextFunctions.shingles($"text", 3).as("sh"))
+      .select(TextFunctions.shingles($"text").as("sh"))
       .as[Seq[String]].collect().head
     assert(s === Seq("a b c", "b c d"))
   }
 
   test("shingles of short text are empty, not an error") {
     val s = Seq(("a b")).toDF("text")
-      .select(TextFunctions.shingles($"text", 3).as("sh"))
+      .select(TextFunctions.shingles($"text").as("sh"))
       .as[Seq[String]].collect().head
     assert(s.isEmpty)
   }
@@ -278,7 +278,7 @@ class TextAndDedupSpec extends SparkSuite {
       (2L, base.replace("kappa", "kappa2")), // one token changed → few bits flip
       (3L, "completely different words about other topics entirely unrelated here")
     ).toDF("doc_id", "text")
-    val pairs = Dedup.simHashNearDups(d, "doc_id", "text", maxHamming = 8, bands = 10)
+    val pairs = Dedup.simHashNearDups(d, "doc_id", "text")
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)))
@@ -1384,7 +1384,7 @@ class TextAndDedupSpec extends SparkSuite {
       // all 4 trigrams singletons → D=4, f1=4, f2=0:
       // chao1 = 4 + 4·3/(2·1) = 10
       (2L, "uniq", "x y z w v u")).toDF("id", "src", "text")
-    val out = TextAnalytics.chao1Richness(docs, "src", "text", n = 3)
+    val out = TextAnalytics.chao1Richness(docs, "src", "text")
       .collect().map(r => r.getString(0) -> r).toMap
     assert(out("rep").getLong(1) === 4L && out("rep").getLong(2) === 1L &&
       out("rep").getLong(3) === 3L)
@@ -1393,7 +1393,7 @@ class TextAndDedupSpec extends SparkSuite {
     assert(out("uniq").getDouble(4) === 10.0)
     // a doc shorter than n contributes no shingles at all
     val short = Seq((1L, "s", "a b")).toDF("id", "src", "text")
-    assert(TextAnalytics.chao1Richness(short, "src", "text", n = 3)
+    assert(TextAnalytics.chao1Richness(short, "src", "text")
       .collect().isEmpty)
   }
 
@@ -1502,7 +1502,7 @@ class TextAndDedupSpec extends SparkSuite {
     // "a b a b a": offset1 (a,b)x2 (b,a)x2; offset2 (a,a)x2 (b,b)x1
     val docs = Seq((1L, "a b a b a"), (2L, "z q")).toDF("doc_id", "text")
     val out = graft.operators.TextAnalytics
-      .skipgramPairs(docs, "doc_id", "text", maxOffset = 2, minCount = 2L)
+      .skipgramPairs(docs, "doc_id", "text", minCount = 2L)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2)) ->
         r.getLong(3)).toMap
@@ -1510,7 +1510,7 @@ class TextAndDedupSpec extends SparkSuite {
       ("a", "b", 1) -> 2L, ("b", "a", 1) -> 2L, ("a", "a", 2) -> 2L))
     // minCount=1 keeps the singletons — incl. (z,q) but NO cross-doc pair
     val all = graft.operators.TextAnalytics
-      .skipgramPairs(docs, "doc_id", "text", maxOffset = 2, minCount = 1L)
+      .skipgramPairs(docs, "doc_id", "text", minCount = 1L)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     assert(all.contains(("z", "q", 1)))
