@@ -26,6 +26,12 @@ import org.apache.spark.sql.functions._
   *   median-of-3 would triple a soak whose signal is the growth RATIO
   *   against the warm sf10 row, noted beside it in BASELINE.md). */
 object GraphScale {
+  /** One loop's [[graft.operators.Rounds]] telemetry on one line; `-`
+    * is an unprobed round. */
+  private def telemetry(r: graft.operators.Rounds[_]): String =
+    s"rounds=${r.rounds} perRound=${r.perRound.map(_.fold("-")(_.toString)).mkString(",")} " +
+      s"converged=${r.converged}"
+
   def main(args: Array[String]): Unit = {
     val baseDir = args(0)
     val factor = args(1).toInt
@@ -83,11 +89,11 @@ object GraphScale {
       println(s"GRAPHSCALE labelprop edges=${edges.count()}")
       val run = timed("labelprop") {
         val r = graft.operators.Graph.labelPropagationRun(edges, 3, dec)
-        val n = r.labels.count()
-        println(s"GRAPHSCALE labelprop nodes=$n rounds=${r.rounds}")
+        val n = r.result.count()
+        println(s"GRAPHSCALE labelprop nodes=$n ${telemetry(r)}")
         r
       }
-      run.labels.unpersist()
+      run.result.unpersist()
     }
 
     // r15 (r14 verdict task #4): the remaining iterative leaders on the
@@ -149,9 +155,8 @@ object GraphScale {
       println(s"GRAPHSCALE kcore edges=${edges.count()}")
       timed("kcore") {
         val r = graft.operators.Graph.kCoreRun(edges, 4)
-        val n = r.core.count()
-        println(s"GRAPHSCALE kcore members=$n rounds=${r.survivorsPerRound.length} " +
-          s"survivors=${r.survivorsPerRound.mkString(",")}")
+        val n = r.result.count()
+        println(s"GRAPHSCALE kcore members=$n ${telemetry(r)}")
       }
     }
 
@@ -173,9 +178,8 @@ object GraphScale {
       println(s"GRAPHSCALE ktruss edges=${edges.count()}")
       timed("ktruss") {
         val r = graft.operators.Graph.kTrussRun(edges, 4)
-        val n = r.truss.count()
-        println(s"GRAPHSCALE ktruss edges_kept=$n rounds=${r.rounds} " +
-          s"removed=${r.removedPerRound.mkString(",")} converged=${r.converged}")
+        val n = r.result.count()
+        println(s"GRAPHSCALE ktruss edges_kept=$n ${telemetry(r)}")
       }
     }
     spark.stop()

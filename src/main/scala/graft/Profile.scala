@@ -6,8 +6,10 @@ import scala.collection.mutable
 
 /** Per-query job/stage breakdown, the Spark-UI substitute for a session
   * with the UI disabled (not part of the benchmark). For each named
-  * query: one untimed warmup, then a timed noop-sink write (the noop sink
-  * computes every output column, as in [[Bench]]) with a listener that
+  * query: one untimed warmup, its cached fragments dropped (as [[Bench]]
+  * does between queries, so the job count is the cold one), then a timed
+  * noop-sink write (the noop sink computes every output column, as in
+  * [[Bench]]) with a listener that
   * records every job's wall clock and every stage's aggregate task
   * metrics (executor run/CPU time, shuffle bytes, spill, input).
   *
@@ -61,6 +63,7 @@ object Profile {
       val (name, fn) = (q.name, q.build)
       // warmup (codegen/JIT), untimed and unrecorded
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
       jobs.clear(); stageRecs.clear(); jobStart.clear()
       collecting = true
       val t0 = System.nanoTime()

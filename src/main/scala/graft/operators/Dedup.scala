@@ -671,21 +671,19 @@ object Dedup {
   def duplicateClusters(nodes: DataFrame, pairs: DataFrame, idCol: String): DataFrame =
     duplicateClustersRun(nodes, pairs, idCol).clusters
 
-  /** One [[duplicateClustersRun]] execution with its convergence
-    * telemetry — the [[Graph.KCoreRun]] contract for the CC loop:
-    * `changedPerRound` is how many active-node labels moved in each
-    * propagation+jump round (strictly positive until the closing
-    * round's 0 — the fixpoint witness), `activeNodes`/`directedEdges`
-    * size the edge-induced subgraph the loop actually iterates, and
-    * `converged` makes the 20-round cap observable. Data-dependent round
-    * growth (long chains from transitive drift vs. the usual
-    * diameter-2 clique blobs) reads directly off the trace length in
-    * production instead of surfacing as an opaque wall-clock shift. */
+  /** One [[duplicateClustersRun]] execution: the [[Rounds]] telemetry of
+    * the CC loop under the two names its callers read. A round's count
+    * is how many active-node labels moved in its propagation+jump round
+    * (strictly positive until the closing round's 0 — the fixpoint
+    * witness), and `converged` makes the 20-round cap observable.
+    * Data-dependent round growth (long chains from transitive drift vs.
+    * the usual diameter-2 clique blobs) reads directly off the trace
+    * length in production instead of surfacing as an opaque wall-clock
+    * shift. */
   final case class DupClustersRun(clusters: DataFrame,
-                                  changedPerRound: Seq[Long],
-                                  activeNodes: Long, directedEdges: Long,
+                                  perRound: Seq[Option[Long]],
                                   converged: Boolean) {
-    def rounds: Int = changedPerRound.length
+    def rounds: Int = perRound.length
   }
 
   /** [[duplicateClusters]] with the per-round telemetry attached (same
@@ -704,12 +702,7 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id"))
       .localCheckpoint()
-    val activeNodes = labels.count()
-    val directedEdges = edges.count()
-    val trace = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var converged = false
-    var i = 0
-    while (!converged && i < 20) {
+    val run = Rounds.run(pairs.sparkSession, "duplicateClusters", 20, None) { _ =>
       val propagated = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("cluster"))
       // checkpoint the propagation+aggregate ONCE — the two hops below
@@ -739,18 +732,16 @@ object Dedup {
       val changed = next
         .join(labels.select(col("id"), col("cluster").as("__prev")), Seq("id"))
         .filter(col("cluster") =!= col("__prev")).count()
-      trace += changed
-      converged = changed == 0
       labels = next
-      i += 1
+      Some(changed)
+    } {
+      edges.unpersist()
+      nodes.select(col(idCol))
+        .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
+        .select(col(idCol),
+          coalesce(col("cluster"), col(idCol)).as("cluster"))
     }
-    edges.unpersist()
-    val clusters = nodes.select(col(idCol))
-      .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("cluster"), col(idCol)).as("cluster"))
-    DupClustersRun(clusters, trace.toSeq, activeNodes, directedEdges,
-      converged)
+    DupClustersRun(run.result, run.perRound, run.converged)
   }
 
   /** Fellegi–Sunter probabilistic record linkage (Fellegi & Sunter,

@@ -330,17 +330,14 @@ object Graph {
     * Shuffle ∝ |E|; the label table never exceeds |V| rows. */
   def labelPropagation(edges: DataFrame, iters: Int,
                        labelOf: Column => Column = identity): DataFrame =
-    labelPropagationRun(edges, iters, labelOf).labels
+    labelPropagationRun(edges, iters, labelOf).result
 
-  /** Telemetry carrier for [[labelPropagation]]: the final label table
-    * plus the number of rounds actually executed (< iters when the
-    * zero-change early exit fired). */
-  final case class LabelPropRun(labels: DataFrame, rounds: Int)
-
-  /** [[labelPropagation]] with round telemetry — same contract, same
-    * result; see the scaladoc there. */
+  /** [[labelPropagation]] with its [[Rounds]] telemetry — same contract,
+    * same result; see the scaladoc there. Rounds 1 and `iters` run
+    * unprobed (`None`); every other round's count is 1 while some label
+    * still moves (a `limit(1)` probe), 0 at the fixed point. */
   def labelPropagationRun(edges: DataFrame, iters: Int,
-                          labelOf: Column => Column = identity): LabelPropRun = {
+                          labelOf: Column => Column = identity): Rounds[DataFrame] = {
     require(iters >= 1 && iters <= 8,
       s"iters must be in [1, 8] (fixed cap, bounded loop): $iters")
     // same iteration shape as pageRank: edges pre-partitioned on the join
@@ -360,9 +357,7 @@ object Graph {
     // the seed stays LAZY: round 1's job folds the distinct + seed into
     // its own join (the r13 fused shape) — no separate |V| job for it
     var labels = nodes.withColumn("label", labelOf(col("id")))
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
+    Rounds.run(edges.sparkSession, "labelPropagation", iters, None) { round =>
       // ONE exchange per round (r13): repartition the joined stream by
       // dst BEFORE aggregating — dst-hash co-locates every (dst, label)
       // AND every dst, so both the count and the argmax aggregate run
@@ -382,7 +377,6 @@ object Graph {
           struct((-col("__c")).as("nc"), col("label").as("lb"))).as("label"))
         .select(col("dst").as("id"), col("label"))
         .localCheckpoint()
-      round += 1
       // zero-change fixed-point check: both sides are checkpointed
       // |V|-row tables, so the probe is one small join, never touches
       // |E|. FULL-OUTER + null-safe (r15): the next round's label table
@@ -400,18 +394,14 @@ object Graph {
       // relabels every node with an edge and the check cannot fire (a
       // pure-self-loop graph just runs its remaining no-op rounds —
       // same result, no wrong exit).
-      if (round >= 2 && round < iters) {
-        val changed = next
-          .join(labels.withColumnRenamed("label", "__prev"),
-            Seq("id"), "full_outer")
-          .filter(not(col("label") <=> col("__prev")))
-          .limit(1).count()
-        converged = changed == 0L
-      }
+      val changed = Option.when(round >= 2 && round < iters)(next
+        .join(labels.withColumnRenamed("label", "__prev"),
+          Seq("id"), "full_outer")
+        .filter(not(col("label") <=> col("__prev")))
+        .limit(1).count())
       labels = next
-    }
-    e.unpersist()
-    LabelPropRun(labels, round)
+      changed
+    } { e.unpersist(); labels }
   }
 
   /** k-core: the maximal subgraph where every node keeps degree ≥ k
@@ -451,45 +441,28 @@ object Graph {
     * The loop is data-dependent (peel depth), localCheckpoint'd each
     * round to keep the plan flat; convergence, direction choice, and
     * the broadcast-size bound all come from ONE 1-row aggregate per
-    * round (alive count, below-k count, Σ below-k degree) — a round
-    * with zero removals ends the loop without executing any subgraph
-    * work, so there is no fixpoint-confirming round.
+    * round (alive count, below-k count) — a round with zero removals
+    * ends the loop without executing any subgraph work, so there is no
+    * fixpoint-confirming round.
     *
     * The DuckDB oracle unrolls a FIXED number of peel rounds; that is
     * sound because a peel round is IDEMPOTENT at the fixpoint (peeling
     * a k-core returns the same k-core), so any unroll depth ≥ the true
     * peel depth yields the exact answer. */
   def kCore(edges: DataFrame, k: Int): DataFrame =
-    kCoreRun(edges, k).core
+    kCoreRun(edges, k).result
 
-  /** One [[kCore]] execution with its peel telemetry: `survivorsPerRound`
-    * is the surviving-node count after the initial degree filter and
-    * after each peel round (monotone non-increasing — each entry is the
-    * 1-row stats aggregate the loop already computes, so telemetry
-    * costs nothing extra). The round count is the peel
-    * depth, which is DATA-DEPENDENT (measured 1.6 s → 10.7 s over 100×
-    * data growth on the bench graph as depth grew) — this readout is
-    * what lets an operator distinguish "deep peel structure" from
-    * "plan regression" at a glance, and `converged` makes the maxIter
-    * cap observable instead of silently returning a partially-peeled
-    * set. */
-  final case class KCoreRun(core: DataFrame, survivorsPerRound: Seq[Long],
-                            converged: Boolean) {
-    /** Peel rounds executed (excludes the initial degree filter). */
-    def rounds: Int = survivorsPerRound.length - 1
-    /** Fraction of then-surviving nodes peeled in each round — a flat,
-      * near-zero tail means rounds are being spent confirming a
-      * fixpoint; a long heavy tail means genuinely deep peel structure. */
-    def peelFractions: Seq[Double] =
-      survivorsPerRound.sliding(2).collect {
-        case Seq(a, b) if a > 0 => (a - b).toDouble / a
-        case Seq(_, _) => 0.0
-      }.toSeq
-  }
-
-  /** [[kCore]] with the per-round telemetry attached (same plan, same
-    * result — q_kcore runs through this path). */
-  def kCoreRun(edges: DataFrame, k: Int, maxIter: Int = 30): KCoreRun = {
+  /** [[kCore]] with its [[Rounds]] telemetry (same plan, same result —
+    * q_kcore runs through this path). A round's count is the number of
+    * surviving nodes still below k after it — the 1-row stats aggregate
+    * the loop already computes, so telemetry costs nothing extra. The
+    * round count is the peel depth, which is DATA-DEPENDENT (measured
+    * 1.6 s → 10.7 s over 100× data growth on the bench graph as depth
+    * grew) — this readout is what lets an operator distinguish "deep
+    * peel structure" from "plan regression" at a glance, and `converged`
+    * makes the maxIter cap observable instead of silently returning a
+    * partially-peeled set. */
+  def kCoreRun(edges: DataFrame, k: Int, maxIter: Int = 30): Rounds[DataFrame] = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     // broadcast the removed ids / decrement table only while provably
@@ -518,23 +491,16 @@ object Graph {
     var deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("degree"))
       .localCheckpoint()
-    // (alive, below-k count, Σ below-k degree) in ONE action: the
-    // convergence check, the adaptive direction choice, and the
-    // decrement-table broadcast bound for the same round
-    def stats(): (Long, Long, Long) = {
-      val r = deg.agg(count(lit(1)),
-        count(when(col("degree") < k, 1)),
-        coalesce(sum(when(col("degree") < k, col("degree"))), lit(0L)))
+    // (alive, below-k count) in ONE action: the convergence check, the
+    // adaptive direction choice, and the removed-ids broadcast bound for
+    // the same round
+    def stats(): (Long, Long) = {
+      val r = deg.agg(count(lit(1)), count(when(col("degree") < k, 1)))
         .collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2))
+      (r.getLong(0), r.getLong(1))
     }
-    var (alive, rCount, rDegSum) = stats()
-    // trace entries are post-filter survivor counts (alive − below-k),
-    // matching the recompute loop's telemetry shape exactly — including
-    // the duplicated final entry a converged run records
-    val trace = scala.collection.mutable.ArrayBuffer(alive - rCount)
-    var i = 0
-    while (rCount > 0 && i < maxIter) {
+    var (alive, rCount) = stats()
+    Rounds.run(edges.sparkSession, "kCore", maxIter, Some(rCount)) { _ =>
       val survivors = deg.filter(col("degree") >= k)
       if (rCount > alive - rCount) {
         // majority peeled (typical round one): one degree aggregate
@@ -566,8 +532,8 @@ object Graph {
         val removedIds =
           if (rCount <= bcastLimit) broadcast(removedIds0) else removedIds0
         // dec rows ≤ distinct neighbors of the removed set in the stale
-        // edge state (dead srcs included) — not provably ≤ rDegSum, so
-        // no broadcast hint: AQE sizes the join at runtime
+        // edge state (dead srcs included) — not provably small, so no
+        // broadcast hint: AQE sizes the join at runtime
         val dec = e
           .join(removedIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
           .groupBy(col("src").as("id")).agg(count(lit(1)).as("__dec"))
@@ -576,13 +542,10 @@ object Graph {
             (col("degree") - coalesce(col("__dec"), lit(0L))).as("degree"))
           .localCheckpoint()
       }
-      i += 1
       val next = stats()
-      alive = next._1; rCount = next._2; rDegSum = next._3
-      trace += alive - rCount
-    }
-    KCoreRun(deg.filter(col("degree") >= k), trace.toSeq,
-      converged = rCount == 0)
+      alive = next._1; rCount = next._2
+      Some(rCount)
+    } { deg.filter(col("degree") >= k) }
   }
 
   /** The pre-round-11 recompute-per-round k-core — degree aggregate +
@@ -910,19 +873,6 @@ object Graph {
     out
   }
 
-  /** One [[kTruss]] execution with its peel telemetry, the [[KCoreRun]]
-    * contract applied to edges: `removedPerRound` is the count of edges
-    * peeled in each round (each entry is the 1-row convergence aggregate
-    * the loop already computes — telemetry costs nothing extra), and
-    * `converged` makes the maxIter cap observable. A long tail of small
-    * removals means deep peel structure; a huge first entry means the
-    * graph is mostly below the truss threshold. */
-  final case class KTrussRun(truss: DataFrame, removedPerRound: Seq[Long],
-                             converged: Boolean) {
-    /** Peel rounds executed after the initial support computation. */
-    def rounds: Int = removedPerRound.length
-  }
-
   /** k-truss (Cohen NSA TR'08): the maximal subgraph in which every
     * edge closes at least k−2 triangles WITHIN the subgraph — the
     * edge-level community backbone one rung above [[kCore]] (a k-truss
@@ -963,11 +913,15 @@ object Graph {
     * (1-row aggregate per round) or `maxIter` caps, returning the
     * partially-peeled set. */
   def kTruss(edges: DataFrame, k: Int): DataFrame =
-    kTrussRun(edges, k).truss
+    kTrussRun(edges, k).result
 
-  /** [[kTruss]] with the per-round telemetry attached (same plan, same
-    * result — q_ktruss runs through this path). */
-  def kTrussRun(edges: DataFrame, k: Int, maxIter: Int = 20): KTrussRun = {
+  /** [[kTruss]] with its [[Rounds]] telemetry (same plan, same result —
+    * q_ktruss runs through this path). A round's count is the number of
+    * edges still below k−2 after it — the 1-row convergence aggregate
+    * the loop already computes. A huge count before round 1 means the
+    * graph is mostly below the truss threshold; a long tail of small
+    * counts means deep peel structure. */
+  def kTrussRun(edges: DataFrame, k: Int, maxIter: Int = 20): Rounds[DataFrame] = {
     require(k >= 3, s"k must be >= 3: $k")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     // broadcast the removed set / decrement table only while provably
@@ -996,8 +950,6 @@ object Graph {
       .localCheckpoint()
     var aliveCount = canon.count()
     var supp = supportOf(canon, w)
-    val trace = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var i = 0
     // (count, Σsupport) of the edges failing the threshold — one action;
     // Σsupport bounds the destroyed-triangle count for the same round
     def removedStats(): (Long, Long) = {
@@ -1007,7 +959,7 @@ object Graph {
       (r.getLong(0), r.getLong(1))
     }
     var (rCount, rSuppSum) = removedStats()
-    while (rCount > 0 && i < maxIter) {
+    Rounds.run(edges.sparkSession, "kTruss", maxIter, Some(rCount)) { _ =>
       val survivors = supp.filter(col("support") >= k - 2)
       if (rCount > aliveCount - rCount) {
         // majority peeled: one wedge join over the (small) survivor set
@@ -1048,15 +1000,13 @@ object Graph {
           .localCheckpoint()
       }
       aliveCount -= rCount
-      trace += rCount
-      i += 1
       val next = removedStats()
       rCount = next._1; rSuppSum = next._2
-    }
-    KTrussRun(
+      Some(rCount)
+    } {
       supp.filter(col("support") >= k - 2)
-        .select(col("a").as("src"), col("b").as("dst"), col("support")),
-      trace.toSeq, converged = rCount == 0)
+        .select(col("a").as("src"), col("b").as("dst"), col("support"))
+    }
   }
 
   /** The pre-round-10 recompute-per-round k-truss — full wedge join +
@@ -1218,7 +1168,14 @@ object Graph {
     * exact integer Σ lcm(1..maxDepth)/d and divided ONCE, so the float
     * is a single deterministic rounding on both engines. */
   def landmarkDistances(edges: DataFrame, numLandmarks: Int = 4,
-                        maxDepth: Int = 4): DataFrame = {
+                        maxDepth: Int = 4): DataFrame =
+    landmarkDistancesRun(edges, numLandmarks, maxDepth).result
+
+  /** [[landmarkDistances]] with its [[Rounds]] telemetry (same plan, same
+    * result): a round's count is 1 while the BFS discovers a node, 0 once
+    * the frontier is exhausted (the `isEmpty` probe). */
+  def landmarkDistancesRun(edges: DataFrame, numLandmarks: Int,
+                           maxDepth: Int): Rounds[DataFrame] = {
     require(numLandmarks >= 1 && numLandmarks <= 64,
       s"numLandmarks must be in [1, 64]: $numLandmarks")
     require(maxDepth >= 1 && maxDepth <= 12,
@@ -1234,34 +1191,33 @@ object Graph {
     var dist = seeds.select(col("src").as("landmark"),
       col("src").as("node"), lit(0).as("d")).localCheckpoint()
     var frontier = dist
-    var depth = 0
-    var exhausted = false
-    while (depth < maxDepth && !exhausted) {
-      depth += 1
+    Rounds.run(edges.sparkSession, "landmarkDistances", maxDepth, None) { depth =>
       val next = frontier.join(e, frontier("node") === e("src"))
         .select(col("landmark"), col("dst").as("node"))
         .distinct()
         .join(dist, Seq("landmark", "node"), "left_anti")
         .select(col("landmark"), col("node"), lit(depth).as("d"))
         .localCheckpoint()
-      if (next.isEmpty) exhausted = true
+      if (next.isEmpty) Some(0L)
       else {
         dist = dist.unionByName(next).localCheckpoint()
         frontier = next
+        Some(1L)
       }
+    } {
+      e.unpersist()
+      val lcmAll = (1 to maxDepth).foldLeft(1L) { (a, b) =>
+        a / BigInt(a).gcd(BigInt(b)).toLong * b
+      }
+      dist.groupBy(col("landmark"))
+        .agg(sum(when(col("d") > 0, 1L).otherwise(0L)).as("n_reached"),
+          max(col("d")).cast("long").as("max_dist"),
+          sum(when(col("d") > 0,
+            floor(lit(lcmAll.toDouble) / col("d")).cast("long"))
+            .otherwise(0L)).as("__hsum"))
+        .select(col("landmark"), col("n_reached"), col("max_dist"),
+          round(col("__hsum").cast("double") / lcmAll.toDouble, 6)
+            .as("harmonic_centrality"))
     }
-    e.unpersist()
-    val lcmAll = (1 to maxDepth).foldLeft(1L) { (a, b) =>
-      a / BigInt(a).gcd(BigInt(b)).toLong * b
-    }
-    dist.groupBy(col("landmark"))
-      .agg(sum(when(col("d") > 0, 1L).otherwise(0L)).as("n_reached"),
-        max(col("d")).cast("long").as("max_dist"),
-        sum(when(col("d") > 0,
-          floor(lit(lcmAll.toDouble) / col("d")).cast("long"))
-          .otherwise(0L)).as("__hsum"))
-      .select(col("landmark"), col("n_reached"), col("max_dist"),
-        round(col("__hsum").cast("double") / lcmAll.toDouble, 6)
-          .as("harmonic_centrality"))
   }
 }

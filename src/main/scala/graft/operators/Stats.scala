@@ -945,6 +945,19 @@ object Stats {
       .filter(col("robust_z") > 3.0)
   }
 
+  /** Shared collapse for the threshold-metric family ([[rocAuc]],
+    * [[averagePrecision]]): per-DISTINCT-ROUNDED-SCORE positive/negative
+    * counts — one hash aggregate, null score/label rows dropped. Both
+    * metrics' tie semantics flow from this single definition. */
+  private def perScoreCounts(df: DataFrame, scoreCol: String,
+                             labelCol: String): DataFrame =
+    df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
+      .select(round(col(scoreCol).cast("double"), 6).as("__s"),
+        col(labelCol).cast("boolean").as("__y"))
+      .groupBy(col("__s"))
+      .agg(sum(when(col("__y"), 1L).otherwise(0L)).as("__cp"),
+        sum(when(!col("__y"), 1L).otherwise(0L)).as("__cn"))
+
   /** ROC-AUC of a score as a ranker of a boolean label, via the
     * Mann–Whitney rank statistic with midrank tie handling — THE
     * threshold-free readout for any learned quality filter (is the score
@@ -960,19 +973,6 @@ object Stats {
     * Midranks are exact halves and counts are integers, so everything is
     * exact until the final division. Degenerate inputs (a single class)
     * yield null auc. */
-  /** Shared collapse for the threshold-metric family ([[rocAuc]],
-    * [[averagePrecision]]): per-DISTINCT-ROUNDED-SCORE positive/negative
-    * counts — one hash aggregate, null score/label rows dropped. Both
-    * metrics' tie semantics flow from this single definition. */
-  private def perScoreCounts(df: DataFrame, scoreCol: String,
-                             labelCol: String): DataFrame =
-    df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .select(round(col(scoreCol).cast("double"), 6).as("__s"),
-        col(labelCol).cast("boolean").as("__y"))
-      .groupBy(col("__s"))
-      .agg(sum(when(col("__y"), 1L).otherwise(0L)).as("__cp"),
-        sum(when(!col("__y"), 1L).otherwise(0L)).as("__cn"))
-
   def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val perScore = perScoreCounts(df, scoreCol, labelCol)
       .withColumn("__ct", col("__cp") + col("__cn"))

@@ -80,16 +80,35 @@ class EntrySpec extends SparkSuite {
   }
 
   test("every query runs and is non-empty at sf0.001") {
+    // result_digests.tsv pins each query's result: one line per query,
+    // the name, the row count, and the MD5 of its rows' `Row.toString`
+    // lines sorted (order-insensitive). A refactor must leave every line
+    // unchanged; an intended result change updates its line.
+    val src = scala.io.Source.fromResource("result_digests.tsv")(
+      scala.io.Codec.UTF8)
+    val pinned = try src.getLines().map(_.split("\t"))
+      .map(a => a(0) -> (a(1).toInt, a(2))).toMap finally src.close()
     // collect, not count(): count() lets Catalyst prune projected
     // columns, so a column that throws would never be evaluated
-    val empties = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, sf).collect().length
-      if (n == 0) Some(name) else None
+    val got = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val rows = fn(spark, sf).collect().map(_.toString).sorted
+      val md5 = MessageDigest.getInstance("MD5")
+      rows.foreach(r => md5.update((r + "\n").getBytes(UTF_8)))
+      name -> (rows.length, md5.digest().map(b => f"$b%02x").mkString)
     }
     // q_embedding_pairs/q_lsh_neardup may legitimately be sparse, everything
     // else must produce rows at the smallest SF.
     val allowedEmpty = Set("q_embedding_pairs", "q_lsh_neardup")
-    assert((empties.toSet -- allowedEmpty).isEmpty,
-      s"unexpected empty results: ${empties.toSet -- allowedEmpty}")
+    val empties = got.collect { case (name, (0, _)) => name }.toSet
+    assert((empties -- allowedEmpty).isEmpty,
+      s"unexpected empty results: ${empties -- allowedEmpty}")
+    assert(pinned.keySet == SparkEntry.queries.keySet,
+      s"unpinned: ${SparkEntry.queries.keySet -- pinned.keySet}, " +
+        s"pinned but gone: ${pinned.keySet -- SparkEntry.queries.keySet}")
+    val changed = got.collect {
+      case (name, result) if pinned(name) != result => name
+    }
+    assert(changed.isEmpty,
+      s"results that differ from result_digests.tsv: ${changed.sorted}")
   }
 }

@@ -123,6 +123,9 @@ class GraphSpec extends SparkSuite {
     val tri = (und ++ und.map(_.swap)).toDF("src", "dst")
     val run = Graph.labelPropagationRun(tri, 8)
     assert(run.rounds === 3, s"expected early exit after round 3: $run")
+    // round 1 runs unprobed; round 2 still moves a label, round 3 is the
+    // zero-change fixpoint witness
+    assert(run.converged && run.perRound === Seq(None, Some(1L), Some(0L)))
     // lazily-unrolled 8-round twin: the same round body folded with no
     // checkpoint and no exit — the pre-r14 fixed-round plan
     import org.apache.spark.sql.functions._
@@ -138,14 +141,17 @@ class GraphSpec extends SparkSuite {
           struct((-col("__c")).as("nc"), col("label").as("lb"))).as("label"))
         .select(col("dst").as("id"), col("label"))
     }
-    val got = run.labels.as[(String, String)].collect().toMap
+    val got = run.result.as[(String, String)].collect().toMap
     val want = twin.as[(String, String)].collect().toMap
     assert(got === want, s"early-exit result diverged from unrolled twin")
 
     // a 2-node oscillator never reaches a fixed point: the cap holds and
     // every round runs (the bipartite-oscillation contract in the doc)
     val osc = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
-    assert(Graph.labelPropagationRun(osc, 4).rounds === 4)
+    val capped = Graph.labelPropagationRun(osc, 4)
+    assert(capped.rounds === 4 && !capped.converged)
+    // the closing round is unprobed, so only rounds 2-3 report a count
+    assert(capped.perRound === Seq(None, Some(1L), Some(1L), None))
   }
 
   test("labelPropagation: directed shrinking id set must not fire the " +
@@ -160,7 +166,7 @@ class GraphSpec extends SparkSuite {
     val edges = Seq(m -> u1, m -> u2, m -> b, u1 -> b, u2 -> b,
       v -> v, v -> b).toDF("src", "dst")
     val run = Graph.labelPropagationRun(edges, 8)
-    val got = run.labels.as[(String, String)].collect().toMap
+    val got = run.result.as[(String, String)].collect().toMap
     // unrolled twin (no probe, no exit): the pre-r14 fixed-round plan
     val e = edges.select(col("src"), col("dst"))
     var twin = e.select(col("src").as("id")).distinct()
@@ -231,7 +237,7 @@ class GraphSpec extends SparkSuite {
     assert(core2 === core)
   }
 
-  test("kCoreRun telemetry: deep-tail peel depth, fractions, maxIter cap observable") {
+  test("kCoreRun telemetry: deep-tail peel depth, per-round counts, maxIter cap observable") {
     def undirected(pairs: (Long, Long)*) =
       pairs.toDF("src", "dst").unionByName(
         pairs.map(_.swap).toDF("src", "dst"))
@@ -242,20 +248,21 @@ class GraphSpec extends SparkSuite {
       (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
     val run = Graph.kCoreRun(g, 2)
     assert(run.converged)
-    // initial degree filter drops node 9 (deg 1) → 8 survivors; then the
-    // chain unravels one node per round down to the triangle
-    assert(run.survivorsPerRound === Seq(8L, 7L, 6L, 5L, 4L, 3L, 3L))
+    // round 1 peels node 9 (deg 1); each round then leaves exactly one
+    // new chain endpoint below k, down to the triangle
+    assert(run.perRound === Seq(1L, 1L, 1L, 1L, 1L, 0L).map(Some(_)))
     assert(run.rounds === 6)
-    // per-round peel fractions: heavy tail = genuinely deep structure;
-    // the final 0.0 is the fixpoint-confirming round
-    assert(run.peelFractions.last === 0.0)
-    assert(run.peelFractions.init.forall(_ > 0.0))
-    assert(run.core.collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
+    // heavy tail = genuinely deep structure; the final 0 is the
+    // fixpoint witness
+    assert(run.perRound.last === Some(0L))
+    assert(run.perRound.init.forall(_.exists(_ > 0L)))
+    assert(run.result.collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
     // a capped run surfaces non-convergence instead of silently
     // returning a partially peeled set
     val capped = Graph.kCoreRun(g, 2, maxIter = 2)
     assert(!capped.converged)
-    assert(capped.survivorsPerRound === Seq(8L, 7L, 6L))
+    assert(capped.perRound === Seq(Some(1L), Some(1L)))
+    assert(capped.result.count() === 6L, "8 survivors minus 2 peel rounds")
   }
 
   test("kCore incremental maintenance ≡ recompute across both adaptive branches") {
@@ -269,7 +276,7 @@ class GraphSpec extends SparkSuite {
     // branch for the whole cascade
     val chain = undirected((1L, 2L), (2L, 3L), (1L, 3L),
       (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
-    assert(asMap(Graph.kCoreRun(chain, 2).core) ===
+    assert(asMap(Graph.kCoreRun(chain, 2).result) ===
       asMap(Graph.kCoreRecompute(chain, 2)))
     // MAJORITY-peel fixture: a 5-clique with 20 degree-1 leaves hanging
     // off node 1 — round one peels 20 of 25 nodes (recompute branch),
@@ -279,9 +286,9 @@ class GraphSpec extends SparkSuite {
       a <- 1L to 5L; b <- 1L to 5L if a < b
     } yield (a, b)
     val hub = undirected((clique ++ leaves): _*)
-    assert(asMap(Graph.kCoreRun(hub, 4).core) ===
+    assert(asMap(Graph.kCoreRun(hub, 4).result) ===
       asMap(Graph.kCoreRecompute(hub, 4)))
-    assert(asMap(Graph.kCoreRun(hub, 2).core) ===
+    assert(asMap(Graph.kCoreRun(hub, 2).result) ===
       asMap(Graph.kCoreRecompute(hub, 2)))
     // MIXED fixture: two 4-cliques bridged by a path whose interior
     // nodes have degree 2 — k=3 first peels the bridge (minority),
@@ -290,7 +297,7 @@ class GraphSpec extends SparkSuite {
     val cliqueB = for { a <- 11L to 14L; b <- 11L to 14L if a < b } yield (a, b)
     val bridge = Seq((4L, 21L), (21L, 22L), (22L, 11L))
     val mixed = undirected((cliqueA ++ cliqueB ++ bridge): _*)
-    assert(asMap(Graph.kCoreRun(mixed, 3).core) ===
+    assert(asMap(Graph.kCoreRun(mixed, 3).result) ===
       asMap(Graph.kCoreRecompute(mixed, 3)))
   }
 
@@ -446,18 +453,26 @@ class GraphSpec extends SparkSuite {
       a <- 1L until n; b <- (a + 1) to n
       if ((a * 2654435761L + b * 40503L) % 97) < 22
     } yield (a, b)).toDF("src", "dst")
+    // round 1 peels the edges below k−2 in the whole graph: counted
+    // here on the driver from the edge list, independently of the operator
+    val pairs = edges.as[(Long, Long)].collect().toSet
+    val nbrs = pairs.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSet }
+    def firstPeel(k: Int): Long =
+      pairs.count { case (a, b) => (nbrs(a) & nbrs(b)).size < k - 2 }.toLong
     for (k <- Seq(3, 4, 5)) {
       val inc = Graph.kTrussRun(edges, k)
       val ref = Graph.kTrussRecompute(edges, k)
-      assert(inc.truss.exceptAll(ref).isEmpty && ref.exceptAll(inc.truss).isEmpty,
+      assert(inc.result.exceptAll(ref).isEmpty && ref.exceptAll(inc.result).isEmpty,
         s"incremental != recompute at k=$k")
-      assert(inc.converged)
-      // every traced round removed something, and the removals sum to
-      // the peeled edge count — the telemetry is the audit trail
-      assert(inc.removedPerRound.forall(_ > 0))
+      assert(inc.converged && inc.perRound.lastOption.forall(_.contains(0L)))
+      // every non-closing round left edges to peel, and round 1's
+      // removals plus each round's count sum to the peeled edge count —
+      // the telemetry is the audit trail
+      assert(inc.perRound.init.forall(_.exists(_ > 0L)))
       val canon = edges.select(least(col("src"), col("dst")),
         greatest(col("src"), col("dst"))).distinct().count()
-      assert(inc.removedPerRound.sum === canon - inc.truss.count())
+      assert(firstPeel(k) + inc.perRound.flatten.sum === canon - inc.result.count())
     }
     // maxIter cap: partially-peeled set, observable non-convergence
     val capped = Graph.kTrussRun(edges, k = 5, maxIter = 1)
