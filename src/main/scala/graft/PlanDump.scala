@@ -4,9 +4,10 @@ import scala.util.matching.Regex
 
 /** Dev tool (not driver contract): write `.explain("formatted")` output
   * for named queries to <outDir>/<query>_<suffix>.txt — the plan
-  * evidence files under plans/rNN/. The text is [[canonical]], so two
-  * dumps of one tree are byte-identical and a plain `diff` of two trees
-  * shows only real plan changes.
+  * evidence files under plans/rNN/. The text is [[canonical]], and the
+  * session's cache is cleared after each query, so a query's plan is the
+  * one it has alone: two dumps of one tree are byte-identical and a plain
+  * `diff` of two trees shows only real plan changes.
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   */
 object PlanDump {
@@ -26,6 +27,9 @@ object PlanDump {
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"PLANDUMP wrote $outDir/${name}_$suffix.txt (${txt.length} chars)")
+      // an operator's cached frames outlive its query; a later query that
+      // reused them would show a plan that depends on what ran before it
+      spark.catalog.clearCache()
     }
     spark.stop()
   }
@@ -98,9 +102,21 @@ object PlanDump {
     * sort orders — put the run in `order`. */
   private def reorderRuns(text: String, cols: Seq[String], order: Seq[Int],
                           gidCol: String): String = {
+    // the alias of `f(c) AS c`, where the alias's AS is the last one outside
+    // any bracket (a `CAST(x AS t)` inside a column's name is not an alias)
     def name(item: String): String = {
       val expr = item.stripSuffix(" ASC NULLS FIRST")
-      expr.substring(expr.lastIndexOf(" AS ") match { case -1 => 0; case i => i + 4 })
+      var depth = 0
+      var alias = 0
+      expr.indices.foreach { i =>
+        expr(i) match {
+          case '(' | '[' => depth += 1
+          case ')' | ']' => depth -= 1
+          case ' ' if depth == 0 && expr.startsWith(" AS ", i) => alias = i + 4
+          case _ =>
+        }
+      }
+      expr.substring(alias)
     }
     val out = new StringBuilder
     var from = 0

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterReader
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.LongType
 
@@ -9,7 +10,12 @@ import org.apache.spark.sql.types.LongType
   * All engine operators take DataFrames; this is the only place that knows
   * the on-disk layout. At cluster scale the same API fronts partitioned
   * parquet/Delta paths — filters and projections applied by callers are
-  * pushed into the scan by Catalyst, so these loaders stay cheap.
+  * pushed into the scan by Catalyst. The loaders stay cheap because
+  * building one starts no Spark job: [[FooterReader]] lists the table on
+  * the driver and takes its schema from a footer cached per file (the
+  * schema `spark.read.parquet` would infer in a job), so the 400-odd
+  * loads in the query registry cost a footer read only the first time a
+  * file is seen.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -17,7 +23,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    FooterReader.read(spark, s"$sfDir/$name.parquet")
 
   def orders(spark: SparkSession, d: String): DataFrame = load(spark, d, "orders")
   def lineitem(spark: SparkSession, d: String): DataFrame = load(spark, d, "lineitem")
@@ -48,7 +54,7 @@ object Tables {
 
   /** Raw on-disk schema of the events parquet (ts as nanos long under the
     * [[Sessions.local]] conf). */
-  def rawEventSchema(spark: SparkSession, d: String): org.apache.spark.sql.types.StructType =
+  private[graft] def rawEventSchema(spark: SparkSession, d: String): org.apache.spark.sql.types.StructType =
     load(spark, d, "events").schema
   def documents(spark: SparkSession, d: String): DataFrame = load(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = load(spark, d, "embeddings")

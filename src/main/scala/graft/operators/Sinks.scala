@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterReader
 import org.apache.spark.sql.types.StructType
 
 /** Sink-side semantics of the reference pipeline (SURVEY.md §2: K1, K2).
@@ -11,6 +12,10 @@ import org.apache.spark.sql.types.StructType
   * (reference/main.py:127-134). Here the destination is a parquet path:
   * appends are partition-parallel writes, schema evolution is parquet
   * `mergeSchema` on read, and create-if-missing is an empty first write.
+  * Every parquet read here ([[readEvolved]], [[readCommitted]],
+  * [[compact]]) goes through [[FooterReader]], which lists and reads
+  * footers on the driver from a per-file cache: no read starts a Spark
+  * job for its schema or its file listing.
   * (On a cluster the same calls target a Delta/Iceberg table and K3
   * becomes a real MERGE — Joins.upsert holds the set-oriented semantics.)
   */
@@ -23,9 +28,11 @@ object Sinks {
     df.write.mode("append").parquet(path)
 
   /** Read an evolved destination: union schema across all appended batches
-    * (absent columns null-backfilled), the ALLOW_FIELD_ADDITION read view. */
+    * (absent columns null-backfilled), the ALLOW_FIELD_ADDITION read view.
+    * The schema is `mergeSchema`'s, merged on the driver from cached
+    * footers ([[FooterReader]]), so the read starts no Spark job. */
   def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+    FooterReader.readMerged(spark, path)
 
   // ------------------------------------------------------- atomic commit
   //
@@ -374,48 +381,20 @@ object Sinks {
     * data dirs are invisible because readers resolve the manifest set,
     * never the directory listing.
     *
-    * The union schema is merged on the driver from the committed files'
-    * parquet footers and passed to the reader as an explicit schema: the
-    * same schema `mergeSchema=true` infers (Spark's footer reader,
-    * `StructType.merge` in path order), without the footer-reading Spark
-    * job that option launches on every call. Footer schemas are cached
-    * per file, like the manifests. */
+    * The committed part-files go to [[FooterReader]] as the statuses the
+    * manifests name, so the read neither lists them again (a Spark job
+    * past 32 files) nor infers their schema in a job: the union schema is
+    * `mergeSchema`'s (`StructType.merge` in path order), merged on the
+    * driver from footers cached per file. A committed part-file is never
+    * rewritten, so each call reads the footers of only the batches it has
+    * not seen. */
   def readCommitted(spark: SparkSession, root: String): DataFrame = {
     val files = committedFiles(spark, root)
     require(files.nonEmpty, s"no committed batches under $root")
-    spark.read.schema(committedSchema(spark, root, files)).parquet(files: _*)
-  }
-
-  // Footer schema per committed part-file, cached process-wide under the
-  // same immutable-file key as [[manifestCache]] (path + length + mtime,
-  // pruned to the files still committed): a committed part-file is never
-  // rewritten, so each readCommitted reads only the footers of files it
-  // has not seen and reader work stays O(new batches). The attempt dir in
-  // the path and the mtime keep a wiped-and-recreated root with reused
-  // batch ids from hitting a stale entry.
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.ConcurrentHashMap[String, StructType]]()
-
-  private def committedSchema(spark: SparkSession, root: String,
-                              files: Seq[String]): StructType = {
-    import org.apache.spark.sql.execution.datasources.parquet.FooterSchemas
-    import scala.jdk.CollectionConverters._
     val fs = fsFor(spark, root)
-    val qualifiedRoot = fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString
-    val cache = footerSchemaCache.computeIfAbsent(qualifiedRoot,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]())
-    // mergeSchema's order: part-files sorted by path
-    val statuses = files.map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(f)))
-      .sortBy(_.getPath.toString)
-    val keys = statuses.map(st => s"${st.getPath.getParent.getName}/" +
-      manifestCacheKey(st))
-    cache.keySet().retainAll(keys.asJava)
-    val known = keys.map(k => k -> cache.get(k)).filter(_._2 != null).toMap
-    val missing = statuses.zip(keys).filterNot { case (_, k) => known.contains(k) }
-    val read = missing.map(_._2).zip(FooterSchemas.read(spark, missing.map(_._1))).toMap
-    read.foreach { case (k, schema) => cache.put(k, schema) }
-    FooterSchemas.merge(spark, keys.map(k => known.getOrElse(k, read(k))))
+    FooterReader.readMergedFiles(spark,
+      fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString,
+      files.map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(f))))
   }
 
   /** Format round-trip helpers: the engine is format-agnostic (any
@@ -545,7 +524,7 @@ object Sinks {
     require(qIn != qOut, "compact cannot overwrite its input in place")
     val totalBytes = fs.getContentSummary(qIn).getLength
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir)
+    FooterReader.read(spark, inDir)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(outDir)
     nFiles

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types.StructType
@@ -475,13 +476,13 @@ object EventStreams {
           .agg(count(lit(1)).as("n_events"))
         val merged =
           if (new java.io.File(countsPath).exists())
-            spark.read.parquet(countsPath).unionByName(bCounts)
+            FooterReader.read(spark, countsPath).unionByName(bCounts)
               .groupBy(col("day"))
               .agg(sum(col("n_events")).as("n_events"))
           else bCounts
         merged.localCheckpoint().write.mode("overwrite").parquet(countsPath)
         graft.operators.TimeSeries
-          .cusumOverCounts(spark.read.parquet(countsPath))
+          .cusumOverCounts(FooterReader.read(spark, countsPath))
           .write.mode("overwrite").parquet(s"$statePath/alarms")
       }
       .start()
@@ -514,14 +515,14 @@ object EventStreams {
               .as("n_success"))
         val merged =
           if (new java.io.File(countsPath).exists())
-            spark.read.parquet(countsPath).unionByName(bCounts)
+            FooterReader.read(spark, countsPath).unionByName(bCounts)
               .groupBy(col("day"))
               .agg(sum(col("n_events")).as("n_events"),
                 sum(col("n_success")).as("n_success"))
           else bCounts
         merged.localCheckpoint().write.mode("overwrite").parquet(countsPath)
         graft.operators.Stats
-          .msprtOverCounts(spark.read.parquet(countsPath), 0.2, 0.05)
+          .msprtOverCounts(FooterReader.read(spark, countsPath), 0.2, 0.05)
           .write.mode("overwrite").parquet(s"$statePath/monitor")
       }
       .start()

@@ -88,6 +88,16 @@ class PlanDumpSpec extends AnyFunSuite {
     assert(a.contains("count(a#3) FILTER (WHERE (gid#5 = 1)), count(b#4L) FILTER (WHERE (gid#5 = 2))"))
   }
 
+  test("a group column whose name holds a CAST's AS is reordered too") {
+    // q_corpus_report counts distinct `md5(CAST(… AS BINARY))` values
+    val md5 = "md5(CAST(b AS BINARY))"
+    val ab = distinctAB.replace("b#22L", s"$md5#22")
+    val ba = distinctBA.replace("b#52L", s"$md5#52")
+    val a = PlanDump.canonical(ab)
+    assert(a === PlanDump.canonical(ba))
+    assert(a.contains(s"[a#3, $md5#4, gid#5, b#6L]"))
+  }
+
   test("a changed group column of an Expand still shows") {
     assert(PlanDump.canonical(distinctAB) !==
       PlanDump.canonical(distinctBA.replace("count(a#51)", "count(b#52L)")))

@@ -25,14 +25,19 @@ class SinksSpec extends SparkSuite {
     assert(dest.count() === 0)
   }
 
-  test("appendEvolving + readEvolved: union schema, null backfill") {
+  /** A destination created with the seed schema, then two appends, the
+    * second bringing a NEW column (ALLOW_FIELD_ADDITION). */
+  private def evolvedDestination(): String = {
     val path = tempPath()
     Sinks.createIfMissing(spark, path, seed)
     Sinks.appendEvolving(Seq(("c1", "t1")).toDF("chat_id", "n_ticket"), path)
-    // second batch brings a NEW column (ALLOW_FIELD_ADDITION)
     Sinks.appendEvolving(
       Seq(("c2", "t2", "open")).toDF("chat_id", "n_ticket", "status"), path)
-    val dest = Sinks.readEvolved(spark, path)
+    path
+  }
+
+  test("appendEvolving + readEvolved: union schema, null backfill") {
+    val dest = Sinks.readEvolved(spark, evolvedDestination())
     assert(dest.schema.fieldNames.toSet === Set("chat_id", "n_ticket", "status"))
     assert(dest.count() === 2)
     val byChat = dest.collect().map(r =>
@@ -375,39 +380,6 @@ class SinksSpec extends SparkSuite {
     assert(fresh.select("n_ticket").as[String].collect().toSeq === Seq("t3"))
   }
 
-  /** Spark jobs this thread started while `body` runs. Jobs are tagged
-    * with a thread-local property, so jobs of other threads sharing the
-    * SparkContext are not counted; listener events arrive in order, so
-    * once a tagged marker job started after `body` is seen, every job
-    * `body` started has been counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(p => p.getProperty("graft.test.tag") == tag)
-          .foreach(p => started.add(String.valueOf(p.getProperty("spark.job.description"))))
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.tag", tag)
-    try {
-      val out = body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000L
-      while (!started.contains("marker") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(started.contains("marker"), "marker job never reached the listener")
-      (out, started.size - 1)
-    } finally {
-      sc.setJobDescription(null)
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("readCommitted: the footer-merged schema equals mergeSchema's, with no Spark job") {
     val root = tempPath()
     assert(Sinks.appendAtomic(
@@ -448,5 +420,35 @@ class SinksSpec extends SparkSuite {
     val again = Sinks.readCommitted(spark, root)
     assert(again.schema.fieldNames.toSeq === Seq("score", "label"))
     assert(again.collect().map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "x")))
+  }
+
+  test("readEvolved: mergeSchema's schema with no Spark job, hidden files skipped") {
+    val path = evolvedDestination()
+    // files Spark's listing skips: a reader that took them for data
+    // would fail on their footers
+    Seq("_junk", ".junk", "_SUCCESS").foreach(n => java.nio.file.Files.write(
+      java.nio.file.Paths.get(path, n), "not a parquet file".getBytes("UTF-8")))
+    val expected = spark.read.option("mergeSchema", "true").parquet(path).schema
+    val (dest, jobs) = jobsDuring(Sinks.readEvolved(spark, path))
+    assert(jobs === 0, s"readEvolved started $jobs Spark jobs")
+    assert(dest.schema === expected)
+    assert(dest.schema.fieldNames.toSeq === Seq("chat_id", "n_ticket", "status"))
+    assert(dest.count() === 2)
+  }
+
+  test("readCommitted over 40 batches: no listing or schema job") {
+    val root = tempPath()
+    (1 to 40).foreach { i =>
+      assert(Sinks.appendAtomic(Seq((s"c$i", s"t$i")).toDF("chat_id", "n_ticket"),
+        root, f"b$i%02d"))
+    }
+    assert(Sinks.committedFiles(spark, root).size === 40)
+    // cold (the footers are read here) and warm
+    (1 to 2).foreach { _ =>
+      val (schema, jobs) = jobsDuring(Sinks.readCommitted(spark, root).schema)
+      assert(jobs === 0, s"readCommitted started $jobs Spark jobs")
+      assert(schema.fieldNames.toSeq === Seq("chat_id", "n_ticket"))
+    }
+    assert(Sinks.readCommitted(spark, root).count() === 40)
   }
 }
